@@ -13,8 +13,8 @@
 Each submission drains the currently-available input files
 (availableNow trigger), writing per-epoch argmax partials; the
 streaming checkpoint makes re-submission resume at the first
-uncommitted batch, and a replayed batch overwrites exactly its own
-epoch partition (idempotent). This is the MERGE-INTO analogue of the
+uncommitted batch, and a replayed batch is merged at most once (the
+store's commit log lists each epoch once). This is the MERGE-INTO analogue of the
 reference's resumable state machine (reference: state.py:30-35)
 applied to a live latest-assertion-wins view.
 """
@@ -38,34 +38,10 @@ def main() -> None:
         "--compact",
         action="store_true",
         help="after draining, reduce all live epoch partials into one "
-        "compacted generation (crash-safe manifest protocol; the view "
-        "is unchanged, the store shrinks); also sweeps quarantined "
-        "generations older than --quarantine-keep compactions",
-    )
-    p.add_argument(
-        "--quarantine-keep",
-        type=int,
-        default=8,
-        help="retention horizon for --compact's quarantine sweep, in "
-        "committed compactions (default 8)",
-    )
-    p.add_argument(
-        "--break-lease",
-        action="store_true",
-        help="before doing anything else, reclaim a CRASHED compactor's "
-        "lease on --out (refuses loudly unless the recorded holder is "
-        "provably dead: same host and the pid is gone, or the host has "
-        "rebooted since the stamp)",
+        "compacted generation, committed through the store's log (the "
+        "view is unchanged, the store shrinks)",
     )
     args = p.parse_args()
-
-    if args.break_lease:
-        from wikidata_pq_spark.streaming import incremental as _inc
-
-        # runs before the streaming drain so a wedged store can be
-        # unwedged and resumed in one submission; raises (job fails
-        # loudly) when the holder may still be alive
-        print(json.dumps({"break_lease": _inc.break_lease(args.out)}))
 
     spark = SparkSession.builder.appName("maintain_beliefs").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -88,15 +64,10 @@ def main() -> None:
 
     out = {"status": "complete"}
     if args.compact:
-        import os
-
-        if os.path.isdir(args.out):
-            out["compaction"] = inc.compact_current_beliefs(
-                spark, args.out, n_buckets=args.n_buckets,
-                quarantine_keep=args.quarantine_keep,
-            )
-        else:
-            out["compaction"] = {"compacted": 0, "live": []}
+        # a store no epoch ever reached compacts as a no-op
+        out["compaction"] = inc.compact_current_beliefs(
+            spark, args.out, n_buckets=args.n_buckets
+        )
     if args.view_out:
         import os
 

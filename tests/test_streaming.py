@@ -208,9 +208,9 @@ def test_stream_stream_join_within_window(spark, tmp_path):
 def test_incremental_triple_support_merge_and_replay(spark, tmp_path):
     """Per-epoch partial aggregates: two epochs reduce to the one-shot
     batch rollup (support counts and first sightings exactly;
-    distinct-conv counts via HLL, exact at these cardinalities), a
-    REPLAYED epoch overwrites its own partition instead of
-    double-counting, and other epochs' files are untouched."""
+    distinct-conv counts via HLL, exact at these cardinalities), and a
+    REPLAYED committed epoch is a no-op: nothing is double-counted and
+    no epoch's files are rewritten."""
     import os
 
     import pandas as pd
@@ -237,6 +237,7 @@ def test_incremental_triple_support_merge_and_replay(spark, tmp_path):
     import time as _t
     _t.sleep(1.1)
     inc.merge_triple_support(d2, out, epoch_id=1, n_buckets=4)
+    e1_mtime = os.path.getmtime(os.path.join(out, "epoch=1"))
 
     def rollup():
         return inc.read_triple_support(spark, out).toPandas().set_index(
@@ -250,14 +251,15 @@ def test_incremental_triple_support_merge_and_replay(spark, tmp_path):
     assert (got["first_turn"] == full["first_turn"]).all()
     assert (got["n_convs_est"] == full["n_convs"]).all()  # HLL exact here
 
-    # at-least-once replay of epoch 1: the partial is REPLACED, the
-    # rollup is byte-identical, and epoch 0's partition is untouched
+    # at-least-once replay of epoch 1: the log already lists it, so the
+    # rollup is identical and neither partition is rewritten
     _t.sleep(1.1)
     inc.merge_triple_support(d2, out, epoch_id=1, n_buckets=4)
     again = rollup()
     assert (again["n_support"] == full["n_support"]).all()
     assert (again["n_convs_est"] == full["n_convs"]).all()
     assert os.path.getmtime(os.path.join(out, "epoch=0")) == e0_mtime
+    assert os.path.getmtime(os.path.join(out, "epoch=1")) == e1_mtime
 
 
 def test_incremental_triple_support_streaming(spark, tmp_path):
@@ -524,11 +526,11 @@ def test_current_beliefs_mid_epoch_kill_restart(spark, tmp_path):
 
 
 def test_compact_triple_support_then_stream_equals_batch(spark, tmp_path):
-    """Epoch compaction (r6, VERDICT item 6): compacting epochs [0..k]
-    into one generation then merging NEW epochs gives the identical
-    rollup to the uncompacted store and to the batch operator; stale
-    epoch dirs are GC'd; a replayed pre-compaction epoch is ignored by
-    the manifest and collected by the next compaction."""
+    """Epoch compaction: compacting epochs [0..k] into one generation
+    then merging NEW epochs gives the identical rollup to the
+    uncompacted store and to the batch operator; stale epoch dirs are
+    GC'd; a replayed pre-compaction epoch is ignored by the log and
+    collected by the next compaction."""
     import os
 
     import pandas as pd
@@ -565,12 +567,11 @@ def test_compact_triple_support_then_stream_equals_batch(spark, tmp_path):
     assert (got["first_turn"] == full["first_turn"]).all()
     assert (got["n_convs_est"] == full["n_convs"]).all()
 
-    # a write at or below the compaction watermark is REFUSED loudly
-    # (r6 guard): compaction runs only after a completed drain, so such
-    # an epoch id means a reset/foreign streaming checkpoint -- its
+    # a write at or below the compaction watermark is REFUSED loudly:
+    # such an epoch id means a reset/foreign streaming checkpoint -- its
     # write would be invisible to reads and GC'd (silent loss). Even if
-    # it somehow lands on disk (a pre-guard writer), the manifest
-    # ignores it and the next compaction GCs it.
+    # it somehow lands on disk (a pre-guard writer), the log ignores it
+    # and the next compaction GCs it.
     import pytest as _pt
 
     with _pt.raises(ValueError, match="compacted_through"):
@@ -635,7 +636,7 @@ def test_compact_current_beliefs_then_stream_equals_batch(spark, tmp_path):
 
 
 def test_merge_refuses_epoch_below_compaction_watermark(spark, tmp_path):
-    """Checkpoint-reset guard (r6): after a compaction, a merge whose
+    """Checkpoint-reset guard: after a compaction, a merge whose
     epoch id restarted from 0 (deleted streaming checkpoint, same
     store) must raise -- its write would be invisible to reads and
     GC'd by the next compaction (silent loss)."""
@@ -661,9 +662,9 @@ def test_merge_refuses_epoch_below_compaction_watermark(spark, tmp_path):
 
 
 def test_uncommitted_generation_invisible_and_collected(spark, tmp_path):
-    """First-compaction crash window (r6 review): a negative epoch dir
-    with NO manifest is the output of a compaction that died between
-    its parquet job and the manifest rename. It must be invisible to
+    """First-compaction crash window: a negative epoch dir the log
+    does not list is the output of a compaction that died between its
+    parquet job and its log commit. It must be invisible to
     reads (counting it live would double every merged row) and be
     garbage-collected by the next compaction, which then produces the
     correct store."""
@@ -685,7 +686,7 @@ def test_uncommitted_generation_invisible_and_collected(spark, tmp_path):
     inc.merge_triple_support(d1, out, epoch_id=1, n_buckets=2)
 
     # simulate the crashed first compaction: the merged generation is
-    # fully on disk, the manifest rename never happened
+    # fully on disk, the log commit never happened
     crashed = str(tmp_path / "crashed")
     inc.merge_triple_support(d0, crashed, epoch_id=0, n_buckets=2)
     inc.merge_triple_support(d1, crashed, epoch_id=1, n_buckets=2)
@@ -702,9 +703,9 @@ def test_uncommitted_generation_invisible_and_collected(spark, tmp_path):
     assert got["n_support"].iloc[0] == 2  # would be 4 if double-counted
 
     summary = inc.compact_triple_support(spark, out, n_buckets=2)
-    # the retry reuses gen -1: the orphan was deleted pre-write
-    assert summary["generation"] == -1 and -1 in summary["removed_epochs"]
-    assert inc._epochs_on_disk(out) == [-1]
+    # the retry claims gen -2 below the orphan, then collects the orphan
+    assert summary["generation"] == -2 and -1 in summary["removed_epochs"]
+    assert inc._epochs_on_disk(out) == [-2]
     final = inc.read_triple_support(spark, out).toPandas()
     assert final["n_support"].iloc[0] == 2
 
@@ -715,16 +716,16 @@ def test_uncommitted_generation_invisible_and_collected(spark, tmp_path):
     )
     s2 = inc.compact_triple_support(spark, out, n_buckets=2)
     assert s2["compacted"] == 0 and 0 in s2["removed_epochs"]
-    assert inc._epochs_on_disk(out) == [-1]
+    assert inc._epochs_on_disk(out) == [-2]
 
 
 def test_lost_manifest_recovers_from_bak_then_fails_loudly(spark, tmp_path):
-    """Manifest-loss ladder (r7, ADVICE): losing the PRIMARY manifest
-    after a committed compaction self-heals from the .bak copy written
-    before the commit rename (reads stay correct, primary restored);
-    losing BOTH copies with no streaming epochs raises loudly, and the
-    generation data is never GC'd."""
+    """Losing the commit log after a committed compaction: with
+    ``_log/`` gone the live set is unknown, so reads, compaction and
+    merges of other epochs refuse loudly, and the generation data on
+    disk is left exactly as it was."""
     import os
+    import shutil
 
     import pandas as pd
     import pytest as _pt
@@ -740,78 +741,29 @@ def test_lost_manifest_recovers_from_bak_then_fails_loudly(spark, tmp_path):
     inc.merge_triple_support(d, out, epoch_id=1, n_buckets=2)
     inc.compact_triple_support(spark, out, n_buckets=2)
 
-    # rung 1: primary lost, bak survives -> reads recover + self-heal
-    os.remove(os.path.join(out, "_compaction.json"))
-    assert inc.live_epochs(out) == [-1]
-    assert os.path.isfile(os.path.join(out, "_compaction.json"))  # healed
-    got = inc.read_triple_support(spark, out).toPandas()
-    assert got["n_support"].iloc[0] == 2
+    def snapshot():
+        paths = [os.path.join(r, f) for r, _, fs in os.walk(out) for f in fs]
+        return sorted((p, os.path.getmtime(p)) for p in paths)
 
-    # rung 2: BOTH copies lost, no streaming epochs -> loud refusal,
-    # data untouched
-    os.remove(os.path.join(out, "_compaction.json"))
-    os.remove(os.path.join(out, "_compaction.json.bak"))
-    with _pt.raises(RuntimeError, match="manifest was lost"):
+    shutil.rmtree(os.path.join(out, "_log"))
+    before = snapshot()
+    with _pt.raises(RuntimeError, match="no committed version"):
         inc.read_triple_support(spark, out).count()
-    with _pt.raises(RuntimeError, match="manifest was lost"):
+    with _pt.raises(RuntimeError, match="no committed version"):
         inc.compact_triple_support(spark, out, n_buckets=2)
-    assert os.path.isdir(os.path.join(out, "epoch=-1"))  # data survives
+    with _pt.raises(RuntimeError, match="no committed version"):
+        inc.merge_triple_support(d, out, epoch_id=2, n_buckets=2)
+    assert snapshot() == before  # data survives, untouched
+    assert inc._epochs_on_disk(out) == [-1]
 
 
-def test_lost_both_manifests_with_newer_epochs_quarantines(spark, tmp_path):
-    """The ambiguous shape from the r6 ADVICE: both manifest copies
-    lost AFTER a committed compaction, with newer streaming epochs on
-    disk. Reads warn and serve the streaming epochs (indistinguishable
-    from an uncommitted crash); the next compaction must QUARANTINE the
-    orphan generation -- rename, not rmtree -- so a wrong diagnosis is
-    reversible, and purge_quarantine reclaims the disk explicitly."""
-    import os
-    import warnings
-
-    import pandas as pd
-
-    from wikidata_pq_spark.streaming import incremental as inc
-
-    cols = ["subj", "pred", "obj", "conv_id", "turn_idx"]
-    d = spark.createDataFrame(
-        pd.DataFrame([("Q1", "p", "Q2", "c1", 1)], columns=cols)
-    )
-    out = str(tmp_path / "support")
-    inc.merge_triple_support(d, out, epoch_id=0, n_buckets=2)
-    inc.merge_triple_support(d, out, epoch_id=1, n_buckets=2)
-    inc.compact_triple_support(spark, out, n_buckets=2)
-    inc.merge_triple_support(d, out, epoch_id=2, n_buckets=2)
-    os.remove(os.path.join(out, "_compaction.json"))
-    os.remove(os.path.join(out, "_compaction.json.bak"))
-
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        assert inc.live_epochs(out) == [2]
-    assert any("quarantine" in str(x.message) for x in w)
-
-    summary = inc.compact_triple_support(spark, out, n_buckets=2)
-    assert summary["compacted"] == 0  # one live epoch -> no reduction
-    assert -1 in summary["removed_epochs"]
-    qdir = os.path.join(inc._quarantine_dir(out), "epoch=-1")
-    assert os.path.isdir(qdir)  # renamed, NOT destroyed
-    assert not os.path.isdir(os.path.join(out, "epoch=-1"))
-    # the quarantine lives OUTSIDE the table root, invisible to reads
-    got = inc.read_triple_support(spark, out).toPandas()
-    assert got["n_support"].iloc[0] == 1
-    assert inc.purge_quarantine(out) == ["epoch=-1"]
-    assert not os.path.isdir(qdir)
-
-
-def test_merge_refused_inside_compaction_commit_window(spark, tmp_path):
-    """Concurrent-writer pin (r7, VERDICT item 6; tightened by the
-    second review pass): a streaming merge attempted anywhere inside
-    the compaction lease's lifetime -- here injected between the
-    generation's parquet write and the manifest rename -- is REFUSED
-    loudly (a writer cannot tell whether it is before or after the
-    compactor's live_epochs listing, so the only sound writer-side
-    rule is lease == no merges). The compaction itself completes
-    unharmed, and the refused batch replays cleanly afterwards, giving
-    exactly the batch reference."""
+def test_merge_refused_inside_compaction_commit_window(spark, tmp_path, monkeypatch):
+    """A streaming merge that commits inside a compaction's window --
+    here between the generation's parquet write and the compaction's
+    log commit -- lands and stays live: the compaction loses the commit
+    race and raises, its generation stays invisible, and the next
+    compaction folds every epoch in, giving exactly the batch
+    reference."""
     import pandas as pd
     import pytest as _pt
 
@@ -830,31 +782,22 @@ def test_merge_refused_inside_compaction_commit_window(spark, tmp_path):
     for i in range(3):
         inc.merge_triple_support(dfs[i], out, epoch_id=i, n_buckets=2)
 
-    # attempt the merge inside the commit window: os.replace is first
-    # called for the .bak copy, strictly AFTER the generation's
-    # parquet write and strictly BEFORE the primary rename
-    import os as _os
+    orig_commit = inc._commit
+    merged = []
 
-    orig_replace = _os.replace
-    refusals = []
+    def commit_after_merge(out_dir, version, snapshot):
+        if snapshot.get("generation") is not None and not merged:
+            merged.append(1)
+            inc.merge_triple_support(dfs[3], out, epoch_id=3, n_buckets=2)
+        return orig_commit(out_dir, version, snapshot)
 
-    def hook(src, dst):
-        if str(dst).endswith("_compaction.json.bak") and not refusals:
-            with _pt.raises(ValueError, match="compaction holds"):
-                inc.merge_triple_support(dfs[3], out, epoch_id=3, n_buckets=2)
-            refusals.append(1)
-        return orig_replace(src, dst)
+    monkeypatch.setattr(inc, "_commit", commit_after_merge)
+    with _pt.raises(RuntimeError, match="lost the commit race"):
+        inc.compact_triple_support(spark, out, n_buckets=2)
+    monkeypatch.setattr(inc, "_commit", orig_commit)
+    assert merged and inc.live_epochs(out) == [0, 1, 2, 3]
+    assert set(inc._epochs_on_disk(out)) == {-1, 0, 1, 2, 3}
 
-    _os.replace = hook
-    try:
-        summary = inc.compact_triple_support(spark, out, n_buckets=2)
-    finally:
-        _os.replace = orig_replace
-    assert refusals and summary["compacted"] == 3
-    assert inc.live_epochs(out) == [-1]
-
-    # the refused batch replays after the lease is gone (at-least-once)
-    inc.merge_triple_support(dfs[3], out, epoch_id=3, n_buckets=2)
     got = inc.read_triple_support(spark, out).toPandas().set_index(
         ["subj", "pred", "obj"]).sort_index()
     allb = dfs[0]
@@ -865,9 +808,11 @@ def test_merge_refused_inside_compaction_commit_window(spark, tmp_path):
     assert got.index.equals(full.index)
     assert (got["n_support"] == full["n_support"]).all()
     assert (got["first_conv"] == full["first_conv"]).all()
-    # and the NEXT compaction folds the straggler in cleanly
+    # the next compaction folds all four epochs and collects the
+    # uncommitted generation
     s2 = inc.compact_triple_support(spark, out, n_buckets=2)
-    assert s2["compacted"] == 2
+    assert s2["compacted"] == 4 and s2["generation"] == -2
+    assert inc._epochs_on_disk(out) == [-2]
     final = inc.read_triple_support(spark, out).toPandas().set_index(
         ["subj", "pred", "obj"]).sort_index()
     assert (final["n_support"] == full["n_support"]).all()
@@ -905,146 +850,84 @@ def test_epoch_landing_before_compaction_reduces_correctly(spark, tmp_path):
     assert (got["first_turn"] == full["first_turn"]).all()
 
 
-def test_concurrent_compaction_refused_by_lease(spark, tmp_path):
-    """Two compactors would pick the same generation id and interleave
-    writes into the same partition dir: the O_EXCL lease makes the
-    second REFUSE loudly, and a crashed compactor's stale lease keeps
-    refusing until an operator removes it (deliberate: breaking a lease
-    requires confirming the holder is dead)."""
-    import os
-
+def test_concurrent_compaction_refused_by_lease(spark, tmp_path, monkeypatch):
+    """Two compactors: B commits between compactor A's log read and A's
+    commit. A loses the race for the log version and raises, the store
+    reads equal to the batch reference, and the next compaction leaves
+    only its own generation on disk."""
     import pandas as pd
     import pytest as _pt
 
+    from wikidata_pq_spark.operators import graph
     from wikidata_pq_spark.streaming import incremental as inc
 
     cols = ["subj", "pred", "obj", "conv_id", "turn_idx"]
-    d = spark.createDataFrame(
-        pd.DataFrame([("Q1", "p", "Q2", "c1", 1)], columns=cols)
-    )
+    epochs = [
+        [("Q1", "p", "Q2", "c1", 1)],
+        [("Q1", "p", "Q2", "c2", 2), ("Q3", "q", "Q4", "c3", 1)],
+        [("Q3", "q", "Q4", "c4", 4)],
+    ]
+    dfs = [spark.createDataFrame(pd.DataFrame(e, columns=cols)) for e in epochs]
     out = str(tmp_path / "support")
-    inc.merge_triple_support(d, out, epoch_id=0, n_buckets=2)
-    inc.merge_triple_support(d, out, epoch_id=1, n_buckets=2)
+    inc.merge_triple_support(dfs[0], out, epoch_id=0, n_buckets=2)
+    inc.merge_triple_support(dfs[1], out, epoch_id=1, n_buckets=2)
 
-    # simulate a live/crashed holder
-    with open(inc._lock_path(out), "w") as fh:
-        fh.write("99999")
-    with _pt.raises(RuntimeError, match="compaction already in progress"):
+    orig_commit = inc._commit
+    raced = []
+
+    def commit_after_rival(out_dir, version, snapshot):
+        if not raced:
+            raced.append(None)  # the rival's own commit passes straight through
+            raced[0] = inc.compact_triple_support(spark, out, n_buckets=2)
+        return orig_commit(out_dir, version, snapshot)
+
+    monkeypatch.setattr(inc, "_commit", commit_after_rival)
+    with _pt.raises(RuntimeError, match="lost the commit race"):
         inc.compact_triple_support(spark, out, n_buckets=2)
-    assert inc.live_epochs(out) == [0, 1]  # store untouched
+    monkeypatch.setattr(inc, "_commit", orig_commit)
+    # A claimed -1 first, so the rival committed -2 (and collected -1)
+    assert raced[0]["compacted"] == 2 and raced[0]["generation"] == -2
+    assert inc.live_epochs(out) == [-2]
 
-    os.remove(inc._lock_path(out))
-    summary = inc.compact_triple_support(spark, out, n_buckets=2)
-    assert summary["compacted"] == 2
-    assert not os.path.exists(inc._lock_path(out))  # lease released
-    got = inc.read_triple_support(spark, out).toPandas()
-    assert got["n_support"].iloc[0] == 2
+    def rollup():
+        return inc.read_triple_support(spark, out).toPandas().set_index(
+            ["subj", "pred", "obj"]).sort_index()
+
+    def batch(n):
+        allb = dfs[0]
+        for d in dfs[1:n]:
+            allb = allb.unionByName(d)
+        return graph.triple_support(allb).toPandas().set_index(
+            ["subj", "pred", "obj"]).sort_index()
+
+    got, full = rollup(), batch(2)
+    assert got.index.equals(full.index)
+    assert (got["n_support"] == full["n_support"]).all()
+    assert (got["first_turn"] == full["first_turn"]).all()
+
+    inc.merge_triple_support(dfs[2], out, epoch_id=2, n_buckets=2)
+    s = inc.compact_triple_support(spark, out, n_buckets=2)
+    assert s["compacted"] == 2
+    assert inc._epochs_on_disk(out) == [s["generation"]]
+    got, full = rollup(), batch(3)
+    assert got.index.equals(full.index)
+    assert (got["n_support"] == full["n_support"]).all()
 
 
-def test_any_merge_refused_while_compaction_lease_held(spark, tmp_path):
-    """r7 review (both passes): EVERY merge is refused while the
-    compaction lease is held -- a replay would rewrite a partition the
-    compactor may be mid-scan on, and a new id starting before/during
-    the listing could be compacted partial then GC'd complete. The
-    at-least-once writer just replays the failed batch afterwards."""
+def test_crash_between_bak_and_primary_manifest_reads_committed(
+    spark, tmp_path, monkeypatch
+):
+    """A crash before a commit: a compaction that dies after writing its
+    generation but before committing it leaves the generation invisible
+    and every epoch live, and the next compaction collects it. A first
+    merge that dies before committing log version 0 leaves a store
+    reads refuse until the replay rewrites its own epoch and commits."""
     import os
 
     import pandas as pd
     import pytest as _pt
 
-    from wikidata_pq_spark.streaming import incremental as inc
-
-    cols = ["subj", "pred", "obj", "conv_id", "turn_idx"]
-    d = spark.createDataFrame(
-        pd.DataFrame([("Q1", "p", "Q2", "c1", 1)], columns=cols)
-    )
-    out = str(tmp_path / "support")
-    inc.merge_triple_support(d, out, epoch_id=0, n_buckets=2)
-    inc.merge_triple_support(d, out, epoch_id=1, n_buckets=2)
-
-    with open(inc._lock_path(out), "w") as fh:
-        fh.write("lease")
-    try:
-        with _pt.raises(ValueError, match="compaction holds"):
-            inc.merge_triple_support(d, out, epoch_id=1, n_buckets=2)
-        # a NEW id is refused too (second review pass: a new epoch
-        # starting before/during the compactor's listing could be
-        # compacted partial and then GC'd complete; the writer cannot
-        # tell which side of the listing it is on)
-        with _pt.raises(ValueError, match="compaction holds"):
-            inc.merge_triple_support(d, out, epoch_id=2, n_buckets=2)
-    finally:
-        os.remove(inc._lock_path(out))
-    # replays and new ids are both fine once the lease is gone
-    inc.merge_triple_support(d, out, epoch_id=1, n_buckets=2)
-    inc.merge_triple_support(d, out, epoch_id=2, n_buckets=2)
-    got = inc.read_triple_support(spark, out).toPandas()
-    assert got["n_support"].iloc[0] == 3
-
-
-def test_corrupt_primary_manifest_recovers_from_bak(spark, tmp_path):
-    """r7 review: a CORRUPT (truncated) primary manifest -- the exact
-    failure class the .bak exists for -- must fall through to the bak
-    with a warning and self-heal, not raise JSONDecodeError forever."""
-    import os
-    import warnings
-
-    import pandas as pd
-    import pytest as _pt
-
-    from wikidata_pq_spark.streaming import incremental as inc
-
-    cols = ["subj", "pred", "obj", "conv_id", "turn_idx"]
-    d = spark.createDataFrame(
-        pd.DataFrame([("Q1", "p", "Q2", "c1", 1)], columns=cols)
-    )
-    out = str(tmp_path / "support")
-    inc.merge_triple_support(d, out, epoch_id=0, n_buckets=2)
-    inc.merge_triple_support(d, out, epoch_id=1, n_buckets=2)
-    inc.compact_triple_support(spark, out, n_buckets=2)
-
-    p = os.path.join(out, "_compaction.json")
-    with open(p, "w") as fh:
-        fh.write('{"live": [-1], "compacted_')  # truncated write
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        assert inc.live_epochs(out) == [-1]
-    assert any("corrupt" in str(x.message) for x in w)
-    # the corrupt PRESENT primary is deliberately NOT overwritten
-    # (r7 third review: a concurrent compaction may have replaced it
-    # since the read began; blind replacement could pin reads to a
-    # stale manifest) -- reads keep serving from the bak, loudly
-    with open(p) as fh:
-        assert fh.read().startswith('{"live": [-1], "compacted_')
-    got = inc.read_triple_support(spark, out).toPandas()
-    assert got["n_support"].iloc[0] == 2
-    # an ABSENT primary still self-heals (create-exclusive)
-    os.remove(p)
-    assert inc.live_epochs(out) == [-1]
-    import json
-
-    assert json.load(open(p))["live"] == [-1]
-
-    # corrupt primary AND no bak -> loud, names the parse failure
-    with open(p, "w") as fh:
-        fh.write("garbage")
-    os.remove(os.path.join(out, "_compaction.json.bak"))
-    with _pt.raises(RuntimeError, match="unreadable"):
-        inc.live_epochs(out)
-
-
-def test_crash_between_bak_and_primary_manifest_reads_committed(spark, tmp_path):
-    """The commit protocol's claimed recovery property (r7): a crash
-    AFTER the .bak write but BEFORE the primary rename leaves a
-    complete generation + bak + retired epochs still on disk (GC never
-    ran). Reads must treat the generation as committed via the bak
-    fallback (its data equals the epochs it retires), exclude the
-    retired epochs, and the next compaction must GC them as a no-op."""
-    import os
-
-    import pandas as pd
-    import pytest as _pt
-
+    from wikidata_pq_spark.operators import graph
     from wikidata_pq_spark.streaming import incremental as inc
 
     cols = ["subj", "pred", "obj", "conv_id", "turn_idx"]
@@ -1053,249 +936,90 @@ def test_crash_between_bak_and_primary_manifest_reads_committed(spark, tmp_path)
         [("Q1", "p", "Q2", "c3", 1)],
         [("Q5", "r", "Q6", "c4", 5)],
     ]
+    dfs = [spark.createDataFrame(pd.DataFrame(e, columns=cols)) for e in epochs]
     out = str(tmp_path / "support")
-    for i, e in enumerate(epochs):
-        inc.merge_triple_support(
-            spark.createDataFrame(pd.DataFrame(e, columns=cols)),
-            out, epoch_id=i, n_buckets=2,
-        )
+    for i, d in enumerate(dfs):
+        inc.merge_triple_support(d, out, epoch_id=i, n_buckets=2)
 
-    # crash injection: the primary rename raises AFTER the bak landed
-    orig_replace = os.replace
+    def crash(out_dir, version, snapshot):
+        raise OSError("injected crash before the commit")
 
-    def crashing_replace(src, dst):
-        if str(dst).endswith("_compaction.json") and not str(dst).endswith(".bak"):
-            raise OSError("injected crash before the primary rename")
-        return orig_replace(src, dst)
+    orig_commit = inc._commit
+    monkeypatch.setattr(inc, "_commit", crash)
+    with _pt.raises(OSError, match="injected crash"):
+        inc.compact_triple_support(spark, out, n_buckets=2)
+    monkeypatch.setattr(inc, "_commit", orig_commit)
 
-    os.replace = crashing_replace
-    try:
-        with _pt.raises(OSError, match="injected crash"):
-            inc.compact_triple_support(spark, out, n_buckets=2)
-    finally:
-        os.replace = orig_replace
-
-    # the lease must have been released despite the crash
-    assert not os.path.exists(inc._lock_path(out))
-    # on-disk shape: generation + bak + ALL retired epochs (no GC ran)
+    # the generation is complete on disk but not committed
     assert set(inc._epochs_on_disk(out)) == {-1, 0, 1, 2}
-    assert os.path.isfile(os.path.join(out, "_compaction.json.bak"))
-    assert not os.path.isfile(os.path.join(out, "_compaction.json"))
-
-    # reads recover via the bak: generation live, retired excluded
-    assert inc.live_epochs(out) == [-1]
+    assert inc.live_epochs(out) == [0, 1, 2]
+    full = graph.triple_support(
+        dfs[0].unionByName(dfs[1]).unionByName(dfs[2])
+    ).toPandas().set_index(["subj", "pred", "obj"]).sort_index()
     got = inc.read_triple_support(spark, out).toPandas().set_index(
-        ["subj", "pred", "obj"]).sort_index()
-    from wikidata_pq_spark.operators import graph
-
-    allb = spark.createDataFrame(
-        pd.DataFrame([r for e in epochs for r in e], columns=cols)
-    )
-    full = graph.triple_support(allb).toPandas().set_index(
         ["subj", "pred", "obj"]).sort_index()
     assert got.index.equals(full.index)
     assert (got["n_support"] == full["n_support"]).all()
 
-    # the next compaction is a no-op that GCs the retired epochs
     s2 = inc.compact_triple_support(spark, out, n_buckets=2)
-    assert s2["compacted"] == 0
-    assert sorted(s2["removed_epochs"]) == [0, 1, 2]
-    assert inc._epochs_on_disk(out) == [-1]
+    assert s2["compacted"] == 3 and s2["generation"] == -2
+    assert sorted(s2["removed_epochs"]) == [-1, 0, 1, 2]
+    assert inc._epochs_on_disk(out) == [-2]
     final = inc.read_triple_support(spark, out).toPandas()
     assert final["n_support"].sum() == full["n_support"].sum()
 
+    # first merge into a fresh store dies before committing version 0
+    fresh = str(tmp_path / "fresh")
+    monkeypatch.setattr(inc, "_commit", crash)
+    with _pt.raises(OSError, match="injected crash"):
+        inc.merge_triple_support(dfs[0], fresh, epoch_id=0, n_buckets=2)
+    monkeypatch.setattr(inc, "_commit", orig_commit)
+    assert inc._epochs_on_disk(fresh) == [0]
+    assert not os.path.exists(os.path.join(fresh, "_log"))
+    with _pt.raises(RuntimeError, match="no committed version"):
+        inc.read_triple_support(spark, fresh).count()
+    inc.merge_triple_support(dfs[0], fresh, epoch_id=0, n_buckets=2)
+    assert inc.live_epochs(fresh) == [0]
+    assert inc.read_triple_support(spark, fresh).count() == 2
 
-def test_break_lease_reclaims_provably_dead_holder_only(tmp_path):
-    """r8 (VERDICT item 3): break_lease removes a crashed holder's
-    lease (same host, pid gone / host rebooted) and REFUSES when the
-    holder is alive, on another host, or unverifiable (pre-r8 bare-pid
-    stamp)."""
-    import json
+
+def test_concurrent_merge_commits_lose_no_epoch(tmp_path, monkeypatch):
+    """Many writers committing distinct epochs at once: each lost race
+    for a log version re-reads and retries, so the newest version lists
+    every epoch (a lost update would drop one)."""
     import os
-    import socket
-    import subprocess
-
-    import pytest as _pt
+    import sys
+    import threading
 
     from wikidata_pq_spark.streaming import incremental as inc
 
     out = str(tmp_path / "store")
-    os.makedirs(out)
-    host = socket.gethostname()
-    boot = inc._host_boot_id()
 
-    def stamp(rec):
-        with open(inc._lock_path(out), "w") as fh:
-            fh.write(rec if isinstance(rec, str) else json.dumps(rec))
+    def write_dir(partial, out_dir, epoch, n_buckets):
+        os.makedirs(os.path.join(out_dir, f"epoch={epoch}"))
 
-    # crashed holder: a child that has already exited
-    child = subprocess.Popen(["true"])
-    child.wait()
-    stamp({"pid": child.pid, "hostname": host, "boot_id": boot})
-    st = inc.lease_status(out)
-    assert st["held"] and st["holder_dead"] is True
-    res = inc.break_lease(out)
-    assert res["broken"] and not os.path.exists(inc._lock_path(out))
+    monkeypatch.setattr(inc, "_write_partition", write_dir)
+    inc._merge_epoch(None, out, 0, 2)  # version 0 exists before the race
+    errors = []
 
-    # live holder (this very process): refused, file untouched
-    stamp({"pid": os.getpid(), "hostname": host, "boot_id": boot})
-    assert inc.lease_status(out)["holder_dead"] is False
-    with _pt.raises(RuntimeError, match="ALIVE"):
-        inc.break_lease(out)
-    assert os.path.exists(inc._lock_path(out))
+    def merge(epoch):
+        try:
+            inc._merge_epoch(None, out, epoch, 2)
+        except Exception as e:  # reported by the assertion below
+            errors.append(e)
 
-    # another machine's holder: unverifiable, refused
-    stamp({"pid": 1234, "hostname": host + "-other", "boot_id": "x"})
-    assert inc.lease_status(out)["holder_dead"] is None
-    with _pt.raises(RuntimeError, match="cannot be verified"):
-        inc.break_lease(out)
-
-    # pre-r8 bare-pid stamp: no host identity, refused
-    stamp("99999")
-    assert inc.lease_status(out)["holder_dead"] is None
-    with _pt.raises(RuntimeError, match="cannot be verified"):
-        inc.break_lease(out)
-
-    # rebooted-host shape: same hostname, different boot id -> dead
-    # even if some unrelated live pid now wears the number
-    stamp({"pid": os.getpid(), "hostname": host, "boot_id": "stale-boot"})
-    if boot is not None:
-        assert inc.lease_status(out)["holder_dead"] is True
-        assert inc.break_lease(out)["broken"]
-
-    # no lease at all: no-op
-    assert inc.break_lease(out)["broken"] is False
-
-
-def test_merge_refusal_unchanged_while_dead_holder_lease_held(spark, tmp_path):
-    """The merge-side guard refuses on lease EXISTENCE, never on
-    holder liveness -- reclaiming is the operator's explicit act."""
-    import json
-    import os
-    import socket
-    import subprocess
-
-    import pandas as pd
-    import pytest as _pt
-
-    from wikidata_pq_spark.streaming import incremental as inc
-
-    cols = ["subj", "pred", "obj", "conv_id", "turn_idx"]
-    d = spark.createDataFrame(
-        pd.DataFrame([("Q1", "p", "Q2", "c1", 1)], columns=cols)
-    )
-    out = str(tmp_path / "support")
-    inc.merge_triple_support(d, out, epoch_id=0, n_buckets=2)
-    child = subprocess.Popen(["true"])
-    child.wait()
-    with open(inc._lock_path(out), "w") as fh:
-        json.dump(
-            {"pid": child.pid, "hostname": socket.gethostname(),
-             "boot_id": inc._host_boot_id()},
-            fh,
-        )
+    threads = [threading.Thread(target=merge, args=(e,)) for e in range(1, 33)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
     try:
-        with _pt.raises(ValueError, match="compaction holds"):
-            inc.merge_triple_support(d, out, epoch_id=1, n_buckets=2)
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
     finally:
-        os.remove(inc._lock_path(out))
-
-
-def test_compaction_lease_stamp_and_refusal_diagnosis(spark, tmp_path):
-    """_compact stamps pid+hostname+boot id; a second compactor's
-    refusal names the holder and says it is alive."""
-    import json
-    import os
-    import socket
-
-    import pandas as pd
-    import pytest as _pt
-
-    from wikidata_pq_spark.streaming import incremental as inc
-
-    cols = ["subj", "pred", "obj", "conv_id", "turn_idx"]
-    d = spark.createDataFrame(
-        pd.DataFrame([("Q1", "p", "Q2", "c1", 1)], columns=cols)
-    )
-    out = str(tmp_path / "support")
-    inc.merge_triple_support(d, out, epoch_id=0, n_buckets=2)
-    inc.merge_triple_support(d, out, epoch_id=1, n_buckets=2)
-    # simulate a live holder via a real stamp from this process
-    with open(inc._lock_path(out), "w") as fh:
-        json.dump(
-            {"pid": os.getpid(), "hostname": socket.gethostname(),
-             "boot_id": inc._host_boot_id()},
-            fh,
-        )
-    try:
-        with _pt.raises(RuntimeError, match="appears ALIVE"):
-            inc.compact_triple_support(spark, out, n_buckets=2)
-    finally:
-        os.remove(inc._lock_path(out))
-    # a real compaction leaves a parseable stamp behind? No -- it
-    # RELEASES the lease; instead verify the stamp format by peeking
-    # mid-protocol is overkill: assert the happy path still works.
-    summary = inc.compact_triple_support(spark, out, n_buckets=2)
-    assert summary["compacted"] == 2
-
-
-def test_quarantine_retention_sweep(spark, tmp_path):
-    """r8 (VERDICT item 7): --compact's retention sweep purges
-    quarantined generations older than the keep horizon, keeps recent
-    ones, never touches the live store, and only reports dirs that are
-    actually gone."""
-    import os
-
-    from wikidata_pq_spark.streaming import incremental as inc
-
-    out = str(tmp_path / "store")
-    os.makedirs(out)
-    qroot = inc._quarantine_dir(out)
-    os.makedirs(qroot)
-    for name in ("epoch=-1", "epoch=-9", "epoch=-9.1", "epoch=-40",
-                 "not-a-generation"):
-        os.makedirs(os.path.join(qroot, name))
-        with open(os.path.join(qroot, name, "part-0"), "w") as fh:
-            fh.write("x")
-
-    gone = inc.sweep_quarantine(out, current_generation=-20,
-                               keep_compactions=8)
-    # age = 20 - k: epoch=-1 (19) and epoch=-9/-9.1 (11) exceed 8;
-    # epoch=-40 is NEWER-numbered than the current generation is old
-    # (negative age) and stays; foreign names are never touched
-    assert gone == ["epoch=-1", "epoch=-9", "epoch=-9.1"]
-    left = sorted(os.listdir(qroot))
-    assert left == ["epoch=-40", "not-a-generation"]
-
-
-def test_quarantine_sweep_runs_from_compaction(spark, tmp_path):
-    """The sweep is invoked by the compaction engine itself and its
-    result lands in the summary."""
-    import os
-
-    import pandas as pd
-
-    from wikidata_pq_spark.streaming import incremental as inc
-
-    cols = ["subj", "pred", "obj", "conv_id", "turn_idx"]
-    d = spark.createDataFrame(
-        pd.DataFrame([("Q1", "p", "Q2", "c1", 1)], columns=cols)
-    )
-    out = str(tmp_path / "support")
-    inc.merge_triple_support(d, out, epoch_id=0, n_buckets=2)
-    inc.merge_triple_support(d, out, epoch_id=1, n_buckets=2)
-    qroot = inc._quarantine_dir(out)
-    os.makedirs(os.path.join(qroot, "epoch=-500"))  # ancient debris
-    os.makedirs(os.path.join(qroot, "epoch=-1000"))  # "future"-numbered
-    summary = inc.compact_triple_support(
-        spark, out, n_buckets=2, quarantine_keep=8
-    )
-    # first compaction commits generation -1; only debris OLDER than
-    # the horizon relative to it is purged -- here neither qualifies
-    # (ages are negative), so both survive and the summary says so
-    assert summary["generation"] == -1
-    assert summary["quarantine_purged"] == []
-    assert sorted(os.listdir(qroot)) == ["epoch=-1000", "epoch=-500"]
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert inc.live_epochs(out) == list(range(33))
 
 
 @pytest.mark.classic_session_only
@@ -1322,18 +1046,3 @@ def test_ensure_parallelism_non_numeric_shuffle_conf(spark, monkeypatch):
     monkeypatch.setattr(type(spark.conf), "get", fake_get)
     out = dedup.ensure_parallelism(df)  # must not raise
     assert out.count() == 10
-
-
-def test_purge_quarantine_reports_only_reclaimed_dirs(tmp_path):
-    """r8 (ADVICE): purge_quarantine only lists a generation as gone
-    when the directory is actually removed."""
-    import os
-
-    from wikidata_pq_spark.streaming import incremental as inc
-
-    out = str(tmp_path / "store")
-    os.makedirs(out)
-    qroot = inc._quarantine_dir(out)
-    os.makedirs(os.path.join(qroot, "epoch=-2"))
-    gone = inc.purge_quarantine(out)
-    assert gone == ["epoch=-2"] and not os.path.exists(qroot)

@@ -58,7 +58,6 @@ def heavy_hitters(
     capacity: int = 4096,
     min_share: float = 0.001,
     require_complete: bool = True,
-    truncate_lineage: bool = True,
 ) -> DataFrame:
     """Keys whose frequency MAY exceed ``min_share`` of the rows, with
     per-key estimate + global undercount bound.
@@ -67,9 +66,9 @@ def heavy_hitters(
     plus one marker row per partition carrying that partition's
     decrement total and row count; the merge is a single groupBy over
     that bounded partial set, and the global (max_undercount, n_total)
-    scalars ride a whole-frame window over the same <= capacity+1
-    merged rows -- one job end to end, no second scan of the input,
-    never a driver collect.
+    scalars ride a whole-frame window over the same
+    <= n_partitions * capacity + 1 merged rows -- one job end to end,
+    no second scan of the input, never a driver collect.
     Guarantees (pytest-pinned):
 
     - est <= true_count <= est + max_undercount  for emitted keys;
@@ -147,14 +146,12 @@ def heavy_hitters(
     # row, so summing over ALL rows equals summing the marker group --
     # identical values, but the whole merge is ONE job with a single
     # consumer, so the partials frame needs no lineage truncation
-    # (r8: the two-consumer checkpoint + broadcast-subquery tail
-    # roughly doubled the cell's wall time at sf1.0). The window
-    # collapses to one partition, which is bounded by construction:
-    # the merged frame never exceeds capacity+1 rows.
-    # ``truncate_lineage`` is retained for API compatibility (plan
-    # audit / older callers); the single-consumer merge no longer
-    # branches on it.
-    del truncate_lineage
+    # (a two-consumer checkpoint + broadcast-subquery tail roughly
+    # doubled the cell's wall time at sf1.0). The window
+    # collapses to one partition: each input partition contributes at
+    # most ``capacity`` distinct keys, so the merged frame has at most
+    # n_partitions * capacity + 1 rows (the +1 is the marker group),
+    # all of them in that one task.
     from pyspark.sql import Window
 
     g = parts.groupBy("key").agg(

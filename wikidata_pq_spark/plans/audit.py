@@ -352,9 +352,7 @@ def _sk_heavy_hitters_raw(spark, sf):
     toks = docs.select(F.explode(TX.tokens(F.col("text"))).alias("key")).where(
         F.col("key") != ""
     )
-    return sketches.heavy_hitters(
-        toks, "key", capacity=256, min_share=0.005, truncate_lineage=False
-    )
+    return sketches.heavy_hitters(toks, "key", capacity=256, min_share=0.005)
 
 
 def _graph_lpa_raw(spark, sf):

@@ -12,6 +12,17 @@ Structured Streaming with checkpointed exactly-once sinks:
   committed batch with no duplicate output.
 - ``windowed_event_counts``: watermarked sliding-window aggregation
   over an event stream (late data bounded by the watermark).
+- ``merge_triple_support`` / ``merge_current_beliefs`` (and their
+  ``incremental_*`` foreachBatch wrappers): each micro-batch lands as
+  one partial aggregate under its own ``epoch=N`` partition, reads
+  reduce the live partials, and ``compact_*`` folds them into one
+  generation. The live set is an append-only commit log,
+  ``<store>/_log/<version:020d>.json``, one full snapshot per version,
+  installed with ``os.link`` so only one writer can create each
+  version. A replay of a committed epoch is a no-op, a merge or
+  compaction that dies before its commit stays invisible, and of two
+  writers racing for a version the loser retries (merge) or raises
+  (compaction). See the commit-log section below.
 
 Invariant: a micro-batch must contain whole conversations (the
 coreference rule is conversation-scoped). Upstream writers satisfy
@@ -21,6 +32,12 @@ source files).
 """
 
 from __future__ import annotations
+
+import json
+import os
+import re
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -184,83 +201,28 @@ def windowed_event_counts(
     )
 
 
-def _guard_epoch_vs_manifest(out_dir: str, epoch_id: int) -> None:
-    """Refuse to write an epoch the compaction manifest would make
-    invisible (r6): epoch ids come from the STREAMING checkpoint and
-    restart at 0 if that checkpoint is deleted while the store keeps
-    its manifest -- the write would land at or below
-    ``compacted_through``, be pruned from every read, and be GC'd by
-    the next compaction. Silent data loss; fail loudly instead.
-
-    Second rung (r7 review, tightened by the second review pass):
-    while a compaction lease is held, EVERY merge is refused. A replay
-    of a live epoch would rewrite a partition the compactor may be
-    mid-scan on (dynamic overwrite is delete-then-rename, not atomic
-    -- a transient hole gets baked into the committed generation and
-    the rows then GC'd). And a NEW id is only safe when it lands
-    strictly AFTER the compactor's live_epochs() listing: one that
-    starts writing before/during the listing can be picked up
-    partially, compacted incomplete, and its completed dir deleted by
-    the post-commit GC (id <= the recorded watermark). The writer
-    cannot tell which side of the listing it is on, so the only sound
-    writer-side rule is to refuse whenever the lease exists. This
-    check is best-effort (checked before the write, not atomically
-    with it -- a lease acquired a microsecond later can still race);
-    the operational contract remains that compaction runs BETWEEN
-    availableNow drains. The guard converts a violated contract from
-    silent corruption into a loud error in every non-racing
-    interleaving; an at-least-once streaming writer that hits it
-    simply fails the batch and replays it after the compaction."""
-    import os
-
-    m = _read_manifest(out_dir)
-    if m is not None and int(epoch_id) <= m["compacted_through"]:
-        raise ValueError(
-            f"epoch {epoch_id} <= compacted_through "
-            f"{m['compacted_through']}: the store at {out_dir} was "
-            "compacted under a streaming checkpoint this batch did not "
-            "come from (checkpoint reset?). Writing would be silently "
-            "invisible to reads. Use a fresh out_dir or restore the "
-            "original checkpoint."
-        )
-    if os.path.exists(_lock_path(out_dir)):
-        raise ValueError(
-            f"a compaction holds {_lock_path(out_dir)}: merging epoch "
-            f"{epoch_id} now could be read partially by the "
-            "compactor's scan (dynamic overwrite is not atomic) and "
-            "either corrupt the committed generation or be GC'd "
-            "incomplete. Retry after the compaction finishes."
-        )
-
-
 def merge_triple_support(
     batch: DataFrame, out_dir: str, epoch_id: int, n_buckets: int = 16
 ) -> None:
     """Merge one batch of (subj, pred, obj, conv_id, turn_idx) triples
-    into the running support table by writing the batch's PARTIAL
-    aggregate under its own ``epoch=N`` partition:
+    into the running support table: the batch's PARTIAL aggregate lands
+    under its own ``epoch=N`` partition and is then committed to the
+    store's log.
 
     - support count, first sighting, and an HLL sketch of conv_ids per
       triple key (count-distinct is NOT mergeable across batches;
       sketches are -- the standard streaming-rollup trick);
-    - the write is a dynamic partition-overwrite of exactly
-      ``epoch=<epoch_id>`` -- so an at-least-once replay of the epoch
-      REPLACES its own partial instead of double-counting. Idempotency
-      comes from the layout, not from a ledger that could itself miss
-      a commit (same design as ``incremental_extract``'s epoch
-      partitions above).
+    - an at-least-once replay of an epoch the log already lists does
+      nothing, so a committed partial is never rewritten or counted
+      twice; a replay of an epoch that died before its commit rewrites
+      exactly its own partition.
 
-    The read side (:func:`read_triple_support`) reduces the partials
-    (sum / min / hll_union). At 10^12 turns the per-epoch write is
-    proportional to the batch; when the partial count grows, epoch
-    compaction (:func:`compact_triple_support`, r6) folds the live set
-    into one generation -- crash-safe by PROTOCOL over bare parquet
-    (negative generation ids + an atomic manifest rename as the commit
-    point; see the compaction section below).
+    The read side (:func:`read_triple_support`) reduces the live
+    partials (sum / min / hll_union). At 10^12 turns the per-epoch
+    write is proportional to the batch; when the partial count grows,
+    :func:`compact_triple_support` folds the live set into one
+    generation (see the commit-log section below).
     """
-    from ..sources import tableio
-
-    _guard_epoch_vs_manifest(out_dir, epoch_id)
     agg = (
         batch.groupBy("subj", "pred", "obj")
         .agg(
@@ -274,26 +236,14 @@ def merge_triple_support(
             F.col("_first.turn_idx").alias("first_turn"),
             "conv_hll",
         )
-        .withColumn("bucket", tableio.bucket_column("subj", n_buckets))
-        .withColumn("epoch", F.lit(int(epoch_id)))
     )
-    (
-        agg.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch", "bucket")
-        .parquet(out_dir)
-    )
+    _merge_epoch(agg, out_dir, epoch_id, n_buckets)
 
 
-def read_triple_support(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Reduce the per-epoch partials into the current rollup:
-    (subj, pred, obj, n_support, n_convs_est, first_conv, first_turn).
-    Sum / lexicographic-min / hll_union are all associative, so the
-    result is independent of epoch arrival order. After a compaction,
-    the sidecar manifest prunes the reduce to the LIVE epoch set (see
-    the compaction protocol below) -- stale or replayed epoch dirs are
-    excluded by partition pruning."""
-    raw = _apply_live_filter(spark.read.parquet(out_dir), out_dir)
+def _reduce_support(raw: DataFrame) -> DataFrame:
+    """Reduce support partials into one partial of the same schema. It
+    keeps the RAW hll sketch (hll_union_agg, not the estimate), so a
+    compacted partial stays mergeable with future epochs."""
     return (
         raw.groupBy("subj", "pred", "obj")
         .agg(
@@ -303,10 +253,22 @@ def read_triple_support(spark: SparkSession, out_dir: str) -> DataFrame:
         )
         .select(
             "subj", "pred", "obj", "n_support",
-            F.hll_sketch_estimate("conv_hll").cast("long").alias("n_convs_est"),
             F.col("_first.first_conv").alias("first_conv"),
             F.col("_first.first_turn").alias("first_turn"),
+            "conv_hll",
         )
+    )
+
+
+def read_triple_support(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Reduce the live per-epoch partials into the current rollup:
+    (subj, pred, obj, n_support, n_convs_est, first_conv, first_turn).
+    Sum / lexicographic-min / hll_union are all associative, so the
+    result is independent of epoch arrival order."""
+    return _reduce_support(_live_partials(spark, out_dir)).select(
+        "subj", "pred", "obj", "n_support",
+        F.hll_sketch_estimate("conv_hll").cast("long").alias("n_convs_est"),
+        "first_conv", "first_turn",
     )
 
 
@@ -319,8 +281,8 @@ def incremental_triple_support(
     """Streaming wrapper: foreachBatch(merge_triple_support) with an
     availableNow trigger -- each micro-batch of linked triples lands as
     its own epoch partial; the streaming checkpoint resumes a killed
-    job at the next uncommitted batch, and a replayed batch overwrites
-    exactly its own epoch partition (idempotent)."""
+    job at the next uncommitted batch, and a replayed batch is merged
+    at most once."""
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         merge_triple_support(batch_df, out_dir, epoch_id, n_buckets=n_buckets)
@@ -335,24 +297,48 @@ def incremental_triple_support(
 
 # --------------------------------------------------------------------------
 # Incremental current-beliefs maintenance (the MERGE-INTO analogue for
-# the latest-assertion-wins view; VERDICT r4 item 7). Same epoch-partial
-# shape as the triple-support rollup: argmax is associative, so each
-# epoch stores only its per-(subj, pred) winner and the read side
-# reduces winners -- the view is maintained without ever re-scanning
-# committed epochs. Reference analogue: the resumable state machine
-# (reference: state.py:30-35) applied to a live view.
+# the latest-assertion-wins view). Same epoch-partial shape as the
+# triple-support rollup: argmax is associative, so each epoch stores
+# only its per-(subj, pred) winner and the read side reduces winners --
+# the view is maintained without ever re-scanning committed epochs.
+# Reference analogue: the resumable state machine (reference:
+# state.py:30-35) applied to a live view.
 # --------------------------------------------------------------------------
 
 BELIEF_ORDER_COLS = ("ts", "conv_id", "turn_idx")
 
 
-def _best_struct(order_cols: tuple):
-    """The comparison key: lexicographic max over (order_cols..., obj)
-    == the batch operator's row_number window ordered desc by each
-    order col with obj as the final deterministic tiebreak."""
-    return F.max(
-        F.struct(*[F.col(c).alias(c) for c in order_cols], F.col("obj").alias("obj"))
-    ).alias("_best")
+def _argmax(frame: DataFrame, order_cols: tuple) -> DataFrame:
+    """Per-(subj, pred) winner, as (subj, pred, obj, last_<col>...).
+    The comparison key is the lexicographic max over
+    (order_cols..., obj) == the batch operator's row_number window
+    ordered desc by each order col with obj as the final deterministic
+    tiebreak."""
+    best = F.struct(
+        *[F.col(c).alias(c) for c in order_cols], F.col("obj").alias("obj")
+    )
+    return (
+        frame.groupBy("subj", "pred")
+        .agg(F.max(best).alias("_best"))
+        .select(
+            "subj",
+            "pred",
+            F.col("_best.obj").alias("obj"),
+            *[F.col(f"_best.{c}").alias(f"last_{c}") for c in order_cols],
+        )
+    )
+
+
+def _reduce_beliefs(raw: DataFrame, order_cols: tuple) -> DataFrame:
+    """Argmax of argmaxes under the same key: the reduced partial is
+    exactly the partial a single giant epoch would have written."""
+    return _argmax(
+        raw.select(
+            "subj", "pred", "obj",
+            *[F.col(f"last_{c}").alias(c) for c in order_cols],
+        ),
+        order_cols,
+    )
 
 
 def merge_current_beliefs(
@@ -362,11 +348,10 @@ def merge_current_beliefs(
     order_cols: tuple = BELIEF_ORDER_COLS,
     n_buckets: int = 16,
 ) -> None:
-    """Merge one batch of triples into the latest-assertion-wins view
-    by writing the batch's per-(subj, pred) ARGMAX partial under its
-    own ``epoch=N`` partition (dynamic partition-overwrite, so an
-    at-least-once replay replaces exactly its own partial -- the same
-    idempotency-from-layout design as ``merge_triple_support``).
+    """Merge one batch of triples into the latest-assertion-wins view:
+    the batch's per-(subj, pred) ARGMAX partial lands under its own
+    ``epoch=N`` partition and is committed to the store's log, with the
+    same at-most-once replay rule as ``merge_triple_support``.
 
     Argmax under a fixed ordering is associative and commutative:
     max(max(A), max(B)) == max(A ∪ B) -- so per-epoch winners lose no
@@ -374,27 +359,7 @@ def merge_current_beliefs(
     arrival order. Each partial is O(distinct keys in the batch), not
     O(batch rows): the epoch store stays a rollup, never a log.
     """
-    from ..sources import tableio
-
-    _guard_epoch_vs_manifest(out_dir, epoch_id)
-    agg = (
-        batch.groupBy("subj", "pred")
-        .agg(_best_struct(order_cols))
-        .select(
-            "subj",
-            "pred",
-            F.col("_best.obj").alias("obj"),
-            *[F.col(f"_best.{c}").alias(f"last_{c}") for c in order_cols],
-        )
-        .withColumn("bucket", tableio.bucket_column("subj", n_buckets))
-        .withColumn("epoch", F.lit(int(epoch_id)))
-    )
-    (
-        agg.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch", "bucket")
-        .parquet(out_dir)
-    )
+    _merge_epoch(_argmax(batch, order_cols), out_dir, epoch_id, n_buckets)
 
 
 def read_current_beliefs(
@@ -402,28 +367,11 @@ def read_current_beliefs(
     out_dir: str,
     order_cols: tuple = BELIEF_ORDER_COLS,
 ) -> DataFrame:
-    """Reduce the per-epoch argmax partials into the current view --
-    identical output contract to ``operators.graph.current_beliefs``
+    """Reduce the live per-epoch argmax partials into the current view
+    -- identical output contract to ``operators.graph.current_beliefs``
     run over the full triple history: (subj, pred, obj, last_<col>...).
-    Reduces only the manifest's live epoch set after a compaction.
     """
-    raw = _apply_live_filter(spark.read.parquet(out_dir), out_dir)
-    renamed = raw.select(
-        "subj",
-        "pred",
-        "obj",
-        *[F.col(f"last_{c}").alias(c) for c in order_cols],
-    )
-    return (
-        renamed.groupBy("subj", "pred")
-        .agg(_best_struct(order_cols))
-        .select(
-            "subj",
-            "pred",
-            F.col("_best.obj").alias("obj"),
-            *[F.col(f"_best.{c}").alias(f"last_{c}") for c in order_cols],
-        )
-    )
+    return _reduce_beliefs(_live_partials(spark, out_dir), order_cols)
 
 
 def incremental_current_beliefs(
@@ -435,8 +383,8 @@ def incremental_current_beliefs(
 ):
     """Streaming wrapper: foreachBatch(merge_current_beliefs) with an
     availableNow trigger; the streaming checkpoint resumes a killed job
-    at the next uncommitted batch and a replayed batch overwrites
-    exactly its own epoch partition."""
+    at the next uncommitted batch and a replayed batch is merged at
+    most once."""
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         merge_current_beliefs(
@@ -452,146 +400,51 @@ def incremental_current_beliefs(
 
 
 # --------------------------------------------------------------------------
-# Epoch-partial compaction (r6, VERDICT item 6). Both stores grow one
-# partial per epoch forever; sum/min/hll-union and argmax are
-# associative, so epochs [e0..ek] reduce into ONE partial with no
-# information loss. Bare parquet has no atomic multi-partition commit,
-# so compaction is made crash-safe by PROTOCOL instead:
+# Epoch-partial compaction and the commit log. Both stores grow one
+# partial per epoch; sum/min/hll-union and argmax are associative, so
+# the live partials reduce into ONE partial -- a generation, stored
+# under a NEGATIVE epoch id so it never collides with a streaming epoch
+# (ids >= 0) -- with no information loss.
 #
-#   1. the merged partial is written under a NEGATIVE epoch id (one per
-#      compaction generation) -- streaming epoch ids are always >= 0,
-#      so the write can never clobber a live or in-flight batch, and a
-#      crash mid-write leaves garbage that the manifest does not list;
-#   2. a sidecar manifest (_compaction.json) naming the LIVE epoch set
-#      is swapped in atomically (tmp + os.replace) -- this rename is
-#      the commit point;
-#   3. stale epoch dirs are deleted AFTER the commit, best-effort: a
-#      crash mid-GC leaves dirs the manifest already excludes, and the
-#      next compaction re-collects them.
+# Bare parquet has no atomic multi-partition commit, so the live set is
+# recorded in an append-only log, ``<store>/_log/<version:020d>.json``
+# (the Delta Lake protocol, Armbrust et al., VLDB 2020). Each version is
+# a full snapshot {live, compacted_through, generation}, written to a
+# temp file, fsync'd, and installed with os.link, which fails if the
+# version exists: of two writers that read version V, exactly one
+# creates V+1 and the other gets FileExistsError.
 #
-# The read side prunes to the manifest's live set (epoch is a partition
-# column, so exclusion is partition pruning, not a data scan); with no
-# manifest every epoch on disk is live (pure-streaming layout,
-# backward compatible). An at-least-once REPLAY of an already-compacted
-# epoch recreates its dir, which the manifest correctly ignores (its
-# rows are inside the compacted partial) and the next compaction GCs.
-# Compaction runs BETWEEN availableNow drains (table maintenance, the
-# reference's state.py gate discipline) -- it does not race a live
-# writer by construction of the job, not of the filesystem.
+# - A merge writes its ``epoch=N`` partition, then commits live ∪ {N};
+#   on a lost race it re-reads and retries, since adding an epoch
+#   commutes with any other commit. An epoch the log already lists is
+#   not rewritten (Delta's idempotent txnVersion rule for foreachBatch),
+#   so no committed partition changes under a running compactor. An
+#   epoch at or below compacted_through is refused: its id came from a
+#   reset streaming checkpoint.
+# - A compaction reads version V, claims ``epoch=<g>`` with os.mkdir
+#   (g = lowest negative id on disk - 1), reduces exactly V's live set
+#   into it and commits V+1 = {live: [g]}. A lost race raises: the
+#   winning commit may have retired or added what this one read.
+# - Garbage is collected against a committed version only, and only
+#   what no later version can list: retired or never-committed
+#   non-negative dirs at or below compacted_through (merges refuse
+#   them), and negative dirs above the committed generation -- those
+#   were claimed before it, by compactors that read a version no newer
+#   than the one it replaced and so can no longer commit.
+#
+# Reads reduce exactly the newest version's live set (``epoch IN live``
+# prunes partitions, not rows), so a partition whose merge or
+# compaction died before its commit is invisible by construction.
 # --------------------------------------------------------------------------
 
-
-def _manifest_path(out_dir: str) -> str:
-    import os
-
-    return os.path.join(out_dir, "_compaction.json")
+_VERSION_FILE = re.compile(r"^(\d{20})\.json$")
 
 
-def _manifest_bak_path(out_dir: str) -> str:
-    import os
-
-    return os.path.join(out_dir, "_compaction.json.bak")
-
-
-def _read_manifest(out_dir: str) -> dict | None:
-    """The committed compaction manifest, falling back to the backup
-    copy (r7, ADVICE): the commit protocol writes ``.bak`` atomically
-    BEFORE the primary rename, so losing the primary (a copy tool that
-    skips ``_``-prefixed files, a fat-fingered rm) no longer silently
-    drops every compacted generation from reads -- the bak names the
-    same live set. An ABSENT primary is self-healed create-exclusively
-    (mkstemp + os.link, installed only if still absent); a CORRUPT but
-    present primary is served from the bak with a loud warning and
-    deliberately NOT overwritten (see the inline comments for both
-    races). A bak without a primary can also mean a crash
-    BETWEEN the two writes; treating that generation as committed is
-    still correct because its parquet data is complete by write order
-    and its reduction equals the retired epochs it replaces."""
-    import json
-    import os
-
-    p = _manifest_path(out_dir)
-    primary_err = None
-    if os.path.isfile(p):
-        try:
-            with open(p) as fh:
-                return json.load(fh)
-        except (json.JSONDecodeError, ValueError, OSError) as e:
-            # a CORRUPT primary (truncated copy, partial write by a
-            # non-atomic tool) is exactly the failure class the bak
-            # exists for -- fall through to it rather than failing
-            # every read forever (r7 review)
-            primary_err = e
-    bak = _manifest_bak_path(out_dir)
-
-    def m_from(path):
-        with open(path) as fh:
-            return json.load(fh)
-
-    if not os.path.isfile(bak):
-        if primary_err is not None:
-            raise RuntimeError(
-                f"{p} is unreadable ({primary_err}) and no .bak exists"
-            ) from primary_err
-        return None
-    if primary_err is not None:
-        import warnings
-
-        warnings.warn(
-            f"{p} is corrupt ({primary_err}); serving reads from .bak. "
-            "NOT overwriting the corrupt file (a concurrent compaction "
-            "may have replaced it since this read began -- blind "
-            "replacement could pin reads to a stale manifest); replace "
-            "it by hand after verifying no compactor is running.",
-            stacklevel=3,
-        )
-        return m_from(bak)
-    m = m_from(bak)
-    # primary ABSENT (vs corrupt, handled above without healing):
-    # self-heal is BEST-EFFORT and CREATE-EXCLUSIVE (r7 third review):
-    # mkstemp gives every healer -- across processes AND threads -- its
-    # own tmp file, and os.link(tmp, p) atomically installs it ONLY if
-    # the primary is still absent (link fails with FileExistsError if
-    # p exists). A blind os.replace here could install a STALE
-    # manifest over one a concurrent compaction committed after this
-    # reader loaded the bak, silently pinning reads to a GC'd
-    # generation. Any OSError (read-only snapshot/NFS export, full
-    # disk, a filesystem without link) is swallowed -- the read itself
-    # already succeeded from the bak.
-    import tempfile
-
-    try:
-        fd, tmp = tempfile.mkstemp(
-            prefix="_compaction.heal.", suffix=".tmp", dir=out_dir
-        )
-        try:
-            with os.fdopen(fd, "w") as fh:
-                json.dump(m, fh)
-                # flush+fsync BEFORE the link installs the file (r8,
-                # ADVICE): without it a machine crash right after the
-                # install could leave a truncated primary, which later
-                # reads classify as corrupt-but-present and deliberately
-                # never overwrite -- a permanent warning state. Matches
-                # the commit path's atomic-write discipline.
-                fh.flush()
-                os.fsync(fh.fileno())
-            # mkstemp creates 0600; copy the bak's actual mode (what
-            # the compactor's open()+umask produced) so the healed
-            # primary is exactly as readable as every other manifest --
-            # neither locked to 0600 nor blanket-0644 under a
-            # restrictive umask (r7 fifth review)
-            os.chmod(tmp, os.stat(bak).st_mode & 0o777)
-            os.link(tmp, p)  # atomic create-exclusive install
-        finally:
-            os.remove(tmp)
-    except OSError:
-        pass
-    return m
+def _log_dir(out_dir: str) -> str:
+    return os.path.join(out_dir, "_log")
 
 
 def _epochs_on_disk(out_dir: str) -> list[int]:
-    import os
-
     if not os.path.isdir(out_dir):
         return []
     out = []
@@ -604,483 +457,188 @@ def _epochs_on_disk(out_dir: str) -> list[int]:
     return sorted(out)
 
 
-def live_epochs(out_dir: str) -> list[int]:
-    """The epoch partitions the read side must reduce.
-
-    A NEGATIVE epoch dir is live ONLY if the manifest names it: the
-    rename of ``_compaction.json`` is the commit point, so a negative
-    dir with no manifest (or one the manifest does not list) is by
-    construction the output of a compaction that crashed between its
-    parquet job and the rename -- counting it live would DOUBLE every
-    row it merged (r6 review finding), and the next compaction would
-    bake the duplication in permanently. Streaming epochs are >= 0 and
-    are live unless a manifest retired them."""
-    m = _read_manifest(out_dir)
-    if m is None:
-        on_disk = _epochs_on_disk(out_dir)
-        live = [e for e in on_disk if e >= 0]
-        if live and any(e < 0 for e in on_disk):
-            # negatives + streaming epochs + NO manifest and NO bak:
-            # with the r7 protocol (bak written before the commit
-            # rename) this shape is an uncommitted crash, whose
-            # negatives are garbage -- but say so out loud, and the
-            # next _compact QUARANTINES them (rename, not rmtree) so
-            # even a wrong diagnosis on a pre-r7 store that lost both
-            # manifest copies stays recoverable.
-            import warnings
-
-            warnings.warn(
-                f"store at {out_dir}: negative generation(s) "
-                f"{sorted(e for e in on_disk if e < 0)} with no "
-                "_compaction.json (or .bak) -- treating as an "
-                "uncommitted compaction crash and reading streaming "
-                "epochs only; the next compaction will quarantine them",
-                stacklevel=2,
-            )
-        if not live and any(e < 0 for e in on_disk):
-            # negative generations but NO manifest and NO streaming
-            # epochs: after a COMMITTED compaction GC'd the retired
-            # epochs, the manifest is the only witness that the
-            # generation is real data -- losing it must not silently
-            # read empty (and the next compaction would GC the only
-            # copy). An uncommitted crash never looks like this: its
-            # pre-rename state keeps every live non-negative epoch on
-            # disk (GC is post-commit). Refuse to guess.
-            raise RuntimeError(
-                f"store at {out_dir} has compacted generation(s) "
-                f"{sorted(e for e in on_disk if e < 0)} but no "
-                "_compaction.json (or .bak) and no streaming epochs: "
-                "the manifest was lost AFTER a committed compaction. "
-                "Restore the manifest (live = the newest generation) "
-                "before reading or compacting."
-            )
-        return live
-    live = set(m["live"])
-    # epochs that landed after the manifest was written are live too
-    # (the manifest lists compaction SURVIVORS, not a frozen universe)
-    for e in _epochs_on_disk(out_dir):
-        if e >= 0 and e > m["compacted_through"]:
-            live.add(e)
-    return sorted(live)
-
-
-def _apply_live_filter(raw: DataFrame, out_dir: str) -> DataFrame:
-    # ALWAYS filter to the live set (partition pruning, not a scan):
-    # even with no manifest, an uncommitted negative generation from a
-    # crashed first compaction must be invisible to reads
-    return raw.filter(F.col("epoch").isin(live_epochs(out_dir)))
-
-
-def _lock_path(out_dir: str) -> str:
-    import os
-
-    return os.path.join(out_dir, "_compact.lock")
-
-
-def _host_boot_id() -> "str | None":
-    """This host's boot UUID (changes on every reboot); None where the
-    Linux procfs surface is unavailable."""
-    try:
-        with open("/proc/sys/kernel/random/boot_id") as fh:
-            return fh.read().strip()
-    except OSError:
-        return None
-
-
-def lease_status(out_dir: str) -> dict:
-    """Diagnose the compaction lease: ``held``, the recorded holder
-    identity, and ``holder_dead`` -- True only when the holder is
-    PROVABLY dead from this host (same hostname: the pid is gone or
-    the host has rebooted since the stamp), False when it is alive
-    here, None when liveness cannot be decided from this host (lease
-    stamped by another machine, or a pre-r8 bare-pid stamp with no
-    host identity)."""
-    import json
-    import os
-    import socket
-
-    p = _lock_path(out_dir)
-    try:
-        with open(p) as fh:
-            raw = fh.read()
-    except FileNotFoundError:
-        return {"held": False, "holder_dead": None, "pid": None,
-                "hostname": None, "boot_id": None}
-    pid = hostname = boot = None
-    try:
-        rec = json.loads(raw)
-        pid = int(rec["pid"])
-        hostname = rec.get("hostname")
-        boot = rec.get("boot_id")
-    except (ValueError, KeyError, TypeError):
-        try:
-            pid = int(raw.strip())  # pre-r8 stamp: bare pid, no host
-        except ValueError:
-            pid = None
-    dead: "bool | None" = None
-    if hostname is not None and hostname == socket.gethostname():
-        here = _host_boot_id()
-        if boot is not None and here is not None and boot != here:
-            dead = True  # same host, stamped before a reboot
-        elif pid is not None:
-            try:
-                os.kill(pid, 0)
-                dead = False  # signal 0 delivered: process exists
-            except ProcessLookupError:
-                dead = True
-            except PermissionError:
-                dead = False  # exists, owned by someone else
-            except OSError:
-                dead = None
-    return {"held": True, "holder_dead": dead, "pid": pid,
-            "hostname": hostname, "boot_id": boot}
-
-
-def break_lease(out_dir: str) -> dict:
-    """Remove a crashed compactor's lease -- ONLY when the holder is
-    provably dead (``lease_status``: same host and the pid is gone, or
-    the host rebooted since the stamp). Refuses loudly when the holder
-    is alive or cannot be verified from this machine: breaking a LIVE
-    compactor's lease would let a second compactor interleave writes
-    into the same generation dir (r8, VERDICT item 3). Returns the
-    pre-removal status on success."""
-    import os
-
-    st = lease_status(out_dir)
-    if not st["held"]:
-        return {**st, "broken": False}
-    if st["holder_dead"] is not True:
-        who = (
-            f"pid {st['pid']} on {st['hostname'] or 'an unknown host'}"
-        )
-        reason = (
-            "it is ALIVE on this host"
-            if st["holder_dead"] is False
-            else "its liveness cannot be verified from this host "
-            "(stamped by another machine or by a pre-r8 compactor)"
-        )
+def _head(out_dir: str, own_epoch: int | None = None) -> tuple[int, dict]:
+    """The newest committed log version and its snapshot; version -1
+    and an empty snapshot for a store with no log yet. A store whose
+    epoch partitions have no committed log version (the log was lost
+    or never written) is refused: guessing which partitions are live
+    could double-count a generation or drop committed epochs. The one
+    partition allowed is ``own_epoch``, the caller's own replayed
+    write, so a first merge that died before committing version 0 can
+    still be replayed."""
+    log = _log_dir(out_dir)
+    names = os.listdir(log) if os.path.isdir(log) else []
+    versions = [int(m.group(1)) for m in map(_VERSION_FILE.match, names) if m]
+    if versions:
+        version = max(versions)
+        with open(os.path.join(log, f"{version:020d}.json")) as fh:
+            return version, json.load(fh)
+    stray = [e for e in _epochs_on_disk(out_dir) if e != own_epoch]
+    if stray:
         raise RuntimeError(
-            f"refusing to break the compaction lease at "
-            f"{_lock_path(out_dir)}: holder {who} -- {reason}. If you "
-            "have verified out-of-band that the holder is dead, remove "
-            "the file by hand."
+            f"store at {out_dir} has epoch partitions {stray} but no "
+            f"committed version under {log}: the commit log was lost "
+            "or never written, so the live set is unknown. Restore the "
+            "log; the data was left untouched."
         )
-    os.remove(_lock_path(out_dir))
-    return {**st, "broken": True}
+    return -1, {"live": [], "compacted_through": -1, "generation": None}
 
 
-def _quarantine_dir(out_dir: str) -> str:
-    """Sibling of the store, NOT inside it: Spark's partition discovery
-    walks every subdirectory of the store and would read a nested
-    ``foo=bar``-shaped name as a conflicting partition column, so the
-    quarantined generation moves fully outside the table root."""
-    import os
+def _commit(out_dir: str, version: int, snapshot: dict) -> None:
+    """Install ``snapshot`` as log ``version``; raises FileExistsError
+    if another writer committed that version first."""
+    log = _log_dir(out_dir)
+    os.makedirs(log, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(prefix=".", suffix=".tmp", dir=log)
+    try:
+        with os.fdopen(fd, "w") as fh:
+            json.dump(snapshot, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.link(tmp, os.path.join(log, f"{version:020d}.json"))
+    finally:
+        os.remove(tmp)
 
-    norm = os.path.normpath(out_dir)
-    return os.path.join(
-        os.path.dirname(norm), os.path.basename(norm) + "__quarantine"
+
+def live_epochs(out_dir: str) -> list[int]:
+    """The epoch partitions the read side reduces: the newest log
+    version's live set (sorted)."""
+    return _head(out_dir)[1]["live"]
+
+
+def _live_partials(spark: SparkSession, out_dir: str) -> DataFrame:
+    return spark.read.parquet(out_dir).filter(
+        F.col("epoch").isin(live_epochs(out_dir))
     )
 
 
-def purge_quarantine(out_dir: str) -> list[str]:
-    """Delete quarantined generation dirs (``<store>__quarantine/``)
-    after a human has confirmed the store reads correctly. Quarantine
-    is compaction's answer to 'this negative generation is referenced
-    by no manifest': instead of destroying what MIGHT be the sole copy
-    of compacted history (pre-r7 stores that lost both manifest
-    copies), GC renames it out of the table root and leaves reclaiming
-    the disk to this explicit call."""
-    import os
-    import shutil
+def _write_partition(
+    partial: DataFrame, out_dir: str, epoch: int, n_buckets: int
+) -> None:
+    """Write ``partial`` as partition ``epoch=<epoch>``, bucketed by
+    subj; dynamic overwrite replaces only that partition."""
+    from ..sources import tableio
 
-    qroot = _quarantine_dir(out_dir)
-    gone = []
-    if not os.path.isdir(qroot):
-        return gone
-    for d in sorted(os.listdir(qroot)):
-        path = os.path.join(qroot, d)
-        shutil.rmtree(path, ignore_errors=True)
-        # only report a generation as purged if it is actually gone
-        # (r8, ADVICE): a permission/IO failure inside rmtree was
-        # previously swallowed AND reported as reclaimed while the
-        # directory still occupied disk.
-        if not os.path.exists(path):
-            gone.append(d)
-    try:
-        os.rmdir(qroot)
-    except OSError:
-        pass
-    return gone
+    (
+        partial.withColumn("bucket", tableio.bucket_column("subj", n_buckets))
+        .withColumn("epoch", F.lit(epoch))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch", "bucket")
+        .parquet(out_dir)
+    )
 
 
-def sweep_quarantine(
-    out_dir: str, current_generation: int, keep_compactions: int = 8
-) -> list:
-    """Age-based quarantine retention (r8, VERDICT item 7): purge
-    quarantined generation dirs more than ``keep_compactions``
-    committed generations older than ``current_generation``; keep
-    newer ones for operator inspection. Generation ids decrease by
-    exactly one per committed compaction, so id distance IS age in
-    compactions. Only dirs shaped like a quarantined generation
-    (``epoch=-N`` / ``epoch=-N.k``) are touched, and only inside the
-    quarantine root -- live generations live in the store itself and
-    are structurally out of reach. Returns the purged dir names
-    (verified-gone, the purge_quarantine discipline)."""
-    import os
-    import re as _re
-    import shutil
+def _check_above_watermark(out_dir: str, epoch: int, snapshot: dict) -> None:
+    if epoch <= snapshot["compacted_through"]:
+        raise ValueError(
+            f"epoch {epoch} <= compacted_through "
+            f"{snapshot['compacted_through']}: the store at {out_dir} was "
+            "compacted under a streaming checkpoint this batch did not "
+            "come from (checkpoint reset?). Writing would be silently "
+            "invisible to reads. Use a fresh out_dir or restore the "
+            "original checkpoint."
+        )
 
-    qroot = _quarantine_dir(out_dir)
-    gone = []
-    if not os.path.isdir(qroot):
-        return gone
-    cur_abs = -int(current_generation)
-    pat = _re.compile(r"^epoch=-(\d+)(?:\.\d+)?$")
-    for d in sorted(os.listdir(qroot)):
-        m = pat.match(d)
-        if not m:
+
+def _merge_epoch(
+    partial: DataFrame, out_dir: str, epoch_id: int, n_buckets: int
+) -> None:
+    """Write one epoch's partial and commit it: the merge protocol."""
+    epoch = int(epoch_id)
+    version, snapshot = _head(out_dir, own_epoch=epoch)
+    if epoch in snapshot["live"]:
+        return  # a replay of a committed epoch
+    _check_above_watermark(out_dir, epoch, snapshot)
+    _write_partition(partial, out_dir, epoch, n_buckets)
+    while True:
+        live = sorted(snapshot["live"] + [epoch])
+        try:
+            _commit(out_dir, version + 1, {**snapshot, "live": live})
+            return
+        except FileExistsError:  # another writer committed first: re-read
+            version, snapshot = _head(out_dir, own_epoch=epoch)
+            if epoch in snapshot["live"]:
+                return
+            _check_above_watermark(out_dir, epoch, snapshot)
+
+
+def _claim_generation(out_dir: str) -> int:
+    """Create ``epoch=<g>`` for a new generation, g = lowest negative id
+    on disk - 1; os.mkdir makes the claim exclusive."""
+    while True:
+        gen = min([0] + _epochs_on_disk(out_dir)) - 1
+        try:
+            os.mkdir(os.path.join(out_dir, f"epoch={gen}"))
+            return gen
+        except FileExistsError:
             continue
-        if cur_abs - int(m.group(1)) > keep_compactions:
-            path = os.path.join(qroot, d)
-            shutil.rmtree(path, ignore_errors=True)
-            if not os.path.exists(path):
-                gone.append(d)
-    try:
-        os.rmdir(qroot)  # drops the root only when empty
-    except OSError:
-        pass
+
+
+def _collect(out_dir: str, snapshot: dict) -> list[int]:
+    """Delete the partitions no version after ``snapshot`` can list (see
+    the section comment); returns their epoch ids."""
+    live, gen = set(snapshot["live"]), snapshot["generation"]
+    gone = []
+    for e in _epochs_on_disk(out_dir):
+        dead = 0 <= e <= snapshot["compacted_through"] or (
+            gen is not None and gen < e < 0
+        )
+        if dead and e not in live:
+            shutil.rmtree(os.path.join(out_dir, f"epoch={e}"), ignore_errors=True)
+            gone.append(e)
     return gone
 
 
 def _compact(
-    spark: SparkSession,
-    out_dir: str,
-    reducer,
-    n_buckets: int,
-    quarantine_keep: int = 8,
+    spark: SparkSession, out_dir: str, reducer, n_buckets: int
 ) -> dict:
-    """Shared compaction engine: reduce ALL currently-live epochs into
-    one partial under the next negative generation id, commit via the
-    manifest rename, then GC stale dirs. ``reducer`` maps the raw
-    live-partial frame to the merged partial (same schema minus
-    epoch/bucket, which this engine re-derives). Returns a summary dict
-    (generation, epochs compacted, rows written).
-
-    Concurrency contract (r7, VERDICT item 6): compaction is
-    SINGLE-COMPACTOR, enforced by an O_EXCL lease file -- two
-    concurrent ``_compact`` calls would pick the same generation id and
-    interleave writes into the same partition dir, so the second call
-    REFUSES loudly instead. Concurrent streaming MERGES are refused
-    for the lease's whole lifetime by the merge-side guard (see
-    ``_guard_epoch_vs_manifest`` for the two failure shapes: replays
-    rewriting a partition mid-scan, and new epochs landing before or
-    during the live_epochs() listing that would be compacted partial
-    and then GC'd complete). An epoch that had FULLY landed before the
-    listing reduces correctly at any later point -- what the
-    protocol's epoch arithmetic guarantees is pinned by
-    ``test_epoch_landing_before_compaction_reduces_correctly``, which
-    verifies an epoch written just before compaction survives the
-    commit + GC and the rollup equals the batch reference. The
-    operational contract remains compaction-between-drains; the guard
-    converts violations into loud, replayable batch failures. A crash
-    while holding the lease leaves the file behind; the next compactor
-    refuses until it is removed, which is deliberate (the operator must
-    confirm the dead compactor actually died before breaking its
-    lease)."""
-    import json
-    import os
-    import shutil
-
-    from ..sources import tableio
-
-    os.makedirs(out_dir, exist_ok=True)
-    try:
-        lock_fd = os.open(
-            _lock_path(out_dir), os.O_CREAT | os.O_EXCL | os.O_WRONLY
-        )
-    except FileExistsError:
-        st = lease_status(out_dir)
-        diag = (
-            "the holder is PROVABLY DEAD -- reclaim it with "
-            "break_lease()/maintain_beliefs --break-lease"
-            if st["holder_dead"] is True
-            else "the holder appears ALIVE"
-            if st["holder_dead"] is False
-            else "holder liveness cannot be verified from this host"
-        )
-        raise RuntimeError(
-            f"compaction already in progress for {out_dir} (or a "
-            f"crashed compactor left {_lock_path(out_dir)}): holder "
-            f"pid {st['pid']} on {st['hostname'] or 'unknown host'}; "
-            f"{diag}"
-        )
-    # everything after a successful O_EXCL create -- including the
-    # holder stamp itself -- runs under the finally that releases the
-    # lease, so an ENOSPC/EIO on the write cannot orphan the lock (r7
-    # review). The stamp records pid + hostname + boot id (r8, VERDICT
-    # item 3) so a later compactor / break_lease can PROVE a crashed
-    # holder dead instead of demanding a human judgment call.
-    try:
-        try:
-            import socket
-
-            os.write(
-                lock_fd,
-                json.dumps(
-                    {
-                        "pid": os.getpid(),
-                        "hostname": socket.gethostname(),
-                        "boot_id": _host_boot_id(),
-                    }
-                ).encode(),
-            )
-        finally:
-            os.close(lock_fd)
-        prev = _read_manifest(out_dir)
-        live = live_epochs(out_dir)
-
-        def _gc_stale(keep: set) -> list:
-            """Retire every on-disk epoch dir outside ``keep``. Retired
-            NON-NEGATIVE epochs at or below the manifest watermark are
-            deleted (their rows are provably inside the committed
-            generation). Unreferenced NEGATIVE generations are
-            QUARANTINED instead (r7, ADVICE): under the current
-            protocol they are uncommitted crash garbage, but on a
-            pre-r7 store that lost both manifest copies they could be
-            the sole copy of compacted history -- a rename is loud,
-            reversible, and invisible to Spark's file index either
-            way."""
-            cut = prev["compacted_through"] if prev is not None else -1
-            gone = []
-            for e in _epochs_on_disk(out_dir):
-                if e in keep:
-                    continue
-                src = os.path.join(out_dir, f"epoch={e}")
-                if e < 0:
-                    qroot = _quarantine_dir(out_dir)
-                    os.makedirs(qroot, exist_ok=True)
-                    dst = os.path.join(qroot, f"epoch={e}")
-                    n = 0
-                    while os.path.exists(dst):
-                        n += 1
-                        dst = os.path.join(qroot, f"epoch={e}.{n}")
-                    os.rename(src, dst)
-                    gone.append(e)
-                elif e <= cut:
-                    shutil.rmtree(src, ignore_errors=True)
-                    gone.append(e)
-            return gone
-
-        if len(live) <= 1:
-            # no reduction to do, but a crashed previous GC (or a
-            # crashed first compaction's uncommitted generation) may
-            # have left stale dirs -- re-collect them (r6 review
-            # finding: the early return used to skip this, stranding
-            # them forever)
-            return {
-                "compacted": 0,
-                "live": live,
-                "removed_epochs": _gc_stale(set(live)),
-                # retention sweep still runs on the no-op path (aged
-                # quarantine debris must not outlive quiet stores);
-                # with no committed generation there is no age basis
-                "quarantine_purged": (
-                    sweep_quarantine(
-                        out_dir, prev["generation"], quarantine_keep
-                    )
-                    if prev is not None
-                    else []
-                ),
-            }
-        gen = (min(live + [0])) - 1  # next free negative id
-        pre_removed = _gc_stale(set(live))
-        raw = spark.read.parquet(out_dir).filter(F.col("epoch").isin(live))
-        merged = (
-            reducer(raw)
-            .withColumn("bucket", tableio.bucket_column("subj", n_buckets))
-            .withColumn("epoch", F.lit(int(gen)))
-        )
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch", "bucket")
-            .parquet(out_dir)
-        )
-        compacted_through = max(live)
-        manifest = {
-            "live": [gen],
-            "compacted_through": compacted_through,
-            "generation": gen,
-        }
-        # backup FIRST (r7, ADVICE): once the parquet data is complete,
-        # write the recovery copy, then commit via the primary rename.
-        # Losing the primary afterwards self-heals from the bak; a
-        # crash between the two writes reads as committed via the bak
-        # fallback, which is correct because the generation's data is
-        # already complete and equal to the epochs it retires.
-        for path in (_manifest_bak_path(out_dir), _manifest_path(out_dir)):
-            tmp = path + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(manifest, fh)
-            os.replace(tmp, path)  # primary replace = the commit point
-        # post-commit GC: every on-disk epoch <= compacted_through that
-        # is not the new generation is stale (includes replayed dirs,
-        # the RETIRED previous generation -- provably redundant now
-        # that the committed one contains its reduction -- and any
-        # orphans from a previous crashed GC)
-        removed = list(pre_removed)
-        for e in _epochs_on_disk(out_dir):
-            if e != gen and e <= compacted_through:
-                shutil.rmtree(
-                    os.path.join(out_dir, f"epoch={e}"), ignore_errors=True
-                )
-                removed.append(e)
-        n_rows = spark.read.parquet(os.path.join(out_dir, f"epoch={gen}")).count()
+    """Shared compaction engine: reduce the live epochs of the newest
+    log version into one new generation, commit it, then collect
+    garbage. ``reducer`` maps the raw live-partial frame to the merged
+    partial (same schema minus epoch/bucket). Returns a summary dict;
+    with at most one live epoch there is nothing to reduce and the
+    summary has ``compacted == 0``."""
+    version, snapshot = _head(out_dir)
+    live = snapshot["live"]
+    if len(live) <= 1:
         return {
-            "compacted": len(live),
-            "generation": gen,
-            "rows": n_rows,
-            "removed_epochs": removed,
-            "prev_generation": None if prev is None else prev["generation"],
-            "quarantine_purged": sweep_quarantine(
-                out_dir, gen, quarantine_keep
-            ),
+            "compacted": 0,
+            "live": live,
+            "removed_epochs": _collect(out_dir, snapshot),
         }
-    finally:
-        try:
-            os.remove(_lock_path(out_dir))
-        except FileNotFoundError:
-            pass
+    gen = _claim_generation(out_dir)
+    raw = spark.read.parquet(out_dir).filter(F.col("epoch").isin(live))
+    _write_partition(reducer(raw), out_dir, gen, n_buckets)
+    committed = {
+        "live": [gen],
+        "compacted_through": max([snapshot["compacted_through"], *live]),
+        "generation": gen,
+    }
+    try:
+        _commit(out_dir, version + 1, committed)
+    except FileExistsError:
+        raise RuntimeError(
+            f"compaction of {out_dir} lost the commit race for log "
+            f"version {version + 1}: another writer committed first, so "
+            f"generation {gen} was not committed and stays invisible. "
+            "Nothing was retired; retry the compaction."
+        ) from None
+    n_rows = spark.read.parquet(os.path.join(out_dir, f"epoch={gen}")).count()
+    return {
+        "compacted": len(live),
+        "generation": gen,
+        "rows": n_rows,
+        "removed_epochs": _collect(out_dir, committed),
+    }
 
 
 def compact_triple_support(
-    spark: SparkSession, out_dir: str, n_buckets: int = 16,
-    quarantine_keep: int = 8,
+    spark: SparkSession, out_dir: str, n_buckets: int = 16
 ) -> dict:
-    """Compact the triple-support epoch store: the merged partial keeps
-    the RAW hll sketch (hll_union_agg, not the estimate) so it stays
-    mergeable with future epochs -- compact-then-stream == stream."""
-
-    def reduce_support(raw: DataFrame) -> DataFrame:
-        return (
-            raw.groupBy("subj", "pred", "obj")
-            .agg(
-                F.sum("n_support").alias("n_support"),
-                F.min(F.struct("first_conv", "first_turn")).alias("_first"),
-                F.hll_union_agg("conv_hll").alias("conv_hll"),
-            )
-            .select(
-                "subj", "pred", "obj", "n_support",
-                F.col("_first.first_conv").alias("first_conv"),
-                F.col("_first.first_turn").alias("first_turn"),
-                "conv_hll",
-            )
-        )
-
-    return _compact(
-        spark, out_dir, reduce_support, n_buckets,
-        quarantine_keep=quarantine_keep,
-    )
+    """Compact the triple-support epoch store; compact-then-stream ==
+    stream, since the generation keeps the raw hll sketch."""
+    return _compact(spark, out_dir, _reduce_support, n_buckets)
 
 
 def compact_current_beliefs(
@@ -1088,29 +646,8 @@ def compact_current_beliefs(
     out_dir: str,
     order_cols: tuple = BELIEF_ORDER_COLS,
     n_buckets: int = 16,
-    quarantine_keep: int = 8,
 ) -> dict:
-    """Compact the current-beliefs epoch store: argmax of argmaxes
-    under the same (order_cols..., obj) key -- the merged partial is
-    exactly the partial a single giant epoch would have written."""
-
-    def reduce_beliefs(raw: DataFrame) -> DataFrame:
-        renamed = raw.select(
-            "subj", "pred", "obj",
-            *[F.col(f"last_{c}").alias(c) for c in order_cols],
-        )
-        return (
-            renamed.groupBy("subj", "pred")
-            .agg(_best_struct(order_cols))
-            .select(
-                "subj",
-                "pred",
-                F.col("_best.obj").alias("obj"),
-                *[F.col(f"_best.{c}").alias(f"last_{c}") for c in order_cols],
-            )
-        )
-
+    """Compact the current-beliefs epoch store (argmax of argmaxes)."""
     return _compact(
-        spark, out_dir, reduce_beliefs, n_buckets,
-        quarantine_keep=quarantine_keep,
+        spark, out_dir, lambda raw: _reduce_beliefs(raw, order_cols), n_buckets
     )
