@@ -28,7 +28,7 @@ from wikidata_pq_spark.operators import canonicalize, extract, linking  # noqa: 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: the full transcript->triples KG pipeline.
 
-    Runs extraction (applyInPandas), broadcast entity linking, and
+    Runs extraction (Catalyst regex), broadcast entity linking, and
     connected-component canonicalization on the deterministic synthetic
     corpus scaled for sf0.001; driver checks rows>0 and stable schema.
     """

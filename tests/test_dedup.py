@@ -442,144 +442,45 @@ def test_broadcast_cache_keeps_live_concurrent_session(spark):
 
 
 @pytest.mark.classic_session_only
-def test_ensure_parallelism_repartitions_small_scan(spark, tmp_path):
-    """A one-file parquet scan below the slot count gets round-robin
-    repartitioned to defaultParallelism; the decision is memoized per
-    (applicationId, semanticHash) so the second call never re-plans."""
-    p = str(tmp_path / "small.parquet")
-    spark.range(100).coalesce(1).selectExpr(
-        "id", "cast(id as string) AS text"
-    ).write.parquet(p)
-    df = spark.read.parquet(p)
-    target = spark.sparkContext.defaultParallelism
-    dedup._PROBE_CACHE.clear()
-    out = dedup.ensure_parallelism(df)
-    assert out.rdd.getNumPartitions() == target
-    key = (
-        spark.sparkContext.applicationId,
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        df.semanticHash(),
-    )
-    assert dedup._PROBE_CACHE[key] < target
-    # memo hit: a poisoned plan probe would blow up if consulted again
-    orig = dedup._physical_plan
-    dedup._physical_plan = lambda _df: (_ for _ in ()).throw(AssertionError("re-probed"))
+def test_spread_small_scan_runs_no_job_and_sets_no_conf(spark, tmp_path, monkeypatch):
+    """contracts.spread_small_scan: a one-file parquet scan comes back
+    with defaultParallelism partitions, deciding from the file splits
+    alone (no Spark job, no session conf write); a scan that is already
+    as wide comes back as the same object."""
+    from wikidata_pq_spark.contracts import spread_small_scan
+
+    sc = spark.sparkContext
+    target = sc.defaultParallelism
+    one, wide = str(tmp_path / "one.parquet"), str(tmp_path / "wide.parquet")
+    rows = spark.range(100).selectExpr("id AS doc_id", "cast(id AS string) AS text")
+    rows.coalesce(1).write.parquet(one)
+    rows.repartition(2 * target).write.parquet(wide)
+    one_df, wide_df = spark.read.parquet(one), spark.read.parquet(wide)
+    assert wide_df.rdd.getNumPartitions() >= target
+
+    conf_writes = []
+    real_set = type(spark.conf).set
+
+    def spy_set(self, key, value):
+        conf_writes.append(key)
+        real_set(self, key, value)
+
+    monkeypatch.setattr(type(spark.conf), "set", spy_set)
+    sc.setJobGroup("spread_small_scan", "spread_small_scan")
     try:
-        out2 = dedup.ensure_parallelism(spark.read.parquet(p))
-        assert out2.rdd.getNumPartitions() == target
+        out = spread_small_scan(one_df)
+        same = spread_small_scan(wide_df)
     finally:
-        dedup._physical_plan = orig
-
-
-@pytest.mark.classic_session_only
-def test_ensure_parallelism_post_shuffle_frame_untouched(spark, docs):
-    """A frame downstream of an exchange is returned AS-IS (the plan
-    fast path fires; no RDD conversion, no repartition node)."""
-    dedup._PROBE_CACHE.clear()
-    grouped = docs.groupBy("lang").count()
-    out = dedup.ensure_parallelism(grouped)
-    assert out is grouped
-
-
-@pytest.mark.classic_session_only
-def test_ensure_parallelism_leaves_aqe_conf_alone(spark, docs, tmp_path):
-    """Neither the plan fast path nor the stage-free lazy-RDD path
-    touches spark.sql.adaptive.enabled (the r6 session-global toggle
-    now survives only for broadcast-shaped cold probes)."""
-    p = str(tmp_path / "aqe.parquet")
-    docs.write.parquet(p)
-    dedup._PROBE_CACHE.clear()
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    calls = []
-    orig_set = spark.conf.set
-
-    def spy_set(k, v):
-        calls.append((k, str(v)))
-        orig_set(k, v)
-
-    spark.conf.set = spy_set
-    try:
-        dedup.ensure_parallelism(spark.read.parquet(p))          # scan-only
-        dedup.ensure_parallelism(docs.groupBy("lang").count())   # post-shuffle
-    finally:
-        spark.conf.set = orig_set
-    assert not [c for c in calls if c[0] == "spark.sql.adaptive.enabled"]
-    assert spark.conf.get("spark.sql.adaptive.enabled", "true") == prev
-
-
-@pytest.mark.classic_session_only
-def test_ensure_parallelism_probe_cache_bounded(spark):
-    """The memo is LRU-bounded so unbounded distinct plans can't grow
-    driver memory."""
-    dedup._PROBE_CACHE.clear()
-    try:
-        for i in range(dedup._PROBE_CACHE_MAX + 10):
-            dedup._PROBE_CACHE[("app", i)] = 1
-            dedup._PROBE_CACHE.move_to_end(("app", i))
-            while len(dedup._PROBE_CACHE) > dedup._PROBE_CACHE_MAX:
-                dedup._PROBE_CACHE.popitem(last=False)
-        assert len(dedup._PROBE_CACHE) == dedup._PROBE_CACHE_MAX
-        # a real call still lands after the synthetic fill
-        df = spark.range(10).selectExpr("id", "'x' AS text")
-        dedup.ensure_parallelism(df)
-        assert len(dedup._PROBE_CACHE) <= dedup._PROBE_CACHE_MAX
-    finally:
-        dedup._PROBE_CACHE.clear()
-
-
-@pytest.mark.classic_session_only
-def test_ensure_parallelism_single_partition_exchange_not_parallel(spark):
-    """A global aggregate plans an 'Exchange' node whose arguments
-    collapse to SinglePartition -- the plan fast path must NOT read
-    that as shuffle-grade parallelism (r7 self-review): the frame goes
-    through the real probe and gets repartitioned."""
-    from pyspark.sql import functions as F
-
-    dedup._PROBE_CACHE.clear()
-    one = (
-        spark.range(100)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("n", (F.col("n") + 1).alias("m"))
-    )
-    out = dedup.ensure_parallelism(one)
-    target = spark.sparkContext.defaultParallelism
-    assert out is not one  # repartition applied
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        monkeypatch.undo()
+    # the status tracker is fed by the asynchronous listener bus: drain
+    # it so a job that already ran is counted
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("spread_small_scan")) == 0
+    assert conf_writes == []
     assert out.rdd.getNumPartitions() == target
-
-
-@pytest.mark.classic_session_only
-def test_ensure_parallelism_explicit_repartition_and_coalesce(spark):
-    """r7 second-review fix, pinned (third review: 'verified live' is
-    not a regression test): an explicit repartition(2) and a
-    post-shuffle coalesce(2) must NOT be declared parallel by the
-    conf fast path -- both take the real probe and get repartitioned
-    to the slot count. The plan-text markers the detection relies on
-    (REPARTITION_BY_NUM / a Coalesce tree node) are asserted directly,
-    so a Spark upgrade that changes formatted-plan rendering fails
-    HERE loudly instead of silently reverting the fix."""
-    from pyspark.sql import functions as F
-
-    target = spark.sparkContext.defaultParallelism
-    dedup._PROBE_CACHE.clear()
-
-    r2 = spark.range(1000).withColumn("x", F.col("id") * 2).repartition(2)
-    plan_r2 = dedup._physical_plan(r2)
-    assert "REPARTITION_BY_NUM" in plan_r2  # rendering contract
-    out = dedup.ensure_parallelism(r2)
-    assert out.rdd.getNumPartitions() == target
-
-    co = (
-        spark.range(1000)
-        .groupBy((F.col("id") % 5).alias("k"))
-        .count()
-        .coalesce(2)
-    )
-    plan_co = dedup._physical_plan(co)
-    assert dedup.re.search(
-        r"(?m)^[\s:+\-*]*Coalesce\s*\(\d+\)\s*$", plan_co
-    )  # rendering contract
-    out2 = dedup.ensure_parallelism(co)
-    assert out2.rdd.getNumPartitions() == target
+    assert same is wide_df
+    assert sorted(out.toPandas()["doc_id"]) == list(range(100))
 
 
 def test_prefix_filter_jaccard_equals_quadratic_baseline(docs, spark):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from wikidata_pq_spark import oracle
@@ -47,7 +49,7 @@ def test_ordered_turns_sorted_within_conversation(spark_corpus):
 
 
 def test_three_paths_equal_on_adversarial_text(spark):
-    """sql / partitions / grouped extraction are result-identical on
+    """sql / partitions extraction are result-identical on
     randomized adversarial text (multiple matches per turn, pronoun
     chains and pronoun-first turns, empty/whitespace/punctuation text,
     rule keywords split across turns) -- beyond the datagen templates."""
@@ -76,10 +78,12 @@ def test_three_paths_equal_on_adversarial_text(spark):
     tdf = spark.createDataFrame(pdf)
 
     results = {}
-    for method in ("sql", "partitions", "grouped"):
+    for method in ("sql", "partitions"):
         got = extract.extract_mentions(tdf, method=method).toPandas()
         results[method] = sorted(map(tuple, got[KEYS].values))
-    assert results["sql"] == results["partitions"] == results["grouped"]
+    assert results["sql"] == results["partitions"]
+    with pytest.raises(ValueError, match="unknown method 'grouped'"):
+        extract.extract_mentions(tdf, method="grouped")
     # and all equal the single-process oracle
     golden = oracle.oracle_extract(pdf)
     assert results["sql"] == sorted(map(tuple, golden[KEYS].values))
@@ -122,7 +126,7 @@ def test_extraction_null_text_rows_are_inert(spark):
         .toPandas()[key].sort_values(key).reset_index(drop=True)
     )
     assert len(want) > 0
-    for method in ("sql", "partitions", "grouped"):
+    for method in ("sql", "partitions"):
         got = (
             extract.extract_mentions(
                 spark.createDataFrame(dirty, schema=schema), method=method

@@ -1020,29 +1020,3 @@ def test_concurrent_merge_commits_lose_no_epoch(tmp_path, monkeypatch):
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads) and not errors
     assert inc.live_epochs(out) == list(range(33))
-
-
-@pytest.mark.classic_session_only
-def test_ensure_parallelism_non_numeric_shuffle_conf(spark, monkeypatch):
-    """r8 (ADVICE): a platform that sets a non-numeric
-    spark.sql.shuffle.partitions (e.g. 'auto') must fall back to the
-    real probe instead of raising ValueError on every shuffled frame."""
-    from pyspark.sql import functions as F
-
-    from wikidata_pq_spark.operators import dedup
-
-    df = (
-        spark.range(100)
-        .groupBy((F.col("id") % 10).alias("k"))
-        .count()
-    )
-    real_get = type(spark.conf).get
-
-    def fake_get(self, key, default=None):
-        if key == "spark.sql.shuffle.partitions":
-            return "auto"
-        return real_get(self, key, default)
-
-    monkeypatch.setattr(type(spark.conf), "get", fake_get)
-    out = dedup.ensure_parallelism(df)  # must not raise
-    assert out.count() == 10

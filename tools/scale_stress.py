@@ -42,6 +42,7 @@ sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from wikidata_pq_spark.contracts import spread_small_scan  # noqa: E402
 from wikidata_pq_spark.session import get_spark  # noqa: E402
 
 
@@ -73,7 +74,9 @@ def main() -> None:
     )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = spread_small_scan(
+        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    )
     embs = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     reps = spark.range(10).select(F.col("id").cast("int").alias("rep"))
 

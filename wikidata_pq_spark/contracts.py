@@ -36,6 +36,23 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+def spread_small_scan(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` over ``defaultParallelism`` partitions when it
+    has fewer, else return it unchanged.
+
+    Precondition: ``df`` is a bare file scan (``load`` / ``read.parquet``
+    with nothing on top), so ``.rdd`` plans from the file splits
+    without running a job. A small table is one file under
+    maxPartitionBytes and arrives as ONE partition, which would run the
+    row-level dedup stages (the minhash folds, the simhash pandas UDF)
+    on a single core. Value-neutral: those stages key per document.
+    """
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
+
+
 # --------------------------------------------------------------------------
 # Golden-parquet oracle exports. The driver's value-hash gate runs at
 # sf0.01; queries whose golden is computed by an independent driver-side
@@ -558,7 +575,7 @@ def q_dedup_minhash_lsh(spark, sf):
     minhash -- the only non-SQL step) are exported; the SQL re-derives
     the banding (signature slicing), the bucket self-join and the pair
     dedup from scratch."""
-    d = load(spark, sf, "documents")
+    d = spread_small_scan(load(spark, sf, "documents"))
     if _is_gate_sf(sf):
         _export_golden(dedup.minhash_signatures(d, n_hashes=32).toPandas(), "minhash_sigs")
     return dedup.minhash_lsh_candidates(d)
@@ -569,7 +586,7 @@ def q_dedup_simhash(spark, sf):
     fingerprints (pandas-UDF md5 bit votes) are exported; the SQL
     re-derives chunk banding, the bucket join, XOR popcount Hamming
     distance and the threshold filter."""
-    d = load(spark, sf, "documents")
+    d = spread_small_scan(load(spark, sf, "documents"))
     if _is_gate_sf(sf):
         _export_golden(dedup.simhash64(d).toPandas(), "simhash_sigs")
     return dedup.simhash_near_pairs(d, max_hamming=3)
@@ -582,7 +599,7 @@ def q_dedup_near_dup(spark, sf):
     tokenizer/intersection math -- the verify stage is deterministic
     given candidates, so this value-hash-checks even though LSH banding
     itself is probabilistic."""
-    d = load(spark, sf, "documents")
+    d = spread_small_scan(load(spark, sf, "documents"))
     # near_dup_pairs tokenizes the corpus ONCE (persisted token frame
     # shared by the signature path and both verify legs -- r8: the
     # previous inline composition re-tokenized the text three times);
@@ -1031,7 +1048,9 @@ def q_chunk_dup_spans(spark, sf):
     (doc_id, chunk_idx); oracle re-derives chunking + grouping in SQL."""
     from .operators import dedup
 
-    return dedup.chunk_dup_spans(load(spark, sf, "documents"), width=16)
+    return dedup.chunk_dup_spans(
+        spread_small_scan(load(spark, sf, "documents")), width=16
+    )
 
 
 def q_decontaminate_ngrams(spark, sf):
@@ -1223,7 +1242,7 @@ def q_dedup_prefix_jaccard(spark, sf):
     from .operators import dedup
 
     return dedup.prefix_filter_jaccard_pairs(
-        load(spark, sf, "documents"), threshold=0.8
+        spread_small_scan(load(spark, sf, "documents")), threshold=0.8
     )
 
 

@@ -41,14 +41,6 @@ MERSENNE = 2147483647  # 2^31 - 1: keeps a*h+b within int64 under ANSI mode
 # on the next call from any live session.
 _LAST_TOKEN_FRAME: dict = {}
 
-# serializes ensure_parallelism's probe memo and (cold-path-only, r7)
-# session-global AQE toggle
-import re
-import threading as _threading
-from collections import OrderedDict
-
-_AQE_PROBE_LOCK = _threading.Lock()
-
 
 def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Hash-groupBy exact dedup: one row per distinct text digest.
@@ -187,177 +179,13 @@ def ngram_jaccard_pairs(
     )
 
 
-# probe memo: (applicationId, shuffle-partition conf, semanticHash) ->
-# partition count. Keyed by applicationId so a stopped-and-recreated
-# session never reads a stale entry, and by the conf so a mid-session
-# change invalidates; bounded LRU so a long-lived driver enumerating thousands
-# of distinct plans cannot grow it without limit.
-_PROBE_CACHE: "OrderedDict[tuple[str, str, int], int]" = OrderedDict()
-_PROBE_CACHE_MAX = 256
-
-# formatted-plan tree line for a SHUFFLE exchange: "+- Exchange (7)" /
-# ":- Exchange (12)". Word-boundary anchoring excludes
-# BroadcastExchange / ReusedExchange (different node names, and a
-# broadcast does NOT raise the probe side's partition count).
-_SHUFFLE_NODE_RE = re.compile(r"(?m)^[\s:+\-*]*Exchange\s*\(\d+\)\s*$")
-
-
-def _physical_plan(df: DataFrame) -> str:
-    sess = df.sparkSession
-    return df._jdf.queryExecution().explainString(
-        sess._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-
-
-def ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin repartition IFF the frame has fewer partitions than
-    the cluster has slots (r6): a small parquet scan (one file under
-    maxPartitionBytes) arrives as ONE partition, which serializes every
-    pre-shuffle stage -- the minhash HOF folds and the simhash pandas
-    UDF were measured running on a single core over a 50k-doc corpus
-    while 31 slots idled. At real scale the scan already has hundreds
-    of partitions and this is a no-op. Row-level operators only:
-    repartitioning is value-neutral for anything keyed per document.
-    Streaming frames pass through untouched (.rdd is batch-only;
-    micro-batch parallelism is the source's concern).
-
-    Probe strategy (r7, replacing r6's per-call AQE-toggled ``df.rdd``
-    that cost ~80ms per operator invocation and opened a session-global
-    AQE-off window):
-
-    1. memo hit on (applicationId, shuffle-partition conf,
-       semanticHash) -- free; bench reps and repeated pipeline stages
-       re-plan the same frame, so steady state is this path.
-    2. plan inspection -- a shuffle Exchange node (excluding
-       SinglePartition collapses, which mean ONE partition, not many)
-       puts the frame at the STATIC ``spark.sql.shuffle.partitions``
-       count downstream: no RDD conversion at all. Explain under AQE
-       prints the INITIAL plan without running any stage, and the
-       planning work is per-DataFrame-cached so the caller's real
-       action reuses it.
-    3. no exchange of any kind, no subquery -- the plan has no query
-       stages, so AQE never wraps it (InsertAdaptiveSparkPlan applies
-       only to plans with exchanges or subqueries) and ``df.rdd`` is
-       the classic LAZY conversion: partition counts come from file
-       splits with zero jobs run. No conf toggle needed.
-    4. any remaining stage-bearing shape (broadcast or subquery with
-       no shuffle; a SinglePartition global agg/sort; an explicit
-       repartition(n)/coalesce(n)) -- the shapes where ``df.rdd``
-       under AQE would materialize upstream stages, so only here the
-       r6 AQE-toggled probe runs,
-       once per distinct plan per session (then memoized). The
-       ms-scale session-global off-window therefore survives only for
-       first-sight frames of these shapes; callers embedding this
-       library in a MULTI-THREADED driver should note that another
-       thread planning a query inside that window plans without AQE
-       (single-threaded drivers -- every pipeline in this repo -- are
-       unaffected).
-
-    Observability limit (r7 third review, applies equally to the r6
-    probe): NO pre-execution signal -- plan text, lazy RDD conversion,
-    or AQE-off probe -- can see AQE's RUNTIME partition coalescing,
-    which happens after stage materialization. With the default
-    ``parallelismFirst=true`` AQE coalesces post-shuffle partitions
-    only down to the session's parallelism floor, except for frames
-    whose partitions are below ``minPartitionSize`` (1 MB) -- i.e. the
-    tiny-frame regime. A caller feeding a UDF-expensive stage from a
-    tiny POST-SHUFFLE frame should repartition explicitly; every
-    caller inside this repo feeds scan-shaped frames, which take paths
-    1/3 where the guard is exact.
-    """
-    if df.isStreaming:
-        return df
-    sess = df.sparkSession
-    target = sess.sparkContext.defaultParallelism
-    # key includes the shuffle-partition conf (r7 second review: a
-    # driver lowering it mid-session must not read a memoized count
-    # probed under the old value). Residual memo caveats, both
-    # PERFORMANCE-only -- a wrong entry can only mis-decide the
-    # value-neutral repartition, never change results: semanticHash is
-    # 32-bit (collisions ~1e-5 at the 256-entry cap), and a re-read
-    # path whose file count changes mid-session keeps its first count
-    # until evicted.
-    shuffle_conf = sess.conf.get("spark.sql.shuffle.partitions", str(target))
-    key = (sess.sparkContext.applicationId, shuffle_conf, df.semanticHash())
-    with _AQE_PROBE_LOCK:
-        if key in _PROBE_CACHE:
-            _PROBE_CACHE.move_to_end(key)
-            n_parts = _PROBE_CACHE[key]
-            return df.repartition(target) if n_parts < target else df
-    plan = _physical_plan(df)
-    has_shuffle = _SHUFFLE_NODE_RE.search(plan) is not None
-    # shapes whose runtime partition count is NOT the static
-    # shuffle-partition conf: an explicit user repartition(n) (shuffle
-    # origin REPARTITION_BY_NUM carries its own n), a Coalesce node
-    # (narrow, reduces below whatever its child had), or a
-    # SinglePartition collapse (global agg/sort). These take the real
-    # probe instead of the conf fast path (r7 second review:
-    # repartition(2) on a 32-slot session was declared parallel).
-    explicit_n = (
-        "REPARTITION_BY_NUM" in plan
-        or "SinglePartition" in plan
-        or re.search(r"(?m)^[\s:+\-*]*Coalesce\s*\(\d+\)\s*$", plan)
-    )
-    # Platforms that set a NON-NUMERIC shuffle-partition conf (e.g.
-    # 'auto' under vendor AQE auto-tuning) cannot take the static conf
-    # fast path; they fall through to the real probe instead of
-    # raising ValueError on every shuffled frame (r8, ADVICE).
-    n_parts = None
-    if has_shuffle and not explicit_n:
-        # post-exchange parallelism is the STATIC shuffle-partition
-        # number, not defaultParallelism -- a session configured with
-        # shuffle_partitions below the slot count would otherwise be
-        # declared parallel-enough exactly when its UDF stages run
-        # narrow (r7 review). The SinglePartition screen matters too:
-        # a global agg/sort plans an "Exchange" whose arguments
-        # collapse to ONE partition -- declaring that parallel would
-        # skip the repartition exactly when it is needed.
-        try:
-            n_parts = int(shuffle_conf)
-        except ValueError:
-            n_parts = None
-    if n_parts is not None:
-        pass
-    elif (
-        not has_shuffle
-        and "BroadcastExchange" not in plan
-        and "Subquery" not in plan
-    ):
-        # genuinely stage-free plan (no exchange of any kind, no
-        # subquery): AQE never wraps it, so .rdd is lazy -- partition
-        # counts come from file splits with zero jobs run
-        n_parts = df.rdd.getNumPartitions()
-    else:
-        # every remaining shape contains at least one query stage
-        # (broadcast, subquery, or a SinglePartition shuffle), where
-        # .rdd under AQE would MATERIALIZE upstream stages as real
-        # jobs -- so only here the r6 AQE-toggled probe runs, once per
-        # distinct plan per session (then memoized). See the
-        # docstring's point 4 for the residual off-window hazard.
-        with _AQE_PROBE_LOCK:
-            prev = sess.conf.get("spark.sql.adaptive.enabled", "true")
-            sess.conf.set("spark.sql.adaptive.enabled", "false")
-            try:
-                n_parts = df.rdd.getNumPartitions()
-            finally:
-                sess.conf.set("spark.sql.adaptive.enabled", prev)
-    with _AQE_PROBE_LOCK:
-        _PROBE_CACHE[key] = n_parts
-        _PROBE_CACHE.move_to_end(key)
-        while len(_PROBE_CACHE) > _PROBE_CACHE_MAX:
-            _PROBE_CACHE.popitem(last=False)
-    if n_parts < target:
-        return df.repartition(target)
-    return df
-
-
 def tokenized(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(id, toks): whitespace token arrays -- the shared upstream of
     every token-derived dedup stage (shingles for MinHash, distinct
     sets for the exact-Jaccard verify). Compositions that need both
     (near_dup_pairs) compute this ONCE and persist it, so the corpus
     text is scanned and split a single time."""
-    return ensure_parallelism(df).select(
+    return df.select(
         F.col(id_col).alias("id"), TX.tokens(F.col(text_col)).alias("toks")
     )
 
@@ -904,9 +732,7 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
                 {"doc_id": ids, "simhash": sigs.view(np.int64)}
             )
 
-    return ensure_parallelism(df.select(F.col(id_col), F.col(text_col))).mapInPandas(
-        batch, SIMHASH_SCHEMA
-    )
+    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(batch, SIMHASH_SCHEMA)
 
 
 def simhash_near_pairs(df: DataFrame, max_hamming: int = 3, **kw) -> DataFrame:

@@ -1,16 +1,19 @@
-"""Distributed triple extraction: stable ordering + grouped pandas UDF.
+"""Distributed triple extraction: stable ordering + Arrow pandas UDF.
 
 The Spark analogue of the reference's entity->rows flattening
-(reference: claims.py:37-45 explode/unnest pipeline): one conversation
-group in, many (subj_mention, pred, obj_mention) rows out, executed as
-an Arrow-batched ``applyInPandas`` per conv_id group -- the vectorized
-path the reference chose over per-row lambdas (reference:
-claims.py:11-13, compare_perf.py:73-87 rejected map_elements).
+(reference: claims.py:37-45 explode/unnest pipeline): conversation
+turns in, many (subj_mention, pred, obj_mention) rows out. Two paths,
+result-identical: the pure-Catalyst ``extract_mentions_sql`` (default)
+and an Arrow-batched ``mapInPandas`` over conv_id-partitioned, sorted
+turns -- the vectorized path the reference chose over per-row lambdas
+(reference: claims.py:11-13, compare_perf.py:73-87 rejected
+map_elements).
 
-Scale notes (100 TB): the only shuffle is the groupBy(conv_id) -- and
-conversations are small and numerous, so AQE coalescing keeps partition
-sizes even; a single conversation can never exceed one Arrow batch
-group. No driver-side collection anywhere.
+Scale notes (100 TB): the Arrow path's only shuffle is the
+repartition by conv_id -- conversations are small and numerous, so
+partitions stay even, and a conversation split at an Arrow batch
+boundary is carried into the next batch. No driver-side collection
+anywhere.
 """
 
 from __future__ import annotations
@@ -42,7 +45,7 @@ def ordered_turns(transcripts: DataFrame) -> DataFrame:
 
 
 def _extract_group(pdf):
-    """Grouped-map body: runs the SHARED rule module on one conv batch."""
+    """Runs the SHARED rule module on whole conversations."""
     out = rules.extract_conversation_triples(pdf)
     # Arrow needs exact dtypes for empty frames too.
     return out.astype(
@@ -180,11 +183,7 @@ def extract_mentions(transcripts: DataFrame, method: str = "sql") -> DataFrame:
     Catalyst (per-group Python overhead amortized ~batch_size/avg_conv_len
     times vs per-group calls).
 
-    ``method="grouped"``: groupBy(conv_id).applyInPandas -- one call per
-    conversation. Same results; kept as the semantic reference and for
-    pathological conversations larger than an executor's Arrow budget.
-
-    All three paths are result-identical (tested in
+    Both paths are result-identical (tested in
     tests/test_extract_spark.py).
 
     Output carries ``ts`` -- the asserting turn's timestamp, threaded
@@ -195,11 +194,11 @@ def extract_mentions(transcripts: DataFrame, method: str = "sql") -> DataFrame:
         transcripts = transcripts.withColumn("ts", F.lit(None).cast("timestamp"))
     if method == "sql":
         return extract_mentions_sql(transcripts)
+    if method != "partitions":
+        raise ValueError(f"extract_mentions: unknown method {method!r}")
     turns = transcripts.select("conv_id", "turn_idx", "text", "ts").filter(
         F.lower(F.col("text")).rlike(rules.TRIGGER_REGEX)
     )
-    if method == "grouped":
-        return turns.groupBy("conv_id").applyInPandas(_extract_group, MENTION_SCHEMA)
     # explicit partition count (cores): AQE would otherwise coalesce the
     # shuffle by byte size, capping Python-worker parallelism -- Arrow
     # serde + regex cost is per-ROW here, not per-byte.

@@ -295,12 +295,11 @@ def pagerank(
 ) -> DataFrame:
     """Iterative PageRank over the entity graph: (node_id, rank).
 
-    Power iteration as repeated DataFrame joins -- contribution =
-    rank / out_degree shipped along each edge, summed per target, then
-    the damping update against a RESTART VECTOR ``_r``:
+    The one-seed-set case of :func:`multi_seed_ppr`'s power iteration,
+    with a RESTART VECTOR over the seed set:
 
-    - ``seeds is None`` (global PageRank): uniform restart, 1/n per
-      node.
+    - ``seeds is None`` (global PageRank): every node is a seed, so the
+      restart is uniform, 1/n per node.
     - ``seeds`` given (personalized PageRank): uniform over the seeds
       PRESENT IN THE GRAPH (absent seeds are excluded from the
       normalizer -- otherwise their share of restart mass would leak
@@ -309,91 +308,22 @@ def pagerank(
       result).
 
     Dangling nodes (no out-edges) return their mass through the same
-    restart vector: that mass is ONE scalar aggregate per iteration (a
-    driver scalar by necessity and by textbook formulation, not a
-    collect of data). Lineage is truncated per iteration with a lazy
-    localCheckpoint, the same discipline as connected_components and
-    k_hop -- without it the plan tree doubles per round.
-
-    Scale shape per iteration: one equi-join on the edge src (ranks are
-    hash-partitioned by node either side), one groupBy(dst) sum. The
-    rank frame is O(nodes) and carries ``_r`` alongside, so the update
-    needs NO extra join for the restart term; edges dominate and are
-    never materialized to the driver. Convergence-by-tolerance is
-    deliberately NOT implemented (a per-iteration global delta would
-    add an aggregate per round); fixed ``iters`` matches how
-    production jobs bound cost.
+    restart vector. Runs exactly ``iters`` rounds: a convergence check
+    would add a global aggregate per round.
     """
-    # e is consumed by EVERY iteration (the contrib join) plus the node
-    # derivation -- checkpoint it once after the distinct, or each
-    # iteration's two actions (dangling scalar, ranks materialization)
-    # re-execute the upstream edge plan + distinct shuffle ~2x per round
-    e = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        e.select(F.col("_s").alias("node_id"))
-        .union(e.select(F.col("_d").alias("node_id")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("pagerank: empty edge frame (no nodes)")
+    e, nodes = _edges_and_nodes(edges, src, dst, "pagerank")
     if seeds is None:
-        noder = nodes.withColumn("_r", F.lit(1.0 / n))
+        present = nodes
     else:
-        s = seeds.select("node_id").distinct().join(nodes, "node_id", "semi")
-        n_seeds = s.count()
-        if n_seeds == 0:
+        present = seeds.select("node_id").distinct().join(nodes, "node_id", "semi")
+        if present.count() == 0:
             raise ValueError(
                 "pagerank: empty seed set (no seed node appears in the graph)"
             )
-        noder = nodes.join(
-            s.withColumn("_r", F.lit(1.0 / n_seeds)), "node_id", "left"
-        ).select("node_id", F.coalesce("_r", F.lit(0.0)).alias("_r"))
-    noder = noder.localCheckpoint(eager=False)
-    # also a once-per-run frame consumed every iteration: checkpoint so
-    # the degree aggregate runs once, not once per round
-    out_deg = (
-        e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg")).localCheckpoint(eager=False)
+    ranks = _power_iteration(
+        e, nodes, present.select(F.lit(0).alias("_set"), "node_id"), damping, iters
     )
-    ranks = noder.select("node_id", F.col("_r").alias("rank"))
-    for _ in range(iters):
-        # lazy checkpoint: with_deg is consumed TWICE per round (the
-        # dangling-mass scalar action, then contribs) -- without it the
-        # ranks-out_deg join re-executes for the second consumer
-        with_deg = ranks.join(
-            out_deg, ranks.node_id == out_deg._s, "left"
-        ).localCheckpoint(eager=False)
-        dangling = (
-            with_deg.filter(F.col("_deg").isNull())
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-            .first()[0]
-        )
-        contribs = (
-            with_deg.filter(F.col("_deg").isNotNull())
-            .select(F.col("node_id").alias("_s"), (F.col("rank") / F.col("_deg")).alias("_c"))
-            .join(e, "_s")
-            .groupBy(F.col("_d").alias("node_id"))
-            .agg(F.sum("_c").alias("_in"))
-        )
-        # restart + dangling mass both land on the restart vector
-        ranks = (
-            noder.join(contribs, "node_id", "left")
-            .select(
-                "node_id",
-                (
-                    F.lit(1.0 - damping) * F.col("_r")
-                    + F.lit(damping * dangling) * F.col("_r")
-                    + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks.select("node_id", F.round("rank", 8).alias("rank"))
+    return ranks.select("node_id", "rank")
 
 
 def personalized_pagerank(
@@ -407,8 +337,7 @@ def personalized_pagerank(
     """Personalized PageRank: random walks restart at ``seeds(node_id)``
     instead of uniformly -- the standard KG relevance score for "which
     entities matter relative to THIS query set". Thin wrapper over
-    :func:`pagerank` with a seed restart vector (one power-iteration
-    implementation to maintain, not two)."""
+    :func:`pagerank` with a seed restart vector."""
     return pagerank(
         edges, damping=damping, iters=iters, src=src, dst=dst, seeds=seeds
     )
@@ -429,30 +358,34 @@ def multi_seed_ppr(
     per set repeats the edge scan, the degree aggregate, and the
     per-iteration edge join S times (r6, VERDICT item 5).
 
-    ``seed_sets`` is (seed_set_id, node_id). The rank frame carries the
-    ``seed_set_id`` dimension -- O(S x nodes) rows -- so each power
-    iteration is still ONE edge equi-join on the source node (every
-    edge matches its S rank rows inside the join; the edge table itself
-    is scanned once per iteration, not once per set) plus one
-    (set, node) aggregate. Per-set restart vectors follow the
-    single-set contract exactly: uniform over the seeds PRESENT in the
-    graph, zero elsewhere, and a set with no graph overlap raises
-    (an all-zero "ranking" is a bug, not a result).
-
-    The per-set dangling mass is a groupBy(seed_set_id) aggregate --
-    S rows of metadata, broadcast back into the rank update -- instead
-    of the single-set driver scalar, so no per-iteration collect grows
-    with S. Update arithmetic multiplies (damping x dangling) before
-    the restart weight, the same association order as the single-set
-    formula, so per-set results match ``personalized_pagerank`` to
-    float-summation noise (equivalence-tested at 8 dp).
-
-    Scale shape per iteration: rank frame hash-partitioned by node for
-    the edge join (set id rides along), then one shuffle to
-    (set, node). Dangling frame is O(S); the seed-size frame is O(S);
-    both broadcast. Lineage truncated per iteration, the
-    connected-components discipline.
+    ``seed_sets`` is (seed_set_id, node_id). Per-set restart vectors
+    follow the single-set contract exactly: uniform over the seeds
+    PRESENT in the graph, zero elsewhere, and a set with no graph
+    overlap raises (an all-zero "ranking" is a bug, not a result).
     """
+    e, nodes = _edges_and_nodes(edges, src, dst, "multi_seed_ppr")
+    ss = seed_sets.select(F.col(set_col).alias("_set"), "node_id").distinct()
+    present = ss.join(nodes, "node_id", "semi").localCheckpoint(eager=False)
+    # bounded collects: S rows of set metadata, not data
+    in_sets = {r[0] for r in ss.select("_set").distinct().collect()}
+    if not in_sets:
+        raise ValueError("multi_seed_ppr: empty seed_sets frame")
+    ok_sets = {r[0] for r in present.select("_set").distinct().collect()}
+    missing = sorted(in_sets - ok_sets)
+    if missing:
+        raise ValueError(
+            "multi_seed_ppr: seed set(s) with no node in the graph: "
+            f"{missing[:5]}"
+        )
+    ranks = _power_iteration(e, nodes, present, damping, iters)
+    return ranks.select(F.col("_set").alias(set_col), "node_id", "rank")
+
+
+def _edges_and_nodes(edges: DataFrame, src: str, dst: str, who: str):
+    """(distinct edges (_s, _d), node set (node_id)), both lazily
+    checkpointed: every iteration joins the edges, so without it each
+    round re-executes the upstream edge plan and its distinct shuffle.
+    Raises on an edge frame with no nodes."""
     e = (
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
         .distinct()
@@ -464,23 +397,31 @@ def multi_seed_ppr(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("multi_seed_ppr: empty edge frame (no nodes)")
-    ss = seed_sets.select(F.col(set_col).alias("_set"), "node_id").distinct()
-    present = ss.join(nodes, "node_id", "semi").localCheckpoint(eager=False)
+    if nodes.count() == 0:
+        raise ValueError(f"{who}: empty edge frame (no nodes)")
+    return e, nodes
+
+
+def _power_iteration(
+    e: DataFrame, nodes: DataFrame, present: DataFrame, damping: float, iters: int
+) -> DataFrame:
+    """The power iteration behind every PageRank variant:
+    (_set, node_id, rank rounded to 8 dp).
+
+    ``present`` is (_set, node_id): each set's seeds, all in the graph.
+    The rank frame carries the ``_set`` dimension -- O(S x nodes) rows
+    -- so each round is ONE edge equi-join on the source node (the edge
+    table is scanned once per round, not once per set) plus one
+    (set, node) aggregate. Contribution = rank / out_degree shipped
+    along each edge, summed per target, then the damping update
+    against the set's restart vector ``_r``. Each set's dangling mass
+    is a groupBy(_set) aggregate -- S rows, broadcast back into the
+    update -- so no round collects to the driver. Lineage is
+    truncated per round with a lazy localCheckpoint (the
+    connected-components discipline); without it the plan tree doubles
+    per round.
+    """
     sizes = present.groupBy("_set").agg(F.count(F.lit(1)).alias("_ns"))
-    # bounded collects: S rows of set metadata, not data
-    in_sets = {r[0] for r in ss.select("_set").distinct().collect()}
-    if not in_sets:
-        raise ValueError("multi_seed_ppr: empty seed_sets frame")
-    ok_sets = {r[0] for r in sizes.select("_set").collect()}
-    missing = sorted(in_sets - ok_sets)
-    if missing:
-        raise ValueError(
-            "multi_seed_ppr: seed set(s) with no node in the graph: "
-            f"{missing[:5]}"
-        )
     # restart matrix: (set, node) with 1/|seeds_in_graph(set)| on seeds,
     # 0 elsewhere. nodes x sets is the rank frame's own cardinality, so
     # building it via a broadcast cross join adds no new scale class.
@@ -498,11 +439,13 @@ def multi_seed_ppr(
         )
         .localCheckpoint(eager=False)
     )
+    # consumed every round: checkpoint so the degree aggregate runs once
     out_deg = (
         e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg")).localCheckpoint(eager=False)
     )
     ranks = noder.select("_set", "node_id", F.col("_r").alias("rank"))
     for _ in range(iters):
+        # consumed twice per round (dangling mass, then contribs)
         with_deg = ranks.join(
             out_deg, ranks.node_id == out_deg._s, "left"
         ).localCheckpoint(eager=False)
@@ -522,6 +465,7 @@ def multi_seed_ppr(
             .groupBy("_set", F.col("_d").alias("node_id"))
             .agg(F.sum("_c").alias("_in"))
         )
+        # restart + dangling mass both land on the restart vector
         ranks = (
             noder.join(contribs, ["_set", "node_id"], "left")
             .join(F.broadcast(dangling), "_set", "left")
@@ -537,9 +481,7 @@ def multi_seed_ppr(
             )
             .localCheckpoint(eager=False)
         )
-    return ranks.select(
-        F.col("_set").alias(set_col), "node_id", F.round("rank", 8).alias("rank")
-    )
+    return ranks.select("_set", "node_id", F.round("rank", 8).alias("rank"))
 
 
 def current_beliefs(

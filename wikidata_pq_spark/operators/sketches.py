@@ -101,7 +101,7 @@ def heavy_hitters(
             "completeness (holds iff the returned max_undercount < "
             "min_share * n_total)."
         )
-    # No ensure_parallelism repartition here (r8, guide "remove
+    # No round-robin repartition here (r8, guide "remove
     # shuffles outright"): the sketch pass is TRANSFER-bound, not
     # compute-bound -- per-batch work is one value_counts, so extra
     # Python-stage parallelism bought by a full-corpus round-robin
@@ -109,7 +109,8 @@ def heavy_hitters(
     # sf1.0: the exchange alone doubled the pass, 1.15s -> 2.25s, to
     # parallelize ~milliseconds of per-batch compute). At real scale
     # the input has abundant splits and a repartition would no-op
-    # anyway; the CPU-heavy UDF paths (simhash etc.) keep theirs. The
+    # anyway; the CPU-heavy UDF paths (simhash etc.) get theirs from
+    # contracts.spread_small_scan at the read. The
     # MG guarantees are partition-independent, and at any capacity >=
     # vocabulary the output is bit-identical under any partitioning.
     keyed = df.where(F.col(key_col).isNotNull()).select(

@@ -6,7 +6,7 @@ the reference's PULL->PROCESS->PARTITION->PUSH->POST_CHECK->COMPLETE
 state machine, reference: state.py:11-18, main.py:61-136):
 
   INIT          -> read transcripts (Iceberg/parquet)
-  EXTRACTED     -> stable order + applyInPandas mention extraction
+  EXTRACTED     -> Catalyst regex mention extraction
   LINKED        -> broadcast/salted alias join
   CANONICALIZED -> connected components + canonical rewrite
   MATERIALIZED  -> nodes/edges bucketed by subject hash + lineage

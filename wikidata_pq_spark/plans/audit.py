@@ -287,7 +287,7 @@ def _dedup_prefix_raw(spark, sf):
     from .. import contracts
     from ..operators import dedup
 
-    docs = contracts.load(spark, sf, "documents")
+    docs = contracts.spread_small_scan(contracts.load(spark, sf, "documents"))
     return dedup.prefix_filter_jaccard_pairs(
         docs, threshold=0.8, truncate_lineage=False
     )

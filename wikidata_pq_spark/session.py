@@ -14,6 +14,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical RAM, capped at 24g: the driver JVM
+    shares the host with the Python workers, and a heap sized past
+    physical memory lets the JVM grow until the host OOM-kills it."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(24, ram // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "wikidata_pq_spark",
     master: str | None = None,
@@ -25,6 +33,8 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
     ``shuffle_partitions`` defaults to the local core count -- on a real
     cluster this should be ~2-3x total cores, or left to AQE coalescing.
+    ``spark.driver.memory`` is ``$SPARK_DRIVER_MEM``, else half the
+    host's RAM capped at 24g.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -65,7 +75,10 @@ def get_spark(
         # Nested-field pruning so struct projections reach the scan.
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     if extra_conf:
         for k, v in extra_conf.items():
