@@ -28,16 +28,18 @@ from wikidata_pq_spark.operators import canonicalize, extract, linking  # noqa: 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: the full transcript->triples KG pipeline.
 
-    Runs extraction (Catalyst regex), broadcast entity linking, and
-    connected-component canonicalization on the deterministic synthetic
-    corpus scaled for sf0.001; driver checks rows>0 and stable schema.
+    Runs extraction (Catalyst regex) and broadcast entity linking
+    through the alias dictionary composed with the same-as connected
+    components (mentions resolve straight to canonical ids) on the
+    deterministic synthetic corpus scaled for sf0.001; driver checks
+    rows>0 and stable schema.
     """
     tdf, adf, sdf = contracts._kg_inputs(spark, "/root/testdata/sf0.001")
     mentions = extract.extract_mentions(tdf)
-    linked = linking.link_mentions(mentions, adf, strategy="broadcast")
     comps = canonicalize.connected_components(sdf)
+    canon_dict = canonicalize.apply_canonical(adf, comps)
     return (
-        canonicalize.apply_canonical(linked, comps)
+        linking.link_mentions(mentions, canon_dict, strategy="broadcast")
         .select("subj", "pred", "obj", "conv_id", "turn_idx")
         .distinct()
     )

@@ -1,4 +1,4 @@
-"""Connected components + canonical rewrite."""
+"""Connected components + canonical alias dictionary."""
 
 from __future__ import annotations
 
@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 
 from wikidata_pq_spark import datagen, oracle
-from wikidata_pq_spark.operators import canonicalize
+from wikidata_pq_spark.operators import canonicalize, extract, linking
 
 
 DT = [0, 200_000]  # 0 = force distributed label propagation; big = driver union-find
@@ -57,59 +57,48 @@ def test_matches_union_find_on_generated_edges(spark, dt):
 
 
 def test_apply_canonical(spark):
-    triples = spark.createDataFrame(
+    """The composed dictionary: a mapped entity becomes its canonical id,
+    an unmapped one keeps its own id, duplicate alias rows keep their
+    count, and columns other than (alias, entity_id) are dropped."""
+    adf = spark.createDataFrame(
         pd.DataFrame(
             {
-                "subj": ["Q5", "Q9"],
-                "pred": ["P1", "P2"],
-                "obj": ["Q6", "1999"],
-                "obj_kind": ["entity", "literal"],
-                "conv_id": ["c", "c"],
-                "turn_idx": [0, 1],
+                "alias": ["acme", "acme", "acme corp", "beta"],
+                "entity_id": ["Q5", "Q5", "Q6", "Q9"],
+                "label": ["Acme", "Acme", "Acme", "Beta"],
             }
         )
     )
     comps = spark.createDataFrame(
         pd.DataFrame(
-            {"entity_id": ["Q5", "Q6", "Q9"], "canonical_id": ["Q1", "Q1", "Q2"]}
+            {"entity_id": ["Q5", "Q6", "Q7"], "canonical_id": ["Q1", "Q1", "Q7"]}
         )
     )
-    out = canonicalize.apply_canonical(triples, comps).toPandas().sort_values("turn_idx")
-    assert list(out["subj"]) == ["Q1", "Q2"]
-    # literal obj untouched, entity obj rewritten
-    assert list(out["obj"]) == ["Q1", "1999"]
+    out = canonicalize.apply_canonical(adf, comps).toPandas()
+    assert list(out.columns) == ["alias", "entity_id"]
+    assert sorted(map(tuple, out.values)) == [
+        ("acme", "Q1"), ("acme", "Q1"), ("acme corp", "Q1"), ("beta", "Q9"),
+    ]
 
 
-def test_apply_canonical_broadcast_gating(spark):
-    """Small component map -> broadcast hint; over-threshold map -> the
-    hint is withheld so the join shuffles on its key (AQE may still
-    pick broadcast at these toy sizes, so assert on the OPTIMIZED
-    LOGICAL plan where only the explicit hint appears)."""
-    triples = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "subj": ["Q5"], "pred": ["P1"], "obj": ["Q6"],
-                "obj_kind": ["entity"], "conv_id": ["c"], "turn_idx": [0],
-            }
+@pytest.mark.classic_session_only
+def test_composed_link_plan_runs_no_job(spark, spark_corpus):
+    """Building link_mentions(m, apply_canonical(adf, comps)) launches no
+    Spark job: the dictionary composition is a lazy join, not a probe."""
+    mentions = extract.extract_mentions(spark_corpus["transcripts"])
+    comps = canonicalize.connected_components(spark_corpus["same_as"])
+    sc = spark.sparkContext
+    sc.setJobGroup("composed_link_plan", "composed_link_plan")
+    try:
+        linking.link_mentions(
+            mentions, canonicalize.apply_canonical(spark_corpus["alias_dict"], comps)
         )
-    )
-    comps = spark.createDataFrame(
-        pd.DataFrame({"entity_id": [f"Q{i}" for i in range(100)],
-                      "canonical_id": ["Q1"] * 100})
-    )
-
-    def logical_plan(df):
-        return df._jdf.queryExecution().optimizedPlan().toString()
-
-    hinted = canonicalize.apply_canonical(triples, comps)
-    assert "broadcast" in logical_plan(hinted).lower()
-    gated = canonicalize.apply_canonical(triples, comps, broadcast_threshold=10)
-    assert "broadcast" not in logical_plan(gated).lower()
-    # both plans produce identical rows
-    assert (
-        hinted.toPandas().sort_index(axis=1).values.tolist()
-        == gated.toPandas().sort_index(axis=1).values.tolist()
-    )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the asynchronous listener bus: drain
+    # it so a job that already ran is counted
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("composed_link_plan")) == 0
 
 
 @pytest.mark.parametrize("n", [2, 3])

@@ -112,24 +112,16 @@ def test_chunks_partition_conversations(spark, spark_corpus):
     assert multi.count() == 0
 
 
-def test_staged_equals_filtered(spark, spark_corpus, tmp_path):
-    """stage_input (partition-pruned reads) and live filtering produce
-    identical triples; staging is itself resumable (skipped on re-run)."""
+def test_staged_chunks_layout_and_rerun_skip(spark, spark_corpus, tmp_path):
+    """The corpus is staged once as one partition per chunk, and staging
+    is itself resumable (skipped on re-run)."""
+    import os
+    import time
+
     a = ChunkedKGPipeline(spark, str(tmp_path / "staged"), n_chunks=4)
     a.run(
         spark_corpus["transcripts"], spark_corpus["alias_dict"], spark_corpus["same_as"]
     )
-    b = ChunkedKGPipeline(spark, str(tmp_path / "filtered"), n_chunks=4)
-    b.run(
-        spark_corpus["transcripts"],
-        spark_corpus["alias_dict"],
-        spark_corpus["same_as"],
-        stage_input=False,
-    )
-    assert _tset(a.triples()) == _tset(b.triples())
-    import os
-    import time
-
     # staged dir exists with one partition per chunk
     parts = sorted(os.listdir(str(tmp_path / "staged" / "staged")))
     assert [p for p in parts if p.startswith("_chunk=")] == [
@@ -145,27 +137,23 @@ def test_staged_equals_filtered(spark, spark_corpus, tmp_path):
     assert os.path.getmtime(str(tmp_path / "staged" / "staged")) == stamp
 
 
-def test_empty_chunks_survive_both_paths(spark, tmp_path):
+def test_empty_chunks_survive(spark, tmp_path):
     """A tiny/skewed corpus leaves some chunks with zero conversations:
-    partitionBy writes no directory for them (staged path) and the
-    triples write is empty (both paths). The run must complete, record
-    rows=0 lineage for the empty chunks, and post_check must pass."""
+    partitionBy writes no staged directory for them and their triples
+    write is empty. The run must complete, record rows=0 lineage for the
+    empty chunks, and post_check must pass."""
     from wikidata_pq_spark import datagen
 
     tr = datagen.gen_transcripts(n_convs=3, mean_turns=6, n_entities=50)
     tdf = spark.createDataFrame(tr)
     adf = spark.createDataFrame(datagen.gen_entities(50))
     sdf = spark.createDataFrame(datagen.gen_same_as(50))
-    results = {}
-    for staged in (True, False):
-        out = str(tmp_path / f"kg_{staged}")
-        pipe = ChunkedKGPipeline(spark, out, n_chunks=16)
-        lineage = pipe.run(tdf, adf, sdf, stage_input=staged)
-        assert len(lineage) == 16
-        assert sum(1 for v in lineage.values() if v == 0) > 0  # exercises empties
-        assert pipe.post_check()
-        results[staged] = _tset(pipe.triples())
-    assert results[True] == results[False] and len(results[True]) > 0
+    pipe = ChunkedKGPipeline(spark, str(tmp_path / "kg"), n_chunks=16)
+    lineage = pipe.run(tdf, adf, sdf)
+    assert len(lineage) == 16
+    assert sum(1 for v in lineage.values() if v == 0) > 0  # exercises empties
+    assert pipe.post_check()
+    assert len(_tset(pipe.triples())) > 0
 
 
 def test_resume_refuses_pre_ts_sink(spark, spark_corpus, tmp_path):

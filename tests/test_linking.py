@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from wikidata_pq_spark import oracle
 from wikidata_pq_spark.operators import extract, linking
 
@@ -29,6 +31,9 @@ def test_salted_equals_broadcast(spark_corpus):
         m, spark_corpus["alias_dict"], strategy="salted", n_salt=5
     ).toPandas()
     assert sorted(map(tuple, b[KEYS].values)) == sorted(map(tuple, s[KEYS].values))
+    # a misspelt strategy raises instead of falling through to a plain join
+    with pytest.raises(ValueError, match="braodcast"):
+        linking.link_mentions(m, spark_corpus["alias_dict"], strategy="braodcast")
 
 
 def test_unlinkable_mentions_dropped(spark, spark_corpus):

@@ -33,6 +33,9 @@ def test_end_to_end_pr(spark, spark_corpus, corpus, tmp_path):
     assert p >= 0.95 and r >= 0.95  # BASELINE target; in practice 1.0
     assert p == 1.0 and r == 1.0
     assert metrics["mentions"] > 0
+    # mentions link straight to canonical ids: no linked stage table
+    assert not os.path.exists(tmp_path / "kg" / "linked")
+    assert metrics["linked"] == pipe.triples().count()
     assert StateStore(str(tmp_path / "kg" / "_state")).get("corpus") == Step.COMPLETE
 
 

@@ -61,9 +61,9 @@ n_turns = tdf.count()  # warm the scan outside the timed section
 
 t0 = time.time()
 mentions = extract.extract_mentions(tdf, method=method)
-linked = linking.link_mentions(mentions, adf, strategy="broadcast")
 comps = canonicalize.connected_components(sdf)
-triples = canonicalize.apply_canonical(linked, comps).select(
+canon_dict = canonicalize.apply_canonical(adf, comps)
+triples = linking.link_mentions(mentions, canon_dict, strategy="broadcast").select(
     "subj", "pred", "obj", "conv_id", "turn_idx").distinct()
 n_triples = triples.count()
 dt = time.time() - t0

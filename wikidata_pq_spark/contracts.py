@@ -825,6 +825,17 @@ def q_kg_mentions(spark, sf):
     return extract.extract_mentions(spark.createDataFrame(tr), method="partitions")
 
 
+def _kg_linked(spark, mentions, ents, sa):
+    """Mentions linked straight to canonical ids through the alias
+    dictionary composed with the same-as components."""
+    comps = canonicalize.connected_components(spark.createDataFrame(sa))
+    return linking.link_mentions(
+        mentions,
+        canonicalize.apply_canonical(spark.createDataFrame(ents), comps),
+        strategy="broadcast",
+    )
+
+
 def _kg_triples_query(spark, sf, method: str, include_ts: bool = False):
     tr, ents, sa = _kg_frames(_sf_name(sf))
     if _is_gate_sf(sf) and "kg_triples_golden" not in _GOLDEN_EXPORTED:
@@ -834,12 +845,10 @@ def _kg_triples_query(spark, sf, method: str, include_ts: bool = False):
         _export_golden(kg_oracle.oracle_triples(tr, ents, sa), "kg_triples_golden")
         _GOLDEN_EXPORTED.add("kg_triples_golden")
     mentions = extract.extract_mentions(spark.createDataFrame(tr), method=method)
-    linked = linking.link_mentions(mentions, spark.createDataFrame(ents), strategy="broadcast")
-    comps = canonicalize.connected_components(spark.createDataFrame(sa))
     cols = ["subj", "pred", "obj", "conv_id", "turn_idx"]
     if include_ts:
         cols.append("ts")
-    return canonicalize.apply_canonical(linked, comps).select(*cols).distinct()
+    return _kg_linked(spark, mentions, ents, sa).select(*cols).distinct()
 
 
 def q_kg_triples(spark, sf):
@@ -1159,13 +1168,7 @@ def q_negative_samples(spark, sf):
         _export_golden(kg_oracle.oracle_triples(tr, ents, sa), "negsamp_triples_golden")
         _export_golden(ents[["entity_id"]].drop_duplicates(), "negsamp_vocab")
     mentions = extract.extract_mentions(spark.createDataFrame(tr))
-    linked = linking.link_mentions(mentions, spark.createDataFrame(ents), strategy="broadcast")
-    comps = canonicalize.connected_components(spark.createDataFrame(sa))
-    triples = (
-        canonicalize.apply_canonical(linked, comps)
-        .select("subj", "pred", "obj")
-        .distinct()
-    )
+    triples = _kg_linked(spark, mentions, ents, sa).select("subj", "pred", "obj").distinct()
     return graph.negative_samples(triples, spark.createDataFrame(ents))
 
 
@@ -1440,12 +1443,8 @@ def _kg_entity_edges(spark, sf):
     the graph the PageRank cells rank."""
     tr, ents, sa = _kg_frames(_sf_name(sf))
     mentions = extract.extract_mentions(spark.createDataFrame(tr))
-    linked = linking.link_mentions(
-        mentions, spark.createDataFrame(ents), strategy="broadcast"
-    )
-    comps = canonicalize.connected_components(spark.createDataFrame(sa))
     return (
-        canonicalize.apply_canonical(linked, comps)
+        _kg_linked(spark, mentions, ents, sa)
         .filter(F.col("obj_kind") == "entity")
         .select(F.col("subj"), F.col("obj"))
         .distinct()

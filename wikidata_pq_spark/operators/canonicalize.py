@@ -125,43 +125,14 @@ def connected_components(
     )
 
 
-def apply_canonical(
-    triples: DataFrame,
-    components: DataFrame,
-    broadcast_threshold: int = 5_000_000,
-) -> DataFrame:
-    """Rewrite subj (and entity-valued obj) to canonical component ids.
-
-    Left joins + coalesce-to-identity. The broadcast hint is
-    size-gated (one bounded ``limit(k+1).count()`` probe, the same auto
-    strategy as ``linking.link_mentions``): a dictionary-sized map gets
-    the hard ``F.broadcast`` hint (map-side join, zero shuffle of the
-    triple stream); a larger map is left unhinted so it shuffles on its
-    key and AQE picks the strategy -- an unconditional hint would OOM
-    executors on a 100 TB same-as graph (AQE never demotes a hard
-    broadcast hint). Pass ``broadcast_threshold=0`` to force the
-    shuffle-join plan.
-    """
-    small = bool(broadcast_threshold) and (
-        components.limit(broadcast_threshold + 1).count() <= broadcast_threshold
+def apply_canonical(alias_dict: DataFrame, components: DataFrame) -> DataFrame:
+    """(alias, entity_id) -> (alias, canonical entity_id): one left join +
+    coalesce-to-identity on the dictionary, so mentions link straight to
+    canonical ids. ``components`` has one row per ``entity_id``, so the
+    result keeps the alias dictionary's rows (and its broadcast fit)."""
+    comps = components.select("entity_id", F.col("canonical_id").alias("_canon"))
+    return (
+        alias_dict.select("alias", "entity_id")
+        .join(comps, "entity_id", "left")
+        .select("alias", F.coalesce("_canon", "entity_id").alias("entity_id"))
     )
-    hint = F.broadcast if small else (lambda df: df)
-    comp_s = components.select(
-        F.col("entity_id").alias("subj"), F.col("canonical_id").alias("_subj_canon")
-    )
-    comp_o = components.select(
-        F.col("entity_id").alias("obj"), F.col("canonical_id").alias("_obj_canon")
-    )
-    out = (
-        triples.join(hint(comp_s), "subj", "left")
-        .join(hint(comp_o), "obj", "left")
-        .withColumn("subj", F.coalesce("_subj_canon", "subj"))
-        .withColumn(
-            "obj",
-            F.when(
-                F.col("obj_kind") == "entity", F.coalesce("_obj_canon", "obj")
-            ).otherwise(F.col("obj")),
-        )
-        .drop("_subj_canon", "_obj_canon")
-    )
-    return out

@@ -269,7 +269,7 @@ def negative_samples(triples: DataFrame, entities: DataFrame) -> DataFrame:
     # size-gated broadcast (n is already a driver scalar): a hard hint
     # on a growing KG vocabulary would OOM executors at the scale the
     # rank_index rewrite exists for -- AQE never demotes a hard hint,
-    # so past the gate the join shuffles on vidx like apply_canonical
+    # so past the gate the join shuffles on vidx and AQE picks the strategy
     hint = F.broadcast if n <= 5_000_000 else (lambda df: df)
     key = F.concat_ws("|", "subj", "pred", "obj")
     draw = (

@@ -6,7 +6,7 @@ claims.py:48-89; anti-pattern preserved at compare_perf.py:25-47).
 Here the lookup side is the alias dictionary and the probe side the
 mention stream.
 
-Strategies:
+Strategies (any other value raises ``ValueError``):
 - ``broadcast`` (default): the dictionary is small relative to executor
   memory -> map-side hash join, zero shuffle of the mention stream.
 - ``salted``: for a dictionary too large to broadcast AND a Zipf-hot key
@@ -15,6 +15,8 @@ Strategies:
   give each probe row a deterministic salt, join on (key, salt) so one
   hot alias spreads over SALT_N reducers. AQE skew-join handles residual
   imbalance.
+- ``auto``: broadcast if the dictionary fits the budget, else salted.
+- ``shuffle``: unhinted join (the plain baseline).
 """
 
 from __future__ import annotations
@@ -61,8 +63,11 @@ def link_mentions(
     reference's inner-join-as-filter semantics, reference:
     claims.py:84-89); literal objects pass through untouched and are
     re-united with ``unionByName`` -- the diagonal-concat analogue
-    (reference: claims.py:206-213).
+    (reference: claims.py:206-213). Pass the dictionary composed by
+    ``canonicalize.apply_canonical`` to link straight to canonical ids.
     """
+    if strategy not in ("broadcast", "salted", "auto", "shuffle"):
+        raise ValueError(f"link_mentions: unknown strategy {strategy!r}")
     dict_df = alias_dict.select("alias", "entity_id")
     if strategy == "auto":
         # dictionary fits the broadcast budget -> map-side join; else the

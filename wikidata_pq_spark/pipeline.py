@@ -7,8 +7,8 @@ state machine, reference: state.py:11-18, main.py:61-136):
 
   INIT          -> read transcripts (Iceberg/parquet)
   EXTRACTED     -> Catalyst regex mention extraction
-  LINKED        -> broadcast/salted alias join
-  CANONICALIZED -> connected components + canonical rewrite
+  LINKED        -> connected components composed into the alias dict;
+                   broadcast/salted join links to canonical ids
   MATERIALIZED  -> nodes/edges bucketed by subject hash + lineage
   VERIFIED      -> post-check: re-read sinks vs audit sidecars
   COMPLETE
@@ -22,7 +22,7 @@ from __future__ import annotations
 import os
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators import canonicalize, extract, linking
@@ -30,6 +30,12 @@ from .plans.checkpoint import StateStore, Step
 from .sources import tableio
 
 UNIT = "corpus"  # single-unit pipeline; per-chunk units at scale
+
+
+def _row_count(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` plus an Observation its write fills with ``rows`` (no re-read)."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 class KGPipeline:
@@ -62,29 +68,23 @@ class KGPipeline:
         metrics: dict = {}
 
         if st.gate(unit, Step.EXTRACTED):
-            mentions = extract.extract_mentions(transcripts)
+            mentions, rows = _row_count(extract.extract_mentions(transcripts))
             mentions.write.mode("overwrite").parquet(self.path("mentions"))
-            n = self.spark.read.parquet(self.path("mentions")).count()
-            st.set(unit, Step.EXTRACTED, mentions=n)
+            st.set(unit, Step.EXTRACTED, mentions=rows.get["rows"])
         metrics["mentions"] = st.metrics(unit).get("mentions")
 
         if st.gate(unit, Step.LINKED):
             mentions = self.spark.read.parquet(self.path("mentions"))
-            linked = linking.link_mentions(
-                mentions, alias_dict, strategy=self.link_strategy
+            comps = canonicalize.connected_components(same_as)
+            canon_dict = canonicalize.apply_canonical(alias_dict, comps)
+            triples, rows = _row_count(
+                linking.link_mentions(mentions, canon_dict, strategy=self.link_strategy)
             )
-            linked.write.mode("overwrite").parquet(self.path("linked"))
-            n = self.spark.read.parquet(self.path("linked")).count()
+            triples.write.mode("overwrite").parquet(self.path("triples"))
+            comps.write.mode("overwrite").parquet(self.path("components"))
+            n = rows.get["rows"]
             st.set(unit, Step.LINKED, mentions=metrics["mentions"], linked=n)
         metrics["linked"] = st.metrics(unit).get("linked")
-
-        if st.gate(unit, Step.CANONICALIZED):
-            linked = self.spark.read.parquet(self.path("linked"))
-            comps = canonicalize.connected_components(same_as)
-            canon = canonicalize.apply_canonical(linked, comps)
-            canon.write.mode("overwrite").parquet(self.path("triples"))
-            comps.write.mode("overwrite").parquet(self.path("components"))
-            st.set(unit, Step.CANONICALIZED, **st.metrics(unit))
 
         if st.gate(unit, Step.MATERIALIZED):
             triples = self.spark.read.parquet(self.path("triples"))
@@ -194,19 +194,20 @@ class ChunkedKGPipeline:
     reference's FILE-granular state machine (reference: state.py:11-18
     one JSONL per source file; main.py:65 chunk loop; process.py:279-282
     skip-if-done): the corpus splits into n_chunks by conversation hash,
-    each chunk runs extract -> link -> canonical-rewrite -> append
+    each chunk runs extract -> link (straight to canonical ids) -> append
     independently with its own checkpoint unit and lineage row, and a
     killed run resumes at the first incomplete chunk with completed
     chunks untouched.
 
     Canonicalization is corpus-global but depends only on the same_as
-    INPUT (not on chunk outputs), so the component map is computed once
-    up front and shared by every chunk -- the analogue of the
-    reference's remote-listing cache (size_verification.py:20-24).
+    INPUT (not on chunk outputs), so the component map is composed into
+    the alias dictionary once up front and shared by every chunk -- the
+    analogue of the reference's remote-listing cache
+    (size_verification.py:20-24).
 
     At scale the chunk column is the Iceberg partition of the input
-    table, so each chunk's read is a partition-pruned scan rather than
-    this sandbox's filter-over-parquet.
+    table, so each chunk's read is a partition-pruned scan of the input
+    itself rather than of a staged copy.
     """
 
     def __init__(
@@ -253,7 +254,6 @@ class ChunkedKGPipeline:
         alias_dict: DataFrame,
         same_as: DataFrame,
         fail_after_chunk: int | None = None,
-        stage_input: bool = True,
     ) -> dict:
         """Process all incomplete chunks; returns {chunk: rows} lineage.
 
@@ -261,19 +261,10 @@ class ChunkedKGPipeline:
         (for kill/resume tests -- the reference's resumability is
         exactly this property, DESIGN.md:119-129).
 
-        ``stage_input`` (default): write the corpus ONCE partitioned by
-        chunk, then each chunk is a partition-PRUNED read -- one pass
-        over the input instead of n_chunks filtered full scans. This is
-        exactly the at-scale shape (the chunk column IS the input
-        table's partition); in-sandbox it is realized as a one-time
-        staged write, itself a checkpointed idempotent stage (a resumed
-        run skips it). Pass False to filter the live DataFrame instead
-        (e.g. when the input is already partition-pruned upstream).
+        The corpus is staged ONCE partitioned by chunk (a checkpointed
+        stage a resumed run skips), so each chunk is a partition-pruned
+        read instead of a filtered full scan.
         """
-        from .operators import canonicalize as canon_mod
-        from .operators import extract as extract_mod
-        from .operators import linking as linking_mod
-
         # resume guard against a sink written by an older triple schema
         # (r5 added ts): completed chunks would silently mix 5- and
         # 6-column footers -- plain parquet reads pick ONE schema, so
@@ -304,15 +295,15 @@ class ChunkedKGPipeline:
                     "migrate the old chunks) and re-run."
                 )
 
-        comps = canon_mod.connected_components(same_as).localCheckpoint()
-        chunked = transcripts.withColumn("_chunk", self.chunk_col(self.n_chunks))
-
-        if stage_input:
-            if self.state.gate("_staging", Step.COMPLETE):
-                chunked.write.mode("overwrite").partitionBy("_chunk").parquet(
-                    self.path("staged")
-                )
-                self.state.set("_staging", Step.COMPLETE)
+        # alias -> canonical id, composed once and shared by every chunk
+        canon_dict = canonicalize.apply_canonical(
+            alias_dict, canonicalize.connected_components(same_as)
+        ).localCheckpoint()
+        if self.state.gate("_staging", Step.COMPLETE):
+            transcripts.withColumn(
+                "_chunk", self.chunk_col(self.n_chunks)
+            ).write.mode("overwrite").partitionBy("_chunk").parquet(self.path("staged"))
+            self.state.set("_staging", Step.COMPLETE)
 
         lineage: dict = {}
         units = [f"chunk_{i:05d}" for i in range(self.n_chunks)]
@@ -320,23 +311,17 @@ class ChunkedKGPipeline:
             if not self.state.gate(unit, Step.COMPLETE):
                 lineage[i] = self.state.metrics(unit).get("rows")
                 continue
-            if stage_input:
-                # partitionBy writes NO directory for an empty chunk
-                # (possible under a skewed conv_id hash at small n):
-                # treat a missing chunk dir as an empty partition
-                # instead of crashing on PATH_NOT_FOUND, and fall
-                # through so the unit is marked COMPLETE with rows=0.
-                chunk_dir = os.path.join(self.path("staged"), f"_chunk={i}")
-                if os.path.isdir(chunk_dir):
-                    part = self.spark.read.parquet(chunk_dir)
-                else:
-                    part = chunked.filter(F.lit(False)).drop("_chunk")
+            # partitionBy writes NO directory for an empty chunk (skewed
+            # conv_id hash at small n): read it as empty, so the unit is
+            # marked COMPLETE with rows=0 instead of failing PATH_NOT_FOUND
+            chunk_dir = os.path.join(self.path("staged"), f"_chunk={i}")
+            if os.path.isdir(chunk_dir):
+                part = self.spark.read.parquet(chunk_dir)
             else:
-                part = chunked.filter(F.col("_chunk") == i).drop("_chunk")
-            mentions = extract_mod.extract_mentions(part)
-            linked = linking_mod.link_mentions(mentions, alias_dict)
-            triples = (
-                canon_mod.apply_canonical(linked, comps)
+                part = transcripts.filter(F.lit(False))
+            mentions = extract.extract_mentions(part)
+            triples, rows = _row_count(
+                linking.link_mentions(mentions, canon_dict)
                 .select("subj", "pred", "obj", "conv_id", "turn_idx", "ts")
                 .distinct()
                 .withColumn("chunk", F.lit(i))
@@ -351,9 +336,7 @@ class ChunkedKGPipeline:
                 source=("chunk", i),
                 audit_path=self._audit_path(i),
             )
-            # sidecar's rows total = the lineage row count (explicit
-            # schema so an empty chunk's bare _SUCCESS dir reads as 0)
-            n = self.spark.read.schema(triples.schema).parquet(chunk_dir).count()
+            n = rows.get["rows"]  # = the sidecar's rows total
             self.state.set(unit, Step.COMPLETE, rows=n)
             lineage[i] = n
             if fail_after_chunk is not None and i >= fail_after_chunk:

@@ -23,6 +23,8 @@ class Step(IntEnum):
     INIT = 0
     EXTRACTED = 1
     LINKED = 2
+    # unused since LINKED writes canonical triples; kept because state
+    # files store the int (a unit left at 3 resumes at MATERIALIZED)
     CANONICALIZED = 3
     MATERIALIZED = 4
     VERIFIED = 5
