@@ -13,6 +13,20 @@ Launch (the north rule's launch mode):
 
 On a real cluster pass executor configs as usual; the pipeline itself
 is resumable (re-submit after a failure and completed stages skip).
+
+Output layout under ``--out`` (single-unit pipeline):
+
+    mentions/                  extracted mentions (EXTRACTED)
+    edges/bucket=N/            the linked triples, bucketed by subject
+                               hash -- the only copy of the triple set
+    edges_audit/               (source, bucket, rows, min_id, max_id)
+    components/                same-as component map (LINKED)
+    nodes/bucket=N/            distinct entity ids (MATERIALIZED)
+    nodes_audit/
+    _state/corpus.json         stage reached + row counts per stage
+
+With ``--chunks N`` the chunk-granular pipeline writes
+``triples/chunk=i/bucket=N/`` with per-chunk sidecars under ``audit/``.
 """
 
 from __future__ import annotations

@@ -36,6 +36,12 @@ def test_end_to_end_pr(spark, spark_corpus, corpus, tmp_path):
     # mentions link straight to canonical ids: no linked stage table
     assert not os.path.exists(tmp_path / "kg" / "linked")
     assert metrics["linked"] == pipe.triples().count()
+    # the triple set is stored once, as the bucketed, audited edges
+    assert not os.path.exists(tmp_path / "kg" / "triples")
+    assert "bucket" not in pipe.triples().columns
+    audit = spark.read.parquet(str(tmp_path / "kg" / "edges_audit")).toPandas()
+    assert audit["rows"].sum() == metrics["linked"]
+    assert metrics["nodes"] == pipe.nodes().count()
     assert StateStore(str(tmp_path / "kg" / "_state")).get("corpus") == Step.COMPLETE
 
 

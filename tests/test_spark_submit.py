@@ -59,7 +59,7 @@ def test_spark_submit_pyfiles(spark, tmp_path):
     )
     assert status["status"] == "complete"
     assert (out / "edges").exists() and (out / "edges_audit").exists()
-    assert spark.read.parquet(str(out / "triples")).count() > 0
+    assert spark.read.parquet(str(out / "edges")).count() > 0
 
 
 @pytest.mark.skipif(shutil.which("spark-submit") is None, reason="spark-submit missing")
@@ -107,9 +107,9 @@ def test_spark_submit_pyfiles_multi_executor(spark, tmp_path):
     )
     assert status["status"] == "complete"
     assert (out / "edges").exists() and (out / "edges_audit").exists()
-    # the multi-executor run's triples equal the local run's semantics:
-    # non-empty and readable from a fresh session
-    assert spark.read.parquet(str(out / "triples")).count() > 0
+    # the multi-executor run's triples (stored as edges) equal the local
+    # run's semantics: non-empty and readable from a fresh session
+    assert spark.read.parquet(str(out / "edges")).count() > 0
 
 
 @pytest.mark.skipif(shutil.which("spark-submit") is None, reason="spark-submit missing")

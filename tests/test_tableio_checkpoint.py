@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import pathlib
+import shutil
+
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from wikidata_pq_spark.plans.checkpoint import StateStore, Step
@@ -24,19 +28,58 @@ def test_write_with_audit_and_post_check(spark, tmp_path):
     assert audit["min_id"].min() == 0 and audit["max_id"].max() == 99
 
 
+def _rewrite_sidecar(spark, path, edit):
+    """Replace ``path``'s sidecar with ``edit(sidecar)``."""
+    edit(spark.read.parquet(path + "_audit")).write.parquet(path + "_audit2")
+    shutil.rmtree(path + "_audit")
+    shutil.move(path + "_audit2", path + "_audit")
+
+
 def test_post_check_detects_tamper(spark, tmp_path):
     path = str(tmp_path / "t")
     tableio.write_with_audit(_df(spark), path, ["part"], id_col="id")
     # tamper: rewrite sidecar with a wrong row count
-    audit = spark.read.parquet(path + "_audit").withColumn(
-        "rows", F.col("rows") + 1
-    )
-    audit.write.mode("overwrite").parquet(path + "_audit2")
-    import shutil
-
-    shutil.rmtree(path + "_audit")
-    shutil.move(path + "_audit2", path + "_audit")
+    _rewrite_sidecar(spark, path, lambda a: a.withColumn("rows", F.col("rows") + 1))
     assert not tableio.post_check(spark, path, ["part"], "id")
+
+
+def test_post_check_is_multiset_exact(spark, tmp_path):
+    """A duplicated or dropped sidecar row, or a lost part file, fails."""
+    edits = {
+        "duplicated": lambda a: a.union(a.filter(F.col("part") == 0)),
+        "dropped": lambda a: a.filter(F.col("part") != 0),
+    }
+    for name, edit in edits.items():
+        path = str(tmp_path / name)
+        tableio.write_with_audit(_df(spark), path, ["part"], id_col="id")
+        _rewrite_sidecar(spark, path, edit)
+        assert not tableio.post_check(spark, path, ["part"], "id"), name
+
+    path = str(tmp_path / "lost_file")
+    tableio.write_with_audit(_df(spark), path, ["part"], id_col="id")
+    next(pathlib.Path(path).rglob("*.parquet")).unlink()
+    assert not tableio.post_check(spark, path, ["part"], "id")
+
+
+@pytest.mark.classic_session_only
+def test_post_check_job_count(spark, tmp_path):
+    """On a 4-partition sink the post-check runs at most 5 jobs: the two
+    reads and the collects of the two small audit frames, no set
+    differences."""
+    path = str(tmp_path / "t")
+    tableio.write_with_audit(
+        _df(spark), path, ["part"], id_col="id", source=("source", "u")
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("post_check_jobs", "post_check_jobs")
+    try:
+        assert tableio.post_check(spark, path, ["part"], "id", source=("source", "u"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the asynchronous listener bus: drain
+    # it so every job that ran is counted
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("post_check_jobs")) <= 5
 
 
 def test_post_check_missing_audit(spark, tmp_path):

@@ -8,10 +8,16 @@ state machine, reference: state.py:11-18, main.py:61-136):
   INIT          -> read transcripts (Iceberg/parquet)
   EXTRACTED     -> Catalyst regex mention extraction
   LINKED        -> connected components composed into the alias dict;
-                   broadcast/salted join links to canonical ids
-  MATERIALIZED  -> nodes/edges bucketed by subject hash + lineage
-  VERIFIED      -> post-check: re-read sinks vs audit sidecars
+                   broadcast/salted join links to canonical ids; the
+                   triples are written once, as ``edges`` bucketed by
+                   subject hash with an audit sidecar
+  MATERIALIZED  -> ``nodes`` (distinct entity ids) derived from ``edges``
+  VERIFIED      -> post-check: each sink's recomputed audit vs its sidecar
   COMPLETE
+
+A unit an older run left at exactly LINKED has ``triples`` but no
+``edges``; MATERIALIZED fails on the missing ``edges`` path (delete the
+output dir and re-run).
 
 Every stage is idempotent: re-running a completed stage is a no-op
 (skip gate), and a killed run resumes from its last persisted stage.
@@ -77,28 +83,26 @@ class KGPipeline:
             mentions = self.spark.read.parquet(self.path("mentions"))
             comps = canonicalize.connected_components(same_as)
             canon_dict = canonicalize.apply_canonical(alias_dict, comps)
-            triples, rows = _row_count(
-                linking.link_mentions(mentions, canon_dict, strategy=self.link_strategy)
+            edges, rows = _row_count(
+                linking.link_mentions(
+                    mentions, canon_dict, strategy=self.link_strategy
+                ).withColumn("bucket", tableio.bucket_column("subj", self.n_buckets))
             )
-            triples.write.mode("overwrite").parquet(self.path("triples"))
+            tableio.write_with_audit(
+                edges, self.path("edges"), ["bucket"], id_col="subj",
+                source=("source", UNIT),
+            )
             comps.write.mode("overwrite").parquet(self.path("components"))
             n = rows.get["rows"]
             st.set(unit, Step.LINKED, mentions=metrics["mentions"], linked=n)
         metrics["linked"] = st.metrics(unit).get("linked")
 
         if st.gate(unit, Step.MATERIALIZED):
-            triples = self.spark.read.parquet(self.path("triples"))
-            edges = triples.withColumn(
-                "bucket", tableio.bucket_column("subj", self.n_buckets)
-            )
-            tableio.write_with_audit(
-                edges, self.path("edges"), ["bucket"], id_col="subj",
-                source=("source", UNIT),
-            )
-            nodes = (
-                triples.select(F.col("subj").alias("entity_id"))
+            edges = self.edges()
+            nodes, rows = _row_count(
+                edges.select(F.col("subj").alias("entity_id"))
                 .union(
-                    triples.filter(F.col("obj_kind") == "entity").select(
+                    edges.filter(F.col("obj_kind") == "entity").select(
                         F.col("obj").alias("entity_id")
                     )
                 )
@@ -109,7 +113,9 @@ class KGPipeline:
                 nodes, self.path("nodes"), ["bucket"], id_col="entity_id",
                 source=("source", UNIT),
             )
-            st.set(unit, Step.MATERIALIZED, **st.metrics(unit))
+            st.set(
+                unit, Step.MATERIALIZED, **{**st.metrics(unit), "nodes": rows.get["rows"]}
+            )
 
         if st.gate(unit, Step.VERIFIED):
             ok_e = tableio.post_check(
@@ -130,7 +136,7 @@ class KGPipeline:
 
     # -- results -------------------------------------------------------
     def triples(self) -> DataFrame:
-        return self.spark.read.parquet(self.path("triples"))
+        return self.edges().drop("bucket")
 
     def edges(self) -> DataFrame:
         return self.spark.read.parquet(self.path("edges"))

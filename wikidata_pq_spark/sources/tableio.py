@@ -18,6 +18,7 @@ DESIGN.md:95-112).
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -174,8 +175,10 @@ def post_check(
     The reference's post-check step (reference: DESIGN.md:95-112,
     docs/journal/2025-01-16-03-implement-postcheck-DRAFT.md:24-33):
     recompute (rows, min_id, max_id) from the sink and verify it matches
-    the audit sidecar exactly -- per (source x partition) when the
-    sidecar carries a source unit.
+    the audit sidecar exactly, as multisets -- per (source x partition)
+    when the sidecar carries a source unit. Both sides hold at most one
+    row per (source x partition), so they are collected and compared on
+    the driver instead of with distributed set differences.
     """
     apath = audit_path or path + "_audit"
     if not os.path.exists(apath):
@@ -194,6 +197,6 @@ def post_check(
         key_cols = [col] + key_cols
     sidecar = spark.read.parquet(apath)
     cols = key_cols + ["rows", "min_id", "max_id"]
-    diff = written.select(cols).exceptAll(sidecar.select(cols))
-    diff2 = sidecar.select(cols).exceptAll(written.select(cols))
-    return diff.union(diff2).limit(1).count() == 0
+    return Counter(map(tuple, written.select(cols).collect())) == Counter(
+        map(tuple, sidecar.select(cols).collect())
+    )
