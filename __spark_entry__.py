@@ -39,7 +39,7 @@ def entry(spark: SparkSession) -> DataFrame:
     comps = canonicalize.connected_components(sdf)
     canon_dict = canonicalize.apply_canonical(adf, comps)
     return (
-        linking.link_mentions(mentions, canon_dict, strategy="broadcast")
+        linking.kg_chain(mentions, canon_dict)
         .select("subj", "pred", "obj", "conv_id", "turn_idx")
         .distinct()
     )

@@ -9,24 +9,25 @@ Launch (the north rule's launch mode):
         --transcripts <parquet-or-iceberg-path> \
         --alias-dict <parquet path> \
         --same-as <parquet path> \
-        --out <output dir> [--buckets 64] [--link-strategy broadcast]
+        --out <output dir> [--chunks 1] [--buckets 64] \
+        [--link-strategy broadcast]
 
 On a real cluster pass executor configs as usual; the pipeline itself
-is resumable (re-submit after a failure and completed stages skip).
+is resumable (re-submit after a failure and completed units skip).
 
-Output layout under ``--out`` (single-unit pipeline):
+Output layout under ``--out``:
 
-    mentions/                  extracted mentions (EXTRACTED)
-    edges/bucket=N/            the linked triples, bucketed by subject
-                               hash -- the only copy of the triple set
-    edges_audit/               (source, bucket, rows, min_id, max_id)
-    components/                same-as component map (LINKED)
+    staged/_chunk=i/           the input, partitioned by chunk (only
+                               with --chunks > 1)
+    edges/chunk=i/bucket=N/    the canonical triples, bucketed by
+                               subject hash -- the only copy of the
+                               triple set, one slice per chunk
+    edges_audit/chunk=i/       (chunk, bucket, rows, min_id, max_id)
+    components/                same-as component map
     nodes/bucket=N/            distinct entity ids (MATERIALIZED)
     nodes_audit/
-    _state/corpus.json         stage reached + row counts per stage
-
-With ``--chunks N`` the chunk-granular pipeline writes
-``triples/chunk=i/bucket=N/`` with per-chunk sidecars under ``audit/``.
+    _state/chunk_NNNNN.json    per chunk: LINKED + mentions/linked rows
+    _state/corpus.json         corpus-wide stage reached + row totals
 """
 
 from __future__ import annotations
@@ -49,9 +50,8 @@ def main() -> None:
         choices=["auto", "broadcast", "salted", "shuffle"],
     )
     p.add_argument(
-        "--chunks", type=int, default=0,
-        help="run the chunk-granular resumable pipeline with N chunks "
-        "(0 = single-unit staged pipeline)",
+        "--chunks", type=int, default=1,
+        help="resumable units the corpus splits into by conversation hash",
     )
     args = p.parse_args()
 
@@ -61,21 +61,18 @@ def main() -> None:
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     spark.sparkContext.setLogLevel("WARN")
 
-    from wikidata_pq_spark.pipeline import ChunkedKGPipeline, KGPipeline
+    from wikidata_pq_spark.pipeline import KGPipeline
 
-    tdf = spark.read.parquet(args.transcripts)
-    adf = spark.read.parquet(args.alias_dict)
-    sdf = spark.read.parquet(args.same_as)
-    if args.chunks > 0:
-        cpipe = ChunkedKGPipeline(spark, args.out, n_chunks=args.chunks)
-        lineage = cpipe.run(tdf, adf, sdf)
-        print(json.dumps({"status": "complete", "chunks": lineage}))
-    else:
-        pipe = KGPipeline(
-            spark, args.out, n_buckets=args.buckets, link_strategy=args.link_strategy
-        )
-        metrics = pipe.run(tdf, adf, sdf)
-        print(json.dumps({"status": "complete", **metrics}))
+    pipe = KGPipeline(
+        spark, args.out, n_chunks=args.chunks, n_buckets=args.buckets,
+        link_strategy=args.link_strategy,
+    )
+    metrics = pipe.run(
+        spark.read.parquet(args.transcripts),
+        spark.read.parquet(args.alias_dict),
+        spark.read.parquet(args.same_as),
+    )
+    print(json.dumps({"status": "complete", **metrics}))
     spark.stop()
 
 

@@ -83,14 +83,14 @@ def test_apply_canonical(spark):
 
 @pytest.mark.classic_session_only
 def test_composed_link_plan_runs_no_job(spark, spark_corpus):
-    """Building link_mentions(m, apply_canonical(adf, comps)) launches no
+    """Building kg_chain(m, apply_canonical(adf, comps)) launches no
     Spark job: the dictionary composition is a lazy join, not a probe."""
     mentions = extract.extract_mentions(spark_corpus["transcripts"])
     comps = canonicalize.connected_components(spark_corpus["same_as"])
     sc = spark.sparkContext
     sc.setJobGroup("composed_link_plan", "composed_link_plan")
     try:
-        linking.link_mentions(
+        linking.kg_chain(
             mentions, canonicalize.apply_canonical(spark_corpus["alias_dict"], comps)
         )
     finally:

@@ -2,61 +2,94 @@
 
 from __future__ import annotations
 
+import contextlib
+import os
+
 import pytest
 
-from wikidata_pq_spark import oracle
-from wikidata_pq_spark.pipeline import ChunkedKGPipeline
+from wikidata_pq_spark import datagen, oracle
+from wikidata_pq_spark.pipeline import KGPipeline
+from wikidata_pq_spark.plans.checkpoint import StateStore, Step
 
 KEYS = ["subj", "pred", "obj", "conv_id", "turn_idx"]
+
+
+class Killed(RuntimeError):
+    """Raised by the crash hook to simulate a killed run."""
 
 
 def _tset(df):
     return set(map(tuple, df.select(*KEYS).toPandas().values))
 
 
+def _run(pipe, c):
+    return pipe.run(c["transcripts"], c["alias_dict"], c["same_as"])
+
+
+@contextlib.contextmanager
+def _crash_after(unit: str, step: Step):
+    """Make ``StateStore.set`` raise right after it records ``step`` for
+    ``unit`` -- the crash hook the benchmark's kill/resume uses."""
+    orig = StateStore.set
+
+    def set_then_crash(store, u, s, **metrics):
+        orig(store, u, s, **metrics)
+        if (u, s) == (unit, step):
+            raise Killed(f"killed after {unit} {step.name}")
+
+    StateStore.set = set_then_crash
+    try:
+        yield
+    finally:
+        StateStore.set = orig
+
+
+def _chunk_rows(spark, out):
+    """Per-chunk row totals of the (chunk x bucket) sidecars."""
+    pdf = spark.read.parquet(os.path.join(out, "edges_audit")).toPandas()
+    return {int(k): int(v) for k, v in pdf.groupby("chunk")["rows"].sum().items()}
+
+
 def test_chunked_equals_oracle(spark, spark_corpus, corpus, tmp_path):
-    pipe = ChunkedKGPipeline(spark, str(tmp_path / "kg"), n_chunks=4)
-    lineage = pipe.run(
-        spark_corpus["transcripts"], spark_corpus["alias_dict"], spark_corpus["same_as"]
-    )
+    pipe = KGPipeline(spark, str(tmp_path / "kg"), n_chunks=4)
+    metrics = _run(pipe, spark_corpus)
     golden = oracle.oracle_triples(
         corpus["transcripts"], corpus["alias_dict"], corpus["same_as"]
     )
     got = pipe.triples().select("subj", "pred", "obj").toPandas()
     p, r = oracle.precision_recall(got, golden)
     assert (p, r) == (1.0, 1.0)
-    assert sum(lineage.values()) == pipe.triples().count()
-    assert len(lineage) == 4
-    lin = spark.read.parquet(str(tmp_path / "kg" / "lineage")).toPandas()
-    assert dict(zip(lin["chunk"], lin["rows"])) == lineage
+    assert metrics["linked"] == pipe.triples().count()
+    assert metrics["nodes"] == pipe.nodes().count()
+    # per-chunk rows: the state store and the sidecars agree
+    per_chunk = {i: pipe.state.metrics(u)["linked"] for i, u in enumerate(pipe.units())}
+    assert sum(per_chunk.values()) == metrics["linked"]
+    assert _chunk_rows(spark, str(tmp_path / "kg")) == per_chunk
+    assert pipe.state.get("corpus") == Step.COMPLETE
 
 
-def test_kill_and_resume_identical(spark, spark_corpus, tmp_path):
-    out = str(tmp_path / "kg")
-    clean = ChunkedKGPipeline(spark, str(tmp_path / "clean"), n_chunks=4)
-    clean.run(
-        spark_corpus["transcripts"], spark_corpus["alias_dict"], spark_corpus["same_as"]
-    )
+@pytest.mark.parametrize("n_chunks", [1, 4])
+def test_kill_and_resume_identical(spark, spark_corpus, tmp_path, n_chunks):
+    clean = KGPipeline(spark, str(tmp_path / "clean"), n_chunks=n_chunks)
+    _run(clean, spark_corpus)
     expected = _tset(clean.triples())
 
-    pipe = ChunkedKGPipeline(spark, out, n_chunks=4)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        pipe.run(
-            spark_corpus["transcripts"],
-            spark_corpus["alias_dict"],
-            spark_corpus["same_as"],
-            fail_after_chunk=1,
-        )
-    assert pipe.incomplete() == ["chunk_00002", "chunk_00003"]
-
-    # resume: only the incomplete chunks run; output identical to clean
-    pipe2 = ChunkedKGPipeline(spark, out, n_chunks=4)
-    lineage = pipe2.run(
-        spark_corpus["transcripts"], spark_corpus["alias_dict"], spark_corpus["same_as"]
+    out = str(tmp_path / "kg")
+    pipe = KGPipeline(spark, out, n_chunks=n_chunks)
+    kill = (n_chunks - 1) // 2  # the middle chunk: some done, some not
+    with _crash_after(f"chunk_{kill:05d}", Step.LINKED), pytest.raises(Killed):
+        _run(pipe, spark_corpus)
+    assert [pipe.state.get(u) for u in pipe.units()] == (
+        [Step.LINKED] * (kill + 1) + [Step.INIT] * (n_chunks - kill - 1)
     )
-    assert pipe2.incomplete() == []
+    assert pipe.state.get("corpus") == Step.INIT
+
+    # resume: only the unfinished units run; output identical to clean
+    pipe2 = KGPipeline(spark, out, n_chunks=n_chunks)
+    metrics = _run(pipe2, spark_corpus)
+    assert pipe2.state.get("corpus") == Step.COMPLETE
     assert _tset(pipe2.triples()) == expected
-    assert len(lineage) == 4
+    assert metrics == _run(clean, spark_corpus)
 
 
 def test_per_chunk_audit_sidecars_post_check(spark, spark_corpus, tmp_path):
@@ -64,45 +97,35 @@ def test_per_chunk_audit_sidecars_post_check(spark, spark_corpus, tmp_path):
     sidecar keying, reference: partitioning/core.py:14-35) survive a
     kill/resume and post-check against the sinks."""
     out = str(tmp_path / "kg")
-    pipe = ChunkedKGPipeline(spark, out, n_chunks=4, n_buckets=4)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        pipe.run(
-            spark_corpus["transcripts"],
-            spark_corpus["alias_dict"],
-            spark_corpus["same_as"],
-            fail_after_chunk=1,
-        )
-    # completed chunks already post-check mid-crash; incomplete are skipped
-    assert pipe.post_check()
+    pipe = KGPipeline(spark, out, n_chunks=4, n_buckets=4)
+    with _crash_after("chunk_00001", Step.LINKED), pytest.raises(Killed):
+        _run(pipe, spark_corpus)
+    # the sidecars of the chunks that finished before the kill are there
+    assert sorted(os.listdir(os.path.join(out, "edges_audit"))) == [
+        "chunk=0", "chunk=1"
+    ]
 
-    pipe2 = ChunkedKGPipeline(spark, out, n_chunks=4, n_buckets=4)
-    pipe2.run(
-        spark_corpus["transcripts"], spark_corpus["alias_dict"], spark_corpus["same_as"]
-    )
+    pipe2 = KGPipeline(spark, out, n_chunks=4, n_buckets=4)
+    _run(pipe2, spark_corpus)
     assert pipe2.post_check()
     # sidecars carry the chunk unit and bucket key with rows/min/max
-    audit = spark.read.option("basePath", out + "/audit").parquet(out + "/audit/chunk=*")
-    pdf = audit.toPandas()
+    pdf = spark.read.parquet(os.path.join(out, "edges_audit")).toPandas()
     assert {"chunk", "bucket", "rows", "min_id", "max_id"} <= set(pdf.columns)
-    assert set(pdf["chunk"]) == {0, 1, 2, 3}
-    # sidecar row totals == lineage row totals per chunk
-    lin = spark.read.parquet(out + "/lineage").toPandas()
-    got = pdf.groupby("chunk")["rows"].sum().to_dict()
-    assert {int(k): int(v) for k, v in got.items()} == dict(
-        zip(lin["chunk"], lin["rows"])
-    )
+    assert set(pdf["bucket"]) <= set(range(4))
+    # sidecar row totals == the state store's per-chunk rows
+    assert _chunk_rows(spark, out) == {
+        i: pipe2.state.metrics(u)["linked"] for i, u in enumerate(pipe2.units())
+    }
     # tamper -> post-check fails
     import pathlib
 
-    victim = next(pathlib.Path(out, "triples", "chunk=0").rglob("*.parquet"))
+    victim = next(pathlib.Path(out, "edges", "chunk=0").rglob("*.parquet"))
     victim.unlink()
     assert not pipe2.post_check()
 
 
 def test_chunks_partition_conversations(spark, spark_corpus):
-    chunked = spark_corpus["transcripts"].withColumn(
-        "c", ChunkedKGPipeline.chunk_col(4)
-    )
+    chunked = spark_corpus["transcripts"].withColumn("c", KGPipeline.chunk_col(4))
     # every conversation maps to exactly one chunk
     multi = (
         chunked.groupBy("conv_id")
@@ -115,13 +138,10 @@ def test_chunks_partition_conversations(spark, spark_corpus):
 def test_staged_chunks_layout_and_rerun_skip(spark, spark_corpus, tmp_path):
     """The corpus is staged once as one partition per chunk, and staging
     is itself resumable (skipped on re-run)."""
-    import os
     import time
 
-    a = ChunkedKGPipeline(spark, str(tmp_path / "staged"), n_chunks=4)
-    a.run(
-        spark_corpus["transcripts"], spark_corpus["alias_dict"], spark_corpus["same_as"]
-    )
+    a = KGPipeline(spark, str(tmp_path / "staged"), n_chunks=4)
+    _run(a, spark_corpus)
     # staged dir exists with one partition per chunk
     parts = sorted(os.listdir(str(tmp_path / "staged" / "staged")))
     assert [p for p in parts if p.startswith("_chunk=")] == [
@@ -130,48 +150,88 @@ def test_staged_chunks_layout_and_rerun_skip(spark, spark_corpus, tmp_path):
     # re-run: staging gate skips the write (mtime unchanged)
     stamp = os.path.getmtime(str(tmp_path / "staged" / "staged"))
     time.sleep(1.1)
-    a2 = ChunkedKGPipeline(spark, str(tmp_path / "staged"), n_chunks=4)
-    a2.run(
-        spark_corpus["transcripts"], spark_corpus["alias_dict"], spark_corpus["same_as"]
-    )
+    a2 = KGPipeline(spark, str(tmp_path / "staged"), n_chunks=4)
+    _run(a2, spark_corpus)
     assert os.path.getmtime(str(tmp_path / "staged" / "staged")) == stamp
 
 
 def test_empty_chunks_survive(spark, tmp_path):
     """A tiny/skewed corpus leaves some chunks with zero conversations:
-    partitionBy writes no staged directory for them and their triples
-    write is empty. The run must complete, record rows=0 lineage for the
-    empty chunks, and post_check must pass."""
-    from wikidata_pq_spark import datagen
-
+    partitionBy writes no staged directory for them and their edges
+    write is empty. The run must complete, record rows=0 for the empty
+    chunks, and post_check must pass."""
     tr = datagen.gen_transcripts(n_convs=3, mean_turns=6, n_entities=50)
     tdf = spark.createDataFrame(tr)
     adf = spark.createDataFrame(datagen.gen_entities(50))
     sdf = spark.createDataFrame(datagen.gen_same_as(50))
-    pipe = ChunkedKGPipeline(spark, str(tmp_path / "kg"), n_chunks=16)
-    lineage = pipe.run(tdf, adf, sdf)
-    assert len(lineage) == 16
-    assert sum(1 for v in lineage.values() if v == 0) > 0  # exercises empties
+    pipe = KGPipeline(spark, str(tmp_path / "kg"), n_chunks=16)
+    pipe.run(tdf, adf, sdf)
+    rows = [pipe.state.metrics(u)["linked"] for u in pipe.units()]
+    assert len(rows) == 16
+    assert rows.count(0) > 0  # exercises empties
     assert pipe.post_check()
     assert len(_tset(pipe.triples())) > 0
 
 
-def test_resume_refuses_pre_ts_sink(spark, spark_corpus, tmp_path):
-    """A sink written by the pre-wall-clock schema (no ts column) must
-    refuse to resume: mixing 5- and 6-column chunk footers would make
-    plain parquet reads silently drop ts or null it for old chunks."""
-    import pandas as pd
+def test_resume_refuses_old_layout(spark, spark_corpus, tmp_path):
+    """An out_dir holding an older pipeline's layout (a ``mentions`` or
+    ``triples`` dir) must refuse to resume: its finished stages would be
+    skipped or mixed with new chunks instead of re-run."""
+    for old in ("mentions", "triples"):
+        out = tmp_path / old
+        os.makedirs(out / old / "chunk=0")
+        pipe = KGPipeline(spark, str(out), n_chunks=4)
+        with pytest.raises(RuntimeError, match="layout of an older pipeline"):
+            _run(pipe, spark_corpus)
+        assert not (out / "edges").exists()
 
-    out = str(tmp_path / "kg")
-    old = pd.DataFrame(
-        [("Q1", "likes", "Q2", "c1", 1)],
-        columns=["subj", "pred", "obj", "conv_id", "turn_idx"],
+
+def _duplicated_corpus():
+    """A corpus in which turns assert the same triple twice: every
+    relation turn's text is repeated inside the turn."""
+    tr = datagen.gen_transcripts(n_convs=30, mean_turns=6, n_entities=80)
+    tr = tr.assign(text=tr["text"] + " " + tr["text"])
+    return tr, datagen.gen_entities(80), datagen.gen_same_as(80)
+
+
+@pytest.mark.parametrize("n_chunks", [1, 4])
+def test_duplicate_assertions_stored_once(spark, tmp_path, n_chunks):
+    """The stored triple set has the oracle's row count: a triple one
+    turn asserts twice is one row, not two."""
+    tr, ents, sa = _duplicated_corpus()
+    golden = oracle.oracle_triples(tr, ents, sa)
+    linked = oracle.oracle_canonicalize(
+        oracle.oracle_link(oracle.oracle_extract(tr), ents), sa
     )
-    spark.createDataFrame(old).write.parquet(out + "/triples/chunk=0/bucket=0")
-    pipe = ChunkedKGPipeline(spark, out, n_chunks=4)
-    with pytest.raises(RuntimeError, match="WITHOUT the ts column"):
-        pipe.run(
-            spark_corpus["transcripts"],
-            spark_corpus["alias_dict"],
-            spark_corpus["same_as"],
-        )
+    assert len(linked) > len(golden)  # the corpus really repeats triples
+    pipe = KGPipeline(spark, str(tmp_path / "kg"), n_chunks=n_chunks)
+    metrics = pipe.run(
+        spark.createDataFrame(tr), spark.createDataFrame(ents), spark.createDataFrame(sa)
+    )
+    assert pipe.triples().count() == len(golden)
+    assert metrics["linked"] == len(golden)
+    assert metrics["mentions"] == len(oracle.oracle_extract(tr))
+    # no stage table besides the edges and the staged input at n > 1
+    assert os.path.isdir(tmp_path / "kg" / "staged") == (n_chunks > 1)
+
+
+@pytest.mark.classic_session_only
+def test_completed_store_reruns_without_jobs(spark, spark_corpus, tmp_path):
+    """Re-running a completed store launches no Spark job: every gate is
+    closed, so neither the components, the staging nor any chunk runs."""
+    out = str(tmp_path / "kg")
+    _run(KGPipeline(spark, out, n_chunks=4), spark_corpus)
+    for old in ("mentions", "triples", "lineage"):
+        assert not os.path.exists(os.path.join(out, old))
+
+    sc = spark.sparkContext
+    sc.setJobGroup("completed_rerun", "completed_rerun")
+    try:
+        metrics = _run(KGPipeline(spark, out, n_chunks=4), spark_corpus)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the asynchronous listener bus: drain
+    # it so a job that already ran is counted
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("completed_rerun")) == 0
+    assert metrics["linked"] > 0 and metrics["nodes"] > 0

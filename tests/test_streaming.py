@@ -5,8 +5,8 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from wikidata_pq_spark import datagen
-from wikidata_pq_spark.operators import extract, linking
+from wikidata_pq_spark import datagen, oracle
+from wikidata_pq_spark.operators import canonicalize, extract, linking
 from wikidata_pq_spark.streaming import incremental
 
 KEYS = ["subj", "pred", "obj", "conv_id", "turn_idx"]
@@ -14,8 +14,9 @@ KEYS = ["subj", "pred", "obj", "conv_id", "turn_idx"]
 
 def test_incremental_extract_matches_batch(spark, tmp_path):
     tr = datagen.gen_transcripts(n_convs=40, mean_turns=6, n_entities=100)
-    ents = datagen.gen_entities(100)
-    adf = spark.createDataFrame(ents)
+    ents, same_as = datagen.gen_entities(100), datagen.gen_same_as(100)
+    comps = canonicalize.connected_components(spark.createDataFrame(same_as))
+    canon = canonicalize.apply_canonical(spark.createDataFrame(ents), comps)
 
     # two conversation-complete files arriving "over time"
     in_dir, out_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
@@ -29,16 +30,19 @@ def test_incremental_extract_matches_batch(spark, tmp_path):
     ).parquet(in_dir)
 
     stream = incremental.stream_transcripts(spark, in_dir, max_files_per_trigger=1)
-    q = incremental.incremental_extract(stream, adf, out_dir, ckpt)
+    q = incremental.incremental_extract(stream, canon, out_dir, ckpt)
     q.awaitTermination(120)
 
     got = spark.read.parquet(out_dir).toPandas()
     assert got["epoch"].nunique() >= 2  # genuinely incremental
 
-    batch = linking.link_mentions(
-        extract.extract_mentions(spark.createDataFrame(tr)), adf
+    batch = linking.kg_chain(
+        extract.extract_mentions(spark.createDataFrame(tr)), canon
     ).toPandas()
     assert sorted(map(tuple, got[KEYS].values)) == sorted(map(tuple, batch[KEYS].values))
+    # the streamed triples are canonical: they equal the oracle's
+    golden = oracle.oracle_triples(tr, ents, same_as)
+    assert sorted(map(tuple, got[KEYS].values)) == sorted(map(tuple, golden[KEYS].values))
 
 
 def test_incremental_resume_no_duplicates(spark, tmp_path):

@@ -155,8 +155,8 @@ def test_iceberg_seam_routing(spark, tmp_path, monkeypatch):
 def test_write_with_audit_empty_frame(spark, tmp_path):
     """An all-empty partitioned write (no part files, bare _SUCCESS)
     must produce an empty sidecar and a passing post-check, not an
-    UNABLE_TO_INFER_SCHEMA crash -- the empty-chunk shape a skewed
-    corpus hash produces in ChunkedKGPipeline."""
+    UNABLE_TO_INFER_SCHEMA crash -- the shape of an empty chunk, which
+    a skewed conversation hash gives ``KGPipeline(n_chunks>1)``."""
     df = _df(spark, 10).filter(F.lit(False))
     path = str(tmp_path / "empty")
     tableio.write_with_audit(df, path, ["part"], id_col="id")

@@ -52,7 +52,7 @@ def test_pipeline_runs_on_generated_source(spark):
 
     df = _read(spark, n_convs=60, mean_turns=8, n_entities=100, n_partitions=3)
     adf = spark.createDataFrame(datagen.gen_entities(100))
-    out = linking.link_mentions(extract.extract_mentions(df), adf)
+    out = linking.kg_chain(extract.extract_mentions(df), adf)
     assert out.count() > 0
     # ts rides along since r5 (wall-clock current-beliefs ordering)
     assert set(out.columns) == {

@@ -63,8 +63,7 @@ t0 = time.time()
 mentions = extract.extract_mentions(tdf, method=method)
 comps = canonicalize.connected_components(sdf)
 canon_dict = canonicalize.apply_canonical(adf, comps)
-triples = linking.link_mentions(mentions, canon_dict, strategy="broadcast").select(
-    "subj", "pred", "obj", "conv_id", "turn_idx").distinct()
+triples = linking.kg_chain(mentions, canon_dict)
 n_triples = triples.count()
 dt = time.time() - t0
 print(json.dumps({{"cpus": cpus, "method": method, "sec": round(dt, 2),

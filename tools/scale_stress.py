@@ -14,11 +14,12 @@ correctness gate cannot give:
 - **embeddings x10**: the sf0.1 embeddings replicated 10x with a
   deterministic first-component perturbation. Runs IVF and brute-force
   ANN.
-- **KG pipeline at ~sf1-equivalent**: the ChunkedKGPipeline (staged
-  partition-pruned input, per-chunk checkpoints, bucketed sink with
-  audit sidecars) over the 20k-conversation / 1M-turn scaling corpus
-  (.bench_data/c20000_t50, regenerated deterministically if absent),
-  followed by the full sidecar post-check.
+- **KG pipeline at ~sf1-equivalent**: ``KGPipeline(n_chunks=8)``
+  (input staged once by chunk, per-chunk checkpoints, bucketed sink
+  with audit sidecars, then nodes and the post-check) over the
+  20k-conversation / 1M-turn scaling corpus (.bench_data/c20000_t50,
+  regenerated deterministically if absent), followed by a second full
+  sidecar post-check.
 
 Per step it records wall seconds plus shuffle-write totals and the
 peak single-stage shuffle write (Spark UI REST API), and prints one
@@ -539,7 +540,7 @@ def main() -> None:
     # -- KG pipeline at ~sf1-equivalent (1M turns), audit + post-check on
     import tempfile
 
-    from wikidata_pq_spark.pipeline import ChunkedKGPipeline
+    from wikidata_pq_spark.pipeline import KGPipeline
 
     corpus = REPO / ".bench_data" / "c20000_t50"
     if not corpus.exists():
@@ -560,14 +561,14 @@ def main() -> None:
     sa = spark.read.parquet(str(corpus / "same_as"))
     n_turns = tr.count()
     out_dir = tempfile.mkdtemp(prefix="stress_kg_")
-    pipe = ChunkedKGPipeline(spark, out_dir, n_chunks=8, n_buckets=8)
-    step("kg_pipeline_1m_turns", lambda: sum(pipe.run(tr, ad, sa).values()))
+    pipe = KGPipeline(spark, out_dir, n_chunks=8, n_buckets=8)
+    step("kg_pipeline_1m_turns", lambda: pipe.run(tr, ad, sa)["linked"])
 
     def _post():
         ok = pipe.post_check()
         if not ok:
             raise RuntimeError("post_check failed at 10x")
-        return spark.read.parquet(os.path.join(out_dir, "triples")).count()
+        return pipe.triples().count()
 
     step("kg_post_check_1m", _post)
 

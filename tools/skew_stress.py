@@ -22,8 +22,8 @@ pathologies on purpose:
   possible self-join key) and one at cap+1 (dropped + audited).
   Records the kept conv's task-time spread: this is where AQE
   skew-split earns its keep.
-- **chaos_resume** (item 7): the 867k-turn ChunkedKGPipeline run is
-  KILLED (os._exit, no cleanup) mid-run after 3 chunks complete in a
+- **chaos_resume** (item 7): the 867k-turn ``KGPipeline(n_chunks=8)``
+  run is KILLED (os._exit, no cleanup) mid-run after 3 chunks link in a
   child process, then resumed in the parent; the resumed store must
   pass the sidecar post-check and its triple set must hash-match a
   clean run's bit-for-bit (order-insensitive xxhash64 sum).
@@ -354,7 +354,7 @@ def main() -> None:
         ).parquet(str(corpus_dir / "same_as"))
 
     def triple_fingerprint(out_dir):
-        t = spark.read.parquet(os.path.join(out_dir, "triples"))
+        t = spark.read.parquet(os.path.join(out_dir, "edges"))
         row = t.agg(
             F.count(F.lit(1)).alias("n"),
             # decimal(38,0) sum: order-insensitive and overflow-proof
@@ -369,7 +369,8 @@ def main() -> None:
         ).first()
         return int(row["n"]), int(row["h"])
 
-    from wikidata_pq_spark.pipeline import ChunkedKGPipeline
+    from wikidata_pq_spark.pipeline import KGPipeline
+    from wikidata_pq_spark.plans.checkpoint import Step
 
     tr = spark.read.parquet(str(corpus_dir / "transcripts"))
     ad = spark.read.parquet(str(corpus_dir / "alias_dict"))
@@ -379,7 +380,7 @@ def main() -> None:
     chaos_dir = tempfile.mkdtemp(prefix="chaos_kill_")
 
     def run_clean():
-        pipe = ChunkedKGPipeline(spark, clean_dir, n_chunks=8, n_buckets=8)
+        pipe = KGPipeline(spark, clean_dir, n_chunks=8, n_buckets=8)
         pipe.run(tr, ad, sa)
         n, h = triple_fingerprint(clean_dir)
         return {"rows": n, "fingerprint": h}
@@ -398,18 +399,17 @@ def main() -> None:
         if proc.returncode == 0:
             raise RuntimeError("chaos child exited cleanly; kill never fired")
         # resume in THIS session
-        pipe = ChunkedKGPipeline(spark, chaos_dir, n_chunks=8, n_buckets=8)
-        lineage = pipe.run(tr, ad, sa)
-        if not pipe.post_check():
-            raise RuntimeError("post_check failed after chaos resume")
+        pipe = KGPipeline(spark, chaos_dir, n_chunks=8, n_buckets=8)
+        linked_before = sum(
+            pipe.state.get(u) >= Step.LINKED for u in pipe.units()
+        )
+        pipe.run(tr, ad, sa)  # raises if VERIFIED's post-check fails
         n, h = triple_fingerprint(chaos_dir)
         return {
             "rows": n,
             "fingerprint": h,
             "child_exit": proc.returncode,
-            "resumed_chunks": sum(
-                1 for v in lineage.values() if v is not None
-            ),
+            "resumed_chunks": len(pipe.units()) - linked_before,
         }
 
     step("kg_chaos_resume", run_chaos)
@@ -439,14 +439,14 @@ def main() -> None:
 
 def _chaos_child(out_dir: str, corpus_dir: str) -> None:
     """Run the chunked pipeline and os._exit(137) the moment the Nth
-    chunk commits -- a SIGKILL-grade stop: no finally blocks, no JVM
-    shutdown hooks, whatever partial files the NEXT chunk had started
-    writing are left on disk for the resume to cope with."""
+    chunk unit records LINKED -- a SIGKILL-grade stop: no finally
+    blocks, no JVM shutdown hooks, whatever partial files the NEXT chunk
+    had started writing are left on disk for the resume to cope with."""
     spark = get_spark(
         app_name="skew_stress_chaos_child",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    from wikidata_pq_spark.pipeline import ChunkedKGPipeline
+    from wikidata_pq_spark.pipeline import KGPipeline
     from wikidata_pq_spark.plans import checkpoint as cp
 
     done = {"n": 0}
@@ -454,7 +454,7 @@ def _chaos_child(out_dir: str, corpus_dir: str) -> None:
 
     def killer_set(self, unit, step, **metrics):
         orig_set(self, unit, step, **metrics)
-        if unit.startswith("chunk_") and step == cp.Step.COMPLETE:
+        if unit.startswith("chunk_") and step == cp.Step.LINKED:
             done["n"] += 1
             if done["n"] >= CHAOS_KILL_AFTER:
                 print(f"chaos child: killing after {done['n']} chunks", flush=True)
@@ -464,7 +464,7 @@ def _chaos_child(out_dir: str, corpus_dir: str) -> None:
     tr = spark.read.parquet(os.path.join(corpus_dir, "transcripts"))
     ad = spark.read.parquet(os.path.join(corpus_dir, "alias_dict"))
     sa = spark.read.parquet(os.path.join(corpus_dir, "same_as"))
-    ChunkedKGPipeline(spark, out_dir, n_chunks=8, n_buckets=8).run(tr, ad, sa)
+    KGPipeline(spark, out_dir, n_chunks=8, n_buckets=8).run(tr, ad, sa)
     # reaching here means the kill never fired
     sys.exit(0)
 

@@ -23,8 +23,9 @@ See SURVEY.md for the reference operator inventory this covers.
 
 __version__ = "0.1.0"
 
-# convenience top-level API: the two pipelines and the session factory
+# convenience top-level API: the KG and curation pipelines and the
+# session factory
 # (operators stay under wikidata_pq_spark.operators.<family>)
 from .curation_pipeline import CurationPipeline  # noqa: E402,F401
-from .pipeline import ChunkedKGPipeline, KGPipeline  # noqa: E402,F401
+from .pipeline import KGPipeline  # noqa: E402,F401
 from .session import get_spark  # noqa: E402,F401

@@ -826,13 +826,12 @@ def q_kg_mentions(spark, sf):
 
 
 def _kg_linked(spark, mentions, ents, sa):
-    """Mentions linked straight to canonical ids through the alias
-    dictionary composed with the same-as components."""
+    """The distinct canonical triple set of ``mentions``: the pipeline's
+    ``linking.kg_chain`` through the alias dictionary composed with the
+    same-as components."""
     comps = canonicalize.connected_components(spark.createDataFrame(sa))
-    return linking.link_mentions(
-        mentions,
-        canonicalize.apply_canonical(spark.createDataFrame(ents), comps),
-        strategy="broadcast",
+    return linking.kg_chain(
+        mentions, canonicalize.apply_canonical(spark.createDataFrame(ents), comps)
     )
 
 

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import oracle
+
 
 def salted_equi_join(
     probe: DataFrame,
@@ -106,6 +108,22 @@ def link_mentions(
     if "ts" in mentions.columns:
         cols.append("ts")
     return out.select(*cols)
+
+
+def kg_chain(
+    mentions: DataFrame, canon_dict: DataFrame, strategy: str = "broadcast"
+) -> DataFrame:
+    """Mentions -> the distinct canonical triple set (``TRIPLE_COLUMNS``
+    plus ``obj_kind``): the one link-and-dedup chain the pipeline, the
+    contract cells and the streaming flow share. ``canon_dict`` is the
+    alias dictionary composed by ``canonicalize.apply_canonical``, so
+    mentions resolve straight to canonical ids. A turn that asserts one
+    triple twice yields one row, as in the oracle."""
+    return (
+        link_mentions(mentions, canon_dict, strategy=strategy)
+        .select(*oracle.TRIPLE_COLUMNS, "obj_kind")
+        .distinct()
+    )
 
 
 def char_ngram_set(s_col, n: int = 3):

@@ -1,33 +1,34 @@
 """End-to-end transcript -> knowledge-graph pipeline (resumable).
 
-Stage graph (each stage gated by the checkpoint store, outputs written
-as partitioned parquet with audit sidecars -- the Spark re-expression of
-the reference's PULL->PROCESS->PARTITION->PUSH->POST_CHECK->COMPLETE
-state machine, reference: state.py:11-18, main.py:61-136):
+The corpus splits into ``n_chunks`` units by conversation hash, each
+with its own checkpoint unit -- the reference's one state file per
+source file (reference: state.py:11-18, main.py:61-136): a killed run
+re-does only the unit it died in. Stage graph, per unit kind:
 
-  INIT          -> read transcripts (Iceberg/parquet)
-  EXTRACTED     -> Catalyst regex mention extraction
-  LINKED        -> connected components composed into the alias dict;
-                   broadcast/salted join links to canonical ids; the
-                   triples are written once, as ``edges`` bucketed by
-                   subject hash with an audit sidecar
-  MATERIALIZED  -> ``nodes`` (distinct entity ids) derived from ``edges``
-  VERIFIED      -> post-check: each sink's recomputed audit vs its sidecar
-  COMPLETE
-
-A unit an older run left at exactly LINKED has ``triples`` but no
-``edges``; MATERIALIZED fails on the missing ``edges`` path (delete the
-output dir and re-run).
+  _staging      (n_chunks > 1 only) the input written once, partitioned
+                by chunk; each chunk then reads one partition
+  chunk_NNNNN   LINKED: extract -> link to canonical ids -> distinct
+                (``linking.kg_chain``), written once as
+                ``edges/chunk=i/bucket=b`` with its sidecar at
+                ``edges_audit/chunk=i``. The first LINKED unit of a run
+                that still has work computes the same-as components,
+                writes ``components`` and composes them into the alias
+                dictionary; later units reuse that dictionary.
+  corpus        MATERIALIZED: ``nodes`` (distinct entity ids) from all
+                of ``edges``
+                VERIFIED: post-check of every chunk sink and ``nodes``
+                against its sidecar
+                COMPLETE
 
 Every stage is idempotent: re-running a completed stage is a no-op
-(skip gate), and a killed run resumes from its last persisted stage.
+(skip gate), and a completed store re-runs without a Spark job.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,7 +36,10 @@ from .operators import canonicalize, extract, linking
 from .plans.checkpoint import StateStore, Step
 from .sources import tableio
 
-UNIT = "corpus"  # single-unit pipeline; per-chunk units at scale
+CORPUS = "corpus"  # the unit that owns the corpus-wide stages
+# directories of the layouts before chunk units: resuming one would mix
+# old and new chunks, so the pipeline refuses such an out_dir
+OLD_LAYOUT_DIRS = ("mentions", "triples")
 
 
 def _row_count(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -45,15 +49,28 @@ def _row_count(df: DataFrame) -> tuple[DataFrame, Observation]:
 
 
 class KGPipeline:
+    """Chunk-granular resumable KG pipeline.
+
+    Canonicalization is corpus-global but depends only on the same_as
+    INPUT, not on chunk outputs, so the component map is composed into
+    the alias dictionary once per run and shared by every chunk -- the
+    analogue of the reference's remote-listing cache
+    (size_verification.py:20-24). At ``n_chunks=1`` the single chunk
+    reads ``transcripts`` directly; above that the input is staged once,
+    partitioned by chunk, so each chunk reads only its own partition.
+    """
+
     def __init__(
         self,
         spark: SparkSession,
         out_dir: str,
+        n_chunks: int = 1,
         n_buckets: int = 16,
         link_strategy: str = "broadcast",
     ):
         self.spark = spark
         self.out_dir = out_dir
+        self.n_chunks = n_chunks
         self.n_buckets = n_buckets
         self.link_strategy = link_strategy
         self.state = StateStore(os.path.join(out_dir, "_state"))
@@ -62,6 +79,20 @@ class KGPipeline:
     def path(self, name: str) -> str:
         return os.path.join(self.out_dir, name)
 
+    def units(self) -> list[str]:
+        return [f"chunk_{i:05d}" for i in range(self.n_chunks)]
+
+    def _sink(self, i: int) -> tuple[str, str]:
+        """(data, sidecar) paths of chunk ``i``'s slice of ``edges``."""
+        return (
+            os.path.join(self.path("edges"), f"chunk={i}"),
+            os.path.join(self.path("edges_audit"), f"chunk={i}"),
+        )
+
+    @staticmethod
+    def chunk_col(n_chunks: int):
+        return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_chunks)).cast("int")
+
     # -- stages --------------------------------------------------------
     def run(
         self,
@@ -69,37 +100,63 @@ class KGPipeline:
         alias_dict: DataFrame,
         same_as: DataFrame,
     ) -> dict:
-        """Run (or resume) the full pipeline; returns stage metrics."""
-        st, unit = self.state, UNIT
-        metrics: dict = {}
+        """Run (or resume) the pipeline; returns the ``mentions`` and
+        ``linked`` rows summed over chunks, and the ``nodes`` rows."""
+        st = self.state
+        old = [d for d in OLD_LAYOUT_DIRS if os.path.isdir(self.path(d))]
+        if old:
+            raise RuntimeError(
+                f"KGPipeline: {self.out_dir} holds {old}, the layout of an "
+                "older pipeline; resuming it would mix old and new chunks. "
+                "Delete the output dir and re-run."
+            )
 
-        if st.gate(unit, Step.EXTRACTED):
-            mentions, rows = _row_count(extract.extract_mentions(transcripts))
-            mentions.write.mode("overwrite").parquet(self.path("mentions"))
-            st.set(unit, Step.EXTRACTED, mentions=rows.get["rows"])
-        metrics["mentions"] = st.metrics(unit).get("mentions")
-
-        if st.gate(unit, Step.LINKED):
-            mentions = self.spark.read.parquet(self.path("mentions"))
+        @functools.cache
+        def canon_dict() -> DataFrame:
             comps = canonicalize.connected_components(same_as)
-            canon_dict = canonicalize.apply_canonical(alias_dict, comps)
-            edges, rows = _row_count(
-                linking.link_mentions(
-                    mentions, canon_dict, strategy=self.link_strategy
-                ).withColumn("bucket", tableio.bucket_column("subj", self.n_buckets))
-            )
-            tableio.write_with_audit(
-                edges, self.path("edges"), ["bucket"], id_col="subj",
-                source=("source", UNIT),
-            )
             comps.write.mode("overwrite").parquet(self.path("components"))
-            n = rows.get["rows"]
-            st.set(unit, Step.LINKED, mentions=metrics["mentions"], linked=n)
-        metrics["linked"] = st.metrics(unit).get("linked")
+            return canonicalize.apply_canonical(alias_dict, comps)
 
-        if st.gate(unit, Step.MATERIALIZED):
+        staged = self.path("staged")
+        if self.n_chunks > 1 and st.gate("_staging", Step.COMPLETE):
+            transcripts.withColumn(
+                "_chunk", self.chunk_col(self.n_chunks)
+            ).write.mode("overwrite").partitionBy("_chunk").parquet(staged)
+            st.set("_staging", Step.COMPLETE)
+
+        for i, unit in enumerate(self.units()):
+            if not st.gate(unit, Step.LINKED):
+                continue
+            turns = transcripts
+            if self.n_chunks > 1:
+                # partitionBy writes NO directory for an empty chunk
+                # (skewed conv_id hash at small n): read it as empty
+                part = os.path.join(staged, f"_chunk={i}")
+                turns = (
+                    self.spark.read.parquet(part) if os.path.isdir(part)
+                    else transcripts.filter(F.lit(False))
+                )
+            mentions, n_mentions = _row_count(extract.extract_mentions(turns))
+            edges, n_linked = _row_count(
+                linking.kg_chain(mentions, canon_dict(), self.link_strategy)
+                .withColumn("bucket", tableio.bucket_column("subj", self.n_buckets))
+            )
+            path, audit = self._sink(i)
+            tableio.write_with_audit(
+                edges, path, ["bucket"], id_col="subj",
+                source=("chunk", i), audit_path=audit,
+            )
+            st.set(
+                unit, Step.LINKED,
+                mentions=n_mentions.get["rows"], linked=n_linked.get["rows"],
+            )
+
+        chunks = [st.metrics(u) for u in self.units()]
+        metrics = {k: sum(m[k] for m in chunks) for k in ("mentions", "linked")}
+
+        if st.gate(CORPUS, Step.MATERIALIZED):
             edges = self.edges()
-            nodes, rows = _row_count(
+            nodes, n_nodes = _row_count(
                 edges.select(F.col("subj").alias("entity_id"))
                 .union(
                     edges.filter(F.col("obj_kind") == "entity").select(
@@ -111,32 +168,38 @@ class KGPipeline:
             )
             tableio.write_with_audit(
                 nodes, self.path("nodes"), ["bucket"], id_col="entity_id",
-                source=("source", UNIT),
+                source=("source", CORPUS),
             )
-            st.set(
-                unit, Step.MATERIALIZED, **{**st.metrics(unit), "nodes": rows.get["rows"]}
-            )
+            st.set(CORPUS, Step.MATERIALIZED, **metrics, nodes=n_nodes.get["rows"])
+        metrics["nodes"] = st.metrics(CORPUS)["nodes"]
 
-        if st.gate(unit, Step.VERIFIED):
-            ok_e = tableio.post_check(
-                self.spark, self.path("edges"), ["bucket"], "subj",
-                source=("source", UNIT),
-            )
-            ok_n = tableio.post_check(
-                self.spark, self.path("nodes"), ["bucket"], "entity_id",
-                source=("source", UNIT),
-            )
-            if not (ok_e and ok_n):
+        if st.gate(CORPUS, Step.VERIFIED):
+            if not self.post_check():
                 raise RuntimeError("post-check failed: sink != audit sidecar")
-            st.set(unit, Step.VERIFIED, **st.metrics(unit))
+            st.set(CORPUS, Step.VERIFIED, **metrics)
 
-        st.set(unit, Step.COMPLETE, **st.metrics(unit))
-        metrics.update(st.metrics(unit))
+        st.set(CORPUS, Step.COMPLETE, **metrics)
         return metrics
+
+    def post_check(self) -> bool:
+        """Every chunk's slice of ``edges`` and the ``nodes`` table match
+        their sidecars -- the reference's post-check over per-source
+        sidecars (reference: DESIGN.md:95-112)."""
+        for i in range(self.n_chunks):
+            path, audit = self._sink(i)
+            if not tableio.post_check(
+                self.spark, path, ["bucket"], "subj",
+                source=("chunk", i), audit_path=audit,
+            ):
+                return False
+        return tableio.post_check(
+            self.spark, self.path("nodes"), ["bucket"], "entity_id",
+            source=("source", CORPUS),
+        )
 
     # -- results -------------------------------------------------------
     def triples(self) -> DataFrame:
-        return self.edges().drop("bucket")
+        return self.edges().drop("chunk", "bucket")
 
     def edges(self) -> DataFrame:
         return self.spark.read.parquet(self.path("edges"))
@@ -193,172 +256,3 @@ def partition_entity_tables(
             source=("source", source_name), audit_path=audit,
         )
     return results
-
-
-class ChunkedKGPipeline:
-    """Chunk-granular resumable pipeline -- the faithful analogue of the
-    reference's FILE-granular state machine (reference: state.py:11-18
-    one JSONL per source file; main.py:65 chunk loop; process.py:279-282
-    skip-if-done): the corpus splits into n_chunks by conversation hash,
-    each chunk runs extract -> link (straight to canonical ids) -> append
-    independently with its own checkpoint unit and lineage row, and a
-    killed run resumes at the first incomplete chunk with completed
-    chunks untouched.
-
-    Canonicalization is corpus-global but depends only on the same_as
-    INPUT (not on chunk outputs), so the component map is composed into
-    the alias dictionary once up front and shared by every chunk -- the
-    analogue of the reference's remote-listing cache
-    (size_verification.py:20-24).
-
-    At scale the chunk column is the Iceberg partition of the input
-    table, so each chunk's read is a partition-pruned scan of the input
-    itself rather than of a staged copy.
-    """
-
-    def __init__(
-        self, spark: SparkSession, out_dir: str, n_chunks: int = 8, n_buckets: int = 8
-    ):
-        self.spark = spark
-        self.out_dir = out_dir
-        self.n_chunks = n_chunks
-        self.n_buckets = n_buckets
-        self.state = StateStore(os.path.join(out_dir, "_state"))
-
-    def path(self, name: str) -> str:
-        return os.path.join(self.out_dir, name)
-
-    def _audit_path(self, chunk: int) -> str:
-        return os.path.join(self.path("audit"), f"chunk={chunk}")
-
-    @staticmethod
-    def chunk_col(n_chunks: int):
-        return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_chunks)).cast("int")
-
-    def post_check(self) -> bool:
-        """Verify every completed chunk's sink against its (chunk x
-        bucket) sidecar -- the reference's post-check over per-source
-        sidecars (reference: DESIGN.md:95-112)."""
-        ok = True
-        for i in range(self.n_chunks):
-            unit = f"chunk_{i:05d}"
-            if self.state.gate(unit, Step.COMPLETE):
-                continue  # incomplete chunk: nothing to verify
-            ok = ok and tableio.post_check(
-                self.spark,
-                os.path.join(self.path("triples"), f"chunk={i}"),
-                ["bucket"],
-                "subj",
-                source=("chunk", i),
-                audit_path=self._audit_path(i),
-            )
-        return ok
-
-    def run(
-        self,
-        transcripts: DataFrame,
-        alias_dict: DataFrame,
-        same_as: DataFrame,
-        fail_after_chunk: int | None = None,
-    ) -> dict:
-        """Process all incomplete chunks; returns {chunk: rows} lineage.
-
-        ``fail_after_chunk`` injects a crash after that chunk completes
-        (for kill/resume tests -- the reference's resumability is
-        exactly this property, DESIGN.md:119-129).
-
-        The corpus is staged ONCE partitioned by chunk (a checkpointed
-        stage a resumed run skips), so each chunk is a partition-pruned
-        read instead of a filtered full scan.
-        """
-        # resume guard against a sink written by an older triple schema
-        # (r5 added ts): completed chunks would silently mix 5- and
-        # 6-column footers -- plain parquet reads pick ONE schema, so
-        # either ts vanishes or old assertions read as null-ts and lose
-        # every recency comparison. Refuse loudly instead.
-        existing = self.path("triples")
-        if os.path.isdir(existing):
-            try:
-                old_cols = set(self.spark.read.parquet(existing).columns)
-            except AnalysisException as e:
-                # ONLY the empty-sink shapes mean "nothing to guard": a
-                # dir with no part files (schema inference fails) or a
-                # vanished path. A corrupt / partially-written sink
-                # raises something else and MUST propagate -- swallowing
-                # it would resume into exactly the mixed-schema state
-                # this guard exists to prevent.
-                cond = getattr(e, "getErrorClass", lambda: None)() or str(e)
-                if "UNABLE_TO_INFER_SCHEMA" in cond or "PATH_NOT_FOUND" in cond:
-                    old_cols = None
-                else:
-                    raise
-            if old_cols is not None and "ts" not in old_cols:
-                raise RuntimeError(
-                    "ChunkedKGPipeline: existing sink at "
-                    f"{existing} was written WITHOUT the ts column "
-                    "(pre-wall-clock schema); resuming would mix "
-                    "schemas across chunks. Delete the output dir (or "
-                    "migrate the old chunks) and re-run."
-                )
-
-        # alias -> canonical id, composed once and shared by every chunk
-        canon_dict = canonicalize.apply_canonical(
-            alias_dict, canonicalize.connected_components(same_as)
-        ).localCheckpoint()
-        if self.state.gate("_staging", Step.COMPLETE):
-            transcripts.withColumn(
-                "_chunk", self.chunk_col(self.n_chunks)
-            ).write.mode("overwrite").partitionBy("_chunk").parquet(self.path("staged"))
-            self.state.set("_staging", Step.COMPLETE)
-
-        lineage: dict = {}
-        units = [f"chunk_{i:05d}" for i in range(self.n_chunks)]
-        for i, unit in enumerate(units):
-            if not self.state.gate(unit, Step.COMPLETE):
-                lineage[i] = self.state.metrics(unit).get("rows")
-                continue
-            # partitionBy writes NO directory for an empty chunk (skewed
-            # conv_id hash at small n): read it as empty, so the unit is
-            # marked COMPLETE with rows=0 instead of failing PATH_NOT_FOUND
-            chunk_dir = os.path.join(self.path("staged"), f"_chunk={i}")
-            if os.path.isdir(chunk_dir):
-                part = self.spark.read.parquet(chunk_dir)
-            else:
-                part = transcripts.filter(F.lit(False))
-            mentions = extract.extract_mentions(part)
-            triples, rows = _row_count(
-                linking.link_mentions(mentions, canon_dict)
-                .select("subj", "pred", "obj", "conv_id", "turn_idx", "ts")
-                .distinct()
-                .withColumn("chunk", F.lit(i))
-                .withColumn("bucket", tableio.bucket_column("subj", self.n_buckets))
-            )
-            # per-unit sidecar keyed (chunk, bucket) under a shared
-            # audit/ tree -- the reference's per-(source x table)
-            # sidecar layout (reference: partitioning/core.py:14-35)
-            chunk_dir = os.path.join(self.path("triples"), f"chunk={i}")
-            tableio.write_with_audit(
-                triples, chunk_dir, ["bucket"], id_col="subj",
-                source=("chunk", i),
-                audit_path=self._audit_path(i),
-            )
-            n = rows.get["rows"]  # = the sidecar's rows total
-            self.state.set(unit, Step.COMPLETE, rows=n)
-            lineage[i] = n
-            if fail_after_chunk is not None and i >= fail_after_chunk:
-                raise RuntimeError(f"injected failure after chunk {i}")
-        # lineage table: per-chunk row counts (sidecar analogue,
-        # reference: core.py:25-35)
-        rows = [(int(i), int(n)) for i, n in lineage.items() if n is not None]
-        self.spark.createDataFrame(rows, "chunk int, rows bigint").write.mode(
-            "overwrite"
-        ).parquet(self.path("lineage"))
-        return lineage
-
-    def triples(self) -> DataFrame:
-        return self.spark.read.option("basePath", self.path("triples")).parquet(
-            self.path("triples") + "/chunk=*"
-        )
-
-    def incomplete(self) -> list[str]:
-        return self.state.incomplete([f"chunk_{i:05d}" for i in range(self.n_chunks)])

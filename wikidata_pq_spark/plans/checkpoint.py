@@ -21,6 +21,8 @@ from enum import IntEnum
 
 class Step(IntEnum):
     INIT = 0
+    # unused since LINKED extracts and links in one write; kept because
+    # state files store the int
     EXTRACTED = 1
     LINKED = 2
     # unused since LINKED writes canonical triples; kept because state

@@ -6,7 +6,8 @@ process.py:279-282, DESIGN.md:119-129). The Spark-native upgrade is
 Structured Streaming with checkpointed exactly-once sinks:
 
 - ``incremental_extract``: readStream over a transcripts directory ->
-  ``foreachBatch`` running the SAME batch extraction + linking per
+  ``foreachBatch`` running the SAME batch chain (extraction, then
+  ``linking.kg_chain`` through the canonical dictionary) per
   micro-batch -> append parquet. The streaming checkpoint replaces the
   reference's JSONL step files: a killed job resumes from the last
   committed batch with no duplicate output.
@@ -61,14 +62,18 @@ def stream_transcripts(
 
 def incremental_extract(
     stream: DataFrame,
-    alias_dict: DataFrame,
+    canon_dict: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
 ):
     """Start an availableNow foreachBatch pipeline; returns the query.
 
     Each micro-batch runs the identical batch operators (no separate
-    streaming code path to drift), appending linked triples to parquet.
+    streaming code path to drift), appending canonical triples to
+    parquet. ``canon_dict`` is the alias dictionary composed with the
+    same-as components (``canonicalize.apply_canonical``), as in
+    ``KGPipeline``. Micro-batches hold whole conversations, so the
+    per-batch distinct is the corpus-wide one.
     """
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -79,10 +84,9 @@ def incremental_extract(
         # partition, never touching committed epochs (the Spark-native
         # form of the reference's skip-if-done step gates, reference:
         # process.py:279-282).
-        mentions = extract.extract_mentions(batch_df)
-        linked = linking.link_mentions(mentions, alias_dict, strategy="broadcast")
+        triples = linking.kg_chain(extract.extract_mentions(batch_df), canon_dict)
         (
-            linked.withColumn("epoch", F.lit(epoch_id))
+            triples.withColumn("epoch", F.lit(epoch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("epoch")
