@@ -9,50 +9,54 @@ from wikidata_pq_spark import datagen, oracle
 from wikidata_pq_spark.operators import canonicalize, extract, linking
 
 
-DT = [0, 200_000]  # 0 = force distributed label propagation; big = driver union-find
+# both paths behind connected_components' size switch
+PATHS = [
+    pytest.param(canonicalize._distributed_components, id="distributed"),
+    pytest.param(canonicalize._driver_components, id="driver"),
+]
 
 
-def _cc(spark, edges: list[tuple[str, str]], dt: int = 0) -> dict[str, str]:
+def _cc(spark, edges: list[tuple[str, str]], path=canonicalize._distributed_components):
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["src_id", "dst_id"]))
-    out = canonicalize.connected_components(df, driver_threshold=dt).toPandas()
+    out = path(df).toPandas()
     return dict(zip(out["entity_id"], out["canonical_id"]))
 
 
-@pytest.mark.parametrize("dt", DT)
-def test_chain(spark, dt):
-    comp = _cc(spark, [("Q1", "Q2"), ("Q2", "Q3"), ("Q3", "Q4")], dt)
+@pytest.mark.parametrize("path", PATHS)
+def test_chain(spark, path):
+    comp = _cc(spark, [("Q1", "Q2"), ("Q2", "Q3"), ("Q3", "Q4")], path)
     assert comp == {"Q1": "Q1", "Q2": "Q1", "Q3": "Q1", "Q4": "Q1"}
 
 
 def test_long_chain_pointer_jumping(spark):
     """A 40-deep chain converges well under the 25-iteration cap."""
     edges = [(f"Q{i}", f"Q{i+1}") for i in range(1, 41)]
-    comp = _cc(spark, edges, 0)
+    comp = _cc(spark, edges)
     assert set(comp.values()) == {"Q1"}
     assert len(comp) == 41
 
 
-@pytest.mark.parametrize("dt", DT)
-def test_star_and_singleton_components(spark, dt):
+@pytest.mark.parametrize("path", PATHS)
+def test_star_and_singleton_components(spark, path):
     comp = _cc(
-        spark, [("Q10", "Q5"), ("Q10", "Q7"), ("Q10", "Q20"), ("Q100", "Q101")], dt
+        spark, [("Q10", "Q5"), ("Q10", "Q7"), ("Q10", "Q20"), ("Q100", "Q101")], path
     )
     assert comp["Q10"] == "Q5" and comp["Q7"] == "Q5" and comp["Q20"] == "Q5"
     assert comp["Q100"] == "Q100" and comp["Q101"] == "Q100"
 
 
-@pytest.mark.parametrize("dt", DT)
-def test_numeric_aware_min(spark, dt):
+@pytest.mark.parametrize("path", PATHS)
+def test_numeric_aware_min(spark, path):
     # string-min would pick "Q10" over "Q2"; numeric-aware must pick Q2
-    comp = _cc(spark, [("Q10", "Q2")], dt)
+    comp = _cc(spark, [("Q10", "Q2")], path)
     assert comp == {"Q10": "Q2", "Q2": "Q2"}
 
 
-@pytest.mark.parametrize("dt", DT)
-def test_matches_union_find_on_generated_edges(spark, dt):
+@pytest.mark.parametrize("path", PATHS)
+def test_matches_union_find_on_generated_edges(spark, path):
     sa = datagen.gen_same_as(200)
     golden = oracle.union_find_components(sa)
-    got = _cc(spark, list(zip(sa["src_id"], sa["dst_id"])), dt)
+    got = _cc(spark, list(zip(sa["src_id"], sa["dst_id"])), path)
     assert got == golden
 
 

@@ -52,29 +52,24 @@ def test_k_hop_undirected(edges, spark):
 
 def test_k_hop_cyclic_ring_chords_frontier_pruned(spark):
     """Ring 0->1->...->7->0 plus chords 0->4, 2->6: results equal true
-    BFS min-hops AND each hop's frontier contains only never-seen
-    nodes (no re-expansion of finalized nodes on a cyclic graph)."""
+    BFS min-hops, and every node is reached exactly once (no
+    re-expansion of finalized nodes on a cyclic graph)."""
     ring = [(f"N{i}", f"N{(i + 1) % 8}") for i in range(8)]
     chords = [("N0", "N4"), ("N2", "N6")]
     edges = spark.createDataFrame(
         pd.DataFrame(ring + chords, columns=["src_id", "dst_id"])
     )
     seeds = spark.createDataFrame(pd.DataFrame({"node_id": ["N0"]}))
-    sizes: list = []
-    got = dict(
-        graph.k_hop(edges, seeds, k=8, _frontier_sizes=sizes)
-        .toPandas()[["node_id", "hop"]]
-        .values
-    )
+    out = graph.k_hop(edges, seeds, k=8).toPandas()
+    # without the anti-join prune the cycle re-expands old nodes: they
+    # come back at later hops (the seed too), as duplicate node_ids
+    assert out["node_id"].is_unique
     # true BFS distances from N0 with the chords
-    assert got == {
+    assert dict(out[["node_id", "hop"]].values) == {
         "N1": 1, "N4": 1, "N2": 2, "N5": 2, "N3": 3, "N6": 3, "N7": 4
     }
-    # frontiers: {N1,N4},{N2,N5},{N3,N6},{N7}, then empty forever --
-    # without the anti-join prune the cycle re-expands old nodes and
-    # the frontier never drains
-    assert sizes == [2, 2, 2, 1, 0, 0, 0, 0]
-    assert sum(sizes) == 7  # every non-seed node expanded exactly once
+    # frontiers {N1,N4},{N2,N5},{N3,N6},{N7}, then empty
+    assert out["hop"].value_counts().to_dict() == {1: 2, 2: 2, 3: 2, 4: 1}
 
 
 def test_k_hop_cycle_terminates(spark):
@@ -656,10 +651,11 @@ def test_lpa_two_cliques_form_two_communities(spark):
 
 
 def test_lpa_early_exit_equals_fixed_rounds(spark):
-    """r8 early-exit returns EXACTLY the fixed-round labels on both an
-    oscillating (bipartite path: period-2 cycle, both remaining-round
-    parities) and a converging (clique: fixed point) graph."""
-    from wikidata_pq_spark.operators import graph
+    """Stopping early returns EXACTLY the fixed-round labels of the
+    independent python replay, on an oscillating (bipartite path:
+    period-2 cycle, both remaining-round parities) and a converging
+    (clique: fixed point) graph."""
+    from wikidata_pq_spark import oracle as kg_oracle
 
     # bipartite-ish path graph oscillates under synchronous LPA
     path = [(f"P{i}", f"P{i+1}") for i in range(8)]
@@ -670,16 +666,47 @@ def test_lpa_early_exit_equals_fixed_rounds(spark):
     for edges in (path, clique, path + clique):
         sdf = spark.createDataFrame(edges, "src_id string, dst_id string")
         for iters in (7, 10):  # odd and even remaining-round parity
-            fixed = {
+            ref = kg_oracle.lpa_reference(
+                pd.DataFrame(edges, columns=["subj", "obj"]), iters=iters
+            )
+            got = {
                 (r.node_id, r.label)
-                for r in graph.label_propagation(
-                    sdf, iters=iters, early_exit=False
-                ).collect()
+                for r in graph.label_propagation(sdf, iters=iters).collect()
             }
-            fast = {
-                (r.node_id, r.label)
-                for r in graph.label_propagation(
-                    sdf, iters=iters, early_exit=True
-                ).collect()
-            }
-            assert fast == fixed, (iters, len(edges))
+            assert got == set(zip(ref["node_id"], ref["label"])), (iters, len(edges))
+
+
+def _ring_with_chords(n: int = 64) -> list[tuple[str, str]]:
+    """An n-node ring plus a chord i -> i+7 from every 4th node."""
+    ring = [(f"R{i}", f"R{(i + 1) % n}") for i in range(n)]
+    return ring + [(f"R{i}", f"R{(i + 7) % n}") for i in range(0, n, 4)]
+
+
+@pytest.mark.classic_session_only
+@pytest.mark.parametrize("case", ["cc_chain40", "lpa_ring10"])
+def test_keyed_iterate_build_jobs(spark, case):
+    """Bounds the Spark jobs a keyed fixpoint launches while its frame
+    is built: one eager checkpoint per round, with the change count
+    observed on that same job. Before the rounds moved onto
+    ``graph.iterate``, which ran a separate convergence action per
+    round, distributed CC on the 40-chain launched 74 jobs and LPA
+    (iters=10) on the 80-edge ring 120; on ``iterate`` they launch 47
+    and 79 (local[4], 4 shuffle partitions)."""
+    from wikidata_pq_spark.operators import canonicalize
+
+    if case == "cc_chain40":
+        chain = [(f"Q{i}", f"Q{i + 1}") for i in range(1, 41)]
+        sdf = spark.createDataFrame(chain, "src_id string, dst_id string")
+        build, bound = lambda: canonicalize._distributed_components(sdf), 60
+    else:
+        sdf = spark.createDataFrame(_ring_with_chords(), "src_id string, dst_id string")
+        build, bound = lambda: graph.label_propagation(sdf, iters=10), 100
+    sc = spark.sparkContext
+    group = f"build_{case}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= bound

@@ -1039,15 +1039,7 @@ def q_partition_stage_audit(spark, sf):
 def q_connected_components(spark, sf):
     """Iterative CC with a closed-form SQL oracle: chain edges over
     customer keys form blocks of 10; canonical = block head."""
-    c = load(spark, sf, "customer")
-    edges = (
-        c.filter(F.col("c_custkey") % 10 != 9)
-        .select(
-            F.concat(F.lit("Q"), F.col("c_custkey")).alias("src_id"),
-            F.concat(F.lit("Q"), F.col("c_custkey") + 1).alias("dst_id"),
-        )
-    )
-    return canonicalize.connected_components(edges)
+    return canonicalize.connected_components(_chain_edges(spark, sf))
 
 
 def q_chunk_dup_spans(spark, sf):

@@ -4,15 +4,14 @@ Iterative min-label propagation with pointer jumping -- the DataFrame
 re-expression of distributed connected components (alternating-star
 family, cf. Kiveris et al. "Connected Components in MapReduce and
 Beyond"). This is the loop-with-state analogue of the reference's chunk
-loop (reference: main.py:65), with ``localCheckpoint()`` truncating plan
-lineage each round exactly where the reference persists its JSONL step
-files (reference: state.py:30-35).
+loop (reference: main.py:65): rounds run on ``graph.iterate``, whose
+eager ``localCheckpoint`` per round sits exactly where the reference
+persists its JSONL step files (reference: state.py:30-35).
 
 Convergence: label propagation alone needs O(diameter) rounds; the
 pointer-jumping step (label := label(label)) halves chain depth each
 round, giving O(log d) rounds -- essential when a same-as chain is long.
-Each round is two shuffles on the label key; counts per round are the
-only driver actions.
+Each round is one job: its checkpoint also counts the changed labels.
 
 Canonical label = component-minimum id under numeric-aware ordering
 ("Q7" < "Q10"), matching the oracle's union-find.
@@ -20,8 +19,12 @@ Canonical label = component-minimum id under numeric-aware ordering
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .graph import iterate
 
 
 def _order_key(col):
@@ -34,38 +37,51 @@ def _order_key(col):
     )
 
 
-def connected_components(
-    same_as: DataFrame,
-    max_iter: int = 25,
-    driver_threshold: int = 200_000,
-) -> DataFrame:
-    """same_as(src_id, dst_id) -> (entity_id, canonical_id).
+DRIVER_MAX_EDGES = 200_000
+MAX_ROUNDS = 25
+
+
+def connected_components(same_as: DataFrame) -> DataFrame:
+    """Runs Spark jobs before it returns (a size probe, then the driver
+    pass or every distributed round): same_as(src_id, dst_id) ->
+    (entity_id, canonical_id).
 
     Returns one row per vertex appearing in any edge. Vertices with no
     edges are their own canonical id (callers simply coalesce missing
     lookups to identity).
 
-    Hybrid strategy: a same-as table below ``driver_threshold`` edges is
-    broadcast-sized, so the driver runs exact union-find in one pass
-    (the analogue of the reference's driver-side metadata ops,
+    Hybrid strategy: a same-as table of at most ``DRIVER_MAX_EDGES``
+    edges is broadcast-sized, so the driver runs exact union-find in one
+    pass (the analogue of the reference's driver-side metadata ops,
     reference: prefetch.py:101) -- iterating Spark jobs over a tiny graph
-    is pure scheduling overhead. Above the threshold, distributed
-    min-label propagation with pointer jumping takes over. Both paths
-    produce identical labels (tested); pass ``driver_threshold=0`` to
-    force the distributed path.
+    is pure scheduling overhead. Above it, distributed min-label
+    propagation with pointer jumping takes over. Both paths produce
+    identical labels (tested).
     """
-    spark = same_as.sparkSession
-    if driver_threshold and same_as.limit(driver_threshold + 1).count() <= driver_threshold:
-        import pandas as pd
+    if same_as.limit(DRIVER_MAX_EDGES + 1).count() <= DRIVER_MAX_EDGES:
+        return _driver_components(same_as)
+    return _distributed_components(same_as)
 
-        from ..oracle import union_find_components
 
-        edges_pd = same_as.select("src_id", "dst_id").toPandas()
-        comp = union_find_components(edges_pd)
-        out = pd.DataFrame(
-            {"entity_id": list(comp.keys()), "canonical_id": list(comp.values())}
-        )
-        return spark.createDataFrame(out, schema="entity_id string, canonical_id string")
+def _driver_components(same_as: DataFrame) -> DataFrame:
+    """Exact union-find over the collected edges."""
+    import pandas as pd
+
+    from ..oracle import union_find_components
+
+    comp = union_find_components(same_as.select("src_id", "dst_id").toPandas())
+    out = pd.DataFrame(
+        {"entity_id": list(comp.keys()), "canonical_id": list(comp.values())}
+    )
+    return same_as.sparkSession.createDataFrame(
+        out, schema="entity_id string, canonical_id string"
+    )
+
+
+def _distributed_components(same_as: DataFrame) -> DataFrame:
+    """Min-label propagation with pointer jumping, in :func:`iterate`'s
+    keyed mode over (v, lbl): at most ``MAX_ROUNDS`` rounds, stopping at
+    the fixed point. Every vertex keeps a row every round."""
     edges = (
         same_as.select(F.col("src_id").alias("a"), F.col("dst_id").alias("b"))
         .union(same_as.select(F.col("dst_id").alias("a"), F.col("src_id").alias("b")))
@@ -77,51 +93,36 @@ def connected_components(
         edges.select(F.col("a").alias("v"))
         .distinct()
         .withColumn("lbl", _order_key(F.col("v")))
-    ).localCheckpoint()
-
-    for _ in range(max_iter):
-        # 1) neighbor-min: each vertex receives the label of each neighbor
-        msgs = (
-            edges.join(labels.withColumnRenamed("v", "b"), "b")
-            .select(F.col("a").alias("v"), "lbl")
-        )
-        new_labels = (
-            labels.select("v", "lbl")
-            .union(msgs)
-            .groupBy("v")
-            .agg(F.min("lbl").alias("lbl"))
-        )
-        # 2) pointer jumping: lbl(v) := lbl(lbl(v))
-        jump_src = new_labels.select(
-            F.col("v"), F.col("lbl.k2").alias("_parent")
-        )
-        parent_lbl = new_labels.select(
-            F.col("v").alias("_parent"), F.col("lbl").alias("_plbl")
-        )
-        jumped = (
-            jump_src.join(parent_lbl, "_parent", "left")
-            .select("v", F.col("_plbl").alias("lbl"))
-        )
-        # a parent that is not itself a vertex (component minimum that
-        # never appears as a key) keeps the direct label
-        jumped = jumped.join(new_labels.withColumnRenamed("lbl", "_direct"), "v")
-        jumped = jumped.select(
-            "v", F.coalesce("lbl", "_direct").alias("lbl")
-        ).localCheckpoint()
-
-        changed = (
-            jumped.alias("n")
-            .join(labels.alias("o"), "v")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .limit(1)
-            .count()
-        )
-        labels = jumped
-        if changed == 0:
-            break
-
+    )
+    labels = iterate(labels, partial(_cc_round, edges), MAX_ROUNDS, key="v")
     return labels.select(
         F.col("v").alias("entity_id"), F.col("lbl.k2").alias("canonical_id")
+    )
+
+
+def _cc_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """One round: neighbor-min, then one pointer jump. (v, lbl) -> (v, lbl)."""
+    # 1) neighbor-min: each vertex receives the label of each neighbor
+    msgs = (
+        edges.join(labels.withColumnRenamed("v", "b"), "b")
+        .select(F.col("a").alias("v"), "lbl")
+    )
+    new_labels = (
+        labels.select("v", "lbl")
+        .union(msgs)
+        .groupBy("v")
+        .agg(F.min("lbl").alias("lbl"))
+    )
+    # 2) pointer jumping: lbl(v) := lbl(lbl(v))
+    parent_lbl = new_labels.select(
+        F.col("v").alias("_parent"), F.col("lbl").alias("_plbl")
+    )
+    # a parent that is not itself a vertex (component minimum that
+    # never appears as a key) keeps the direct label
+    return (
+        new_labels.select("v", "lbl", F.col("lbl.k2").alias("_parent"))
+        .join(parent_lbl, "_parent", "left")
+        .select("v", F.coalesce("_plbl", "lbl").alias("lbl"))
     )
 
 

@@ -1,21 +1,25 @@
 """Graph queries over the materialized KG (nodes/edges).
 
 Beyond canonicalization (connected components, canonicalize.py), a KG
-consumer needs neighborhood and degree queries. Both are plain
-DataFrame ops:
+consumer needs neighborhood, degree and ranking queries:
 
 - degrees: one groupBy per direction (map-side combined).
+- iterate: the one round loop of k_hop, PageRank, label propagation
+  and distributed CC.
 - k_hop: k bounded equi-joins from a seed frontier -- the standard
   distributed BFS expansion. The frontier is deduplicated per hop
   (distinct), so fan-out is bounded by |reachable set| per hop, and k
-  is a small constant (2-4 in practice) -- never an unbounded loop at
-  query time. At 100 TB, edges bucketed by src (tableio's bucket
-  column / Iceberg bucket(N, subj)) make every hop a co-located join.
+  is a small constant (2-4 in practice). At 100 TB, edges bucketed by
+  src (tableio's bucket column / Iceberg bucket(N, subj)) make every
+  hop a co-located join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import partial
+from typing import Callable
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -41,6 +45,59 @@ def degrees(edges: DataFrame, src: str = "src_id", dst: str = "dst_id") -> DataF
     )
 
 
+def iterate(
+    init: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    max_iter: int,
+    key: str | None = None,
+) -> DataFrame:
+    """The one fixpoint loop: ``step`` over a state frame for at most
+    ``max_iter`` rounds. Keyed mode runs Spark jobs, one per round.
+
+    Fixed-round mode (``key=None``) runs exactly ``max_iter`` rounds and
+    no job; a lazy ``localCheckpoint`` per round keeps the plan tree
+    from doubling when a round reads its input twice.
+
+    Keyed mode: ``init`` has one row per ``key``, and keys never
+    disappear between rounds (the joins are inner). A round is one
+    eager ``localCheckpoint`` of the new state joined on ``key`` with
+    the two previous ones; an ``Observation`` on it counts the rows
+    that differ from each. It stops at a fixed point, or at a period-2
+    cycle (state(t) == state(t-2)): ``step`` is pure, so the states
+    alternate and the one round ``max_iter`` reaches is chosen by
+    parity. A monotone step (min-label CC) hits its fixed point first,
+    so the rule is exact for it too. Returns (key, *state columns).
+    """
+    if key is None:
+        state = init
+        for _ in range(max_iter):
+            state = step(state).localCheckpoint(eager=False)
+        return state
+    cols = [c for c in init.columns if c != key]
+    state = init
+    # the previous state (_v1) and the one before it (_v2)
+    hist = init.select(key, F.struct(*cols).alias("_v1"), F.lit(None).alias("_v2"))
+    diff = [
+        F.count(F.when(~F.col("_v0").eqNullSafe(F.col(v)), 1)).alias(v)
+        for v in ("_v1", "_v2")
+    ]
+    for i in range(1, max_iter + 1):
+        obs = Observation()
+        cur = (
+            step(state).select(key, F.struct(*cols).alias("_v0"))
+            .join(hist, key)
+            .observe(obs, *diff)
+            .localCheckpoint()
+        )
+        state, changed = cur.select(key, "_v0.*"), obs.get
+        if changed["_v1"] == 0:
+            return state
+        if changed["_v2"] == 0:
+            return state if (max_iter - i) % 2 == 0 else cur.select(key, "_v1.*")
+        hist = cur.select(key, F.col("_v0").alias("_v1"), F.col("_v1").alias("_v2"))
+    return state
+
+
 def k_hop(
     edges: DataFrame,
     seeds: DataFrame,
@@ -48,55 +105,56 @@ def k_hop(
     src: str = "src_id",
     dst: str = "dst_id",
     directed: bool = True,
-    truncate_lineage: bool = True,
-    _frontier_sizes: list | None = None,
 ) -> DataFrame:
     """All nodes reachable from ``seeds(node_id)`` in 1..k hops, with
     the minimum hop count: (node_id, hop).
 
-    Frontier expansion: hop h's frontier joins the edge table once; the
-    reached set accumulates with a min-hop union-aggregate. Seeds are
-    hop 0 and excluded from the output (reachability, not closure).
+    Frontier expansion: each hop joins the frontier with the edge table
+    once; the reached set accumulates each node at its first hop. Seeds
+    are hop 0 and excluded from the output (reachability, not closure).
+    Exactly ``k`` fixed rounds of :func:`iterate`.
     """
+    e = _khop_edges(edges, src, dst, directed)
+    reached = iterate(_khop_init(seeds), partial(_khop_round, e), k)
+    return reached.filter(F.col("hop") > 0).select("node_id", "hop")
+
+
+def _khop_edges(edges: DataFrame, src: str, dst: str, directed: bool) -> DataFrame:
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
     if not directed:
         e = e.union(edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d")))
-    e = e.distinct()
+    return e.distinct()
 
-    frontier = seeds.select(F.col("node_id").alias("_s")).distinct()
-    reached = frontier.select(F.col("_s").alias("node_id"), F.lit(0).alias("hop"))
-    for h in range(1, k + 1):
-        nxt = (
-            frontier.join(e, "_s")
-            .select(F.col("_d").alias("node_id"))
-            .distinct()
-        )
-        # prune: a node whose min-hop is already final must not re-seed
-        # the next frontier -- on cyclic graphs the unpruned frontier
-        # re-joins the same nodes every hop, and the wasted edge-join
-        # volume grows with cycle density at scale. The anti-join keeps
-        # each node in exactly one frontier (its min-hop frontier),
-        # which is the textbook distributed-BFS invariant.
-        #
-        # Lineage control: `fresh` references `reached`, and the next
-        # `reached` references both -- without truncation the plan TREE
-        # doubles per hop (Catalyst plans are trees, not DAGs; the
-        # iterative-join failure mode CC also guards against). Lazy
-        # localCheckpoint per hop keeps the per-hop plan flat and
-        # evaluates `fresh` once for both its consumers.
-        # (truncate_lineage=False exists for plan inspection -- the
-        # audit asserts the per-hop join shape, which a checkpoint
-        # scan would hide.)
-        fresh = nxt.join(reached.select("node_id"), "node_id", "left_anti")
-        if truncate_lineage:
-            fresh = fresh.localCheckpoint(eager=False)
-        if _frontier_sizes is not None:  # test-only instrumentation
-            _frontier_sizes.append(fresh.count())
-        reached = reached.union(fresh.select("node_id", F.lit(h).alias("hop")))
-        if truncate_lineage:
-            reached = reached.localCheckpoint(eager=False)
-        frontier = fresh.select(F.col("node_id").alias("_s"))
-    return reached.filter(F.col("hop") > 0)
+
+def _khop_init(seeds: DataFrame) -> DataFrame:
+    """Round-0 state (node_id, hop, _front): the seeds, as frontier."""
+    return (
+        seeds.select("node_id")
+        .distinct()
+        .select("node_id", F.lit(0).alias("hop"), F.lit(True).alias("_front"))
+    )
+
+
+def _khop_round(e: DataFrame, reached: DataFrame) -> DataFrame:
+    """One BFS hop: the frontier (``_front``) joins the edges, and the
+    nodes not reached before become the next frontier."""
+    nxt = (
+        reached.filter(F.col("_front"))
+        .select(F.col("node_id").alias("_s"), "hop")
+        .join(e, "_s")
+        .select(F.col("_d").alias("node_id"), (F.col("hop") + 1).alias("hop"))
+        .distinct()
+    )
+    # prune: a node whose min-hop is already final must not re-seed
+    # the next frontier -- on cyclic graphs the unpruned frontier
+    # re-joins the same nodes every hop, and the wasted edge-join
+    # volume grows with cycle density at scale. The anti-join keeps
+    # each node in exactly one frontier (its min-hop frontier),
+    # which is the textbook distributed-BFS invariant.
+    fresh = nxt.join(reached.select("node_id"), "node_id", "left_anti")
+    return reached.select("node_id", "hop", F.lit(False).alias("_front")).union(
+        fresh.select("node_id", "hop", F.lit(True).alias("_front"))
+    )
 
 
 def triple_support(triples: DataFrame) -> DataFrame:
@@ -169,9 +227,8 @@ def comention_edges(
     # the gated entity frame feeds BOTH self-join legs (and the audit);
     # without truncation the (possibly expensive) upstream mention plan
     # PLUS the windowed count is evaluated once per consumer -- 4x+.
-    # Lazy checkpoint AFTER the window pays both exactly once (the
-    # k_hop/CC discipline; truncate_lineage=False exists for plan
-    # inspection, same as k_hop).
+    # Lazy checkpoint AFTER the window pays both exactly once
+    # (truncate_lineage=False exists for plan inspection).
     if truncate_lineage:
         ents = ents.localCheckpoint(eager=False)
     audit = (
@@ -416,10 +473,8 @@ def _power_iteration(
     along each edge, summed per target, then the damping update
     against the set's restart vector ``_r``. Each set's dangling mass
     is a groupBy(_set) aggregate -- S rows, broadcast back into the
-    update -- so no round collects to the driver. Lineage is
-    truncated per round with a lazy localCheckpoint (the
-    connected-components discipline); without it the plan tree doubles
-    per round.
+    update -- so no round collects to the driver. Exactly ``iters``
+    fixed rounds of :func:`iterate`.
     """
     sizes = present.groupBy("_set").agg(F.count(F.lit(1)).alias("_ns"))
     # restart matrix: (set, node) with 1/|seeds_in_graph(set)| on seeds,
@@ -443,45 +498,50 @@ def _power_iteration(
     out_deg = (
         e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg")).localCheckpoint(eager=False)
     )
-    ranks = noder.select("_set", "node_id", F.col("_r").alias("rank"))
-    for _ in range(iters):
-        # consumed twice per round (dangling mass, then contribs)
-        with_deg = ranks.join(
-            out_deg, ranks.node_id == out_deg._s, "left"
-        ).localCheckpoint(eager=False)
-        dangling = (
-            with_deg.filter(F.col("_deg").isNull())
-            .groupBy("_set")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm"))
-        )
-        contribs = (
-            with_deg.filter(F.col("_deg").isNotNull())
-            .select(
-                "_set",
-                F.col("node_id").alias("_s"),
-                (F.col("rank") / F.col("_deg")).alias("_c"),
-            )
-            .join(e, "_s")
-            .groupBy("_set", F.col("_d").alias("node_id"))
-            .agg(F.sum("_c").alias("_in"))
-        )
-        # restart + dangling mass both land on the restart vector
-        ranks = (
-            noder.join(contribs, ["_set", "node_id"], "left")
-            .join(F.broadcast(dangling), "_set", "left")
-            .select(
-                "_set",
-                "node_id",
-                (
-                    F.lit(1.0 - damping) * F.col("_r")
-                    + (F.lit(damping) * F.coalesce(F.col("_dm"), F.lit(0.0)))
-                    * F.col("_r")
-                    + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
+    ranks = iterate(
+        noder.select("_set", "node_id", F.col("_r").alias("rank")),
+        partial(_pagerank_round, e, out_deg, noder, damping),
+        iters,
+    )
     return ranks.select("_set", "node_id", F.round("rank", 8).alias("rank"))
+
+
+def _pagerank_round(
+    e: DataFrame, out_deg: DataFrame, noder: DataFrame, damping: float, ranks: DataFrame
+) -> DataFrame:
+    """One power-iteration round: (_set, node_id, rank) -> the same."""
+    with_deg = ranks.join(out_deg, ranks.node_id == out_deg._s, "left")
+    dangling = (
+        with_deg.filter(F.col("_deg").isNull())
+        .groupBy("_set")
+        .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm"))
+    )
+    contribs = (
+        with_deg.filter(F.col("_deg").isNotNull())
+        .select(
+            "_set",
+            F.col("node_id").alias("_s"),
+            (F.col("rank") / F.col("_deg")).alias("_c"),
+        )
+        .join(e, "_s")
+        .groupBy("_set", F.col("_d").alias("node_id"))
+        .agg(F.sum("_c").alias("_in"))
+    )
+    # restart + dangling mass both land on the restart vector
+    return (
+        noder.join(contribs, ["_set", "node_id"], "left")
+        .join(F.broadcast(dangling), "_set", "left")
+        .select(
+            "_set",
+            "node_id",
+            (
+                F.lit(1.0 - damping) * F.col("_r")
+                + (F.lit(damping) * F.coalesce(F.col("_dm"), F.lit(0.0)))
+                * F.col("_r")
+                + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
+            ).alias("rank"),
+        )
+    )
 
 
 def current_beliefs(
@@ -602,7 +662,7 @@ def triangles(
     join -- without lineage truncation each consumer would recompute
     the whole upstream derivation (the branch-union recompute trap;
     the plan golden showed the edge scan 6x). ``truncate_lineage=
-    False`` exists for plan inspection, the k_hop/CC discipline.
+    False`` exists for plan inspection.
     """
     und = (
         edges.select(
@@ -665,99 +725,57 @@ def label_propagation(
     iters: int = 10,
     src: str = "src_id",
     dst: str = "dst_id",
-    truncate_lineage: bool = True,
-    early_exit: bool = True,
 ) -> DataFrame:
-    """Deterministic synchronous label propagation: (node_id, label)
-    community assignments over the undirected graph.
+    """Runs Spark jobs before it returns, one per round: deterministic
+    synchronous label propagation, (node_id, label) community
+    assignments over the undirected graph.
 
     Classic LPA is run-order dependent; this variant is a pure
     function of the graph so it is oracle-checkable and stable across
     partitionings: every node starts labeled with its own id, and each
     SYNCHRONOUS round relabels every node with its neighbors' majority
     label, ties broken by MINIMUM label (so the winner is unique and
-    engine-independent). Fixed ``iters`` bounds cost exactly like
-    pagerank's.
-
-    ``early_exit`` (r8, the CC-convergence discipline of
-    canonicalize.connected_components) stops iterating as soon as the
-    remaining rounds are provably replayable without running them,
-    RETURNING EXACTLY the round-``iters`` labels in both cases:
-
-    - fixed point: labels(t) == labels(t-1) => every later round
-      repeats labels(t);
-    - 2-cycle: labels(t) == labels(t-2) => the synchronous update
-      (a pure function of the previous frame) alternates
-      labels(t-1)/labels(t) forever, so labels(iters) is labels(t)
-      when iters-t is even, labels(t-1) when odd. Synchronous LPA
-      oscillates with period 2 on bipartite-ish structures -- without
-      this case a non-converging graph would pay all ``iters`` rounds
-      even though its tail is a replay (the bench graph 2-cycles by
-      round 5; rounds 6-10 were pure re-execution).
-
-    Both checks ride ONE small aggregate per round over the label
-    frames (O(nodes), never O(edges)); per-round cost is otherwise
-    unchanged. ``early_exit=False`` restores the fixed-round replay
-    (plan-audit mode).
+    engine-independent). The result is exactly the round-``iters``
+    labels: :func:`iterate`'s keyed mode stops at a fixed point or a
+    period-2 cycle (synchronous LPA oscillates on bipartite-ish graphs)
+    and picks the round-``iters`` state by parity. Every node has a
+    neighbor, so it keeps a row every round, as keyed mode needs.
 
     Scale shape per round: one equi-join of the label frame (O(nodes))
     against the undirected edge frame on the neighbor key, one
     (node, label) count aggregate, one per-node argmax via
     min(struct(-count, label)) -- map-side combinable, never a window
-    over whole partitions. The edge frame is checkpointed once;
-    per-round lineage is truncated (the pagerank/k_hop discipline).
+    over whole partitions. The edge frame is checkpointed once.
     """
+    und = _lpa_edges(edges, src, dst).localCheckpoint(eager=False)
+    return iterate(_lpa_init(und), partial(_lpa_round, und), iters, key="node_id")
+
+
+def _lpa_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Undirected edges (_u, _v), both directions, self-loops dropped."""
     fwd = edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))
     rev = edges.select(F.col(dst).alias("_u"), F.col(src).alias("_v"))
-    und = fwd.union(rev).where(F.col("_u") != F.col("_v")).distinct()
-    if truncate_lineage:
-        und = und.localCheckpoint(eager=False)
-    labels = (
+    return fwd.union(rev).where(F.col("_u") != F.col("_v")).distinct()
+
+
+def _lpa_init(und: DataFrame) -> DataFrame:
+    """Round-0 labels (node_id, label): every node labeled with its id."""
+    return (
         und.select(F.col("_u").alias("node_id"))
         .distinct()
         .select("node_id", F.col("node_id").alias("label"))
     )
-    if truncate_lineage:
-        labels = labels.localCheckpoint(eager=False)
-    prev = None  # labels(t-2), for the 2-cycle check
-    for i in range(iters):
-        votes = und.join(
-            labels.select(F.col("node_id").alias("_v"), "label"), "_v"
-        ).select(F.col("_u").alias("node_id"), "label")
-        counts = votes.groupBy("node_id", "label").agg(
-            F.count(F.lit(1)).alias("_cnt")
-        )
-        new = (
-            counts.groupBy("node_id")
-            .agg(F.min(F.struct((-F.col("_cnt")).alias("_neg"), F.col("label"))).alias("_w"))
-            .select("node_id", F.col("_w.label").alias("label"))
-        )
-        if truncate_lineage:
-            new = new.localCheckpoint(eager=False)
-        if early_exit:
-            # every node keeps a row every round (each has >= 1 und
-            # neighbor by construction), so inner joins are total.
-            # One action: also materializes `new`'s checkpoint.
-            cmp = new.select("node_id", F.col("label").alias("_ln")).join(
-                labels.select("node_id", F.col("label").alias("_l1")),
-                "node_id",
-            )
-            aggs = [
-                F.max((F.col("_ln") != F.col("_l1")).cast("int")).alias("d1")
-            ]
-            if prev is not None:
-                cmp = cmp.join(
-                    prev.select("node_id", F.col("label").alias("_l2")),
-                    "node_id",
-                )
-                aggs.append(
-                    F.max((F.col("_ln") != F.col("_l2")).cast("int")).alias("d2")
-                )
-            row = cmp.agg(*aggs).collect()[0]
-            if row["d1"] == 0 or row["d1"] is None:
-                return new  # fixed point (or empty graph)
-            if prev is not None and row["d2"] == 0:
-                remaining = iters - (i + 1)
-                return new if remaining % 2 == 0 else labels
-        prev, labels = labels, new
-    return labels
+
+
+def _lpa_round(und: DataFrame, labels: DataFrame) -> DataFrame:
+    """One synchronous round: each node takes its neighbors' majority
+    label, ties to the minimum label."""
+    votes = und.join(
+        labels.select(F.col("node_id").alias("_v"), "label"), "_v"
+    ).select(F.col("_u").alias("node_id"), "label")
+    counts = votes.groupBy("node_id", "label").agg(F.count(F.lit(1)).alias("_cnt"))
+    return (
+        counts.groupBy("node_id")
+        .agg(F.min(F.struct((-F.col("_cnt")).alias("_neg"), F.col("label"))).alias("_w"))
+        .select("node_id", F.col("_w.label").alias("label"))
+    )

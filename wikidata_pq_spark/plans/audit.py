@@ -215,23 +215,21 @@ CHECKS = {
 
 
 def _graph_khop_raw(spark, sf):
-    """k_hop truncates lineage per hop (localCheckpoint), which hides
-    the per-hop join shape behind checkpoint scans; audit the
-    untruncated plan."""
+    """k_hop cuts lineage per hop (localCheckpoint), which hides the
+    per-hop join shape behind checkpoint scans; audit two hops composed
+    from the round function instead."""
     import pyspark.sql.functions as F
 
     from .. import contracts
     from ..operators import graph
 
     c = contracts.load(spark, sf, "customer")
-    edges = c.filter(F.col("c_custkey") % 10 != 9).select(
-        F.concat(F.lit("Q"), F.col("c_custkey")).alias("src_id"),
-        F.concat(F.lit("Q"), F.col("c_custkey") + 1).alias("dst_id"),
-    )
     seeds = c.filter(F.col("c_custkey") % 100 == 0).select(
         F.concat(F.lit("Q"), F.col("c_custkey")).alias("node_id")
     )
-    return graph.k_hop(edges, seeds, k=2, truncate_lineage=False)
+    e = graph._khop_edges(contracts._chain_edges(spark, sf), "src_id", "dst_id", True)
+    reached = graph._khop_round(e, graph._khop_round(e, graph._khop_init(seeds)))
+    return reached.filter(F.col("hop") > 0).select("node_id", "hop")
 
 
 def _comention_raw(spark, sf):
@@ -356,26 +354,15 @@ def _sk_heavy_hitters_raw(spark, sf):
 
 
 def _graph_lpa_raw(spark, sf):
-    """label_propagation truncates lineage per round; audit TWO
-    untruncated rounds over the chain-edge graph (the per-round
-    join/aggregate shape repeats identically, so two rounds pin it
-    without a 10-deep golden)."""
-    import pyspark.sql.functions as F
-
+    """label_propagation checkpoints every round (and runs it); audit
+    TWO rounds composed from the round function over the chain-edge
+    graph (the per-round join/aggregate shape repeats identically, so
+    two rounds pin it without a 10-deep golden)."""
     from .. import contracts
     from ..operators import graph
 
-    c = contracts.load(spark, sf, "customer")
-    edges = c.filter(F.col("c_custkey") % 10 != 9).select(
-        F.concat(F.lit("Q"), F.col("c_custkey")).alias("src_id"),
-        F.concat(F.lit("Q"), F.col("c_custkey") + 1).alias("dst_id"),
-    )
-    # early_exit=False: the audit pins the PER-ROUND plan shape; the
-    # convergence checks would otherwise run jobs at build time and
-    # could return before round `iters` (r8)
-    return graph.label_propagation(
-        edges, iters=2, truncate_lineage=False, early_exit=False
-    )
+    und = graph._lpa_edges(contracts._chain_edges(spark, sf), "src_id", "dst_id")
+    return graph._lpa_round(und, graph._lpa_round(und, graph._lpa_init(und)))
 
 
 BUILDERS = {
