@@ -22,12 +22,16 @@ Output layout under ``--out``:
     edges/chunk=i/bucket=N/    the canonical triples, bucketed by
                                subject hash -- the only copy of the
                                triple set, one slice per chunk
-    edges_audit/chunk=i/       (chunk, bucket, rows, min_id, max_id)
-    components/                same-as component map
+    edges_audit/chunk=i/       (bucket, rows, min_id, max_id); read from
+                               the root, chunk=i adds the chunk column
+    components/                same-as component map (CANONICALIZED,
+                               once per store)
     nodes/bucket=N/            distinct entity ids (MATERIALIZED)
     nodes_audit/
     _state/chunk_NNNNN.json    per chunk: LINKED + mentions/linked rows
-    _state/corpus.json         corpus-wide stage reached + row totals
+    _state/corpus.json         corpus-wide stage reached (CANONICALIZED,
+                               MATERIALIZED, VERIFIED, COMPLETE) + row
+                               totals
 """
 
 from __future__ import annotations

@@ -8,6 +8,7 @@ import os
 import pytest
 
 from wikidata_pq_spark import datagen, oracle
+from wikidata_pq_spark.operators import canonicalize
 from wikidata_pq_spark.pipeline import KGPipeline
 from wikidata_pq_spark.plans.checkpoint import StateStore, Step
 
@@ -69,11 +70,17 @@ def test_chunked_equals_oracle(spark, spark_corpus, corpus, tmp_path):
 
 
 @pytest.mark.parametrize("n_chunks", [1, 4])
-def test_kill_and_resume_identical(spark, spark_corpus, tmp_path, n_chunks):
+def test_kill_and_resume_identical(spark, spark_corpus, tmp_path, n_chunks, monkeypatch):
     clean = KGPipeline(spark, str(tmp_path / "clean"), n_chunks=n_chunks)
     _run(clean, spark_corpus)
     expected = _tset(clean.triples())
 
+    cc_calls = []
+    cc = canonicalize.connected_components
+    monkeypatch.setattr(
+        canonicalize, "connected_components",
+        lambda same_as: cc_calls.append(1) or cc(same_as),
+    )
     out = str(tmp_path / "kg")
     pipe = KGPipeline(spark, out, n_chunks=n_chunks)
     kill = (n_chunks - 1) // 2  # the middle chunk: some done, some not
@@ -82,14 +89,18 @@ def test_kill_and_resume_identical(spark, spark_corpus, tmp_path, n_chunks):
     assert [pipe.state.get(u) for u in pipe.units()] == (
         [Step.LINKED] * (kill + 1) + [Step.INIT] * (n_chunks - kill - 1)
     )
-    assert pipe.state.get("corpus") == Step.INIT
+    # the components are a stage of the corpus unit, done before any chunk
+    assert pipe.state.get("corpus") == Step.CANONICALIZED
 
     # resume: only the unfinished units run; output identical to clean
     pipe2 = KGPipeline(spark, out, n_chunks=n_chunks)
     metrics = _run(pipe2, spark_corpus)
     assert pipe2.state.get("corpus") == Step.COMPLETE
     assert _tset(pipe2.triples()) == expected
+    # the crashed run computed the components; the resume reused them
+    assert len(cc_calls) == 1
     assert metrics == _run(clean, spark_corpus)
+    assert len(cc_calls) == 1  # a completed store re-runs without CC
 
 
 def test_per_chunk_audit_sidecars_post_check(spark, spark_corpus, tmp_path):
@@ -215,23 +226,36 @@ def test_duplicate_assertions_stored_once(spark, tmp_path, n_chunks):
     assert os.path.isdir(tmp_path / "kg" / "staged") == (n_chunks > 1)
 
 
+def _jobs_in_group(sc, group: str, fn):
+    """Run ``fn`` under job group ``group``; its result and job count."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the asynchronous listener bus: drain
+    # it so a job that already ran is counted
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.mark.classic_session_only
 def test_completed_store_reruns_without_jobs(spark, spark_corpus, tmp_path):
     """Re-running a completed store launches no Spark job: every gate is
-    closed, so neither the components, the staging nor any chunk runs."""
+    closed, so neither the components, the staging nor any chunk runs.
+    Its post-check reads each table once, not once per chunk."""
     out = str(tmp_path / "kg")
     _run(KGPipeline(spark, out, n_chunks=4), spark_corpus)
     for old in ("mentions", "triples", "lineage"):
         assert not os.path.exists(os.path.join(out, old))
 
     sc = spark.sparkContext
-    sc.setJobGroup("completed_rerun", "completed_rerun")
-    try:
-        metrics = _run(KGPipeline(spark, out, n_chunks=4), spark_corpus)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status tracker is fed by the asynchronous listener bus: drain
-    # it so a job that already ran is counted
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup("completed_rerun")) == 0
+    metrics, jobs = _jobs_in_group(
+        sc, "completed_rerun", lambda: _run(KGPipeline(spark, out, n_chunks=4), spark_corpus)
+    )
+    assert jobs == 0
     assert metrics["linked"] > 0 and metrics["nodes"] > 0
+    ok, jobs = _jobs_in_group(
+        sc, "completed_post_check", KGPipeline(spark, out, n_chunks=4).post_check
+    )
+    assert ok and jobs <= 12

@@ -58,23 +58,21 @@ class CurationPipeline:
             # keep_cols rides lang through the SAME map-only scan --
             # no self-join, the stage stays shuffle-free as documented
             red = curation.redact_pii(docs, keep_cols=("lang",))
-            out = red.select(
+            out, n = tableio.observe_rows(red.select(
                 "doc_id", "lang", F.col("red_text").alias("text"),
                 "n_email", "n_phone", "n_ipv4", "had_pii",
-            )
+            ))
             out.write.mode("overwrite").parquet(self._p("redacted"))
-            n = self.spark.read.parquet(self._p("redacted")).count()
-            st.set("redact", Step.COMPLETE, rows=n)
+            st.set("redact", Step.COMPLETE, rows=n.get["rows"])
 
         redacted = self.spark.read.parquet(self._p("redacted"))
 
         if st.gate("curate", Step.COMPLETE):
-            cur = curation.curate_corpus(
+            cur, n = tableio.observe_rows(curation.curate_corpus(
                 redacted, quality_min=self.quality_min, rep_max=self.rep_max
-            )
+            ))
             cur.write.mode("overwrite").parquet(self._p("curated"))
-            n = self.spark.read.parquet(self._p("curated")).count()
-            st.set("curate", Step.COMPLETE, rows=n)
+            st.set("curate", Step.COMPLETE, rows=n.get["rows"])
 
         curated = self.spark.read.parquet(self._p("curated"))
 
@@ -82,16 +80,16 @@ class CurationPipeline:
             survivors = redacted.join(
                 curated.select("doc_id"), "doc_id", "semi"
             )
-            packed = curation.pack_chunks(survivors, max_len=self.max_len)
+            packed, n = tableio.observe_rows(
+                curation.pack_chunks(survivors, max_len=self.max_len)
+            )
             packed.write.mode("overwrite").parquet(self._p("packed"))
-            n = self.spark.read.parquet(self._p("packed")).count()
-            st.set("pack", Step.COMPLETE, rows=n)
+            st.set("pack", Step.COMPLETE, rows=n.get["rows"])
 
         if st.gate("finalize", Step.COMPLETE):
             packed = self.spark.read.parquet(self._p("packed"))
-            final = (
-                curated.join(packed, ["doc_id", "lang"])
-                .select(
+            final, n = tableio.observe_rows(
+                curated.join(packed, ["doc_id", "lang"]).select(
                     "doc_id", "lang", "split", "quality", "rep_ratio",
                     "n_tokens", "start_off", "first_chunk", "last_chunk",
                     "n_chunks",
@@ -105,8 +103,7 @@ class CurationPipeline:
             )
             if not ok:
                 raise RuntimeError("curated-corpus sink failed post-check")
-            n = self.spark.read.parquet(self._p("corpus")).count()
-            st.set("finalize", Step.COMPLETE, rows=n, verified=True)
+            st.set("finalize", Step.COMPLETE, rows=n.get["rows"], verified=True)
 
         return {
             "redacted": self.state.metrics("redact").get("rows"),

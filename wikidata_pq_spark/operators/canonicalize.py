@@ -26,6 +26,10 @@ from pyspark.sql import functions as F
 
 from .graph import iterate
 
+# the component map's schema, on both paths; KGPipeline reads its
+# stored ``components`` with it
+COMPONENTS_DDL = "entity_id string, canonical_id string"
+
 
 def _order_key(col):
     """Orderable struct: numeric Q-ids sort numerically, others after."""
@@ -73,9 +77,7 @@ def _driver_components(same_as: DataFrame) -> DataFrame:
     out = pd.DataFrame(
         {"entity_id": list(comp.keys()), "canonical_id": list(comp.values())}
     )
-    return same_as.sparkSession.createDataFrame(
-        out, schema="entity_id string, canonical_id string"
-    )
+    return same_as.sparkSession.createDataFrame(out, schema=COMPONENTS_DDL)
 
 
 def _distributed_components(same_as: DataFrame) -> DataFrame:

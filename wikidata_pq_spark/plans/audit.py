@@ -291,6 +291,18 @@ def _dedup_prefix_raw(spark, sf):
     )
 
 
+def _dedup_near_dup_raw(spark, sf):
+    """near_dup_pairs without the contract query's candidate-export
+    hook: at the gate sf the hook collects the candidates and reads
+    them back from parquet, which hides the banding aggregate behind a
+    scan. Elsewhere the two plans are the same."""
+    from .. import contracts
+    from ..operators import dedup
+
+    docs = contracts.spread_small_scan(contracts.load(spark, sf, "documents"))
+    return dedup.near_dup_pairs(docs, threshold=0.8)
+
+
 def _samp_hash_raw(spark, sf):
     """Raw hash_sample over the documents scan: the plan must be a
     single exchange-free map stage (scan -> filter -> project)."""
@@ -371,6 +383,7 @@ BUILDERS = {
     "kg_comention_edges": _comention_raw,
     "graph_triangles": _triangles_raw,
     "dedup_prefix_jaccard": _dedup_prefix_raw,
+    "dedup_near_dup": _dedup_near_dup_raw,
     "samp_hash": _samp_hash_raw,
     "samp_weighted": _samp_weighted_raw,
     "samp_reservoir": _samp_reservoir_raw,

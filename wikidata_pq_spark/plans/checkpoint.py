@@ -25,8 +25,6 @@ class Step(IntEnum):
     # state files store the int
     EXTRACTED = 1
     LINKED = 2
-    # unused since LINKED writes canonical triples; kept because state
-    # files store the int (a unit left at 3 resumes at MATERIALIZED)
     CANONICALIZED = 3
     MATERIALIZED = 4
     VERIFIED = 5

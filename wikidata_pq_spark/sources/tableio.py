@@ -1,18 +1,18 @@
-"""Table IO seam: Iceberg when available, partitioned parquet otherwise.
+"""Table IO seam: audited, partitioned parquet writes and their post-check.
 
 The storage layer behind the pipeline (SURVEY.md §7.3d): query code only
 ever sees DataFrames; this module decides the physical table format.
-In-sandbox there is no Iceberg runtime jar, so the fallback is
-Hive-style partitioned parquet -- the same layout the reference sinks to
+``write_with_audit`` always writes Hive-style partitioned parquet -- the
+pipelines' audited sinks, in the same layout the reference sinks to
 (reference: core.py:38-58 PartitionByKey -> results/{table}/language=X/)
 -- plus an explicit audit sidecar per partition, mirroring the
 reference's finish-callback sidecars (reference: core.py:25-35:
 (language, rows, min_id, max_id)).
 
-On a real cluster, set ``spark.sql.catalog.<name>`` configs and these
-writes become Iceberg `writeTo(...).append()` with snapshot metadata
-supplying row counts for free (reference post-check design:
-DESIGN.md:95-112).
+Only ``write_table`` routes to Iceberg, when a
+``spark.sql.catalog.<name>`` config is set; no flow calls it. With
+Iceberg, snapshot metadata would supply the row counts the sidecars
+reproduce by hand (reference post-check design: DESIGN.md:95-112).
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ from __future__ import annotations
 import os
 from collections import Counter
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -74,6 +74,13 @@ def write_table(
         return "iceberg"
     write_partitioned(df, dest, partition_cols, mode=mode)
     return "parquet"
+
+
+def observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` plus an Observation its write fills with ``rows``, so a
+    write is counted without being read back."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def bucket_column(col_name: str, n_buckets: int):

@@ -44,11 +44,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import extract, linking
+from ..sources import tableio
+from ..sources.transcript_source import TRANSCRIPT_DDL
 
-TRANSCRIPT_DDL = (
-    "conv_id string, turn_idx int, role string, text string, "
-    "tool string, ts timestamp"
-)
+
+def _drain(stream: DataFrame, process_batch, checkpoint_dir: str):
+    """Start ``process_batch`` on every micro-batch of ``stream`` under
+    an availableNow trigger (drain what is there, then stop); returns
+    the query. The checkpoint resumes a killed query at the next
+    uncommitted batch."""
+    return (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def stream_transcripts(
@@ -93,12 +103,7 @@ def incremental_extract(
             .parquet(out_dir)
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(stream, process_batch, checkpoint_dir)
 
 
 def session_window_counts(
@@ -291,12 +296,7 @@ def incremental_triple_support(
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         merge_triple_support(batch_df, out_dir, epoch_id, n_buckets=n_buckets)
 
-    return (
-        stream_triples.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(stream_triples, process_batch, checkpoint_dir)
 
 
 # --------------------------------------------------------------------------
@@ -309,17 +309,19 @@ def incremental_triple_support(
 # state.py:30-35) applied to a live view.
 # --------------------------------------------------------------------------
 
+# graph.current_beliefs's default order. A constant: the stored last_*
+# columns are only readable under the order they were merged with.
 BELIEF_ORDER_COLS = ("ts", "conv_id", "turn_idx")
 
 
-def _argmax(frame: DataFrame, order_cols: tuple) -> DataFrame:
+def _argmax(frame: DataFrame) -> DataFrame:
     """Per-(subj, pred) winner, as (subj, pred, obj, last_<col>...).
     The comparison key is the lexicographic max over
-    (order_cols..., obj) == the batch operator's row_number window
-    ordered desc by each order col with obj as the final deterministic
-    tiebreak."""
+    (BELIEF_ORDER_COLS..., obj) == the batch operator's row_number
+    window ordered desc by each order col with obj as the final
+    deterministic tiebreak."""
     best = F.struct(
-        *[F.col(c).alias(c) for c in order_cols], F.col("obj").alias("obj")
+        *[F.col(c).alias(c) for c in BELIEF_ORDER_COLS], F.col("obj").alias("obj")
     )
     return (
         frame.groupBy("subj", "pred")
@@ -328,20 +330,19 @@ def _argmax(frame: DataFrame, order_cols: tuple) -> DataFrame:
             "subj",
             "pred",
             F.col("_best.obj").alias("obj"),
-            *[F.col(f"_best.{c}").alias(f"last_{c}") for c in order_cols],
+            *[F.col(f"_best.{c}").alias(f"last_{c}") for c in BELIEF_ORDER_COLS],
         )
     )
 
 
-def _reduce_beliefs(raw: DataFrame, order_cols: tuple) -> DataFrame:
+def _reduce_beliefs(raw: DataFrame) -> DataFrame:
     """Argmax of argmaxes under the same key: the reduced partial is
     exactly the partial a single giant epoch would have written."""
     return _argmax(
         raw.select(
             "subj", "pred", "obj",
-            *[F.col(f"last_{c}").alias(c) for c in order_cols],
-        ),
-        order_cols,
+            *[F.col(f"last_{c}").alias(c) for c in BELIEF_ORDER_COLS],
+        )
     )
 
 
@@ -349,7 +350,6 @@ def merge_current_beliefs(
     batch: DataFrame,
     out_dir: str,
     epoch_id: int,
-    order_cols: tuple = BELIEF_ORDER_COLS,
     n_buckets: int = 16,
 ) -> None:
     """Merge one batch of triples into the latest-assertion-wins view:
@@ -363,26 +363,21 @@ def merge_current_beliefs(
     arrival order. Each partial is O(distinct keys in the batch), not
     O(batch rows): the epoch store stays a rollup, never a log.
     """
-    _merge_epoch(_argmax(batch, order_cols), out_dir, epoch_id, n_buckets)
+    _merge_epoch(_argmax(batch), out_dir, epoch_id, n_buckets)
 
 
-def read_current_beliefs(
-    spark: SparkSession,
-    out_dir: str,
-    order_cols: tuple = BELIEF_ORDER_COLS,
-) -> DataFrame:
+def read_current_beliefs(spark: SparkSession, out_dir: str) -> DataFrame:
     """Reduce the live per-epoch argmax partials into the current view
     -- identical output contract to ``operators.graph.current_beliefs``
     run over the full triple history: (subj, pred, obj, last_<col>...).
     """
-    return _reduce_beliefs(_live_partials(spark, out_dir), order_cols)
+    return _reduce_beliefs(_live_partials(spark, out_dir))
 
 
 def incremental_current_beliefs(
     stream_triples: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    order_cols: tuple = BELIEF_ORDER_COLS,
     n_buckets: int = 16,
 ):
     """Streaming wrapper: foreachBatch(merge_current_beliefs) with an
@@ -391,16 +386,9 @@ def incremental_current_beliefs(
     most once."""
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_current_beliefs(
-            batch_df, out_dir, epoch_id, order_cols=order_cols, n_buckets=n_buckets
-        )
+        merge_current_beliefs(batch_df, out_dir, epoch_id, n_buckets=n_buckets)
 
-    return (
-        stream_triples.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(stream_triples, process_batch, checkpoint_dir)
 
 
 # --------------------------------------------------------------------------
@@ -521,8 +509,6 @@ def _write_partition(
 ) -> None:
     """Write ``partial`` as partition ``epoch=<epoch>``, bucketed by
     subj; dynamic overwrite replaces only that partition."""
-    from ..sources import tableio
-
     (
         partial.withColumn("bucket", tableio.bucket_column("subj", n_buckets))
         .withColumn("epoch", F.lit(epoch))
@@ -613,7 +599,8 @@ def _compact(
         }
     gen = _claim_generation(out_dir)
     raw = spark.read.parquet(out_dir).filter(F.col("epoch").isin(live))
-    _write_partition(reducer(raw), out_dir, gen, n_buckets)
+    merged, n_rows = tableio.observe_rows(reducer(raw))
+    _write_partition(merged, out_dir, gen, n_buckets)
     committed = {
         "live": [gen],
         "compacted_through": max([snapshot["compacted_through"], *live]),
@@ -628,11 +615,10 @@ def _compact(
             f"generation {gen} was not committed and stays invisible. "
             "Nothing was retired; retry the compaction."
         ) from None
-    n_rows = spark.read.parquet(os.path.join(out_dir, f"epoch={gen}")).count()
     return {
         "compacted": len(live),
         "generation": gen,
-        "rows": n_rows,
+        "rows": n_rows.get["rows"],
         "removed_epochs": _collect(out_dir, committed),
     }
 
@@ -646,12 +632,7 @@ def compact_triple_support(
 
 
 def compact_current_beliefs(
-    spark: SparkSession,
-    out_dir: str,
-    order_cols: tuple = BELIEF_ORDER_COLS,
-    n_buckets: int = 16,
+    spark: SparkSession, out_dir: str, n_buckets: int = 16
 ) -> dict:
     """Compact the current-beliefs epoch store (argmax of argmaxes)."""
-    return _compact(
-        spark, out_dir, lambda raw: _reduce_beliefs(raw, order_cols), n_buckets
-    )
+    return _compact(spark, out_dir, _reduce_beliefs, n_buckets)
