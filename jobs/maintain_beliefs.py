@@ -11,12 +11,13 @@
                               # into one generation (view unchanged)
 
 Each submission drains the currently-available input files
-(availableNow trigger), writing per-epoch argmax partials; the
-streaming checkpoint makes re-submission resume at the first
+(availableNow trigger), writing each micro-batch's argmax partial as
+one ``epoch=N`` partition of the store (``epoch=N/part-*.parquet``);
+the streaming checkpoint makes re-submission resume at the first
 uncommitted batch, and a replayed batch is merged at most once (the
-store's commit log lists each epoch once). This is the MERGE-INTO analogue of the
-reference's resumable state machine (reference: state.py:30-35)
-applied to a live latest-assertion-wins view.
+store's commit log lists each epoch once). This is the MERGE-INTO
+analogue of the reference's resumable state machine (reference:
+state.py:30-35) applied to a live latest-assertion-wins view.
 """
 
 from __future__ import annotations
@@ -33,7 +34,6 @@ def main() -> None:
     p.add_argument("--out", required=True)
     p.add_argument("--checkpoint", required=True)
     p.add_argument("--view-out", default=None)
-    p.add_argument("--n-buckets", type=int, default=16)
     p.add_argument(
         "--compact",
         action="store_true",
@@ -57,17 +57,13 @@ def main() -> None:
         .option("maxFilesPerTrigger", 1)
         .parquet(args.triples_in)
     )
-    q = inc.incremental_current_beliefs(
-        stream, args.out, args.checkpoint, n_buckets=args.n_buckets
-    )
+    q = inc.incremental_current_beliefs(stream, args.out, args.checkpoint)
     q.awaitTermination()
 
     out = {"status": "complete"}
     if args.compact:
         # a store no epoch ever reached compacts as a no-op
-        out["compaction"] = inc.compact_current_beliefs(
-            spark, args.out, n_buckets=args.n_buckets
-        )
+        out["compaction"] = inc.compact_current_beliefs(spark, args.out)
     if args.view_out:
         import os
 

@@ -160,7 +160,6 @@ def test_spark_submit_maintain_beliefs_incremental(spark, tmp_path):
                 "--out", str(out),
                 "--checkpoint", str(ckpt),
                 "--view-out", str(view),
-                "--n-buckets", "4",
                 *extra,
             ],
             capture_output=True, text=True, timeout=420,

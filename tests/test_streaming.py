@@ -236,11 +236,11 @@ def test_incremental_triple_support_merge_and_replay(spark, tmp_path):
     out = str(tmp_path / "support")
     d1 = spark.createDataFrame(pd.DataFrame(epoch1, columns=cols))
     d2 = spark.createDataFrame(pd.DataFrame(epoch2, columns=cols))
-    inc.merge_triple_support(d1, out, epoch_id=0, n_buckets=4)
+    inc.merge_triple_support(d1, out, epoch_id=0)
     e0_mtime = os.path.getmtime(os.path.join(out, "epoch=0"))
     import time as _t
     _t.sleep(1.1)
-    inc.merge_triple_support(d2, out, epoch_id=1, n_buckets=4)
+    inc.merge_triple_support(d2, out, epoch_id=1)
     e1_mtime = os.path.getmtime(os.path.join(out, "epoch=1"))
 
     def rollup():
@@ -258,7 +258,7 @@ def test_incremental_triple_support_merge_and_replay(spark, tmp_path):
     # at-least-once replay of epoch 1: the log already lists it, so the
     # rollup is identical and neither partition is rewritten
     _t.sleep(1.1)
-    inc.merge_triple_support(d2, out, epoch_id=1, n_buckets=4)
+    inc.merge_triple_support(d2, out, epoch_id=1)
     again = rollup()
     assert (again["n_support"] == full["n_support"]).all()
     assert (again["n_convs_est"] == full["n_convs"]).all()
@@ -292,7 +292,7 @@ def test_incremental_triple_support_streaming(spark, tmp_path):
     )
     out = str(tmp_path / "support")
     q = inc.incremental_triple_support(
-        stream, out, str(tmp_path / "ckpt"), n_buckets=4
+        stream, out, str(tmp_path / "ckpt")
     )
     q.awaitTermination(120)
     got = inc.read_triple_support(spark, out).toPandas().set_index(
@@ -338,7 +338,7 @@ def test_triple_support_mid_epoch_kill_restart(spark, tmp_path):
 
     def chaos_batch(batch_df, epoch_id):
         # the real merge runs first: the partial IS on disk when we die
-        inc.merge_triple_support(batch_df, out, epoch_id, n_buckets=4)
+        inc.merge_triple_support(batch_df, out, epoch_id)
         if not crash_marker.exists():
             crash_marker.write_text("x")
             raise RuntimeError("injected crash after partial write")
@@ -482,7 +482,7 @@ def test_current_beliefs_mid_epoch_kill_restart(spark, tmp_path):
     crash_marker = tmp_path / "crashed_once"
 
     def chaos_batch(batch_df, epoch_id):
-        inc.merge_current_beliefs(batch_df, out, epoch_id, n_buckets=4)
+        inc.merge_current_beliefs(batch_df, out, epoch_id)
         if not crash_marker.exists():
             crash_marker.write_text("x")
             raise RuntimeError("injected crash after partial write")
@@ -553,11 +553,11 @@ def test_compact_triple_support_then_stream_equals_batch(spark, tmp_path):
     out = str(tmp_path / "support")
     # epochs 0..2 -> compact -> epoch 3 -> read
     for i in range(3):
-        inc.merge_triple_support(dfs[i], out, epoch_id=i, n_buckets=4)
-    summary = inc.compact_triple_support(spark, out, n_buckets=4)
+        inc.merge_triple_support(dfs[i], out, epoch_id=i)
+    summary = inc.compact_triple_support(spark, out)
     assert summary["compacted"] == 3 and summary["generation"] == -1
     assert inc._epochs_on_disk(out) == [-1]
-    inc.merge_triple_support(dfs[3], out, epoch_id=3, n_buckets=4)
+    inc.merge_triple_support(dfs[3], out, epoch_id=3)
 
     got = inc.read_triple_support(spark, out).toPandas().set_index(
         ["subj", "pred", "obj"]).sort_index()
@@ -579,7 +579,7 @@ def test_compact_triple_support_then_stream_equals_batch(spark, tmp_path):
     import pytest as _pt
 
     with _pt.raises(ValueError, match="compacted_through"):
-        inc.merge_triple_support(dfs[1], out, epoch_id=1, n_buckets=4)
+        inc.merge_triple_support(dfs[1], out, epoch_id=1)
     import os as _os
     import shutil as _sh
 
@@ -591,7 +591,7 @@ def test_compact_triple_support_then_stream_equals_batch(spark, tmp_path):
     again = inc.read_triple_support(spark, out).toPandas().set_index(
         ["subj", "pred", "obj"]).sort_index()
     assert (again["n_support"] == full["n_support"]).all()
-    s2 = inc.compact_triple_support(spark, out, n_buckets=4)
+    s2 = inc.compact_triple_support(spark, out)
     assert s2["generation"] == -2 and 1 in s2["removed_epochs"]
     assert inc._epochs_on_disk(out) == [-2]
     final = inc.read_triple_support(spark, out).toPandas().set_index(
@@ -599,7 +599,7 @@ def test_compact_triple_support_then_stream_equals_batch(spark, tmp_path):
     assert (final["n_support"] == full["n_support"]).all()
 
     # single-generation store: compaction is a no-op
-    assert inc.compact_triple_support(spark, out, n_buckets=4)["compacted"] == 0
+    assert inc.compact_triple_support(spark, out)["compacted"] == 0
 
 
 def test_compact_current_beliefs_then_stream_equals_batch(spark, tmp_path):
@@ -623,11 +623,11 @@ def test_compact_current_beliefs_then_stream_equals_batch(spark, tmp_path):
     e2 = mk(("Q1", "ceo", "C", "c3", 1, ts + pd.Timedelta("30m")),  # older: loses
             ("Q2", "hq", "Y", "c3", 2, ts + pd.Timedelta("3h")))
     out = str(tmp_path / "beliefs")
-    inc.merge_current_beliefs(e0, out, epoch_id=0, n_buckets=4)
-    inc.merge_current_beliefs(e1, out, epoch_id=1, n_buckets=4)
-    summary = inc.compact_current_beliefs(spark, out, n_buckets=4)
+    inc.merge_current_beliefs(e0, out, epoch_id=0)
+    inc.merge_current_beliefs(e1, out, epoch_id=1)
+    summary = inc.compact_current_beliefs(spark, out)
     assert summary["compacted"] == 2
-    inc.merge_current_beliefs(e2, out, epoch_id=2, n_buckets=4)
+    inc.merge_current_beliefs(e2, out, epoch_id=2)
 
     got = inc.read_current_beliefs(spark, out).toPandas().set_index(
         ["subj", "pred"]).sort_index()
@@ -654,13 +654,13 @@ def test_merge_refuses_epoch_below_compaction_watermark(spark, tmp_path):
         pd.DataFrame([("Q1", "p", "Q2", "c1", 1)], columns=cols)
     )
     out = str(tmp_path / "support")
-    inc.merge_triple_support(d, out, epoch_id=0, n_buckets=2)
-    inc.merge_triple_support(d, out, epoch_id=1, n_buckets=2)
-    inc.compact_triple_support(spark, out, n_buckets=2)
+    inc.merge_triple_support(d, out, epoch_id=0)
+    inc.merge_triple_support(d, out, epoch_id=1)
+    inc.compact_triple_support(spark, out)
     with _pt.raises(ValueError, match="compacted_through"):
-        inc.merge_triple_support(d, out, epoch_id=0, n_buckets=2)
+        inc.merge_triple_support(d, out, epoch_id=0)
     # the NEXT genuine epoch (above the watermark) still merges
-    inc.merge_triple_support(d, out, epoch_id=2, n_buckets=2)
+    inc.merge_triple_support(d, out, epoch_id=2)
     got = inc.read_triple_support(spark, out).toPandas()
     assert got["n_support"].iloc[0] == 3
 
@@ -686,15 +686,15 @@ def test_uncommitted_generation_invisible_and_collected(spark, tmp_path):
         pd.DataFrame([("Q1", "p", "Q2", "c2", 2)], columns=cols)
     )
     out = str(tmp_path / "support")
-    inc.merge_triple_support(d0, out, epoch_id=0, n_buckets=2)
-    inc.merge_triple_support(d1, out, epoch_id=1, n_buckets=2)
+    inc.merge_triple_support(d0, out, epoch_id=0)
+    inc.merge_triple_support(d1, out, epoch_id=1)
 
     # simulate the crashed first compaction: the merged generation is
     # fully on disk, the log commit never happened
     crashed = str(tmp_path / "crashed")
-    inc.merge_triple_support(d0, crashed, epoch_id=0, n_buckets=2)
-    inc.merge_triple_support(d1, crashed, epoch_id=1, n_buckets=2)
-    inc.compact_triple_support(spark, crashed, n_buckets=2)
+    inc.merge_triple_support(d0, crashed, epoch_id=0)
+    inc.merge_triple_support(d1, crashed, epoch_id=1)
+    inc.compact_triple_support(spark, crashed)
     import shutil
 
     shutil.copytree(
@@ -706,7 +706,7 @@ def test_uncommitted_generation_invisible_and_collected(spark, tmp_path):
     got = inc.read_triple_support(spark, out).toPandas()
     assert got["n_support"].iloc[0] == 2  # would be 4 if double-counted
 
-    summary = inc.compact_triple_support(spark, out, n_buckets=2)
+    summary = inc.compact_triple_support(spark, out)
     # the retry claims gen -2 below the orphan, then collects the orphan
     assert summary["generation"] == -2 and -1 in summary["removed_epochs"]
     assert inc._epochs_on_disk(out) == [-2]
@@ -718,7 +718,7 @@ def test_uncommitted_generation_invisible_and_collected(spark, tmp_path):
     shutil.copytree(
         os.path.join(crashed, "epoch=-1"), os.path.join(out, "epoch=0")
     )
-    s2 = inc.compact_triple_support(spark, out, n_buckets=2)
+    s2 = inc.compact_triple_support(spark, out)
     assert s2["compacted"] == 0 and 0 in s2["removed_epochs"]
     assert inc._epochs_on_disk(out) == [-2]
 
@@ -741,9 +741,9 @@ def test_lost_manifest_recovers_from_bak_then_fails_loudly(spark, tmp_path):
         pd.DataFrame([("Q1", "p", "Q2", "c1", 1)], columns=cols)
     )
     out = str(tmp_path / "support")
-    inc.merge_triple_support(d, out, epoch_id=0, n_buckets=2)
-    inc.merge_triple_support(d, out, epoch_id=1, n_buckets=2)
-    inc.compact_triple_support(spark, out, n_buckets=2)
+    inc.merge_triple_support(d, out, epoch_id=0)
+    inc.merge_triple_support(d, out, epoch_id=1)
+    inc.compact_triple_support(spark, out)
 
     def snapshot():
         paths = [os.path.join(r, f) for r, _, fs in os.walk(out) for f in fs]
@@ -754,9 +754,9 @@ def test_lost_manifest_recovers_from_bak_then_fails_loudly(spark, tmp_path):
     with _pt.raises(RuntimeError, match="no committed version"):
         inc.read_triple_support(spark, out).count()
     with _pt.raises(RuntimeError, match="no committed version"):
-        inc.compact_triple_support(spark, out, n_buckets=2)
+        inc.compact_triple_support(spark, out)
     with _pt.raises(RuntimeError, match="no committed version"):
-        inc.merge_triple_support(d, out, epoch_id=2, n_buckets=2)
+        inc.merge_triple_support(d, out, epoch_id=2)
     assert snapshot() == before  # data survives, untouched
     assert inc._epochs_on_disk(out) == [-1]
 
@@ -784,7 +784,7 @@ def test_merge_refused_inside_compaction_commit_window(spark, tmp_path, monkeypa
     dfs = [spark.createDataFrame(pd.DataFrame(e, columns=cols)) for e in epochs]
     out = str(tmp_path / "support")
     for i in range(3):
-        inc.merge_triple_support(dfs[i], out, epoch_id=i, n_buckets=2)
+        inc.merge_triple_support(dfs[i], out, epoch_id=i)
 
     orig_commit = inc._commit
     merged = []
@@ -792,12 +792,12 @@ def test_merge_refused_inside_compaction_commit_window(spark, tmp_path, monkeypa
     def commit_after_merge(out_dir, version, snapshot):
         if snapshot.get("generation") is not None and not merged:
             merged.append(1)
-            inc.merge_triple_support(dfs[3], out, epoch_id=3, n_buckets=2)
+            inc.merge_triple_support(dfs[3], out, epoch_id=3)
         return orig_commit(out_dir, version, snapshot)
 
     monkeypatch.setattr(inc, "_commit", commit_after_merge)
     with _pt.raises(RuntimeError, match="lost the commit race"):
-        inc.compact_triple_support(spark, out, n_buckets=2)
+        inc.compact_triple_support(spark, out)
     monkeypatch.setattr(inc, "_commit", orig_commit)
     assert merged and inc.live_epochs(out) == [0, 1, 2, 3]
     assert set(inc._epochs_on_disk(out)) == {-1, 0, 1, 2, 3}
@@ -814,7 +814,7 @@ def test_merge_refused_inside_compaction_commit_window(spark, tmp_path, monkeypa
     assert (got["first_conv"] == full["first_conv"]).all()
     # the next compaction folds all four epochs and collects the
     # uncommitted generation
-    s2 = inc.compact_triple_support(spark, out, n_buckets=2)
+    s2 = inc.compact_triple_support(spark, out)
     assert s2["compacted"] == 4 and s2["generation"] == -2
     assert inc._epochs_on_disk(out) == [-2]
     final = inc.read_triple_support(spark, out).toPandas().set_index(
@@ -840,8 +840,8 @@ def test_epoch_landing_before_compaction_reduces_correctly(spark, tmp_path):
     dfs = [spark.createDataFrame(pd.DataFrame(e, columns=cols)) for e in epochs]
     out = str(tmp_path / "support")
     for i, d in enumerate(dfs):
-        inc.merge_triple_support(d, out, epoch_id=i, n_buckets=2)
-    assert inc.compact_triple_support(spark, out, n_buckets=2)["compacted"] == 3
+        inc.merge_triple_support(d, out, epoch_id=i)
+    assert inc.compact_triple_support(spark, out)["compacted"] == 3
     got = inc.read_triple_support(spark, out).toPandas().set_index(
         ["subj", "pred", "obj"]).sort_index()
     allb = dfs[0]
@@ -873,8 +873,8 @@ def test_concurrent_compaction_refused_by_lease(spark, tmp_path, monkeypatch):
     ]
     dfs = [spark.createDataFrame(pd.DataFrame(e, columns=cols)) for e in epochs]
     out = str(tmp_path / "support")
-    inc.merge_triple_support(dfs[0], out, epoch_id=0, n_buckets=2)
-    inc.merge_triple_support(dfs[1], out, epoch_id=1, n_buckets=2)
+    inc.merge_triple_support(dfs[0], out, epoch_id=0)
+    inc.merge_triple_support(dfs[1], out, epoch_id=1)
 
     orig_commit = inc._commit
     raced = []
@@ -882,12 +882,12 @@ def test_concurrent_compaction_refused_by_lease(spark, tmp_path, monkeypatch):
     def commit_after_rival(out_dir, version, snapshot):
         if not raced:
             raced.append(None)  # the rival's own commit passes straight through
-            raced[0] = inc.compact_triple_support(spark, out, n_buckets=2)
+            raced[0] = inc.compact_triple_support(spark, out)
         return orig_commit(out_dir, version, snapshot)
 
     monkeypatch.setattr(inc, "_commit", commit_after_rival)
     with _pt.raises(RuntimeError, match="lost the commit race"):
-        inc.compact_triple_support(spark, out, n_buckets=2)
+        inc.compact_triple_support(spark, out)
     monkeypatch.setattr(inc, "_commit", orig_commit)
     # A claimed -1 first, so the rival committed -2 (and collected -1)
     assert raced[0]["compacted"] == 2 and raced[0]["generation"] == -2
@@ -909,8 +909,8 @@ def test_concurrent_compaction_refused_by_lease(spark, tmp_path, monkeypatch):
     assert (got["n_support"] == full["n_support"]).all()
     assert (got["first_turn"] == full["first_turn"]).all()
 
-    inc.merge_triple_support(dfs[2], out, epoch_id=2, n_buckets=2)
-    s = inc.compact_triple_support(spark, out, n_buckets=2)
+    inc.merge_triple_support(dfs[2], out, epoch_id=2)
+    s = inc.compact_triple_support(spark, out)
     assert s["compacted"] == 2
     assert inc._epochs_on_disk(out) == [s["generation"]]
     got, full = rollup(), batch(3)
@@ -943,7 +943,7 @@ def test_crash_between_bak_and_primary_manifest_reads_committed(
     dfs = [spark.createDataFrame(pd.DataFrame(e, columns=cols)) for e in epochs]
     out = str(tmp_path / "support")
     for i, d in enumerate(dfs):
-        inc.merge_triple_support(d, out, epoch_id=i, n_buckets=2)
+        inc.merge_triple_support(d, out, epoch_id=i)
 
     def crash(out_dir, version, snapshot):
         raise OSError("injected crash before the commit")
@@ -951,7 +951,7 @@ def test_crash_between_bak_and_primary_manifest_reads_committed(
     orig_commit = inc._commit
     monkeypatch.setattr(inc, "_commit", crash)
     with _pt.raises(OSError, match="injected crash"):
-        inc.compact_triple_support(spark, out, n_buckets=2)
+        inc.compact_triple_support(spark, out)
     monkeypatch.setattr(inc, "_commit", orig_commit)
 
     # the generation is complete on disk but not committed
@@ -965,7 +965,7 @@ def test_crash_between_bak_and_primary_manifest_reads_committed(
     assert got.index.equals(full.index)
     assert (got["n_support"] == full["n_support"]).all()
 
-    s2 = inc.compact_triple_support(spark, out, n_buckets=2)
+    s2 = inc.compact_triple_support(spark, out)
     assert s2["compacted"] == 3 and s2["generation"] == -2
     assert sorted(s2["removed_epochs"]) == [-1, 0, 1, 2]
     assert inc._epochs_on_disk(out) == [-2]
@@ -976,13 +976,13 @@ def test_crash_between_bak_and_primary_manifest_reads_committed(
     fresh = str(tmp_path / "fresh")
     monkeypatch.setattr(inc, "_commit", crash)
     with _pt.raises(OSError, match="injected crash"):
-        inc.merge_triple_support(dfs[0], fresh, epoch_id=0, n_buckets=2)
+        inc.merge_triple_support(dfs[0], fresh, epoch_id=0)
     monkeypatch.setattr(inc, "_commit", orig_commit)
     assert inc._epochs_on_disk(fresh) == [0]
     assert not os.path.exists(os.path.join(fresh, "_log"))
     with _pt.raises(RuntimeError, match="no committed version"):
         inc.read_triple_support(spark, fresh).count()
-    inc.merge_triple_support(dfs[0], fresh, epoch_id=0, n_buckets=2)
+    inc.merge_triple_support(dfs[0], fresh, epoch_id=0)
     assert inc.live_epochs(fresh) == [0]
     assert inc.read_triple_support(spark, fresh).count() == 2
 
@@ -999,16 +999,16 @@ def test_concurrent_merge_commits_lose_no_epoch(tmp_path, monkeypatch):
 
     out = str(tmp_path / "store")
 
-    def write_dir(partial, out_dir, epoch, n_buckets):
+    def write_dir(partial, out_dir, epoch):
         os.makedirs(os.path.join(out_dir, f"epoch={epoch}"))
 
     monkeypatch.setattr(inc, "_write_partition", write_dir)
-    inc._merge_epoch(None, out, 0, 2)  # version 0 exists before the race
+    inc._merge_epoch(None, out, 0)  # version 0 exists before the race
     errors = []
 
     def merge(epoch):
         try:
-            inc._merge_epoch(None, out, epoch, 2)
+            inc._merge_epoch(None, out, epoch)
         except Exception as e:  # reported by the assertion below
             errors.append(e)
 
@@ -1024,3 +1024,78 @@ def test_concurrent_merge_commits_lose_no_epoch(tmp_path, monkeypatch):
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads) and not errors
     assert inc.live_epochs(out) == list(range(33))
+
+
+def _two_epoch_stores(spark, tmp_path):
+    """A support and a beliefs store, each holding two epochs merged from
+    one-partition batches."""
+    ts = pd.Timestamp("2026-01-01", tz="UTC")
+    epochs = [
+        [("Q1", "ceo", "A", "c1", 1, ts), ("Q2", "hq", "X", "c1", 2, ts)],
+        [("Q1", "ceo", "B", "c2", 1, ts + pd.Timedelta("1h")),
+         ("Q3", "hq", "Y", "c2", 3, ts)],
+    ]
+    support, beliefs = str(tmp_path / "support"), str(tmp_path / "beliefs")
+    for i, rows in enumerate(epochs):
+        batch = spark.createDataFrame(
+            pd.DataFrame(rows, columns=KEYS + ["ts"]),
+            schema="subj string, pred string, obj string, conv_id string, "
+            "turn_idx long, ts timestamp",
+        ).coalesce(1)
+        incremental.merge_triple_support(batch, support, epoch_id=i)
+        incremental.merge_current_beliefs(batch, beliefs, epoch_id=i)
+    return support, beliefs
+
+
+def test_epoch_partition_holds_files_directly(spark, tmp_path):
+    """Each epoch partition -- a merged epoch or a compaction
+    generation -- holds its parquet files directly, with no
+    sub-directories; a one-partition merge leaves exactly one file, and
+    both views read the same before and after compaction."""
+    import os
+
+    stores = _two_epoch_stores(spark, tmp_path)
+    readers = (incremental.read_triple_support, incremental.read_current_beliefs)
+
+    def views():
+        return [
+            read(spark, store).toPandas().sort_values(["subj", "pred", "obj"])
+            .reset_index(drop=True)
+            for read, store in zip(readers, stores)
+        ]
+
+    def layout(store):
+        out = {}
+        for e in incremental._epochs_on_disk(store):
+            root, dirs, files = next(os.walk(os.path.join(store, f"epoch={e}")))
+            assert dirs == [], (root, dirs)
+            out[e] = sum(f.endswith(".parquet") for f in files)
+        return out
+
+    before = views()
+    for store in stores:
+        assert layout(store) == {0: 1, 1: 1}
+    incremental.compact_triple_support(spark, stores[0])
+    incremental.compact_current_beliefs(spark, stores[1])
+    for store in stores:
+        assert set(layout(store)) == {-1} and layout(store)[-1] >= 1
+    for b, a in zip(before, views()):
+        pd.testing.assert_frame_equal(b, a)
+
+
+def test_epoch_store_reads_build_without_jobs(spark, tmp_path):
+    """Building both views launches no Spark job: the scan takes its
+    schema from the commit log, not from an inference job. A store with
+    no committed version still refuses to read."""
+    support, beliefs = _two_epoch_stores(spark, tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("epoch_store_reads", "epoch_store_reads")
+    try:
+        incremental.read_triple_support(spark, support)
+        incremental.read_current_beliefs(spark, beliefs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("epoch_store_reads")) == 0
+    with pytest.raises(RuntimeError, match="no committed version"):
+        incremental.read_triple_support(spark, str(tmp_path / "empty"))

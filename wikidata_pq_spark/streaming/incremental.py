@@ -42,6 +42,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators import extract, linking
 from ..sources import tableio
@@ -210,9 +211,7 @@ def windowed_event_counts(
     )
 
 
-def merge_triple_support(
-    batch: DataFrame, out_dir: str, epoch_id: int, n_buckets: int = 16
-) -> None:
+def merge_triple_support(batch: DataFrame, out_dir: str, epoch_id: int) -> None:
     """Merge one batch of (subj, pred, obj, conv_id, turn_idx) triples
     into the running support table: the batch's PARTIAL aggregate lands
     under its own ``epoch=N`` partition and is then committed to the
@@ -246,7 +245,7 @@ def merge_triple_support(
             "conv_hll",
         )
     )
-    _merge_epoch(agg, out_dir, epoch_id, n_buckets)
+    _merge_epoch(agg, out_dir, epoch_id)
 
 
 def _reduce_support(raw: DataFrame) -> DataFrame:
@@ -274,7 +273,7 @@ def read_triple_support(spark: SparkSession, out_dir: str) -> DataFrame:
     (subj, pred, obj, n_support, n_convs_est, first_conv, first_turn).
     Sum / lexicographic-min / hll_union are all associative, so the
     result is independent of epoch arrival order."""
-    return _reduce_support(_live_partials(spark, out_dir)).select(
+    return _reduce_support(_live_partials(spark, out_dir, _head(out_dir)[1])).select(
         "subj", "pred", "obj", "n_support",
         F.hll_sketch_estimate("conv_hll").cast("long").alias("n_convs_est"),
         "first_conv", "first_turn",
@@ -282,10 +281,7 @@ def read_triple_support(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def incremental_triple_support(
-    stream_triples: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    n_buckets: int = 16,
+    stream_triples: DataFrame, out_dir: str, checkpoint_dir: str
 ):
     """Streaming wrapper: foreachBatch(merge_triple_support) with an
     availableNow trigger -- each micro-batch of linked triples lands as
@@ -294,7 +290,7 @@ def incremental_triple_support(
     at most once."""
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_triple_support(batch_df, out_dir, epoch_id, n_buckets=n_buckets)
+        merge_triple_support(batch_df, out_dir, epoch_id)
 
     return _drain(stream_triples, process_batch, checkpoint_dir)
 
@@ -346,12 +342,7 @@ def _reduce_beliefs(raw: DataFrame) -> DataFrame:
     )
 
 
-def merge_current_beliefs(
-    batch: DataFrame,
-    out_dir: str,
-    epoch_id: int,
-    n_buckets: int = 16,
-) -> None:
+def merge_current_beliefs(batch: DataFrame, out_dir: str, epoch_id: int) -> None:
     """Merge one batch of triples into the latest-assertion-wins view:
     the batch's per-(subj, pred) ARGMAX partial lands under its own
     ``epoch=N`` partition and is committed to the store's log, with the
@@ -363,7 +354,7 @@ def merge_current_beliefs(
     arrival order. Each partial is O(distinct keys in the batch), not
     O(batch rows): the epoch store stays a rollup, never a log.
     """
-    _merge_epoch(_argmax(batch), out_dir, epoch_id, n_buckets)
+    _merge_epoch(_argmax(batch), out_dir, epoch_id)
 
 
 def read_current_beliefs(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -371,14 +362,11 @@ def read_current_beliefs(spark: SparkSession, out_dir: str) -> DataFrame:
     -- identical output contract to ``operators.graph.current_beliefs``
     run over the full triple history: (subj, pred, obj, last_<col>...).
     """
-    return _reduce_beliefs(_live_partials(spark, out_dir))
+    return _reduce_beliefs(_live_partials(spark, out_dir, _head(out_dir)[1]))
 
 
 def incremental_current_beliefs(
-    stream_triples: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    n_buckets: int = 16,
+    stream_triples: DataFrame, out_dir: str, checkpoint_dir: str
 ):
     """Streaming wrapper: foreachBatch(merge_current_beliefs) with an
     availableNow trigger; the streaming checkpoint resumes a killed job
@@ -386,7 +374,7 @@ def incremental_current_beliefs(
     most once."""
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_current_beliefs(batch_df, out_dir, epoch_id, n_buckets=n_buckets)
+        merge_current_beliefs(batch_df, out_dir, epoch_id)
 
     return _drain(stream_triples, process_batch, checkpoint_dir)
 
@@ -401,10 +389,13 @@ def incremental_current_beliefs(
 # Bare parquet has no atomic multi-partition commit, so the live set is
 # recorded in an append-only log, ``<store>/_log/<version:020d>.json``
 # (the Delta Lake protocol, Armbrust et al., VLDB 2020). Each version is
-# a full snapshot {live, compacted_through, generation}, written to a
-# temp file, fsync'd, and installed with os.link, which fails if the
-# version exists: of two writers that read version V, exactly one
-# creates V+1 and the other gets FileExistsError.
+# a full snapshot {live, compacted_through, generation, schema}, written
+# to a temp file, fsync'd, and installed with os.link, which fails if
+# the version exists: of two writers that read version V, exactly one
+# creates V+1 and the other gets FileExistsError. ``schema`` is the
+# written partial's schema, epoch included (Delta's
+# metaData.schemaString), so a read builds its scan without a
+# schema-inference job.
 #
 # - A merge writes its ``epoch=N`` partition, then commits live ∪ {N};
 #   on a lost race it re-reads and retries, since adding an epoch
@@ -473,7 +464,9 @@ def _head(out_dir: str, own_epoch: int | None = None) -> tuple[int, dict]:
             "or never written, so the live set is unknown. Restore the "
             "log; the data was left untouched."
         )
-    return -1, {"live": [], "compacted_through": -1, "generation": None}
+    return -1, {
+        "live": [], "compacted_through": -1, "generation": None, "schema": None
+    }
 
 
 def _commit(out_dir: str, version: int, snapshot: dict) -> None:
@@ -498,25 +491,34 @@ def live_epochs(out_dir: str) -> list[int]:
     return _head(out_dir)[1]["live"]
 
 
-def _live_partials(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(out_dir).filter(
-        F.col("epoch").isin(live_epochs(out_dir))
+def _live_partials(spark: SparkSession, out_dir: str, snapshot: dict) -> DataFrame:
+    """The live partials of ``snapshot``, read with its logged schema:
+    building the scan launches no Spark job."""
+    if snapshot["schema"] is None:
+        raise RuntimeError(
+            f"store at {out_dir} has no committed version under "
+            f"{_log_dir(out_dir)}: no epoch was merged into it yet."
+        )
+    return (
+        spark.read.schema(StructType.fromJson(snapshot["schema"]))
+        .parquet(out_dir)
+        .filter(F.col("epoch").isin(snapshot["live"]))
     )
 
 
-def _write_partition(
-    partial: DataFrame, out_dir: str, epoch: int, n_buckets: int
-) -> None:
-    """Write ``partial`` as partition ``epoch=<epoch>``, bucketed by
-    subj; dynamic overwrite replaces only that partition."""
+def _write_partition(partial: DataFrame, out_dir: str, epoch: int) -> dict:
+    """Write ``partial`` as partition ``epoch=<epoch>``, its parquet
+    files directly in that directory; dynamic overwrite replaces only
+    that partition. Returns the written schema (with ``epoch``) for the
+    commit log."""
+    frame = partial.withColumn("epoch", F.lit(epoch))
     (
-        partial.withColumn("bucket", tableio.bucket_column("subj", n_buckets))
-        .withColumn("epoch", F.lit(epoch))
-        .write.mode("overwrite")
+        frame.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch", "bucket")
+        .partitionBy("epoch")
         .parquet(out_dir)
     )
+    return json.loads(frame.schema.json())
 
 
 def _check_above_watermark(out_dir: str, epoch: int, snapshot: dict) -> None:
@@ -531,20 +533,20 @@ def _check_above_watermark(out_dir: str, epoch: int, snapshot: dict) -> None:
         )
 
 
-def _merge_epoch(
-    partial: DataFrame, out_dir: str, epoch_id: int, n_buckets: int
-) -> None:
+def _merge_epoch(partial: DataFrame, out_dir: str, epoch_id: int) -> None:
     """Write one epoch's partial and commit it: the merge protocol."""
     epoch = int(epoch_id)
     version, snapshot = _head(out_dir, own_epoch=epoch)
     if epoch in snapshot["live"]:
         return  # a replay of a committed epoch
     _check_above_watermark(out_dir, epoch, snapshot)
-    _write_partition(partial, out_dir, epoch, n_buckets)
+    schema = _write_partition(partial, out_dir, epoch)
     while True:
         live = sorted(snapshot["live"] + [epoch])
         try:
-            _commit(out_dir, version + 1, {**snapshot, "live": live})
+            _commit(
+                out_dir, version + 1, {**snapshot, "live": live, "schema": schema}
+            )
             return
         except FileExistsError:  # another writer committed first: re-read
             version, snapshot = _head(out_dir, own_epoch=epoch)
@@ -580,15 +582,13 @@ def _collect(out_dir: str, snapshot: dict) -> list[int]:
     return gone
 
 
-def _compact(
-    spark: SparkSession, out_dir: str, reducer, n_buckets: int
-) -> dict:
+def _compact(spark: SparkSession, out_dir: str, reducer) -> dict:
     """Shared compaction engine: reduce the live epochs of the newest
     log version into one new generation, commit it, then collect
     garbage. ``reducer`` maps the raw live-partial frame to the merged
-    partial (same schema minus epoch/bucket). Returns a summary dict;
-    with at most one live epoch there is nothing to reduce and the
-    summary has ``compacted == 0``."""
+    partial (same schema minus epoch). Returns a summary dict; with at
+    most one live epoch there is nothing to reduce and the summary has
+    ``compacted == 0``."""
     version, snapshot = _head(out_dir)
     live = snapshot["live"]
     if len(live) <= 1:
@@ -598,13 +598,14 @@ def _compact(
             "removed_epochs": _collect(out_dir, snapshot),
         }
     gen = _claim_generation(out_dir)
-    raw = spark.read.parquet(out_dir).filter(F.col("epoch").isin(live))
-    merged, n_rows = tableio.observe_rows(reducer(raw))
-    _write_partition(merged, out_dir, gen, n_buckets)
+    merged, n_rows = tableio.observe_rows(
+        reducer(_live_partials(spark, out_dir, snapshot))
+    )
     committed = {
         "live": [gen],
         "compacted_through": max([snapshot["compacted_through"], *live]),
         "generation": gen,
+        "schema": _write_partition(merged, out_dir, gen),
     }
     try:
         _commit(out_dir, version + 1, committed)
@@ -623,16 +624,12 @@ def _compact(
     }
 
 
-def compact_triple_support(
-    spark: SparkSession, out_dir: str, n_buckets: int = 16
-) -> dict:
+def compact_triple_support(spark: SparkSession, out_dir: str) -> dict:
     """Compact the triple-support epoch store; compact-then-stream ==
     stream, since the generation keeps the raw hll sketch."""
-    return _compact(spark, out_dir, _reduce_support, n_buckets)
+    return _compact(spark, out_dir, _reduce_support)
 
 
-def compact_current_beliefs(
-    spark: SparkSession, out_dir: str, n_buckets: int = 16
-) -> dict:
+def compact_current_beliefs(spark: SparkSession, out_dir: str) -> dict:
     """Compact the current-beliefs epoch store (argmax of argmaxes)."""
-    return _compact(spark, out_dir, _reduce_beliefs, n_buckets)
+    return _compact(spark, out_dir, _reduce_beliefs)
