@@ -9,8 +9,7 @@ Launch (the north rule's launch mode):
         --transcripts <parquet-or-iceberg-path> \
         --alias-dict <parquet path> \
         --same-as <parquet path> \
-        --out <output dir> [--chunks 1] [--buckets 64] \
-        [--link-strategy broadcast]
+        --out <output dir> [--chunks 1] [--link-strategy broadcast]
 
 On a real cluster pass executor configs as usual; the pipeline itself
 is resumable (re-submit after a failure and completed units skip).
@@ -19,15 +18,15 @@ Output layout under ``--out``:
 
     staged/_chunk=i/           the input, partitioned by chunk (only
                                with --chunks > 1)
-    edges/chunk=i/bucket=N/    the canonical triples, bucketed by
-                               subject hash -- the only copy of the
-                               triple set, one slice per chunk
-    edges_audit/chunk=i/       (bucket, rows, min_id, max_id); read from
-                               the root, chunk=i adds the chunk column
+    edges/chunk=i/             the canonical triples -- the only copy
+                               of the triple set, one slice per chunk
+    edges_audit/chunk=i/       (rows, min_id, max_id), one row per
+                               non-empty chunk; read from the root,
+                               chunk=i adds the chunk column
     components/                same-as component map (CANONICALIZED,
                                once per store)
-    nodes/bucket=N/            distinct entity ids (MATERIALIZED)
-    nodes_audit/
+    nodes/                     distinct entity ids (MATERIALIZED)
+    nodes_audit/               (source, rows, min_id, max_id)
     _state/chunk_NNNNN.json    per chunk: LINKED + mentions/linked rows
     _state/corpus.json         corpus-wide stage reached (CANONICALIZED,
                                MATERIALIZED, VERIFIED, COMPLETE) + row
@@ -48,10 +47,9 @@ def main() -> None:
     p.add_argument("--alias-dict", required=True)
     p.add_argument("--same-as", required=True)
     p.add_argument("--out", required=True)
-    p.add_argument("--buckets", type=int, default=64)
     p.add_argument(
         "--link-strategy", default="broadcast",
-        choices=["auto", "broadcast", "salted", "shuffle"],
+        choices=["broadcast", "salted", "shuffle"],
     )
     p.add_argument(
         "--chunks", type=int, default=1,
@@ -68,8 +66,7 @@ def main() -> None:
     from wikidata_pq_spark.pipeline import KGPipeline
 
     pipe = KGPipeline(
-        spark, args.out, n_chunks=args.chunks, n_buckets=args.buckets,
-        link_strategy=args.link_strategy,
+        spark, args.out, n_chunks=args.chunks, link_strategy=args.link_strategy,
     )
     metrics = pipe.run(
         spark.read.parquet(args.transcripts),

@@ -46,7 +46,7 @@ def _crash_after(unit: str, step: Step):
 
 
 def _chunk_rows(spark, out):
-    """Per-chunk row totals of the (chunk x bucket) sidecars."""
+    """Per-chunk row totals of the per-chunk sidecars."""
     pdf = spark.read.parquet(os.path.join(out, "edges_audit")).toPandas()
     return {int(k): int(v) for k, v in pdf.groupby("chunk")["rows"].sum().items()}
 
@@ -104,11 +104,11 @@ def test_kill_and_resume_identical(spark, spark_corpus, tmp_path, n_chunks, monk
 
 
 def test_per_chunk_audit_sidecars_post_check(spark, spark_corpus, tmp_path):
-    """Per-(chunk x bucket) sidecars (the reference's per-source x table
-    sidecar keying, reference: partitioning/core.py:14-35) survive a
+    """Per-chunk sidecars (the reference's per-source x table sidecar
+    keying, reference: partitioning/core.py:14-35) survive a
     kill/resume and post-check against the sinks."""
     out = str(tmp_path / "kg")
-    pipe = KGPipeline(spark, out, n_chunks=4, n_buckets=4)
+    pipe = KGPipeline(spark, out, n_chunks=4)
     with _crash_after("chunk_00001", Step.LINKED), pytest.raises(Killed):
         _run(pipe, spark_corpus)
     # the sidecars of the chunks that finished before the kill are there
@@ -116,13 +116,12 @@ def test_per_chunk_audit_sidecars_post_check(spark, spark_corpus, tmp_path):
         "chunk=0", "chunk=1"
     ]
 
-    pipe2 = KGPipeline(spark, out, n_chunks=4, n_buckets=4)
+    pipe2 = KGPipeline(spark, out, n_chunks=4)
     _run(pipe2, spark_corpus)
     assert pipe2.post_check()
-    # sidecars carry the chunk unit and bucket key with rows/min/max
+    # sidecars carry the chunk unit with rows/min/max
     pdf = spark.read.parquet(os.path.join(out, "edges_audit")).toPandas()
-    assert {"chunk", "bucket", "rows", "min_id", "max_id"} <= set(pdf.columns)
-    assert set(pdf["bucket"]) <= set(range(4))
+    assert {"chunk", "rows", "min_id", "max_id"} <= set(pdf.columns)
     # sidecar row totals == the state store's per-chunk rows
     assert _chunk_rows(spark, out) == {
         i: pipe2.state.metrics(u)["linked"] for i, u in enumerate(pipe2.units())
@@ -184,17 +183,32 @@ def test_empty_chunks_survive(spark, tmp_path):
     assert len(_tset(pipe.triples())) > 0
 
 
+def _tree(root):
+    return sorted(
+        os.path.relpath(os.path.join(r, n), root)
+        for r, dirs, files in os.walk(root) for n in dirs + files
+    )
+
+
 def test_resume_refuses_old_layout(spark, spark_corpus, tmp_path):
     """An out_dir holding an older pipeline's layout (a ``mentions`` or
-    ``triples`` dir) must refuse to resume: its finished stages would be
-    skipped or mixed with new chunks instead of re-run."""
-    for old in ("mentions", "triples"):
-        out = tmp_path / old
-        os.makedirs(out / old / "chunk=0")
+    ``triples`` dir, or a ``bucket=`` level under ``edges/chunk=*`` or
+    ``nodes``) must refuse to resume, and write nothing: its finished
+    stages would be skipped or mixed with new chunks, or directory
+    depths mixed under ``edges``, instead of re-run."""
+    for name, old in [
+        ("mentions", "mentions/chunk=0"),
+        ("triples", "triples/chunk=0"),
+        ("edges_bucket", "edges/chunk=0/bucket=3"),
+        ("nodes_bucket", "nodes/bucket=3"),
+    ]:
+        out = tmp_path / name
+        os.makedirs(out / old)
         pipe = KGPipeline(spark, str(out), n_chunks=4)
+        before = _tree(out)
         with pytest.raises(RuntimeError, match="layout of an older pipeline"):
             _run(pipe, spark_corpus)
-        assert not (out / "edges").exists()
+        assert _tree(out) == before, name
 
 
 def _duplicated_corpus():

@@ -31,9 +31,11 @@ def test_salted_equals_broadcast(spark_corpus):
         m, spark_corpus["alias_dict"], strategy="salted", n_salt=5
     ).toPandas()
     assert sorted(map(tuple, b[KEYS].values)) == sorted(map(tuple, s[KEYS].values))
-    # a misspelt strategy raises instead of falling through to a plain join
-    with pytest.raises(ValueError, match="braodcast"):
-        linking.link_mentions(m, spark_corpus["alias_dict"], strategy="braodcast")
+    # a misspelt or removed strategy raises instead of falling through
+    # to a plain join
+    for bad in ("braodcast", "auto"):
+        with pytest.raises(ValueError, match=bad):
+            linking.link_mentions(m, spark_corpus["alias_dict"], strategy=bad)
 
 
 def test_unlinkable_mentions_dropped(spark, spark_corpus):

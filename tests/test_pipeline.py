@@ -36,9 +36,9 @@ def test_end_to_end_pr(spark, spark_corpus, corpus, tmp_path):
     # mentions link straight to canonical ids: no linked stage table
     assert not os.path.exists(tmp_path / "kg" / "linked")
     assert metrics["linked"] == pipe.triples().count()
-    # the triple set is stored once, as the bucketed, audited edges
+    # the triple set is stored once, as the audited edges
     assert not os.path.exists(tmp_path / "kg" / "triples")
-    assert "bucket" not in pipe.triples().columns
+    assert "chunk" not in pipe.triples().columns
     audit = spark.read.parquet(str(tmp_path / "kg" / "edges_audit")).toPandas()
     assert audit["rows"].sum() == metrics["linked"]
     assert metrics["nodes"] == pipe.nodes().count()
@@ -69,9 +69,25 @@ def test_complete_run_is_noop(spark, spark_corpus, tmp_path):
         assert os.path.getmtime(os.path.join(str(out), p)) == t
 
 
-def test_edges_bucketed_and_audited(spark, spark_corpus, tmp_path):
-    pipe, _ = _run(spark, spark_corpus, tmp_path / "kg", n_buckets=8)
-    edges = pipe.edges().toPandas()
-    assert set(edges["bucket"]) <= set(range(8))
-    audit = spark.read.parquet(str(tmp_path / "kg" / "edges_audit")).toPandas()
-    assert audit["rows"].sum() == len(edges)
+def _parquet_files(path):
+    return [f for f in os.listdir(path) if f.endswith(".parquet")]
+
+
+def test_edges_layout_and_audit(spark, spark_corpus, tmp_path):
+    """Chunks are the only partition level: ``edges/chunk=i`` and
+    ``nodes`` hold their parquet files directly, and the edges sidecar
+    holds one (rows, min_id, max_id) row per non-empty chunk."""
+    out = tmp_path / "kg"
+    pipe, _ = _run(spark, spark_corpus, out, n_chunks=4)
+    assert _parquet_files(out / "edges" / "chunk=0")
+    assert _parquet_files(out / "nodes")
+    assert [
+        os.path.join(root, d)
+        for root, dirs, _ in os.walk(out) for d in dirs if d.startswith("bucket=")
+    ] == []
+    audit = spark.read.parquet(str(out / "edges_audit")).toPandas()
+    assert sorted(audit.columns) == ["chunk", "max_id", "min_id", "rows"]
+    linked = {i: pipe.state.metrics(u)["linked"] for i, u in enumerate(pipe.units())}
+    assert sorted(zip(audit["chunk"], audit["rows"])) == [
+        (i, n) for i, n in linked.items() if n > 0
+    ]

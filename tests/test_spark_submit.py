@@ -49,7 +49,6 @@ def test_spark_submit_pyfiles(spark, tmp_path):
             "--alias-dict", str(data / "alias_dict"),
             "--same-as", str(data / "same_as"),
             "--out", str(out),
-            "--buckets", "4",
         ],
         capture_output=True, text=True, timeout=420,
     )
@@ -97,7 +96,6 @@ def test_spark_submit_pyfiles_multi_executor(spark, tmp_path):
             "--alias-dict", str(data / "alias_dict"),
             "--same-as", str(data / "same_as"),
             "--out", str(out),
-            "--buckets", "4",
         ],
         capture_output=True, text=True, timeout=420,
     )

@@ -86,14 +86,6 @@ def test_post_check_missing_audit(spark, tmp_path):
     assert not tableio.post_check(spark, str(tmp_path / "nope"), ["part"], "id")
 
 
-def test_bucket_column_stable(spark):
-    df = _df(spark).withColumn("b", tableio.bucket_column("id", 16))
-    a = df.toPandas().sort_values("id")
-    b = df.toPandas().sort_values("id")
-    assert (a["b"].values == b["b"].values).all()
-    assert set(a["b"]) <= set(range(16))
-
-
 def test_state_store_roundtrip(tmp_path):
     st = StateStore(str(tmp_path / "state"))
     assert st.get("u1") == Step.INIT
@@ -152,13 +144,18 @@ def test_iceberg_seam_routing(spark, tmp_path, monkeypatch):
     assert tableio.iceberg_available(spark) is False
 
 
-def test_write_with_audit_empty_frame(spark, tmp_path):
-    """An all-empty partitioned write (no part files, bare _SUCCESS)
-    must produce an empty sidecar and a passing post-check, not an
-    UNABLE_TO_INFER_SCHEMA crash -- the shape of an empty chunk, which
-    a skewed conversation hash gives ``KGPipeline(n_chunks>1)``."""
+@pytest.mark.parametrize(
+    "partition_cols", [[], ["part"]], ids=["unpartitioned", "part"]
+)
+def test_write_with_audit_empty_frame(spark, tmp_path, partition_cols):
+    """An all-empty write must produce an empty sidecar and a passing
+    post-check. Partitioned, it leaves no part files (bare _SUCCESS),
+    and the re-read must not crash with UNABLE_TO_INFER_SCHEMA;
+    unpartitioned, the global aggregate's zero-row group must not
+    reach the sidecar. Both are the shape of an empty chunk, which a
+    skewed conversation hash gives ``KGPipeline(n_chunks>1)``."""
     df = _df(spark, 10).filter(F.lit(False))
     path = str(tmp_path / "empty")
-    tableio.write_with_audit(df, path, ["part"], id_col="id")
+    tableio.write_with_audit(df, path, partition_cols, id_col="id")
     assert spark.read.parquet(path + "_audit").count() == 0
-    assert tableio.post_check(spark, path, ["part"], "id") is True
+    assert tableio.post_check(spark, path, partition_cols, "id") is True

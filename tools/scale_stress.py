@@ -15,7 +15,7 @@ correctness gate cannot give:
   deterministic first-component perturbation. Runs IVF and brute-force
   ANN.
 - **KG pipeline at ~sf1-equivalent**: ``KGPipeline(n_chunks=8)``
-  (input staged once by chunk, per-chunk checkpoints, bucketed sink
+  (input staged once by chunk, per-chunk checkpoints, per-chunk sink
   with audit sidecars, then nodes and the post-check) over the
   20k-conversation / 1M-turn scaling corpus (.bench_data/c20000_t50,
   regenerated deterministically if absent), followed by a second full
@@ -561,7 +561,7 @@ def main() -> None:
     sa = spark.read.parquet(str(corpus / "same_as"))
     n_turns = tr.count()
     out_dir = tempfile.mkdtemp(prefix="stress_kg_")
-    pipe = KGPipeline(spark, out_dir, n_chunks=8, n_buckets=8)
+    pipe = KGPipeline(spark, out_dir, n_chunks=8)
     step("kg_pipeline_1m_turns", lambda: pipe.run(tr, ad, sa)["linked"])
 
     def _post():

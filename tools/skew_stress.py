@@ -380,7 +380,7 @@ def main() -> None:
     chaos_dir = tempfile.mkdtemp(prefix="chaos_kill_")
 
     def run_clean():
-        pipe = KGPipeline(spark, clean_dir, n_chunks=8, n_buckets=8)
+        pipe = KGPipeline(spark, clean_dir, n_chunks=8)
         pipe.run(tr, ad, sa)
         n, h = triple_fingerprint(clean_dir)
         return {"rows": n, "fingerprint": h}
@@ -399,7 +399,7 @@ def main() -> None:
         if proc.returncode == 0:
             raise RuntimeError("chaos child exited cleanly; kill never fired")
         # resume in THIS session
-        pipe = KGPipeline(spark, chaos_dir, n_chunks=8, n_buckets=8)
+        pipe = KGPipeline(spark, chaos_dir, n_chunks=8)
         linked_before = sum(
             pipe.state.get(u) >= Step.LINKED for u in pipe.units()
         )
@@ -464,7 +464,7 @@ def _chaos_child(out_dir: str, corpus_dir: str) -> None:
     tr = spark.read.parquet(os.path.join(corpus_dir, "transcripts"))
     ad = spark.read.parquet(os.path.join(corpus_dir, "alias_dict"))
     sa = spark.read.parquet(os.path.join(corpus_dir, "same_as"))
-    KGPipeline(spark, out_dir, n_chunks=8, n_buckets=8).run(tr, ad, sa)
+    KGPipeline(spark, out_dir, n_chunks=8).run(tr, ad, sa)
     # reaching here means the kill never fired
     sys.exit(0)
 

@@ -14,8 +14,8 @@ transcript -> (subj, pred, obj) triple factory:
 - canonicalization via connected components over same-as edges
   (driver union-find under a size threshold, distributed min-label
   propagation + pointer jumping above; size-gated broadcast rewrite),
-- graph materialization as subject-hash-bucketed nodes/edges tables
-  with per-partition lineage sidecars,
+- graph materialization as per-chunk edges and one nodes table, each
+  with (rows, min_id, max_id) lineage sidecars,
 - resumable per-partition checkpoints.
 
 See SURVEY.md for the reference operator inventory this covers.

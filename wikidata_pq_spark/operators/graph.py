@@ -9,9 +9,9 @@ consumer needs neighborhood, degree and ranking queries:
 - k_hop: k bounded equi-joins from a seed frontier -- the standard
   distributed BFS expansion. The frontier is deduplicated per hop
   (distinct), so fan-out is bounded by |reachable set| per hop, and k
-  is a small constant (2-4 in practice). At 100 TB, edges bucketed by
-  src (tableio's bucket column / Iceberg bucket(N, subj)) make every
-  hop a co-located join.
+  is a small constant (2-4 in practice). Edges written with
+  ``tableio.write_bucketed_table`` on src make every hop a co-located
+  join; the pipeline's chunk-partitioned ``edges`` do not.
 """
 
 from __future__ import annotations
@@ -567,7 +567,9 @@ def current_beliefs(
 
     The belief-revision / upsert semantics of a living KG -- at scale
     this is the MERGE-INTO read shape: one window per (subj, pred),
-    partition-pruned by subject bucket in the materialized tables.
+    co-located only in a table bucketed on subj
+    (``tableio.write_bucketed_table``), not in the pipeline's
+    chunk-partitioned ``edges``.
 
     ``as_of`` (r6) is TIME TRAVEL: restrict to assertions with
     ``ts <= as_of`` before the argmax, answering "what did the KG

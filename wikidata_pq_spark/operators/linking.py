@@ -15,7 +15,6 @@ Strategies (any other value raises ``ValueError``):
   give each probe row a deterministic salt, join on (key, salt) so one
   hot alias spreads over SALT_N reducers. AQE skew-join handles residual
   imbalance.
-- ``auto``: broadcast if the dictionary fits the budget, else salted.
 - ``shuffle``: unhinted join (the plain baseline).
 """
 
@@ -68,16 +67,9 @@ def link_mentions(
     (reference: claims.py:206-213). Pass the dictionary composed by
     ``canonicalize.apply_canonical`` to link straight to canonical ids.
     """
-    if strategy not in ("broadcast", "salted", "auto", "shuffle"):
+    if strategy not in ("broadcast", "salted", "shuffle"):
         raise ValueError(f"link_mentions: unknown strategy {strategy!r}")
     dict_df = alias_dict.select("alias", "entity_id")
-    if strategy == "auto":
-        # dictionary fits the broadcast budget -> map-side join; else the
-        # salted shuffle join (Zipf-hot aliases spread over n_salt
-        # reducers). One bounded count action decides.
-        limit = 5_000_000
-        small = dict_df.limit(limit + 1).count() <= limit
-        strategy = "broadcast" if small else "salted"
 
     def _join(df: DataFrame, mention_col: str, out_col: str, how: str) -> DataFrame:
         renamed = dict_df.withColumnRenamed("alias", mention_col).withColumnRenamed(

@@ -11,13 +11,18 @@ re-does only the unit it died in. Stage graph, per unit kind:
                 by chunk; each chunk then reads one partition
   chunk_NNNNN   LINKED: extract -> link to canonical ids -> distinct
                 (``linking.kg_chain``), written once as
-                ``edges/chunk=i/bucket=b`` with its sidecar at
-                ``edges_audit/chunk=i``
+                ``edges/chunk=i/part-*.parquet`` with its sidecar at
+                ``edges_audit/chunk=i`` (one row; none if empty)
   corpus        MATERIALIZED: ``nodes`` (distinct entity ids) from all
-                of ``edges``
-                VERIFIED: post-check of ``edges`` per (chunk x bucket)
-                and of ``nodes`` per bucket against their sidecars
+                of ``edges``, written as ``nodes/part-*.parquet``
+                VERIFIED: post-check of ``edges`` per chunk and of
+                ``nodes`` as a whole against their sidecars
                 COMPLETE
+
+Chunks are the only partition level: nothing reads, joins or checks on
+a finer key. For subject-co-located joins use
+``tableio.write_bucketed_table``; Hive-style directories carry no bucket
+spec.
 
 Every stage is idempotent: re-running a completed stage is a no-op
 (skip gate), and a completed store re-runs without a Spark job.
@@ -25,6 +30,7 @@ Every stage is idempotent: re-running a completed stage is a no-op
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,9 +41,11 @@ from .plans.checkpoint import StateStore, Step
 from .sources import tableio
 
 CORPUS = "corpus"  # the unit that owns the corpus-wide stages
-# directories of the layouts before chunk units: resuming one would mix
-# old and new chunks, so the pipeline refuses such an out_dir
-OLD_LAYOUT_DIRS = ("mentions", "triples")
+# what older layouts leave in an out_dir: the stage tables from before
+# chunk units, and the subject-hash bucket= level under edges and nodes.
+# Resuming one would mix old and new chunks or directory depths, so the
+# pipeline refuses such an out_dir
+OLD_LAYOUT = ("mentions", "triples", "edges/chunk=*/bucket=*", "nodes/bucket=*")
 
 
 class KGPipeline:
@@ -60,13 +68,11 @@ class KGPipeline:
         spark: SparkSession,
         out_dir: str,
         n_chunks: int = 1,
-        n_buckets: int = 16,
         link_strategy: str = "broadcast",
     ):
         self.spark = spark
         self.out_dir = out_dir
         self.n_chunks = n_chunks
-        self.n_buckets = n_buckets
         self.link_strategy = link_strategy
         self.state = StateStore(os.path.join(out_dir, "_state"))
 
@@ -91,7 +97,7 @@ class KGPipeline:
         """Run (or resume) the pipeline; returns the ``mentions`` and
         ``linked`` rows summed over chunks, and the ``nodes`` rows."""
         st = self.state
-        old = [d for d in OLD_LAYOUT_DIRS if os.path.isdir(self.path(d))]
+        old = [g for g in OLD_LAYOUT if glob.glob(self.path(g))]
         if old:
             raise RuntimeError(
                 f"KGPipeline: {self.out_dir} holds {old}, the layout of an "
@@ -132,13 +138,12 @@ class KGPipeline:
             mentions, n_mentions = tableio.observe_rows(extract.extract_mentions(turns))
             edges, n_linked = tableio.observe_rows(
                 linking.kg_chain(mentions, canon_dict, self.link_strategy)
-                .withColumn("bucket", tableio.bucket_column("subj", self.n_buckets))
             )
             # chunk i's slice of edges; the chunk=i directory of its
             # sidecar supplies the sidecar's chunk column
             tableio.write_with_audit(
                 edges, os.path.join(self.path("edges"), f"chunk={i}"),
-                ["bucket"], id_col="subj",
+                [], id_col="subj",
                 audit_path=os.path.join(self.path("edges_audit"), f"chunk={i}"),
             )
             st.set(
@@ -159,10 +164,9 @@ class KGPipeline:
                     )
                 )
                 .distinct()
-                .withColumn("bucket", tableio.bucket_column("entity_id", self.n_buckets))
             )
             tableio.write_with_audit(
-                nodes, self.path("nodes"), ["bucket"], id_col="entity_id",
+                nodes, self.path("nodes"), [], id_col="entity_id",
                 source=("source", CORPUS),
             )
             st.set(CORPUS, Step.MATERIALIZED, **metrics, nodes=n_nodes.get["rows"])
@@ -177,21 +181,21 @@ class KGPipeline:
         return metrics
 
     def post_check(self) -> bool:
-        """``edges`` matches its sidecars per (chunk x bucket) and
-        ``nodes`` per bucket -- the reference's post-check over
-        per-source sidecars (reference: DESIGN.md:95-112). One check per
-        table, whatever ``n_chunks`` is."""
+        """``edges`` matches its sidecars per chunk and ``nodes`` its
+        sidecar -- the reference's post-check over per-source sidecars
+        (reference: DESIGN.md:95-112). One check per table, whatever
+        ``n_chunks`` is."""
         return tableio.post_check(
-            self.spark, self.path("edges"), ["chunk", "bucket"], "subj",
+            self.spark, self.path("edges"), ["chunk"], "subj",
             audit_path=self.path("edges_audit"),
         ) and tableio.post_check(
-            self.spark, self.path("nodes"), ["bucket"], "entity_id",
+            self.spark, self.path("nodes"), [], "entity_id",
             source=("source", CORPUS),
         )
 
     # -- results -------------------------------------------------------
     def triples(self) -> DataFrame:
-        return self.edges().drop("chunk", "bucket")
+        return self.edges().drop("chunk")
 
     def edges(self) -> DataFrame:
         return self.spark.read.parquet(self.path("edges"))

@@ -83,11 +83,6 @@ def observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
     return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
-def bucket_column(col_name: str, n_buckets: int):
-    """Deterministic subject-hash bucket (Iceberg bucket(N, col) stand-in)."""
-    return F.pmod(F.xxhash64(F.col(col_name)), F.lit(n_buckets)).cast("int")
-
-
 def write_partitioned(
     df: DataFrame,
     path: str,
@@ -104,12 +99,15 @@ def audit_frame(df: DataFrame, partition_cols: list[str], id_col: str) -> DataFr
     Spark exposes no per-partition finish callback (reference:
     core.py:25-35), so the audit is computed as a query over the same
     data -- one extra partial-aggregated pass, map-side combined.
+    Only non-empty partitions get a row: the zero-row group a global
+    aggregate (no ``partition_cols``) yields on an empty frame is
+    dropped, so an empty sink audits as empty either way.
     """
     return df.groupBy(*partition_cols).agg(
         F.count(F.lit(1)).alias("rows"),
         F.min(id_col).alias("min_id"),
         F.max(id_col).alias("max_id"),
-    )
+    ).filter(F.col("rows") > 0)
 
 
 def write_with_audit(
@@ -117,11 +115,10 @@ def write_with_audit(
     path: str,
     partition_cols: list[str],
     id_col: str,
-    mode: str = "overwrite",
     source: tuple[str, object] | None = None,
     audit_path: str | None = None,
 ) -> None:
-    """Partitioned write + sidecar audit parquet.
+    """Partitioned write (overwriting ``path``) + sidecar audit parquet.
 
     ``source`` = (column_name, value) stamps the processing unit on
     every sidecar row -- the key the reference's sidecars carry (one
@@ -132,7 +129,7 @@ def write_with_audit(
     (per-unit writers accumulate sidecars under a shared audit/ tree,
     the layout of the reference's audit/{table}/{source_name}).
     """
-    write_partitioned(df, path, partition_cols, mode=mode)
+    write_partitioned(df, path, partition_cols)
     # explicit schema: an all-empty frame writes no part files under
     # partitionBy, and a schema-inferring re-read of the bare _SUCCESS
     # dir raises UNABLE_TO_INFER_SCHEMA -- with the writer's schema the
@@ -145,7 +142,7 @@ def write_with_audit(
     if source is not None:
         col, value = source
         audit = audit.select(F.lit(value).alias(col), "*")
-    audit.write.mode(mode).parquet(audit_path or path + "_audit")
+    audit.write.mode("overwrite").parquet(audit_path or path + "_audit")
 
 
 def write_bucketed_table(
@@ -157,8 +154,8 @@ def write_bucketed_table(
 ) -> None:
     """True Spark bucketing (bucketBy + saveAsTable): a join between two
     tables bucketed on the same key with the same bucket count needs NO
-    shuffle on either side -- the physical realization of the Iceberg
-    ``bucket(N, subj)`` layout the pipeline targets (SURVEY.md §7.2.6).
+    shuffle on either side -- the Iceberg ``bucket(N, subj)`` layout
+    (SURVEY.md §7.2.6), which Hive-style partition directories cannot give.
 
     Requires a session catalog (spark-warehouse locally); tested to
     produce a shuffle-free sort-merge join in tests/test_bucketing.py.
