@@ -20,17 +20,16 @@ Output layout under ``--out``:
                                with --chunks > 1)
     edges/chunk=i/             the canonical triples -- the only copy
                                of the triple set, one slice per chunk
-    edges_audit/chunk=i/       (rows, min_id, max_id), one row per
-                               non-empty chunk; read from the root,
-                               chunk=i adds the chunk column
     components/                same-as component map (CANONICALIZED,
                                once per store)
     nodes/                     distinct entity ids (MATERIALIZED)
-    nodes_audit/               (source, rows, min_id, max_id)
-    _state/chunk_NNNNN.json    per chunk: LINKED + mentions/linked rows
+    _state/chunk_NNNNN.json    per chunk: LINKED, mentions/linked rows,
+                               and the edges write's audit row
+                               (rows, min_id, max_id) and schema
     _state/corpus.json         corpus-wide stage reached (CANONICALIZED,
-                               MATERIALIZED, VERIFIED, COMPLETE) + row
-                               totals
+                               MATERIALIZED, VERIFIED, COMPLETE), row
+                               totals, and the nodes write's audit row
+                               and schema
 """
 
 from __future__ import annotations

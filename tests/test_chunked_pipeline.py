@@ -7,10 +7,14 @@ import os
 
 import pytest
 
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
 from wikidata_pq_spark import datagen, oracle
 from wikidata_pq_spark.operators import canonicalize
 from wikidata_pq_spark.pipeline import KGPipeline
 from wikidata_pq_spark.plans.checkpoint import StateStore, Step
+from wikidata_pq_spark.sources import tableio
 
 KEYS = ["subj", "pred", "obj", "conv_id", "turn_idx"]
 
@@ -46,9 +50,30 @@ def _crash_after(unit: str, step: Step):
 
 
 def _chunk_rows(spark, out):
-    """Per-chunk row totals of the per-chunk sidecars."""
-    pdf = spark.read.parquet(os.path.join(out, "edges_audit")).toPandas()
-    return {int(k): int(v) for k, v in pdf.groupby("chunk")["rows"].sum().items()}
+    """Per-chunk (rows, min_id, max_id) recomputed from ``edges``."""
+    pdf = (
+        spark.read.parquet(os.path.join(out, "edges"))
+        .groupBy("chunk")
+        .agg(F.count(F.lit(1)).alias("rows"), F.min("subj"), F.max("subj"))
+        .toPandas()
+    )
+    return {int(r[0]): (int(r[1]), r[2], r[3]) for r in pdf.itertuples(index=False)}
+
+
+def _recorded_rows(pipe):
+    """Per-chunk audit rows the chunk records hold, non-empty chunks only."""
+    audits = [pipe.state.metrics(u)["audit"] for u in pipe.units()]
+    return {
+        i: (a["rows"], a["min_id"], a["max_id"])
+        for i, a in enumerate(audits) if a["rows"]
+    }
+
+
+def _audit_dirs(out):
+    return [
+        os.path.join(root, d)
+        for root, dirs, _ in os.walk(out) for d in dirs if d.endswith("_audit")
+    ]
 
 
 def test_chunked_equals_oracle(spark, spark_corpus, corpus, tmp_path):
@@ -62,10 +87,10 @@ def test_chunked_equals_oracle(spark, spark_corpus, corpus, tmp_path):
     assert (p, r) == (1.0, 1.0)
     assert metrics["linked"] == pipe.triples().count()
     assert metrics["nodes"] == pipe.nodes().count()
-    # per-chunk rows: the state store and the sidecars agree
+    # per-chunk rows: the state records and the edges on disk agree
     per_chunk = {i: pipe.state.metrics(u)["linked"] for i, u in enumerate(pipe.units())}
     assert sum(per_chunk.values()) == metrics["linked"]
-    assert _chunk_rows(spark, str(tmp_path / "kg")) == per_chunk
+    assert _chunk_rows(spark, str(tmp_path / "kg")) == _recorded_rows(pipe)
     assert pipe.state.get("corpus") == Step.COMPLETE
 
 
@@ -103,29 +128,26 @@ def test_kill_and_resume_identical(spark, spark_corpus, tmp_path, n_chunks, monk
     assert len(cc_calls) == 1  # a completed store re-runs without CC
 
 
-def test_per_chunk_audit_sidecars_post_check(spark, spark_corpus, tmp_path):
-    """Per-chunk sidecars (the reference's per-source x table sidecar
-    keying, reference: partitioning/core.py:14-35) survive a
-    kill/resume and post-check against the sinks."""
+def test_per_chunk_audit_records_post_check(spark, spark_corpus, tmp_path):
+    """Each chunk's record keeps the audit row of its edges write (the
+    reference's per-source audit keying, reference:
+    partitioning/core.py:14-35); the records survive a kill/resume and
+    post-check against the sinks."""
     out = str(tmp_path / "kg")
     pipe = KGPipeline(spark, out, n_chunks=4)
     with _crash_after("chunk_00001", Step.LINKED), pytest.raises(Killed):
         _run(pipe, spark_corpus)
-    # the sidecars of the chunks that finished before the kill are there
-    assert sorted(os.listdir(os.path.join(out, "edges_audit"))) == [
-        "chunk=0", "chunk=1"
-    ]
+    # the chunks that finished before the kill hold their audit rows
+    assert [
+        "audit" in pipe.state.metrics(u) for u in pipe.units()
+    ] == [True, True, False, False]
 
     pipe2 = KGPipeline(spark, out, n_chunks=4)
     _run(pipe2, spark_corpus)
     assert pipe2.post_check()
-    # sidecars carry the chunk unit with rows/min/max
-    pdf = spark.read.parquet(os.path.join(out, "edges_audit")).toPandas()
-    assert {"chunk", "rows", "min_id", "max_id"} <= set(pdf.columns)
-    # sidecar row totals == the state store's per-chunk rows
-    assert _chunk_rows(spark, out) == {
-        i: pipe2.state.metrics(u)["linked"] for i, u in enumerate(pipe2.units())
-    }
+    assert _audit_dirs(out) == []
+    # the recorded (rows, min_id, max_id) == a recompute over edges/chunk=i
+    assert _chunk_rows(spark, out) == _recorded_rows(pipe2)
     # tamper -> post-check fails
     import pathlib
 
@@ -192,15 +214,19 @@ def _tree(root):
 
 def test_resume_refuses_old_layout(spark, spark_corpus, tmp_path):
     """An out_dir holding an older pipeline's layout (a ``mentions`` or
-    ``triples`` dir, or a ``bucket=`` level under ``edges/chunk=*`` or
-    ``nodes``) must refuse to resume, and write nothing: its finished
-    stages would be skipped or mixed with new chunks, or directory
-    depths mixed under ``edges``, instead of re-run."""
+    ``triples`` dir, a ``bucket=`` level under ``edges/chunk=*`` or
+    ``nodes``, or an ``edges_audit`` or ``nodes_audit`` sidecar table)
+    must refuse to resume, and write nothing: its finished stages would
+    be skipped or mixed with new chunks, directory depths mixed under
+    ``edges``, or chunks without a recorded audit row post-checked,
+    instead of re-run."""
     for name, old in [
         ("mentions", "mentions/chunk=0"),
         ("triples", "triples/chunk=0"),
         ("edges_bucket", "edges/chunk=0/bucket=3"),
         ("nodes_bucket", "nodes/bucket=3"),
+        ("edges_audit", "edges_audit/chunk=0"),
+        ("nodes_audit", "nodes_audit"),
     ]:
         out = tmp_path / name
         os.makedirs(out / old)
@@ -272,4 +298,69 @@ def test_completed_store_reruns_without_jobs(spark, spark_corpus, tmp_path):
     ok, jobs = _jobs_in_group(
         sc, "completed_post_check", KGPipeline(spark, out, n_chunks=4).post_check
     )
-    assert ok and jobs <= 12
+    assert ok and jobs <= 4
+
+
+def _stage_jobs(sc, name, run):
+    """Run ``run`` with each gate->set span in its own job group, named
+    after ``name`` (unique per call: the tracker keeps old groups); the
+    job count of each span, keyed by ``unit:STEP``."""
+    groups = {}
+    gate, set_ = StateStore.gate, StateStore.set
+
+    def gate_in_group(store, unit, step):
+        todo = gate(store, unit, step)
+        if todo:
+            groups[f"{unit}:{step.name}"] = g = f"{name}:{unit}:{step.name}"
+            sc.setJobGroup(g, g)
+        return todo
+
+    def set_out_of_group(store, unit, step, **metrics):
+        set_(store, unit, step, **metrics)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    StateStore.gate, StateStore.set = gate_in_group, set_out_of_group
+    try:
+        run()
+    finally:
+        StateStore.gate, StateStore.set = gate, set_
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return {k: len(sc.statusTracker().getJobIdsForGroup(g)) for k, g in groups.items()}
+
+
+@pytest.mark.classic_session_only
+@pytest.mark.parametrize("n_chunks", [1, 4])
+def test_stage_job_counts(spark, spark_corpus, tmp_path, n_chunks):
+    """The audit rows come from the writes, and every KG table is read
+    with a known schema: a chunk's LINKED runs at most 4 jobs (the
+    chain write), MATERIALIZED at most 2 (the nodes write), VERIFIED at
+    most 4 (one audit recompute per table). No sidecar table is
+    written."""
+    out = str(tmp_path / "kg")
+    pipe = KGPipeline(spark, out, n_chunks=n_chunks)
+    jobs = _stage_jobs(spark.sparkContext, out, lambda: _run(pipe, spark_corpus))
+    linked = [jobs[f"{u}:LINKED"] for u in pipe.units()]
+    assert max(linked) <= 4, jobs
+    assert jobs["corpus:MATERIALIZED"] <= 2, jobs
+    assert jobs["corpus:VERIFIED"] <= 4, jobs
+    assert _audit_dirs(out) == []
+
+
+def test_dropped_edge_row_fails_verified(spark, spark_corpus, tmp_path, monkeypatch):
+    """A writer that loses one row of ``edges`` at commit must fail the
+    run at VERIFIED: the audit rows record what each write was given,
+    not a re-read of what reached the disk."""
+    write = tableio.write_partitioned
+
+    def drop_one_edge(df, path, partition_cols, mode="overwrite"):
+        if os.sep + "edges" + os.sep in path:
+            first = F.row_number().over(Window.orderBy(*df.columns))
+            df = df.withColumn("_n", first).filter("_n > 1").drop("_n")
+        write(df, path, partition_cols, mode)
+
+    monkeypatch.setattr(tableio, "write_partitioned", drop_one_edge)
+    pipe = KGPipeline(spark, str(tmp_path / "kg"), n_chunks=4)
+    with pytest.raises(RuntimeError, match="post-check failed"):
+        _run(pipe, spark_corpus)
+    assert pipe.state.get("corpus") == Step.MATERIALIZED

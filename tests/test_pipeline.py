@@ -39,9 +39,10 @@ def test_end_to_end_pr(spark, spark_corpus, corpus, tmp_path):
     # the triple set is stored once, as the audited edges
     assert not os.path.exists(tmp_path / "kg" / "triples")
     assert "chunk" not in pipe.triples().columns
-    audit = spark.read.parquet(str(tmp_path / "kg" / "edges_audit")).toPandas()
-    assert audit["rows"].sum() == metrics["linked"]
+    audit = pipe.state.metrics("chunk_00000")["audit"]
+    assert audit["rows"] == metrics["linked"]
     assert metrics["nodes"] == pipe.nodes().count()
+    assert pipe.state.metrics("corpus")["audit"]["rows"] == metrics["nodes"]
     assert StateStore(str(tmp_path / "kg" / "_state")).get("corpus") == Step.COMPLETE
 
 
@@ -75,19 +76,22 @@ def _parquet_files(path):
 
 def test_edges_layout_and_audit(spark, spark_corpus, tmp_path):
     """Chunks are the only partition level: ``edges/chunk=i`` and
-    ``nodes`` hold their parquet files directly, and the edges sidecar
-    holds one (rows, min_id, max_id) row per non-empty chunk."""
+    ``nodes`` hold their parquet files directly, no ``*_audit`` table
+    is written, and each chunk's record holds the (rows, min_id,
+    max_id) of its slice of ``edges``."""
     out = tmp_path / "kg"
     pipe, _ = _run(spark, spark_corpus, out, n_chunks=4)
     assert _parquet_files(out / "edges" / "chunk=0")
     assert _parquet_files(out / "nodes")
     assert [
         os.path.join(root, d)
-        for root, dirs, _ in os.walk(out) for d in dirs if d.startswith("bucket=")
+        for root, dirs, _ in os.walk(out)
+        for d in dirs if d.startswith("bucket=") or d.endswith("_audit")
     ] == []
-    audit = spark.read.parquet(str(out / "edges_audit")).toPandas()
-    assert sorted(audit.columns) == ["chunk", "max_id", "min_id", "rows"]
-    linked = {i: pipe.state.metrics(u)["linked"] for i, u in enumerate(pipe.units())}
-    assert sorted(zip(audit["chunk"], audit["rows"])) == [
-        (i, n) for i, n in linked.items() if n > 0
-    ]
+    edges = pipe.edges().toPandas()
+    for i, u in enumerate(pipe.units()):
+        audit = pipe.state.metrics(u)["audit"]
+        subj = edges.loc[edges["chunk"] == i, "subj"]
+        assert audit["rows"] == len(subj) == pipe.state.metrics(u)["linked"]
+        if len(subj):
+            assert (audit["min_id"], audit["max_id"]) == (subj.min(), subj.max())

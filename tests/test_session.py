@@ -15,3 +15,11 @@ def test_default_driver_memory_is_half_of_ram_capped_at_24g(monkeypatch):
     assert int(session._default_driver_memory().removesuffix("g")) <= 8
     monkeypatch.setattr(session.os, "sysconf", _host_with_gib(64))
     assert session._default_driver_memory() == "24g"
+
+
+def test_default_cpus_fit_the_host(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    assert session._default_cpus() == 3
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    assert session._default_cpus() == 5

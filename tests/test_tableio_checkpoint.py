@@ -21,7 +21,7 @@ def _df(spark, n=100):
 def test_write_with_audit_and_post_check(spark, tmp_path):
     path = str(tmp_path / "t")
     tableio.write_with_audit(_df(spark), path, ["part"], id_col="id")
-    assert tableio.post_check(spark, path, ["part"], "id")
+    assert tableio.post_check(_df(spark), path, ["part"], "id")
     audit = spark.read.parquet(path + "_audit").toPandas()
     assert len(audit) == 4
     assert audit["rows"].sum() == 100
@@ -40,7 +40,7 @@ def test_post_check_detects_tamper(spark, tmp_path):
     tableio.write_with_audit(_df(spark), path, ["part"], id_col="id")
     # tamper: rewrite sidecar with a wrong row count
     _rewrite_sidecar(spark, path, lambda a: a.withColumn("rows", F.col("rows") + 1))
-    assert not tableio.post_check(spark, path, ["part"], "id")
+    assert not tableio.post_check(_df(spark), path, ["part"], "id")
 
 
 def test_post_check_is_multiset_exact(spark, tmp_path):
@@ -53,37 +53,37 @@ def test_post_check_is_multiset_exact(spark, tmp_path):
         path = str(tmp_path / name)
         tableio.write_with_audit(_df(spark), path, ["part"], id_col="id")
         _rewrite_sidecar(spark, path, edit)
-        assert not tableio.post_check(spark, path, ["part"], "id"), name
+        assert not tableio.post_check(_df(spark), path, ["part"], "id"), name
 
     path = str(tmp_path / "lost_file")
     tableio.write_with_audit(_df(spark), path, ["part"], id_col="id")
     next(pathlib.Path(path).rglob("*.parquet")).unlink()
-    assert not tableio.post_check(spark, path, ["part"], "id")
+    assert not tableio.post_check(_df(spark), path, ["part"], "id")
 
 
 @pytest.mark.classic_session_only
 def test_post_check_job_count(spark, tmp_path):
-    """On a 4-partition sink the post-check runs at most 5 jobs: the two
-    reads and the collects of the two small audit frames, no set
-    differences."""
+    """On a 4-partition sink the post-check runs at most 3 jobs: the
+    collects of the two small audit frames. Both reads take the written
+    frame's schema, so neither runs a schema-inference job, and there
+    are no set differences."""
     path = str(tmp_path / "t")
-    tableio.write_with_audit(
-        _df(spark), path, ["part"], id_col="id", source=("source", "u")
-    )
+    df = _df(spark)
+    tableio.write_with_audit(df, path, ["part"], id_col="id", source=("source", "u"))
     sc = spark.sparkContext
     sc.setJobGroup("post_check_jobs", "post_check_jobs")
     try:
-        assert tableio.post_check(spark, path, ["part"], "id", source=("source", "u"))
+        assert tableio.post_check(df, path, ["part"], "id", source=("source", "u"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     # the status tracker is fed by the asynchronous listener bus: drain
     # it so every job that ran is counted
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup("post_check_jobs")) <= 5
+    assert len(sc.statusTracker().getJobIdsForGroup("post_check_jobs")) <= 3
 
 
 def test_post_check_missing_audit(spark, tmp_path):
-    assert not tableio.post_check(spark, str(tmp_path / "nope"), ["part"], "id")
+    assert not tableio.post_check(_df(spark), str(tmp_path / "nope"), ["part"], "id")
 
 
 def test_state_store_roundtrip(tmp_path):
@@ -93,19 +93,16 @@ def test_state_store_roundtrip(tmp_path):
     assert st.get("u1") == Step.LINKED
     assert st.metrics("u1") == {"rows": 5}
     # no backwards transitions
-    st.set("u1", Step.EXTRACTED)
+    st.set("u1", Step.INIT)
     assert st.get("u1") == Step.LINKED
     # gates
     assert st.gate("u1", Step.CANONICALIZED)
     assert not st.gate("u1", Step.LINKED)
-
-
-def test_state_store_incomplete_ordering(tmp_path):
-    st = StateStore(str(tmp_path / "state"))
-    st.set("b", Step.COMPLETE)
-    st.set("a", Step.LINKED)
-    st.set("c", Step.INIT)
-    assert st.incomplete(["a", "b", "c"]) == ["a", "c"]
+    # a later step merges its metrics into the record
+    st.set("u1", Step.VERIFIED, checked=True)
+    st.set("u1", Step.COMPLETE)
+    assert st.get("u1") == Step.COMPLETE
+    assert st.metrics("u1") == {"rows": 5, "checked": True}
 
 
 def test_iceberg_seam_detection(spark):
@@ -158,4 +155,4 @@ def test_write_with_audit_empty_frame(spark, tmp_path, partition_cols):
     path = str(tmp_path / "empty")
     tableio.write_with_audit(df, path, partition_cols, id_col="id")
     assert spark.read.parquet(path + "_audit").count() == 0
-    assert tableio.post_check(spark, path, partition_cols, "id") is True
+    assert tableio.post_check(df, path, partition_cols, "id") is True

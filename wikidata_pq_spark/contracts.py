@@ -1028,7 +1028,7 @@ def q_partition_stage_audit(spark, sf):
         source=("source", "contract"), audit_path=audit,
     )
     ok = tableio.post_check(
-        spark, path, ["language"], "id",
+        claims, path, ["language"], "id",
         source=("source", "contract"), audit_path=audit,
     )
     if not ok:

@@ -99,7 +99,7 @@ class CurationPipeline:
                 final, self._p("corpus"), ["split"], id_col="doc_id"
             )
             ok = tableio.post_check(
-                self.spark, self._p("corpus"), ["split"], id_col="doc_id"
+                final, self._p("corpus"), ["split"], id_col="doc_id"
             )
             if not ok:
                 raise RuntimeError("curated-corpus sink failed post-check")

@@ -11,13 +11,17 @@ re-does only the unit it died in. Stage graph, per unit kind:
                 by chunk; each chunk then reads one partition
   chunk_NNNNN   LINKED: extract -> link to canonical ids -> distinct
                 (``linking.kg_chain``), written once as
-                ``edges/chunk=i/part-*.parquet`` with its sidecar at
-                ``edges_audit/chunk=i`` (one row; none if empty)
+                ``edges/chunk=i/part-*.parquet``; the chunk's record
+                keeps the write's audit row and schema
   corpus        MATERIALIZED: ``nodes`` (distinct entity ids) from all
-                of ``edges``, written as ``nodes/part-*.parquet``
-                VERIFIED: post-check of ``edges`` per chunk and of
-                ``nodes`` as a whole against their sidecars
+                of ``edges``, written as ``nodes/part-*.parquet``; the
+                corpus record keeps its audit row and schema
+                VERIFIED: ``edges`` per chunk and ``nodes`` recomputed
+                from disk and compared with the recorded audit rows
                 COMPLETE
+
+An audit row is (rows, min_id, max_id) observed on the write: what the
+sink was given (reference: core.py:25-35), not a re-read of the disk.
 
 Chunks are the only partition level: nothing reads, joins or checks on
 a finer key. For subject-co-located joins use
@@ -31,10 +35,12 @@ Every stage is idempotent: re-running a completed stage is a no-op
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .operators import canonicalize, extract, linking
 from .plans.checkpoint import StateStore, Step
@@ -42,10 +48,13 @@ from .sources import tableio
 
 CORPUS = "corpus"  # the unit that owns the corpus-wide stages
 # what older layouts leave in an out_dir: the stage tables from before
-# chunk units, and the subject-hash bucket= level under edges and nodes.
-# Resuming one would mix old and new chunks or directory depths, so the
-# pipeline refuses such an out_dir
-OLD_LAYOUT = ("mentions", "triples", "edges/chunk=*/bucket=*", "nodes/bucket=*")
+# chunk units, the subject-hash bucket= level under edges and nodes, and
+# the sidecars of chunks whose records hold no audit row. Resuming one
+# would mix old and new chunks or layouts, so the pipeline refuses it
+OLD_LAYOUT = (
+    "mentions", "triples", "edges/chunk=*/bucket=*", "nodes/bucket=*",
+    "edges_audit", "nodes_audit",
+)
 
 
 class KGPipeline:
@@ -132,23 +141,21 @@ class KGPipeline:
                 # (skewed conv_id hash at small n): read it as empty
                 part = os.path.join(staged, f"_chunk={i}")
                 turns = (
-                    self.spark.read.parquet(part) if os.path.isdir(part)
+                    self.spark.read.schema(transcripts.schema).parquet(part)
+                    if os.path.isdir(part)
                     else transcripts.filter(F.lit(False))
                 )
             mentions, n_mentions = tableio.observe_rows(extract.extract_mentions(turns))
-            edges, n_linked = tableio.observe_rows(
-                linking.kg_chain(mentions, canon_dict, self.link_strategy)
+            edges, audit = tableio.observe_audit(
+                linking.kg_chain(mentions, canon_dict, self.link_strategy), "subj"
             )
-            # chunk i's slice of edges; the chunk=i directory of its
-            # sidecar supplies the sidecar's chunk column
-            tableio.write_with_audit(
-                edges, os.path.join(self.path("edges"), f"chunk={i}"),
-                [], id_col="subj",
-                audit_path=os.path.join(self.path("edges_audit"), f"chunk={i}"),
+            tableio.write_partitioned(
+                edges, os.path.join(self.path("edges"), f"chunk={i}"), []
             )
             st.set(
                 unit, Step.LINKED,
-                mentions=n_mentions.get["rows"], linked=n_linked.get["rows"],
+                mentions=n_mentions.get["rows"], linked=audit.get["rows"],
+                audit=audit.get, schema=json.loads(edges.schema.json()),
             )
 
         chunks = [st.metrics(u) for u in self.units()]
@@ -156,41 +163,45 @@ class KGPipeline:
 
         if st.gate(CORPUS, Step.MATERIALIZED):
             edges = self.edges()
-            nodes, n_nodes = tableio.observe_rows(
+            nodes, audit = tableio.observe_audit(
                 edges.select(F.col("subj").alias("entity_id"))
                 .union(
                     edges.filter(F.col("obj_kind") == "entity").select(
                         F.col("obj").alias("entity_id")
                     )
                 )
-                .distinct()
+                .distinct(),
+                "entity_id",
             )
-            tableio.write_with_audit(
-                nodes, self.path("nodes"), [], id_col="entity_id",
-                source=("source", CORPUS),
+            tableio.write_partitioned(nodes, self.path("nodes"), [])
+            st.set(
+                CORPUS, Step.MATERIALIZED, **metrics, nodes=audit.get["rows"],
+                audit=audit.get, schema=json.loads(nodes.schema.json()),
             )
-            st.set(CORPUS, Step.MATERIALIZED, **metrics, nodes=n_nodes.get["rows"])
         metrics["nodes"] = st.metrics(CORPUS)["nodes"]
 
         if st.gate(CORPUS, Step.VERIFIED):
             if not self.post_check():
-                raise RuntimeError("post-check failed: sink != audit sidecar")
-            st.set(CORPUS, Step.VERIFIED, **metrics)
+                raise RuntimeError("post-check failed: sink != recorded audit")
+            st.set(CORPUS, Step.VERIFIED)
 
-        st.set(CORPUS, Step.COMPLETE, **metrics)
+        st.set(CORPUS, Step.COMPLETE)
         return metrics
 
     def post_check(self) -> bool:
-        """``edges`` matches its sidecars per chunk and ``nodes`` its
-        sidecar -- the reference's post-check over per-source sidecars
-        (reference: DESIGN.md:95-112). One check per table, whatever
-        ``n_chunks`` is."""
-        return tableio.post_check(
-            self.spark, self.path("edges"), ["chunk"], "subj",
-            audit_path=self.path("edges_audit"),
-        ) and tableio.post_check(
-            self.spark, self.path("nodes"), [], "entity_id",
-            source=("source", CORPUS),
+        """``edges`` per chunk and ``nodes`` as a whole, recomputed from
+        disk, equal the audit rows their writes recorded -- the
+        reference's post-check (reference: DESIGN.md:95-112). One read
+        per table, whatever ``n_chunks`` is."""
+        chunks = [
+            {"chunk": i, **self.state.metrics(u)["audit"]}
+            for i, u in enumerate(self.units())
+        ]
+        return tableio.matches_audit(
+            tableio.audit_frame(self.edges(), ["chunk"], "subj"), chunks
+        ) and tableio.matches_audit(
+            tableio.audit_frame(self.nodes(), [], "entity_id"),
+            [self.state.metrics(CORPUS)["audit"]],
         )
 
     # -- results -------------------------------------------------------
@@ -198,10 +209,16 @@ class KGPipeline:
         return self.edges().drop("chunk")
 
     def edges(self) -> DataFrame:
-        return self.spark.read.parquet(self.path("edges"))
+        # every chunk writes one plan's schema; chunk=i adds ``chunk``
+        return self._read("edges", self.units()[0])
 
     def nodes(self) -> DataFrame:
-        return self.spark.read.parquet(self.path("nodes"))
+        return self._read("nodes", CORPUS)
+
+    def _read(self, table: str, unit: str) -> DataFrame:
+        """``table`` read with the schema ``unit``'s write recorded."""
+        schema = StructType.fromJson(self.state.metrics(unit)["schema"])
+        return self.spark.read.schema(schema).parquet(self.path(table))
 
 
 PARTITION_KEYS = {
@@ -248,7 +265,7 @@ def partition_entity_tables(
             source=("source", source_name), audit_path=audit,
         )
         results[name] = tableio.post_check(
-            tdf.sparkSession, path, [key], "id",
+            tdf, path, [key], "id",
             source=("source", source_name), audit_path=audit,
         )
     return results

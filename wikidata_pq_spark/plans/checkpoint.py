@@ -20,10 +20,8 @@ from enum import IntEnum
 
 
 class Step(IntEnum):
+    # state files store the int, so the values stay fixed
     INIT = 0
-    # unused since LINKED extracts and links in one write; kept because
-    # state files store the int
-    EXTRACTED = 1
     LINKED = 2
     CANONICALIZED = 3
     MATERIALIZED = 4
@@ -41,39 +39,35 @@ class StateStore:
     def _path(self, unit: str) -> str:
         return os.path.join(self.state_dir, f"{unit}.json")
 
-    def get(self, unit: str) -> Step:
+    def _record(self, unit: str) -> dict:
         p = self._path(unit)
         if not os.path.exists(p):
-            return Step.INIT
+            return {"step": int(Step.INIT)}
         with open(p) as f:
-            return Step(json.load(f)["step"])
+            return json.load(f)
+
+    def get(self, unit: str) -> Step:
+        return Step(self._record(unit)["step"])
 
     def set(self, unit: str, step: Step, **metrics) -> None:
-        """Advance a unit's step; refuses to move backwards (idempotent
-        re-runs are safe, lost progress is not silently possible)."""
-        cur = self.get(unit)
-        if step < cur:
+        """Advance a unit's step and merge ``metrics`` into its record,
+        so what an earlier stage recorded survives the later ones.
+        Refuses to move backwards (idempotent re-runs are safe, lost
+        progress is not silently possible)."""
+        record = self._record(unit)
+        if step < record["step"]:
             return
-        payload = {"step": int(step), **metrics}
+        record.update(metrics, step=int(step))
         tmp = self._path(unit) + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(payload, f)
+            json.dump(record, f)
         os.replace(tmp, self._path(unit))
 
     def metrics(self, unit: str) -> dict:
         """Stage metrics only (the step itself comes from ``get``)."""
-        p = self._path(unit)
-        if not os.path.exists(p):
-            return {}
-        with open(p) as f:
-            payload = json.load(f)
-        payload.pop("step", None)
-        return payload
-
-    def incomplete(self, units: list[str]) -> list[str]:
-        """Units still below COMPLETE, in deterministic order
-        (reference: state.py:59-63 min-incomplete-chunk selection)."""
-        return sorted(u for u in units if self.get(u) < Step.COMPLETE)
+        record = self._record(unit)
+        record.pop("step")
+        return record
 
     def gate(self, unit: str, step: Step) -> bool:
         """True if this step still needs to run for the unit

@@ -22,6 +22,11 @@ def _default_driver_memory() -> str:
     return f"{max(1, min(24, ram // 2 // 2**30))}g"
 
 
+def _default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "wikidata_pq_spark",
     master: str | None = None,
@@ -30,13 +35,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``; without the
+    env var, to as many cores as this process may run on.
     ``shuffle_partitions`` defaults to the local core count -- on a real
     cluster this should be ~2-3x total cores, or left to AQE coalescing.
     ``spark.driver.memory`` is ``$SPARK_DRIVER_MEM``, else half the
     host's RAM capped at 24g.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _default_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

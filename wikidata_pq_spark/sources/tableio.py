@@ -2,12 +2,13 @@
 
 The storage layer behind the pipeline (SURVEY.md §7.3d): query code only
 ever sees DataFrames; this module decides the physical table format.
-``write_with_audit`` always writes Hive-style partitioned parquet -- the
-pipelines' audited sinks, in the same layout the reference sinks to
-(reference: core.py:38-58 PartitionByKey -> results/{table}/language=X/)
--- plus an explicit audit sidecar per partition, mirroring the
-reference's finish-callback sidecars (reference: core.py:25-35:
-(language, rows, min_id, max_id)).
+A sink's audit row is (rows, min_id, max_id) (``audit_aggs``), the
+reference's finish-callback sidecar row (reference: core.py:25-35). An
+unpartitioned sink observes it on its own write (``observe_audit``) and
+the caller keeps it. A partitioned sink needs a row per partition, which
+an ``Observation`` cannot group: ``write_with_audit`` writes Hive-style
+parquet, the reference's layout (core.py:38-58 PartitionByKey ->
+results/{table}/language=X/), plus a sidecar of per-partition rows.
 
 Only ``write_table`` routes to Iceberg, when a
 ``spark.sql.catalog.<name>`` config is set; no flow calls it. With
@@ -20,7 +21,7 @@ from __future__ import annotations
 import os
 from collections import Counter
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -83,6 +84,22 @@ def observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
     return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
+def audit_aggs(id_col: str) -> list[Column]:
+    """The audit row's aggregates: (rows, min_id, max_id)."""
+    return [
+        F.count(F.lit(1)).alias("rows"),
+        F.min(id_col).alias("min_id"),
+        F.max(id_col).alias("max_id"),
+    ]
+
+
+def observe_audit(df: DataFrame, id_col: str) -> tuple[DataFrame, Observation]:
+    """``df`` plus an Observation its write fills with the audit row of
+    what the sink was given (rows 0 and null ids if empty)."""
+    obs = Observation()
+    return df.observe(obs, *audit_aggs(id_col)), obs
+
+
 def write_partitioned(
     df: DataFrame,
     path: str,
@@ -94,20 +111,24 @@ def write_partitioned(
 
 
 def audit_frame(df: DataFrame, partition_cols: list[str], id_col: str) -> DataFrame:
-    """Per-partition (rows, min_id, max_id) lineage rows.
+    """Per-partition audit rows (``audit_aggs``): one partial-aggregated
+    pass, map-side combined. Only non-empty partitions get a row: the
+    zero-row group a global aggregate (no ``partition_cols``) yields on
+    an empty frame is dropped, so an empty sink audits as empty."""
+    return df.groupBy(*partition_cols).agg(*audit_aggs(id_col)).filter(
+        F.col("rows") > 0
+    )
 
-    Spark exposes no per-partition finish callback (reference:
-    core.py:25-35), so the audit is computed as a query over the same
-    data -- one extra partial-aggregated pass, map-side combined.
-    Only non-empty partitions get a row: the zero-row group a global
-    aggregate (no ``partition_cols``) yields on an empty frame is
-    dropped, so an empty sink audits as empty either way.
-    """
-    return df.groupBy(*partition_cols).agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.min(id_col).alias("min_id"),
-        F.max(id_col).alias("max_id"),
-    ).filter(F.col("rows") > 0)
+
+def _sink_audit(df, path, partition_cols, id_col, source) -> DataFrame:
+    """``audit_frame`` of the sink at ``path`` read with ``df``'s schema,
+    with the ``source`` unit stamped on every row."""
+    data = df.sparkSession.read.schema(df.schema).parquet(path)
+    audit = audit_frame(data, partition_cols, id_col)
+    if source is None:
+        return audit
+    col, value = source
+    return audit.select(F.lit(value).alias(col), "*")
 
 
 def write_with_audit(
@@ -121,28 +142,19 @@ def write_with_audit(
     """Partitioned write (overwriting ``path``) + sidecar audit parquet.
 
     ``source`` = (column_name, value) stamps the processing unit on
-    every sidecar row -- the key the reference's sidecars carry (one
-    sidecar per source file x table, named for its source,
-    reference: partitioning/core.py:14-35) -- so the post-check can
-    verify per (source x partition), not just per partition.
-    ``audit_path`` overrides the default ``<path>_audit`` location
-    (per-unit writers accumulate sidecars under a shared audit/ tree,
-    the layout of the reference's audit/{table}/{source_name}).
+    every sidecar row, the key of the reference's per source file x
+    table sidecars (reference: partitioning/core.py:14-35).
+    ``audit_path`` overrides the default ``<path>_audit`` (the
+    reference's audit/{table}/{source_name} tree).
     """
     write_partitioned(df, path, partition_cols)
     # explicit schema: an all-empty frame writes no part files under
     # partitionBy, and a schema-inferring re-read of the bare _SUCCESS
     # dir raises UNABLE_TO_INFER_SCHEMA -- with the writer's schema the
     # re-read is just an empty frame and the sidecar has zero rows.
-    audit = audit_frame(
-        df.sparkSession.read.schema(df.schema).parquet(path),
-        partition_cols,
-        id_col,
-    )
-    if source is not None:
-        col, value = source
-        audit = audit.select(F.lit(value).alias(col), "*")
-    audit.write.mode("overwrite").parquet(audit_path or path + "_audit")
+    _sink_audit(df, path, partition_cols, id_col, source).write.mode(
+        "overwrite"
+    ).parquet(audit_path or path + "_audit")
 
 
 def write_bucketed_table(
@@ -166,8 +178,17 @@ def write_bucketed_table(
     w.format("parquet").saveAsTable(name)
 
 
+def matches_audit(audit: DataFrame, expected: list[dict]) -> bool:
+    """``audit``, rows recomputed from a sink, equals ``expected`` (dicts
+    by column; zero-row ones dropped, as ``audit_frame`` drops them) as
+    multisets. Both hold at most one row per (source x partition), so
+    they compare on the driver, with no distributed set difference."""
+    want = Counter(tuple(r[c] for c in audit.columns) for r in expected if r["rows"])
+    return Counter(map(tuple, audit.collect())) == want
+
+
 def post_check(
-    spark: SparkSession,
+    df: DataFrame,
     path: str,
     partition_cols: list[str],
     id_col: str,
@@ -179,28 +200,14 @@ def post_check(
     The reference's post-check step (reference: DESIGN.md:95-112,
     docs/journal/2025-01-16-03-implement-postcheck-DRAFT.md:24-33):
     recompute (rows, min_id, max_id) from the sink and verify it matches
-    the audit sidecar exactly, as multisets -- per (source x partition)
-    when the sidecar carries a source unit. Both sides hold at most one
-    row per (source x partition), so they are collected and compared on
-    the driver instead of with distributed set differences.
+    the ``write_with_audit`` sidecar exactly (``matches_audit``).
+    ``df`` is the frame that was written to ``path``; its schema types
+    both reads (the sidecar's derived from it), so neither infers a
+    schema, and an empty sink reads as an empty frame.
     """
     apath = audit_path or path + "_audit"
-    if not os.path.exists(apath):
+    if not (os.path.exists(path) and os.path.exists(apath)):
         return False
-    try:
-        data = spark.read.parquet(path)
-    except Exception:
-        # empty sink: partitionBy wrote no part files (see
-        # write_with_audit) -- consistent iff the sidecar is empty too
-        return spark.read.parquet(apath).limit(1).count() == 0
-    written = audit_frame(data, partition_cols, id_col)
-    key_cols = list(partition_cols)
-    if source is not None:
-        col, value = source
-        written = written.select(F.lit(value).alias(col), "*")
-        key_cols = [col] + key_cols
-    sidecar = spark.read.parquet(apath)
-    cols = key_cols + ["rows", "min_id", "max_id"]
-    return Counter(map(tuple, written.select(cols).collect())) == Counter(
-        map(tuple, sidecar.select(cols).collect())
-    )
+    written = _sink_audit(df, path, partition_cols, id_col, source)
+    sidecar = df.sparkSession.read.schema(written.schema).parquet(apath)
+    return matches_audit(written, [r.asDict() for r in sidecar.collect()])
