@@ -8,7 +8,7 @@
         [--quality-min 0.3] [--rep-max 0.5] [--max-len 512]
 
 Resumable: re-submit after a failure and completed stages skip (same
-JSON state machine as the KG pipeline).
+state machine as the KG pipeline, committed to ``<out>/_log/<version>.json``).
 """
 
 from __future__ import annotations

@@ -23,10 +23,13 @@ Output layout under ``--out``:
     components/                same-as component map (CANONICALIZED,
                                once per store)
     nodes/                     distinct entity ids (MATERIALIZED)
-    _state/chunk_NNNNN.json    per chunk: LINKED, mentions/linked rows,
-                               and the edges write's audit row
-                               (rows, min_id, max_id) and schema
-    _state/corpus.json         corpus-wide stage reached (CANONICALIZED,
+    _log/<version>.json        the commit log: each stage commits the
+                               next version, a snapshot of every unit's
+                               record. ``chunk_NNNNN``: LINKED,
+                               mentions/linked rows, and the edges
+                               write's audit row (rows, min_id, max_id)
+                               and schema. ``corpus``: the corpus-wide
+                               stage reached (CANONICALIZED,
                                MATERIALIZED, VERIFIED, COMPLETE), row
                                totals, and the nodes write's audit row
                                and schema

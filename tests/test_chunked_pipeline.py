@@ -215,11 +215,11 @@ def _tree(root):
 def test_resume_refuses_old_layout(spark, spark_corpus, tmp_path):
     """An out_dir holding an older pipeline's layout (a ``mentions`` or
     ``triples`` dir, a ``bucket=`` level under ``edges/chunk=*`` or
-    ``nodes``, or an ``edges_audit`` or ``nodes_audit`` sidecar table)
-    must refuse to resume, and write nothing: its finished stages would
-    be skipped or mixed with new chunks, directory depths mixed under
-    ``edges``, or chunks without a recorded audit row post-checked,
-    instead of re-run."""
+    ``nodes``, an ``edges_audit`` or ``nodes_audit`` sidecar table, or a
+    ``_state`` dir of per-unit JSON files) must refuse to resume, and
+    write nothing: its finished stages would be skipped or mixed with
+    new chunks, directory depths mixed under ``edges``, or chunks
+    without a recorded audit row post-checked, instead of re-run."""
     for name, old in [
         ("mentions", "mentions/chunk=0"),
         ("triples", "triples/chunk=0"),
@@ -227,6 +227,7 @@ def test_resume_refuses_old_layout(spark, spark_corpus, tmp_path):
         ("nodes_bucket", "nodes/bucket=3"),
         ("edges_audit", "edges_audit/chunk=0"),
         ("nodes_audit", "nodes_audit"),
+        ("state", "_state"),
     ]:
         out = tmp_path / name
         os.makedirs(out / old)

@@ -48,7 +48,7 @@ def test_curation_pipeline_end_to_end(spark, docs, tmp_path):
 
 def test_curation_pipeline_resume_skips_and_recomputes(spark, docs, tmp_path):
     from wikidata_pq_spark.curation_pipeline import CurationPipeline
-    from wikidata_pq_spark.plans.checkpoint import Step
+    from wikidata_pq_spark.plans import checkpoint
 
     out = str(tmp_path / "cur")
     pipe = CurationPipeline(spark, out, max_len=64)
@@ -61,9 +61,12 @@ def test_curation_pipeline_resume_skips_and_recomputes(spark, docs, tmp_path):
     assert again == first
     assert os.path.getmtime(out + "/corpus") == mtime
 
-    # kill-after-pack simulation: drop the finalize checkpoint, re-run,
-    # the final stage recomputes to an identical corpus
-    os.remove(out + "/_state/finalize.json")
+    # kill-after-pack simulation: commit a log version without the
+    # finalize record, re-run, the final stage recomputes to an
+    # identical corpus
+    version, snapshot = checkpoint.head(out + "/_log")
+    del snapshot["finalize"]
+    checkpoint.commit(out + "/_log", version + 1, snapshot)
     shutil.rmtree(out + "/corpus")
     resumed = CurationPipeline(spark, out, max_len=64).run(docs)
     assert resumed == first

@@ -2,11 +2,11 @@
 
 from __future__ import annotations
 
-import json
 import os
 
 from wikidata_pq_spark import oracle
 from wikidata_pq_spark.pipeline import KGPipeline
+from wikidata_pq_spark.plans import checkpoint
 from wikidata_pq_spark.plans.checkpoint import StateStore, Step
 
 
@@ -43,7 +43,8 @@ def test_end_to_end_pr(spark, spark_corpus, corpus, tmp_path):
     assert audit["rows"] == metrics["linked"]
     assert metrics["nodes"] == pipe.nodes().count()
     assert pipe.state.metrics("corpus")["audit"]["rows"] == metrics["nodes"]
-    assert StateStore(str(tmp_path / "kg" / "_state")).get("corpus") == Step.COMPLETE
+    assert StateStore(str(tmp_path / "kg" / "_log")).get("corpus") == Step.COMPLETE
+    assert not os.path.exists(tmp_path / "kg" / "_state")
 
 
 def test_resume_mid_pipeline_identical(spark, spark_corpus, tmp_path):
@@ -51,8 +52,10 @@ def test_resume_mid_pipeline_identical(spark, spark_corpus, tmp_path):
     pipe, metrics = _run(spark, spark_corpus, out)
     before = _triple_set(pipe)
     # simulate a crash after LINKED: later stages must re-run, earlier skip
-    state_file = out / "_state" / "corpus.json"
-    json.dump({"step": int(Step.LINKED), **metrics}, open(state_file, "w"))
+    log = str(out / "_log")
+    version, snapshot = checkpoint.head(log)
+    rewound = {**snapshot, "corpus": {"step": int(Step.LINKED), **metrics}}
+    checkpoint.commit(log, version + 1, rewound)
     pipe2, _ = _run(spark, spark_corpus, out)
     assert _triple_set(pipe2) == before
 
@@ -65,9 +68,13 @@ def test_complete_run_is_noop(spark, spark_corpus, tmp_path):
         for p in os.listdir(str(out))
         if not p.startswith("_")
     }
+    version = checkpoint.head(str(out / "_log"))[0]
+    assert version >= 0
     _run(spark, spark_corpus, out)
     for p, t in mtimes.items():
         assert os.path.getmtime(os.path.join(str(out), p)) == t
+    # every gate was closed and every record unchanged: no new log version
+    assert checkpoint.head(str(out / "_log"))[0] == version
 
 
 def _parquet_files(path):

@@ -772,6 +772,7 @@ def test_merge_refused_inside_compaction_commit_window(spark, tmp_path, monkeypa
     import pytest as _pt
 
     from wikidata_pq_spark.operators import graph
+    from wikidata_pq_spark.plans import checkpoint
     from wikidata_pq_spark.streaming import incremental as inc
 
     cols = ["subj", "pred", "obj", "conv_id", "turn_idx"]
@@ -786,19 +787,19 @@ def test_merge_refused_inside_compaction_commit_window(spark, tmp_path, monkeypa
     for i in range(3):
         inc.merge_triple_support(dfs[i], out, epoch_id=i)
 
-    orig_commit = inc._commit
+    orig_commit = checkpoint.commit
     merged = []
 
-    def commit_after_merge(out_dir, version, snapshot):
+    def commit_after_merge(log_dir, version, snapshot):
         if snapshot.get("generation") is not None and not merged:
             merged.append(1)
             inc.merge_triple_support(dfs[3], out, epoch_id=3)
-        return orig_commit(out_dir, version, snapshot)
+        return orig_commit(log_dir, version, snapshot)
 
-    monkeypatch.setattr(inc, "_commit", commit_after_merge)
+    monkeypatch.setattr(checkpoint, "commit", commit_after_merge)
     with _pt.raises(RuntimeError, match="lost the commit race"):
         inc.compact_triple_support(spark, out)
-    monkeypatch.setattr(inc, "_commit", orig_commit)
+    monkeypatch.setattr(checkpoint, "commit", orig_commit)
     assert merged and inc.live_epochs(out) == [0, 1, 2, 3]
     assert set(inc._epochs_on_disk(out)) == {-1, 0, 1, 2, 3}
 
@@ -863,6 +864,7 @@ def test_concurrent_compaction_refused_by_lease(spark, tmp_path, monkeypatch):
     import pytest as _pt
 
     from wikidata_pq_spark.operators import graph
+    from wikidata_pq_spark.plans import checkpoint
     from wikidata_pq_spark.streaming import incremental as inc
 
     cols = ["subj", "pred", "obj", "conv_id", "turn_idx"]
@@ -876,19 +878,19 @@ def test_concurrent_compaction_refused_by_lease(spark, tmp_path, monkeypatch):
     inc.merge_triple_support(dfs[0], out, epoch_id=0)
     inc.merge_triple_support(dfs[1], out, epoch_id=1)
 
-    orig_commit = inc._commit
+    orig_commit = checkpoint.commit
     raced = []
 
-    def commit_after_rival(out_dir, version, snapshot):
+    def commit_after_rival(log_dir, version, snapshot):
         if not raced:
             raced.append(None)  # the rival's own commit passes straight through
             raced[0] = inc.compact_triple_support(spark, out)
-        return orig_commit(out_dir, version, snapshot)
+        return orig_commit(log_dir, version, snapshot)
 
-    monkeypatch.setattr(inc, "_commit", commit_after_rival)
+    monkeypatch.setattr(checkpoint, "commit", commit_after_rival)
     with _pt.raises(RuntimeError, match="lost the commit race"):
         inc.compact_triple_support(spark, out)
-    monkeypatch.setattr(inc, "_commit", orig_commit)
+    monkeypatch.setattr(checkpoint, "commit", orig_commit)
     # A claimed -1 first, so the rival committed -2 (and collected -1)
     assert raced[0]["compacted"] == 2 and raced[0]["generation"] == -2
     assert inc.live_epochs(out) == [-2]
@@ -932,6 +934,7 @@ def test_crash_between_bak_and_primary_manifest_reads_committed(
     import pytest as _pt
 
     from wikidata_pq_spark.operators import graph
+    from wikidata_pq_spark.plans import checkpoint
     from wikidata_pq_spark.streaming import incremental as inc
 
     cols = ["subj", "pred", "obj", "conv_id", "turn_idx"]
@@ -945,14 +948,14 @@ def test_crash_between_bak_and_primary_manifest_reads_committed(
     for i, d in enumerate(dfs):
         inc.merge_triple_support(d, out, epoch_id=i)
 
-    def crash(out_dir, version, snapshot):
+    def crash(log_dir, version, snapshot):
         raise OSError("injected crash before the commit")
 
-    orig_commit = inc._commit
-    monkeypatch.setattr(inc, "_commit", crash)
+    orig_commit = checkpoint.commit
+    monkeypatch.setattr(checkpoint, "commit", crash)
     with _pt.raises(OSError, match="injected crash"):
         inc.compact_triple_support(spark, out)
-    monkeypatch.setattr(inc, "_commit", orig_commit)
+    monkeypatch.setattr(checkpoint, "commit", orig_commit)
 
     # the generation is complete on disk but not committed
     assert set(inc._epochs_on_disk(out)) == {-1, 0, 1, 2}
@@ -974,10 +977,10 @@ def test_crash_between_bak_and_primary_manifest_reads_committed(
 
     # first merge into a fresh store dies before committing version 0
     fresh = str(tmp_path / "fresh")
-    monkeypatch.setattr(inc, "_commit", crash)
+    monkeypatch.setattr(checkpoint, "commit", crash)
     with _pt.raises(OSError, match="injected crash"):
         inc.merge_triple_support(dfs[0], fresh, epoch_id=0)
-    monkeypatch.setattr(inc, "_commit", orig_commit)
+    monkeypatch.setattr(checkpoint, "commit", orig_commit)
     assert inc._epochs_on_disk(fresh) == [0]
     assert not os.path.exists(os.path.join(fresh, "_log"))
     with _pt.raises(RuntimeError, match="no committed version"):

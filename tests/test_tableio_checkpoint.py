@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import pathlib
 import shutil
+import sys
+import threading
 
 import pandas as pd
 import pytest
@@ -82,13 +84,30 @@ def test_post_check_job_count(spark, tmp_path):
     assert len(sc.statusTracker().getJobIdsForGroup("post_check_jobs")) <= 3
 
 
+def test_post_check_detects_dropped_row(spark, tmp_path, monkeypatch):
+    """The sidecar audits the frame the write was given, not a re-read
+    of the sink: a writer that loses one row of a 4-partition frame
+    fails the post-check."""
+    write = tableio.write_partitioned
+
+    def drop_one_row(df, path, partition_cols, mode="overwrite"):
+        write(df.filter(F.col("id") != 0), path, partition_cols, mode)
+
+    monkeypatch.setattr(tableio, "write_partitioned", drop_one_row)
+    path = str(tmp_path / "t")
+    tableio.write_with_audit(_df(spark), path, ["part"], id_col="id")
+    assert spark.read.parquet(path).count() == 99
+    assert not tableio.post_check(_df(spark), path, ["part"], "id")
+
+
 def test_post_check_missing_audit(spark, tmp_path):
     assert not tableio.post_check(_df(spark), str(tmp_path / "nope"), ["part"], "id")
 
 
 def test_state_store_roundtrip(tmp_path):
-    st = StateStore(str(tmp_path / "state"))
-    assert st.get("u1") == Step.INIT
+    log = tmp_path / "_log"
+    st = StateStore(str(log))
+    assert st.get("u1") == Step.INIT and not log.exists()
     st.set("u1", Step.LINKED, rows=5)
     assert st.get("u1") == Step.LINKED
     assert st.metrics("u1") == {"rows": 5}
@@ -103,6 +122,40 @@ def test_state_store_roundtrip(tmp_path):
     st.set("u1", Step.COMPLETE)
     assert st.get("u1") == Step.COMPLETE
     assert st.metrics("u1") == {"rows": 5, "checked": True}
+    # each change committed one log version; a set that changes
+    # nothing (or moves backwards) commits none
+    st.set("u1", Step.COMPLETE, rows=5)
+    assert sorted(p.name for p in log.iterdir()) == [
+        f"{v:020d}.json" for v in range(3)
+    ]
+
+
+def test_state_store_concurrent_sets_lose_no_metric(tmp_path):
+    """Many threads merging distinct metrics into one unit's record at
+    once: each lost race for a log version re-reads and retries, so the
+    final record holds every metric (a lost update would drop one)."""
+    st = StateStore(str(tmp_path / "_log"))
+    errors = []
+
+    def set_metric(i):
+        try:
+            st.set("u", Step.LINKED, **{f"m{i}": i})
+        except Exception as e:  # reported by the assertion below
+            errors.append(e)
+
+    threads = [threading.Thread(target=set_metric, args=(i,)) for i in range(32)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert st.get("u") == Step.LINKED
+    assert st.metrics("u") == {f"m{i}": i for i in range(32)}
 
 
 def test_iceberg_seam_detection(spark):

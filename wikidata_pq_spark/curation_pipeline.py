@@ -1,9 +1,9 @@
 """Resumable corpus-curation pipeline: the training-data twin of
 ``KGPipeline``.
 
-Stages (each checkpointed through the same JSON state machine the KG
-pipeline uses -- reference: state.py:11-18 / process.py:279-282 skip
-gates -- so a killed job re-submits and completed stages skip):
+Stages (each a unit of the KG pipeline's state machine, committed to
+``_log/<version>.json`` -- reference: state.py:11-18 / process.py:279-282
+skip gates -- so a killed job re-submits and completed stages skip):
 
 1. redact    -- PII scrub (map-only, fuses into the scan), text
                 replaced in place, per-class hit counts kept.
@@ -46,7 +46,7 @@ class CurationPipeline:
         self.quality_min = quality_min
         self.rep_max = rep_max
         self.max_len = max_len
-        self.state = StateStore(os.path.join(out_dir, "_state"))
+        self.state = StateStore(os.path.join(out_dir, "_log"))
 
     def _p(self, name: str) -> str:
         return os.path.join(self.out, name)

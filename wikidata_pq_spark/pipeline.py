@@ -1,9 +1,10 @@
 """End-to-end transcript -> knowledge-graph pipeline (resumable).
 
 The corpus splits into ``n_chunks`` units by conversation hash, each
-with its own checkpoint unit -- the reference's one state file per
-source file (reference: state.py:11-18, main.py:61-136): a killed run
-re-does only the unit it died in. Stage graph, per unit kind:
+with its own record in the store's commit log, ``_log/<version>.json``
+-- the reference's one state file per source file (reference:
+state.py:11-18, main.py:61-136): a killed run re-does only the unit it
+died in. Stage graph, per unit kind:
 
   corpus        CANONICALIZED: the same-as connected components,
                 computed once per store and written as ``components``
@@ -47,13 +48,13 @@ from .plans.checkpoint import StateStore, Step
 from .sources import tableio
 
 CORPUS = "corpus"  # the unit that owns the corpus-wide stages
-# what older layouts leave in an out_dir: the stage tables from before
-# chunk units, the subject-hash bucket= level under edges and nodes, and
-# the sidecars of chunks whose records hold no audit row. Resuming one
-# would mix old and new chunks or layouts, so the pipeline refuses it
+# what older layouts leave in an out_dir: pre-chunk stage tables, the
+# bucket= level under edges and nodes, the sidecars of records with no
+# audit row, and the state files from before the commit log. Resuming
+# one would mix old and new chunks or layouts, so the pipeline refuses it
 OLD_LAYOUT = (
     "mentions", "triples", "edges/chunk=*/bucket=*", "nodes/bucket=*",
-    "edges_audit", "nodes_audit",
+    "edges_audit", "nodes_audit", "_state",
 )
 
 
@@ -83,7 +84,7 @@ class KGPipeline:
         self.out_dir = out_dir
         self.n_chunks = n_chunks
         self.link_strategy = link_strategy
-        self.state = StateStore(os.path.join(out_dir, "_state"))
+        self.state = StateStore(os.path.join(out_dir, "_log"))
 
     # -- paths ---------------------------------------------------------
     def path(self, name: str) -> str:

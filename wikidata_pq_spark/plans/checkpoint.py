@@ -1,26 +1,59 @@
-"""Per-stage checkpoint state machine (resume gates).
+"""The commit log, and the per-stage state machine (resume gates) on it.
 
-Mirrors the reference's file-granular JSONL state machine (reference:
-state.py:11-18 Step IntEnum INIT(0)..COMPLETE(6); state.py:30-35 one
-single-row JSONL per unit; process.py:279-282 skip-if-done gates) with
-our stage names. State lives in a JSON file per partition unit in a
-state directory -- tiny driver-side metadata, exactly like the
-reference's choice of NDJSON over a database.
+A commit log is a directory of full snapshots, ``<version:020d>.json``
+(the Delta Lake protocol, Armbrust et al., VLDB 2020). ``commit``
+fsyncs a snapshot to a temp file and installs it with os.link, which
+fails if the version exists: of two writers that read version V,
+exactly one creates V+1 and the other gets FileExistsError, and no
+reader sees a half-written version. The epoch stores
+(``streaming/incremental.py``) and ``StateStore`` both commit this way.
 
-At cluster scale the state dir sits on the shared filesystem / object
-store; a Delta/Iceberg MERGE-based checkpoint table is the drop-in
-upgrade (same API surface).
+``StateStore`` is the reference's step state machine (reference:
+state.py:11-18 Step INIT(0)..COMPLETE(6), state.py:30-35 one record per
+unit, process.py:279-282 skip-if-done gates), with all of a store's
+unit records in one snapshot: advancing a unit commits the next version.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import tempfile
 from enum import IntEnum
+
+_VERSION_FILE = re.compile(r"^(\d{20})\.json$")
+
+
+def head(log_dir: str) -> tuple[int, dict]:
+    """The newest committed version under ``log_dir`` and its snapshot;
+    (-1, {}) if no version was committed."""
+    names = os.listdir(log_dir) if os.path.isdir(log_dir) else []
+    versions = [int(m.group(1)) for m in map(_VERSION_FILE.match, names) if m]
+    if not versions:
+        return -1, {}
+    version = max(versions)
+    with open(os.path.join(log_dir, f"{version:020d}.json")) as fh:
+        return version, json.load(fh)
+
+
+def commit(log_dir: str, version: int, snapshot: dict) -> None:
+    """Install ``snapshot`` as ``version``; raises FileExistsError if
+    another writer committed that version first."""
+    os.makedirs(log_dir, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(prefix=".", suffix=".tmp", dir=log_dir)
+    try:
+        with os.fdopen(fd, "w") as fh:
+            json.dump(snapshot, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.link(tmp, os.path.join(log_dir, f"{version:020d}.json"))
+    finally:
+        os.remove(tmp)
 
 
 class Step(IntEnum):
-    # state files store the int, so the values stay fixed
+    # records store the int, so the values stay fixed
     INIT = 0
     LINKED = 2
     CANONICALIZED = 3
@@ -30,44 +63,38 @@ class Step(IntEnum):
 
 
 class StateStore:
-    """JSON-file-per-unit step store with idempotent gates."""
+    """Every unit's record in one commit-log snapshot under ``log_dir``,
+    with idempotent gates."""
 
-    def __init__(self, state_dir: str):
-        self.state_dir = state_dir
-        os.makedirs(state_dir, exist_ok=True)
-
-    def _path(self, unit: str) -> str:
-        return os.path.join(self.state_dir, f"{unit}.json")
+    def __init__(self, log_dir: str):
+        self.log_dir = log_dir
 
     def _record(self, unit: str) -> dict:
-        p = self._path(unit)
-        if not os.path.exists(p):
-            return {"step": int(Step.INIT)}
-        with open(p) as f:
-            return json.load(f)
+        return head(self.log_dir)[1].get(unit, {"step": int(Step.INIT)})
 
     def get(self, unit: str) -> Step:
         return Step(self._record(unit)["step"])
 
     def set(self, unit: str, step: Step, **metrics) -> None:
         """Advance a unit's step and merge ``metrics`` into its record,
-        so what an earlier stage recorded survives the later ones.
-        Refuses to move backwards (idempotent re-runs are safe, lost
-        progress is not silently possible)."""
-        record = self._record(unit)
-        if step < record["step"]:
-            return
-        record.update(metrics, step=int(step))
-        tmp = self._path(unit) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(record, f)
-        os.replace(tmp, self._path(unit))
+        so what an earlier stage recorded survives the later ones. Never
+        moves backwards, and commits nothing if the record is unchanged;
+        a lost commit race re-reads and retries, so no update is lost."""
+        while True:
+            version, snapshot = head(self.log_dir)
+            old = snapshot.get(unit, {"step": int(Step.INIT)})
+            record = {**old, **metrics, "step": int(step)}
+            if step < old["step"] or record == old:
+                return
+            try:
+                commit(self.log_dir, version + 1, {**snapshot, unit: record})
+                return
+            except FileExistsError:
+                continue
 
     def metrics(self, unit: str) -> dict:
         """Stage metrics only (the step itself comes from ``get``)."""
-        record = self._record(unit)
-        record.pop("step")
-        return record
+        return {k: v for k, v in self._record(unit).items() if k != "step"}
 
     def gate(self, unit: str, step: Step) -> bool:
         """True if this step still needs to run for the unit

@@ -8,7 +8,8 @@ unpartitioned sink observes it on its own write (``observe_audit``) and
 the caller keeps it. A partitioned sink needs a row per partition, which
 an ``Observation`` cannot group: ``write_with_audit`` writes Hive-style
 parquet, the reference's layout (core.py:38-58 PartitionByKey ->
-results/{table}/language=X/), plus a sidecar of per-partition rows.
+results/{table}/language=X/), plus a sidecar of per-partition rows
+aggregated from the frame it was given (a second pass over its plan).
 
 Only ``write_table`` routes to Iceberg, when a
 ``spark.sql.catalog.<name>`` config is set; no flow calls it. With
@@ -120,11 +121,10 @@ def audit_frame(df: DataFrame, partition_cols: list[str], id_col: str) -> DataFr
     )
 
 
-def _sink_audit(df, path, partition_cols, id_col, source) -> DataFrame:
-    """``audit_frame`` of the sink at ``path`` read with ``df``'s schema,
-    with the ``source`` unit stamped on every row."""
-    data = df.sparkSession.read.schema(df.schema).parquet(path)
-    audit = audit_frame(data, partition_cols, id_col)
+def _stamped_audit(df, partition_cols, id_col, source) -> DataFrame:
+    """``audit_frame`` of ``df`` with the ``source`` unit stamped on
+    every row."""
+    audit = audit_frame(df, partition_cols, id_col)
     if source is None:
         return audit
     col, value = source
@@ -148,11 +148,8 @@ def write_with_audit(
     reference's audit/{table}/{source_name} tree).
     """
     write_partitioned(df, path, partition_cols)
-    # explicit schema: an all-empty frame writes no part files under
-    # partitionBy, and a schema-inferring re-read of the bare _SUCCESS
-    # dir raises UNABLE_TO_INFER_SCHEMA -- with the writer's schema the
-    # re-read is just an empty frame and the sidecar has zero rows.
-    _sink_audit(df, path, partition_cols, id_col, source).write.mode(
+    # the sidecar audits what the sink was given, not a re-read of it
+    _stamped_audit(df, partition_cols, id_col, source).write.mode(
         "overwrite"
     ).parquet(audit_path or path + "_audit")
 
@@ -208,6 +205,9 @@ def post_check(
     apath = audit_path or path + "_audit"
     if not (os.path.exists(path) and os.path.exists(apath)):
         return False
-    written = _sink_audit(df, path, partition_cols, id_col, source)
+    # the writer's schema: an all-empty partitionBy write leaves no part
+    # file, and inferring a schema from the bare dir raises
+    data = df.sparkSession.read.schema(df.schema).parquet(path)
+    written = _stamped_audit(data, partition_cols, id_col, source)
     sidecar = df.sparkSession.read.schema(written.schema).parquet(apath)
     return matches_audit(written, [r.asDict() for r in sidecar.collect()])

@@ -17,11 +17,9 @@ Structured Streaming with checkpointed exactly-once sinks:
   ``incremental_*`` foreachBatch wrappers): each micro-batch lands as
   one partial aggregate under its own ``epoch=N`` partition, reads
   reduce the live partials, and ``compact_*`` folds them into one
-  generation. The live set is an append-only commit log,
-  ``<store>/_log/<version:020d>.json``, one full snapshot per version,
-  installed with ``os.link`` so only one writer can create each
-  version. A replay of a committed epoch is a no-op, a merge or
-  compaction that dies before its commit stays invisible, and of two
+  generation. The live set is a ``checkpoint`` commit log under
+  ``<store>/_log/``. A replay of a committed epoch is a no-op, a merge
+  or compaction that dies before its commit stays invisible, and of two
   writers racing for a version the loser retries (merge) or raises
   (compaction). See the commit-log section below.
 
@@ -36,15 +34,14 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators import extract, linking
+from ..plans import checkpoint
 from ..sources import tableio
 from ..sources.transcript_source import TRANSCRIPT_DDL
 
@@ -387,13 +384,10 @@ def incremental_current_beliefs(
 # (ids >= 0) -- with no information loss.
 #
 # Bare parquet has no atomic multi-partition commit, so the live set is
-# recorded in an append-only log, ``<store>/_log/<version:020d>.json``
-# (the Delta Lake protocol, Armbrust et al., VLDB 2020). Each version is
-# a full snapshot {live, compacted_through, generation, schema}, written
-# to a temp file, fsync'd, and installed with os.link, which fails if
-# the version exists: of two writers that read version V, exactly one
-# creates V+1 and the other gets FileExistsError. ``schema`` is the
-# written partial's schema, epoch included (Delta's
+# recorded in the store's commit log, ``<store>/_log/`` (``checkpoint.
+# head``/``commit``: one full snapshot per version, one writer wins each
+# version). A snapshot is {live, compacted_through, generation, schema};
+# ``schema`` is the written partial's schema, epoch included (Delta's
 # metaData.schemaString), so a read builds its scan without a
 # schema-inference job.
 #
@@ -420,8 +414,6 @@ def incremental_current_beliefs(
 # compaction died before its commit is invisible by construction.
 # --------------------------------------------------------------------------
 
-_VERSION_FILE = re.compile(r"^(\d{20})\.json$")
-
 
 def _log_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "_log")
@@ -441,7 +433,7 @@ def _epochs_on_disk(out_dir: str) -> list[int]:
 
 
 def _head(out_dir: str, own_epoch: int | None = None) -> tuple[int, dict]:
-    """The newest committed log version and its snapshot; version -1
+    """The store's newest committed version and its snapshot; version -1
     and an empty snapshot for a store with no log yet. A store whose
     epoch partitions have no committed log version (the log was lost
     or never written) is refused: guessing which partitions are live
@@ -449,40 +441,18 @@ def _head(out_dir: str, own_epoch: int | None = None) -> tuple[int, dict]:
     partition allowed is ``own_epoch``, the caller's own replayed
     write, so a first merge that died before committing version 0 can
     still be replayed."""
-    log = _log_dir(out_dir)
-    names = os.listdir(log) if os.path.isdir(log) else []
-    versions = [int(m.group(1)) for m in map(_VERSION_FILE.match, names) if m]
-    if versions:
-        version = max(versions)
-        with open(os.path.join(log, f"{version:020d}.json")) as fh:
-            return version, json.load(fh)
+    version, snapshot = checkpoint.head(_log_dir(out_dir))
+    if version >= 0:
+        return version, snapshot
     stray = [e for e in _epochs_on_disk(out_dir) if e != own_epoch]
     if stray:
         raise RuntimeError(
             f"store at {out_dir} has epoch partitions {stray} but no "
-            f"committed version under {log}: the commit log was lost "
-            "or never written, so the live set is unknown. Restore the "
-            "log; the data was left untouched."
+            f"committed version under {_log_dir(out_dir)}: the commit log "
+            "was lost or never written, so the live set is unknown. "
+            "Restore the log; the data was left untouched."
         )
-    return -1, {
-        "live": [], "compacted_through": -1, "generation": None, "schema": None
-    }
-
-
-def _commit(out_dir: str, version: int, snapshot: dict) -> None:
-    """Install ``snapshot`` as log ``version``; raises FileExistsError
-    if another writer committed that version first."""
-    log = _log_dir(out_dir)
-    os.makedirs(log, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(prefix=".", suffix=".tmp", dir=log)
-    try:
-        with os.fdopen(fd, "w") as fh:
-            json.dump(snapshot, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.link(tmp, os.path.join(log, f"{version:020d}.json"))
-    finally:
-        os.remove(tmp)
+    return -1, {"live": [], "compacted_through": -1, "generation": None, "schema": None}
 
 
 def live_epochs(out_dir: str) -> list[int]:
@@ -544,8 +514,9 @@ def _merge_epoch(partial: DataFrame, out_dir: str, epoch_id: int) -> None:
     while True:
         live = sorted(snapshot["live"] + [epoch])
         try:
-            _commit(
-                out_dir, version + 1, {**snapshot, "live": live, "schema": schema}
+            checkpoint.commit(
+                _log_dir(out_dir), version + 1,
+                {**snapshot, "live": live, "schema": schema},
             )
             return
         except FileExistsError:  # another writer committed first: re-read
@@ -608,7 +579,7 @@ def _compact(spark: SparkSession, out_dir: str, reducer) -> dict:
         "schema": _write_partition(merged, out_dir, gen),
     }
     try:
-        _commit(out_dir, version + 1, committed)
+        checkpoint.commit(_log_dir(out_dir), version + 1, committed)
     except FileExistsError:
         raise RuntimeError(
             f"compaction of {out_dir} lost the commit race for log "
