@@ -8,7 +8,8 @@
         [--quality-min 0.3] [--rep-max 0.5] [--max-len 512]
 
 Resumable: re-submit after a failure and completed stages skip (same
-state machine as the KG pipeline, committed to ``<out>/_log/<version>.json``).
+state machine as the KG pipeline, one commit log per stage,
+``<out>/_log/<unit>/<version>.json``).
 """
 
 from __future__ import annotations

@@ -23,9 +23,9 @@ Output layout under ``--out``:
     components/                same-as component map (CANONICALIZED,
                                once per store)
     nodes/                     distinct entity ids (MATERIALIZED)
-    _log/<version>.json        the commit log: each stage commits the
-                               next version, a snapshot of every unit's
-                               record. ``chunk_NNNNN``: LINKED,
+    _log/<unit>/<version>.json one commit log per unit: each stage
+                               commits the unit's next version, that
+                               unit's record. ``chunk_NNNNN``: LINKED,
                                mentions/linked rows, and the edges
                                write's audit row (rows, min_id, max_id)
                                and schema. ``corpus``: the corpus-wide

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 
 import pytest
@@ -203,6 +204,15 @@ def test_empty_chunks_survive(spark, tmp_path):
     assert rows.count(0) > 0  # exercises empties
     assert pipe.post_check()
     assert len(_tset(pipe.triples())) > 0
+    # one commit log per unit: every version file holds one unit's
+    # record, and each chunk, advanced once, committed one version
+    log = str(tmp_path / "kg" / "_log")
+    for path in (os.path.join(r, f) for r, _, fs in os.walk(log) for f in fs):
+        with open(path) as fh:
+            assert isinstance(json.load(fh)["step"], int), path
+    assert {u: os.listdir(os.path.join(log, u)) for u in pipe.units()} == {
+        u: [f"{0:020d}.json"] for u in pipe.units()
+    }
 
 
 def _tree(root):
@@ -215,8 +225,9 @@ def _tree(root):
 def test_resume_refuses_old_layout(spark, spark_corpus, tmp_path):
     """An out_dir holding an older pipeline's layout (a ``mentions`` or
     ``triples`` dir, a ``bucket=`` level under ``edges/chunk=*`` or
-    ``nodes``, an ``edges_audit`` or ``nodes_audit`` sidecar table, or a
-    ``_state`` dir of per-unit JSON files) must refuse to resume, and
+    ``nodes``, an ``edges_audit`` or ``nodes_audit`` sidecar table, a
+    ``_state`` dir of per-unit JSON files, or ``_log/<version>.json``
+    snapshots of every unit's record) must refuse to resume, and
     write nothing: its finished stages would be skipped or mixed with
     new chunks, directory depths mixed under ``edges``, or chunks
     without a recorded audit row post-checked, instead of re-run."""
@@ -228,9 +239,14 @@ def test_resume_refuses_old_layout(spark, spark_corpus, tmp_path):
         ("edges_audit", "edges_audit/chunk=0"),
         ("nodes_audit", "nodes_audit"),
         ("state", "_state"),
+        ("snapshot_log", "_log/00000000000000000000.json"),
     ]:
         out = tmp_path / name
-        os.makedirs(out / old)
+        if old.endswith(".json"):
+            os.makedirs((out / old).parent)
+            (out / old).write_text('{"corpus": {"step": 6}}')
+        else:
+            os.makedirs(out / old)
         pipe = KGPipeline(spark, str(out), n_chunks=4)
         before = _tree(out)
         with pytest.raises(RuntimeError, match="layout of an older pipeline"):

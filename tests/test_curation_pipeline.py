@@ -61,17 +61,46 @@ def test_curation_pipeline_resume_skips_and_recomputes(spark, docs, tmp_path):
     assert again == first
     assert os.path.getmtime(out + "/corpus") == mtime
 
-    # kill-after-pack simulation: commit a log version without the
-    # finalize record, re-run, the final stage recomputes to an
-    # identical corpus
-    version, snapshot = checkpoint.head(out + "/_log")
-    del snapshot["finalize"]
-    checkpoint.commit(out + "/_log", version + 1, snapshot)
+    # kill-after-pack simulation: commit a finalize version back at
+    # INIT, re-run, the final stage recomputes to an identical corpus
+    version = checkpoint.head(out + "/_log/finalize")[0]
+    checkpoint.commit(out + "/_log/finalize", version + 1, {"step": 0})
     shutil.rmtree(out + "/corpus")
     resumed = CurationPipeline(spark, out, max_len=64).run(docs)
     assert resumed == first
     back = pipe.corpus().toPandas().sort_values("doc_id").reset_index(drop=True)
     assert back.equals(golden)
+
+
+def _jobs_in_group(sc, group: str, fn):
+    """Run ``fn`` under job group ``group``; its result and job count."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the asynchronous listener bus: drain
+    # it so a job that already ran is counted
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.classic_session_only
+def test_curation_reads_build_without_jobs(spark, docs, tmp_path):
+    """Each stage records the schema it wrote and every read takes it
+    from there: a completed re-run and ``corpus()`` launch no Spark job
+    (a schema-inferring read would launch one per table)."""
+    from wikidata_pq_spark.curation_pipeline import CurationPipeline
+
+    out = str(tmp_path / "cur")
+    first = CurationPipeline(spark, out, max_len=64).run(docs)
+    pipe = CurationPipeline(spark, out, max_len=64)
+    sc = spark.sparkContext
+    again, jobs = _jobs_in_group(sc, "curation_rerun", lambda: pipe.run(docs))
+    assert again == first and jobs == 0
+    corpus, jobs = _jobs_in_group(sc, "curation_corpus", pipe.corpus)
+    assert jobs == 0
+    assert set(corpus.columns) >= {"doc_id", "lang", "split", "n_chunks"}
 
 
 @pytest.mark.skipif(shutil.which("spark-submit") is None, reason="spark-submit missing")

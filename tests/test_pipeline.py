@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import pathlib
 
 from wikidata_pq_spark import oracle
 from wikidata_pq_spark.pipeline import KGPipeline
@@ -49,15 +52,19 @@ def test_end_to_end_pr(spark, spark_corpus, corpus, tmp_path):
 
 def test_resume_mid_pipeline_identical(spark, spark_corpus, tmp_path):
     out = tmp_path / "kg"
-    pipe, metrics = _run(spark, spark_corpus, out)
+    pipe, _ = _run(spark, spark_corpus, out)
     before = _triple_set(pipe)
     # simulate a crash after LINKED: later stages must re-run, earlier skip
-    log = str(out / "_log")
-    version, snapshot = checkpoint.head(log)
-    rewound = {**snapshot, "corpus": {"step": int(Step.LINKED), **metrics}}
-    checkpoint.commit(log, version + 1, rewound)
+    log = str(out / "_log" / "corpus")
+    version, record = checkpoint.head(log)
+    checkpoint.commit(log, version + 1, {**record, "step": int(Step.LINKED)})
     pipe2, _ = _run(spark, spark_corpus, out)
     assert _triple_set(pipe2) == before
+    # the resume re-ran every corpus stage after LINKED, one new
+    # version each, and no chunk's log moved
+    done = [Step.CANONICALIZED, Step.MATERIALIZED, Step.VERIFIED, Step.COMPLETE]
+    assert _steps(log) == done + [Step.LINKED] + done
+    assert [_steps(str(out / "_log" / u)) for u in pipe2.units()] == [[Step.LINKED]]
 
 
 def test_complete_run_is_noop(spark, spark_corpus, tmp_path):
@@ -68,13 +75,24 @@ def test_complete_run_is_noop(spark, spark_corpus, tmp_path):
         for p in os.listdir(str(out))
         if not p.startswith("_")
     }
-    version = checkpoint.head(str(out / "_log"))[0]
-    assert version >= 0
+    versions = _log_versions(out)
+    assert versions
     _run(spark, spark_corpus, out)
     for p, t in mtimes.items():
         assert os.path.getmtime(os.path.join(str(out), p)) == t
     # every gate was closed and every record unchanged: no new log version
-    assert checkpoint.head(str(out / "_log"))[0] == version
+    assert _log_versions(out) == versions
+
+
+def _steps(log):
+    """The step of each committed version of one unit's log, oldest first."""
+    paths = sorted(glob.glob(os.path.join(log, "*.json")))
+    return [json.loads(pathlib.Path(p).read_text())["step"] for p in paths]
+
+
+def _log_versions(out):
+    """Every committed version file across the units' logs, ``_log/*/``."""
+    return sorted(glob.glob(str(out / "_log" / "*" / "*.json")))
 
 
 def _parquet_files(path):

@@ -122,12 +122,16 @@ def test_state_store_roundtrip(tmp_path):
     st.set("u1", Step.COMPLETE)
     assert st.get("u1") == Step.COMPLETE
     assert st.metrics("u1") == {"rows": 5, "checked": True}
-    # each change committed one log version; a set that changes
-    # nothing (or moves backwards) commits none
+    # each change committed one version of the unit's own log; a set
+    # that changes nothing (or moves backwards) commits none
     st.set("u1", Step.COMPLETE, rows=5)
-    assert sorted(p.name for p in log.iterdir()) == [
-        f"{v:020d}.json" for v in range(3)
-    ]
+    u1_log = [f"{v:020d}.json" for v in range(3)]
+    assert sorted(p.name for p in (log / "u1").iterdir()) == u1_log
+    # another unit's change commits to its own log only
+    st.set("u2", Step.LINKED, rows=7)
+    assert sorted(p.name for p in (log / "u1").iterdir()) == u1_log
+    assert sorted(p.name for p in log.iterdir()) == ["u1", "u2"]
+    assert st.metrics("u1") == {"rows": 5, "checked": True}
 
 
 def test_state_store_concurrent_sets_lose_no_metric(tmp_path):

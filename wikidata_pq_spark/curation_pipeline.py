@@ -1,9 +1,10 @@
 """Resumable corpus-curation pipeline: the training-data twin of
 ``KGPipeline``.
 
-Stages (each a unit of the KG pipeline's state machine, committed to
-``_log/<version>.json`` -- reference: state.py:11-18 / process.py:279-282
-skip gates -- so a killed job re-submits and completed stages skip):
+Stages (each a unit of the KG pipeline's state machine, with its own
+commit log ``_log/<unit>/<version>.json`` -- reference: state.py:11-18 /
+process.py:279-282 skip gates -- so a killed job re-submits and
+completed stages skip):
 
 1. redact    -- PII scrub (map-only, fuses into the scan), text
                 replaced in place, per-class hit counts kept.
@@ -16,8 +17,9 @@ skip gates -- so a killed job re-submits and completed stages skip):
                 sidecars + post-check (the VERIFIED gate).
 
 Every stage writes parquet under ``out_dir`` and advances its state
-unit to COMPLETE with row-count metrics, so resume-identical semantics
-and lineage audit work exactly like the KG side.
+unit to COMPLETE with row-count metrics and the written schema, which
+every later read uses (no schema-inference job), so resume-identical
+semantics and lineage audit work exactly like the KG side.
 """
 
 from __future__ import annotations
@@ -63,18 +65,18 @@ class CurationPipeline:
                 "n_email", "n_phone", "n_ipv4", "had_pii",
             ))
             out.write.mode("overwrite").parquet(self._p("redacted"))
-            st.set("redact", Step.COMPLETE, rows=n.get["rows"])
+            st.set("redact", Step.COMPLETE, rows=n.get["rows"], schema=out.schema.jsonValue())
 
-        redacted = self.spark.read.parquet(self._p("redacted"))
+        redacted = self._read("redacted", "redact")
 
         if st.gate("curate", Step.COMPLETE):
             cur, n = tableio.observe_rows(curation.curate_corpus(
                 redacted, quality_min=self.quality_min, rep_max=self.rep_max
             ))
             cur.write.mode("overwrite").parquet(self._p("curated"))
-            st.set("curate", Step.COMPLETE, rows=n.get["rows"])
+            st.set("curate", Step.COMPLETE, rows=n.get["rows"], schema=cur.schema.jsonValue())
 
-        curated = self.spark.read.parquet(self._p("curated"))
+        curated = self._read("curated", "curate")
 
         if st.gate("pack", Step.COMPLETE):
             survivors = redacted.join(
@@ -84,10 +86,10 @@ class CurationPipeline:
                 curation.pack_chunks(survivors, max_len=self.max_len)
             )
             packed.write.mode("overwrite").parquet(self._p("packed"))
-            st.set("pack", Step.COMPLETE, rows=n.get["rows"])
+            st.set("pack", Step.COMPLETE, rows=n.get["rows"], schema=packed.schema.jsonValue())
 
         if st.gate("finalize", Step.COMPLETE):
-            packed = self.spark.read.parquet(self._p("packed"))
+            packed = self._read("packed", "pack")
             final, n = tableio.observe_rows(
                 curated.join(packed, ["doc_id", "lang"]).select(
                     "doc_id", "lang", "split", "quality", "rep_ratio",
@@ -103,7 +105,10 @@ class CurationPipeline:
             )
             if not ok:
                 raise RuntimeError("curated-corpus sink failed post-check")
-            st.set("finalize", Step.COMPLETE, rows=n.get["rows"], verified=True)
+            st.set(
+                "finalize", Step.COMPLETE, rows=n.get["rows"], verified=True,
+                schema=final.schema.jsonValue(),
+            )
 
         return {
             "redacted": self.state.metrics("redact").get("rows"),
@@ -114,4 +119,7 @@ class CurationPipeline:
         }
 
     def corpus(self) -> DataFrame:
-        return self.spark.read.parquet(self._p("corpus"))
+        return self._read("corpus", "finalize")
+
+    def _read(self, table: str, unit: str) -> DataFrame:
+        return tableio.read_recorded(self.spark, self._p(table), self.state.metrics(unit))

@@ -33,11 +33,6 @@ def distinct_tokens(col: Column | str) -> Column:
     return F.array_distinct(tokens(col))
 
 
-def token_count(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(F.trim(c) == "", F.lit(0)).otherwise(F.size(tokens(c)))
-
-
 def bpe_ish_token_count(col: Column | str) -> Column:
     """Sub-word-ish token count (cheap BPE proxy): maximal runs of
     letters, digits, or single punctuation marks. RE2-compatible

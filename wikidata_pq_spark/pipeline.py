@@ -1,10 +1,10 @@
 """End-to-end transcript -> knowledge-graph pipeline (resumable).
 
 The corpus splits into ``n_chunks`` units by conversation hash, each
-with its own record in the store's commit log, ``_log/<version>.json``
--- the reference's one state file per source file (reference:
-state.py:11-18, main.py:61-136): a killed run re-does only the unit it
-died in. Stage graph, per unit kind:
+with its own commit log, ``_log/<unit>/<version>.json`` -- the
+reference's one state file per source file (reference: state.py:11-18,
+main.py:61-136): a killed run re-does only the unit it died in. Stage
+graph, per unit kind:
 
   corpus        CANONICALIZED: the same-as connected components,
                 computed once per store and written as ``components``
@@ -36,12 +36,10 @@ Every stage is idempotent: re-running a completed stage is a no-op
 from __future__ import annotations
 
 import glob
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from .operators import canonicalize, extract, linking
 from .plans.checkpoint import StateStore, Step
@@ -50,11 +48,12 @@ from .sources import tableio
 CORPUS = "corpus"  # the unit that owns the corpus-wide stages
 # what older layouts leave in an out_dir: pre-chunk stage tables, the
 # bucket= level under edges and nodes, the sidecars of records with no
-# audit row, and the state files from before the commit log. Resuming
-# one would mix old and new chunks or layouts, so the pipeline refuses it
+# audit row, the state files from before the commit log, and the
+# all-unit snapshots from before one log per unit. Resuming one would
+# mix old and new chunks or layouts, so the pipeline refuses it
 OLD_LAYOUT = (
     "mentions", "triples", "edges/chunk=*/bucket=*", "nodes/bucket=*",
-    "edges_audit", "nodes_audit", "_state",
+    "edges_audit", "nodes_audit", "_state", "_log/*.json",
 )
 
 
@@ -156,7 +155,7 @@ class KGPipeline:
             st.set(
                 unit, Step.LINKED,
                 mentions=n_mentions.get["rows"], linked=audit.get["rows"],
-                audit=audit.get, schema=json.loads(edges.schema.json()),
+                audit=audit.get, schema=edges.schema.jsonValue(),
             )
 
         chunks = [st.metrics(u) for u in self.units()]
@@ -177,7 +176,7 @@ class KGPipeline:
             tableio.write_partitioned(nodes, self.path("nodes"), [])
             st.set(
                 CORPUS, Step.MATERIALIZED, **metrics, nodes=audit.get["rows"],
-                audit=audit.get, schema=json.loads(nodes.schema.json()),
+                audit=audit.get, schema=nodes.schema.jsonValue(),
             )
         metrics["nodes"] = st.metrics(CORPUS)["nodes"]
 
@@ -218,8 +217,7 @@ class KGPipeline:
 
     def _read(self, table: str, unit: str) -> DataFrame:
         """``table`` read with the schema ``unit``'s write recorded."""
-        schema = StructType.fromJson(self.state.metrics(unit)["schema"])
-        return self.spark.read.schema(schema).parquet(self.path(table))
+        return tableio.read_recorded(self.spark, self.path(table), self.state.metrics(unit))
 
 
 PARTITION_KEYS = {

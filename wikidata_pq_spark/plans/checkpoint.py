@@ -10,8 +10,9 @@ reader sees a half-written version. The epoch stores
 
 ``StateStore`` is the reference's step state machine (reference:
 state.py:11-18 Step INIT(0)..COMPLETE(6), state.py:30-35 one record per
-unit, process.py:279-282 skip-if-done gates), with all of a store's
-unit records in one snapshot: advancing a unit commits the next version.
+unit, process.py:279-282 skip-if-done gates), each unit's record in its
+own log, ``<log_dir>/<unit>/<version:020d>.json``: a version holds one
+unit's record only, as a Delta commit holds only what it changed.
 """
 
 from __future__ import annotations
@@ -63,38 +64,37 @@ class Step(IntEnum):
 
 
 class StateStore:
-    """Every unit's record in one commit-log snapshot under ``log_dir``,
-    with idempotent gates."""
+    """One commit log per unit under ``log_dir``, with idempotent gates."""
 
     def __init__(self, log_dir: str):
         self.log_dir = log_dir
 
-    def _record(self, unit: str) -> dict:
-        return head(self.log_dir)[1].get(unit, {"step": int(Step.INIT)})
+    def _head(self, unit: str) -> tuple[int, dict]:
+        version, record = head(os.path.join(self.log_dir, unit))
+        return version, record or {"step": int(Step.INIT)}
 
     def get(self, unit: str) -> Step:
-        return Step(self._record(unit)["step"])
+        return Step(self._head(unit)[1]["step"])
 
     def set(self, unit: str, step: Step, **metrics) -> None:
         """Advance a unit's step and merge ``metrics`` into its record,
         so what an earlier stage recorded survives the later ones. Never
         moves backwards, and commits nothing if the record is unchanged;
-        a lost commit race re-reads and retries, so no update is lost."""
+        a race lost to a writer of the same unit re-reads and retries."""
         while True:
-            version, snapshot = head(self.log_dir)
-            old = snapshot.get(unit, {"step": int(Step.INIT)})
+            version, old = self._head(unit)
             record = {**old, **metrics, "step": int(step)}
             if step < old["step"] or record == old:
                 return
             try:
-                commit(self.log_dir, version + 1, {**snapshot, unit: record})
+                commit(os.path.join(self.log_dir, unit), version + 1, record)
                 return
             except FileExistsError:
                 continue
 
     def metrics(self, unit: str) -> dict:
         """Stage metrics only (the step itself comes from ``get``)."""
-        return {k: v for k, v in self._record(unit).items() if k != "step"}
+        return {k: v for k, v in self._head(unit)[1].items() if k != "step"}
 
     def gate(self, unit: str, step: Step) -> bool:
         """True if this step still needs to run for the unit

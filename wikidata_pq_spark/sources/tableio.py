@@ -24,6 +24,7 @@ from collections import Counter
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -109,6 +110,12 @@ def write_partitioned(
 ) -> None:
     """Partitioned columnar write (parquet fallback for Iceberg)."""
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+
+
+def read_recorded(spark: SparkSession, path: str, record: dict) -> DataFrame:
+    """``path`` read with the ``schema`` its write recorded in a state
+    ``record`` (JSON): building the scan launches no inference job."""
+    return spark.read.schema(StructType.fromJson(record["schema"])).parquet(path)
 
 
 def audit_frame(df: DataFrame, partition_cols: list[str], id_col: str) -> DataFrame:
