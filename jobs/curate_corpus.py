@@ -19,6 +19,8 @@ import json
 
 from pyspark.sql import SparkSession
 
+from wikidata_pq_spark.session import SQL_DEFAULTS
+
 
 def main() -> None:
     p = argparse.ArgumentParser()
@@ -29,8 +31,11 @@ def main() -> None:
     p.add_argument("--max-len", type=int, default=512)
     args = p.parse_args()
 
-    spark = SparkSession.builder.appName("curate_corpus").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = (
+        SparkSession.builder.appName("curate_corpus")
+        .config(map=SQL_DEFAULTS)
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("WARN")
 
     from wikidata_pq_spark.curation_pipeline import CurationPipeline

@@ -27,6 +27,8 @@ import json
 
 from pyspark.sql import SparkSession
 
+from wikidata_pq_spark.session import SQL_DEFAULTS
+
 
 def main() -> None:
     p = argparse.ArgumentParser()
@@ -43,8 +45,11 @@ def main() -> None:
     )
     args = p.parse_args()
 
-    spark = SparkSession.builder.appName("maintain_beliefs").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = (
+        SparkSession.builder.appName("maintain_beliefs")
+        .config(map=SQL_DEFAULTS)
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("WARN")
 
     from wikidata_pq_spark.streaming import incremental as inc

@@ -42,6 +42,8 @@ import json
 
 from pyspark.sql import SparkSession
 
+from wikidata_pq_spark.session import SQL_DEFAULTS
+
 
 def main() -> None:
     p = argparse.ArgumentParser()
@@ -60,9 +62,11 @@ def main() -> None:
     args = p.parse_args()
 
     # spark-submit provides master/conf; only adjust session-level SQL conf
-    spark = SparkSession.builder.appName("kg_pipeline").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    spark = (
+        SparkSession.builder.appName("kg_pipeline")
+        .config(map=SQL_DEFAULTS)
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("WARN")
 
     from wikidata_pq_spark.pipeline import KGPipeline

@@ -111,3 +111,49 @@ def test_cc_deterministic(spark, n):
     a = _cc(spark, edges)
     b = _cc(spark, edges)
     assert a == b
+
+
+def _path_taken(monkeypatch, same_as):
+    """Which path ``connected_components`` picks for ``same_as``, with
+    both paths stubbed so nothing but the choice runs."""
+    taken = []
+    for name in ("_driver_components", "_distributed_components"):
+        monkeypatch.setattr(canonicalize, name, lambda df, n=name: taken.append(n))
+    canonicalize.connected_components(same_as)
+    return taken
+
+
+@pytest.mark.classic_session_only
+def test_cc_path_choice_runs_no_job(spark, spark_corpus, monkeypatch):
+    """The driver/distributed switch reads the plan's size estimate: no
+    count probe, no Spark job."""
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_path_choice", "cc_path_choice")
+    try:
+        taken = _path_taken(monkeypatch, spark_corpus["same_as"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("cc_path_choice")) == 0
+    assert taken == ["_driver_components"]
+
+
+@pytest.mark.classic_session_only
+@pytest.mark.parametrize("n", [2000, 717_000])
+def test_cc_driver_path_up_to_235k_edges(spark, tmp_path, monkeypatch, n):
+    """gen_same_as(717_000) has 235,175 edges; union-find on the driver
+    takes 3.4-4.5 s there, the distributed rounds 11.7-25 s. Both it and
+    a benchmark-sized graph take the driver path, read from pandas or
+    from parquet."""
+    sdf = spark.createDataFrame(datagen.gen_same_as(n))
+    sdf.write.parquet(str(tmp_path / "same_as"))
+    for frame in (sdf, spark.read.parquet(str(tmp_path / "same_as"))):
+        assert _path_taken(monkeypatch, frame) == ["_driver_components"]
+
+
+@pytest.mark.classic_session_only
+def test_cc_unsized_source_takes_distributed_path(spark, monkeypatch):
+    """A frame Catalyst cannot size (a Python list becomes an RDD scan)
+    estimates Long.MaxValue: no bound admits it to the driver."""
+    sdf = spark.createDataFrame([("Q1", "Q2")], "src_id string, dst_id string")
+    assert _path_taken(monkeypatch, sdf) == ["_distributed_components"]

@@ -350,13 +350,16 @@ def _stage_jobs(sc, name, run):
 @pytest.mark.parametrize("n_chunks", [1, 4])
 def test_stage_job_counts(spark, spark_corpus, tmp_path, n_chunks):
     """The audit rows come from the writes, and every KG table is read
-    with a known schema: a chunk's LINKED runs at most 4 jobs (the
+    with a known schema: CANONICALIZED runs at most 2 jobs (the driver
+    collect and the components write; the CC path is chosen from the
+    plan's size estimate, not a count), a chunk's LINKED at most 4 (the
     chain write), MATERIALIZED at most 2 (the nodes write), VERIFIED at
     most 4 (one audit recompute per table). No sidecar table is
     written."""
     out = str(tmp_path / "kg")
     pipe = KGPipeline(spark, out, n_chunks=n_chunks)
     jobs = _stage_jobs(spark.sparkContext, out, lambda: _run(pipe, spark_corpus))
+    assert jobs["corpus:CANONICALIZED"] <= 2, jobs
     linked = [jobs[f"{u}:LINKED"] for u in pipe.units()]
     assert max(linked) <= 4, jobs
     assert jobs["corpus:MATERIALIZED"] <= 2, jobs

@@ -134,3 +134,35 @@ def test_extraction_null_text_rows_are_inert(spark):
             .toPandas()[key].sort_values(key).reset_index(drop=True)
         )
         assert got.equals(want), f"method={method} diverged on NULL rows"
+
+
+def test_session_case_maps_with_the_jvm(spark):
+    """``get_spark`` turns ICU case mapping off, so the first lower()
+    does not pay ICU's title-case table build."""
+    assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+
+
+# Pinned strings where a case mapping can go wrong: Latin-1 accents,
+# Greek final sigma, dotted capital I, capital sharp s, the titlecase
+# digraphs and the Kelvin sign. Over all 1,112,064 scalar code points,
+# Spark's JVM path (Java 17) differs from Python 3.11's str.lower
+# (Unicode 14) on 40 characters added in Unicode 14, and the ICU path
+# on 27 added in Unicode 15-16; neither setting is Python-exact, so
+# P/R = 1.0 against the oracle rests on the corpora's characters.
+CASE_STRINGS = [
+    "Hello World 42",
+    "Café Ñandú ÀÉÎÕÜ",
+    "ΟΔΟΣ ΣΟΦΟΣ",
+    "İSTANBUL",
+    "STRASSE ẞ",
+    "ǅ ǈ ǋ",
+    "\u212a",  # KELVIN SIGN, lowercases to ASCII k
+]
+
+
+def test_spark_lower_matches_python_lower(spark):
+    """The extractor lowercases with Spark's lower(), the oracle (and
+    the Arrow path) with Python's str.lower: equal on the pinned set."""
+    df = spark.createDataFrame([(s,) for s in CASE_STRINGS], "t string")
+    got = [r[0] for r in df.select(F.lower("t")).collect()]
+    assert got == [s.lower() for s in CASE_STRINGS]

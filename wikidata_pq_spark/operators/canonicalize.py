@@ -41,30 +41,48 @@ def _order_key(col):
     )
 
 
-DRIVER_MAX_EDGES = 200_000
+# The driver path collects the edges into pandas and runs union-find in
+# Python; above this estimated size the distributed rounds take over.
+# The estimate (Catalyst's sizeInBytes of the optimized plan) reads no
+# data: a local relation -- a frame made from pandas -- counts 48 B per
+# (string, string) row (an 8 B row header plus 20 B per string), so the
+# bound admits 349,525 edges from one; a parquet scan counts its
+# compressed file bytes, 8.7 B per edge of gen_same_as's files and 14.2 B
+# for random Q-id pairs, so 1.2-1.9M edges. The driver path ran 2M random
+# edges in 25.7 s wall within 1.1 GB peak driver RSS (4-core host).
+# gen_same_as(717_000), 235,175 edges, estimates 11.3 MB from pandas and
+# 2.0 MB from parquet: driver path, 3.4-4.5 s, where the distributed
+# rounds took 11.7-25 s. A source Catalyst cannot size (an RDD, a Python
+# list) reports Long.MaxValue and goes distributed.
+DRIVER_MAX_BYTES = 16 * 2**20
 MAX_ROUNDS = 25
 
 
 def connected_components(same_as: DataFrame) -> DataFrame:
-    """Runs Spark jobs before it returns (a size probe, then the driver
-    pass or every distributed round): same_as(src_id, dst_id) ->
-    (entity_id, canonical_id).
+    """Runs Spark jobs before it returns (the driver pass, or every
+    distributed round): same_as(src_id, dst_id) -> (entity_id,
+    canonical_id).
 
     Returns one row per vertex appearing in any edge. Vertices with no
     edges are their own canonical id (callers simply coalesce missing
     lookups to identity).
 
-    Hybrid strategy: a same-as table of at most ``DRIVER_MAX_EDGES``
-    edges is broadcast-sized, so the driver runs exact union-find in one
-    pass (the analogue of the reference's driver-side metadata ops,
-    reference: prefetch.py:101) -- iterating Spark jobs over a tiny graph
-    is pure scheduling overhead. Above it, distributed min-label
-    propagation with pointer jumping takes over. Both paths produce
-    identical labels (tested).
+    Hybrid strategy: a same-as table whose plan estimates at most
+    ``DRIVER_MAX_BYTES`` is collected, and the driver runs exact
+    union-find in one pass (the analogue of the reference's driver-side
+    metadata ops, reference: prefetch.py:101) -- iterating Spark jobs
+    over a small graph is pure scheduling overhead. Above it,
+    distributed min-label propagation with pointer jumping takes over.
+    Choosing runs no job. Both paths produce identical labels (tested).
     """
-    if same_as.limit(DRIVER_MAX_EDGES + 1).count() <= DRIVER_MAX_EDGES:
+    if _estimated_bytes(same_as) <= DRIVER_MAX_BYTES:
         return _driver_components(same_as)
     return _distributed_components(same_as)
+
+
+def _estimated_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df``'s optimized plan; no job."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def _driver_components(same_as: DataFrame) -> DataFrame:

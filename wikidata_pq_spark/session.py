@@ -5,6 +5,12 @@ batching caps) while remaining correct on local[N]. The reference's
 bounded-memory streaming discipline (reference: transforms.py:39-41,
 core.py:58 -- lazy sinks, never collect) maps here to: AQE + spill-aware
 shuffle partition sizing + capped Arrow record batches for pandas UDFs.
+
+``SQL_DEFAULTS`` holds the runtime SQL settings the package's results
+and code paths assume: UTC timestamps, the Arrow conversions, and the
+JVM's case mapping for ``lower``/``upper``. ``get_spark`` builds with
+them, and the ``jobs/`` entry points apply the same mapping to the
+session spark-submit gives them.
 """
 
 from __future__ import annotations
@@ -12,6 +18,23 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+# Runtime SQL settings that every session of the package runs with.
+SQL_DEFAULTS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Case-map with the JVM, not ICU (Spark 4's default). Under ICU the
+    # session's first lower() -- extract_mentions_sql's F.lower(text) --
+    # loads CollationAwareUTF8String, whose static initializer builds a
+    # title-case lookup table that only initcap needs: 2.9-3.8 CPU s and
+    # 1.4-1.9 s wall in a fresh session (4-core host), about 30 % of
+    # the CPU of a cold KGPipeline.run's LINKED stage. Safe: on ASCII rows both
+    # settings run the same isFullAscii -> toLowerCaseAscii loop, so warm
+    # speed and every ASCII result are the same. Neither setting equals
+    # Python's str.lower on every code point (tests/test_extract_spark.py).
+    "spark.sql.icu.caseMappings.enabled": "false",
+}
 
 
 def _default_driver_memory() -> str:
@@ -40,7 +63,10 @@ def get_spark(
     ``shuffle_partitions`` defaults to the local core count -- on a real
     cluster this should be ~2-3x total cores, or left to AQE coalescing.
     ``spark.driver.memory`` is ``$SPARK_DRIVER_MEM``, else half the
-    host's RAM capped at 24g.
+    host's RAM capped at 24g. The session runs with ``SQL_DEFAULTS``;
+    among them, strings are case-mapped by the JVM rather than ICU,
+    which keeps a 3-4 CPU s class initializer out of the first
+    ``lower()`` and costs no warm speed.
     """
     cpus = _default_cpus()
     if master is None:
@@ -72,8 +98,7 @@ def get_spark(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_MAX", "64m"),
         )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(map=SQL_DEFAULTS)
         # Cap Arrow batches so a hot conversation group cannot OOM a
         # Python worker (the reference's max_builders=1000 batching
         # analogue, reference: process.py:218).
