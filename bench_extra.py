@@ -7,6 +7,10 @@ instrument, bench.py is the driver's.
 Usage:
   SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py [reps] [query ...]
 
+Each cell, and the canary, first runs one untimed warm-up rep, so the
+timed reps do not carry the JVM's JIT warm-up; min and median are both
+reported.
+
 Prints one JSON line: {"cells": {name: {"count_sec": [..], "noop_sec": [..]}}}
 """
 
@@ -14,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 from pathlib import Path
@@ -62,14 +67,16 @@ def main() -> None:
         )
         return round(time.time() - t0, 3)
 
+    canary_once()  # warm-up, untimed
     canary = [canary_once() for _ in range(max(reps, 3))]
     canary_sec = min(canary)
+    canary_median = statistics.median(canary)
 
     cells: dict = {}
     for name in names:
         fn = contracts.QUERIES[name]
         counts, noops = [], []
-        for _ in range(reps):
+        for _ in range(reps + 1):  # the first rep is the untimed warm-up
             spark.sparkContext.setJobDescription(f"{name}: count")
             t0 = time.time()
             fn(spark, sf_dir).count()
@@ -81,10 +88,14 @@ def main() -> None:
             noops.append(round(time.time() - t0, 3))
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(None)
+        counts, noops = counts[1:], noops[1:]  # drop the warm-up
         cells[name] = {
             "count_sec": counts,
             "noop_sec": noops,
             "count_min_norm": round(min(counts) / canary_sec, 2),
+            "count_median_norm": round(
+                statistics.median(counts) / canary_median, 2
+            ),
         }
         print(f"# {name}: count={counts} noop={noops}", file=sys.stderr)
     spark.stop()
@@ -94,6 +105,7 @@ def main() -> None:
                 "sf_dir": sf_dir,
                 "cpus": cpus,
                 "canary_sec": canary_sec,
+                "canary_median_sec": round(canary_median, 3),
                 "canary_reps": canary,
                 "cells": cells,
             }

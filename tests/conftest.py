@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import contextlib
+import pathlib
+
 import pytest
 
 from wikidata_pq_spark import datagen
@@ -16,6 +19,59 @@ def spark():
     )
     yield s
     s.stop()
+
+
+# Spark's own Parquet defaults: the format of stores written before the
+# package's sessions wrote zstd with INT64 timestamps.
+LEGACY_PARQUET = {
+    "spark.sql.parquet.compression.codec": "snappy",
+    "spark.sql.parquet.outputTimestampType": "INT96",
+}
+
+
+@pytest.fixture
+def legacy_parquet(spark):
+    """A context manager under which ``spark`` writes Parquet in the
+    legacy format (snappy, INT96 timestamps); it restores the session's
+    settings on exit."""
+
+    @contextlib.contextmanager
+    def legacy():
+        saved = {k: spark.conf.get(k) for k in LEGACY_PARQUET}
+        for k, v in LEGACY_PARQUET.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
+
+    return legacy
+
+
+def _parquet_footers(path, ts_col):
+    """The compression codecs of every column chunk, and the physical
+    types of ``ts_col``, in the footers of the parquet files under
+    ``path``."""
+    import pyarrow.parquet as pq
+
+    codecs, ts_types = set(), set()
+    for f in pathlib.Path(path).rglob("*.parquet"):
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                col = md.row_group(g).column(c)
+                codecs.add(col.compression)
+                if col.path_in_schema == ts_col:
+                    ts_types.add(col.physical_type)
+    return codecs, ts_types
+
+
+@pytest.fixture
+def parquet_footers():
+    """``parquet_footers(path, ts_col)`` -> (codecs, ``ts_col`` physical
+    types) over the parquet files under ``path``."""
+    return _parquet_footers
 
 
 @pytest.fixture(scope="session")

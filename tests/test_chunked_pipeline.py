@@ -6,6 +6,7 @@ import contextlib
 import json
 import os
 
+import pandas as pd
 import pytest
 
 from pyspark.sql import Window
@@ -127,6 +128,40 @@ def test_kill_and_resume_identical(spark, spark_corpus, tmp_path, n_chunks, monk
     assert len(cc_calls) == 1
     assert metrics == _run(clean, spark_corpus)
     assert len(cc_calls) == 1  # a completed store re-runs without CC
+
+
+def _triple_rows(pdf):
+    """Distinct TRIPLE_COLUMNS rows of ``pdf``, ``ts`` as UTC."""
+    return set(
+        pdf[oracle.TRIPLE_COLUMNS]
+        .assign(ts=lambda d: pd.to_datetime(d["ts"], utc=True))
+        .itertuples(index=False, name=None)
+    )
+
+
+def test_resume_across_sink_formats(
+    spark, spark_corpus, corpus, tmp_path, legacy_parquet, parquet_footers
+):
+    """A store crashed after chunk 0's LINKED while its session wrote the
+    legacy Parquet format (snappy, INT96 ts) resumes under the zstd/INT64
+    defaults: VERIFIED passes over the mixed edges files, and the
+    triples, ts included, equal the oracle's."""
+    out = str(tmp_path / "kg")
+    with legacy_parquet(), _crash_after("chunk_00000", Step.LINKED), pytest.raises(Killed):
+        _run(KGPipeline(spark, out, n_chunks=2), spark_corpus)
+    pipe = KGPipeline(spark, out, n_chunks=2)
+    _run(pipe, spark_corpus)
+    assert pipe.state.get("corpus") == Step.COMPLETE  # passed VERIFIED
+    edges = os.path.join(out, "edges")
+    assert [parquet_footers(f"{edges}/chunk={i}", "ts") for i in (0, 1)] == [
+        ({"SNAPPY"}, {"INT96"}), ({"ZSTD"}, {"INT64"})
+    ]
+    golden = oracle.oracle_triples(
+        corpus["transcripts"], corpus["alias_dict"], corpus["same_as"]
+    )
+    got = pipe.triples().select(*oracle.TRIPLE_COLUMNS).toPandas()
+    assert len(got) == len(golden)
+    assert _triple_rows(got) == _triple_rows(golden)
 
 
 def test_per_chunk_audit_records_post_check(spark, spark_corpus, tmp_path):

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 
 from wikidata_pq_spark import oracle
-from wikidata_pq_spark.operators import extract, linking
+from wikidata_pq_spark.operators import canonicalize, extract, linking
 
 KEYS = ["subj", "pred", "obj", "conv_id", "turn_idx"]
 
@@ -22,6 +22,54 @@ def test_broadcast_matches_oracle(spark_corpus, corpus):
         oracle.oracle_extract(corpus["transcripts"]), corpus["alias_dict"]
     )
     assert sorted(map(tuple, got[KEYS].values)) == sorted(map(tuple, golden[KEYS].values))
+
+
+def _seq(seq):
+    """A Scala ``Seq`` from py4j as a Python list."""
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _plan_nodes(plan):
+    """Every node of an executed physical plan, descending into AQE's
+    query stages (leaves that wrap the plan they ran)."""
+    yield plan
+    if plan.nodeName().endswith("QueryStage"):
+        kids = [plan.plan()]
+    else:
+        kids = _seq(plan.children())
+    for kid in kids:
+        yield from _plan_nodes(kid)
+
+
+@pytest.mark.classic_session_only
+def test_chain_broadcasts_the_dictionary_once(spark, spark_corpus, tmp_path):
+    """KGPipeline's LINKED chain, with the components read back from
+    parquet as the pipeline reads them: the subject and object joins
+    share one broadcast of the composed dictionary (the object side is a
+    ReusedExchange), so the write is 4 jobs -- the conv_id shuffle, the
+    components and dictionary broadcasts, and the result stage. A rename
+    in ``link_mentions._join`` that made the two sides' plans differ
+    would add a second dictionary broadcast, and a job."""
+    path = str(tmp_path / "components")
+    canonicalize.connected_components(spark_corpus["same_as"]).write.parquet(path)
+    canon_dict = canonicalize.apply_canonical(
+        spark_corpus["alias_dict"],
+        spark.read.schema(canonicalize.COMPONENTS_DDL).parquet(path),
+    )
+    chain = linking.kg_chain(_mentions(spark_corpus), canon_dict)
+    chain.collect()
+    final = chain._jdf.queryExecution().executedPlan().executedPlan()
+    exchanges = sorted(
+        (n.nodeName(), [a.name() for a in _seq(n.output())])
+        for n in _plan_nodes(final)
+        if n.nodeName() in ("BroadcastExchange", "ReusedExchange")
+    )
+    assert exchanges == [
+        ("BroadcastExchange", ["entity_id", "_canon"]),  # components
+        ("BroadcastExchange", ["subj_mention", "subj"]),  # the dictionary
+        ("ReusedExchange", ["obj_mention", "_obj_ent"]),  # ... reused
+    ]
+    assert sum(n.nodeName() == "Exchange" for n in _plan_nodes(final)) == 1
 
 
 def test_salted_equals_broadcast(spark_corpus):

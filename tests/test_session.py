@@ -1,4 +1,4 @@
-"""Session defaults that do not need a running Spark."""
+"""Session defaults, and the Parquet format they give the package's sinks."""
 
 from __future__ import annotations
 
@@ -23,3 +23,36 @@ def test_default_cpus_fit_the_host(monkeypatch):
     assert session._default_cpus() == 3
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
     assert session._default_cpus() == 5
+
+
+def test_sql_defaults_write_zstd_parquet_with_int64_timestamps():
+    assert session.SQL_DEFAULTS["spark.sql.parquet.compression.codec"] == "zstd"
+    assert (
+        session.SQL_DEFAULTS["spark.sql.parquet.outputTimestampType"]
+        == "TIMESTAMP_MICROS"
+    )
+
+
+def test_edges_footer_is_zstd_with_utc_micros_ts(
+    spark, spark_corpus, tmp_path, parquet_footers
+):
+    """A KGPipeline run's edges file carries the session's sink format in
+    its footer: every column chunk zstd, and ts an INT64 timestamp in
+    microseconds adjusted to UTC (not legacy INT96)."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    from wikidata_pq_spark.pipeline import KGPipeline
+
+    out = tmp_path / "kg"
+    KGPipeline(spark, str(out), n_chunks=1).run(
+        spark_corpus["transcripts"], spark_corpus["alias_dict"], spark_corpus["same_as"]
+    )
+    chunk = out / "edges" / "chunk=0"
+    assert parquet_footers(chunk, "ts") == ({"ZSTD"}, {"INT64"})
+    schema = pq.ParquetFile(next(chunk.glob("part-*.parquet"))).schema
+    logical = json.loads(schema.column(schema.names.index("ts")).logical_type.to_json())
+    assert (logical["Type"], logical["timeUnit"], logical["isAdjustedToUTC"]) == (
+        "Timestamp", "microseconds", True
+    )

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import contextlib
+
 import pandas as pd
 import pytest
 
@@ -1029,9 +1031,9 @@ def test_concurrent_merge_commits_lose_no_epoch(tmp_path, monkeypatch):
     assert inc.live_epochs(out) == list(range(33))
 
 
-def _two_epoch_stores(spark, tmp_path):
+def _two_epoch_stores(spark, tmp_path, epoch0_format=contextlib.nullcontext):
     """A support and a beliefs store, each holding two epochs merged from
-    one-partition batches."""
+    one-partition batches; epoch 0 is merged under ``epoch0_format()``."""
     ts = pd.Timestamp("2026-01-01", tz="UTC")
     epochs = [
         [("Q1", "ceo", "A", "c1", 1, ts), ("Q2", "hq", "X", "c1", 2, ts)],
@@ -1045,8 +1047,9 @@ def _two_epoch_stores(spark, tmp_path):
             schema="subj string, pred string, obj string, conv_id string, "
             "turn_idx long, ts timestamp",
         ).coalesce(1)
-        incremental.merge_triple_support(batch, support, epoch_id=i)
-        incremental.merge_current_beliefs(batch, beliefs, epoch_id=i)
+        with epoch0_format() if i == 0 else contextlib.nullcontext():
+            incremental.merge_triple_support(batch, support, epoch_id=i)
+            incremental.merge_current_beliefs(batch, beliefs, epoch_id=i)
     return support, beliefs
 
 
@@ -1083,6 +1086,41 @@ def test_epoch_partition_holds_files_directly(spark, tmp_path):
     for store in stores:
         assert set(layout(store)) == {-1} and layout(store)[-1] >= 1
     for b, a in zip(before, views()):
+        pd.testing.assert_frame_equal(b, a)
+
+
+def test_epoch_stores_written_before_zstd_read_and_compact(
+    spark, tmp_path, legacy_parquet, parquet_footers
+):
+    """A store whose epoch 0 was written in the legacy format (snappy,
+    INT96 ts) and epoch 1 under the session's zstd/INT64 defaults reads,
+    compacts and reads again to the same views as a store written
+    entirely under the defaults."""
+    mixed = _two_epoch_stores(spark, tmp_path / "mixed", legacy_parquet)
+    fresh = _two_epoch_stores(spark, tmp_path / "fresh")
+
+    def footers(epoch):
+        return parquet_footers(f"{mixed[1]}/epoch={epoch}", "last_ts")
+
+    assert [footers(e) for e in (0, 1)] == [
+        ({"SNAPPY"}, {"INT96"}), ({"ZSTD"}, {"INT64"})
+    ]
+    readers = (incremental.read_triple_support, incremental.read_current_beliefs)
+
+    def views(stores):
+        return [
+            read(spark, store).toPandas().sort_values(["subj", "pred", "obj"])
+            .reset_index(drop=True)
+            for read, store in zip(readers, stores)
+        ]
+
+    expected = views(fresh)
+    for b, a in zip(views(mixed), expected):
+        pd.testing.assert_frame_equal(b, a)
+    incremental.compact_triple_support(spark, mixed[0])
+    incremental.compact_current_beliefs(spark, mixed[1])
+    assert footers(-1) == ({"ZSTD"}, {"INT64"})
+    for b, a in zip(views(mixed), expected):
         pd.testing.assert_frame_equal(b, a)
 
 

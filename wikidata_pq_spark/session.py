@@ -7,8 +7,9 @@ core.py:58 -- lazy sinks, never collect) maps here to: AQE + spill-aware
 shuffle partition sizing + capped Arrow record batches for pandas UDFs.
 
 ``SQL_DEFAULTS`` holds the runtime SQL settings the package's results
-and code paths assume: UTC timestamps, the Arrow conversions, and the
-JVM's case mapping for ``lower``/``upper``. ``get_spark`` builds with
+and code paths assume: UTC timestamps, the Arrow conversions, the
+JVM's case mapping for ``lower``/``upper``, and the Parquet format of
+every sink (zstd, INT64 microsecond timestamps). ``get_spark`` builds with
 them, and the ``jobs/`` entry points apply the same mapping to the
 session spark-submit gives them.
 """
@@ -34,6 +35,19 @@ SQL_DEFAULTS = {
     # speed and every ASCII result are the same. Neither setting equals
     # Python's str.lower on every code point (tests/test_extract_spark.py).
     "spark.sql.icu.caseMappings.enabled": "false",
+    # Every package sink is Parquet; compress it with zstd, as the
+    # reference's Polars sinks do, not snappy. With the INT64 timestamps
+    # below, a kg_batch store's single edges file fell from 107 to 66 KB
+    # (store median 0.118 -> 0.074 MB over 10 seeds), and warm write
+    # and read CPU did not rise.
+    "spark.sql.parquet.compression.codec": "zstd",
+    # INT64 microseconds (UTC-adjusted) instead of legacy INT96: as
+    # INT96 the edges ts column was 59 of those 107 KB (31 KB now), and
+    # INT96 carries no min/max statistics, so a ts filter cannot skip
+    # row groups. Reads need neither setting: Spark decodes each file by
+    # the codec and types its footer records, so stores written before
+    # (snappy, INT96) still read, resume, merge and compact.
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
 }
 
 
@@ -66,7 +80,8 @@ def get_spark(
     host's RAM capped at 24g. The session runs with ``SQL_DEFAULTS``;
     among them, strings are case-mapped by the JVM rather than ICU,
     which keeps a 3-4 CPU s class initializer out of the first
-    ``lower()`` and costs no warm speed.
+    ``lower()`` and costs no warm speed, and every Parquet sink is
+    written as zstd with INT64 microsecond timestamps.
     """
     cpus = _default_cpus()
     if master is None:
