@@ -6,7 +6,7 @@ Launch (the north rule's launch mode):
     spark-submit --master <cluster-or-local> \
         --py-files dist/wikidata_pq_spark.zip \
         jobs/run_pipeline.py \
-        --transcripts <parquet-or-iceberg-path> \
+        --transcripts <parquet path> \
         --alias-dict <parquet path> \
         --same-as <parquet path> \
         --out <output dir> [--chunks 1] [--link-strategy broadcast]
@@ -16,8 +16,6 @@ is resumable (re-submit after a failure and completed units skip).
 
 Output layout under ``--out``:
 
-    staged/_chunk=i/           the input, partitioned by chunk (only
-                               with --chunks > 1)
     edges/chunk=i/             the canonical triples -- the only copy
                                of the triple set, one slice per chunk
     components/                same-as component map (CANONICALIZED,
@@ -30,9 +28,10 @@ Output layout under ``--out``:
                                write's audit row (rows, min_id, max_id)
                                and schema. ``corpus``: the corpus-wide
                                stage reached (CANONICALIZED,
-                               MATERIALIZED, VERIFIED, COMPLETE), row
-                               totals, and the nodes write's audit row
-                               and schema
+                               MATERIALIZED, VERIFIED, COMPLETE),
+                               n_chunks and the sorted input file
+                               list, row totals, and the nodes
+                               write's audit row and schema
 """
 
 from __future__ import annotations
@@ -57,7 +56,11 @@ def main() -> None:
     )
     p.add_argument(
         "--chunks", type=int, default=1,
-        help="resumable units the corpus splits into by conversation hash",
+        help=(
+            "resumable units; chunk i reads a contiguous slice of the "
+            "sorted --transcripts files, so above 1 every conversation "
+            "must lie in one file (write it with repartition(k, conv_id))"
+        ),
     )
     args = p.parse_args()
 

@@ -93,10 +93,35 @@ def spark_corpus(spark, corpus):
     }
 
 
+@pytest.fixture(scope="session")
+def conversation_files(spark):
+    """``conversation_files(df, path, n_files=8)``: ``df`` (a Spark or
+    pandas frame) written as parquet under ``path`` with each
+    conversation in one file (``repartition(n_files, "conv_id")``), and
+    read back as a bare file scan -- the input ``KGPipeline(n_chunks >
+    1)`` takes."""
+
+    def write(df, path, n_files=8):
+        if not hasattr(df, "sparkSession"):
+            df = spark.createDataFrame(df)
+        df.repartition(n_files, "conv_id").write.parquet(str(path))
+        return spark.read.parquet(str(path))
+
+    return write
+
+
+@pytest.fixture(scope="session")
+def parquet_corpus(spark_corpus, conversation_files, tmp_path_factory):
+    """``spark_corpus`` with its transcripts read from conversation-
+    complete parquet files."""
+    path = tmp_path_factory.mktemp("parquet_corpus") / "transcripts"
+    return {**spark_corpus, "transcripts": conversation_files(spark_corpus["transcripts"], path)}
+
+
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",
         "classic_session_only: exercises an API absent from the Spark "
-        "Connect client (df.rdd probes, applyInPandasWithState); see "
+        "Connect client (df.rdd probes, JVM plan access); see "
         "ARCHITECTURE.md 'Spark Connect compatibility seams'",
     )

@@ -78,9 +78,9 @@ def _audit_dirs(out):
     ]
 
 
-def test_chunked_equals_oracle(spark, spark_corpus, corpus, tmp_path):
+def test_chunked_equals_oracle(spark, parquet_corpus, corpus, tmp_path):
     pipe = KGPipeline(spark, str(tmp_path / "kg"), n_chunks=4)
-    metrics = _run(pipe, spark_corpus)
+    metrics = _run(pipe, parquet_corpus)
     golden = oracle.oracle_triples(
         corpus["transcripts"], corpus["alias_dict"], corpus["same_as"]
     )
@@ -97,9 +97,9 @@ def test_chunked_equals_oracle(spark, spark_corpus, corpus, tmp_path):
 
 
 @pytest.mark.parametrize("n_chunks", [1, 4])
-def test_kill_and_resume_identical(spark, spark_corpus, tmp_path, n_chunks, monkeypatch):
+def test_kill_and_resume_identical(spark, parquet_corpus, tmp_path, n_chunks, monkeypatch):
     clean = KGPipeline(spark, str(tmp_path / "clean"), n_chunks=n_chunks)
-    _run(clean, spark_corpus)
+    _run(clean, parquet_corpus)
     expected = _tset(clean.triples())
 
     cc_calls = []
@@ -112,7 +112,7 @@ def test_kill_and_resume_identical(spark, spark_corpus, tmp_path, n_chunks, monk
     pipe = KGPipeline(spark, out, n_chunks=n_chunks)
     kill = (n_chunks - 1) // 2  # the middle chunk: some done, some not
     with _crash_after(f"chunk_{kill:05d}", Step.LINKED), pytest.raises(Killed):
-        _run(pipe, spark_corpus)
+        _run(pipe, parquet_corpus)
     assert [pipe.state.get(u) for u in pipe.units()] == (
         [Step.LINKED] * (kill + 1) + [Step.INIT] * (n_chunks - kill - 1)
     )
@@ -121,12 +121,12 @@ def test_kill_and_resume_identical(spark, spark_corpus, tmp_path, n_chunks, monk
 
     # resume: only the unfinished units run; output identical to clean
     pipe2 = KGPipeline(spark, out, n_chunks=n_chunks)
-    metrics = _run(pipe2, spark_corpus)
+    metrics = _run(pipe2, parquet_corpus)
     assert pipe2.state.get("corpus") == Step.COMPLETE
     assert _tset(pipe2.triples()) == expected
     # the crashed run computed the components; the resume reused them
     assert len(cc_calls) == 1
-    assert metrics == _run(clean, spark_corpus)
+    assert metrics == _run(clean, parquet_corpus)
     assert len(cc_calls) == 1  # a completed store re-runs without CC
 
 
@@ -140,7 +140,7 @@ def _triple_rows(pdf):
 
 
 def test_resume_across_sink_formats(
-    spark, spark_corpus, corpus, tmp_path, legacy_parquet, parquet_footers
+    spark, parquet_corpus, corpus, tmp_path, legacy_parquet, parquet_footers
 ):
     """A store crashed after chunk 0's LINKED while its session wrote the
     legacy Parquet format (snappy, INT96 ts) resumes under the zstd/INT64
@@ -148,9 +148,9 @@ def test_resume_across_sink_formats(
     triples, ts included, equal the oracle's."""
     out = str(tmp_path / "kg")
     with legacy_parquet(), _crash_after("chunk_00000", Step.LINKED), pytest.raises(Killed):
-        _run(KGPipeline(spark, out, n_chunks=2), spark_corpus)
+        _run(KGPipeline(spark, out, n_chunks=2), parquet_corpus)
     pipe = KGPipeline(spark, out, n_chunks=2)
-    _run(pipe, spark_corpus)
+    _run(pipe, parquet_corpus)
     assert pipe.state.get("corpus") == Step.COMPLETE  # passed VERIFIED
     edges = os.path.join(out, "edges")
     assert [parquet_footers(f"{edges}/chunk={i}", "ts") for i in (0, 1)] == [
@@ -164,7 +164,7 @@ def test_resume_across_sink_formats(
     assert _triple_rows(got) == _triple_rows(golden)
 
 
-def test_per_chunk_audit_records_post_check(spark, spark_corpus, tmp_path):
+def test_per_chunk_audit_records_post_check(spark, parquet_corpus, tmp_path):
     """Each chunk's record keeps the audit row of its edges write (the
     reference's per-source audit keying, reference:
     partitioning/core.py:14-35); the records survive a kill/resume and
@@ -172,14 +172,14 @@ def test_per_chunk_audit_records_post_check(spark, spark_corpus, tmp_path):
     out = str(tmp_path / "kg")
     pipe = KGPipeline(spark, out, n_chunks=4)
     with _crash_after("chunk_00001", Step.LINKED), pytest.raises(Killed):
-        _run(pipe, spark_corpus)
+        _run(pipe, parquet_corpus)
     # the chunks that finished before the kill hold their audit rows
     assert [
         "audit" in pipe.state.metrics(u) for u in pipe.units()
     ] == [True, True, False, False]
 
     pipe2 = KGPipeline(spark, out, n_chunks=4)
-    _run(pipe2, spark_corpus)
+    _run(pipe2, parquet_corpus)
     assert pipe2.post_check()
     assert _audit_dirs(out) == []
     # the recorded (rows, min_id, max_id) == a recompute over edges/chunk=i
@@ -192,53 +192,70 @@ def test_per_chunk_audit_records_post_check(spark, spark_corpus, tmp_path):
     assert not pipe2.post_check()
 
 
-def test_chunks_partition_conversations(spark, spark_corpus):
-    chunked = spark_corpus["transcripts"].withColumn("c", KGPipeline.chunk_col(4))
-    # every conversation maps to exactly one chunk
-    multi = (
-        chunked.groupBy("conv_id")
-        .agg({"c": "approx_count_distinct"})
-        .filter("`approx_count_distinct(c)` > 1")
+def _tree(root):
+    return sorted(
+        os.path.relpath(os.path.join(r, n), root)
+        for r, dirs, files in os.walk(root) for n in dirs + files
     )
-    assert multi.count() == 0
 
 
-def test_staged_chunks_layout_and_rerun_skip(spark, spark_corpus, tmp_path):
-    """The corpus is staged once as one partition per chunk, and staging
-    is itself resumable (skipped on re-run)."""
+def test_chunks_partition_conversations(spark, spark_corpus, tmp_path):
+    """A conversation whose turns lie in two chunks' files would lose
+    its coreference across the cut without any error: the run raises,
+    naming the remedy, before it writes anything. The input is two
+    files, even turns in the first and odd turns in the second."""
+    parts = [str(tmp_path / "input" / f"part{i}") for i in (0, 1)]
+    for i, path in enumerate(parts):
+        spark_corpus["transcripts"].filter(f"turn_idx % 2 = {i}").coalesce(1).write.parquet(path)
+    tr = spark.read.parquet(*parts)
+    assert len(tr.inputFiles()) == 2
+    out = tmp_path / "kg"
+    with pytest.raises(ValueError, match=r"conversation-complete.*repartition\(k, 'conv_id'\)"):
+        _run(KGPipeline(spark, str(out), n_chunks=2), {**spark_corpus, "transcripts": tr})
+    assert not os.path.exists(out / "edges")
+    assert not os.path.exists(out / "components")
+    assert not os.path.exists(out / "_log")
+
+
+def test_file_chunks_layout_and_rerun_skip(spark, parquet_corpus, tmp_path):
+    """Chunks read slices of the input's files: no copy of the input
+    (``staged/``) and no unit for it (``_log/_staging``); the ``corpus``
+    record keeps the sorted file list and ``n_chunks``, and a re-run of
+    the completed store writes nothing."""
     import time
 
-    a = KGPipeline(spark, str(tmp_path / "staged"), n_chunks=4)
-    _run(a, spark_corpus)
-    # staged dir exists with one partition per chunk
-    parts = sorted(os.listdir(str(tmp_path / "staged" / "staged")))
-    assert [p for p in parts if p.startswith("_chunk=")] == [
-        f"_chunk={i}" for i in range(4)
-    ]
-    # re-run: staging gate skips the write (mtime unchanged)
-    stamp = os.path.getmtime(str(tmp_path / "staged" / "staged"))
+    out = tmp_path / "kg"
+    pipe = KGPipeline(spark, str(out), n_chunks=4)
+    _run(pipe, parquet_corpus)
+    assert sorted(os.listdir(out)) == ["_log", "components", "edges", "nodes"]
+    assert sorted(os.listdir(out / "_log")) == pipe.units() + ["corpus"]
+    files = pipe.state.metrics("corpus")["files"]
+    assert files == sorted(parquet_corpus["transcripts"].inputFiles())
+    assert len(files) == 8 and pipe.state.metrics("corpus")["n_chunks"] == 4
+    before = {p: os.path.getmtime(out / p) for p in _tree(out)}
     time.sleep(1.1)
-    a2 = KGPipeline(spark, str(tmp_path / "staged"), n_chunks=4)
-    _run(a2, spark_corpus)
-    assert os.path.getmtime(str(tmp_path / "staged" / "staged")) == stamp
+    _run(KGPipeline(spark, str(out), n_chunks=4), parquet_corpus)
+    assert {p: os.path.getmtime(out / p) for p in _tree(out)} == before
 
 
-def test_empty_chunks_survive(spark, tmp_path):
-    """A tiny/skewed corpus leaves some chunks with zero conversations:
-    partitionBy writes no staged directory for them and their edges
-    write is empty. The run must complete, record rows=0 for the empty
-    chunks, and post_check must pass."""
+def test_empty_chunks_survive(spark, conversation_files, tmp_path):
+    """More chunks than input files leaves some chunks with an empty
+    slice, and their edges write is empty. The run must complete,
+    record rows=0 for the empty chunks, and post_check must pass."""
     tr = datagen.gen_transcripts(n_convs=3, mean_turns=6, n_entities=50)
-    tdf = spark.createDataFrame(tr)
+    tdf = conversation_files(tr, tmp_path / "input", n_files=2)
     adf = spark.createDataFrame(datagen.gen_entities(50))
     sdf = spark.createDataFrame(datagen.gen_same_as(50))
     pipe = KGPipeline(spark, str(tmp_path / "kg"), n_chunks=16)
+    assert len(tdf.inputFiles()) < 16
     pipe.run(tdf, adf, sdf)
     rows = [pipe.state.metrics(u)["linked"] for u in pipe.units()]
     assert len(rows) == 16
     assert rows.count(0) > 0  # exercises empties
     assert pipe.post_check()
-    assert len(_tset(pipe.triples())) > 0
+    golden = oracle.oracle_triples(tr, datagen.gen_entities(50), datagen.gen_same_as(50))
+    got = pipe.triples().select("subj", "pred", "obj").toPandas()
+    assert len(golden) and oracle.precision_recall(got, golden) == (1.0, 1.0)
     # one commit log per unit: every version file holds one unit's
     # record, and each chunk, advanced once, committed one version
     log = str(tmp_path / "kg" / "_log")
@@ -250,22 +267,65 @@ def test_empty_chunks_survive(spark, tmp_path):
     }
 
 
-def _tree(root):
-    return sorted(
-        os.path.relpath(os.path.join(r, n), root)
-        for r, dirs, files in os.walk(root) for n in dirs + files
-    )
+@pytest.mark.parametrize("kind", ["filtered", "projected", "local", "json", "partitioned"])
+def test_chunks_refuse_a_frame_that_is_not_its_files(
+    spark, spark_corpus, parquet_corpus, tmp_path, kind
+):
+    """At n_chunks > 1 a chunk reads its slice of the input's files, so
+    an input that is not exactly its files -- a filtered or projected
+    scan, a frame made on the driver, a non-parquet source, a scan with
+    partition directories -- is refused before any write, never read
+    as the unfiltered files."""
+    scan = parquet_corpus["transcripts"]
+    if kind == "json":
+        scan.write.json(str(tmp_path / "json"))
+    if kind == "partitioned":
+        scan.write.partitionBy("turn_idx").parquet(str(tmp_path / "partitioned"))
+    tr = {
+        "filtered": lambda: scan.filter("turn_idx > 2"),
+        "projected": lambda: scan.withColumn("text", F.upper("text")),
+        "local": lambda: spark_corpus["transcripts"],
+        "json": lambda: spark.read.schema(scan.schema).json(str(tmp_path / "json")),
+        "partitioned": lambda: spark.read.parquet(str(tmp_path / "partitioned")),
+    }[kind]()
+    assert tr.count() > 0
+    out = tmp_path / "kg"
+    with pytest.raises(ValueError, match="bare parquet scan"):
+        _run(KGPipeline(spark, str(out), n_chunks=4), {**parquet_corpus, "transcripts": tr})
+    assert not os.path.exists(out)
 
 
-def test_resume_refuses_old_layout(spark, spark_corpus, tmp_path):
+def test_resume_refuses_other_chunks(spark, parquet_corpus, tmp_path):
+    """A store records its ``n_chunks`` and sorted input file list with
+    CANONICALIZED. A resume with another ``n_chunks`` or another file
+    list would mix two chunk assignments: it raises before any write.
+    The recorded ones resume."""
+    out = tmp_path / "kg"
+    with _crash_after("chunk_00001", Step.LINKED), pytest.raises(Killed):
+        _run(KGPipeline(spark, str(out), n_chunks=4), parquet_corpus)
+    files = sorted(parquet_corpus["transcripts"].inputFiles())
+    fewer = {**parquet_corpus, "transcripts": spark.read.parquet(*files[:-1])}
+    before = _tree(out)
+    for n_chunks, corpus in [(1, parquet_corpus), (8, parquet_corpus), (4, fewer)]:
+        with pytest.raises(ValueError, match="recorded n_chunks or input file list"):
+            _run(KGPipeline(spark, str(out), n_chunks=n_chunks), corpus)
+        assert _tree(out) == before, n_chunks
+    pipe = KGPipeline(spark, str(out), n_chunks=4)
+    _run(pipe, parquet_corpus)
+    assert pipe.state.get("corpus") == Step.COMPLETE
+
+
+def test_resume_refuses_old_layout(spark, parquet_corpus, tmp_path):
     """An out_dir holding an older pipeline's layout (a ``mentions`` or
     ``triples`` dir, a ``bucket=`` level under ``edges/chunk=*`` or
     ``nodes``, an ``edges_audit`` or ``nodes_audit`` sidecar table, a
-    ``_state`` dir of per-unit JSON files, or ``_log/<version>.json``
-    snapshots of every unit's record) must refuse to resume, and
-    write nothing: its finished stages would be skipped or mixed with
-    new chunks, directory depths mixed under ``edges``, or chunks
-    without a recorded audit row post-checked, instead of re-run."""
+    ``_state`` dir of per-unit JSON files, ``_log/<version>.json``
+    snapshots of every unit's record, or a ``staged`` copy of the
+    input split by conversation hash) must refuse to resume, and write
+    nothing: its finished stages would be skipped or mixed with new
+    chunks, directory depths mixed under ``edges``, chunks without a
+    recorded audit row post-checked, or hash-assigned chunks mixed
+    with file slices, instead of re-run."""
     for name, old in [
         ("mentions", "mentions/chunk=0"),
         ("triples", "triples/chunk=0"),
@@ -275,6 +335,7 @@ def test_resume_refuses_old_layout(spark, spark_corpus, tmp_path):
         ("nodes_audit", "nodes_audit"),
         ("state", "_state"),
         ("snapshot_log", "_log/00000000000000000000.json"),
+        ("staged", "staged/_chunk=0"),
     ]:
         out = tmp_path / name
         if old.endswith(".json"):
@@ -285,7 +346,7 @@ def test_resume_refuses_old_layout(spark, spark_corpus, tmp_path):
         pipe = KGPipeline(spark, str(out), n_chunks=4)
         before = _tree(out)
         with pytest.raises(RuntimeError, match="layout of an older pipeline"):
-            _run(pipe, spark_corpus)
+            _run(pipe, parquet_corpus)
         assert _tree(out) == before, name
 
 
@@ -298,7 +359,7 @@ def _duplicated_corpus():
 
 
 @pytest.mark.parametrize("n_chunks", [1, 4])
-def test_duplicate_assertions_stored_once(spark, tmp_path, n_chunks):
+def test_duplicate_assertions_stored_once(spark, conversation_files, tmp_path, n_chunks):
     """The stored triple set has the oracle's row count: a triple one
     turn asserts twice is one row, not two."""
     tr, ents, sa = _duplicated_corpus()
@@ -309,13 +370,14 @@ def test_duplicate_assertions_stored_once(spark, tmp_path, n_chunks):
     assert len(linked) > len(golden)  # the corpus really repeats triples
     pipe = KGPipeline(spark, str(tmp_path / "kg"), n_chunks=n_chunks)
     metrics = pipe.run(
-        spark.createDataFrame(tr), spark.createDataFrame(ents), spark.createDataFrame(sa)
+        conversation_files(tr, tmp_path / "input"),
+        spark.createDataFrame(ents), spark.createDataFrame(sa),
     )
     assert pipe.triples().count() == len(golden)
     assert metrics["linked"] == len(golden)
     assert metrics["mentions"] == len(oracle.oracle_extract(tr))
-    # no stage table besides the edges and the staged input at n > 1
-    assert os.path.isdir(tmp_path / "kg" / "staged") == (n_chunks > 1)
+    # no stage table besides the edges
+    assert sorted(os.listdir(tmp_path / "kg")) == ["_log", "components", "edges", "nodes"]
 
 
 def _jobs_in_group(sc, group: str, fn):
@@ -332,18 +394,19 @@ def _jobs_in_group(sc, group: str, fn):
 
 
 @pytest.mark.classic_session_only
-def test_completed_store_reruns_without_jobs(spark, spark_corpus, tmp_path):
+def test_completed_store_reruns_without_jobs(spark, parquet_corpus, tmp_path):
     """Re-running a completed store launches no Spark job: every gate is
-    closed, so neither the components, the staging nor any chunk runs.
-    Its post-check reads each table once, not once per chunk."""
+    closed, so neither the components nor any chunk runs, and the input
+    file list it checks comes from the file index. Its post-check reads
+    each table once, not once per chunk."""
     out = str(tmp_path / "kg")
-    _run(KGPipeline(spark, out, n_chunks=4), spark_corpus)
+    _run(KGPipeline(spark, out, n_chunks=4), parquet_corpus)
     for old in ("mentions", "triples", "lineage"):
         assert not os.path.exists(os.path.join(out, old))
 
     sc = spark.sparkContext
     metrics, jobs = _jobs_in_group(
-        sc, "completed_rerun", lambda: _run(KGPipeline(spark, out, n_chunks=4), spark_corpus)
+        sc, "completed_rerun", lambda: _run(KGPipeline(spark, out, n_chunks=4), parquet_corpus)
     )
     assert jobs == 0
     assert metrics["linked"] > 0 and metrics["nodes"] > 0
@@ -383,18 +446,20 @@ def _stage_jobs(sc, name, run):
 
 @pytest.mark.classic_session_only
 @pytest.mark.parametrize("n_chunks", [1, 4])
-def test_stage_job_counts(spark, spark_corpus, tmp_path, n_chunks):
+def test_stage_job_counts(spark, parquet_corpus, tmp_path, n_chunks):
     """The audit rows come from the writes, and every KG table is read
     with a known schema: CANONICALIZED runs at most 2 jobs (the driver
     collect and the components write; the CC path is chosen from the
-    plan's size estimate, not a count), a chunk's LINKED at most 4 (the
-    chain write), MATERIALIZED at most 2 (the nodes write), VERIFIED at
-    most 4 (one audit recompute per table). No sidecar table is
-    written."""
+    plan's size estimate, not a count), plus at n_chunks > 1 at most 2
+    for the check that no conversation spans two files (its
+    aggregation's map stage and the ``isEmpty``), a chunk's LINKED at
+    most 4 (the chain write), MATERIALIZED at most 2 (the nodes write),
+    VERIFIED at most 4 (one audit recompute per table). No sidecar
+    table is written."""
     out = str(tmp_path / "kg")
     pipe = KGPipeline(spark, out, n_chunks=n_chunks)
-    jobs = _stage_jobs(spark.sparkContext, out, lambda: _run(pipe, spark_corpus))
-    assert jobs["corpus:CANONICALIZED"] <= 2, jobs
+    jobs = _stage_jobs(spark.sparkContext, out, lambda: _run(pipe, parquet_corpus))
+    assert jobs["corpus:CANONICALIZED"] <= (2 if n_chunks == 1 else 4), jobs
     linked = [jobs[f"{u}:LINKED"] for u in pipe.units()]
     assert max(linked) <= 4, jobs
     assert jobs["corpus:MATERIALIZED"] <= 2, jobs
@@ -402,7 +467,7 @@ def test_stage_job_counts(spark, spark_corpus, tmp_path, n_chunks):
     assert _audit_dirs(out) == []
 
 
-def test_dropped_edge_row_fails_verified(spark, spark_corpus, tmp_path, monkeypatch):
+def test_dropped_edge_row_fails_verified(spark, parquet_corpus, tmp_path, monkeypatch):
     """A writer that loses one row of ``edges`` at commit must fail the
     run at VERIFIED: the audit rows record what each write was given,
     not a re-read of what reached the disk."""
@@ -417,5 +482,5 @@ def test_dropped_edge_row_fails_verified(spark, spark_corpus, tmp_path, monkeypa
     monkeypatch.setattr(tableio, "write_partitioned", drop_one_edge)
     pipe = KGPipeline(spark, str(tmp_path / "kg"), n_chunks=4)
     with pytest.raises(RuntimeError, match="post-check failed"):
-        _run(pipe, spark_corpus)
+        _run(pipe, parquet_corpus)
     assert pipe.state.get("corpus") == Step.MATERIALIZED

@@ -99,13 +99,13 @@ def _parquet_files(path):
     return [f for f in os.listdir(path) if f.endswith(".parquet")]
 
 
-def test_edges_layout_and_audit(spark, spark_corpus, tmp_path):
+def test_edges_layout_and_audit(spark, parquet_corpus, tmp_path):
     """Chunks are the only partition level: ``edges/chunk=i`` and
     ``nodes`` hold their parquet files directly, no ``*_audit`` table
     is written, and each chunk's record holds the (rows, min_id,
     max_id) of its slice of ``edges``."""
     out = tmp_path / "kg"
-    pipe, _ = _run(spark, spark_corpus, out, n_chunks=4)
+    pipe, _ = _run(spark, parquet_corpus, out, n_chunks=4)
     assert _parquet_files(out / "edges" / "chunk=0")
     assert _parquet_files(out / "nodes")
     assert [

@@ -51,56 +51,3 @@ def test_s10_csv_sink_roundtrip(spark, tmp_path):
     back = spark.read.option("header", True).csv(out, inferSchema=True)
     got = {(r["chunk"], r["size_gb"]) for r in back.collect()}
     assert got == {(0, 94.21), (1, 55.5)}
-
-
-def test_s5_file_listing_cached(spark, tmp_path):
-    """S5 remote-listing scan: Hadoop-FS recursive listing -> DataFrame
-    (path, size, mtime), memoized like the reference's cached repo-tree
-    listing (reference: size_verification.py:20-45), plus the chunk/part
-    filename parsing and the size-verification left join."""
-    from wikidata_pq_spark.sources import listing
-
-    d = tmp_path / "repo"
-    (d / "sub").mkdir(parents=True)
-    (d / "chunk_0-00001-of-00010.parquet").write_bytes(b"x" * 100)
-    (d / "sub" / "chunk_1-00002-of-00010.parquet").write_bytes(b"y" * 250)
-    (d / "notes.txt").write_bytes(b"z")
-
-    listing.clear_cache()
-    df = listing.list_files(spark, str(d), glob="*.parquet")
-    rows = {r["path"].split("/")[-1]: r["size"] for r in df.collect()}
-    assert rows == {
-        "chunk_0-00001-of-00010.parquet": 100,
-        "chunk_1-00002-of-00010.parquet": 250,
-    }
-
-    # memoization: a file added after the first listing is not re-seen
-    (d / "chunk_2-00003-of-00010.parquet").write_bytes(b"w")
-    again = listing.list_files(spark, str(d), glob="*.parquet")
-    assert again.count() == 2
-    assert listing.list_files(spark, str(d), glob="*.parquet", use_cache=False).count() == 3
-
-    parsed = listing.with_chunk_part(again).toPandas().set_index("file")
-    assert parsed.loc["chunk_0-00001-of-00010.parquet", "chunk"] == 0
-    assert parsed.loc["chunk_1-00002-of-00010.parquet", "part"] == 2
-
-    # size verification: one match, one mismatch (expected keyed by the
-    # listing's own URI form, e.g. file:/...)
-    import pandas as pd
-
-    uris = {r["path"].split("/")[-1]: r["path"] for r in again.collect()}
-    expected = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "path": [
-                    uris["chunk_0-00001-of-00010.parquet"],
-                    uris["chunk_1-00002-of-00010.parquet"],
-                ],
-                "size": [100, 999],
-            }
-        )
-    )
-    chk = listing.size_verification(again, expected).toPandas()
-    by = {r["path"].split("/")[-1]: bool(r["size_ok"]) for _, r in chk.iterrows()}
-    assert by["chunk_0-00001-of-00010.parquet"] is True
-    assert by["chunk_1-00002-of-00010.parquet"] is False

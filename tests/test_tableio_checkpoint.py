@@ -206,8 +206,9 @@ def test_write_with_audit_empty_frame(spark, tmp_path, partition_cols):
     post-check. Partitioned, it leaves no part files (bare _SUCCESS),
     and the re-read must not crash with UNABLE_TO_INFER_SCHEMA;
     unpartitioned, the global aggregate's zero-row group must not
-    reach the sidecar. Both are the shape of an empty chunk, which a
-    skewed conversation hash gives ``KGPipeline(n_chunks>1)``."""
+    reach the sidecar. Both are the shape of an empty chunk, which
+    ``KGPipeline`` gives when ``n_chunks`` exceeds the input's file
+    count."""
     df = _df(spark, 10).filter(F.lit(False))
     path = str(tmp_path / "empty")
     tableio.write_with_audit(df, path, partition_cols, id_col="id")

@@ -15,11 +15,11 @@ correctness gate cannot give:
   deterministic first-component perturbation. Runs IVF and brute-force
   ANN.
 - **KG pipeline at ~sf1-equivalent**: ``KGPipeline(n_chunks=8)``
-  (input staged once by chunk, per-chunk checkpoints, per-chunk sink
-  with audit sidecars, then nodes and the post-check) over the
-  20k-conversation / 1M-turn scaling corpus (.bench_data/c20000_t50,
-  regenerated deterministically if absent), followed by a second full
-  sidecar post-check.
+  (each chunk reads 2 of the input's 16 conversation-complete files,
+  per-chunk checkpoints, per-chunk sink with its audit row, then nodes
+  and the post-check) over the 20k-conversation / 1M-turn scaling
+  corpus (.bench_data/c20000_t50_conv16, regenerated deterministically
+  if absent), followed by a second full post-check.
 
 Per step it records wall seconds plus shuffle-write totals and the
 peak single-stage shuffle write (Spark UI REST API), and prints one
@@ -542,12 +542,14 @@ def main() -> None:
 
     from wikidata_pq_spark.pipeline import KGPipeline
 
-    corpus = REPO / ".bench_data" / "c20000_t50"
+    # conversation-complete files, as KGPipeline(n_chunks > 1) requires
+    # (the old c20000_t50 spread conversations across files)
+    corpus = REPO / ".bench_data" / "c20000_t50_conv16"
     if not corpus.exists():
         from wikidata_pq_spark import datagen
 
         tr = datagen.gen_transcripts(n_convs=20000, mean_turns=50, n_entities=2000)
-        spark.createDataFrame(tr).write.mode("overwrite").parquet(
+        spark.createDataFrame(tr).repartition(16, "conv_id").write.mode("overwrite").parquet(
             str(corpus / "transcripts")
         )
         spark.createDataFrame(datagen.gen_entities(2000)).write.mode(

@@ -338,12 +338,14 @@ def main() -> None:
     import shutil
     import tempfile
 
-    corpus_dir = REPO / ".bench_data" / "c20000_t50"
+    # conversation-complete files, as KGPipeline(n_chunks > 1) requires
+    # (the old c20000_t50 spread conversations across files)
+    corpus_dir = REPO / ".bench_data" / "c20000_t50_conv16"
     if not corpus_dir.exists():
         from wikidata_pq_spark import datagen
 
         tr = datagen.gen_transcripts(n_convs=20000, mean_turns=50, n_entities=2000)
-        spark.createDataFrame(tr).write.mode("overwrite").parquet(
+        spark.createDataFrame(tr).repartition(16, "conv_id").write.mode("overwrite").parquet(
             str(corpus_dir / "transcripts")
         )
         spark.createDataFrame(datagen.gen_entities(2000)).write.mode(

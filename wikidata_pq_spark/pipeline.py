@@ -1,15 +1,18 @@
 """End-to-end transcript -> knowledge-graph pipeline (resumable).
 
-The corpus splits into ``n_chunks`` units by conversation hash, each
-with its own commit log, ``_log/<unit>/<version>.json`` -- the
-reference's one state file per source file (reference: state.py:11-18,
-main.py:61-136): a killed run re-does only the unit it died in. Stage
-graph, per unit kind:
+The corpus splits into ``n_chunks`` units by input file, each with its
+own commit log, ``_log/<unit>/<version>.json`` -- the reference's one
+state file per source file (reference: state.py:11-18, main.py:61-136):
+a killed run re-does only the unit it died in. Chunk i reads a
+contiguous slice of the input's sorted parquet files. Stage graph, per
+unit kind:
 
   corpus        CANONICALIZED: the same-as connected components,
-                computed once per store and written as ``components``
-  _staging      (n_chunks > 1 only) the input written once, partitioned
-                by chunk; each chunk then reads one partition
+                computed once per store and written as ``components``;
+                at n_chunks > 1 it first checks that no conversation
+                spans two input files, and the record keeps
+                ``n_chunks`` and the sorted file list, so a resume
+                reads the same slices
   chunk_NNNNN   LINKED: extract -> link to canonical ids -> distinct
                 (``linking.kg_chain``), written once as
                 ``edges/chunk=i/part-*.parquet``; the chunk's record
@@ -48,12 +51,13 @@ from .sources import tableio
 CORPUS = "corpus"  # the unit that owns the corpus-wide stages
 # what older layouts leave in an out_dir: pre-chunk stage tables, the
 # bucket= level under edges and nodes, the sidecars of records with no
-# audit row, the state files from before the commit log, and the
-# all-unit snapshots from before one log per unit. Resuming one would
-# mix old and new chunks or layouts, so the pipeline refuses it
+# audit row, the state files from before the commit log, the all-unit
+# snapshots from before one log per unit, and the input copy of chunks
+# assigned by conversation hash. Resuming one would mix old and new
+# chunks or layouts, so the pipeline refuses it
 OLD_LAYOUT = (
     "mentions", "triples", "edges/chunk=*/bucket=*", "nodes/bucket=*",
-    "edges_audit", "nodes_audit", "_state", "_log/*.json",
+    "edges_audit", "nodes_audit", "_state", "_log/*.json", "staged",
 )
 
 
@@ -65,11 +69,13 @@ class KGPipeline:
     per store, at the ``corpus`` unit's CANONICALIZED stage, and frozen
     there: a resume reuses it. The alias dictionary is not frozen; it is
     read on every run and composed with the stored map for the chunks
-    that still have work -- the analogue of the reference's
-    remote-listing cache (size_verification.py:20-24). At ``n_chunks=1``
-    the single chunk reads ``transcripts`` directly; above that the
-    input is staged once, partitioned by chunk, so each chunk reads
-    only its own partition.
+    that still have work. At ``n_chunks=1`` the single chunk reads
+    ``transcripts`` directly. Above that, ``transcripts`` must be a bare
+    parquet file scan whose files are conversation-complete
+    (``repartition(k, "conv_id")`` before the write); chunk i reads its
+    slice of the sorted file list with ``transcripts.schema``, and the
+    ``corpus`` record keeps the list -- the analogue of the reference's
+    memoized remote listing (size_verification.py:20-24).
     """
 
     def __init__(
@@ -92,10 +98,6 @@ class KGPipeline:
     def units(self) -> list[str]:
         return [f"chunk_{i:05d}" for i in range(self.n_chunks)]
 
-    @staticmethod
-    def chunk_col(n_chunks: int):
-        return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_chunks)).cast("int")
-
     # -- stages --------------------------------------------------------
     def run(
         self,
@@ -114,37 +116,40 @@ class KGPipeline:
                 "Delete the output dir and re-run."
             )
 
+        files = input_files(transcripts) if self.n_chunks > 1 else []
+        layout = {"n_chunks": self.n_chunks, "files": files}
         components = self.path("components")
         if st.gate(CORPUS, Step.CANONICALIZED):
+            if self.n_chunks > 1:
+                check_conversations_complete(transcripts)
             comps = canonicalize.connected_components(same_as)
             comps.write.mode("overwrite").parquet(components)
-            st.set(CORPUS, Step.CANONICALIZED)
+            st.set(CORPUS, Step.CANONICALIZED, **layout)
+        else:
+            # a store from before the layout was recorded ran one chunk
+            recorded = {"n_chunks": 1, "files": [], **st.metrics(CORPUS)}
+            if {k: recorded[k] for k in layout} != layout:
+                raise ValueError(
+                    f"KGPipeline: {self.out_dir} was built from other chunks "
+                    "(its recorded n_chunks or input file list differs from "
+                    "this run's); resuming it would mix two chunk "
+                    "assignments. Re-run with the recorded input and "
+                    "n_chunks, or delete the output dir."
+                )
         # read with its known schema: no schema-inference job
         canon_dict = canonicalize.apply_canonical(
             alias_dict,
             self.spark.read.schema(canonicalize.COMPONENTS_DDL).parquet(components),
         )
 
-        staged = self.path("staged")
-        if self.n_chunks > 1 and st.gate("_staging", Step.COMPLETE):
-            transcripts.withColumn(
-                "_chunk", self.chunk_col(self.n_chunks)
-            ).write.mode("overwrite").partitionBy("_chunk").parquet(staged)
-            st.set("_staging", Step.COMPLETE)
-
         for i, unit in enumerate(self.units()):
             if not st.gate(unit, Step.LINKED):
                 continue
             turns = transcripts
             if self.n_chunks > 1:
-                # partitionBy writes NO directory for an empty chunk
-                # (skewed conv_id hash at small n): read it as empty
-                part = os.path.join(staged, f"_chunk={i}")
-                turns = (
-                    self.spark.read.schema(transcripts.schema).parquet(part)
-                    if os.path.isdir(part)
-                    else transcripts.filter(F.lit(False))
-                )
+                # a contiguous slice, empty when n_chunks > len(files)
+                lo, hi = (len(files) * k // self.n_chunks for k in (i, i + 1))
+                turns = self.spark.read.schema(transcripts.schema).parquet(*files[lo:hi])
             mentions, n_mentions = tableio.observe_rows(extract.extract_mentions(turns))
             edges, audit = tableio.observe_audit(
                 linking.kg_chain(mentions, canon_dict, self.link_strategy), "subj"
@@ -218,6 +223,52 @@ class KGPipeline:
     def _read(self, table: str, unit: str) -> DataFrame:
         """``table`` read with the schema ``unit``'s write recorded."""
         return tableio.read_recorded(self.spark, self.path(table), self.state.metrics(unit))
+
+
+def input_files(transcripts: DataFrame) -> list[str]:
+    """The sorted files of ``transcripts``, listed from its file index
+    (no job). Reading them back equals ``transcripts`` only if it is a
+    bare parquet file scan: a filter, a projection or a frame made on
+    the driver on top of it would be lost, and partition directories
+    carry column values no file holds. Anything else is refused; the
+    check reads the analyzed plan, so it runs no job either."""
+    plan = transcripts._jdf.queryExecution().analyzed()
+    relation = plan.relation() if plan.getClass().getSimpleName() == "LogicalRelation" else None
+    if not (
+        relation is not None
+        and relation.getClass().getSimpleName() == "HadoopFsRelation"
+        and relation.fileFormat().getClass().getSimpleName() == "ParquetFileFormat"
+        and relation.partitionSchema().isEmpty()
+    ):
+        raise ValueError(
+            "KGPipeline(n_chunks > 1) reads each chunk from a slice of the "
+            "input's files, so transcripts must be a bare parquet scan "
+            "(spark.read.parquet(path), no partition directories, nothing "
+            f"on top); got a {plan.getClass().getSimpleName()} plan. Write "
+            "the frame as parquet first, or use n_chunks=1."
+        )
+    return sorted(transcripts.inputFiles())
+
+
+def check_conversations_complete(transcripts: DataFrame) -> None:
+    """Raise unless every conversation of ``transcripts`` lies in one
+    file. A conversation split across two chunks' files would change
+    its coreference without any error; the check is exact (conv_id
+    against ``_metadata.file_path``), one aggregation over two columns."""
+    path = F.col("_metadata.file_path")
+    split = (
+        transcripts.groupBy("conv_id")
+        .agg((F.min(path) != F.max(path)).alias("split"))
+        .filter("split")
+    )
+    if not split.isEmpty():
+        raise ValueError(
+            "KGPipeline(n_chunks > 1) needs conversation-complete input "
+            f"files, but conversation {split.first()['conv_id']!r} spans "
+            "more than one file. Write the input with "
+            "df.repartition(k, 'conv_id') before the parquet write, or "
+            "use n_chunks=1."
+        )
 
 
 PARTITION_KEYS = {
