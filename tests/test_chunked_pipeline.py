@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from wikidata_pq_spark import datagen, oracle
 from wikidata_pq_spark.operators import canonicalize
-from wikidata_pq_spark.pipeline import KGPipeline
+from wikidata_pq_spark.pipeline import KGPipeline, files_digest
 from wikidata_pq_spark.plans.checkpoint import StateStore, Step
 from wikidata_pq_spark.sources import tableio
 
@@ -220,8 +220,8 @@ def test_chunks_partition_conversations(spark, spark_corpus, tmp_path):
 def test_file_chunks_layout_and_rerun_skip(spark, parquet_corpus, tmp_path):
     """Chunks read slices of the input's files: no copy of the input
     (``staged/``) and no unit for it (``_log/_staging``); the ``corpus``
-    record keeps the sorted file list and ``n_chunks``, and a re-run of
-    the completed store writes nothing."""
+    record keeps ``n_chunks`` and the sha256 of the sorted file list,
+    not the list, and a re-run of the completed store writes nothing."""
     import time
 
     out = tmp_path / "kg"
@@ -229,9 +229,10 @@ def test_file_chunks_layout_and_rerun_skip(spark, parquet_corpus, tmp_path):
     _run(pipe, parquet_corpus)
     assert sorted(os.listdir(out)) == ["_log", "components", "edges", "nodes"]
     assert sorted(os.listdir(out / "_log")) == pipe.units() + ["corpus"]
-    files = pipe.state.metrics("corpus")["files"]
-    assert files == sorted(parquet_corpus["transcripts"].inputFiles())
-    assert len(files) == 8 and pipe.state.metrics("corpus")["n_chunks"] == 4
+    files = sorted(parquet_corpus["transcripts"].inputFiles())
+    record = pipe.state.metrics("corpus")
+    assert len(files) == 8 and record["n_chunks"] == 4 and "files" not in record
+    assert record["files_sha256"] == files_digest(files)
     before = {p: os.path.getmtime(out / p) for p in _tree(out)}
     time.sleep(1.1)
     _run(KGPipeline(spark, str(out), n_chunks=4), parquet_corpus)
@@ -313,6 +314,34 @@ def test_resume_refuses_other_chunks(spark, parquet_corpus, tmp_path):
     pipe = KGPipeline(spark, str(out), n_chunks=4)
     _run(pipe, parquet_corpus)
     assert pipe.state.get("corpus") == Step.COMPLETE
+
+
+def test_resume_reads_a_recorded_file_list(spark, parquet_corpus, tmp_path):
+    """A store whose ``corpus`` record keeps the file list itself, as
+    before the digest, resumes from the same files and refuses one file
+    fewer. A one-chunk record keeps neither the list nor a digest."""
+    from wikidata_pq_spark.plans import checkpoint
+
+    out = tmp_path / "kg"
+    with _crash_after("chunk_00001", Step.LINKED), pytest.raises(Killed):
+        _run(KGPipeline(spark, str(out), n_chunks=4), parquet_corpus)
+    log = str(out / "_log" / "corpus")
+    version, record = checkpoint.head(log)
+    files = sorted(parquet_corpus["transcripts"].inputFiles())
+    del record["files_sha256"]
+    checkpoint.commit(log, version + 1, {**record, "files": files})
+    fewer = {**parquet_corpus, "transcripts": spark.read.parquet(*files[:-1])}
+    with pytest.raises(ValueError, match="recorded n_chunks or input file list"):
+        _run(KGPipeline(spark, str(out), n_chunks=4), fewer)
+    pipe = KGPipeline(spark, str(out), n_chunks=4)
+    _run(pipe, parquet_corpus)
+    assert pipe.state.get("corpus") == Step.COMPLETE and pipe.post_check()
+
+    one = KGPipeline(spark, str(tmp_path / "one"), n_chunks=1)
+    _run(one, parquet_corpus)
+    record = one.state.metrics("corpus")
+    assert record["n_chunks"] == 1
+    assert not {"files", "files_sha256"} & set(record)
 
 
 def test_resume_refuses_old_layout(spark, parquet_corpus, tmp_path):
@@ -473,11 +502,11 @@ def test_dropped_edge_row_fails_verified(spark, parquet_corpus, tmp_path, monkey
     not a re-read of what reached the disk."""
     write = tableio.write_partitioned
 
-    def drop_one_edge(df, path, partition_cols, mode="overwrite"):
+    def drop_one_edge(df, path, partition_cols):
         if os.sep + "edges" + os.sep in path:
             first = F.row_number().over(Window.orderBy(*df.columns))
             df = df.withColumn("_n", first).filter("_n > 1").drop("_n")
-        write(df, path, partition_cols, mode)
+        write(df, path, partition_cols)
 
     monkeypatch.setattr(tableio, "write_partitioned", drop_one_edge)
     pipe = KGPipeline(spark, str(tmp_path / "kg"), n_chunks=4)

@@ -26,28 +26,6 @@ def test_extract_partition_invariant(spark_corpus, corpus):
     assert sorted(map(tuple, a[KEYS].values)) == sorted(map(tuple, b[KEYS].values))
 
 
-def test_turn_stream_invariant_holds(spark_corpus):
-    inv = extract.turn_stream_invariant(spark_corpus["transcripts"])
-    assert inv.filter(~F.col("equal")).count() == 0
-
-
-def test_ordered_turns_sorted_within_conversation(spark_corpus):
-    ordered = extract.ordered_turns(spark_corpus["transcripts"])
-
-    def check(it):
-        import pandas as pd
-
-        for pdf in it:
-            bad = 0
-            for _, grp in pdf.groupby("conv_id"):
-                if not grp["turn_idx"].is_monotonic_increasing:
-                    bad += 1
-            yield pd.DataFrame({"bad": [bad]})
-
-    res = ordered.mapInPandas(check, "bad int").toPandas()
-    assert res["bad"].sum() == 0
-
-
 def test_three_paths_equal_on_adversarial_text(spark):
     """sql / partitions extraction are result-identical on
     randomized adversarial text (multiple matches per turn, pronoun

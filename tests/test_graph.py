@@ -286,7 +286,7 @@ def test_personalized_pagerank_matches_numpy(spark):
     edf = spark.createDataFrame(pd.DataFrame(edges, columns=["src_id", "dst_id"]))
     seeds = spark.createDataFrame(pd.DataFrame({"node_id": [0]}))
     got = (
-        graph.personalized_pagerank(edf, seeds, damping=0.85, iters=20)
+        graph.pagerank(edf, damping=0.85, iters=20, seeds=seeds)
         .toPandas().set_index("node_id")["rank"].sort_index()
     )
 
@@ -318,7 +318,7 @@ def test_personalized_pagerank_empty_seeds_raises(spark):
         pd.DataFrame([(0, 1)], columns=["src_id", "dst_id"]))
     empty = spark.createDataFrame([], schema="node_id long")
     with pytest.raises(ValueError, match="empty seed set"):
-        graph.personalized_pagerank(edf, empty)
+        graph.pagerank(edf, seeds=empty)
 
 
 def test_current_beliefs_latest_wins_wall_clock(spark):
@@ -415,11 +415,11 @@ def test_personalized_pagerank_absent_seed_mass_conserved(spark):
     edf = spark.createDataFrame(
         pd.DataFrame([(0, 1), (1, 0)], columns=["src_id", "dst_id"]))
     seeds = spark.createDataFrame(pd.DataFrame({"node_id": [0, 99]}))  # 99 absent
-    out = graph.personalized_pagerank(edf, seeds, iters=10).toPandas()
+    out = graph.pagerank(edf, iters=10, seeds=seeds).toPandas()
     assert abs(out["rank"].sum() - 1.0) < 1e-6
     disjoint = spark.createDataFrame(pd.DataFrame({"node_id": [99]}))
     with pytest.raises(ValueError, match="no seed node appears"):
-        graph.personalized_pagerank(edf, disjoint)
+        graph.pagerank(edf, seeds=disjoint)
 
 
 def test_multi_seed_ppr_matches_sequential(spark):

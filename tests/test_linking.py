@@ -132,12 +132,6 @@ def test_literal_objects_pass_through(spark, spark_corpus, corpus):
     assert out["subj"].iloc[0] == ad["entity_id"].iloc[0]
 
 
-def test_hot_keys_histogram(spark_corpus):
-    hk = linking.hot_keys(_mentions(spark_corpus), "subj_mention", top_n=10).toPandas()
-    assert len(hk) <= 10
-    assert hk["count"].is_monotonic_decreasing
-
-
 def test_fuzzy_link_typos_and_determinism(spark):
     """Char-trigram ER: truncated/typo'd mentions re-link to the right
     entity; exact strings score 1.0; ties break deterministically."""

@@ -66,7 +66,8 @@ def test_embedding_near_pairs_composition(emb):
     the exact unblocked operator, same scores) and recalls colinear
     pairs (which share every hyperplane bucket by construction)."""
     df, _ = emb
-    out = similarity.embedding_near_pairs(df, threshold=0.999, n_planes=3, dim=8).toPandas()
+    cands = similarity.lsh_candidate_pairs(df, n_planes=3, dim=8)
+    out = similarity.verify_cosine_pairs(df, cands, threshold=0.999).toPandas()
     got = {(a, b): c for a, b, c in zip(out["a_id"], out["b_id"], out["cos_sim"])}
     assert (0, 1) in got and got[(0, 1)] == 1.0
     exact = similarity.embedding_dup_pairs(df, threshold=0.999, block_col=None).toPandas()

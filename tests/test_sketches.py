@@ -64,13 +64,6 @@ def test_mg_null_keys_excluded(spark):
     assert all(r.n_total == 2 for r in out)
 
 
-def test_top_k_exact_matches_counter(skewed):
-    df, truth = skewed
-    out = sketches.top_k_keys_exact(df, "tok", k=6).collect()
-    want = sorted(truth.items(), key=lambda kv: (-kv[1], kv[0]))[:6]
-    assert [(r.key, r.cnt) for r in out] == want
-
-
 def test_mg_compact_unit():
     c = Counter({"a": 10, "b": 5, "c": 3, "d": 1})
     d = sketches._mg_compact(c, capacity=2)

@@ -1,4 +1,4 @@
-"""Structured Streaming: incremental extraction + windowed aggregation."""
+"""Structured Streaming: incremental extraction and the epoch stores."""
 
 from __future__ import annotations
 
@@ -14,37 +14,56 @@ from wikidata_pq_spark.streaming import incremental
 KEYS = ["subj", "pred", "obj", "conv_id", "turn_idx"]
 
 
-def test_incremental_extract_matches_batch(spark, tmp_path):
+def _two_file_corpus(spark, tmp_path):
+    """A corpus as two conversation-complete files arriving "over
+    time", plus its canonical dictionary and the oracle's triples."""
     tr = datagen.gen_transcripts(n_convs=40, mean_turns=6, n_entities=100)
     ents, same_as = datagen.gen_entities(100), datagen.gen_same_as(100)
     comps = canonicalize.connected_components(spark.createDataFrame(same_as))
     canon = canonicalize.apply_canonical(spark.createDataFrame(ents), comps)
-
-    # two conversation-complete files arriving "over time"
-    in_dir, out_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
+    in_dir = str(tmp_path / "in")
     convs = sorted(tr["conv_id"].unique())
-    half = set(convs[: len(convs) // 2])
-    spark.createDataFrame(tr[tr["conv_id"].isin(half)]).coalesce(1).write.mode(
-        "append"
-    ).parquet(in_dir)
-    spark.createDataFrame(tr[~tr["conv_id"].isin(half)]).coalesce(1).write.mode(
-        "append"
-    ).parquet(in_dir)
-
-    stream = incremental.stream_transcripts(spark, in_dir, max_files_per_trigger=1)
-    q = incremental.incremental_extract(stream, canon, out_dir, ckpt)
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out_dir).toPandas()
-    assert got["epoch"].nunique() >= 2  # genuinely incremental
-
-    batch = linking.kg_chain(
-        extract.extract_mentions(spark.createDataFrame(tr)), canon
-    ).toPandas()
-    assert sorted(map(tuple, got[KEYS].values)) == sorted(map(tuple, batch[KEYS].values))
-    # the streamed triples are canonical: they equal the oracle's
+    first = tr["conv_id"].isin(set(convs[: len(convs) // 2]))
+    for part in (tr[first], tr[~first]):
+        spark.createDataFrame(part).coalesce(1).write.mode("append").parquet(in_dir)
     golden = oracle.oracle_triples(tr, ents, same_as)
-    assert sorted(map(tuple, got[KEYS].values)) == sorted(map(tuple, golden[KEYS].values))
+    return tr[first], canon, in_dir, sorted(map(tuple, golden[KEYS].values))
+
+
+def _extract(spark, canon, in_dir, out_dir, ckpt):
+    stream = incremental.stream_transcripts(spark, in_dir, max_files_per_trigger=1)
+    return incremental.incremental_extract(stream, canon, out_dir, ckpt)
+
+
+def _triples(spark, out_dir):
+    got = incremental.read_triples(spark, out_dir).toPandas()
+    assert "epoch" not in got.columns
+    return sorted(map(tuple, got[KEYS].values))
+
+
+def _files(out_dir):
+    """Every file under ``out_dir`` with its mtime."""
+    import os
+
+    return sorted(
+        (os.path.join(r, f), os.path.getmtime(os.path.join(r, f)))
+        for r, _, fs in os.walk(out_dir) for f in fs
+    )
+
+
+def test_incremental_extract_matches_batch(spark, tmp_path):
+    _, canon, in_dir, golden = _two_file_corpus(spark, tmp_path)
+    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
+    _extract(spark, canon, in_dir, out_dir, ckpt).awaitTermination(120)
+
+    assert incremental.live_epochs(out_dir) == [0, 1]  # genuinely incremental
+    batch = linking.kg_chain(
+        extract.extract_mentions(spark.read.parquet(in_dir)), canon
+    ).toPandas()
+    got = _triples(spark, out_dir)
+    assert got == sorted(map(tuple, batch[KEYS].values))
+    # the streamed triples are canonical: they equal the oracle's
+    assert got == golden
 
 
 def test_incremental_resume_no_duplicates(spark, tmp_path):
@@ -59,156 +78,91 @@ def test_incremental_resume_no_duplicates(spark, tmp_path):
         incremental.stream_transcripts(spark, in_dir), adf, out_dir, ckpt
     )
     q.awaitTermination(120)
-    n1 = spark.read.parquet(out_dir).count()
+    n1, files = len(_triples(spark, out_dir)), _files(out_dir)
 
     # restart with no new data: nothing may be appended
     q2 = incremental.incremental_extract(
         incremental.stream_transcripts(spark, in_dir), adf, out_dir, ckpt
     )
     q2.awaitTermination(120)
-    assert spark.read.parquet(out_dir).count() == n1
+    assert len(_triples(spark, out_dir)) == n1
+    assert _files(out_dir) == files
 
 
-def test_windowed_event_counts(spark, tmp_path):
-    pdf = pd.DataFrame(
-        {
-            "event_id": range(6),
-            "ts": pd.to_datetime(
-                ["2026-01-01 00:00:30", "2026-01-01 00:01:00", "2026-01-01 00:04:00",
-                 "2026-01-01 00:06:00", "2026-01-01 00:06:30", "2026-01-01 00:11:00"]
-            ),
-            "event_type": ["click", "click", "view", "click", "view", "click"],
-            "value": [1.0, 2.0, 3.0, 4.0, 5.0, 6.0],
-        }
-    )
-    in_dir = str(tmp_path / "ev")
-    spark.createDataFrame(pdf).coalesce(1).write.parquet(in_dir)
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, event_type string, value double"
-        ).parquet(in_dir)
-    )
-    agg = incremental.windowed_event_counts(stream, window="5 minutes")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("wincounts")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM wincounts").toPandas()
-    first = out[
-        (out["win_start"] == pd.Timestamp("2026-01-01 00:00:00"))
-        & (out["event_type"] == "click")
-    ]
-    assert first["n"].iloc[0] == 2 and first["total_value"].iloc[0] == 3.0
-    assert out["n"].sum() == 6
+def test_incremental_extract_kill_before_commit_stays_invisible(
+    spark, tmp_path, monkeypatch
+):
+    """The log commit of epoch 1 fails after its partition is written:
+    reads see epoch 0 only, and a restart from the same streaming
+    checkpoint rewrites and commits epoch 1, giving the oracle's
+    triples."""
+    import os
+
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from wikidata_pq_spark.plans import checkpoint
+
+    first, canon, in_dir, golden = _two_file_corpus(spark, tmp_path)
+    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
+    commit = checkpoint.commit
+
+    def fail_epoch_1(log_dir, version, snapshot):
+        if 1 in snapshot["live"]:
+            raise OSError("injected crash before the commit")
+        return commit(log_dir, version, snapshot)
+
+    monkeypatch.setattr(checkpoint, "commit", fail_epoch_1)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        _extract(spark, canon, in_dir, out_dir, ckpt).awaitTermination(120)
+    monkeypatch.setattr(checkpoint, "commit", commit)
+
+    assert os.path.isdir(os.path.join(out_dir, "epoch=1"))  # written, not committed
+    assert incremental.live_epochs(out_dir) == [0]
+    batch = linking.kg_chain(
+        extract.extract_mentions(spark.createDataFrame(first)), canon
+    ).toPandas()
+    assert _triples(spark, out_dir) == sorted(map(tuple, batch[KEYS].values))
+
+    _extract(spark, canon, in_dir, out_dir, ckpt).awaitTermination(120)
+    assert incremental.live_epochs(out_dir) == [0, 1]
+    assert _triples(spark, out_dir) == golden
 
 
-def test_streaming_dedup_across_batches(spark, tmp_path):
-    """First-seen wins across micro-batches: a duplicate text arriving
-    in a LATER file is dropped by the digest state."""
-    in_dir, out_dir, ckpt = str(tmp_path / "sin"), str(tmp_path / "sout"), str(tmp_path / "sck")
-    rows1 = pd.DataFrame(
-        {
-            "doc_id": [0, 1],
-            "text": ["alpha beta gamma", "delta epsilon"],
-            "ts": pd.to_datetime(["2026-01-01 00:00:00", "2026-01-01 00:01:00"]),
-        }
-    )
-    rows2 = pd.DataFrame(
-        {
-            "doc_id": [2, 3],
-            "text": ["alpha beta gamma", "zeta eta"],  # 2 duplicates 0
-            "ts": pd.to_datetime(["2026-01-01 00:02:00", "2026-01-01 00:03:00"]),
-        }
-    )
-    spark.createDataFrame(rows1).coalesce(1).write.mode("append").parquet(in_dir)
-    spark.createDataFrame(rows2).coalesce(1).write.mode("append").parquet(in_dir)
+def test_incremental_extract_replay_of_committed_epoch_writes_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """The query dies after epoch 0's log commit but before the
+    streaming checkpoint commits the batch, so a restart replays epoch
+    0: the replay writes no file and no log version, and the run ends
+    with the oracle's triples."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    deduped = incremental.streaming_dedup(stream, watermark="10 minutes")
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out_dir).toPandas()
-    assert sorted(got["doc_id"]) == [0, 1, 3]
-    assert got["digest"].nunique() == 3
+    _, canon, in_dir, golden = _two_file_corpus(spark, tmp_path)
+    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
+    merge = incremental._merge_epoch
 
+    def merge_then_die(partial, store, epoch_id):
+        merge(partial, store, epoch_id)
+        raise RuntimeError("injected crash after the commit")
 
-def _run_to_parquet(df, out_dir, ckpt, mode="append"):
-    q = (
-        df.writeStream.format("parquet")
-        .outputMode(mode)
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    monkeypatch.setattr(incremental, "_merge_epoch", merge_then_die)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        _extract(spark, canon, in_dir, out_dir, ckpt).awaitTermination(120)
+    monkeypatch.setattr(incremental, "_merge_epoch", merge)
+    assert incremental.live_epochs(out_dir) == [0]
+    committed = _files(out_dir)
 
+    unchanged = {}
 
-def test_session_window_counts(spark, tmp_path):
-    """Two bursts separated by > gap form two sessions per user."""
-    in_dir, out_dir, ckpt = str(tmp_path / "wi"), str(tmp_path / "wo"), str(tmp_path / "wc")
-    ts = pd.to_datetime(
-        ["2026-01-01 00:00", "2026-01-01 00:05",      # session 1
-         "2026-01-01 02:00", "2026-01-01 02:10",      # session 2
-         "2026-01-01 09:00"]                           # watermark pusher
-    )
-    rows = pd.DataFrame(
-        {"user_id": [1, 1, 1, 1, 2], "event_id": range(5), "ts": ts,
-         "value": [1.0, 2.0, 3.0, 4.0, 5.0]}
-    )
-    spark.createDataFrame(rows).coalesce(1).write.parquet(in_dir)
-    stream = spark.readStream.schema(
-        "user_id long, event_id long, ts timestamp, value double"
-    ).parquet(in_dir)
-    out = incremental.session_window_counts(stream, gap="30 minutes", watermark="1 hour")
-    _run_to_parquet(out, out_dir, ckpt)
-    got = spark.read.parquet(out_dir).toPandas()
-    u1 = got[got["user_id"] == 1].sort_values("session_start")
-    assert len(u1) == 2
-    assert u1["n_events"].tolist() == [2, 2]
-    assert u1["total_value"].tolist() == [3.0, 7.0]
+    def record(partial, store, epoch_id):
+        merge(partial, store, epoch_id)
+        unchanged[epoch_id] = _files(out_dir) == committed
 
-
-def test_stream_stream_join_within_window(spark, tmp_path):
-    """Purchase joins the prior click of the same user within 10 min;
-    out-of-window and cross-user purchases don't match."""
-    cdir, pdir = str(tmp_path / "clicks"), str(tmp_path / "purch")
-    out_dir, ckpt = str(tmp_path / "jo"), str(tmp_path / "jc")
-    clicks = pd.DataFrame(
-        {"user_id": [1, 2], "event_id": [10, 20],
-         "ts": pd.to_datetime(["2026-01-01 00:00", "2026-01-01 00:00"])}
-    )
-    purchases = pd.DataFrame(
-        {"user_id": [1, 1, 2], "event_id": [11, 12, 21],
-         "ts": pd.to_datetime(
-             ["2026-01-01 00:05",    # in window -> matches click 10
-              "2026-01-01 00:30",    # out of window
-              "2026-01-01 00:09"])}  # user 2 -> matches click 20
-    )
-    spark.createDataFrame(clicks).coalesce(1).write.parquet(cdir)
-    spark.createDataFrame(purchases).coalesce(1).write.parquet(pdir)
-    schema = "user_id long, event_id long, ts timestamp"
-    cs = spark.readStream.schema(schema).parquet(cdir)
-    ps = spark.readStream.schema(schema).parquet(pdir)
-    joined = incremental.stream_stream_join(cs, ps, within="10 minutes")
-    _run_to_parquet(joined, out_dir, ckpt)
-    got = spark.read.parquet(out_dir).toPandas()
-    pairs = set(zip(got["click_id"], got["purchase_id"]))
-    assert pairs == {(10, 11), (20, 21)}
+    monkeypatch.setattr(incremental, "_merge_epoch", record)
+    _extract(spark, canon, in_dir, out_dir, ckpt).awaitTermination(120)
+    assert unchanged == {0: True, 1: False}  # epoch 0 replayed, epoch 1 new
+    assert incremental.live_epochs(out_dir) == [0, 1]
+    assert _triples(spark, out_dir) == golden
 
 
 def test_incremental_triple_support_merge_and_replay(spark, tmp_path):
@@ -268,41 +222,38 @@ def test_incremental_triple_support_merge_and_replay(spark, tmp_path):
     assert os.path.getmtime(os.path.join(out, "epoch=1")) == e1_mtime
 
 
-def test_incremental_triple_support_streaming(spark, tmp_path):
-    """End-to-end through Structured Streaming: triples parquet dir ->
-    availableNow foreachBatch epoch partials -> rollup equals the
-    batch rollup."""
-    import pandas as pd
-
+def test_incremental_current_beliefs_streaming(spark, tmp_path):
+    """End-to-end through Structured Streaming, as
+    ``jobs/maintain_beliefs.py`` runs it: a triples parquet dir ->
+    availableNow foreachBatch argmax partials -> the view equals the
+    batch ``graph.current_beliefs`` over the same triples."""
     from wikidata_pq_spark.operators import graph
     from wikidata_pq_spark.streaming import incremental as inc
 
-    cols = ["subj", "pred", "obj", "conv_id", "turn_idx"]
-    rows = [
-        ("Q1", "likes", "Q2", "c1", 3),
-        ("Q1", "likes", "Q2", "c2", 5),
-        ("Q3", "knows", "Q4", "c1", 2),
+    import datetime as dt
+
+    ts, hour = dt.datetime(2024, 1, 1), dt.timedelta(hours=1)
+    files = [
+        [("Q1", "lives_in", "paris", "c1", 2, ts),
+         ("Q2", "works_at", "acme", "c2", 1, ts + 2 * hour)],
+        [("Q1", "lives_in", "tokyo", "c3", 1, ts + hour),
+         ("Q2", "works_at", "initech", "c0", 4, ts + hour)],
     ]
+    ddl = "subj string, pred string, obj string, conv_id string, turn_idx long, ts timestamp"
     src = str(tmp_path / "triples_in")
-    batch = spark.createDataFrame(pd.DataFrame(rows, columns=cols))
-    batch.write.parquet(src)
-    stream = (
-        spark.readStream
-        .schema("subj string, pred string, obj string, conv_id string, turn_idx long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = str(tmp_path / "support")
-    q = inc.incremental_triple_support(
-        stream, out, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-    got = inc.read_triple_support(spark, out).toPandas().set_index(
-        ["subj", "pred", "obj"]).sort_index()
-    full = graph.triple_support(batch).toPandas().set_index(
-        ["subj", "pred", "obj"]).sort_index()
-    assert (got["n_support"] == full["n_support"]).all()
-    assert (got["n_convs_est"] == full["n_convs"]).all()
+    for rows in files:
+        spark.createDataFrame(rows, ddl).coalesce(1).write.mode("append").parquet(src)
+    stream = spark.readStream.schema(ddl).option("maxFilesPerTrigger", 1).parquet(src)
+    out = str(tmp_path / "beliefs")
+    inc.incremental_current_beliefs(stream, out, str(tmp_path / "ckpt")).awaitTermination(120)
+
+    assert inc.live_epochs(out) == [0, 1]
+    got = inc.read_current_beliefs(spark, out).toPandas().set_index(
+        ["subj", "pred"]).sort_index()
+    full = graph.current_beliefs(spark.read.parquet(src)).toPandas().set_index(
+        ["subj", "pred"]).sort_index()
+    pd.testing.assert_frame_equal(got, full[got.columns])
+    assert got["obj"].tolist() == ["tokyo", "acme"]
 
 
 def test_triple_support_mid_epoch_kill_restart(spark, tmp_path):
@@ -379,8 +330,7 @@ def test_triple_support_mid_epoch_kill_restart(spark, tmp_path):
 
 def test_streaming_corpus_ingest_composition(spark, tmp_path):
     """Streaming curation ingest: new documents arrive as a stream and
-    flow through streaming exact-dedup (first-seen wins, watermark-
-    bounded state) -> token-count quality gate -> PII redaction, all in
+    flow through a token-count quality gate -> PII redaction, all in
     ONE streaming plan; the sink equals the same operators composed in
     batch over the union of the arrivals."""
     import pandas as pd
@@ -388,7 +338,6 @@ def test_streaming_corpus_ingest_composition(spark, tmp_path):
 
     from wikidata_pq_spark.functions import text as TX
     from wikidata_pq_spark.operators import curation
-    from wikidata_pq_spark.streaming import incremental as inc
 
     cols = ["doc_id", "ts", "text"]
     batch1 = [
@@ -397,7 +346,7 @@ def test_streaming_corpus_ingest_composition(spark, tmp_path):
         (2, "2024-01-01 10:02:00", "plain clean document text here"),
     ]
     batch2 = [
-        (3, "2024-01-01 10:10:00", "mail me at a@b.io about the spark job today"),  # dup of 0
+        (3, "2024-01-01 10:10:00", "mail me at a@b.io about the spark job today"),
         (4, "2024-01-01 10:11:00", "call 555-123-4567 for the gpu cluster quota"),
     ]
     src = str(tmp_path / "docs_in")
@@ -417,22 +366,19 @@ def test_streaming_corpus_ingest_composition(spark, tmp_path):
         gated = df.filter(F.size(TX.tokens(F.col("text"))) >= 4)
         return curation.redact_pii(gated)
 
-    flow = compose(inc.streaming_dedup(stream))
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    _run_to_parquet(flow, out_dir, ckpt)
+    out_dir = str(tmp_path / "out")
+    (
+        compose(stream).writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination(120)
+    )
     got = spark.read.parquet(out_dir).toPandas().sort_values("doc_id")
 
-    # batch equivalent: first-seen dedup == exact_dup_groups survivors
-    all_rows = spark.read.parquet(src)
-    from wikidata_pq_spark.operators import dedup
-    survivors = dedup.exact_dup_groups(all_rows).select(
-        F.col("keep_id").alias("doc_id")
-    )
-    batch_out = (
-        compose(all_rows.join(survivors, "doc_id"))
-        .toPandas().sort_values("doc_id")
-    )
-    assert list(got["doc_id"]) == list(batch_out["doc_id"]) == [0, 2, 4]
+    batch_out = compose(spark.read.parquet(src)).toPandas().sort_values("doc_id")
+    assert list(got["doc_id"]) == list(batch_out["doc_id"]) == [0, 2, 3, 4]
     assert got.reset_index(drop=True).equals(batch_out.reset_index(drop=True))
     # the redaction did real work inside the stream
     assert "<EMAIL>" in got.set_index("doc_id").loc[0, "red_text"]
@@ -725,7 +671,7 @@ def test_uncommitted_generation_invisible_and_collected(spark, tmp_path):
     assert inc._epochs_on_disk(out) == [-2]
 
 
-def test_lost_manifest_recovers_from_bak_then_fails_loudly(spark, tmp_path):
+def test_lost_log_refuses_reads_merges_and_compaction(spark, tmp_path):
     """Losing the commit log after a committed compaction: with
     ``_log/`` gone the live set is unknown, so reads, compaction and
     merges of other epochs refuse loudly, and the generation data on
@@ -857,7 +803,7 @@ def test_epoch_landing_before_compaction_reduces_correctly(spark, tmp_path):
     assert (got["first_turn"] == full["first_turn"]).all()
 
 
-def test_concurrent_compaction_refused_by_lease(spark, tmp_path, monkeypatch):
+def test_concurrent_compaction_loses_the_commit_race(spark, tmp_path, monkeypatch):
     """Two compactors: B commits between compactor A's log read and A's
     commit. A loses the race for the log version and raises, the store
     reads equal to the batch reference, and the next compaction leaves
@@ -922,7 +868,7 @@ def test_concurrent_compaction_refused_by_lease(spark, tmp_path, monkeypatch):
     assert (got["n_support"] == full["n_support"]).all()
 
 
-def test_crash_between_bak_and_primary_manifest_reads_committed(
+def test_crash_before_commit_leaves_the_write_invisible(
     spark, tmp_path, monkeypatch
 ):
     """A crash before a commit: a compaction that dies after writing its
@@ -1125,18 +1071,25 @@ def test_epoch_stores_written_before_zstd_read_and_compact(
 
 
 def test_epoch_store_reads_build_without_jobs(spark, tmp_path):
-    """Building both views launches no Spark job: the scan takes its
-    schema from the commit log, not from an inference job. A store with
-    no committed version still refuses to read."""
+    """Building the two views and the extracted-triples read launches
+    no Spark job: each scan takes its schema from the commit log, not
+    from an inference job. A store with no committed version still
+    refuses to read."""
     support, beliefs = _two_epoch_stores(spark, tmp_path)
+    triples = str(tmp_path / "triples")
+    incremental._merge_epoch(
+        spark.createDataFrame([("Q1", "ceo", "A", "c1", 1)], KEYS), triples, 0
+    )
     sc = spark.sparkContext
     sc.setJobGroup("epoch_store_reads", "epoch_store_reads")
     try:
         incremental.read_triple_support(spark, support)
         incremental.read_current_beliefs(spark, beliefs)
+        incremental.read_triples(spark, triples)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup("epoch_store_reads")) == 0
-    with pytest.raises(RuntimeError, match="no committed version"):
-        incremental.read_triple_support(spark, str(tmp_path / "empty"))
+    for read in (incremental.read_triple_support, incremental.read_triples):
+        with pytest.raises(RuntimeError, match="no committed version"):
+            read(spark, str(tmp_path / "empty"))

@@ -90,8 +90,8 @@ def test_post_check_detects_dropped_row(spark, tmp_path, monkeypatch):
     fails the post-check."""
     write = tableio.write_partitioned
 
-    def drop_one_row(df, path, partition_cols, mode="overwrite"):
-        write(df.filter(F.col("id") != 0), path, partition_cols, mode)
+    def drop_one_row(df, path, partition_cols):
+        write(df.filter(F.col("id") != 0), path, partition_cols)
 
     monkeypatch.setattr(tableio, "write_partitioned", drop_one_row)
     path = str(tmp_path / "t")
@@ -160,42 +160,6 @@ def test_state_store_concurrent_sets_lose_no_metric(tmp_path):
     assert not any(t.is_alive() for t in threads) and not errors
     assert st.get("u") == Step.LINKED
     assert st.metrics("u") == {f"m{i}": i for i in range(32)}
-
-
-def test_iceberg_seam_detection(spark):
-    """No Iceberg catalog configured in this sandbox -> parquet path."""
-    assert tableio.iceberg_available(spark) is False
-
-
-def test_iceberg_seam_routing(spark, tmp_path, monkeypatch):
-    """The storage seam routes on catalog presence: parquet fallback
-    with no catalog; with a (mock) spark.sql.catalog.* conf set, the
-    Iceberg writeTo branch is taken. The real Iceberg write needs the
-    iceberg-spark runtime jar (absent in-sandbox), so that call is
-    monkeypatched -- the routing decision and call shape are what this
-    pins down."""
-    df = _df(spark, 20)
-    # fallback branch writes real partitioned parquet
-    dest = str(tmp_path / "t")
-    assert tableio.write_table(df, dest, ["part"]) == "parquet"
-    assert spark.read.parquet(dest).count() == 20
-
-    calls = {}
-    monkeypatch.setattr(
-        tableio,
-        "_write_iceberg",
-        lambda d, ident, parts, mode="overwrite": calls.update(
-            ident=ident, parts=parts, mode=mode
-        ),
-    )
-    spark.conf.set("spark.sql.catalog.sandbox", "org.apache.iceberg.spark.SparkCatalog")
-    try:
-        assert tableio.iceberg_available(spark) is True
-        assert tableio.write_table(df, "sandbox.db.t", ["part"]) == "iceberg"
-        assert calls == {"ident": "sandbox.db.t", "parts": ["part"], "mode": "overwrite"}
-    finally:
-        spark.conf.unset("spark.sql.catalog.sandbox")
-    assert tableio.iceberg_available(spark) is False
 
 
 @pytest.mark.parametrize(

@@ -29,20 +29,6 @@ MENTION_SCHEMA = (
     "ts timestamp"
 )
 
-TURN_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-
-
-def ordered_turns(transcripts: DataFrame) -> DataFrame:
-    """Reconstruct stable per-conversation turn ordering.
-
-    Co-partitions by conv_id then sorts within partitions by
-    (conv_id, turn_idx) -- a total order per conversation without a
-    global sort (no single-reducer bottleneck at scale).
-    """
-    return transcripts.repartition("conv_id").sortWithinPartitions(
-        "conv_id", "turn_idx"
-    )
-
 
 def _extract_group(pdf):
     """Runs the SHARED rule module on whole conversations."""
@@ -207,23 +193,3 @@ def extract_mentions(transcripts: DataFrame, method: str = "sql") -> DataFrame:
         "conv_id", "turn_idx"
     )
     return partitioned.mapInPandas(_extract_partition, MENTION_SCHEMA)
-
-
-def turn_stream_invariant(transcripts: DataFrame) -> DataFrame:
-    """Per-turn text-equality audit frame (BASELINE per-row invariant).
-
-    Returns (conv_id, turn_idx, text, text_roundtrip, equal) where
-    text_roundtrip is the text observed after the ordering
-    reconstruction; ``equal`` must be all-true. The analogue of the
-    reference's ID-preservation audit (reference: process.py:106-108).
-    """
-    ordered = ordered_turns(transcripts).select(
-        "conv_id", "turn_idx", F.col("text").alias("text_roundtrip")
-    )
-    base = transcripts.select("conv_id", "turn_idx", "text")
-    joined = base.join(ordered, ["conv_id", "turn_idx"], "full_outer")
-    return joined.withColumn(
-        "equal",
-        (F.col("text") == F.col("text_roundtrip"))
-        | (F.col("text").isNull() & F.col("text_roundtrip").isNull()),
-    )

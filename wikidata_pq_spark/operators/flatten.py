@@ -406,13 +406,8 @@ def validate_entity_schemas(df: DataFrame, sample: int = 1000) -> None:
     """
     from ..plans import schema_check
 
-    spark = df.sparkSession
     for column, declared in DECLARED_COLUMN_SCHEMAS.items():
-        if column not in df.columns:
-            continue
-        inferred = schema_check.infer_json_schema(spark, df, column, sample)
-        problems = schema_check.validate_subset(inferred, declared)
-        if problems:
-            raise schema_check.SchemaMismatch(
-                f"schema drift in column '{column}': " + "; ".join(problems)
+        if column in df.columns:
+            schema_check.check_json_column(
+                df.sparkSession, df, column, declared, sample
             )

@@ -383,23 +383,6 @@ def pagerank(
     return ranks.select("node_id", "rank")
 
 
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    damping: float = 0.85,
-    iters: int = 10,
-    src: str = "src_id",
-    dst: str = "dst_id",
-) -> DataFrame:
-    """Personalized PageRank: random walks restart at ``seeds(node_id)``
-    instead of uniformly -- the standard KG relevance score for "which
-    entities matter relative to THIS query set". Thin wrapper over
-    :func:`pagerank` with a seed restart vector."""
-    return pagerank(
-        edges, damping=damping, iters=iters, src=src, dst=dst, seeds=seeds
-    )
-
-
 def multi_seed_ppr(
     edges: DataFrame,
     seed_sets: DataFrame,

@@ -212,9 +212,3 @@ def fuzzy_link_mentions(
         .filter(F.col("_rk") == 1)
         .select("mention", "entity_id", "alias", "sim")
     )
-
-
-def hot_keys(df: DataFrame, key: str, top_n: int = 100) -> DataFrame:
-    """Frequency histogram of join keys (skew evidence; reference:
-    plot_language_hist.py:12 value_counts analogue)."""
-    return df.groupBy(key).count().orderBy(F.desc("count")).limit(top_n)

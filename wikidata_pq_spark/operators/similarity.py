@@ -11,9 +11,10 @@
   coarse quantizer (driver-side on a bounded sample; the centroid
   table is index metadata), corpus bucketed by nearest centroid,
   queries probe their n_probe nearest cells.
-- ``embedding_near_pairs`` (headline near-dup): hyperplane-bucket
-  candidates -> exact cosine verify; ``embedding_dup_pairs`` is the
-  exact blocked baseline it demotes.
+- ``lsh_candidate_pairs`` -> ``verify_cosine_pairs`` (headline
+  near-dup, composed by the ``embedding_near_pairs`` contract cell):
+  hyperplane-bucket candidates -> exact cosine verify;
+  ``embedding_dup_pairs`` is the exact blocked baseline it demotes.
 
 All dot products are JVM-side zip_with/aggregate folds in double --
 no Python, and bitwise-reproducible for the DuckDB oracle.
@@ -493,26 +494,6 @@ def verify_cosine_pairs(
     )
 
 
-def embedding_near_pairs(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    n_planes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """THE headline embedding near-dup operator: hyperplane-LSH bucket
-    candidates -> exact cosine verify. The quadratic term is confined
-    to within-bucket candidates; the exact math runs only on them."""
-    cands = lsh_candidate_pairs(
-        emb, n_planes=n_planes, id_col=id_col, vec_col=vec_col, dim=dim, seed=seed
-    )
-    return verify_cosine_pairs(
-        emb, cands, threshold=threshold, id_col=id_col, vec_col=vec_col
-    )
-
-
 def _spherical_kmeans(
     sample: np.ndarray, n_cells: int, n_iter: int = 10, seed: int = 42
 ) -> np.ndarray:
@@ -651,8 +632,8 @@ def embedding_dup_pairs(
     """Near-duplicate embedding pairs: cosine >= threshold, a_id < b_id.
 
     HELPER / exact baseline: quadratic within a block -- demoted in
-    favor of :func:`embedding_near_pairs` (LSH candidates -> cosine
-    verify) as the corpus-scale operator; kept for bounded blocks and
+    favor of :func:`lsh_candidate_pairs` -> :func:`verify_cosine_pairs`
+    as the corpus-scale operator; kept for bounded blocks and
     as the oracle-checkable exact form."""
     base = emb.select(
         F.col(id_col).alias("id"),

@@ -14,12 +14,12 @@ state is the problem, not the compute:
   frequency > max_undercount is guaranteed present. The shuffle is
   O(partitions * capacity), independent of vocabulary size.
 
-- ``approx_distinct_by_group`` / ``approx_distinct_check``: per-group
-  HyperLogLog++ cardinality (``approx_count_distinct``), the standard
-  constant-state answer to COUNT(DISTINCT) at scale, with a checkable
-  contract: the check frame recomputes the EXACT distinct count in the
-  same pass and emits (group, within_tol) so an oracle can re-derive
-  the exact side independently and verify the sketch's error bound.
+- ``approx_distinct_check``: per-group HyperLogLog++ cardinality
+  (``approx_count_distinct``), the standard constant-state answer to
+  COUNT(DISTINCT) at scale, with a checkable contract: the check frame
+  recomputes the EXACT distinct count in the same pass and emits
+  (group, within_tol) so an oracle can re-derive the exact side
+  independently and verify the sketch's error bound.
 
 The reference has no sketch stage (its corpus fits one node); these
 extend the engine the same way the dedup/ANN families do.
@@ -174,24 +174,6 @@ def heavy_hitters(
     ).select("key", "est", "max_undercount", "n_total")
 
 
-def top_k_keys_exact(df: DataFrame, key_col: str, k: int) -> DataFrame:
-    """The exact baseline: full groupBy count + rank. Correct at any
-    scale but shuffles the whole vocabulary -- the thing
-    ``heavy_hitters`` exists to avoid; kept for equivalence tests and
-    small-dimension use."""
-    from pyspark.sql import Window
-
-    counts = df.groupBy(F.col(key_col).cast("string").alias("key")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    w = Window.orderBy(F.col("cnt").desc(), F.col("key").asc())
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
 def approx_quantile_check(
     df: DataFrame,
     group_col: str,
@@ -239,17 +221,6 @@ def approx_quantile_check(
     target = F.col("q") * F.col("n")
     ok = (F.col("r_high") >= target - band) & (F.col("r_low") <= target + band)
     return ranks.select(group_col, "q", "approx_val", ok.alias("within_tol"))
-
-
-def approx_distinct_by_group(
-    df: DataFrame, group_col: str, value_col: str, rsd: float = 0.05
-) -> DataFrame:
-    """Per-group HyperLogLog++ cardinality: constant state per group
-    regardless of value cardinality (the scale path for per-language /
-    per-source vocabulary dashboards)."""
-    return df.groupBy(group_col).agg(
-        F.approx_count_distinct(value_col, rsd).alias("approx_nd")
-    )
 
 
 def approx_distinct_check(

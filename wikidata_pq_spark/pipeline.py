@@ -11,8 +11,8 @@ unit kind:
                 computed once per store and written as ``components``;
                 at n_chunks > 1 it first checks that no conversation
                 spans two input files, and the record keeps
-                ``n_chunks`` and the sorted file list, so a resume
-                reads the same slices
+                ``n_chunks`` and a digest of the sorted file list, so
+                a resume reads the same slices
   chunk_NNNNN   LINKED: extract -> link to canonical ids -> distinct
                 (``linking.kg_chain``), written once as
                 ``edges/chunk=i/part-*.parquet``; the chunk's record
@@ -39,6 +39,7 @@ Every stage is idempotent: re-running a completed stage is a no-op
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,8 +75,9 @@ class KGPipeline:
     parquet file scan whose files are conversation-complete
     (``repartition(k, "conv_id")`` before the write); chunk i reads its
     slice of the sorted file list with ``transcripts.schema``, and the
-    ``corpus`` record keeps the list -- the analogue of the reference's
-    memoized remote listing (size_verification.py:20-24).
+    ``corpus`` record keeps the list's sha256 -- the analogue of the
+    reference's memoized remote listing (size_verification.py:20-24), as
+    a digest because every version of the record repeats it.
     """
 
     def __init__(
@@ -117,7 +119,10 @@ class KGPipeline:
             )
 
         files = input_files(transcripts) if self.n_chunks > 1 else []
-        layout = {"n_chunks": self.n_chunks, "files": files}
+        # the record keeps a digest of the file list, and none at one chunk
+        layout = {"n_chunks": self.n_chunks}
+        if files:
+            layout["files_sha256"] = files_digest(files)
         components = self.path("components")
         if st.gate(CORPUS, Step.CANONICALIZED):
             if self.n_chunks > 1:
@@ -125,17 +130,14 @@ class KGPipeline:
             comps = canonicalize.connected_components(same_as)
             comps.write.mode("overwrite").parquet(components)
             st.set(CORPUS, Step.CANONICALIZED, **layout)
-        else:
-            # a store from before the layout was recorded ran one chunk
-            recorded = {"n_chunks": 1, "files": [], **st.metrics(CORPUS)}
-            if {k: recorded[k] for k in layout} != layout:
-                raise ValueError(
-                    f"KGPipeline: {self.out_dir} was built from other chunks "
-                    "(its recorded n_chunks or input file list differs from "
-                    "this run's); resuming it would mix two chunk "
-                    "assignments. Re-run with the recorded input and "
-                    "n_chunks, or delete the output dir."
-                )
+        elif recorded_layout(st.metrics(CORPUS)) != recorded_layout(layout):
+            raise ValueError(
+                f"KGPipeline: {self.out_dir} was built from other chunks "
+                "(its recorded n_chunks or input file list differs from "
+                "this run's); resuming it would mix two chunk "
+                "assignments. Re-run with the recorded input and "
+                "n_chunks, or delete the output dir."
+            )
         # read with its known schema: no schema-inference job
         canon_dict = canonicalize.apply_canonical(
             alias_dict,
@@ -248,6 +250,19 @@ def input_files(transcripts: DataFrame) -> list[str]:
             "the frame as parquet first, or use n_chunks=1."
         )
     return sorted(transcripts.inputFiles())
+
+
+def files_digest(files: list[str]) -> str:
+    """sha256 of a sorted file list, one path per line."""
+    return hashlib.sha256("\n".join(files).encode()).hexdigest()
+
+
+def recorded_layout(record: dict) -> tuple[int, str]:
+    """(n_chunks, file-list digest) of a ``corpus`` record. A store from
+    before the layout was recorded ran one chunk, and one from before
+    the digest keeps the list itself."""
+    digest = record.get("files_sha256", files_digest(record.get("files", [])))
+    return record.get("n_chunks", 1), digest
 
 
 def check_conversations_complete(transcripts: DataFrame) -> None:

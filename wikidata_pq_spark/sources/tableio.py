@@ -1,7 +1,7 @@
 """Table IO seam: audited, partitioned parquet writes and their post-check.
 
 The storage layer behind the pipeline (SURVEY.md §7.3d): query code only
-ever sees DataFrames; this module decides the physical table format.
+ever sees DataFrames; every table it writes is Hive-style parquet.
 A sink's audit row is (rows, min_id, max_id) (``audit_aggs``), the
 reference's finish-callback sidecar row (reference: core.py:25-35). An
 unpartitioned sink observes it on its own write (``observe_audit``) and
@@ -10,11 +10,6 @@ an ``Observation`` cannot group: ``write_with_audit`` writes Hive-style
 parquet, the reference's layout (core.py:38-58 PartitionByKey ->
 results/{table}/language=X/), plus a sidecar of per-partition rows
 aggregated from the frame it was given (a second pass over its plan).
-
-Only ``write_table`` routes to Iceberg, when a
-``spark.sql.catalog.<name>`` config is set; no flow calls it. With
-Iceberg, snapshot metadata would supply the row counts the sidecars
-reproduce by hand (reference post-check design: DESIGN.md:95-112).
 """
 
 from __future__ import annotations
@@ -25,58 +20,6 @@ from collections import Counter
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True if an Iceberg catalog is configured on this session
-    (context conf at session build time, or runtime session conf)."""
-    try:
-        confs = dict(spark.sparkContext.getConf().getAll())
-    except Exception:
-        confs = {}
-    try:
-        # RuntimeConfig.getAll is a PySpark >= 4.0 property; guarded
-        # separately so 3.x still gets context-conf detection instead
-        # of a blanket False.
-        confs.update(spark.conf.getAll)
-    except Exception:
-        pass
-    return any(k.startswith("spark.sql.catalog.") for k in confs)
-
-
-def _write_iceberg(
-    df: DataFrame, ident: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    """Iceberg DataFrameWriterV2 path: ``writeTo(catalog.db.table)``
-    with identity partitioning; snapshot metadata then supplies the
-    row counts the parquet fallback's audit sidecars reproduce by
-    hand. Requires the iceberg-spark runtime jar -- on a real cluster
-    this executes; in-sandbox the routing seam is unit-tested against
-    a mock catalog conf (tests/test_tableio_checkpoint.py)."""
-    w = df.writeTo(ident)
-    if partition_cols:
-        w = w.partitionedBy(*[F.col(c) for c in partition_cols])
-    if mode == "overwrite":
-        w.createOrReplace()
-    else:
-        w.append()
-
-
-def write_table(
-    df: DataFrame,
-    dest: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-) -> str:
-    """Route a table write through the storage seam: Iceberg
-    ``writeTo`` when a catalog is configured on the session (``dest``
-    is then a table identifier), Hive-partitioned parquet otherwise
-    (``dest`` is a path). Returns the branch taken."""
-    if iceberg_available(df.sparkSession):
-        _write_iceberg(df, dest, partition_cols, mode=mode)
-        return "iceberg"
-    write_partitioned(df, dest, partition_cols, mode=mode)
-    return "parquet"
 
 
 def observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -102,14 +45,9 @@ def observe_audit(df: DataFrame, id_col: str) -> tuple[DataFrame, Observation]:
     return df.observe(obs, *audit_aggs(id_col)), obs
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-) -> None:
-    """Partitioned columnar write (parquet fallback for Iceberg)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
+    """Partitioned parquet write, overwriting ``path``."""
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def read_recorded(spark: SparkSession, path: str, record: dict) -> DataFrame:

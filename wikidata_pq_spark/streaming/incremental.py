@@ -3,25 +3,29 @@
 The reference is batch-only; its incremental behaviors are a resumable
 chunk loop with idempotent step gates (reference: main.py:65,
 process.py:279-282, DESIGN.md:119-129). The Spark-native upgrade is
-Structured Streaming with checkpointed exactly-once sinks:
+Structured Streaming with checkpointed sinks, each committed through a
+log:
 
 - ``incremental_extract``: readStream over a transcripts directory ->
   ``foreachBatch`` running the SAME batch chain (extraction, then
   ``linking.kg_chain`` through the canonical dictionary) per
-  micro-batch -> append parquet. The streaming checkpoint replaces the
-  reference's JSONL step files: a killed job resumes from the last
-  committed batch with no duplicate output.
-- ``windowed_event_counts``: watermarked sliding-window aggregation
-  over an event stream (late data bounded by the watermark).
-- ``merge_triple_support`` / ``merge_current_beliefs`` (and their
-  ``incremental_*`` foreachBatch wrappers): each micro-batch lands as
-  one partial aggregate under its own ``epoch=N`` partition, reads
-  reduce the live partials, and ``compact_*`` folds them into one
-  generation. The live set is a ``checkpoint`` commit log under
-  ``<store>/_log/``. A replay of a committed epoch is a no-op, a merge
-  or compaction that dies before its commit stays invisible, and of two
-  writers racing for a version the loser retries (merge) or raises
-  (compaction). See the commit-log section below.
+  micro-batch. Each micro-batch's triples land under their own
+  ``epoch=N`` partition and are committed to ``<out>/_log/``;
+  ``read_triples`` reads only the committed epochs. The streaming
+  checkpoint replaces the reference's JSONL step files: a killed job
+  resumes at the next uncommitted batch with no duplicate output.
+- ``merge_triple_support`` / ``merge_current_beliefs`` (and
+  ``incremental_current_beliefs``, the foreachBatch wrapper of the
+  second): each micro-batch lands as one partial aggregate under its
+  own ``epoch=N`` partition, reads reduce the live partials, and
+  ``compact_*`` folds them into one generation.
+
+All three sinks share one commit protocol (``_merge_epoch``): the live
+set is a ``checkpoint`` commit log under ``<store>/_log/``. A replay of
+a committed epoch is a no-op, a merge or compaction that dies before
+its commit stays invisible, and of two writers racing for a version
+the loser retries (merge) or raises (compaction). See the commit-log
+section below.
 
 Invariant: a micro-batch must contain whole conversations (the
 coreference rule is conversation-scoped). Upstream writers satisfy
@@ -77,135 +81,31 @@ def incremental_extract(
     """Start an availableNow foreachBatch pipeline; returns the query.
 
     Each micro-batch runs the identical batch operators (no separate
-    streaming code path to drift), appending canonical triples to
-    parquet. ``canon_dict`` is the alias dictionary composed with the
-    same-as components (``canonicalize.apply_canonical``), as in
-    ``KGPipeline``. Micro-batches hold whole conversations, so the
-    per-batch distinct is the corpus-wide one.
+    streaming code path to drift) and merges its canonical triples into
+    ``out_dir`` as one epoch (``_merge_epoch``); read them with
+    :func:`read_triples`. ``canon_dict`` is the alias dictionary
+    composed with the same-as components
+    (``canonicalize.apply_canonical``), as in ``KGPipeline``.
+    Micro-batches hold whole conversations, so the per-batch distinct
+    is the corpus-wide one.
     """
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # foreachBatch is at-least-once: a crash after a partial append
-        # re-runs the epoch on restart. Writing each epoch into its own
-        # epoch=N partition with DYNAMIC partition-overwrite makes the
-        # re-run idempotent -- the retry replaces exactly its own
-        # partition, never touching committed epochs (the Spark-native
-        # form of the reference's skip-if-done step gates, reference:
-        # process.py:279-282).
+        # foreachBatch is at-least-once: a batch that died before its
+        # log commit re-runs on restart and rewrites only its own
+        # partition, and a replay of a committed epoch writes nothing
+        # (the Spark-native form of the reference's skip-if-done step
+        # gates, reference: process.py:279-282).
         triples = linking.kg_chain(extract.extract_mentions(batch_df), canon_dict)
-        (
-            triples.withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(out_dir)
-        )
+        _merge_epoch(triples, out_dir, epoch_id)
 
     return _drain(stream, process_batch, checkpoint_dir)
 
 
-def session_window_counts(
-    events_stream: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    key: str = "user_id",
-) -> DataFrame:
-    """Streaming sessionization: dynamic-gap session windows per key
-    (the streaming twin of temporal.sessionize -- state closes once the
-    watermark passes a session's end, so state is bounded)."""
-    return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), key)
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value"))
-        .select(
-            F.col(key),
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def stream_stream_join(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    within: str = "10 minutes",
-    watermark: str = "20 minutes",
-    key: str = "user_id",
-) -> DataFrame:
-    """Stream-stream inner join: purchases matched to a prior click by
-    the same key within ``within`` (the streaming as-of-window shape).
-
-    Both sides carry watermarks and the join carries a time-range
-    condition -- the two requirements that let Spark bound each side's
-    state buffer (rows older than watermark + range are evicted).
-    """
-    c = clicks.withWatermark("ts", watermark).select(
-        F.col(key).alias("c_key"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = purchases.withWatermark("ts", watermark).select(
-        F.col(key).alias("p_key"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    cond = (
-        (F.col("c_key") == F.col("p_key"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within}"))
-    )
-    return c.join(p, cond, "inner").select(
-        F.col("c_key").alias(key), "click_id", "purchase_id", "click_ts", "purchase_ts"
-    )
-
-
-def streaming_dedup(
-    docs_stream: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup: first-seen wins, duplicates dropped
-    across micro-batches.
-
-    ``dropDuplicates`` on the content digest keeps per-key state in the
-    state store; the watermark bounds that state (a duplicate arriving
-    later than the watermark can re-emit -- the standard
-    bounded-state/exactness trade every streaming dedup makes at scale;
-    training-data ingestion pairs this with the batch exact_dup_groups
-    backstop downstream).
-    """
-    return (
-        docs_stream.withColumn("digest", F.md5(F.col(text_col)))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicates(["digest"])
-    )
-
-
-def windowed_event_counts(
-    events_stream: DataFrame,
-    window: str = "5 minutes",
-    slide: str | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked (sliding) window counts per event_type."""
-    win = (
-        F.window("ts", window, slide) if slide else F.window("ts", window)
-    )
-    return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy(win, "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
-        .select(
-            F.col("window.start").alias("win_start"),
-            F.col("window.end").alias("win_end"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
+def read_triples(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The triples of every epoch ``incremental_extract`` committed to
+    ``out_dir``; a partition whose commit never happened is not read."""
+    return _live_partials(spark, out_dir, _head(out_dir)[1]).drop("epoch")
 
 
 def merge_triple_support(batch: DataFrame, out_dir: str, epoch_id: int) -> None:
@@ -275,21 +175,6 @@ def read_triple_support(spark: SparkSession, out_dir: str) -> DataFrame:
         F.hll_sketch_estimate("conv_hll").cast("long").alias("n_convs_est"),
         "first_conv", "first_turn",
     )
-
-
-def incremental_triple_support(
-    stream_triples: DataFrame, out_dir: str, checkpoint_dir: str
-):
-    """Streaming wrapper: foreachBatch(merge_triple_support) with an
-    availableNow trigger -- each micro-batch of linked triples lands as
-    its own epoch partial; the streaming checkpoint resumes a killed
-    job at the next uncommitted batch, and a replayed batch is merged
-    at most once."""
-
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_triple_support(batch_df, out_dir, epoch_id)
-
-    return _drain(stream_triples, process_batch, checkpoint_dir)
 
 
 # --------------------------------------------------------------------------
@@ -377,11 +262,11 @@ def incremental_current_beliefs(
 
 
 # --------------------------------------------------------------------------
-# Epoch-partial compaction and the commit log. Both stores grow one
-# partial per epoch; sum/min/hll-union and argmax are associative, so
-# the live partials reduce into ONE partial -- a generation, stored
-# under a NEGATIVE epoch id so it never collides with a streaming epoch
-# (ids >= 0) -- with no information loss.
+# Epoch-partial compaction and the commit log. Every store grows one
+# partition per epoch. The rollups' sum/min/hll-union and argmax are
+# associative, so their live partials reduce into ONE partial -- a
+# generation, stored under a NEGATIVE epoch id so it never collides
+# with a streaming epoch (ids >= 0) -- with no information loss.
 #
 # Bare parquet has no atomic multi-partition commit, so the live set is
 # recorded in the store's commit log, ``<store>/_log/`` (``checkpoint.
@@ -409,9 +294,10 @@ def incremental_current_beliefs(
 #   were claimed before it, by compactors that read a version no newer
 #   than the one it replaced and so can no longer commit.
 #
-# Reads reduce exactly the newest version's live set (``epoch IN live``
+# Reads take exactly the newest version's live set (``epoch IN live``
 # prunes partitions, not rows), so a partition whose merge or
-# compaction died before its commit is invisible by construction.
+# compaction died before its commit is invisible by construction. The
+# extracted-triples store is merged the same way and never compacted.
 # --------------------------------------------------------------------------
 
 
