@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 
@@ -157,3 +159,62 @@ def test_cc_unsized_source_takes_distributed_path(spark, monkeypatch):
     estimates Long.MaxValue: no bound admits it to the driver."""
     sdf = spark.createDataFrame([("Q1", "Q2")], "src_id string, dst_id string")
     assert _path_taken(monkeypatch, sdf) == ["_distributed_components"]
+
+
+def _pandas_edges(spark, sa, tmp_path):
+    """A local relation: sized by Catalyst, so the driver path, which
+    collects it."""
+    return spark.createDataFrame(sa)
+
+
+def _parquet_edges(spark, sa, tmp_path):
+    """A bare parquet scan: the driver path reads its files itself."""
+    spark.createDataFrame(sa).write.parquet(str(tmp_path / "same_as"))
+    return spark.read.parquet(str(tmp_path / "same_as"))
+
+
+def _rdd_edges(spark, sa, tmp_path):
+    """An RDD scan: unsized (Long.MaxValue), so the distributed path."""
+    rows = list(zip(sa["src_id"], sa["dst_id"]))
+    return spark.createDataFrame(rows, "src_id string, dst_id string")
+
+
+@pytest.mark.classic_session_only
+@pytest.mark.parametrize(
+    "edges, cc_path, jobs",
+    [
+        (_pandas_edges, "driver", 1),
+        (_parquet_edges, "driver", 0),
+        (_rdd_edges, "distributed", None),
+    ],
+    ids=["driver-collect", "driver-files", "distributed"],
+)
+def test_write_components_stores_union_find(spark, tmp_path, edges, cc_path, jobs):
+    """``write_components`` stores the oracle's map on either path and
+    returns the path taken, the estimate that chose it and the rows
+    written. On the driver path the edges' collect is its only Spark
+    job, and a bare parquet scan is read from its files with none: the
+    driver writes the map itself, as one visible part file, so no task
+    carries the map."""
+    sa = datagen.gen_same_as(200)
+    golden = oracle.union_find_components(sa)
+    frame = edges(spark, sa, tmp_path)
+    path = str(tmp_path / "components")
+    sc = spark.sparkContext
+    group = f"write_components_{edges.__name__}"
+    sc.setJobGroup(group, group)
+    try:
+        record = canonicalize.write_components(frame, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    got = spark.read.schema(canonicalize.COMPONENTS_DDL).parquet(path).toPandas()
+    assert dict(zip(got["entity_id"], got["canonical_id"])) == golden
+    assert record["cc_path"] == cc_path
+    assert record["components"] == len(got) == len(golden)
+    below = record["cc_estimated_bytes"] <= canonicalize.DRIVER_MAX_BYTES
+    assert below == (cc_path == "driver")
+    if cc_path == "driver":
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+        assert os.listdir(path) == ["part-00000.parquet"]

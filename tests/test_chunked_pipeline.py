@@ -103,10 +103,10 @@ def test_kill_and_resume_identical(spark, parquet_corpus, tmp_path, n_chunks, mo
     expected = _tset(clean.triples())
 
     cc_calls = []
-    cc = canonicalize.connected_components
+    cc = canonicalize.write_components
     monkeypatch.setattr(
-        canonicalize, "connected_components",
-        lambda same_as: cc_calls.append(1) or cc(same_as),
+        canonicalize, "write_components",
+        lambda same_as, path: cc_calls.append(1) or cc(same_as, path),
     )
     out = str(tmp_path / "kg")
     pipe = KGPipeline(spark, out, n_chunks=n_chunks)
@@ -128,6 +128,46 @@ def test_kill_and_resume_identical(spark, parquet_corpus, tmp_path, n_chunks, mo
     assert len(cc_calls) == 1
     assert metrics == _run(clean, parquet_corpus)
     assert len(cc_calls) == 1  # a completed store re-runs without CC
+
+
+def test_components_crash_before_rename_resumes(
+    spark, spark_corpus, corpus, tmp_path, monkeypatch
+):
+    """The driver writes ``components`` under a hidden name and renames
+    it into place: a run killed between the two leaves no file a reader
+    sees and no CANONICALIZED, and the resume rewrites the map and
+    completes with the oracle's triples. The corpus record keeps the CC
+    path taken, its size estimate and the rows written."""
+    import pyarrow.parquet as pq
+
+    write = pq.write_table
+
+    def write_then_die(*args, **kwargs):
+        write(*args, **kwargs)
+        raise Killed("killed before the rename")
+
+    out = tmp_path / "kg"
+    comps = str(out / "components")
+    with monkeypatch.context() as m, pytest.raises(Killed):
+        m.setattr(pq, "write_table", write_then_die)
+        _run(KGPipeline(spark, str(out)), spark_corpus)
+    assert os.listdir(comps) == [".part-00000.parquet.tmp"]
+    assert spark.read.schema(canonicalize.COMPONENTS_DDL).parquet(comps).count() == 0
+    assert KGPipeline(spark, str(out)).state.get("corpus") == Step.INIT
+
+    pipe = KGPipeline(spark, str(out))
+    _run(pipe, spark_corpus)
+    assert pipe.state.get("corpus") == Step.COMPLETE
+    assert os.listdir(comps) == ["part-00000.parquet"]
+    golden = oracle.oracle_triples(
+        corpus["transcripts"], corpus["alias_dict"], corpus["same_as"]
+    )
+    got = pipe.triples().select("subj", "pred", "obj").toPandas()
+    assert oracle.precision_recall(got, golden) == (1.0, 1.0)
+    record = pipe.state.metrics("corpus")
+    n = len(oracle.union_find_components(corpus["same_as"]))
+    assert (record["cc_path"], record["components"]) == ("driver", n)
+    assert 0 < record["cc_estimated_bytes"] <= canonicalize.DRIVER_MAX_BYTES
 
 
 def _triple_rows(pdf):
@@ -477,18 +517,18 @@ def _stage_jobs(sc, name, run):
 @pytest.mark.parametrize("n_chunks", [1, 4])
 def test_stage_job_counts(spark, parquet_corpus, tmp_path, n_chunks):
     """The audit rows come from the writes, and every KG table is read
-    with a known schema: CANONICALIZED runs at most 2 jobs (the driver
-    collect and the components write; the CC path is chosen from the
-    plan's size estimate, not a count), plus at n_chunks > 1 at most 2
-    for the check that no conversation spans two files (its
-    aggregation's map stage and the ``isEmpty``), a chunk's LINKED at
-    most 4 (the chain write), MATERIALIZED at most 2 (the nodes write),
-    VERIFIED at most 4 (one audit recompute per table). No sidecar
-    table is written."""
+    with a known schema: CANONICALIZED runs at most 1 job (the driver
+    collect of ``same_as``: the CC path is chosen from the plan's size
+    estimate, not a count, and the driver writes ``components`` itself),
+    plus at n_chunks > 1 at most 2 for the check that no conversation
+    spans two files (its aggregation's map stage and the ``isEmpty``), a
+    chunk's LINKED at most 4 (the chain write), MATERIALIZED at most 2
+    (the nodes write), VERIFIED at most 4 (one audit recompute per
+    table). No sidecar table is written."""
     out = str(tmp_path / "kg")
     pipe = KGPipeline(spark, out, n_chunks=n_chunks)
     jobs = _stage_jobs(spark.sparkContext, out, lambda: _run(pipe, parquet_corpus))
-    assert jobs["corpus:CANONICALIZED"] <= (2 if n_chunks == 1 else 4), jobs
+    assert jobs["corpus:CANONICALIZED"] <= (1 if n_chunks == 1 else 3), jobs
     linked = [jobs[f"{u}:LINKED"] for u in pipe.units()]
     assert max(linked) <= 4, jobs
     assert jobs["corpus:MATERIALIZED"] <= 2, jobs

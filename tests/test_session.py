@@ -56,3 +56,21 @@ def test_edges_footer_is_zstd_with_utc_micros_ts(
     assert (logical["Type"], logical["timeUnit"], logical["isAdjustedToUTC"]) == (
         "Timestamp", "microseconds", True
     )
+
+
+def test_components_footer_follows_the_session_codec(
+    spark, spark_corpus, tmp_path, legacy_parquet, parquet_footers
+):
+    """The driver writes ``components`` with pyarrow in the codec the
+    session gives every Spark sink: zstd under ``SQL_DEFAULTS``, snappy
+    under Spark's own defaults."""
+    from wikidata_pq_spark.operators import canonicalize
+
+    same_as = spark_corpus["same_as"]
+    paths = {codec: str(tmp_path / codec) for codec in ("ZSTD", "SNAPPY")}
+    assert canonicalize.write_components(same_as, paths["ZSTD"])["cc_path"] == "driver"
+    with legacy_parquet():
+        canonicalize.write_components(same_as, paths["SNAPPY"])
+    assert {c: parquet_footers(p, "ts")[0] for c, p in paths.items()} == {
+        "ZSTD": {"ZSTD"}, "SNAPPY": {"SNAPPY"}
+    }

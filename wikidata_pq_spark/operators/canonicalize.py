@@ -15,15 +15,26 @@ Each round is one job: its checkpoint also counts the changed labels.
 
 Canonical label = component-minimum id under numeric-aware ordering
 ("Q7" < "Q10"), matching the oracle's union-find.
+
+``KGPipeline`` stores the map with ``write_components``. On the driver
+path the driver reads the edges (from their files when ``same_as`` is a
+bare parquet scan, else by one collect) and writes its own map as one
+Parquet file, so no task carries the map; on the distributed path Spark
+writes the last round's frame. ``connected_components`` returns the map
+as a frame, for callers that go on computing with it.
 """
 
 from __future__ import annotations
 
+import contextlib
+import os
+import shutil
 from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tableio import observe_rows, parquet_files
 from .graph import iterate
 
 # the component map's schema, on both paths; KGPipeline reads its
@@ -48,8 +59,10 @@ def _order_key(col):
 # (string, string) row (an 8 B row header plus 20 B per string), so the
 # bound admits 349,525 edges from one; a parquet scan counts its
 # compressed file bytes, 8.7 B per edge of gen_same_as's files and 14.2 B
-# for random Q-id pairs, so 1.2-1.9M edges. The driver path ran 2M random
-# edges in 25.7 s wall within 1.1 GB peak driver RSS (4-core host).
+# for random Q-id pairs, so 1.2-1.9M edges. 2M random Q-id edges in one
+# zstd file estimate 15.7 MiB: write_components took 21.1 s wall there,
+# the Python driver peaking at 1.0 GB RSS and the JVM at 0.47 GB
+# (local[2], 4-core host).
 # gen_same_as(717_000), 235,175 edges, estimates 11.3 MB from pandas and
 # 2.0 MB from parquet: driver path, 3.4-4.5 s, where the distributed
 # rounds took 11.7-25 s. A source Catalyst cannot size (an RDD, a Python
@@ -85,17 +98,84 @@ def _estimated_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-def _driver_components(same_as: DataFrame) -> DataFrame:
-    """Exact union-find over the collected edges."""
-    import pandas as pd
+def write_components(same_as: DataFrame, path: str) -> dict:
+    """Writes the component map of ``same_as`` to ``path`` as Parquet,
+    replacing what is there, and returns which way the size switch went:
+    ``cc_path`` ("driver" or "distributed"), ``cc_estimated_bytes`` (the
+    plan's estimate that chose it) and ``components`` (rows written).
+
+    The driver path reads the edges (``_driver_map``: no Spark job for
+    a bare parquet scan, else one collect), runs union-find and writes
+    the map itself with pyarrow, as one file in the session's Parquet
+    codec. Handing the map back to Spark instead would put it inside
+    the tasks of a second job (a 6.5 MB task at 500k edges) and, on a
+    small graph, pay the JVM warm-up of code paths no other stage runs.
+    The distributed path writes its frame with Spark, and an
+    Observation on that write counts the rows."""
+    size = _estimated_bytes(same_as)
+    if size <= DRIVER_MAX_BYTES:
+        comp = _driver_map(same_as)
+        codec = same_as.sparkSession.conf.get("spark.sql.parquet.compression.codec")
+        _write_map(comp, path, codec)
+        return {"cc_path": "driver", "cc_estimated_bytes": size, "components": len(comp)}
+    comps, rows = observe_rows(_distributed_components(same_as))
+    comps.write.mode("overwrite").parquet(path)
+    return {"cc_path": "distributed", "cc_estimated_bytes": size, "components": rows.get["rows"]}
+
+
+def _driver_map(same_as: DataFrame) -> dict[str, str]:
+    """Exact union-find over the edges on the driver: entity ->
+    canonical. A bare parquet scan is read from its files with pyarrow,
+    which runs no Spark job; any other frame is collected (one job)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from ..oracle import union_find_components
 
-    comp = union_find_components(same_as.select("src_id", "dst_id").toPandas())
-    out = pd.DataFrame(
-        {"entity_id": list(comp.keys()), "canonical_id": list(comp.values())}
+    cols = ["src_id", "dst_id"]
+    files = parquet_files(same_as)
+    if files:
+        edges = pa.concat_tables([pq.read_table(f, columns=cols) for f in files]).to_pandas()
+    else:
+        edges = same_as.select(*cols).toPandas()
+    return union_find_components(edges)
+
+
+def _driver_components(same_as: DataFrame) -> DataFrame:
+    """The driver's map as a frame (its tasks carry the map)."""
+    return same_as.sparkSession.createDataFrame(_map_table(_driver_map(same_as)))
+
+
+def _map_table(comp: dict[str, str]):
+    """``comp`` as an Arrow table with the ``COMPONENTS_DDL`` columns."""
+    import pyarrow as pa
+
+    return pa.table(
+        {"entity_id": list(comp.keys()), "canonical_id": list(comp.values())},
+        schema=pa.schema([("entity_id", pa.string()), ("canonical_id", pa.string())]),
     )
-    return same_as.sparkSession.createDataFrame(out, schema=COMPONENTS_DDL)
+
+
+# Spark's codec names where pyarrow's differ
+_ARROW_CODECS = {"uncompressed": "none", "lz4_raw": "lz4"}
+
+
+def _write_map(comp: dict[str, str], path: str, codec: str) -> None:
+    """``comp`` as the one file of the Parquet table ``path``. The file
+    is written under a hidden name, which readers skip, and renamed into
+    place, so a crash leaves no partial file for a reader."""
+    import pyarrow.parquet as pq
+
+    table = _map_table(comp)
+    with contextlib.suppress(FileNotFoundError):
+        shutil.rmtree(path)
+    os.makedirs(path)
+    tmp = os.path.join(path, ".part-00000.parquet.tmp")
+    with open(tmp, "wb") as fh:
+        pq.write_table(table, fh, compression=_ARROW_CODECS.get(codec.lower(), codec))
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, os.path.join(path, "part-00000.parquet"))
 
 
 def _distributed_components(same_as: DataFrame) -> DataFrame:

@@ -8,9 +8,14 @@ contiguous slice of the input's sorted parquet files. Stage graph, per
 unit kind:
 
   corpus        CANONICALIZED: the same-as connected components,
-                computed once per store and written as ``components``;
-                at n_chunks > 1 it first checks that no conversation
-                spans two input files, and the record keeps
+                computed once per store and written as ``components``
+                (``canonicalize.write_components``: on the driver path
+                the driver reads the edges, from their files if
+                ``same_as`` is a bare parquet scan, else by one collect,
+                and writes the one file itself); at n_chunks > 1 it
+                first checks that no conversation spans two input
+                files. The record keeps the CC path taken, the size
+                estimate that chose it and the rows written, plus
                 ``n_chunks`` and a digest of the sorted file list, so
                 a resume reads the same slices
   chunk_NNNNN   LINKED: extract -> link to canonical ids -> distinct
@@ -127,9 +132,8 @@ class KGPipeline:
         if st.gate(CORPUS, Step.CANONICALIZED):
             if self.n_chunks > 1:
                 check_conversations_complete(transcripts)
-            comps = canonicalize.connected_components(same_as)
-            comps.write.mode("overwrite").parquet(components)
-            st.set(CORPUS, Step.CANONICALIZED, **layout)
+            cc = canonicalize.write_components(same_as, components)
+            st.set(CORPUS, Step.CANONICALIZED, **layout, **cc)
         elif recorded_layout(st.metrics(CORPUS)) != recorded_layout(layout):
             raise ValueError(
                 f"KGPipeline: {self.out_dir} was built from other chunks "
@@ -228,20 +232,12 @@ class KGPipeline:
 
 
 def input_files(transcripts: DataFrame) -> list[str]:
-    """The sorted files of ``transcripts``, listed from its file index
-    (no job). Reading them back equals ``transcripts`` only if it is a
-    bare parquet file scan: a filter, a projection or a frame made on
-    the driver on top of it would be lost, and partition directories
-    carry column values no file holds. Anything else is refused; the
-    check reads the analyzed plan, so it runs no job either."""
-    plan = transcripts._jdf.queryExecution().analyzed()
-    relation = plan.relation() if plan.getClass().getSimpleName() == "LogicalRelation" else None
-    if not (
-        relation is not None
-        and relation.getClass().getSimpleName() == "HadoopFsRelation"
-        and relation.fileFormat().getClass().getSimpleName() == "ParquetFileFormat"
-        and relation.partitionSchema().isEmpty()
-    ):
+    """The sorted files of ``transcripts``, which must be a bare parquet
+    file scan (``tableio.parquet_files``); anything else is refused.
+    Neither the listing nor the check runs a job."""
+    files = tableio.parquet_files(transcripts)
+    if files is None:
+        plan = transcripts._jdf.queryExecution().analyzed()
         raise ValueError(
             "KGPipeline(n_chunks > 1) reads each chunk from a slice of the "
             "input's files, so transcripts must be a bare parquet scan "
@@ -249,7 +245,7 @@ def input_files(transcripts: DataFrame) -> list[str]:
             f"on top); got a {plan.getClass().getSimpleName()} plan. Write "
             "the frame as parquet first, or use n_chunks=1."
         )
-    return sorted(transcripts.inputFiles())
+    return sorted(files)
 
 
 def files_digest(files: list[str]) -> str:

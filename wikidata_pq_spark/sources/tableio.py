@@ -50,6 +50,25 @@ def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> No
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
+def parquet_files(df: DataFrame) -> list[str] | None:
+    """The files of ``df`` if it is a bare parquet file scan
+    (``spark.read.parquet(path)``: no partition directories, nothing on
+    top), else None. Reading those files equals ``df`` only then: a
+    filter, a projection or a frame made on the driver on top of the
+    scan would be lost, and partition directories carry column values
+    no file holds. Reads the analyzed plan and the file index: no job."""
+    plan = df._jdf.queryExecution().analyzed()
+    relation = plan.relation() if plan.getClass().getSimpleName() == "LogicalRelation" else None
+    if (
+        relation is not None
+        and relation.getClass().getSimpleName() == "HadoopFsRelation"
+        and relation.fileFormat().getClass().getSimpleName() == "ParquetFileFormat"
+        and relation.partitionSchema().isEmpty()
+    ):
+        return df.inputFiles()
+    return None
+
+
 def read_recorded(spark: SparkSession, path: str, record: dict) -> DataFrame:
     """``path`` read with the ``schema`` its write recorded in a state
     ``record`` (JSON): building the scan launches no inference job."""
