@@ -29,9 +29,14 @@ Output layout under ``--out``:
                                and schema. ``corpus``: the corpus-wide
                                stage reached (CANONICALIZED,
                                MATERIALIZED, VERIFIED, COMPLETE),
-                               n_chunks and the sorted input file
-                               list, row totals, and the nodes
-                               write's audit row and schema
+                               n_chunks, ``files_sha256`` (the sha256
+                               of the sorted input file list; absent
+                               at 1 chunk), the CC path taken
+                               (``cc_path``), the size estimate that
+                               chose it (``cc_estimated_bytes``) and
+                               the ``components`` rows written, row
+                               totals, and the nodes write's audit row
+                               and schema
 """
 
 from __future__ import annotations

@@ -107,3 +107,44 @@ def test_extra_query_matches_oracle(spark, con_gate, name):
 def test_rows_only_queries_run(spark):
     for name in ["dedup_minhash_lsh", "mm_decode_features"]:
         assert contracts.QUERIES[name](spark, SF).count() >= 0
+
+
+def test_partition_stage_audit_keeps_rows_in_the_log(spark):
+    """The PARTITION-stage cell returns the audit rows its sink recorded
+    in the (claims x contract) unit's log, and writes no sidecar table
+    beside the sink."""
+    from wikidata_pq_spark.plans.checkpoint import StateStore
+
+    got = contracts.QUERIES["partition_stage_audit"](spark, SF).toPandas()
+    out = os.path.join(contracts.ORACLE_EXPORT_DIR, "partition_stage_sf0.001")
+    assert sorted(os.listdir(out)) == ["_log", "claims"]
+    recorded = StateStore(out + "/_log").metrics("claims/contract")["audit"]
+    cols = ["language", "rows", "min_id", "max_id"]
+    want = sorted(("contract", *(r[c] for c in cols)) for r in recorded)
+    assert sorted(map(tuple, got[["source", *cols]].values)) == want
+
+
+def test_oracle_export_dir_is_per_checkout(tmp_path):
+    """Two checkouts export their oracle parquets to two directories, so
+    checking both at once overwrites neither; one checkout always uses
+    the same one."""
+    import shutil
+    import subprocess
+    import sys
+
+    pkg = os.path.dirname(contracts.__file__)
+    shutil.copytree(pkg, tmp_path / "wikidata_pq_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+
+    def export_dir(root):
+        code = "from wikidata_pq_spark import contracts; print(contracts.ORACLE_EXPORT_DIR)"
+        proc = subprocess.run(
+            [sys.executable, "-c", code], cwd=root, capture_output=True, text=True,
+            env={**os.environ, "PYTHONPATH": str(root)}, timeout=300,
+        )
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        return proc.stdout.strip().splitlines()[-1]
+
+    here = export_dir(os.path.dirname(pkg))
+    assert here == contracts.ORACLE_EXPORT_DIR
+    assert export_dir(tmp_path) != here

@@ -42,8 +42,41 @@ def test_curation_pipeline_end_to_end(spark, docs, tmp_path):
     corpus = pipe.corpus().toPandas()
     assert set(corpus["split"]) <= {"train", "val", "test"}
     assert (corpus["n_chunks"] >= 1).all()
-    # split-partitioned sink + audit sidecar on disk
+    # split-partitioned sink; its audit rows are in the finalize
+    # record, one per split, and no sidecar table is written
     assert any(d.startswith("split=") for d in os.listdir(out + "/corpus"))
+    assert not os.path.exists(out + "/corpus_audit")
+    audit = pipe.state.metrics("finalize")["audit"]
+    by_split = corpus.groupby("split")["doc_id"]
+    assert sorted((r["split"], r["rows"], r["min_id"], r["max_id"]) for r in audit) == sorted(
+        zip(by_split.size().index, by_split.size(), by_split.min(), by_split.max())
+    )
+    assert sum(r["rows"] for r in audit) == metrics["final"]
+
+
+def test_dropped_corpus_row_fails_finalize(spark, docs, tmp_path, monkeypatch):
+    """A writer that loses one row of ``corpus`` must fail ``finalize``:
+    the recorded audit rows are those of the frame the write was given,
+    not a re-read of what reached the disk."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from wikidata_pq_spark.curation_pipeline import CurationPipeline
+    from wikidata_pq_spark.plans.checkpoint import Step
+    from wikidata_pq_spark.sources import tableio
+
+    write = tableio.write_partitioned
+
+    def drop_one_row(df, path, partition_cols):
+        first = F.row_number().over(Window.orderBy("doc_id"))
+        write(df.withColumn("_n", first).filter("_n > 1").drop("_n"), path, partition_cols)
+
+    monkeypatch.setattr(tableio, "write_partitioned", drop_one_row)
+    pipe = CurationPipeline(spark, str(tmp_path / "cur"), max_len=64)
+    with pytest.raises(RuntimeError, match="failed post-check"):
+        pipe.run(docs)
+    assert pipe.state.get("pack") == Step.COMPLETE
+    assert pipe.state.get("finalize") == Step.INIT
 
 
 def test_curation_pipeline_resume_skips_and_recomputes(spark, docs, tmp_path):
@@ -101,6 +134,26 @@ def test_curation_reads_build_without_jobs(spark, docs, tmp_path):
     corpus, jobs = _jobs_in_group(sc, "curation_corpus", pipe.corpus)
     assert jobs == 0
     assert set(corpus.columns) >= {"doc_id", "lang", "split", "n_chunks"}
+
+
+@pytest.mark.classic_session_only
+def test_curation_finalize_job_count(spark, docs, tmp_path):
+    """``finalize`` runs at most 7 jobs: 5 for the write and the collect
+    of its per-split audit rows, 2 for the post-check's aggregation over
+    the sink and its collect. The recorded rows come from the record,
+    so no second table is read back (8 jobs with a sidecar table)."""
+    from wikidata_pq_spark.curation_pipeline import CurationPipeline
+    from wikidata_pq_spark.plans import checkpoint
+
+    out = str(tmp_path / "cur")
+    first = CurationPipeline(spark, out, max_len=64).run(docs)
+    # rewind finalize only: the earlier stages stay complete
+    version = checkpoint.head(out + "/_log/finalize")[0]
+    checkpoint.commit(out + "/_log/finalize", version + 1, {"step": 0})
+    pipe = CurationPipeline(spark, out, max_len=64)
+    again, jobs = _jobs_in_group(spark.sparkContext, "curation_finalize", lambda: pipe.run(docs))
+    assert again == first
+    assert jobs <= 7
 
 
 @pytest.mark.skipif(shutil.which("spark-submit") is None, reason="spark-submit missing")

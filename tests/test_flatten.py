@@ -217,10 +217,12 @@ def test_id_preservation_audit(sdf, entity_rows):
 
 def test_partition_entity_tables(spark, sdf, entity_rows, tmp_path):
     """The reference's PARTITION stage end-to-end: five Hive-partitioned
-    sinks + per-(source x table) sidecars, all post-checked."""
+    sinks, each with its per-partition audit rows in the (table x
+    source) unit's log record, all post-checked."""
     import os
 
     from wikidata_pq_spark.pipeline import PARTITION_KEYS, partition_entity_tables
+    from wikidata_pq_spark.plans.checkpoint import StateStore, Step
 
     out = str(tmp_path / "results")
     ok = partition_entity_tables(sdf, out, source_name="chunk_0")
@@ -228,10 +230,18 @@ def test_partition_entity_tables(spark, sdf, entity_rows, tmp_path):
     # hive layout per table key (reference: results/<tbl>/language=X/)
     assert any(d.startswith("language=") for d in os.listdir(out + "/labels"))
     assert any(d.startswith("site=") for d in os.listdir(out + "/links"))
-    # sidecar named for its source under audit/<table>/<source>
-    side = spark.read.parquet(out + "/audit/claims/chunk_0").toPandas()
-    assert set(side["source"]) == {"chunk_0"}
-    assert {"language", "rows", "min_id", "max_id"} <= set(side.columns)
+    # the audit rows live in the log, one unit per table x source, and
+    # no sidecar table is written
+    assert sorted(os.listdir(out)) == sorted([*PARTITION_KEYS, "_log"])
+    st = StateStore(out + "/_log")
+    for table, key in PARTITION_KEYS.items():
+        assert os.listdir(f"{out}/_log/{table}") == ["chunk_0"]
+        assert st.get(f"{table}/chunk_0") == Step.MATERIALIZED
+        record = st.metrics(f"{table}/chunk_0")
+        assert record["source_name"] == "chunk_0"
+        assert {key, "rows", "min_id", "max_id"} == set(record["audit"][0])
+    claims = st.metrics("claims/chunk_0")
+    assert sum(r["rows"] for r in claims["audit"]) == spark.read.parquet(out + "/claims").count()
     # re-read equals the flatten row count (ID-preservation style audit)
     n = spark.read.parquet(out + "/labels").count()
     assert n == flatten.flatten_labels(sdf, "labels").count()

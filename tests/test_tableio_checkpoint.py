@@ -1,9 +1,8 @@
-"""Table IO (partitioned writes + audit sidecars) and checkpoint store."""
+"""Table IO (partitioned writes + recorded audit rows) and checkpoint store."""
 
 from __future__ import annotations
 
 import pathlib
-import shutil
 import sys
 import threading
 
@@ -20,72 +19,77 @@ def _df(spark, n=100):
     return spark.createDataFrame(pdf)
 
 
-def test_write_with_audit_and_post_check(spark, tmp_path):
-    path = str(tmp_path / "t")
-    tableio.write_with_audit(_df(spark), path, ["part"], id_col="id")
-    assert tableio.post_check(_df(spark), path, ["part"], "id")
-    audit = spark.read.parquet(path + "_audit").toPandas()
+def _sink(tmp_path, df, partition_cols=("part",), name="t"):
+    """Write ``df`` as the sink ``name`` and commit the record the
+    pipelines keep for it: the written schema and the audit rows of the
+    frame the write was given. The sink's path and the committed record."""
+    path = str(tmp_path / name)
+    tableio.write_partitioned(df, path, list(partition_cols))
+    audit = tableio.audit_frame(df, list(partition_cols), "id").collect()
+    st = StateStore(str(tmp_path / "_log"))
+    st.set(
+        name, Step.MATERIALIZED, schema=df.schema.jsonValue(),
+        audit=[r.asDict() for r in audit],
+    )
+    return path, st.metrics(name)
+
+
+def test_record_audit_and_post_check(spark, tmp_path):
+    path, record = _sink(tmp_path, _df(spark))
+    assert tableio.check_recorded(spark, path, record, ["part"], "id")
+    audit = pd.DataFrame(record["audit"])
     assert len(audit) == 4
     assert audit["rows"].sum() == 100
     assert audit["min_id"].min() == 0 and audit["max_id"].max() == 99
-
-
-def _rewrite_sidecar(spark, path, edit):
-    """Replace ``path``'s sidecar with ``edit(sidecar)``."""
-    edit(spark.read.parquet(path + "_audit")).write.parquet(path + "_audit2")
-    shutil.rmtree(path + "_audit")
-    shutil.move(path + "_audit2", path + "_audit")
+    # the rows live in the record: no sidecar table beside the sink
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["_log", "t"]
 
 
 def test_post_check_detects_tamper(spark, tmp_path):
-    path = str(tmp_path / "t")
-    tableio.write_with_audit(_df(spark), path, ["part"], id_col="id")
-    # tamper: rewrite sidecar with a wrong row count
-    _rewrite_sidecar(spark, path, lambda a: a.withColumn("rows", F.col("rows") + 1))
-    assert not tableio.post_check(_df(spark), path, ["part"], "id")
+    path, record = _sink(tmp_path, _df(spark))
+    # tamper: a recorded row with a wrong row count
+    record["audit"][0]["rows"] += 1
+    assert not tableio.check_recorded(spark, path, record, ["part"], "id")
 
 
 def test_post_check_is_multiset_exact(spark, tmp_path):
-    """A duplicated or dropped sidecar row, or a lost part file, fails."""
+    """A duplicated or dropped recorded row, or a lost part file, fails."""
     edits = {
-        "duplicated": lambda a: a.union(a.filter(F.col("part") == 0)),
-        "dropped": lambda a: a.filter(F.col("part") != 0),
+        "duplicated": lambda rows: rows + rows[:1],
+        "dropped": lambda rows: rows[1:],
     }
     for name, edit in edits.items():
-        path = str(tmp_path / name)
-        tableio.write_with_audit(_df(spark), path, ["part"], id_col="id")
-        _rewrite_sidecar(spark, path, edit)
-        assert not tableio.post_check(_df(spark), path, ["part"], "id"), name
+        path, record = _sink(tmp_path, _df(spark), name=name)
+        record["audit"] = edit(record["audit"])
+        assert not tableio.check_recorded(spark, path, record, ["part"], "id"), name
 
-    path = str(tmp_path / "lost_file")
-    tableio.write_with_audit(_df(spark), path, ["part"], id_col="id")
+    path, record = _sink(tmp_path, _df(spark), name="lost_file")
     next(pathlib.Path(path).rglob("*.parquet")).unlink()
-    assert not tableio.post_check(_df(spark), path, ["part"], "id")
+    assert not tableio.check_recorded(spark, path, record, ["part"], "id")
 
 
 @pytest.mark.classic_session_only
 def test_post_check_job_count(spark, tmp_path):
-    """On a 4-partition sink the post-check runs at most 3 jobs: the
-    collects of the two small audit frames. Both reads take the written
-    frame's schema, so neither runs a schema-inference job, and there
-    are no set differences."""
-    path = str(tmp_path / "t")
-    df = _df(spark)
-    tableio.write_with_audit(df, path, ["part"], id_col="id", source=("source", "u"))
+    """On a 4-partition sink the post-check runs at most 2 jobs: the
+    aggregation over the sink and its collect. The read takes the
+    recorded schema, so it runs no schema-inference job, the recorded
+    rows are read from the log, not from a table, and there are no set
+    differences."""
+    path, record = _sink(tmp_path, _df(spark))
     sc = spark.sparkContext
     sc.setJobGroup("post_check_jobs", "post_check_jobs")
     try:
-        assert tableio.post_check(df, path, ["part"], "id", source=("source", "u"))
+        assert tableio.check_recorded(spark, path, record, ["part"], "id")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     # the status tracker is fed by the asynchronous listener bus: drain
     # it so every job that ran is counted
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup("post_check_jobs")) <= 3
+    assert len(sc.statusTracker().getJobIdsForGroup("post_check_jobs")) <= 2
 
 
 def test_post_check_detects_dropped_row(spark, tmp_path, monkeypatch):
-    """The sidecar audits the frame the write was given, not a re-read
+    """The record audits the frame the write was given, not a re-read
     of the sink: a writer that loses one row of a 4-partition frame
     fails the post-check."""
     write = tableio.write_partitioned
@@ -94,14 +98,16 @@ def test_post_check_detects_dropped_row(spark, tmp_path, monkeypatch):
         write(df.filter(F.col("id") != 0), path, partition_cols)
 
     monkeypatch.setattr(tableio, "write_partitioned", drop_one_row)
-    path = str(tmp_path / "t")
-    tableio.write_with_audit(_df(spark), path, ["part"], id_col="id")
+    path, record = _sink(tmp_path, _df(spark))
     assert spark.read.parquet(path).count() == 99
-    assert not tableio.post_check(_df(spark), path, ["part"], "id")
+    assert not tableio.check_recorded(spark, path, record, ["part"], "id")
 
 
 def test_post_check_missing_audit(spark, tmp_path):
-    assert not tableio.post_check(_df(spark), str(tmp_path / "nope"), ["part"], "id")
+    """A sink that is not on disk fails its recorded audit."""
+    _, record = _sink(tmp_path, _df(spark))
+    nope = str(tmp_path / "nope")
+    assert not tableio.check_recorded(spark, nope, record, ["part"], "id")
 
 
 def test_state_store_roundtrip(tmp_path):
@@ -165,16 +171,15 @@ def test_state_store_concurrent_sets_lose_no_metric(tmp_path):
 @pytest.mark.parametrize(
     "partition_cols", [[], ["part"]], ids=["unpartitioned", "part"]
 )
-def test_write_with_audit_empty_frame(spark, tmp_path, partition_cols):
-    """An all-empty write must produce an empty sidecar and a passing
+def test_post_check_empty_frame(spark, tmp_path, partition_cols):
+    """An all-empty write must record no audit row and pass its
     post-check. Partitioned, it leaves no part files (bare _SUCCESS),
     and the re-read must not crash with UNABLE_TO_INFER_SCHEMA;
     unpartitioned, the global aggregate's zero-row group must not
-    reach the sidecar. Both are the shape of an empty chunk, which
+    reach the record. Both are the shape of an empty chunk, which
     ``KGPipeline`` gives when ``n_chunks`` exceeds the input's file
     count."""
     df = _df(spark, 10).filter(F.lit(False))
-    path = str(tmp_path / "empty")
-    tableio.write_with_audit(df, path, partition_cols, id_col="id")
-    assert spark.read.parquet(path + "_audit").count() == 0
-    assert tableio.post_check(df, path, partition_cols, "id") is True
+    path, record = _sink(tmp_path, df, partition_cols, name="empty")
+    assert record["audit"] == []
+    assert tableio.check_recorded(spark, path, record, partition_cols, "id") is True

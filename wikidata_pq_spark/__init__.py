@@ -15,8 +15,9 @@ transcript -> (subj, pred, obj) triple factory:
   (driver union-find under a size threshold, distributed min-label
   propagation + pointer jumping above; size-gated broadcast rewrite),
 - graph materialization as per-chunk edges and one nodes table, each
-  with (rows, min_id, max_id) lineage sidecars,
-- resumable per-partition checkpoints.
+  write's (rows, min_id, max_id) audit row kept in its unit's commit-log
+  record,
+- resumable per-chunk checkpoints.
 
 See SURVEY.md for the reference operator inventory this covers.
 """

@@ -14,6 +14,7 @@ functions.vectors / the list_reduce oracles), so values hash-equal.
 
 from __future__ import annotations
 
+import hashlib
 import os
 from functools import lru_cache
 
@@ -24,6 +25,7 @@ from . import datagen
 from . import oracle as kg_oracle
 from .functions import text as TX
 from .operators import canonicalize, dedup, extract, linking, multimodal, similarity, textstats
+from .sources import tableio
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -60,10 +62,14 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
 # stage consumes a probabilistic candidate set export a parquet here,
 # and the matching ORACLE_SQL just re-reads it (the VERDICT-sanctioned
 # pattern for non-ANSI-expressible pipelines). Exports happen only at
-# the gate sf so bench runs at other sfs never pay or clobber them.
+# the gate sf so bench runs at other sfs never pay or clobber them. The
+# directory is named for this checkout's package path, so two checkouts
+# checking their contracts at once never overwrite each other's exports.
 # --------------------------------------------------------------------------
 
-ORACLE_EXPORT_DIR = "/tmp/spark_graft_oracle"
+ORACLE_EXPORT_DIR = "/tmp/spark_graft_oracle_" + hashlib.sha256(
+    os.path.dirname(os.path.abspath(__file__)).encode()
+).hexdigest()[:16]
 _GATE_SF = "sf0.01"
 
 
@@ -146,13 +152,9 @@ def q_event_histogram(spark, sf):
 
 
 def q_partition_audit(spark, sf):
-    """A5/S8: per-partition (rows, min_id, max_id) audit sidecar."""
-    d = load(spark, sf, "documents")
-    return d.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.min("doc_id").alias("min_id"),
-        F.max("doc_id").alias("max_id"),
-    )
+    """A5/S8: per-partition (rows, min_id, max_id) audit rows, the one
+    audit-row definition the package's sinks record."""
+    return tableio.audit_frame(load(spark, sf, "documents"), ["lang"], "doc_id")
 
 
 def q_running_revenue(spark, sf):
@@ -1002,38 +1004,37 @@ def q_graph_khop(spark, sf):
 
 def q_partition_stage_audit(spark, sf):
     """The reference's PARTITION stage as a value check: flatten the
-    claims table, sink it Hive-partitioned by language with the
-    per-(source x table) audit sidecar, post-check the sink against
-    the sidecar, and return the sidecar. Oracle: the per-language
-    (rows, min_id, max_id) recomputed over the INDEPENDENT golden
-    flattener's parquet.
+    claims table, sink it Hive-partitioned by language with its
+    per-language audit rows committed to the (claims x contract) unit's
+    log, post-check the sink against them (``pipeline.partition_table``),
+    and return the recorded rows stamped ``source='contract'``. Oracle:
+    the per-language (rows, min_id, max_id) recomputed over the
+    INDEPENDENT golden flattener's parquet.
 
     Claims-only here by design: claims is the deepest flatten (all
     four branches) so it carries the semantic weight; the full
     five-table partition + post-check stays in
     tests/test_flatten.py::test_partition_entity_tables. The sink dir
-    is one fixed per-session temp dir, overwritten on re-run -- no
+    is one fixed per-sf dir, overwritten on re-run -- no
     per-invocation dir leak."""
-    from .sources import tableio
+    from .pipeline import partition_table
+    from .plans.checkpoint import StateStore
 
     _export_claims_golden(sf)
     out = os.path.join(
         ORACLE_EXPORT_DIR, f"partition_stage_{_sf_name(sf)}"
     )
     claims = _flat_claims(spark, sf)
-    path = os.path.join(out, "claims")
-    audit = os.path.join(out, "audit", "claims", "contract")
-    tableio.write_with_audit(
-        claims, path, ["language"], id_col="id",
-        source=("source", "contract"), audit_path=audit,
-    )
-    ok = tableio.post_check(
-        claims, path, ["language"], "id",
-        source=("source", "contract"), audit_path=audit,
-    )
-    if not ok:
+    if not partition_table(claims, out, "claims", "contract"):
         raise RuntimeError("partition-stage post-check failed: claims")
-    return spark.read.parquet(audit)
+    recorded = StateStore(os.path.join(out, "_log")).metrics(
+        os.path.join("claims", "contract")
+    )["audit"]
+    # typed like the audit frame the rows were collected from
+    audit = spark.createDataFrame(
+        recorded, tableio.audit_frame(claims, ["language"], "id").schema
+    )
+    return audit.select(F.lit("contract").alias("source"), "*")
 
 
 def q_connected_components(spark, sf):

@@ -13,8 +13,9 @@ completed stages skip):
 3. pack      -- concat-and-chunk sequence packing metadata over the
                 CURATED survivors only (per-shard windows, no global
                 sort).
-4. finalize  -- split-partitioned sink with per-partition audit
-                sidecars + post-check (the VERIFIED gate).
+4. finalize  -- split-partitioned sink; its per-split audit rows
+                go into the stage's record and the sink is checked
+                against them (the VERIFIED gate).
 
 Every stage writes parquet under ``out_dir`` and advances its state
 unit to COMPLETE with row-count metrics and the written schema, which
@@ -90,24 +91,22 @@ class CurationPipeline:
 
         if st.gate("finalize", Step.COMPLETE):
             packed = self._read("packed", "pack")
-            final, n = tableio.observe_rows(
-                curated.join(packed, ["doc_id", "lang"]).select(
-                    "doc_id", "lang", "split", "quality", "rep_ratio",
-                    "n_tokens", "start_off", "first_chunk", "last_chunk",
-                    "n_chunks",
-                )
+            final = curated.join(packed, ["doc_id", "lang"]).select(
+                "doc_id", "lang", "split", "quality", "rep_ratio",
+                "n_tokens", "start_off", "first_chunk", "last_chunk",
+                "n_chunks",
             )
-            tableio.write_with_audit(
-                final, self._p("corpus"), ["split"], id_col="doc_id"
-            )
-            ok = tableio.post_check(
-                final, self._p("corpus"), ["split"], id_col="doc_id"
-            )
-            if not ok:
+            tableio.write_partitioned(final, self._p("corpus"), ["split"])
+            # per-split rows of what the sink was given, kept in the record
+            audit = tableio.audit_frame(final, ["split"], "doc_id").collect()
+            record = {"schema": final.schema.jsonValue(), "audit": [r.asDict() for r in audit]}
+            if not tableio.check_recorded(
+                self.spark, self._p("corpus"), record, ["split"], "doc_id"
+            ):
                 raise RuntimeError("curated-corpus sink failed post-check")
             st.set(
-                "finalize", Step.COMPLETE, rows=n.get["rows"], verified=True,
-                schema=final.schema.jsonValue(),
+                "finalize", Step.COMPLETE, rows=sum(r["rows"] for r in audit),
+                verified=True, **record,
             )
 
         return {

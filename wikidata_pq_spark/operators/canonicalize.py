@@ -135,7 +135,10 @@ def _driver_map(same_as: DataFrame) -> dict[str, str]:
     cols = ["src_id", "dst_id"]
     files = parquet_files(same_as)
     if files:
-        edges = pa.concat_tables([pq.read_table(f, columns=cols) for f in files]).to_pandas()
+        # nothing else holds the table: free each column's Arrow buffers
+        # once it is converted, before union-find starts
+        table = pa.concat_tables([pq.read_table(f, columns=cols) for f in files])
+        edges = table.to_pandas(self_destruct=True, split_blocks=True)
     else:
         edges = same_as.select(*cols).toPandas()
     return union_find_components(edges)

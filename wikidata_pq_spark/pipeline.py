@@ -301,14 +301,8 @@ def partition_entity_tables(
 ) -> dict[str, bool]:
     """The reference's PARTITION stage (reference: main.py:111-130 ->
     partitioning/core.py:38-58): flatten one entity frame into its five
-    tables and sink each as Hive-partitioned parquet with a
-    per-(source x table) audit sidecar, then post-check every sink
-    against its sidecar. Returns {table: post_check_ok}.
-
-    Layout mirrors the reference:
-      <out>/<table>/<key>=X/...parquet
-      <out>/audit/<table>/<source_name>   (sidecar, keyed source x key)
-    """
+    tables and sink each with ``partition_table``. Returns
+    {table: post_check_ok}."""
     from .operators import flatten
 
     if validate:
@@ -316,17 +310,30 @@ def partition_entity_tables(
         # BEFORE any flattening (reference: process.py:336-347)
         flatten.validate_entity_schemas(entity_df)
     tables = flatten.flatten_all(entity_df)
-    results: dict[str, bool] = {}
-    for name, tdf in tables.items():
-        key = PARTITION_KEYS[name]
-        path = os.path.join(out_dir, name)
-        audit = os.path.join(out_dir, "audit", name, source_name)
-        tableio.write_with_audit(
-            tdf, path, [key], id_col="id",
-            source=("source", source_name), audit_path=audit,
-        )
-        results[name] = tableio.post_check(
-            tdf, path, [key], "id",
-            source=("source", source_name), audit_path=audit,
-        )
-    return results
+    return {
+        name: partition_table(tdf, out_dir, name, source_name)
+        for name, tdf in tables.items()
+    }
+
+
+def partition_table(df: DataFrame, out_dir: str, name: str, source_name: str) -> bool:
+    """Sink one flattened table as Hive-partitioned parquet on its
+    ``PARTITION_KEYS`` key, commit its per-partition audit rows (of the
+    frame it was given), ``source_name`` and schema to the (table x
+    source) unit's log, and post-check the sink against them. The log
+    records but does not gate: a re-run writes again.
+
+    Layout mirrors the reference's results and audit trees:
+      <out>/<table>/<key>=X/...parquet
+      <out>/_log/<table>/<source_name>/<version>.json
+    """
+    key = PARTITION_KEYS[name]
+    path = os.path.join(out_dir, name)
+    tableio.write_partitioned(df, path, [key])
+    st = StateStore(os.path.join(out_dir, "_log"))
+    unit = os.path.join(name, source_name)
+    st.set(
+        unit, Step.MATERIALIZED, source_name=source_name, schema=df.schema.jsonValue(),
+        audit=[r.asDict() for r in tableio.audit_frame(df, [key], "id").collect()],
+    )
+    return tableio.check_recorded(df.sparkSession, path, st.metrics(unit), [key], "id")

@@ -109,10 +109,7 @@ def get_spark(
         # 3.3s -> 2.8s at sf1.0/local[32]. AQE skew-join splitting
         # (above) applies to shuffled-hash joins as well.
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_MAX", "64m"),
-        )
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config(map=SQL_DEFAULTS)
         # Cap Arrow batches so a hot conversation group cannot OOM a
         # Python worker (the reference's max_builders=1000 batching

@@ -1,15 +1,18 @@
 """Table IO seam: audited, partitioned parquet writes and their post-check.
 
 The storage layer behind the pipeline (SURVEY.md §7.3d): query code only
-ever sees DataFrames; every table it writes is Hive-style parquet.
-A sink's audit row is (rows, min_id, max_id) (``audit_aggs``), the
-reference's finish-callback sidecar row (reference: core.py:25-35). An
-unpartitioned sink observes it on its own write (``observe_audit``) and
-the caller keeps it. A partitioned sink needs a row per partition, which
-an ``Observation`` cannot group: ``write_with_audit`` writes Hive-style
-parquet, the reference's layout (core.py:38-58 PartitionByKey ->
-results/{table}/language=X/), plus a sidecar of per-partition rows
-aggregated from the frame it was given (a second pass over its plan).
+ever sees DataFrames; every table it writes is Hive-style parquet, the
+reference's layout (core.py:38-58 PartitionByKey ->
+results/{table}/language=X/). A sink's audit row is (rows, min_id,
+max_id) (``audit_aggs``), the reference's finish-callback sidecar row
+(reference: core.py:25-35), and the caller keeps it in the sink's
+commit-log record, the per-snapshot metrics rows of the paper's data
+model, not in a second table. An unpartitioned sink observes it on its
+own write (``observe_audit``). A partitioned sink needs a row per
+partition, which an ``Observation`` cannot group: it collects
+``audit_frame`` of the frame it was given (a second pass over its
+plan). ``check_recorded`` recomputes the rows from the sink and
+compares them with the record.
 """
 
 from __future__ import annotations
@@ -85,39 +88,6 @@ def audit_frame(df: DataFrame, partition_cols: list[str], id_col: str) -> DataFr
     )
 
 
-def _stamped_audit(df, partition_cols, id_col, source) -> DataFrame:
-    """``audit_frame`` of ``df`` with the ``source`` unit stamped on
-    every row."""
-    audit = audit_frame(df, partition_cols, id_col)
-    if source is None:
-        return audit
-    col, value = source
-    return audit.select(F.lit(value).alias(col), "*")
-
-
-def write_with_audit(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    id_col: str,
-    source: tuple[str, object] | None = None,
-    audit_path: str | None = None,
-) -> None:
-    """Partitioned write (overwriting ``path``) + sidecar audit parquet.
-
-    ``source`` = (column_name, value) stamps the processing unit on
-    every sidecar row, the key of the reference's per source file x
-    table sidecars (reference: partitioning/core.py:14-35).
-    ``audit_path`` overrides the default ``<path>_audit`` (the
-    reference's audit/{table}/{source_name} tree).
-    """
-    write_partitioned(df, path, partition_cols)
-    # the sidecar audits what the sink was given, not a re-read of it
-    _stamped_audit(df, partition_cols, id_col, source).write.mode(
-        "overwrite"
-    ).parquet(audit_path or path + "_audit")
-
-
 def write_bucketed_table(
     df: DataFrame,
     name: str,
@@ -142,36 +112,22 @@ def write_bucketed_table(
 def matches_audit(audit: DataFrame, expected: list[dict]) -> bool:
     """``audit``, rows recomputed from a sink, equals ``expected`` (dicts
     by column; zero-row ones dropped, as ``audit_frame`` drops them) as
-    multisets. Both hold at most one row per (source x partition), so
+    multisets. Both hold at most one row per partition (or chunk), so
     they compare on the driver, with no distributed set difference."""
     want = Counter(tuple(r[c] for c in audit.columns) for r in expected if r["rows"])
     return Counter(map(tuple, audit.collect())) == want
 
 
-def post_check(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    id_col: str,
-    source: tuple[str, object] | None = None,
-    audit_path: str | None = None,
+def check_recorded(
+    spark: SparkSession, path: str, record: dict, partition_cols: list[str], id_col: str
 ) -> bool:
-    """Re-read what was written and compare against the sidecar.
-
-    The reference's post-check step (reference: DESIGN.md:95-112,
-    docs/journal/2025-01-16-03-implement-postcheck-DRAFT.md:24-33):
-    recompute (rows, min_id, max_id) from the sink and verify it matches
-    the ``write_with_audit`` sidecar exactly (``matches_audit``).
-    ``df`` is the frame that was written to ``path``; its schema types
-    both reads (the sidecar's derived from it), so neither infers a
-    schema, and an empty sink reads as an empty frame.
-    """
-    apath = audit_path or path + "_audit"
-    if not (os.path.exists(path) and os.path.exists(apath)):
+    """The reference's post-check (reference: DESIGN.md:95-112): the sink
+    at ``path``, read with its recorded ``schema``, audits
+    (``audit_frame``) to exactly the ``audit`` rows its ``record``
+    keeps (``matches_audit``). A missing sink fails; an empty one reads
+    as an empty frame (an all-empty ``partitionBy`` write leaves no part
+    file, and inferring a schema from the bare dir raises)."""
+    if not os.path.exists(path):
         return False
-    # the writer's schema: an all-empty partitionBy write leaves no part
-    # file, and inferring a schema from the bare dir raises
-    data = df.sparkSession.read.schema(df.schema).parquet(path)
-    written = _stamped_audit(data, partition_cols, id_col, source)
-    sidecar = df.sparkSession.read.schema(written.schema).parquet(apath)
-    return matches_audit(written, [r.asDict() for r in sidecar.collect()])
+    sink = read_recorded(spark, path, record)
+    return matches_audit(audit_frame(sink, partition_cols, id_col), record["audit"])
