@@ -227,9 +227,11 @@ def test_partition_entity_tables(spark, sdf, entity_rows, tmp_path):
     out = str(tmp_path / "results")
     ok = partition_entity_tables(sdf, out, source_name="chunk_0")
     assert ok == {t: True for t in PARTITION_KEYS}
-    # hive layout per table key (reference: results/<tbl>/language=X/)
-    assert any(d.startswith("language=") for d in os.listdir(out + "/labels"))
-    assert any(d.startswith("site=") for d in os.listdir(out + "/links"))
+    # hive layout per source and table key (reference:
+    # results/<tbl>/language=X/), one source level per table
+    assert os.listdir(out + "/labels") == ["source=chunk_0"]
+    assert any(d.startswith("language=") for d in os.listdir(out + "/labels/source=chunk_0"))
+    assert any(d.startswith("site=") for d in os.listdir(out + "/links/source=chunk_0"))
     # the audit rows live in the log, one unit per table x source, and
     # no sidecar table is written
     assert sorted(os.listdir(out)) == sorted([*PARTITION_KEYS, "_log"])
@@ -248,3 +250,39 @@ def test_partition_entity_tables(spark, sdf, entity_rows, tmp_path):
     # claims keep qualifiers/references through the partitioned sink
     claims = spark.read.parquet(out + "/claims")
     assert "qualifiers" in claims.columns and "references" in claims.columns
+
+
+def test_partition_sources_keep_their_own_rows(spark, entity_rows, tmp_path):
+    """Two sources partitioned into one out_dir: each writes its own
+    ``source=<name>`` level, so both pass their own record's check, and
+    a re-run of one leaves the other's rows in place."""
+    import os
+
+    from wikidata_pq_spark.pipeline import PARTITION_KEYS, partition_entity_tables
+    from wikidata_pq_spark.plans.checkpoint import StateStore
+    from wikidata_pq_spark.sources import tableio
+
+    out = str(tmp_path / "results")
+    halves = {
+        "src_a": spark.createDataFrame(entity_rows.iloc[:20]),
+        "src_b": spark.createDataFrame(entity_rows.iloc[20:]),
+    }
+    st = StateStore(out + "/_log")
+
+    def claims_of(source):
+        rows = spark.read.parquet(f"{out}/claims/source={source}").select("id", "property")
+        return sorted(map(tuple, rows.collect()))
+
+    for source, frame in halves.items():
+        assert all(partition_entity_tables(frame, out, source).values())
+    claims_b = claims_of("src_b")
+    assert all(partition_entity_tables(halves["src_a"], out, "src_a").values())
+    for table, key in PARTITION_KEYS.items():
+        assert sorted(os.listdir(f"{out}/{table}")) == ["source=src_a", "source=src_b"]
+        for source in halves:
+            path = f"{out}/{table}/source={source}"
+            record = st.metrics(f"{table}/{source}")
+            assert tableio.check_recorded(spark, path, record, [key], "id")
+    assert claims_of("src_b") == claims_b
+    recorded = [r["rows"] for s in halves for r in st.metrics(f"claims/{s}")["audit"]]
+    assert spark.read.parquet(f"{out}/claims").count() == sum(recorded)

@@ -74,3 +74,39 @@ def test_components_footer_follows_the_session_codec(
     assert {c: parquet_footers(p, "ts")[0] for c, p in paths.items()} == {
         "ZSTD": {"ZSTD"}, "SNAPPY": {"SNAPPY"}
     }
+
+
+def test_page_size_follows_the_heap_and_fits_the_page_table(monkeypatch):
+    """Tungsten pages are 4 MB (less the 16-byte long[] header) at a 7g
+    heap, and at every heap ``get_spark`` picks from 1g to 24g, on any
+    core count, and at a 256g ``$SPARK_DRIVER_MEM``, a task that fills
+    the whole execution pool, (heap - 300 MB) x 0.6, needs at most the
+    8192 pages Spark's per-task page table holds."""
+    assert session._default_page_size("7g") == 4 * 2**20 - 16
+    heaps = set()
+    for cpus in ("1", "64"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+        for gib in range(2, 50):
+            monkeypatch.setattr(session.os, "sysconf", _host_with_gib(gib))
+            heaps.add(session._default_driver_memory())
+    assert {f"{g}g" for g in range(1, 25)} == heaps
+    for heap in (*heaps, "256g"):
+        heap_bytes = int(heap.removesuffix("g")) * 2**30
+        pool = (heap_bytes - 300 * 2**20) * 0.6
+        page = session._default_page_size(heap)
+        assert 2**20 - 16 <= page <= 64 * 2**20 - 16
+        assert pool / page <= 8192, heap
+
+
+def test_driver_jvm_runs_two_jit_compiler_threads(spark):
+    """The session's driver JVM was launched with ``-XX:CICompilerCount=2``
+    from ``spark.driver.defaultJavaOptions``, so a caller's
+    ``extraJavaOptions`` is appended to it and cannot drop it, and its
+    Tungsten pages follow its heap."""
+    runtime = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    assert "-XX:CICompilerCount=2" in list(runtime.getInputArguments())
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.driver.defaultJavaOptions") == session.JIT_JAVA_OPTIONS
+    assert "CICompilerCount" not in (conf.get("spark.driver.extraJavaOptions") or "")
+    page = spark.sparkContext._jsc.sc().env().memoryManager().pageSizeBytes()
+    assert page == session._default_page_size(conf.get("spark.driver.memory"))

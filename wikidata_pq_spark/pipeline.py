@@ -318,17 +318,21 @@ def partition_entity_tables(
 
 def partition_table(df: DataFrame, out_dir: str, name: str, source_name: str) -> bool:
     """Sink one flattened table as Hive-partitioned parquet on its
-    ``PARTITION_KEYS`` key, commit its per-partition audit rows (of the
-    frame it was given), ``source_name`` and schema to the (table x
-    source) unit's log, and post-check the sink against them. The log
-    records but does not gate: a re-run writes again.
+    ``PARTITION_KEYS`` key, under its own ``source=<source_name>``
+    level, commit its per-partition audit rows (of the frame it was
+    given), ``source_name`` and schema to the (table x source) unit's
+    log, and post-check that source's directory against them. Each
+    source overwrites only its own directory, so its record keeps
+    matching the disk whatever other sources write; reading
+    ``<out>/<table>`` gives every source's rows, with a ``source``
+    column. The log records but does not gate: a re-run writes again.
 
     Layout mirrors the reference's results and audit trees:
-      <out>/<table>/<key>=X/...parquet
+      <out>/<table>/source=<source_name>/<key>=X/...parquet
       <out>/_log/<table>/<source_name>/<version>.json
     """
     key = PARTITION_KEYS[name]
-    path = os.path.join(out_dir, name)
+    path = os.path.join(out_dir, name, f"source={source_name}")
     tableio.write_partitioned(df, path, [key])
     st = StateStore(os.path.join(out_dir, "_log"))
     unit = os.path.join(name, source_name)

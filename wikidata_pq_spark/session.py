@@ -12,11 +12,20 @@ JVM's case mapping for ``lower``/``upper``, and the Parquet format of
 every sink (zstd, INT64 microsecond timestamps). ``get_spark`` builds with
 them, and the ``jobs/`` entry points apply the same mapping to the
 session spark-submit gives them.
+
+``get_spark`` also sizes the driver JVM it launches for ``local[N]``:
+the heap (``spark.driver.memory``), two JIT compiler threads
+(``JIT_JAVA_OPTIONS``) and Tungsten pages sized to that heap
+(``_default_page_size``). The thread cap is a JVM launch option and the
+page size follows the launched heap, so a session whose JVM spark-submit
+started takes both from the spark-submit command line; the ``jobs/``
+docstrings show it.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -59,6 +68,53 @@ def _default_driver_memory() -> str:
     return f"{max(1, min(24, ram // 2 // 2**30))}g"
 
 
+# spark.driver.memory's units; a bare number is MiB
+_MEMORY_UNITS = {"": 2**20, "b": 1, "k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
+
+
+def _default_page_size(driver_memory: str) -> int:
+    """``spark.buffer.pageSize`` in bytes for a driver heap of
+    ``driver_memory``: the next power of two of heap/2048, within
+    Spark's own [1 MB, 64 MB], less the 16-byte header of the
+    ``long[]`` that holds it (4 MB - 16 B at 7g).
+
+    Spark's default page is 64 MB on a 7g, 4-core host (its execution
+    pool / cores / 16, rounded up), and a page is zeroed when it is
+    allocated. G1 sizes its regions from the heap the same way (4 MB at
+    7g): a page is still a humongous object, but it fills one region,
+    not 16. A cold kg_incremental iteration started 2 and 8 G1
+    concurrent cycles on "G1 Humongous Allocation" at two seeds, not 17
+    and 26 (tools/jvm_threads.py, 4-core host). Spark takes the header
+    off its default page for the same reason.
+
+    A task may fill the whole execution pool, (heap - 300 MB) x 0.6,
+    and Spark's page table holds 8192 pages per task: pages of heap/2048
+    need at most 0.6 x 2048 of them, and above the 64 MB clamp (heaps
+    over 128g) Spark's default page would be 64 MB too."""
+    m = re.fullmatch(r"(\d+)([bkmgt])?b?", driver_memory.strip().lower())
+    if m is None:
+        raise ValueError(f"not a Spark memory size: {driver_memory!r}")
+    heap = int(m[1]) * _MEMORY_UNITS[m[2] or ""]
+    page = 1 << max(0, heap // 2048 - 1).bit_length()
+    return min(64 * 2**20, max(2**20, page)) - 16
+
+
+# The driver JVM's JIT compiler threads: 1 C1 + 1 C2, not the JVM's
+# ergonomic 1 + 2 on 4 CPUs, which compete with local[N]'s N task
+# threads for the same N cores. Without the cap the C1 and C2 threads
+# took 18.1 of the driver JVM's 28.8 CPU s in a cold kg_incremental
+# iteration and 12.5 of 20.0 s in a cold kg_batch one; with it, 8.9 of
+# 16.4 s and 7.4 of 13.4 s (tools/jvm_threads.py, 4-core host). Unlike
+# the rejected TieredStopAtLevel and CompileThresholdScaling flags
+# (ARCHITECTURE.md), it keeps the compile thresholds and tiers: the
+# same code is compiled at the same tiers, by fewer threads. 2 is the
+# floor under tiered compilation and the JVM's own count at 2 or fewer
+# CPUs, so the flag never adds a thread. It sits in
+# defaultJavaOptions: a caller's extraJavaOptions is appended after it
+# rather than replacing it.
+JIT_JAVA_OPTIONS = "-XX:CICompilerCount=2"
+
+
 def _default_cpus() -> int:
     """``$SPARK_GRAFT_CPUS``, else the cores this process may run on."""
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
@@ -74,14 +130,24 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``; without the
     env var, to as many cores as this process may run on.
-    ``shuffle_partitions`` defaults to the local core count -- on a real
+    ``shuffle_partitions`` defaults to ``max(cores, 8)`` -- on a real
     cluster this should be ~2-3x total cores, or left to AQE coalescing.
+    The session runs with ``SQL_DEFAULTS``; among them, strings are
+    case-mapped by the JVM rather than ICU, which keeps a 3-4 CPU s
+    class initializer out of the first ``lower()`` and costs no warm
+    speed, and every Parquet sink is written as zstd with INT64
+    microsecond timestamps.
+
+    The driver JVM it launches is sized for ``local[N]``:
     ``spark.driver.memory`` is ``$SPARK_DRIVER_MEM``, else half the
-    host's RAM capped at 24g. The session runs with ``SQL_DEFAULTS``;
-    among them, strings are case-mapped by the JVM rather than ICU,
-    which keeps a 3-4 CPU s class initializer out of the first
-    ``lower()`` and costs no warm speed, and every Parquet sink is
-    written as zstd with INT64 microsecond timestamps.
+    host's RAM capped at 24g; ``spark.buffer.pageSize`` follows that
+    heap (``_default_page_size``: 4 MB at 7g, not Spark's 64 MB); and
+    ``spark.driver.defaultJavaOptions`` caps the JIT at two compiler
+    threads (``JIT_JAVA_OPTIONS``). Together they cut a cold
+    ``kg_incremental`` iteration's CPU from 35.3 to 23.5 s (medians of
+    10 perfbench runs, 4-core host). ``extra_conf`` is applied last
+    and overrides any of these; the page size follows its
+    ``spark.driver.memory``.
     """
     cpus = _default_cpus()
     if master is None:
@@ -118,14 +184,15 @@ def get_spark(
         # Nested-field pruning so struct projections reach the scan.
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
-        )
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    conf = {
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        "spark.driver.defaultJavaOptions": JIT_JAVA_OPTIONS,
+        **(extra_conf or {}),
+    }
+    conf.setdefault(
+        "spark.buffer.pageSize", str(_default_page_size(conf["spark.driver.memory"]))
+    )
+    spark = builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
