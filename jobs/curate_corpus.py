@@ -11,19 +11,9 @@ Resumable: re-submit after a failure and completed stages skip (same
 state machine as the KG pipeline, one commit log per stage,
 ``<out>/_log/<unit>/<version>.json``).
 
-The session takes ``session.SQL_DEFAULTS``, but not ``get_spark``'s two
-driver JVM settings for ``local[N]``: the JIT cap is a launch option of
-the JVM that spark-submit started before this script runs, and the page
-size must follow the heap spark-submit gave it. Pass both on the
-command line. ``spark.driver.defaultJavaOptions=-XX:CICompilerCount=2``
-caps the JIT at two compiler threads, and ``spark.buffer.pageSize``
-sizes Tungsten pages to the heap (the next power of two of heap/2048,
-at least 1 MB and at most 64 MB, less 16 bytes; ``4194288`` at
-``--driver-memory 7g``):
-
-    spark-submit --master local[4] --driver-memory 7g \
-        --conf spark.driver.defaultJavaOptions=-XX:CICompilerCount=2 \
-        --conf spark.buffer.pageSize=4194288 ...
+The session takes ``session.SQL_DEFAULTS``; pass ``get_spark``'s two
+driver JVM settings on the spark-submit command line, as the
+``session`` module docstring shows.
 """
 
 from __future__ import annotations

@@ -5,8 +5,8 @@
 
 Runs ``perfbench/run.py --trace 0`` of the checkout at ``--root``
 (default: this one) in this process, unchanged, and watches the one
-cold iteration (``run_once``) from outside it: every ``--period``
-seconds it reads ``/proc/<jvm pid>/task/*/stat`` and keeps each
+cold iteration (``run_once``) from outside it: every ``PERIOD``
+(0.2) seconds it reads ``/proc/<jvm pid>/task/*/stat`` and keeps each
 thread's latest user + system CPU, and for the same window it logs the
 JVM's GC events (``jcmd <pid> VM.log what=gc``). After perfbench's own
 output it prints a table and one JSON line, ``jvm_threads {...}``:
@@ -47,6 +47,7 @@ GROUPS = (
     ("G1", ("GC Thread", "G1 ")),
 )
 TICK = os.sysconf("SC_CLK_TCK")
+PERIOD = 0.2  # sampling period, s
 
 
 def _stat(path: str) -> tuple[str, int] | None:
@@ -70,11 +71,11 @@ def group_of(name: str) -> str:
 
 
 class ThreadSampler:
-    """Every ``period`` seconds, the latest CPU ticks of each thread of
+    """Every ``PERIOD`` seconds, the latest CPU ticks of each thread of
     process ``pid``; ``report`` gives the CPU seconds since ``start``."""
 
-    def __init__(self, pid: int, period: float):
-        self.pid, self.period = pid, period
+    def __init__(self, pid: int):
+        self.pid = pid
         self.base: dict = {}
         self.last: dict = {}  # tid -> (name, ticks)
         self._done = threading.Event()
@@ -93,7 +94,7 @@ class ThreadSampler:
         return _stat(f"/proc/{self.pid}/stat")[1]
 
     def _run(self) -> None:
-        while not self._done.wait(self.period):
+        while not self._done.wait(PERIOD):
             self.last.update(self._sample())
 
     def start(self) -> None:
@@ -139,7 +140,6 @@ def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--workload", required=True, choices=("kg_batch", "kg_incremental"))
     p.add_argument("--seed", type=int, required=True)
-    p.add_argument("--period", type=float, default=0.2, help="sampling period, s")
     p.add_argument("--root", default=HERE, help="checkout whose perfbench to run")
     args = p.parse_args(argv)
 
@@ -160,7 +160,7 @@ def main(argv=None) -> int:
         ]
         found["page_bytes"] = spark.sparkContext._jsc.sc().env().memoryManager().pageSizeBytes()
         pid = spark.sparkContext._gateway.proc.pid
-        sampler = ThreadSampler(pid, args.period)
+        sampler = ThreadSampler(pid)
         log_gc(pid, log_path)
         sampler.start()
         try:

@@ -16,10 +16,16 @@ session spark-submit gives them.
 ``get_spark`` also sizes the driver JVM it launches for ``local[N]``:
 the heap (``spark.driver.memory``), two JIT compiler threads
 (``JIT_JAVA_OPTIONS``) and Tungsten pages sized to that heap
-(``_default_page_size``). The thread cap is a JVM launch option and the
-page size follows the launched heap, so a session whose JVM spark-submit
-started takes both from the spark-submit command line; the ``jobs/``
-docstrings show it.
+(``_default_page_size``). The ``jobs/`` entry points cannot apply the
+last two: the thread cap is a launch option of the JVM that
+spark-submit started before the script runs, and the page size must
+follow the heap spark-submit gave it. Pass both on the spark-submit
+command line, with the page size that ``_default_page_size`` gives for
+the ``--driver-memory`` (4194288 at 7g):
+
+    spark-submit --master local[4] --driver-memory 7g \\
+        --conf spark.driver.defaultJavaOptions=-XX:CICompilerCount=2 \\
+        --conf spark.buffer.pageSize=4194288 ...
 """
 
 from __future__ import annotations
@@ -101,7 +107,9 @@ def _default_page_size(driver_memory: str) -> int:
 
 # The driver JVM's JIT compiler threads: 1 C1 + 1 C2, not the JVM's
 # ergonomic 1 + 2 on 4 CPUs, which compete with local[N]'s N task
-# threads for the same N cores. Without the cap the C1 and C2 threads
+# threads for the same N cores (measured at N = 4 only; on a larger
+# host the JVM would start more compiler threads, and the cap's cost
+# to warm-up there is unmeasured). Without the cap the C1 and C2 threads
 # took 18.1 of the driver JVM's 28.8 CPU s in a cold kg_incremental
 # iteration and 12.5 of 20.0 s in a cold kg_batch one; with it, 8.9 of
 # 16.4 s and 7.4 of 13.4 s (tools/jvm_threads.py, 4-core host). Unlike
