@@ -218,3 +218,29 @@ def test_write_components_stores_union_find(spark, tmp_path, edges, cc_path, job
     if cc_path == "driver":
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
         assert os.listdir(path) == ["part-00000.parquet"]
+
+
+def test_components_file_is_independent_of_hash_seed(tmp_path):
+    """The map ``write_components`` stores on the driver path is built
+    from a set, whose order follows ``PYTHONHASHSEED``; ``_map_table``
+    sorts it, so two processes with different seeds write byte-identical
+    files."""
+    import subprocess
+    import sys
+
+    script = (
+        "import sys\n"
+        "from wikidata_pq_spark import datagen, oracle\n"
+        "from wikidata_pq_spark.operators import canonicalize\n"
+        "comp = oracle.union_find_components(datagen.gen_same_as(2000))\n"
+        "canonicalize._write_map(comp, sys.argv[1], 'zstd')\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = []
+    for seed in ("1", "2"):
+        out = str(tmp_path / f"seed{seed}")
+        env = {**os.environ, "PYTHONHASHSEED": seed, "PYTHONPATH": repo}
+        subprocess.run([sys.executable, "-c", script, out], env=env, check=True, timeout=120)
+        with open(os.path.join(out, "part-00000.parquet"), "rb") as fh:
+            files.append(fh.read())
+    assert files[0] == files[1]

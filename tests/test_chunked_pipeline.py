@@ -467,7 +467,7 @@ def test_completed_store_reruns_without_jobs(spark, parquet_corpus, tmp_path):
     """Re-running a completed store launches no Spark job: every gate is
     closed, so neither the components nor any chunk runs, and the input
     file list it checks comes from the file index. Its post-check reads
-    each table once, not once per chunk."""
+    the tables' Parquet footers on the driver: no job either."""
     out = str(tmp_path / "kg")
     _run(KGPipeline(spark, out, n_chunks=4), parquet_corpus)
     for old in ("mentions", "triples", "lineage"):
@@ -482,7 +482,7 @@ def test_completed_store_reruns_without_jobs(spark, parquet_corpus, tmp_path):
     ok, jobs = _jobs_in_group(
         sc, "completed_post_check", KGPipeline(spark, out, n_chunks=4).post_check
     )
-    assert ok and jobs <= 4
+    assert ok and jobs == 0
 
 
 def _stage_jobs(sc, name, run):
@@ -523,8 +523,8 @@ def test_stage_job_counts(spark, parquet_corpus, tmp_path, n_chunks):
     plus at n_chunks > 1 at most 2 for the check that no conversation
     spans two files (its aggregation's map stage and the ``isEmpty``), a
     chunk's LINKED at most 4 (the chain write), MATERIALIZED at most 2
-    (the nodes write), VERIFIED at most 4 (one audit recompute per
-    table). No sidecar table is written."""
+    (the nodes write), VERIFIED none (the audit rows are read from the
+    Parquet footers on the driver). No sidecar table is written."""
     out = str(tmp_path / "kg")
     pipe = KGPipeline(spark, out, n_chunks=n_chunks)
     jobs = _stage_jobs(spark.sparkContext, out, lambda: _run(pipe, parquet_corpus))
@@ -532,7 +532,7 @@ def test_stage_job_counts(spark, parquet_corpus, tmp_path, n_chunks):
     linked = [jobs[f"{u}:LINKED"] for u in pipe.units()]
     assert max(linked) <= 4, jobs
     assert jobs["corpus:MATERIALIZED"] <= 2, jobs
-    assert jobs["corpus:VERIFIED"] <= 4, jobs
+    assert jobs["corpus:VERIFIED"] == 0, jobs
     assert _audit_dirs(out) == []
 
 

@@ -282,7 +282,7 @@ def test_partition_sources_keep_their_own_rows(spark, entity_rows, tmp_path):
         for source in halves:
             path = f"{out}/{table}/source={source}"
             record = st.metrics(f"{table}/{source}")
-            assert tableio.check_recorded(spark, path, record, [key], "id")
+            assert tableio.check_recorded(path, record, [key], "id")
     assert claims_of("src_b") == claims_b
     recorded = [r["rows"] for s in halves for r in st.metrics(f"claims/{s}")["audit"]]
     assert spark.read.parquet(f"{out}/claims").count() == sum(recorded)

@@ -14,8 +14,9 @@ completed stages skip):
                 CURATED survivors only (per-shard windows, no global
                 sort).
 4. finalize  -- split-partitioned sink; its per-split audit rows
-                go into the stage's record and the sink is checked
-                against them (the VERIFIED gate).
+                go into the stage's record and the sink's Parquet
+                footers are checked against them (the VERIFIED gate,
+                no Spark job).
 
 Every stage writes parquet under ``out_dir`` and advances its state
 unit to COMPLETE with row-count metrics and the written schema, which
@@ -100,9 +101,7 @@ class CurationPipeline:
             # per-split rows of what the sink was given, kept in the record
             audit = tableio.audit_frame(final, ["split"], "doc_id").collect()
             record = {"schema": final.schema.jsonValue(), "audit": [r.asDict() for r in audit]}
-            if not tableio.check_recorded(
-                self.spark, self._p("corpus"), record, ["split"], "doc_id"
-            ):
+            if not tableio.check_recorded(self._p("corpus"), record, ["split"], "doc_id"):
                 raise RuntimeError("curated-corpus sink failed post-check")
             st.set(
                 "finalize", Step.COMPLETE, rows=sum(r["rows"] for r in audit),

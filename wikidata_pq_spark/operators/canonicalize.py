@@ -150,13 +150,17 @@ def _driver_components(same_as: DataFrame) -> DataFrame:
 
 
 def _map_table(comp: dict[str, str]):
-    """``comp`` as an Arrow table with the ``COMPONENTS_DDL`` columns."""
+    """``comp`` as an Arrow table with the ``COMPONENTS_DDL`` columns,
+    sorted by ``entity_id``: a dict built from a set iterates in an
+    order that follows ``PYTHONHASHSEED``, so unsorted the same map
+    would be written as a different file in each process (and sorted
+    ids share prefixes, so it also compresses better)."""
     import pyarrow as pa
 
     return pa.table(
         {"entity_id": list(comp.keys()), "canonical_id": list(comp.values())},
         schema=pa.schema([("entity_id", pa.string()), ("canonical_id", pa.string())]),
-    )
+    ).sort_by("entity_id")
 
 
 # Spark's codec names where pyarrow's differ

@@ -11,18 +11,21 @@ model, not in a second table. An unpartitioned sink observes it on its
 own write (``observe_audit``). A partitioned sink needs a row per
 partition, which an ``Observation`` cannot group: it collects
 ``audit_frame`` of the frame it was given (a second pass over its
-plan). ``check_recorded`` recomputes the rows from the sink and
-compares them with the record.
+plan). The disk side is read from the Parquet footers
+(``footer_audit``), as Iceberg and Delta answer row counts and column
+bounds from file metadata (Armbrust et al., VLDB 2020): ``check_recorded``
+compares those rows with the record and runs no Spark job.
 """
 
 from __future__ import annotations
 
 import os
+import re
 from collections import Counter
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DataType, IntegralType, StructType
 
 
 def observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -109,25 +112,138 @@ def write_bucketed_table(
     w.format("parquet").saveAsTable(name)
 
 
-def matches_audit(audit: DataFrame, expected: list[dict]) -> bool:
-    """``audit``, rows recomputed from a sink, equals ``expected`` (dicts
-    by column; zero-row ones dropped, as ``audit_frame`` drops them) as
-    multisets. Both hold at most one row per partition (or chunk), so
-    they compare on the driver, with no distributed set difference."""
-    want = Counter(tuple(r[c] for c in audit.columns) for r in expected if r["rows"])
-    return Counter(map(tuple, audit.collect())) == want
+# Hive's name for the directory of a null partition value
+HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
-def check_recorded(
-    spark: SparkSession, path: str, record: dict, partition_cols: list[str], id_col: str
-) -> bool:
+def _hidden(name: str) -> bool:
+    """Spark's listing filter (``HadoopFSUtils.shouldFilterOutPathName``):
+    files and directories named ``.*``, ``_*`` without a ``=``
+    (``_SUCCESS``, ``_temporary``) or ``*._COPYING_`` are skipped, except
+    Parquet's ``_metadata`` and ``_common_metadata`` summaries."""
+    if name.startswith(("_metadata", "_common_metadata")):
+        return False
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def data_files(path: str) -> list[str]:
+    """The sorted data files of the parquet table at ``path``: the files
+    ``spark.read.parquet(path).inputFiles()`` names, listed on the
+    driver with Spark's own filter, with no listing job."""
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        files += [os.path.join(root, n) for n in names if not _hidden(n)]
+    return sorted(files)
+
+
+def _unescape(name: str) -> str:
+    """A Hive-escaped path name decoded (``ExternalCatalogUtils.
+    unescapePathName``: each ``%XX`` is one character)."""
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), name)
+
+
+def _typed(value: str, dtype: DataType | None):
+    """A partition directory's value as ``dtype`` holds it: an int for an
+    integral type, else the string (the package partitions on ints and
+    strings only)."""
+    if value == HIVE_NULL:
+        return None
+    return int(value) if isinstance(dtype, IntegralType) else value
+
+
+def _file_audit(file: str, id_col: str) -> tuple[int, object, object]:
+    """(rows, min, max of ``id_col``) of one parquet file from its
+    footer: ``num_rows`` per row group and the column's row-group
+    statistics. Where a non-empty row group has no min/max (parquet-mr
+    leaves them out for values over 4 KiB) the file's ``id_col`` alone
+    is decoded. Nulls count as rows, not as bounds, as in Spark's
+    ``min``/``max``."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(file)
+    md = pf.metadata
+    if md.num_rows == 0:
+        return 0, None, None
+    col = [md.schema.column(c).path for c in range(md.num_columns)].index(id_col)
+    groups = (md.row_group(g) for g in range(md.num_row_groups))
+    stats = [rg.column(col).statistics for rg in groups if rg.num_rows]
+    if all(s is not None and s.has_min_max for s in stats):
+        return md.num_rows, min(s.min for s in stats), max(s.max for s in stats)
+    mm = pc.min_max(pf.read(columns=[id_col]).column(0))
+    return md.num_rows, mm["min"].as_py(), mm["max"].as_py()
+
+
+def footer_audit(
+    path: str, partition_cols: list[str], id_col: str, schema: StructType
+) -> list[dict]:
+    """The audit rows of the parquet table at ``path``, one per non-empty
+    partition, as ``audit_frame`` of ``spark.read.parquet(path)`` gives
+    them, built from the footers of its ``data_files`` on the driver:
+    no Spark job. Partition values come from each file's ``<key>=X``
+    directories, unescaped as Hive escapes them, ``HIVE_NULL`` as null
+    and typed by ``schema`` (``_typed``). Parquet orders UTF8
+    min/max by unsigned bytes, which is Spark's string order and
+    Python's code-point order.
+
+    Coverage: row counts, file sets and id bounds are checked, so a
+    dropped row and a lost, extra or rewritten file are caught; the id
+    pages themselves are not decoded, so a corrupt page that still
+    decodes is not."""
+    types = {f.name: f.dataType for f in schema.fields}
+    acc: dict[tuple, tuple] = {}
+    for file in data_files(path):
+        rel = os.path.relpath(os.path.dirname(file), path)
+        levels = [lvl.partition("=") for lvl in ([] if rel == os.curdir else rel.split(os.sep))]
+        if [(_unescape(k), eq) for k, eq, _ in levels] != [(c, "=") for c in partition_cols]:
+            raise ValueError(
+                f"{file}: its directories are not the partition levels "
+                f"{list(partition_cols)} of {path}"
+            )
+        part = tuple(
+            _typed(_unescape(v), types.get(c)) for c, (_, _, v) in zip(partition_cols, levels)
+        )
+        rows, lo, hi = _file_audit(file, id_col)
+        if rows:
+            n, a, b = acc.get(part, (0, None, None))
+            acc[part] = (n + rows, _bound(min, a, lo), _bound(max, b, hi))
+    return [
+        {**dict(zip(partition_cols, part)), "rows": n, "min_id": lo, "max_id": hi}
+        for part, (n, lo, hi) in acc.items()
+    ]
+
+
+def _bound(f, *values):
+    """``f`` (min or max) of the non-null ``values``; None if all are."""
+    present = [v for v in values if v is not None]
+    return f(present) if present else None
+
+
+def same_audit(got: list[dict], expected: list[dict]) -> bool:
+    """``got`` equals ``expected`` as multisets of audit rows, zero-row
+    ones dropped (``footer_audit`` and ``audit_frame`` give none). Both
+    hold at most one row per partition (or chunk), so they compare on
+    the driver."""
+
+    def rows(audit: list[dict]) -> Counter:
+        return Counter(tuple(sorted(r.items())) for r in audit if r["rows"])
+
+    return rows(got) == rows(expected)
+
+
+def check_recorded(path: str, record: dict, partition_cols: list[str], id_col: str) -> bool:
     """The reference's post-check (reference: DESIGN.md:95-112): the sink
-    at ``path``, read with its recorded ``schema``, audits
-    (``audit_frame``) to exactly the ``audit`` rows its ``record``
-    keeps (``matches_audit``). A missing sink fails; an empty one reads
-    as an empty frame (an all-empty ``partitionBy`` write leaves no part
-    file, and inferring a schema from the bare dir raises)."""
+    at ``path`` audits (``footer_audit``, partition values typed by the
+    recorded ``schema``) to exactly the ``audit`` rows its ``record``
+    keeps (``same_audit``). Reads only footers: no Spark job. A missing
+    sink fails; an empty one (an all-empty ``partitionBy`` write leaves
+    no part file) audits as no rows."""
     if not os.path.exists(path):
         return False
-    sink = read_recorded(spark, path, record)
-    return matches_audit(audit_frame(sink, partition_cols, id_col), record["audit"])
+    audit = footer_audit(path, partition_cols, id_col, StructType.fromJson(record["schema"]))
+    return same_audit(audit, record["audit"])
