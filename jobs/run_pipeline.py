@@ -9,7 +9,7 @@ Launch (the north rule's launch mode):
         --transcripts <parquet path> \
         --alias-dict <parquet path> \
         --same-as <parquet path> \
-        --out <output dir> [--chunks 1] [--link-strategy broadcast]
+        --out <output dir> [--chunks 1]
 
 On a real cluster pass executor configs as usual; the pipeline itself
 is resumable (re-submit after a failure and completed units skip).
@@ -28,12 +28,16 @@ Output layout under ``--out``:
     _log/<unit>/<version>.json one commit log per unit: each stage
                                commits the unit's next version, that
                                unit's record. ``chunk_NNNNN``: LINKED,
-                               mentions/linked rows, and the edges
-                               write's audit row (rows, min_id, max_id)
-                               and schema. ``corpus``: the corpus-wide
-                               stage reached (CANONICALIZED,
-                               MATERIALIZED, VERIFIED, COMPLETE),
-                               n_chunks, ``files_sha256`` (the sha256
+                               mentions/linked rows, the edges write's
+                               audit row (rows, min_id, max_id) and
+                               schema, the link join taken
+                               (``link_join``, "broadcast" or
+                               "shuffle") and the alias dictionary's
+                               size estimate that chose it
+                               (``link_estimated_bytes``). ``corpus``:
+                               the corpus-wide stage reached
+                               (CANONICALIZED, MATERIALIZED, VERIFIED,
+                               COMPLETE), n_chunks, ``files_sha256`` (the sha256
                                of the sorted input file list; absent
                                at 1 chunk), the CC path taken
                                (``cc_path``), the size estimate that
@@ -60,10 +64,6 @@ def main() -> None:
     p.add_argument("--same-as", required=True)
     p.add_argument("--out", required=True)
     p.add_argument(
-        "--link-strategy", default="broadcast",
-        choices=["broadcast", "salted", "shuffle"],
-    )
-    p.add_argument(
         "--chunks", type=int, default=1,
         help=(
             "resumable units; chunk i reads a contiguous slice of the "
@@ -83,9 +83,7 @@ def main() -> None:
 
     from wikidata_pq_spark.pipeline import KGPipeline
 
-    pipe = KGPipeline(
-        spark, args.out, n_chunks=args.chunks, link_strategy=args.link_strategy,
-    )
+    pipe = KGPipeline(spark, args.out, n_chunks=args.chunks)
     metrics = pipe.run(
         spark.read.parquet(args.transcripts),
         spark.read.parquet(args.alias_dict),

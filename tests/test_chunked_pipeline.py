@@ -94,6 +94,10 @@ def test_chunked_equals_oracle(spark, parquet_corpus, corpus, tmp_path):
     assert sum(per_chunk.values()) == metrics["linked"]
     assert _chunk_rows(spark, str(tmp_path / "kg")) == _recorded_rows(pipe)
     assert pipe.state.get("corpus") == Step.COMPLETE
+    # each chunk records the link join its alias dictionary's estimate chose
+    link = canonicalize.link_join(parquet_corpus["alias_dict"])
+    assert link["link_join"] == "broadcast" and link["link_estimated_bytes"] > 0
+    assert all({k: pipe.state.metrics(u)[k] for k in link} == link for u in pipe.units())
 
 
 @pytest.mark.parametrize("n_chunks", [1, 4])

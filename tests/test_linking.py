@@ -1,4 +1,4 @@
-"""Entity-linking join strategies."""
+"""Entity linking: the alias join and its broadcast choice."""
 
 from __future__ import annotations
 
@@ -15,9 +15,7 @@ def _mentions(spark_corpus):
 
 
 def test_broadcast_matches_oracle(spark_corpus, corpus):
-    got = linking.link_mentions(
-        _mentions(spark_corpus), spark_corpus["alias_dict"], strategy="broadcast"
-    ).toPandas()
+    got = linking.link_mentions(_mentions(spark_corpus), spark_corpus["alias_dict"]).toPandas()
     golden = oracle.oracle_link(
         oracle.oracle_extract(corpus["transcripts"]), corpus["alias_dict"]
     )
@@ -72,18 +70,43 @@ def test_chain_broadcasts_the_dictionary_once(spark, spark_corpus, tmp_path):
     assert sum(n.nodeName() == "Exchange" for n in _plan_nodes(final)) == 1
 
 
-def test_salted_equals_broadcast(spark_corpus):
-    m = _mentions(spark_corpus)
-    b = linking.link_mentions(m, spark_corpus["alias_dict"], strategy="broadcast").toPandas()
-    s = linking.link_mentions(
-        m, spark_corpus["alias_dict"], strategy="salted", n_salt=5
-    ).toPandas()
-    assert sorted(map(tuple, b[KEYS].values)) == sorted(map(tuple, s[KEYS].values))
-    # a misspelt or removed strategy raises instead of falling through
-    # to a plain join
-    for bad in ("braodcast", "auto"):
-        with pytest.raises(ValueError, match=bad):
-            linking.link_mentions(m, spark_corpus["alias_dict"], strategy=bad)
+@pytest.mark.classic_session_only
+def test_dictionary_above_threshold_links_by_shuffle(spark, spark_corpus):
+    """With ``spark.sql.autoBroadcastJoinThreshold`` at -1 (never
+    broadcast) ``link_join`` chooses a shuffle: building the chain runs
+    no job, no join of its physical plan is a broadcast, and it gives
+    the broadcast chain's triples."""
+    mentions = _mentions(spark_corpus)
+    adf = spark_corpus["alias_dict"]
+    comps = canonicalize.connected_components(spark_corpus["same_as"])
+    broadcast = linking.kg_chain(mentions, canonicalize.apply_canonical(adf, comps))
+    assert canonicalize.link_join(adf)["link_join"] == "broadcast"
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    sc = spark.sparkContext
+    spark.conf.set(key, "-1")
+    try:
+        assert canonicalize.link_join(adf)["link_join"] == "shuffle"
+        sc.setJobGroup("shuffled_link_plan", "shuffled_link_plan")
+        try:
+            chain = linking.kg_chain(mentions, canonicalize.apply_canonical(adf, comps))
+            joins = [
+                n.nodeName()
+                for n in _plan_nodes(chain._jdf.queryExecution().sparkPlan())
+                if n.nodeName().endswith("Join")
+            ]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup("shuffled_link_plan")) == 0
+        # the subject and object joins, and the composition under each
+        assert len(joins) == 4 and "BroadcastHashJoin" not in joins
+        shuffled = chain.toPandas()
+    finally:
+        spark.conf.set(key, saved)
+    assert sorted(map(tuple, shuffled.values)) == sorted(
+        map(tuple, broadcast.toPandas().values)
+    )
 
 
 def test_unlinkable_mentions_dropped(spark, spark_corpus):
@@ -100,6 +123,7 @@ def test_unlinkable_mentions_dropped(spark, spark_corpus):
                 "obj_kind": ["entity", "entity"],
                 "rule_idx": [1, 1],
                 "match_idx": [0, 0],
+                "ts": pd.to_datetime(["2026-01-01", "2026-01-01"]),
             }
         )
     )
@@ -123,6 +147,7 @@ def test_literal_objects_pass_through(spark, spark_corpus, corpus):
                 "obj_kind": ["literal"],
                 "rule_idx": [5],
                 "match_idx": [0],
+                "ts": pd.to_datetime(["2026-01-01"]),
             }
         )
     )

@@ -7,11 +7,12 @@ pathologies on purpose:
 
 - **hot_alias_link**: 2M mention rows where ONE alias carries ~50% of
   the stream (the high-degree-QID analogue), joined against a 10k-row
-  dictionary with the broadcast path DISABLED -- the worst case the
-  salted fallback exists for. Runs the plain shuffle join and the
-  salted join on identical input and records per-stage task-time
-  max/median (Spark UI REST taskSummary) plus whether AQE's skew-join
-  split fired in the final adaptive plan ("skew=true").
+  dictionary with the broadcast path DISABLED -- the shuffled link a
+  dictionary above ``spark.sql.autoBroadcastJoinThreshold`` takes.
+  Records per-stage task-time max/median (Spark UI REST taskSummary)
+  plus whether AQE's skew-join split fired in the final adaptive plan
+  ("skew=true"). ``BENCH/skew_stress_r06.json`` keeps the r06 run of
+  this step beside a salted join of the same input.
 - **lsh_100k_family**: the 50k-doc 10x corpus plus a 100k-document
   near-dup family (997 variants of one boilerplate text). Uncapped,
   the family's LSH buckets would emit ~5e9 candidate pairs; the
@@ -25,7 +26,7 @@ pathologies on purpose:
 - **chaos_resume** (item 7): the 867k-turn ``KGPipeline(n_chunks=8)``
   run is KILLED (os._exit, no cleanup) mid-run after 3 chunks link in a
   child process, then resumed in the parent; the resumed store must
-  pass the sidecar post-check and its triple set must hash-match a
+  pass VERIFIED's footer post-check and its triple set must hash-match a
   clean run's bit-for-bit (order-insensitive xxhash64 sum).
 
 Prints one JSON line; pass an output path to also write it.
@@ -199,8 +200,9 @@ def main() -> None:
                 "obj_mention"
             ),
             F.lit("entity").alias("obj_kind"),
+            F.lit(None).cast("timestamp").alias("ts"),
         )
-        .localCheckpoint()  # eager: input identical for both strategies
+        .localCheckpoint()  # eager: the input is fixed before the timed join
     )
     alias_dict = (
         spark.range(n_aliases)
@@ -212,9 +214,9 @@ def main() -> None:
         .localCheckpoint()
     )
 
-    def run_link(strategy):
+    def run_link():
         # a 10k-row dictionary auto-broadcasts, which would hide the
-        # skew this step exists to exercise (the salted path is FOR
+        # skew this step exists to exercise (the shuffled link is FOR
         # dictionaries too big to broadcast) -- force the shuffle join,
         # and scale AQE's skew threshold down to sandbox data sizes
         # (the 256MB default is tuned for real clusters; the hot
@@ -239,7 +241,7 @@ def main() -> None:
         conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
         conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
         try:
-            df = linking.link_mentions(mentions, alias_dict, strategy=strategy)
+            df = linking.link_mentions(mentions, alias_dict)
             n = df.count()
         finally:
             for k, v in saved.items():
@@ -249,8 +251,7 @@ def main() -> None:
                     conf.set(k, v)
         return {"rows": n, **_aqe_skew_evidence(spark, sql_ids_before)}
 
-    step("link_shuffle_plain", lambda: run_link("shuffle"))
-    step("link_salted", lambda: run_link("salted"))
+    step("link_shuffle_plain", run_link)
 
     # ---- 2. 100k-doc near-dup family through the LSH bucket cap ----
     from wikidata_pq_spark.operators import dedup
@@ -391,7 +392,8 @@ def main() -> None:
 
     def run_chaos():
         # child process hard-kills itself (os._exit -- no atexit, no
-        # JVM shutdown, no sidecar flush) after CHAOS_KILL_AFTER chunks
+        # JVM shutdown, no commit of the next chunk's record) after
+        # CHAOS_KILL_AFTER chunks
         proc = subprocess.run(
             [sys.executable, __file__, "--chaos-child", chaos_dir, str(corpus_dir)],
             capture_output=True,

@@ -9,8 +9,8 @@ transcript -> (subj, pred, obj) triple factory:
   extractor by default (zero Python in the hot path), with an
   Arrow-batched ``mapInPandas`` path (conversation carry, no per-row
   Python) for rules Catalyst can't express,
-- entity linking via broadcast alias dictionary with salted fallback
-  for hot entities,
+- entity linking via an alias dictionary join, broadcast within Spark's
+  broadcast threshold and otherwise shuffled, AQE splitting hot entities,
 - canonicalization via connected components over same-as edges
   (driver union-find under a size threshold, distributed min-label
   propagation + pointer jumping above; size-gated broadcast rewrite),

@@ -6,7 +6,7 @@ skewed key proportions, chunked files, skip-if-exists resume):
 
 - ``gen_entities``   -> alias dictionary (FIXTURES.md #2): Zipf-skewed
   popularity so a top slice of entities receives ~half of all mentions
-  (the high-degree-QID skew analogue; drives the salted-join path).
+  (the high-degree-QID skew analogue; the hot keys of a shuffled link).
 - ``gen_same_as``    -> canonicalization edges (FIXTURES.md #3):
   chains, stars (hub skew), and singletons.
 - ``gen_transcripts``-> the input table (FIXTURES.md #1), schema exactly

@@ -233,14 +233,33 @@ def _cc_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
+def link_join(alias_dict: DataFrame) -> dict:
+    """How mentions join the dictionary composed from ``alias_dict``:
+    ``link_join`` ("broadcast" or "shuffle") and the estimate that chose
+    it, ``link_estimated_bytes``. Spark's own rule for every join: a
+    side whose plan estimates at most the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` bytes is broadcast (never
+    at -1); a shuffled join leaves hot aliases to AQE's skew split.
+
+    The estimate is the alias dictionary's: the composed dictionary has
+    its rows, but Catalyst estimates a join as the product of its inputs
+    (78 MB for 3,994 rows). Choosing runs no job."""
+    size = _estimated_bytes(alias_dict.select("alias", "entity_id"))
+    conf = alias_dict.sparkSession._jsparkSession.sessionState().conf()
+    join = "broadcast" if 0 <= size <= conf.autoBroadcastJoinThreshold() else "shuffle"
+    return {"link_join": join, "link_estimated_bytes": size}
+
+
 def apply_canonical(alias_dict: DataFrame, components: DataFrame) -> DataFrame:
     """(alias, entity_id) -> (alias, canonical entity_id): one left join +
     coalesce-to-identity on the dictionary, so mentions link straight to
     canonical ids. ``components`` has one row per ``entity_id``, so the
-    result keeps the alias dictionary's rows (and its broadcast fit)."""
+    result keeps the alias dictionary's rows; it carries a broadcast
+    hint when ``link_join`` chooses one."""
     comps = components.select("entity_id", F.col("canonical_id").alias("_canon"))
-    return (
+    canon = (
         alias_dict.select("alias", "entity_id")
         .join(comps, "entity_id", "left")
         .select("alias", F.coalesce("_canon", "entity_id").alias("entity_id"))
     )
+    return F.broadcast(canon) if link_join(alias_dict)["link_join"] == "broadcast" else canon

@@ -1,4 +1,4 @@
-"""Entity linking: broadcast alias join with salted fallback for skew.
+"""Entity linking: an alias join whose broadcast Spark's size rule picks.
 
 The Spark re-expression of the reference's central join rewrite -- the
 row-indexed equi-join that replaced an exploded cartesian (reference:
@@ -6,16 +6,13 @@ claims.py:48-89; anti-pattern preserved at compare_perf.py:25-47).
 Here the lookup side is the alias dictionary and the probe side the
 mention stream.
 
-Strategies (any other value raises ``ValueError``):
-- ``broadcast`` (default): the dictionary is small relative to executor
-  memory -> map-side hash join, zero shuffle of the mention stream.
-- ``salted``: for a dictionary too large to broadcast AND a Zipf-hot key
-  distribution (the high-degree-QID skew analogue, reference:
-  plot_language_hist.py): replicate each dictionary row SALT_N times,
-  give each probe row a deterministic salt, join on (key, salt) so one
-  hot alias spreads over SALT_N reducers. AQE skew-join handles residual
-  imbalance.
-- ``shuffle``: unhinted join (the plain baseline).
+``link_mentions`` joins the dictionary it is given, unhinted: the
+dictionary ``canonicalize.apply_canonical`` composes carries a broadcast
+hint when the alias dictionary's plan estimate is within the session's
+``spark.sql.autoBroadcastJoinThreshold`` (``canonicalize.link_join``),
+a map-side hash join with no shuffle of the mention stream. Above it the
+join is shuffled, and AQE's skew split divides a hot alias's partition.
+``salted_equi_join`` remains as an operator of its own.
 """
 
 from __future__ import annotations
@@ -50,35 +47,25 @@ def salted_equi_join(
     return out.drop("_salt")
 
 
-def link_mentions(
-    mentions: DataFrame,
-    alias_dict: DataFrame,
-    strategy: str = "broadcast",
-    n_salt: int = 8,
-) -> DataFrame:
+def link_mentions(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """mentions -> linked triples (subj, pred, obj, obj_kind, conv_id,
-    turn_idx[, ts]).
+    turn_idx, ts).
 
     Subject mentions and entity-valued object mentions resolve through
     the alias dictionary (inner join = drop unlinkable, mirroring the
     reference's inner-join-as-filter semantics, reference:
-    claims.py:84-89); literal objects pass through untouched and are
-    re-united with ``unionByName`` -- the diagonal-concat analogue
-    (reference: claims.py:206-213). Pass the dictionary composed by
-    ``canonicalize.apply_canonical`` to link straight to canonical ids.
+    claims.py:84-89); literal objects pass through untouched, in the
+    same plan: the object join is a left join, and a literal keeps its
+    mention as ``obj``. Pass the dictionary composed by
+    ``canonicalize.apply_canonical`` to link straight to canonical ids
+    (and to carry its broadcast choice).
     """
-    if strategy not in ("broadcast", "salted", "shuffle"):
-        raise ValueError(f"link_mentions: unknown strategy {strategy!r}")
     dict_df = alias_dict.select("alias", "entity_id")
 
     def _join(df: DataFrame, mention_col: str, out_col: str, how: str) -> DataFrame:
         renamed = dict_df.withColumnRenamed("alias", mention_col).withColumnRenamed(
             "entity_id", out_col
         )
-        if strategy == "broadcast":
-            return df.join(F.broadcast(renamed), mention_col, how)
-        if strategy == "salted":
-            return salted_equi_join(df, renamed, mention_col, n_salt=n_salt, how=how)
         return df.join(renamed, mention_col, how)
 
     # Single linear plan -- no branch-and-union, which would evaluate the
@@ -93,18 +80,11 @@ def link_mentions(
         obj_joined.filter(~is_ent | F.col("_obj_ent").isNotNull())
         .withColumn("obj", F.when(is_ent, F.col("_obj_ent")).otherwise(F.col("obj_mention")))
     )
-    # ts (the asserting turn's timestamp) threads through when the
-    # mention frame carries it -- kept optional so ts-less mention
-    # frames (older fixtures, ad-hoc tests) still link
-    cols = ["subj", "pred", "obj", "obj_kind", "conv_id", "turn_idx"]
-    if "ts" in mentions.columns:
-        cols.append("ts")
-    return out.select(*cols)
+    # ts is the asserting turn's timestamp
+    return out.select("subj", "pred", "obj", "obj_kind", "conv_id", "turn_idx", "ts")
 
 
-def kg_chain(
-    mentions: DataFrame, canon_dict: DataFrame, strategy: str = "broadcast"
-) -> DataFrame:
+def kg_chain(mentions: DataFrame, canon_dict: DataFrame) -> DataFrame:
     """Mentions -> the distinct canonical triple set (``TRIPLE_COLUMNS``
     plus ``obj_kind``): the one link-and-dedup chain the pipeline, the
     contract cells and the streaming flow share. ``canon_dict`` is the
@@ -112,7 +92,7 @@ def kg_chain(
     mentions resolve straight to canonical ids. A turn that asserts one
     triple twice yields one row, as in the oracle."""
     return (
-        link_mentions(mentions, canon_dict, strategy=strategy)
+        link_mentions(mentions, canon_dict)
         .select(*oracle.TRIPLE_COLUMNS, "obj_kind")
         .distinct()
     )

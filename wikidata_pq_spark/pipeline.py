@@ -21,7 +21,10 @@ unit kind:
   chunk_NNNNN   LINKED: extract -> link to canonical ids -> distinct
                 (``linking.kg_chain``), written once as
                 ``edges/chunk=i/part-*.parquet``; the chunk's record
-                keeps the write's audit row and schema
+                keeps the write's audit row and schema, and which way
+                the link join went (``link_join``, "broadcast" or
+                "shuffle", from ``canonicalize.link_join``) with the
+                estimate that chose it (``link_estimated_bytes``)
   corpus        MATERIALIZED: ``nodes`` (distinct entity ids) from all
                 of ``edges``, written as ``nodes/part-*.parquet``; the
                 corpus record keeps its audit row and schema
@@ -88,17 +91,10 @@ class KGPipeline:
     a digest because every version of the record repeats it.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        out_dir: str,
-        n_chunks: int = 1,
-        link_strategy: str = "broadcast",
-    ):
+    def __init__(self, spark: SparkSession, out_dir: str, n_chunks: int = 1):
         self.spark = spark
         self.out_dir = out_dir
         self.n_chunks = n_chunks
-        self.link_strategy = link_strategy
         self.state = StateStore(os.path.join(out_dir, "_log"))
 
     # -- paths ---------------------------------------------------------
@@ -150,6 +146,7 @@ class KGPipeline:
             alias_dict,
             self.spark.read.schema(canonicalize.COMPONENTS_DDL).parquet(components),
         )
+        link = canonicalize.link_join(alias_dict)
 
         for i, unit in enumerate(self.units()):
             if not st.gate(unit, Step.LINKED):
@@ -161,7 +158,7 @@ class KGPipeline:
                 turns = self.spark.read.schema(transcripts.schema).parquet(*files[lo:hi])
             mentions, n_mentions = tableio.observe_rows(extract.extract_mentions(turns))
             edges, audit = tableio.observe_audit(
-                linking.kg_chain(mentions, canon_dict, self.link_strategy), "subj"
+                linking.kg_chain(mentions, canon_dict), "subj"
             )
             tableio.write_partitioned(
                 edges, os.path.join(self.path("edges"), f"chunk={i}"), []
@@ -169,7 +166,7 @@ class KGPipeline:
             st.set(
                 unit, Step.LINKED,
                 mentions=n_mentions.get["rows"], linked=audit.get["rows"],
-                audit=audit.get, schema=edges.schema.jsonValue(),
+                audit=audit.get, schema=edges.schema.jsonValue(), **link,
             )
 
         chunks = [st.metrics(u) for u in self.units()]
