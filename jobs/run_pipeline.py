@@ -1,4 +1,4 @@
-"""spark-submit entry point for the KG pipeline.
+"""spark-submit entry point for the KG pipeline, batch and incremental.
 
 Launch (the north rule's launch mode):
 
@@ -13,6 +13,14 @@ Launch (the north rule's launch mode):
 
 On a real cluster pass executor configs as usual; the pipeline itself
 is resumable (re-submit after a failure and completed units skip).
+It is also the incremental entry point: re-submitting over the same
+``--transcripts`` directory turns its new files into new chunks of the
+same store, and ``--chunks`` splits only that run's new files (a
+resume re-runs the recorded chunks whatever ``--chunks`` says). A run
+whose directory lost a file an earlier run recorded is refused before
+it writes anything. The same-as components are frozen per store (a
+changed ``--same-as`` needs a new ``--out``); ``--alias-dict`` is read
+on every run.
 
 The session takes ``session.SQL_DEFAULTS``; pass ``get_spark``'s two
 driver JVM settings on the spark-submit command line, as the
@@ -27,7 +35,11 @@ Output layout under ``--out``:
     nodes/                     distinct entity ids (MATERIALIZED)
     _log/<unit>/<version>.json one commit log per unit: each stage
                                commits the unit's next version, that
-                               unit's record. ``chunk_NNNNN``: LINKED,
+                               unit's record. ``chunk_NNNNN``: its
+                               plan, ``files`` (the chunk's sorted
+                               slice of the input files, its version
+                               0; null for an input that is not a
+                               parquet scan), then LINKED,
                                mentions/linked rows, the edges write's
                                audit row (rows, min_id, max_id) and
                                schema, the link join taken
@@ -37,14 +49,15 @@ Output layout under ``--out``:
                                (``link_estimated_bytes``). ``corpus``:
                                the corpus-wide stage reached
                                (CANONICALIZED, MATERIALIZED, VERIFIED,
-                               COMPLETE), n_chunks, ``files_sha256`` (the sha256
-                               of the sorted input file list; absent
-                               at 1 chunk), the CC path taken
+                               COMPLETE), the CC path taken
                                (``cc_path``), the size estimate that
                                chose it (``cc_estimated_bytes``) and
                                the ``components`` rows written, row
-                               totals, and the nodes write's audit row
-                               and schema
+                               totals, the nodes write's audit row
+                               and schema, and the chunks that
+                               MATERIALIZED and VERIFIED covered
+                               (``materialized_chunks``,
+                               ``verified_chunks``); no file list
 """
 
 from __future__ import annotations
@@ -66,9 +79,12 @@ def main() -> None:
     p.add_argument(
         "--chunks", type=int, default=1,
         help=(
-            "resumable units; chunk i reads a contiguous slice of the "
-            "sorted --transcripts files, so above 1 every conversation "
-            "must lie in one file (write it with repartition(k, conv_id))"
+            "resumable units this run splits its new --transcripts files "
+            "into, each a contiguous slice of them; re-submitting over the "
+            "same directory turns new files into new chunks, and a lost "
+            "file is refused. Once a store holds more than one chunk, "
+            "every conversation must lie in one file (write it with "
+            "repartition(k, conv_id))"
         ),
     )
     args = p.parse_args()

@@ -5,6 +5,8 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import threading
+import time
 
 import pandas as pd
 import pytest
@@ -12,9 +14,9 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from wikidata_pq_spark import datagen, oracle
+from wikidata_pq_spark import datagen, oracle, pipeline
 from wikidata_pq_spark.operators import canonicalize
-from wikidata_pq_spark.pipeline import KGPipeline, files_digest
+from wikidata_pq_spark.pipeline import KGPipeline
 from wikidata_pq_spark.plans.checkpoint import StateStore, Step
 from wikidata_pq_spark.sources import tableio
 
@@ -33,14 +35,31 @@ def _run(pipe, c):
     return pipe.run(c["transcripts"], c["alias_dict"], c["same_as"])
 
 
+def _golden(corpus):
+    """The oracle's triples, as ``_tset`` gives a store's."""
+    golden = oracle.oracle_triples(
+        corpus["transcripts"], corpus["alias_dict"], corpus["same_as"]
+    )
+    return set(map(tuple, golden[KEYS].values))
+
+
+def _first_files(spark, parquet_corpus, k=4):
+    """``parquet_corpus`` with only the first ``k`` of its sorted files:
+    the input before the rest arrived."""
+    files = sorted(parquet_corpus["transcripts"].inputFiles())
+    return {**parquet_corpus, "transcripts": spark.read.parquet(*files[:k])}
+
+
 @contextlib.contextmanager
-def _crash_after(unit: str, step: Step):
+def _crash_after(unit: str, step: Step, before: bool = False):
     """Make ``StateStore.set`` raise right after it records ``step`` for
-    ``unit`` -- the crash hook the benchmark's kill/resume uses."""
+    ``unit`` -- the crash hook the benchmark's kill/resume uses -- or,
+    ``before``, in place of recording it."""
     orig = StateStore.set
 
     def set_then_crash(store, u, s, **metrics):
-        orig(store, u, s, **metrics)
+        if not (before and (u, s) == (unit, step)):
+            orig(store, u, s, **metrics)
         if (u, s) == (unit, step):
             raise Killed(f"killed after {unit} {step.name}")
 
@@ -263,20 +282,23 @@ def test_chunks_partition_conversations(spark, spark_corpus, tmp_path):
 
 def test_file_chunks_layout_and_rerun_skip(spark, parquet_corpus, tmp_path):
     """Chunks read slices of the input's files: no copy of the input
-    (``staged/``) and no unit for it (``_log/_staging``); the ``corpus``
-    record keeps ``n_chunks`` and the sha256 of the sorted file list,
-    not the list, and a re-run of the completed store writes nothing."""
-    import time
-
+    (``staged/``) and no unit for it (``_log/_staging``). Each chunk's
+    record keeps its contiguous slice of the sorted file list, its
+    plan; the ``corpus`` record keeps no file list, only how many
+    chunks MATERIALIZED and VERIFIED covered. A re-run of the completed
+    store writes nothing."""
     out = tmp_path / "kg"
     pipe = KGPipeline(spark, str(out), n_chunks=4)
     _run(pipe, parquet_corpus)
     assert sorted(os.listdir(out)) == ["_log", "components", "edges", "nodes"]
     assert sorted(os.listdir(out / "_log")) == pipe.units() + ["corpus"]
     files = sorted(parquet_corpus["transcripts"].inputFiles())
+    assert len(files) == 8
+    assert pipe.plans() == {i: files[2 * i:2 * i + 2] for i in range(4)}
+    assert [pipe.state.metrics(u)["files"] for u in pipe.units()] == list(pipe.plans().values())
     record = pipe.state.metrics("corpus")
-    assert len(files) == 8 and record["n_chunks"] == 4 and "files" not in record
-    assert record["files_sha256"] == files_digest(files)
+    assert not {"n_chunks", "files", "files_sha256"} & set(record)
+    assert (record["materialized_chunks"], record["verified_chunks"]) == (4, 4)
     before = {p: os.path.getmtime(out / p) for p in _tree(out)}
     time.sleep(1.1)
     _run(KGPipeline(spark, str(out), n_chunks=4), parquet_corpus)
@@ -302,13 +324,13 @@ def test_empty_chunks_survive(spark, conversation_files, tmp_path):
     got = pipe.triples().select("subj", "pred", "obj").toPandas()
     assert len(golden) and oracle.precision_recall(got, golden) == (1.0, 1.0)
     # one commit log per unit: every version file holds one unit's
-    # record, and each chunk, advanced once, committed one version
+    # record, and each chunk committed two versions, its plan and LINKED
     log = str(tmp_path / "kg" / "_log")
     for path in (os.path.join(r, f) for r, _, fs in os.walk(log) for f in fs):
         with open(path) as fh:
             assert isinstance(json.load(fh)["step"], int), path
-    assert {u: os.listdir(os.path.join(log, u)) for u in pipe.units()} == {
-        u: [f"{0:020d}.json"] for u in pipe.units()
+    assert {u: sorted(os.listdir(os.path.join(log, u))) for u in pipe.units()} == {
+        u: [f"{0:020d}.json", f"{1:020d}.json"] for u in pipe.units()
     }
 
 
@@ -340,52 +362,138 @@ def test_chunks_refuse_a_frame_that_is_not_its_files(
     assert not os.path.exists(out)
 
 
-def test_resume_refuses_other_chunks(spark, parquet_corpus, tmp_path):
-    """A store records its ``n_chunks`` and sorted input file list with
-    CANONICALIZED. A resume with another ``n_chunks`` or another file
-    list would mix two chunk assignments: it raises before any write.
-    The recorded ones resume."""
+def test_resume_refuses_other_chunks(spark, spark_corpus, parquet_corpus, corpus, tmp_path):
+    """Each chunk's plan records its files. A resume re-runs the planned
+    chunks that are not LINKED on their recorded files, whatever
+    ``n_chunks`` it is given, and plans no new chunk for files it
+    already has. A listing that lost a recorded file, or an input that
+    is not a file scan, cannot be checked against the plans: it raises
+    before any write."""
     out = tmp_path / "kg"
     with _crash_after("chunk_00001", Step.LINKED), pytest.raises(Killed):
         _run(KGPipeline(spark, str(out), n_chunks=4), parquet_corpus)
     files = sorted(parquet_corpus["transcripts"].inputFiles())
-    fewer = {**parquet_corpus, "transcripts": spark.read.parquet(*files[:-1])}
+    plans = KGPipeline(spark, str(out)).plans()
     before = _tree(out)
-    for n_chunks, corpus in [(1, parquet_corpus), (8, parquet_corpus), (4, fewer)]:
-        with pytest.raises(ValueError, match="recorded n_chunks or input file list"):
-            _run(KGPipeline(spark, str(out), n_chunks=n_chunks), corpus)
+    for n_chunks, tr, match in [
+        (4, spark.read.parquet(*files[:-1]), "this run's input lacks"),
+        (8, spark.read.parquet(*files[1:]), "this run's input lacks"),
+        (1, spark_corpus["transcripts"], "bare parquet scan"),
+    ]:
+        with pytest.raises(ValueError, match=match):
+            _run(KGPipeline(spark, str(out), n_chunks=n_chunks), {**parquet_corpus, "transcripts": tr})
         assert _tree(out) == before, n_chunks
-    pipe = KGPipeline(spark, str(out), n_chunks=4)
+    pipe = KGPipeline(spark, str(out), n_chunks=8)
     _run(pipe, parquet_corpus)
     assert pipe.state.get("corpus") == Step.COMPLETE
+    assert pipe.plans() == plans and len(plans) == 4
+    assert _tset(pipe.triples()) == _golden(corpus)
 
 
-def test_resume_reads_a_recorded_file_list(spark, parquet_corpus, tmp_path):
-    """A store whose ``corpus`` record keeps the file list itself, as
-    before the digest, resumes from the same files and refuses one file
-    fewer. A one-chunk record keeps neither the list nor a digest."""
-    from wikidata_pq_spark.plans import checkpoint
+def test_grown_store_equals_one_shot(spark, parquet_corpus, corpus, tmp_path):
+    """A store grown over 4 conversation-complete files, then all 8, at
+    n_chunks=4 each, holds the same triples, nodes and row totals as
+    one run over the 8 files, and the oracle's triples; it post-checks.
+    The growth run plans the 4 new files as chunks 4-7 and leaves
+    chunks 0-3 alone: no new log version, and their ``edges`` files keep
+    their mtimes. It redoes MATERIALIZED and VERIFIED over 8 chunks."""
+    out = tmp_path / "grown"
+    _run(KGPipeline(spark, str(out), n_chunks=4), _first_files(spark, parquet_corpus))
+    old = KGPipeline(spark, str(out)).units()
+    logs = {u: sorted(os.listdir(out / "_log" / u)) for u in old}
+    edges = {p: os.path.getmtime(out / "edges" / p) for p in _tree(out / "edges")}
+    time.sleep(1.1)
 
-    out = tmp_path / "kg"
-    with _crash_after("chunk_00001", Step.LINKED), pytest.raises(Killed):
-        _run(KGPipeline(spark, str(out), n_chunks=4), parquet_corpus)
-    log = str(out / "_log" / "corpus")
-    version, record = checkpoint.head(log)
-    files = sorted(parquet_corpus["transcripts"].inputFiles())
-    del record["files_sha256"]
-    checkpoint.commit(log, version + 1, {**record, "files": files})
-    fewer = {**parquet_corpus, "transcripts": spark.read.parquet(*files[:-1])}
-    with pytest.raises(ValueError, match="recorded n_chunks or input file list"):
-        _run(KGPipeline(spark, str(out), n_chunks=4), fewer)
     pipe = KGPipeline(spark, str(out), n_chunks=4)
-    _run(pipe, parquet_corpus)
-    assert pipe.state.get("corpus") == Step.COMPLETE and pipe.post_check()
+    metrics = _run(pipe, parquet_corpus)
+    files = sorted(parquet_corpus["transcripts"].inputFiles())
+    assert pipe.plans() == {i: files[i:i + 1] for i in range(8)}
+    assert {u: sorted(os.listdir(out / "_log" / u)) for u in old} == logs
+    assert {p: os.path.getmtime(out / "edges" / p) for p in edges} == edges
+    record = pipe.state.metrics("corpus")
+    assert (record["materialized_chunks"], record["verified_chunks"]) == (8, 8)
+    assert pipe.post_check()
 
-    one = KGPipeline(spark, str(tmp_path / "one"), n_chunks=1)
-    _run(one, parquet_corpus)
-    record = one.state.metrics("corpus")
-    assert record["n_chunks"] == 1
-    assert not {"files", "files_sha256"} & set(record)
+    one = KGPipeline(spark, str(tmp_path / "one"), n_chunks=4)
+    assert metrics == _run(one, parquet_corpus)
+    assert _tset(pipe.triples()) == _tset(one.triples()) == _golden(corpus)
+    nodes = [sorted(r[0] for r in p.nodes().collect()) for p in (pipe, one)]
+    assert nodes[0] == nodes[1]
+
+
+@pytest.mark.parametrize("kill", ["linked", "nodes"])
+def test_growth_kill_and_resume(spark, parquet_corpus, corpus, tmp_path, kill):
+    """A growth run killed after a new chunk's LINKED, or after its
+    ``nodes`` write but before its MATERIALIZED commit, resumes to the
+    store a run over all the files builds. The resume is given another
+    ``n_chunks``: it re-runs the recorded plans, it plans nothing new."""
+    out = str(tmp_path / "kg")
+    _run(KGPipeline(spark, out, n_chunks=4), _first_files(spark, parquet_corpus))
+    crash = {
+        "linked": _crash_after("chunk_00005", Step.LINKED),
+        "nodes": _crash_after("corpus", Step.MATERIALIZED, before=True),
+    }[kill]
+    with crash, pytest.raises(Killed):
+        _run(KGPipeline(spark, out, n_chunks=4), parquet_corpus)
+    pipe = KGPipeline(spark, out, n_chunks=2)
+    linked = [pipe.state.get(u) == Step.LINKED for u in pipe.units()]
+    assert linked == ([True] * 6 + [False] * 2 if kill == "linked" else [True] * 8)
+    assert pipe.state.metrics("corpus")["materialized_chunks"] == 4
+
+    metrics = _run(pipe, parquet_corpus)
+    assert len(pipe.units()) == 8 and pipe.post_check()
+    assert pipe.state.metrics("corpus")["materialized_chunks"] == 8
+    assert _tset(pipe.triples()) == _golden(corpus)
+    assert metrics["linked"] == len(_golden(corpus)) == pipe.triples().count()
+    edges = pipe.edges()
+    ids = edges.select("subj").union(edges.filter("obj_kind = 'entity'").select("obj"))
+    assert sorted(r[0] for r in pipe.nodes().collect()) == sorted(
+        r[0] for r in ids.distinct().collect()
+    )
+
+
+def test_two_planners_commit_one_plan_per_unit(
+    spark, parquet_corpus, corpus, tmp_path, monkeypatch
+):
+    """Two runs grow one store at once, both having read the same plans:
+    each new unit's plan is its log's version 0, so exactly one run
+    commits it and the other raises without planning anything more.
+    The winner completes the store."""
+    out = str(tmp_path / "kg")
+    _run(KGPipeline(spark, out, n_chunks=4), _first_files(spark, parquet_corpus))
+    # both runs have listed the plans and checked the input before
+    # either commits a plan
+    barrier = threading.Barrier(2, timeout=120)
+    check = pipeline.check_conversations_complete
+    monkeypatch.setattr(
+        pipeline, "check_conversations_complete",
+        lambda tr: check(tr) or barrier.wait(),
+    )
+    done, errors = [], []
+
+    def grow():
+        try:
+            done.append(_run(KGPipeline(spark, out, n_chunks=4), parquet_corpus))
+        except RuntimeError as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=grow) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert len(done) == 1 and len(errors) == 1, errors
+    assert "another run planned chunk_00004" in str(errors[0])
+    pipe = KGPipeline(spark, out)
+    files = sorted(parquet_corpus["transcripts"].inputFiles())
+    assert pipe.plans() == {i: files[i:i + 1] for i in range(8)}
+    for u in pipe.units()[4:]:
+        assert sorted(os.listdir(os.path.join(out, "_log", u))) == [
+            f"{0:020d}.json", f"{1:020d}.json"
+        ]
+    assert pipe.state.get("corpus") == Step.COMPLETE and pipe.post_check()
+    assert _tset(pipe.triples()) == _golden(corpus)
 
 
 def test_resume_refuses_old_layout(spark, parquet_corpus, tmp_path):
@@ -393,27 +501,32 @@ def test_resume_refuses_old_layout(spark, parquet_corpus, tmp_path):
     ``triples`` dir, a ``bucket=`` level under ``edges/chunk=*`` or
     ``nodes``, an ``edges_audit`` or ``nodes_audit`` sidecar table, a
     ``_state`` dir of per-unit JSON files, ``_log/<version>.json``
-    snapshots of every unit's record, or a ``staged`` copy of the
-    input split by conversation hash) must refuse to resume, and write
-    nothing: its finished stages would be skipped or mixed with new
-    chunks, directory depths mixed under ``edges``, chunks without a
-    recorded audit row post-checked, or hash-assigned chunks mixed
+    snapshots of every unit's record, a ``staged`` copy of the input
+    split by conversation hash, or a ``corpus`` record that keeps the
+    input's whole file list or its digest, from before each chunk
+    recorded its own files) must refuse to resume, and write nothing:
+    its finished stages would be skipped or mixed with new chunks,
+    directory depths mixed under ``edges``, chunks without a recorded
+    audit row post-checked, or hash-assigned or unplanned chunks mixed
     with file slices, instead of re-run."""
-    for name, old in [
-        ("mentions", "mentions/chunk=0"),
-        ("triples", "triples/chunk=0"),
-        ("edges_bucket", "edges/chunk=0/bucket=3"),
-        ("nodes_bucket", "nodes/bucket=3"),
-        ("edges_audit", "edges_audit/chunk=0"),
-        ("nodes_audit", "nodes_audit"),
-        ("state", "_state"),
-        ("snapshot_log", "_log/00000000000000000000.json"),
-        ("staged", "staged/_chunk=0"),
+    corpus_log = "_log/corpus/00000000000000000000.json"
+    for name, old, record in [
+        ("mentions", "mentions/chunk=0", None),
+        ("triples", "triples/chunk=0", None),
+        ("edges_bucket", "edges/chunk=0/bucket=3", None),
+        ("nodes_bucket", "nodes/bucket=3", None),
+        ("edges_audit", "edges_audit/chunk=0", None),
+        ("nodes_audit", "nodes_audit", None),
+        ("state", "_state", None),
+        ("snapshot_log", "_log/00000000000000000000.json", {"corpus": {"step": 6}}),
+        ("staged", "staged/_chunk=0", None),
+        ("files_sha256", corpus_log, {"step": 3, "n_chunks": 4, "files_sha256": "0" * 64}),
+        ("file_list", corpus_log, {"step": 3, "n_chunks": 4, "files": ["part-0.parquet"]}),
     ]:
         out = tmp_path / name
-        if old.endswith(".json"):
+        if record is not None:
             os.makedirs((out / old).parent)
-            (out / old).write_text('{"corpus": {"step": 6}}')
+            (out / old).write_text(json.dumps(record))
         else:
             os.makedirs(out / old)
         pipe = KGPipeline(spark, str(out), n_chunks=4)
@@ -468,14 +581,18 @@ def _jobs_in_group(sc, group: str, fn):
 
 @pytest.mark.classic_session_only
 def test_completed_store_reruns_without_jobs(spark, parquet_corpus, tmp_path):
-    """Re-running a completed store launches no Spark job: every gate is
-    closed, so neither the components nor any chunk runs, and the input
-    file list it checks comes from the file index. Its post-check reads
-    the tables' Parquet footers on the driver: no job either."""
+    """Re-running a completed store launches no Spark job and writes
+    nothing: every gate is closed, so neither the components nor any
+    chunk runs, and the input file list it checks against the plans
+    comes from the file index. The store here was grown (4 files, then
+    8), so its corpus stages cover every planned chunk. Its post-check
+    reads the tables' Parquet footers on the driver: no job either."""
     out = str(tmp_path / "kg")
+    _run(KGPipeline(spark, out, n_chunks=4), _first_files(spark, parquet_corpus))
     _run(KGPipeline(spark, out, n_chunks=4), parquet_corpus)
     for old in ("mentions", "triples", "lineage"):
         assert not os.path.exists(os.path.join(out, old))
+    before = {p: os.path.getmtime(os.path.join(out, p)) for p in _tree(out)}
 
     sc = spark.sparkContext
     metrics, jobs = _jobs_in_group(
@@ -483,6 +600,8 @@ def test_completed_store_reruns_without_jobs(spark, parquet_corpus, tmp_path):
     )
     assert jobs == 0
     assert metrics["linked"] > 0 and metrics["nodes"] > 0
+    assert {p: os.path.getmtime(os.path.join(out, p)) for p in _tree(out)} == before
+    assert len(KGPipeline(spark, out).units()) == 8
     ok, jobs = _jobs_in_group(
         sc, "completed_post_check", KGPipeline(spark, out, n_chunks=4).post_check
     )
@@ -492,19 +611,23 @@ def test_completed_store_reruns_without_jobs(spark, parquet_corpus, tmp_path):
 def _stage_jobs(sc, name, run):
     """Run ``run`` with each gate->set span in its own job group, named
     after ``name`` (unique per call: the tracker keeps old groups); the
-    job count of each span, keyed by ``unit:STEP``."""
-    groups = {}
+    job count of each span that ended in a set of its own step, keyed
+    by ``unit:STEP``. Every gate opens a span, due or not: a corpus
+    stage also runs when its covered-chunk count is stale, which the
+    gate does not see."""
+    groups, span = {}, {}
     gate, set_ = StateStore.gate, StateStore.set
 
     def gate_in_group(store, unit, step):
-        todo = gate(store, unit, step)
-        if todo:
-            groups[f"{unit}:{step.name}"] = g = f"{name}:{unit}:{step.name}"
-            sc.setJobGroup(g, g)
-        return todo
+        span["open"] = (unit, step)
+        g = f"{name}:{unit}:{step.name}"
+        sc.setJobGroup(g, g)
+        return gate(store, unit, step)
 
     def set_out_of_group(store, unit, step, **metrics):
         set_(store, unit, step, **metrics)
+        if span.pop("open", None) == (unit, step):
+            groups[f"{unit}:{step.name}"] = f"{name}:{unit}:{step.name}"
         sc.setLocalProperty("spark.jobGroup.id", None)
 
     StateStore.gate, StateStore.set = gate_in_group, set_out_of_group
@@ -518,23 +641,32 @@ def _stage_jobs(sc, name, run):
 
 
 @pytest.mark.classic_session_only
-@pytest.mark.parametrize("n_chunks", [1, 4])
+@pytest.mark.parametrize("n_chunks", [1, 4, "4+4"])
 def test_stage_job_counts(spark, parquet_corpus, tmp_path, n_chunks):
     """The audit rows come from the writes, and every KG table is read
     with a known schema: CANONICALIZED runs at most 1 job (the driver
     collect of ``same_as``: the CC path is chosen from the plan's size
-    estimate, not a count, and the driver writes ``components`` itself),
-    plus at n_chunks > 1 at most 2 for the check that no conversation
-    spans two files (its aggregation's map stage and the ``isEmpty``), a
-    chunk's LINKED at most 4 (the chain write), MATERIALIZED at most 2
-    (the nodes write), VERIFIED none (the audit rows are read from the
-    Parquet footers on the driver). No sidecar table is written."""
+    estimate, not a count, and the driver writes ``components`` itself;
+    at n_chunks > 1 the check that no conversation spans two files runs
+    before it, at planning), a chunk's LINKED at most 4 (the chain
+    write), MATERIALIZED at most 2 (the nodes write), VERIFIED none
+    (the audit rows are read from the Parquet footers on the driver).
+    No sidecar table is written. "4+4" measures a growth run, 4 new
+    files on a 4-chunk store: only the new chunks and the corpus stages
+    that cover them run, and no old chunk opens a span."""
     out = str(tmp_path / "kg")
+    if n_chunks == "4+4":
+        _run(KGPipeline(spark, out, n_chunks=4), _first_files(spark, parquet_corpus))
+        n_chunks = 4
+    old = KGPipeline(spark, out).units()
     pipe = KGPipeline(spark, out, n_chunks=n_chunks)
     jobs = _stage_jobs(spark.sparkContext, out, lambda: _run(pipe, parquet_corpus))
-    assert jobs["corpus:CANONICALIZED"] <= (1 if n_chunks == 1 else 3), jobs
-    linked = [jobs[f"{u}:LINKED"] for u in pipe.units()]
-    assert max(linked) <= 4, jobs
+    assert jobs.get("corpus:CANONICALIZED", 0) <= 1, jobs
+    assert ("corpus:CANONICALIZED" in jobs) == (not old), jobs
+    new = [u for u in pipe.units() if u not in old]
+    assert len(new) == n_chunks
+    assert sorted(k for k in jobs if k.endswith(":LINKED")) == [f"{u}:LINKED" for u in new]
+    assert max(jobs[f"{u}:LINKED"] for u in new) <= 4, jobs
     assert jobs["corpus:MATERIALIZED"] <= 2, jobs
     assert jobs["corpus:VERIFIED"] == 0, jobs
     assert _audit_dirs(out) == []

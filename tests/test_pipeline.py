@@ -61,10 +61,12 @@ def test_resume_mid_pipeline_identical(spark, spark_corpus, tmp_path):
     pipe2, _ = _run(spark, spark_corpus, out)
     assert _triple_set(pipe2) == before
     # the resume re-ran every corpus stage after LINKED, one new
-    # version each, and no chunk's log moved
+    # version each, and no chunk's log moved from its plan and LINKED
     done = [Step.CANONICALIZED, Step.MATERIALIZED, Step.VERIFIED, Step.COMPLETE]
     assert _steps(log) == done + [Step.LINKED] + done
-    assert [_steps(str(out / "_log" / u)) for u in pipe2.units()] == [[Step.LINKED]]
+    assert [_steps(str(out / "_log" / u)) for u in pipe2.units()] == [
+        [Step.INIT, Step.LINKED]
+    ]
 
 
 def test_complete_run_is_noop(spark, spark_corpus, tmp_path):

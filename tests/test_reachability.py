@@ -28,9 +28,6 @@ KEEP = {
     ("plans/ddmin.py", "shrink_schema_drift"): "the reference's ddmin_schema.py",
     ("sources/tableio.py", "write_bucketed_table"): "the paper's bucket(n, subj) layout",
     ("sources/transcript_source.py", "register"): "the transcript data source",
-    ("streaming/incremental.py", "stream_transcripts"): "the streaming KG flow's input",
-    ("streaming/incremental.py", "incremental_extract"): "the streaming KG flow",
-    ("streaming/incremental.py", "read_triples"): "the streaming KG flow's reader",
 }
 
 

@@ -1,4 +1,4 @@
-"""Structured Streaming: incremental extraction and the epoch stores."""
+"""Structured Streaming: the epoch stores."""
 
 from __future__ import annotations
 
@@ -7,162 +7,9 @@ import contextlib
 import pandas as pd
 import pytest
 
-from wikidata_pq_spark import datagen, oracle
-from wikidata_pq_spark.operators import canonicalize, extract, linking
 from wikidata_pq_spark.streaming import incremental
 
 KEYS = ["subj", "pred", "obj", "conv_id", "turn_idx"]
-
-
-def _two_file_corpus(spark, tmp_path):
-    """A corpus as two conversation-complete files arriving "over
-    time", plus its canonical dictionary and the oracle's triples."""
-    tr = datagen.gen_transcripts(n_convs=40, mean_turns=6, n_entities=100)
-    ents, same_as = datagen.gen_entities(100), datagen.gen_same_as(100)
-    comps = canonicalize.connected_components(spark.createDataFrame(same_as))
-    canon = canonicalize.apply_canonical(spark.createDataFrame(ents), comps)
-    in_dir = str(tmp_path / "in")
-    convs = sorted(tr["conv_id"].unique())
-    first = tr["conv_id"].isin(set(convs[: len(convs) // 2]))
-    for part in (tr[first], tr[~first]):
-        spark.createDataFrame(part).coalesce(1).write.mode("append").parquet(in_dir)
-    golden = oracle.oracle_triples(tr, ents, same_as)
-    return tr[first], canon, in_dir, sorted(map(tuple, golden[KEYS].values))
-
-
-def _extract(spark, canon, in_dir, out_dir, ckpt):
-    stream = incremental.stream_transcripts(spark, in_dir, max_files_per_trigger=1)
-    return incremental.incremental_extract(stream, canon, out_dir, ckpt)
-
-
-def _triples(spark, out_dir):
-    got = incremental.read_triples(spark, out_dir).toPandas()
-    assert "epoch" not in got.columns
-    return sorted(map(tuple, got[KEYS].values))
-
-
-def _files(out_dir):
-    """Every file under ``out_dir`` with its mtime."""
-    import os
-
-    return sorted(
-        (os.path.join(r, f), os.path.getmtime(os.path.join(r, f)))
-        for r, _, fs in os.walk(out_dir) for f in fs
-    )
-
-
-def test_incremental_extract_matches_batch(spark, tmp_path):
-    _, canon, in_dir, golden = _two_file_corpus(spark, tmp_path)
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
-    _extract(spark, canon, in_dir, out_dir, ckpt).awaitTermination(120)
-
-    assert incremental.live_epochs(out_dir) == [0, 1]  # genuinely incremental
-    batch = linking.kg_chain(
-        extract.extract_mentions(spark.read.parquet(in_dir)), canon
-    ).toPandas()
-    got = _triples(spark, out_dir)
-    assert got == sorted(map(tuple, batch[KEYS].values))
-    # the streamed triples are canonical: they equal the oracle's
-    assert got == golden
-
-
-def test_incremental_resume_no_duplicates(spark, tmp_path):
-    """Restarting the checkpointed query must not re-emit old batches --
-    the streaming analogue of the reference's idempotent step gates."""
-    tr = datagen.gen_transcripts(n_convs=20, mean_turns=5, n_entities=80)
-    adf = spark.createDataFrame(datagen.gen_entities(80))
-    in_dir, out_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-    spark.createDataFrame(tr).coalesce(1).write.mode("append").parquet(in_dir)
-
-    q = incremental.incremental_extract(
-        incremental.stream_transcripts(spark, in_dir), adf, out_dir, ckpt
-    )
-    q.awaitTermination(120)
-    n1, files = len(_triples(spark, out_dir)), _files(out_dir)
-
-    # restart with no new data: nothing may be appended
-    q2 = incremental.incremental_extract(
-        incremental.stream_transcripts(spark, in_dir), adf, out_dir, ckpt
-    )
-    q2.awaitTermination(120)
-    assert len(_triples(spark, out_dir)) == n1
-    assert _files(out_dir) == files
-
-
-def test_incremental_extract_kill_before_commit_stays_invisible(
-    spark, tmp_path, monkeypatch
-):
-    """The log commit of epoch 1 fails after its partition is written:
-    reads see epoch 0 only, and a restart from the same streaming
-    checkpoint rewrites and commits epoch 1, giving the oracle's
-    triples."""
-    import os
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from wikidata_pq_spark.plans import checkpoint
-
-    first, canon, in_dir, golden = _two_file_corpus(spark, tmp_path)
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
-    commit = checkpoint.commit
-
-    def fail_epoch_1(log_dir, version, snapshot):
-        if 1 in snapshot["live"]:
-            raise OSError("injected crash before the commit")
-        return commit(log_dir, version, snapshot)
-
-    monkeypatch.setattr(checkpoint, "commit", fail_epoch_1)
-    with pytest.raises(StreamingQueryException, match="injected crash"):
-        _extract(spark, canon, in_dir, out_dir, ckpt).awaitTermination(120)
-    monkeypatch.setattr(checkpoint, "commit", commit)
-
-    assert os.path.isdir(os.path.join(out_dir, "epoch=1"))  # written, not committed
-    assert incremental.live_epochs(out_dir) == [0]
-    batch = linking.kg_chain(
-        extract.extract_mentions(spark.createDataFrame(first)), canon
-    ).toPandas()
-    assert _triples(spark, out_dir) == sorted(map(tuple, batch[KEYS].values))
-
-    _extract(spark, canon, in_dir, out_dir, ckpt).awaitTermination(120)
-    assert incremental.live_epochs(out_dir) == [0, 1]
-    assert _triples(spark, out_dir) == golden
-
-
-def test_incremental_extract_replay_of_committed_epoch_writes_nothing(
-    spark, tmp_path, monkeypatch
-):
-    """The query dies after epoch 0's log commit but before the
-    streaming checkpoint commits the batch, so a restart replays epoch
-    0: the replay writes no file and no log version, and the run ends
-    with the oracle's triples."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    _, canon, in_dir, golden = _two_file_corpus(spark, tmp_path)
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
-    merge = incremental._merge_epoch
-
-    def merge_then_die(partial, store, epoch_id):
-        merge(partial, store, epoch_id)
-        raise RuntimeError("injected crash after the commit")
-
-    monkeypatch.setattr(incremental, "_merge_epoch", merge_then_die)
-    with pytest.raises(StreamingQueryException, match="injected crash"):
-        _extract(spark, canon, in_dir, out_dir, ckpt).awaitTermination(120)
-    monkeypatch.setattr(incremental, "_merge_epoch", merge)
-    assert incremental.live_epochs(out_dir) == [0]
-    committed = _files(out_dir)
-
-    unchanged = {}
-
-    def record(partial, store, epoch_id):
-        merge(partial, store, epoch_id)
-        unchanged[epoch_id] = _files(out_dir) == committed
-
-    monkeypatch.setattr(incremental, "_merge_epoch", record)
-    _extract(spark, canon, in_dir, out_dir, ckpt).awaitTermination(120)
-    assert unchanged == {0: True, 1: False}  # epoch 0 replayed, epoch 1 new
-    assert incremental.live_epochs(out_dir) == [0, 1]
-    assert _triples(spark, out_dir) == golden
 
 
 def test_incremental_triple_support_merge_and_replay(spark, tmp_path):
@@ -1071,25 +918,19 @@ def test_epoch_stores_written_before_zstd_read_and_compact(
 
 
 def test_epoch_store_reads_build_without_jobs(spark, tmp_path):
-    """Building the two views and the extracted-triples read launches
-    no Spark job: each scan takes its schema from the commit log, not
-    from an inference job. A store with no committed version still
-    refuses to read."""
+    """Building the two views launches no Spark job: each scan takes its
+    schema from the commit log, not from an inference job. A store with
+    no committed version still refuses to read."""
     support, beliefs = _two_epoch_stores(spark, tmp_path)
-    triples = str(tmp_path / "triples")
-    incremental._merge_epoch(
-        spark.createDataFrame([("Q1", "ceo", "A", "c1", 1)], KEYS), triples, 0
-    )
     sc = spark.sparkContext
     sc.setJobGroup("epoch_store_reads", "epoch_store_reads")
     try:
         incremental.read_triple_support(spark, support)
         incremental.read_current_beliefs(spark, beliefs)
-        incremental.read_triples(spark, triples)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup("epoch_store_reads")) == 0
-    for read in (incremental.read_triple_support, incremental.read_triples):
+    for read in (incremental.read_triple_support, incremental.read_current_beliefs):
         with pytest.raises(RuntimeError, match="no committed version"):
             read(spark, str(tmp_path / "empty"))

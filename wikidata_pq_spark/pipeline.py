@@ -1,30 +1,32 @@
-"""End-to-end transcript -> knowledge-graph pipeline (resumable).
+"""End-to-end transcript -> knowledge-graph pipeline (resumable, growable).
 
-The corpus splits into ``n_chunks`` units by input file, each with its
-own commit log, ``_log/<unit>/<version>.json`` -- the reference's one
-state file per source file (reference: state.py:11-18, main.py:61-136):
-a killed run re-does only the unit it died in. Chunk i reads a
-contiguous slice of the input's sorted parquet files. Stage graph, per
+The corpus splits into chunk units by input file, each with its own
+commit log, ``_log/<unit>/<version>.json`` -- the reference's one state
+file per source file (reference: state.py:11-18, main.py:61-136): a
+killed run re-does only the unit it died in, and a re-run over a
+listing with new files turns them into new units, as the reference's
+loop does (reference: main.py:65, process.py:279-282). Stage graph, per
 unit kind:
 
+  chunk_NNNNN   PLAN (version 0, before any stage runs): ``files``,
+                the chunk's slice of the input's sorted parquet files
+                (Delta's add-file entry), null for an input that is not
+                a bare parquet scan; see ``KGPipeline``
   corpus        CANONICALIZED: the same-as connected components,
                 computed once per store and written as ``components``
                 (``canonicalize.write_components``: on the driver path
                 the driver reads the edges, from their files if
                 ``same_as`` is a bare parquet scan, else by one collect,
-                and writes the one file itself); at n_chunks > 1 it
-                first checks that no conversation spans two input
-                files. The record keeps the CC path taken, the size
-                estimate that chose it and the rows written, plus
-                ``n_chunks`` and a digest of the sorted file list, so
-                a resume reads the same slices
+                and writes the one file itself). The record keeps the
+                CC path taken, the size estimate that chose it and the
+                rows written
   chunk_NNNNN   LINKED: extract -> link to canonical ids -> distinct
-                (``linking.kg_chain``), written once as
-                ``edges/chunk=i/part-*.parquet``; the chunk's record
-                keeps the write's audit row and schema, and which way
-                the link join went (``link_join``, "broadcast" or
-                "shuffle", from ``canonicalize.link_join``) with the
-                estimate that chose it (``link_estimated_bytes``)
+                (``linking.kg_chain``) over the planned files, written
+                once as ``edges/chunk=i/part-*.parquet``; the chunk's
+                record keeps the write's audit row and schema, and
+                which way the link join went (``link_join``,
+                "broadcast" or "shuffle", from ``canonicalize.link_join``)
+                with the estimate that chose it (``link_estimated_bytes``)
   corpus        MATERIALIZED: ``nodes`` (distinct entity ids) from all
                 of ``edges``, written as ``nodes/part-*.parquet``; the
                 corpus record keeps its audit row and schema
@@ -33,6 +35,9 @@ unit kind:
                 (``tableio.footer_audit``, no Spark job) and compared
                 with the recorded ones
                 COMPLETE
+                MATERIALIZED and VERIFIED record the chunks they covered
+                (``materialized_chunks``, ``verified_chunks``) and run
+                again when more are planned: a growth run redoes them
 
 An audit row is (rows, min_id, max_id) observed on the write: what the
 sink was given (reference: core.py:25-35), not a re-read of the disk.
@@ -49,7 +54,6 @@ Every stage is idempotent: re-running a completed stage is a no-op
 from __future__ import annotations
 
 import glob
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,6 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructType
 
 from .operators import canonicalize, extract, linking
+from .plans import checkpoint
 from .plans.checkpoint import StateStore, Step
 from .sources import tableio
 
@@ -71,24 +76,33 @@ OLD_LAYOUT = (
     "mentions", "triples", "edges/chunk=*/bucket=*", "nodes/bucket=*",
     "edges_audit", "nodes_audit", "_state", "_log/*.json", "staged",
 )
+# corpus record keys of a multi-chunk store from before chunk plans,
+# which kept the whole file list (or its digest) and no slice per chunk
+OLD_CORPUS_KEYS = {"files", "files_sha256"}
 
 
 class KGPipeline:
-    """Chunk-granular resumable KG pipeline.
+    """Chunk-granular resumable KG pipeline, grown by new input files.
+
+    A run first plans its new files -- the files of ``transcripts`` no
+    planned chunk covers -- as ``n_chunks`` contiguous slices, new chunk
+    units after the existing ones; a listing that lost a planned file
+    is refused. A resume re-runs the planned chunks that are not
+    LINKED, on their recorded files, whatever ``n_chunks`` it is given.
+    Once the store holds more than one chunk, input files must be
+    conversation-complete (``repartition(k, "conv_id")`` before the
+    write). An input that is not a bare parquet scan is planned as one
+    chunk with ``files: null``, which reads ``transcripts`` itself; such
+    a store (and one from before chunk plans) never grows.
 
     Canonicalization is corpus-global but depends only on the same_as
     INPUT, not on chunk outputs, so the component map is computed once
     per store, at the ``corpus`` unit's CANONICALIZED stage, and frozen
-    there: a resume reuses it. The alias dictionary is not frozen; it is
-    read on every run and composed with the stored map for the chunks
-    that still have work. At ``n_chunks=1`` the single chunk reads
-    ``transcripts`` directly. Above that, ``transcripts`` must be a bare
-    parquet file scan whose files are conversation-complete
-    (``repartition(k, "conv_id")`` before the write); chunk i reads its
-    slice of the sorted file list with ``transcripts.schema``, and the
-    ``corpus`` record keeps the list's sha256 -- the analogue of the
-    reference's memoized remote listing (size_verification.py:20-24), as
-    a digest because every version of the record repeats it.
+    there: a resume or a growth run reuses it, so a changed ``same_as``
+    needs a new store. The alias dictionary is not frozen; it is read on
+    every run and composed with the stored map for the chunks that
+    still have work, so a growth run's chunks link with the current
+    dictionary.
     """
 
     def __init__(self, spark: SparkSession, out_dir: str, n_chunks: int = 1):
@@ -102,7 +116,21 @@ class KGPipeline:
         return os.path.join(self.out_dir, name)
 
     def units(self) -> list[str]:
-        return [f"chunk_{i:05d}" for i in range(self.n_chunks)]
+        return [chunk_unit(i) for i in self.plans()]
+
+    def plans(self) -> dict[int, list[str] | None]:
+        """Each planned chunk's files, by chunk index, listed from the
+        log: a unit directory with no committed version (a plan commit
+        that died) is no chunk."""
+        log = self.state.log_dir
+        names = sorted(os.listdir(log)) if os.path.isdir(log) else []
+        plans = {}
+        for name in names:
+            if name.startswith("chunk_"):
+                version, record = checkpoint.head(os.path.join(log, name))
+                if version >= 0:
+                    plans[int(name[len("chunk_"):])] = record.get("files")
+        return plans
 
     # -- stages --------------------------------------------------------
     def run(
@@ -111,10 +139,11 @@ class KGPipeline:
         alias_dict: DataFrame,
         same_as: DataFrame,
     ) -> dict:
-        """Run (or resume) the pipeline; returns the ``mentions`` and
-        ``linked`` rows summed over chunks, and the ``nodes`` rows."""
+        """Run (or resume, or grow) the pipeline; returns the ``mentions``
+        and ``linked`` rows summed over chunks, and the ``nodes`` rows."""
         st = self.state
         old = [g for g in OLD_LAYOUT if glob.glob(self.path(g))]
+        old += sorted(OLD_CORPUS_KEYS & st.metrics(CORPUS).keys())
         if old:
             raise RuntimeError(
                 f"KGPipeline: {self.out_dir} holds {old}, the layout of an "
@@ -122,25 +151,11 @@ class KGPipeline:
                 "Delete the output dir and re-run."
             )
 
-        files = input_files(transcripts) if self.n_chunks > 1 else []
-        # the record keeps a digest of the file list, and none at one chunk
-        layout = {"n_chunks": self.n_chunks}
-        if files:
-            layout["files_sha256"] = files_digest(files)
+        plans = self._plan(transcripts)
         components = self.path("components")
         if st.gate(CORPUS, Step.CANONICALIZED):
-            if self.n_chunks > 1:
-                check_conversations_complete(transcripts)
             cc = canonicalize.write_components(same_as, components)
-            st.set(CORPUS, Step.CANONICALIZED, **layout, **cc)
-        elif recorded_layout(st.metrics(CORPUS)) != recorded_layout(layout):
-            raise ValueError(
-                f"KGPipeline: {self.out_dir} was built from other chunks "
-                "(its recorded n_chunks or input file list differs from "
-                "this run's); resuming it would mix two chunk "
-                "assignments. Re-run with the recorded input and "
-                "n_chunks, or delete the output dir."
-            )
+            st.set(CORPUS, Step.CANONICALIZED, **cc)
         # read with its known schema: no schema-inference job
         canon_dict = canonicalize.apply_canonical(
             alias_dict,
@@ -148,14 +163,12 @@ class KGPipeline:
         )
         link = canonicalize.link_join(alias_dict)
 
-        for i, unit in enumerate(self.units()):
-            if not st.gate(unit, Step.LINKED):
+        for i, files in plans.items():
+            if not st.gate(chunk_unit(i), Step.LINKED):
                 continue
             turns = transcripts
-            if self.n_chunks > 1:
-                # a contiguous slice, empty when n_chunks > len(files)
-                lo, hi = (len(files) * k // self.n_chunks for k in (i, i + 1))
-                turns = self.spark.read.schema(transcripts.schema).parquet(*files[lo:hi])
+            if files is not None:
+                turns = self.spark.read.schema(transcripts.schema).parquet(*files)
             mentions, n_mentions = tableio.observe_rows(extract.extract_mentions(turns))
             edges, audit = tableio.observe_audit(
                 linking.kg_chain(mentions, canon_dict), "subj"
@@ -164,15 +177,15 @@ class KGPipeline:
                 edges, os.path.join(self.path("edges"), f"chunk={i}"), []
             )
             st.set(
-                unit, Step.LINKED,
+                chunk_unit(i), Step.LINKED,
                 mentions=n_mentions.get["rows"], linked=audit.get["rows"],
                 audit=audit.get, schema=edges.schema.jsonValue(), **link,
             )
 
-        chunks = [st.metrics(u) for u in self.units()]
+        chunks = [st.metrics(chunk_unit(i)) for i in plans]
         metrics = {k: sum(m[k] for m in chunks) for k in ("mentions", "linked")}
 
-        if st.gate(CORPUS, Step.MATERIALIZED):
+        if self._due(Step.MATERIALIZED, "materialized_chunks", len(plans)):
             edges = self.edges()
             nodes, audit = tableio.observe_audit(
                 edges.select(F.col("subj").alias("entity_id"))
@@ -188,16 +201,82 @@ class KGPipeline:
             st.set(
                 CORPUS, Step.MATERIALIZED, **metrics, nodes=audit.get["rows"],
                 audit=audit.get, schema=nodes.schema.jsonValue(),
+                materialized_chunks=len(plans),
             )
         metrics["nodes"] = st.metrics(CORPUS)["nodes"]
 
-        if st.gate(CORPUS, Step.VERIFIED):
+        if self._due(Step.VERIFIED, "verified_chunks", len(plans)):
             if not self.post_check():
                 raise RuntimeError("post-check failed: sink != recorded audit")
-            st.set(CORPUS, Step.VERIFIED)
+            st.set(CORPUS, Step.VERIFIED, verified_chunks=len(plans))
 
         st.set(CORPUS, Step.COMPLETE)
         return metrics
+
+    def _plan(self, transcripts: DataFrame) -> dict[int, list[str] | None]:
+        """Commit a plan for each new chunk and return every chunk's
+        files (``plans``). Each plan is its unit's version 0, committed
+        with ``checkpoint.commit``: of two runs planning the same unit
+        one wins and the other raises, so no plan is ever overwritten.
+        Everything that can refuse the input runs before the first
+        commit. The listing comes from the file index: no job."""
+        plans = self.plans()
+        if None in plans.values():
+            return plans  # planned on a frame that is not its files
+        files = tableio.parquet_files(transcripts)
+        if files is None:
+            if plans or self.n_chunks > 1:
+                plan = transcripts._jdf.queryExecution().analyzed()
+                raise ValueError(
+                    "KGPipeline reads each chunk from a slice of the input's "
+                    "files at n_chunks > 1 and in a store planned on files, so "
+                    "transcripts must be a bare parquet scan "
+                    "(spark.read.parquet(path), no partition directories, "
+                    f"nothing on top); got a {plan.getClass().getSimpleName()} "
+                    "plan. Write the frame as parquet first, or use n_chunks=1 "
+                    "in a new store."
+                )
+            new = [None]
+        else:
+            recorded = {f for fs in plans.values() for f in fs}
+            lost = sorted(recorded.difference(files))
+            if lost:
+                raise ValueError(
+                    f"KGPipeline: {self.out_dir} has chunks planned on "
+                    f"{len(lost)} file(s) this run's input lacks, first "
+                    f"{lost[0]!r}; a store only grows. Re-run with every "
+                    "planned file, or delete the output dir."
+                )
+            fresh = sorted(set(files) - recorded)
+            if plans and not fresh:
+                return plans
+            n = self.n_chunks
+            # contiguous slices, empty when n_chunks > len(fresh)
+            new = [fresh[len(fresh) * k // n:len(fresh) * (k + 1) // n] for k in range(n)]
+            if len(plans) + n > 1:
+                check_conversations_complete(transcripts)
+        first = max(plans, default=-1) + 1
+        for i, files in enumerate(new, start=first):
+            try:
+                checkpoint.commit(
+                    os.path.join(self.state.log_dir, chunk_unit(i)), 0,
+                    {"step": int(Step.INIT), "files": files},
+                )
+            except FileExistsError:
+                raise RuntimeError(
+                    f"KGPipeline: another run planned {chunk_unit(i)} of "
+                    f"{self.out_dir} first; this run planned nothing more. "
+                    "Re-run once it has finished."
+                ) from None
+            plans[i] = files
+        return plans
+
+    def _due(self, step: Step, covered: str, n: int) -> bool:
+        """True if the corpus stage ``step`` still has to run: its step
+        is not reached, or it covered another number of chunks than the
+        ``n`` planned (a growth run). The gate is asked first, always,
+        so a caller that hooks it sees every corpus stage."""
+        return self.state.gate(CORPUS, step) or self.state.metrics(CORPUS).get(covered, n) != n
 
     def post_check(self) -> bool:
         """``edges`` per chunk and ``nodes`` as a whole, as their Parquet
@@ -212,8 +291,8 @@ class KGPipeline:
             # types the ``chunk=i`` directories: no chunk's write has it
             "schema": StructType().add("chunk", IntegerType()).jsonValue(),
             "audit": [
-                {"chunk": i, **self.state.metrics(u)["audit"]}
-                for i, u in enumerate(self.units())
+                {"chunk": i, **self.state.metrics(chunk_unit(i))["audit"]}
+                for i in self.plans()
             ],
         }
         nodes = {"schema": corpus["schema"], "audit": [corpus["audit"]]}
@@ -237,34 +316,9 @@ class KGPipeline:
         return tableio.read_recorded(self.spark, self.path(table), self.state.metrics(unit))
 
 
-def input_files(transcripts: DataFrame) -> list[str]:
-    """The sorted files of ``transcripts``, which must be a bare parquet
-    file scan (``tableio.parquet_files``); anything else is refused.
-    Neither the listing nor the check runs a job."""
-    files = tableio.parquet_files(transcripts)
-    if files is None:
-        plan = transcripts._jdf.queryExecution().analyzed()
-        raise ValueError(
-            "KGPipeline(n_chunks > 1) reads each chunk from a slice of the "
-            "input's files, so transcripts must be a bare parquet scan "
-            "(spark.read.parquet(path), no partition directories, nothing "
-            f"on top); got a {plan.getClass().getSimpleName()} plan. Write "
-            "the frame as parquet first, or use n_chunks=1."
-        )
-    return sorted(files)
-
-
-def files_digest(files: list[str]) -> str:
-    """sha256 of a sorted file list, one path per line."""
-    return hashlib.sha256("\n".join(files).encode()).hexdigest()
-
-
-def recorded_layout(record: dict) -> tuple[int, str]:
-    """(n_chunks, file-list digest) of a ``corpus`` record. A store from
-    before the layout was recorded ran one chunk, and one from before
-    the digest keeps the list itself."""
-    digest = record.get("files_sha256", files_digest(record.get("files", [])))
-    return record.get("n_chunks", 1), digest
+def chunk_unit(i: int) -> str:
+    """The unit name of chunk ``i``."""
+    return f"chunk_{i:05d}"
 
 
 def check_conversations_complete(transcripts: DataFrame) -> None:
@@ -280,11 +334,11 @@ def check_conversations_complete(transcripts: DataFrame) -> None:
     )
     if not split.isEmpty():
         raise ValueError(
-            "KGPipeline(n_chunks > 1) needs conversation-complete input "
-            f"files, but conversation {split.first()['conv_id']!r} spans "
-            "more than one file. Write the input with "
-            "df.repartition(k, 'conv_id') before the parquet write, or "
-            "use n_chunks=1."
+            "KGPipeline needs conversation-complete input files once a "
+            f"store holds more than one chunk, but conversation "
+            f"{split.first()['conv_id']!r} spans more than one file. Write "
+            "the input with df.repartition(k, 'conv_id') before the "
+            "parquet write, or use n_chunks=1 in a new store."
         )
 
 

@@ -79,12 +79,14 @@ class StateStore:
     def set(self, unit: str, step: Step, **metrics) -> None:
         """Advance a unit's step and merge ``metrics`` into its record,
         so what an earlier stage recorded survives the later ones. Never
-        moves backwards, and commits nothing if the record is unchanged;
-        a race lost to a writer of the same unit re-reads and retries."""
+        moves backwards: a stage that runs again after a later one (a
+        corpus stage of a growth run) merges its metrics and keeps the
+        later step. Commits nothing if the record is unchanged; a race
+        lost to a writer of the same unit re-reads and retries."""
         while True:
             version, old = self._head(unit)
-            record = {**old, **metrics, "step": int(step)}
-            if step < old["step"] or record == old:
+            record = {**old, **metrics, "step": max(int(step), old["step"])}
+            if record == old:
                 return
             try:
                 commit(os.path.join(self.log_dir, unit), version + 1, record)

@@ -1,30 +1,23 @@
-"""Incremental ingestion via Structured Streaming.
+"""Incremental rollups via Structured Streaming: the epoch stores.
 
 The reference is batch-only; its incremental behaviors are a resumable
 chunk loop with idempotent step gates (reference: main.py:65,
-process.py:279-282, DESIGN.md:119-129). The Spark-native upgrade is
-Structured Streaming with checkpointed sinks, each committed through a
-log:
+process.py:279-282, DESIGN.md:119-129). Incremental KG input is
+``pipeline.KGPipeline``'s: new input files become new chunk units of
+the same store. What is incremental here is two live views over a
+stream of triples, each committed through a log:
 
-- ``incremental_extract``: readStream over a transcripts directory ->
-  ``foreachBatch`` running the SAME batch chain (extraction, then
-  ``linking.kg_chain`` through the canonical dictionary) per
-  micro-batch. Each micro-batch's triples land under their own
-  ``epoch=N`` partition and are committed to ``<out>/_log/``;
-  ``read_triples`` reads only the committed epochs. The streaming
-  checkpoint replaces the reference's JSONL step files: a killed job
-  resumes at the next uncommitted batch with no duplicate output.
 - ``merge_triple_support`` / ``merge_current_beliefs`` (and
   ``incremental_current_beliefs``, the foreachBatch wrapper of the
   second): each micro-batch lands as one partial aggregate under its
   own ``epoch=N`` partition, reads reduce the live partials, and
   ``compact_*`` folds them into one generation.
 
-All three sinks share one commit protocol (``_merge_epoch``): the live
-set is a ``checkpoint`` commit log under ``<store>/_log/``. A replay of
-a committed epoch is a no-op, a merge or compaction that dies before
-its commit stays invisible, and of two writers racing for a version
-the loser retries (merge) or raises (compaction). See the commit-log
+Both sinks share one commit protocol (``_merge_epoch``): the live set
+is a ``checkpoint`` commit log under ``<store>/_log/``. A replay of a
+committed epoch is a no-op, a merge or compaction that dies before its
+commit stays invisible, and of two writers racing for a version the
+loser retries (merge) or raises (compaction). See the commit-log
 section below.
 
 Invariant: a micro-batch must contain whole conversations (the
@@ -44,68 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..operators import extract, linking
 from ..plans import checkpoint
 from ..sources import tableio
-from ..sources.transcript_source import TRANSCRIPT_DDL
-
-
-def _drain(stream: DataFrame, process_batch, checkpoint_dir: str):
-    """Start ``process_batch`` on every micro-batch of ``stream`` under
-    an availableNow trigger (drain what is there, then stop); returns
-    the query. The checkpoint resumes a killed query at the next
-    uncommitted batch."""
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_transcripts(
-    spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    reader = spark.readStream.schema(TRANSCRIPT_DDL)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_dir)
-
-
-def incremental_extract(
-    stream: DataFrame,
-    canon_dict: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Start an availableNow foreachBatch pipeline; returns the query.
-
-    Each micro-batch runs the identical batch operators (no separate
-    streaming code path to drift) and merges its canonical triples into
-    ``out_dir`` as one epoch (``_merge_epoch``); read them with
-    :func:`read_triples`. ``canon_dict`` is the alias dictionary
-    composed with the same-as components
-    (``canonicalize.apply_canonical``), as in ``KGPipeline``.
-    Micro-batches hold whole conversations, so the per-batch distinct
-    is the corpus-wide one.
-    """
-
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # foreachBatch is at-least-once: a batch that died before its
-        # log commit re-runs on restart and rewrites only its own
-        # partition, and a replay of a committed epoch writes nothing
-        # (the Spark-native form of the reference's skip-if-done step
-        # gates, reference: process.py:279-282).
-        triples = linking.kg_chain(extract.extract_mentions(batch_df), canon_dict)
-        _merge_epoch(triples, out_dir, epoch_id)
-
-    return _drain(stream, process_batch, checkpoint_dir)
-
-
-def read_triples(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The triples of every epoch ``incremental_extract`` committed to
-    ``out_dir``; a partition whose commit never happened is not read."""
-    return _live_partials(spark, out_dir, _head(out_dir)[1]).drop("epoch")
 
 
 def merge_triple_support(batch: DataFrame, out_dir: str, epoch_id: int) -> None:
@@ -251,14 +184,19 @@ def incremental_current_beliefs(
     stream_triples: DataFrame, out_dir: str, checkpoint_dir: str
 ):
     """Streaming wrapper: foreachBatch(merge_current_beliefs) with an
-    availableNow trigger; the streaming checkpoint resumes a killed job
-    at the next uncommitted batch and a replayed batch is merged at
-    most once."""
+    availableNow trigger (drain what is there, then stop); returns the
+    query. The streaming checkpoint resumes a killed job at the next
+    uncommitted batch and a replayed batch is merged at most once."""
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         merge_current_beliefs(batch_df, out_dir, epoch_id)
 
-    return _drain(stream_triples, process_batch, checkpoint_dir)
+    return (
+        stream_triples.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 # --------------------------------------------------------------------------
@@ -296,8 +234,7 @@ def incremental_current_beliefs(
 #
 # Reads take exactly the newest version's live set (``epoch IN live``
 # prunes partitions, not rows), so a partition whose merge or
-# compaction died before its commit is invisible by construction. The
-# extracted-triples store is merged the same way and never compacted.
+# compaction died before its commit is invisible by construction.
 # --------------------------------------------------------------------------
 
 
