@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from wikidata_pq_spark import datagen, oracle, pipeline
 from wikidata_pq_spark.operators import canonicalize
 from wikidata_pq_spark.pipeline import KGPipeline
+from wikidata_pq_spark.plans import checkpoint
 from wikidata_pq_spark.plans.checkpoint import StateStore, Step
 from wikidata_pq_spark.sources import tableio
 
@@ -283,8 +284,8 @@ def test_chunks_partition_conversations(spark, spark_corpus, tmp_path):
 def test_file_chunks_layout_and_rerun_skip(spark, parquet_corpus, tmp_path):
     """Chunks read slices of the input's files: no copy of the input
     (``staged/``) and no unit for it (``_log/_staging``). Each chunk's
-    record keeps its contiguous slice of the sorted file list, its
-    plan; the ``corpus`` record keeps no file list, only how many
+    log keeps its contiguous slice of the sorted file list, its plan,
+    in version 0 only; the ``corpus`` record keeps no file list, only how many
     chunks MATERIALIZED and VERIFIED covered. A re-run of the completed
     store writes nothing."""
     out = tmp_path / "kg"
@@ -295,7 +296,9 @@ def test_file_chunks_layout_and_rerun_skip(spark, parquet_corpus, tmp_path):
     files = sorted(parquet_corpus["transcripts"].inputFiles())
     assert len(files) == 8
     assert pipe.plans() == {i: files[2 * i:2 * i + 2] for i in range(4)}
-    assert [pipe.state.metrics(u)["files"] for u in pipe.units()] == list(pipe.plans().values())
+    logs = [str(out / "_log" / u) for u in pipe.units()]
+    assert [checkpoint.read(log, 0)["files"] for log in logs] == list(pipe.plans().values())
+    assert not any("files" in pipe.state.metrics(u) for u in pipe.units())
     record = pipe.state.metrics("corpus")
     assert not {"n_chunks", "files", "files_sha256"} & set(record)
     assert (record["materialized_chunks"], record["verified_chunks"]) == (4, 4)
@@ -419,6 +422,24 @@ def test_grown_store_equals_one_shot(spark, parquet_corpus, corpus, tmp_path):
     assert _tset(pipe.triples()) == _tset(one.triples()) == _golden(corpus)
     nodes = [sorted(r[0] for r in p.nodes().collect()) for p in (pipe, one)]
     assert nodes[0] == nodes[1]
+
+
+def test_store_with_plans_in_linked_versions_grows(spark, parquet_corpus, corpus, tmp_path):
+    """A store whose chunks' LINKED versions repeat their plan's
+    ``files``, as stores written before plans were kept in version 0
+    only do, still grows: its plans are read from version 0."""
+    out = str(tmp_path / "kg")
+    old = KGPipeline(spark, out, n_chunks=4)
+    old.state.plan_keys = ()  # the merge that carried ``files`` along
+    _run(old, _first_files(spark, parquet_corpus))
+    assert all("files" in old.state.metrics(u) for u in old.units())
+
+    pipe = KGPipeline(spark, out, n_chunks=4)
+    _run(pipe, parquet_corpus)
+    files = sorted(parquet_corpus["transcripts"].inputFiles())
+    assert pipe.plans() == {i: files[i:i + 1] for i in range(8)}
+    assert _tset(pipe.triples()) == _golden(corpus)
+    assert pipe.post_check()
 
 
 @pytest.mark.parametrize("kill", ["linked", "nodes"])

@@ -2,7 +2,16 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
+import pytest
+from pyspark.find_spark_home import _find_spark_home
+
 from wikidata_pq_spark import session
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _host_with_gib(gib):
@@ -104,7 +113,171 @@ def test_driver_jvm_runs_two_jit_compiler_threads(spark):
     runtime = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
     assert "-XX:CICompilerCount=2" in list(runtime.getInputArguments())
     conf = spark.sparkContext.getConf()
-    assert conf.get("spark.driver.defaultJavaOptions") == session.JIT_JAVA_OPTIONS
+    options = conf.get("spark.driver.defaultJavaOptions")
+    assert options.startswith(session.JIT_JAVA_OPTIONS + " ") or options == session.JIT_JAVA_OPTIONS
     assert "CICompilerCount" not in (conf.get("spark.driver.extraJavaOptions") or "")
+    # the rest is the class-data archive flag that archive_rule gives
+    rest = options[len(session.JIT_JAVA_OPTIONS):].strip()
+    cache, key = _archive_key()
+    action, path = session.archive_rule(cache, key, _spark_conf_dir())
+    if any(map(os.environ.get, session._CLASS_PATH_ENV)):
+        action = "off"  # the class path holds more than the conf dir and jars
+    if action == "share":
+        assert rest == f"-XX:SharedArchiveFile={path}"
+    elif action == "record":  # no flag if another session records
+        tmp = os.path.join(cache, f"{key}.{os.getpid()}.tmp")
+        assert rest in ("", f"-XX:ArchiveClassesAtExit={tmp} -Xlog:cds=off")
+    else:
+        assert rest == ""
     page = spark.sparkContext._jsc.sc().env().memoryManager().pageSizeBytes()
     assert page == session._default_page_size(conf.get("spark.driver.memory"))
+
+
+def _archive_key(xdg_cache=None):
+    """The cache dir and the archive key of a driver JVM launched now,
+    with ``$XDG_CACHE_HOME`` at ``xdg_cache`` if given."""
+    with pytest.MonkeyPatch.context() as mp:
+        if xdg_cache is not None:
+            mp.setenv("XDG_CACHE_HOME", str(xdg_cache))
+        cache = session._cache_dir()
+    conf = os.path.join(cache, "conf")
+    return cache, session.archive_key(session._java(), _find_spark_home(), conf)
+
+
+def _spark_conf_dir():
+    return os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+
+
+def _archive(path, size, body=session._ARCHIVE_MAGIC):
+    path.write_bytes(body + b"\0" * (size - len(body)))
+    return str(path)
+
+
+def test_archive_rule_decides_from_files_alone(tmp_path):
+    """The rule maps an archive only if it is complete: named
+    ``<key>-<size>.jsa``, that long, with the magic. A missing,
+    truncated or junk archive, another key's, or only the ``*.tmp`` of a
+    killed dump, records a new one; a failed dump of the key, or a conf
+    dir holding a file Spark reads, gives no flag at all."""
+    cache, conf = tmp_path / "cache", tmp_path / "conf"
+    cache.mkdir()
+    conf.mkdir()
+    (conf / "spark-defaults.conf.template").write_text("spark.master local\n")
+    rule = lambda: session.archive_rule(str(cache), "k1", str(conf))  # noqa: E731
+
+    assert rule() == ("record", None)  # missing
+    (cache / "k1.4242.tmp").write_bytes(session._ARCHIVE_MAGIC)  # a killed dump
+    _archive(cache / "k2-4096.jsa", 4096)  # another key's
+    assert rule() == ("record", None)
+    truncated = cache / "k1-8192.jsa"
+    _archive(truncated, 4096)
+    assert rule() == ("record", None)
+    truncated.unlink()
+    junk = _archive(cache / "k1-4096.jsa", 4096, body=b"junk")
+    assert rule() == ("record", None)
+    os.remove(junk)
+    complete = _archive(cache / "k1-4096.jsa", 4096)
+    assert rule() == ("share", complete)
+
+    (conf / "spark-defaults.conf").write_text("spark.master local\n")
+    assert rule() == ("off", None)
+    (conf / "spark-defaults.conf").unlink()
+    os.remove(complete)
+    (cache / "k1.failed").touch()
+    assert rule() == ("off", None)
+
+
+class _ExitedJvm:
+    """A driver JVM process that has exited with ``returncode``."""
+
+    def __init__(self, returncode):
+        self.returncode = returncode
+
+    def poll(self):
+        return self.returncode
+
+
+def test_recording_installs_only_a_probed_archive(tmp_path, monkeypatch):
+    """One session per key records: a second one gets no lock while the
+    first holds it. Taking the lock removes a killed dump's ``*.tmp``. A
+    dump the probe maps becomes the key's one ``<key>-<size>.jsa``
+    (other archives of the key are removed); one it rejects, or a JVM
+    that exited 0 without one, leaves ``<key>.failed``, which turns
+    the rule off; a JVM that died before its dump leaves nothing."""
+    cache = tmp_path
+    (cache / "k1.4242.tmp").write_bytes(b"partial")
+    _archive(cache / "k1-8192.jsa", 4096)  # truncated
+    rec = session._Recording.start("java", str(cache), "k1")
+    assert rec is not None and not (cache / "k1.4242.tmp").exists()
+    assert session._Recording.start("java", str(cache), "k1") is None
+    _archive(tmp_path / f"k1.{os.getpid()}.tmp", 4096)
+    rec.proc = _ExitedJvm(0)
+    monkeypatch.setattr(session._Recording, "_probe", lambda self: True)
+    rec.finish()
+    assert sorted(os.listdir(cache)) == ["k1-4096.jsa", "k1.lock"]
+    assert session.archive_rule(str(cache), "k1", str(tmp_path / "conf"))[0] == "share"
+
+    (cache / "k1-4096.jsa").unlink()
+    rec = session._Recording.start("java", str(cache), "k1")
+    rec.proc = _ExitedJvm(-9)  # killed before its dump
+    rec.finish()
+    assert sorted(os.listdir(cache)) == ["k1.lock"]
+
+    rec = session._Recording.start("java", str(cache), "k1")
+    _archive(tmp_path / f"k1.{os.getpid()}.tmp", 4096)
+    rec.proc = _ExitedJvm(0)
+    monkeypatch.setattr(session._Recording, "_probe", lambda self: False)
+    rec.finish()
+    assert sorted(os.listdir(cache)) == ["k1.failed", "k1.lock"]
+    assert session.archive_rule(str(cache), "k1", str(tmp_path / "conf")) == ("off", None)
+
+
+SESSION_SCRIPT = """
+import os
+from wikidata_pq_spark.session import get_spark
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+print("options", spark.sparkContext.getConf().get("spark.driver.defaultJavaOptions"))
+print("rows", spark.range(100).filter("id % 7 = 0").count())
+print("jvm", spark.sparkContext._gateway.proc.pid, flush=True)
+"""
+
+
+def test_truncated_archive_neither_fails_nor_is_mapped(tmp_path):
+    """A session whose cache holds a truncated archive under the
+    current key -- a real dynamic archive of this JDK and class path,
+    cut to half, which crashes a JVM that maps it -- starts, runs a
+    query and exits 0. It records a new archive instead, and at exit
+    its JVM has finished the dump and is gone, and the cache holds the
+    key's one complete archive."""
+    cache, key = _archive_key(tmp_path)
+    spark_conf = os.path.join(_find_spark_home(), "conf")
+    if session.archive_rule(cache, key, spark_conf)[0] == "off":
+        pytest.skip("Spark's conf dir holds a file Spark reads: sessions map no archive")
+    os.makedirs(os.path.join(cache, "conf"))
+    full = tmp_path / "full.jsa"
+    class_path = os.path.join(cache, "conf") + "/:" + os.path.join(_find_spark_home(), "jars", "*")
+    subprocess.run(
+        [session._java(), f"-XX:ArchiveClassesAtExit={full}", "-Xlog:cds=off",
+         "-cp", class_path, "-version"],
+        check=True, capture_output=True, timeout=120,
+    )
+    size = full.stat().st_size
+    truncated = os.path.join(cache, f"{key}-{size}.jsa")
+    with open(full, "rb") as src, open(truncated, "wb") as dst:
+        dst.write(src.read(size // 2))
+
+    env = {**os.environ, "XDG_CACHE_HOME": str(tmp_path), "SPARK_DRIVER_MEM": "1g",
+           "PYTHONPATH": os.pathsep.join(filter(None, (ROOT, os.environ.get("PYTHONPATH"))))}
+    for name in ("SPARK_CONF_DIR", *session._CLASS_PATH_ENV):
+        env.pop(name, None)
+    run = subprocess.run([sys.executable, "-c", SESSION_SCRIPT], env=env, cwd=tmp_path,
+                         capture_output=True, text=True, timeout=600)
+    assert run.returncode == 0, run.stderr[-2000:]
+    lines = dict(line.split(" ", 1) for line in run.stdout.splitlines() if " " in line)
+    assert lines["rows"] == "15"
+    assert "-XX:ArchiveClassesAtExit=" in lines["options"]
+    assert "SharedArchiveFile" not in lines["options"]
+    with pytest.raises(ProcessLookupError):
+        os.kill(int(lines["jvm"]), 0)
+    (archive,) = [n for n in os.listdir(cache) if n.endswith((".jsa", ".tmp", ".failed"))]
+    assert session.archive_rule(cache, key, spark_conf) == ("share", os.path.join(cache, archive))

@@ -18,7 +18,14 @@ output it prints a table and one JSON line, ``jvm_threads {...}``:
 - ``gc``: the iteration's GC pauses counted by kind and cause, such as
   ``Pause Young (Concurrent Start) (G1 Humongous Allocation)``;
 - ``jvm_args``: the JVM's ``-X`` input arguments, and ``page_bytes``,
-  its Tungsten page size.
+  its Tungsten page size;
+- ``archive``: the class-data archive the JVM mapped on top of the
+  JDK's default one (``file``, null if none, and ``archived``, the
+  classes it holds, from ``jcmd <pid> VM.systemdictionary``), and the
+  classes the JVM had loaded by the iteration's end, in all and from
+  the shared archives, the JDK's default one included (``loaded``,
+  ``shared``, from ``jcmd <pid> VM.metaspace``). Both work with
+  perfbench's ``-XX:-UsePerfData``.
 
 The sampling thread and the GC log cost a little CPU of their own, so
 compare runs of this tool with each other, not with perfbench's numbers.
@@ -127,6 +134,31 @@ def log_gc(pid: int, path: str) -> None:
                    check=True, capture_output=True, timeout=60)
 
 
+def jcmd(pid: int, *command: str) -> str:
+    return subprocess.run(["jcmd", str(pid), *command], check=True,
+                          capture_output=True, text=True, timeout=60).stdout
+
+
+CLASSES = re.compile(r"(\d+) classes \((\d+) shared\)")
+DYNAMIC = re.compile(r"Dynamic Builtin Shared Dictionary statistics:\n.*\n"
+                     r"Number of entries\s*:\s*(\d+)")
+
+
+def archive_report(pid: int, jvm_args: list) -> dict:
+    """The archive JVM ``pid`` mapped beyond the JDK's default one, and
+    the classes it has loaded in all and from the shared archives."""
+    loaded, shared = map(int, CLASSES.search(jcmd(pid, "VM.metaspace")).groups())
+    dynamic = DYNAMIC.search(jcmd(pid, "VM.systemdictionary"))
+    flag = "-XX:SharedArchiveFile="
+    files = [a[len(flag):] for a in jvm_args if a.startswith(flag)]
+    return {
+        "file": files[-1] if dynamic and files else None,
+        "archived": int(dynamic[1]) if dynamic else 0,
+        "loaded": loaded,
+        "shared": shared,
+    }
+
+
 GC_PAUSE = re.compile(r"\[gc\s*\] GC\(\d+\) (Pause .*?) \d+[KMG]->")
 
 
@@ -169,6 +201,7 @@ def main(argv=None) -> int:
             sampler.stop()
             found["groups"] = sampler.report()
             found["gc"] = gc_counts(log_path)
+            found["archive"] = archive_report(pid, found["jvm_args"])
 
     run.run_once = watched_run_once
     with log_dir:
@@ -179,6 +212,9 @@ def main(argv=None) -> int:
         print(f"{group:>16} {cpu:7.2f} s")
     for pause, n in sorted(found["gc"].items()):
         print(f"{n:>16} x {pause}")
+    archive = found["archive"]
+    print(f"{'archive':>16} {archive['file'] or 'none'} ({archive['archived']} classes)")
+    print(f"{'classes':>16} {archive['shared']} of {archive['loaded']} loaded from shared archives")
     print("jvm_threads " + json.dumps(found))
     return 0
 

@@ -11,7 +11,8 @@ unit kind:
   chunk_NNNNN   PLAN (version 0, before any stage runs): ``files``,
                 the chunk's slice of the input's sorted parquet files
                 (Delta's add-file entry), null for an input that is not
-                a bare parquet scan; see ``KGPipeline``
+                a bare parquet scan; see ``KGPipeline``. Later versions
+                do not repeat it
   corpus        CANONICALIZED: the same-as connected components,
                 computed once per store and written as ``components``
                 (``canonicalize.write_components``: on the driver path
@@ -109,7 +110,8 @@ class KGPipeline:
         self.spark = spark
         self.out_dir = out_dir
         self.n_chunks = n_chunks
-        self.state = StateStore(os.path.join(out_dir, "_log"))
+        # a chunk's plan, ``files``, is its version 0 only
+        self.state = StateStore(os.path.join(out_dir, "_log"), plan_keys=("files",))
 
     # -- paths ---------------------------------------------------------
     def path(self, name: str) -> str:
@@ -119,17 +121,17 @@ class KGPipeline:
         return [chunk_unit(i) for i in self.plans()]
 
     def plans(self) -> dict[int, list[str] | None]:
-        """Each planned chunk's files, by chunk index, listed from the
-        log: a unit directory with no committed version (a plan commit
-        that died) is no chunk."""
+        """Each planned chunk's files, by chunk index, read from version
+        0 of its log, its plan: a unit directory with no version 0 (a
+        plan commit that died) is no chunk."""
         log = self.state.log_dir
         names = sorted(os.listdir(log)) if os.path.isdir(log) else []
         plans = {}
         for name in names:
             if name.startswith("chunk_"):
-                version, record = checkpoint.head(os.path.join(log, name))
-                if version >= 0:
-                    plans[int(name[len("chunk_"):])] = record.get("files")
+                plan = checkpoint.read(os.path.join(log, name), 0)
+                if plan is not None:
+                    plans[int(name[len("chunk_"):])] = plan.get("files")
         return plans
 
     # -- stages --------------------------------------------------------

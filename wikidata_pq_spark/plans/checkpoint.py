@@ -38,6 +38,16 @@ def head(log_dir: str) -> tuple[int, dict]:
         return version, json.load(fh)
 
 
+def read(log_dir: str, version: int) -> dict | None:
+    """The snapshot committed as ``version`` under ``log_dir``; None if
+    that version was never committed."""
+    try:
+        with open(os.path.join(log_dir, f"{version:020d}.json")) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return None
+
+
 def commit(log_dir: str, version: int, snapshot: dict) -> None:
     """Install ``snapshot`` as ``version``; raises FileExistsError if
     another writer committed that version first."""
@@ -64,10 +74,15 @@ class Step(IntEnum):
 
 
 class StateStore:
-    """One commit log per unit under ``log_dir``, with idempotent gates."""
+    """One commit log per unit under ``log_dir``, with idempotent gates.
 
-    def __init__(self, log_dir: str):
+    ``plan_keys`` are keys a unit's version 0 holds (its plan, read with
+    ``read(<log_dir>/<unit>, 0)``) that ``set`` does not carry into the
+    versions after it."""
+
+    def __init__(self, log_dir: str, plan_keys: tuple[str, ...] = ()):
         self.log_dir = log_dir
+        self.plan_keys = plan_keys
 
     def _head(self, unit: str) -> tuple[int, dict]:
         version, record = head(os.path.join(self.log_dir, unit))
@@ -86,6 +101,8 @@ class StateStore:
         while True:
             version, old = self._head(unit)
             record = {**old, **metrics, "step": max(int(step), old["step"])}
+            for key in self.plan_keys:
+                record.pop(key, None)
             if record == old:
                 return
             try:

@@ -16,23 +16,48 @@ session spark-submit gives them.
 ``get_spark`` also sizes the driver JVM it launches for ``local[N]``:
 the heap (``spark.driver.memory``), two JIT compiler threads
 (``JIT_JAVA_OPTIONS``) and Tungsten pages sized to that heap
-(``_default_page_size``). The ``jobs/`` entry points cannot apply the
-last two: the thread cap is a launch option of the JVM that
-spark-submit started before the script runs, and the page size must
-follow the heap spark-submit gave it. Pass both on the spark-submit
-command line, with the page size that ``_default_page_size`` gives for
-the ``--driver-memory`` (4194288 at 7g):
+(``_default_page_size``). And it starts that JVM from a class-data
+archive of the classes an earlier session loaded (``archive_rule``):
+the first session on a host writes it when it exits, under
+``$XDG_CACHE_HOME/wikidata_pq_spark/``, and later ones map it: a
+session start took ~8 calibrated CPU s in perfbench, not ~15.
 
+The ``jobs/`` entry points cannot apply the last three: the thread cap
+and the archive are launch options of the JVM that spark-submit
+started before the script runs, and the page size must follow the heap
+spark-submit gave it. Pass them on the spark-submit command line, with
+the page size that ``_default_page_size`` gives for the
+``--driver-memory`` (4194288 at 7g). The archive needs an empty conf
+dir, as JDK 17's class-data sharing refuses a non-empty directory on
+the class path, and Spark puts the conf dir there; a conf dir of
+``*.template`` files only sets nothing, so an empty one changes no
+setting. The archive a ``get_spark`` session wrote on the host,
+``<key>-<size>.jsa`` in the cache, serves if the conf dir is the
+cache's empty ``conf/``. A JVM ignores an archive of another class
+path with a warning; a missing or junk file turns its class-data
+sharing off, the JDK's default archive included:
+
+    SPARK_CONF_DIR=~/.cache/wikidata_pq_spark/conf \\
     spark-submit --master local[4] --driver-memory 7g \\
-        --conf spark.driver.defaultJavaOptions=-XX:CICompilerCount=2 \\
+        --conf "spark.driver.defaultJavaOptions=-XX:CICompilerCount=2 \\
+            -XX:SharedArchiveFile=$HOME/.cache/wikidata_pq_spark/<key>-<size>.jsa" \\
         --conf spark.buffer.pageSize=4194288 ...
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import fcntl
+import glob
+import hashlib
+import json
 import os
 import re
+import shutil
+import subprocess
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -128,6 +153,240 @@ def _default_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
+# -- the driver JVM's class-data archive ---------------------------------
+#
+# JDK 17's dynamic CDS archive: the classes a JVM loaded, parsed and
+# verified, written when it exits (-XX:ArchiveClassesAtExit) and mapped
+# by the next JVMs of the same JDK and class path
+# (-XX:SharedArchiveFile) in place of loading them again.
+# A cold kg_batch iteration's JVM loads ~23k classes, ~1.3k of them
+# from the JDK's default archive; with an archive of a whole session,
+# 15.3k (tools/jvm_threads.py), and perfbench's setup_s fell from 16.7
+# to 9.5 calibrated CPU s (ARCHITECTURE.md).
+
+# a dynamic archive's magic, 0xf00baba8, as its first four bytes
+_ARCHIVE_MAGIC = b"\xa8\xab\x0b\xf0"
+# bounds on the wait for the driver JVM to exit at interpreter exit; a
+# recording one dumps first, 11.6 s of preparation and 0.3 s of
+# writing on a 4-core host
+_EXIT_TIMEOUT_S = 60
+_DUMP_TIMEOUT_S = 180
+# what puts more than the conf dir and the jars on the driver's class
+# path (Spark's launcher, AbstractCommandBuilder.buildClassPath)
+_CLASS_PATH_ENV = (
+    "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
+    "SPARK_PREPEND_CLASSES", "SPARK_TESTING", "SPARK_SQL_TESTING",
+)
+
+
+def _cache_dir() -> str:
+    """``$XDG_CACHE_HOME/wikidata_pq_spark``, default ``~/.cache/...``:
+    the archives are per-host artifacts, like pip's cache."""
+    root = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    return os.path.join(root, "wikidata_pq_spark")
+
+
+def _java() -> str | None:
+    """The java Spark's launcher runs: ``$JAVA_HOME/bin/java``, else
+    the one on the PATH."""
+    java_home = os.environ.get("JAVA_HOME")
+    return os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+
+
+def _listdir(path: str) -> list[str]:
+    return os.listdir(path) if os.path.isdir(path) else []
+
+
+def archive_key(java: str, spark_home: str, conf_dir: str) -> str:
+    """Digest of what decides whether a driver JVM accepts an archive:
+    the JDK (its real ``java.home``, and the size and mtime of its
+    ``release`` file and ``libjvm.so``) and the class path Spark's
+    launcher gives it (``conf_dir``, and the name, size and mtime of
+    each jar under ``<spark_home>/jars``). An archive the JVM would
+    reject lives under another key, so a changed JDK or jar records a
+    new one. Raises OSError if a part is missing."""
+    home = os.path.dirname(os.path.dirname(os.path.realpath(java)))
+    parts: list = [home, conf_dir]
+    for name in ("release", "lib/server/libjvm.so"):
+        st = os.stat(os.path.join(home, name))
+        parts.append([name, st.st_size, st.st_mtime_ns])
+    with os.scandir(os.path.join(spark_home, "jars")) as jars:
+        for jar in sorted(jars, key=lambda e: e.name):
+            st = jar.stat()
+            parts.append([jar.name, st.st_size, st.st_mtime_ns])
+    return hashlib.sha256(json.dumps(parts).encode()).hexdigest()[:24]
+
+
+def _is_archive(path: str, size: int) -> bool:
+    """``path`` is ``size`` bytes long and starts with the magic."""
+    try:
+        with open(path, "rb") as fh:
+            return os.fstat(fh.fileno()).st_size == size and fh.read(4) == _ARCHIVE_MAGIC
+    except OSError:
+        return False
+
+
+def archive_rule(cache: str, key: str, conf_dir: str) -> tuple[str, str | None]:
+    """What a driver JVM launched now does with the archive of ``key``
+    under ``cache``, decided from files alone (no JVM):
+
+    - ``("off", None)``: launch it as without an archive. ``conf_dir``
+      (the conf dir Spark would use) holds something other than
+      ``*.template`` files: Spark reads them, and CDS refuses a
+      non-empty directory on the class path. Or a dump of ``key``
+      failed before (``<key>.failed``): only one session pays for it.
+    - ``("share", path)``: map ``path``, a complete archive, named
+      ``<key>-<size>.jsa`` once a probe JVM mapped it: it is ``size``
+      bytes and starts with the magic.
+    - ``("record", None)``: write one at exit. The archive is missing,
+      truncated (a truncated archive crashes the JVM that maps it with
+      SIGBUS), junk, or a killed dump left only its ``*.tmp``.
+    """
+    if any(not name.endswith(".template") for name in _listdir(conf_dir)):
+        return "off", None
+    named = re.compile(re.escape(key) + r"-(\d+)\.jsa")
+    for name in sorted(_listdir(cache)):
+        m = named.fullmatch(name)
+        if m and _is_archive(os.path.join(cache, name), int(m[1])):
+            return "share", os.path.join(cache, name)
+    if os.path.exists(os.path.join(cache, key + ".failed")):
+        return "off", None
+    return "record", None
+
+
+def _stop_jvm(proc, timeout: float) -> bool:
+    """Close the driver JVM's stdin, on whose EOF it exits, and wait for
+    it, killing it after ``timeout`` s; False if it was killed. Run at
+    interpreter exit, so that no JVM outlives its session's process."""
+    if proc.poll() is None:
+        proc.stdin.close()
+        try:
+            proc.wait(timeout=timeout)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+            return False
+    return True
+
+
+class _Recording:
+    """A driver JVM that writes the archive of ``key`` to a name of its
+    own when it exits. The session holds ``<key>.lock`` until then, so
+    one session per key records. At interpreter exit ``finish`` waits
+    for the JVM and gives the archive its ``<key>-<size>.jsa`` name
+    only once a probe JVM mapped it; a dump that fails leaves
+    ``<key>.failed`` instead."""
+
+    def __init__(self, java: str, cache: str, key: str, lock):
+        self.java, self.cache, self.key, self.lock = java, cache, key, lock
+        self.tmp = os.path.join(cache, f"{key}.{os.getpid()}.tmp")
+        self.proc = self.class_path = None
+
+    @classmethod
+    def start(cls, java: str, cache: str, key: str) -> _Recording | None:
+        """Take the key's lock, or None if another session holds it."""
+        lock = open(os.path.join(cache, key + ".lock"), "a")
+        try:
+            fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            lock.close()
+            return None
+        for stale in glob.glob(os.path.join(glob.escape(cache), glob.escape(key) + ".*.tmp")):
+            os.remove(stale)  # a killed dump's
+        return cls(java, cache, key, lock)
+
+    def launched(self, proc, class_path: str) -> None:
+        self.proc, self.class_path = proc, class_path
+        atexit.register(self.finish)
+
+    def finish(self) -> None:
+        try:
+            self._install()
+        finally:
+            self.lock.close()
+
+    def _install(self) -> None:
+        killed = not _stop_jvm(self.proc, _DUMP_TIMEOUT_S)
+        dumped = os.path.exists(self.tmp)
+        if self.proc.returncode != 0 and not (dumped or killed):
+            return  # the JVM died before it dumped: a later session records
+        if dumped and self.proc.returncode == 0 and self._probe():
+            size = os.path.getsize(self.tmp)
+            for old in glob.glob(os.path.join(glob.escape(self.cache), glob.escape(self.key) + "-*.jsa")):
+                os.remove(old)
+            os.replace(self.tmp, os.path.join(self.cache, f"{self.key}-{size}.jsa"))
+            return
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(self.tmp)
+        open(os.path.join(self.cache, self.key + ".failed"), "w").close()
+
+    def _probe(self) -> bool:
+        """A JVM of the same JDK and class path maps the dump and exits 0:
+        it is complete. ``-Xshare:on`` makes an archive it cannot map a
+        failure, not a warning."""
+        cmd = [
+            self.java, "-Xshare:on", f"-XX:SharedArchiveFile={self.tmp}",
+            "-XX:ErrorFile=/dev/null", "-XX:-CreateCoredumpOnCrash",
+            "-cp", self.class_path, "-version",
+        ]
+        try:
+            return subprocess.run(
+                cmd, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL, timeout=60
+            ).returncode == 0
+        except subprocess.TimeoutExpired:
+            return False
+
+
+_NO_ARCHIVE = ("", None, None)
+
+
+def _archive_launch(conf: dict) -> tuple[str, str | None, _Recording | None]:
+    """For a driver JVM about to launch with ``conf``: the archive flag,
+    the empty directory to launch it with as ``SPARK_CONF_DIR``, and the
+    recording to finish at exit (None when it maps an archive).
+    ``_NO_ARCHIVE`` to launch it as without an archive: the class path
+    holds more than the conf dir and the jars, the cache cannot be
+    written, or ``archive_rule`` says so."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    if "spark.driver.extraClassPath" in conf or any(map(os.environ.get, _CLASS_PATH_ENV)):
+        return _NO_ARCHIVE
+    java = _java()
+    if java is None:
+        return _NO_ARCHIVE
+    spark_home = _find_spark_home()
+    cache = _cache_dir()
+    empty = os.path.join(cache, "conf")
+    try:
+        os.makedirs(empty, exist_ok=True)
+        key = archive_key(java, spark_home, empty)
+        conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+        action, path = archive_rule(cache, key, conf_dir)
+        if action == "share":
+            return f"-XX:SharedArchiveFile={path}", empty, None
+        recording = _Recording.start(java, cache, key) if action == "record" else None
+    except OSError:
+        return _NO_ARCHIVE
+    if recording is None:
+        return _NO_ARCHIVE
+    # its dump logs a warning per class it leaves out, ~600 lines
+    return f"-XX:ArchiveClassesAtExit={recording.tmp} -Xlog:cds=off", empty, recording
+
+
+@contextlib.contextmanager
+def _environ(name: str, value: str):
+    """``os.environ[name]`` is ``value`` inside, and as before after."""
+    old = os.environ.get(name)
+    os.environ[name] = value
+    try:
+        yield
+    finally:
+        if old is None:
+            del os.environ[name]
+        else:
+            os.environ[name] = old
+
+
 def get_spark(
     app_name: str = "wikidata_pq_spark",
     master: str | None = None,
@@ -156,6 +415,22 @@ def get_spark(
     10 perfbench runs, 4-core host). ``extra_conf`` is applied last
     and overrides any of these; the page size follows its
     ``spark.driver.memory``.
+
+    A session that launches the driver JVM starts it from the host's
+    class-data archive for this JDK and Spark class path
+    (``-XX:SharedArchiveFile`` added to ``defaultJavaOptions``, with
+    ``SPARK_CONF_DIR`` an empty cache dir for the launch), which cut
+    perfbench's ``setup_s`` on ``kg_batch`` from 16.7 to 9.5 calibrated
+    CPU s (medians of 10 pairs, 4-core host; ARCHITECTURE.md). With no
+    complete archive yet, one session per key records it
+    (``-XX:ArchiveClassesAtExit``): its start is slower, and at
+    interpreter exit it waits, bounded, for its JVM to exit and write
+    the archive, which takes ~12 s. Any session that launched the JVM
+    waits for it at exit, so that it does not outlive the Python
+    process. No archive flag is added, and ``SPARK_CONF_DIR`` is left
+    alone, if Spark's conf dir holds a file it reads, ``extra_conf``
+    sets ``defaultJavaOptions``, the class path holds more than the
+    conf dir and the jars, or the cache cannot be written.
     """
     cpus = _default_cpus()
     if master is None:
@@ -201,6 +476,26 @@ def get_spark(
     conf.setdefault(
         "spark.buffer.pageSize", str(_default_page_size(conf["spark.driver.memory"]))
     )
-    spark = builder.config(map=conf).getOrCreate()
+    # this call launches the driver JVM: none runs, and none was given
+    launching = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+    flag, conf_dir, recording = _NO_ARCHIVE
+    if launching and conf["spark.driver.defaultJavaOptions"] == JIT_JAVA_OPTIONS:
+        flag, conf_dir, recording = _archive_launch(conf)
+    if flag:
+        conf["spark.driver.defaultJavaOptions"] += " " + flag
+    try:
+        with _environ("SPARK_CONF_DIR", conf_dir) if conf_dir else contextlib.nullcontext():
+            spark = builder.config(map=conf).getOrCreate()
+    except BaseException:
+        if recording is not None:
+            recording.lock.close()
+        raise
+    if launching:
+        proc = spark.sparkContext._gateway.proc
+        if recording is None:
+            atexit.register(_stop_jvm, proc, _EXIT_TIMEOUT_S)
+        else:
+            jvm = spark.sparkContext._jvm
+            recording.launched(proc, jvm.java.lang.System.getProperty("java.class.path"))
     spark.sparkContext.setLogLevel("WARN")
     return spark
