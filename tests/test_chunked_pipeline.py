@@ -425,19 +425,25 @@ def test_grown_store_equals_one_shot(spark, parquet_corpus, corpus, tmp_path):
 
 
 def test_store_with_plans_in_linked_versions_grows(spark, parquet_corpus, corpus, tmp_path):
-    """A store whose chunks' LINKED versions repeat their plan's
-    ``files``, as stores written before plans were kept in version 0
-    only do, still grows: its plans are read from version 0."""
+    """A store whose chunks' records repeat their plan's ``files`` after
+    version 0, as stores written before plans were kept in version 0
+    only do, still grows: its plans are read from version 0, and the new
+    chunks' records do not repeat theirs."""
     out = str(tmp_path / "kg")
     old = KGPipeline(spark, out, n_chunks=4)
-    old.state.plan_keys = ()  # the merge that carried ``files`` along
     _run(old, _first_files(spark, parquet_corpus))
+    for unit in old.units():
+        log = os.path.join(out, "_log", unit)
+        version, record = checkpoint.head(log)
+        plan = checkpoint.read(log, 0)["files"]
+        checkpoint.commit(log, version + 1, {**record, "files": plan})
     assert all("files" in old.state.metrics(u) for u in old.units())
 
     pipe = KGPipeline(spark, out, n_chunks=4)
     _run(pipe, parquet_corpus)
     files = sorted(parquet_corpus["transcripts"].inputFiles())
     assert pipe.plans() == {i: files[i:i + 1] for i in range(8)}
+    assert not any("files" in pipe.state.metrics(u) for u in pipe.units()[4:])
     assert _tset(pipe.triples()) == _golden(corpus)
     assert pipe.post_check()
 

@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import os
+import re
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.find_spark_home import _find_spark_home
@@ -105,30 +107,36 @@ def test_page_size_follows_the_heap_and_fits_the_page_table(monkeypatch):
         assert pool / page <= 8192, heap
 
 
-def test_driver_jvm_runs_two_jit_compiler_threads(spark):
+def test_driver_jvm_runs_two_jit_compiler_threads(spark, tmp_path):
     """The session's driver JVM was launched with ``-XX:CICompilerCount=2``
     from ``spark.driver.defaultJavaOptions``, so a caller's
     ``extraJavaOptions`` is appended to it and cannot drop it, and its
     Tungsten pages follow its heap."""
     runtime = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
-    assert "-XX:CICompilerCount=2" in list(runtime.getInputArguments())
+    arguments = list(runtime.getInputArguments())
+    assert "-XX:CICompilerCount=2" in arguments
     conf = spark.sparkContext.getConf()
     options = conf.get("spark.driver.defaultJavaOptions")
     assert options.startswith(session.JIT_JAVA_OPTIONS + " ") or options == session.JIT_JAVA_OPTIONS
     assert "CICompilerCount" not in (conf.get("spark.driver.extraJavaOptions") or "")
-    # the rest is the class-data archive flag that archive_rule gives
+    # The rest is an archive flag of this key, which the JVM was given,
+    # or none: which one depends on the cache at launch (share, record,
+    # or none while another session records), and that may have changed
+    # since. There is none if the rule is off for Spark's conf dir
+    # whatever the cache holds, or the class path holds more.
     rest = options[len(session.JIT_JAVA_OPTIONS):].strip()
+    assert set(rest.split()) <= set(arguments)
     cache, key = _archive_key()
-    action, path = session.archive_rule(cache, key, _spark_conf_dir())
-    if any(map(os.environ.get, session._CLASS_PATH_ENV)):
-        action = "off"  # the class path holds more than the conf dir and jars
-    if action == "share":
-        assert rest == f"-XX:SharedArchiveFile={path}"
-    elif action == "record":  # no flag if another session records
-        tmp = os.path.join(cache, f"{key}.{os.getpid()}.tmp")
-        assert rest in ("", f"-XX:ArchiveClassesAtExit={tmp} -Xlog:cds=off")
-    else:
-        assert rest == ""
+    stem = re.escape(os.path.join(cache, key))
+    forms = [
+        "",
+        rf"-XX:SharedArchiveFile={stem}-\d+\.jsa",
+        rf"-XX:ArchiveClassesAtExit={stem}\.{os.getpid()}\.tmp -Xlog:cds=off",
+    ]
+    off = session.archive_rule(str(tmp_path), key, _spark_conf_dir())[0] == "off"
+    if off or any(map(os.environ.get, session._CLASS_PATH_ENV)):
+        forms = [""]
+    assert any(re.fullmatch(form, rest) for form in forms), rest
     page = spark.sparkContext._jsc.sc().env().memoryManager().pageSizeBytes()
     assert page == session._default_page_size(conf.get("spark.driver.memory"))
 
@@ -230,6 +238,36 @@ def test_recording_installs_only_a_probed_archive(tmp_path, monkeypatch):
     rec.finish()
     assert sorted(os.listdir(cache)) == ["k1.failed", "k1.lock"]
     assert session.archive_rule(str(cache), "k1", str(tmp_path / "conf")) == ("off", None)
+
+
+@pytest.mark.parametrize("outcome", ["installed", "failed"])
+def test_session_that_takes_the_lock_asks_the_rule_again(tmp_path, monkeypatch, outcome):
+    """A session that found no archive and then took the key's lock asks
+    the rule again: the session that held the lock until then may have
+    installed the archive, which it maps, or failed its dump, which
+    gives no flag. Either way it does not record, and frees the lock."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path / "spark-conf"))
+    for name in session._CLASS_PATH_ENV:
+        monkeypatch.delenv(name, raising=False)
+    cache, key = _archive_key(tmp_path)
+    archive = os.path.join(cache, f"{key}-4096.jsa")
+    start = session._Recording.start
+
+    def start_after_the_holder(java, cache, key):
+        if outcome == "installed":
+            _archive(Path(archive), 4096)
+        else:
+            Path(cache, key + ".failed").touch()
+        return start(java, cache, key)
+
+    monkeypatch.setattr(session._Recording, "start", staticmethod(start_after_the_holder))
+    flag, _, recording = session._archive_launch({})
+    assert recording is None
+    assert flag == (f"-XX:SharedArchiveFile={archive}" if outcome == "installed" else "")
+    again = start("java", cache, key)
+    assert again is not None
+    again.lock.close()
 
 
 SESSION_SCRIPT = """

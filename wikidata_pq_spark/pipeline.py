@@ -110,8 +110,7 @@ class KGPipeline:
         self.spark = spark
         self.out_dir = out_dir
         self.n_chunks = n_chunks
-        # a chunk's plan, ``files``, is its version 0 only
-        self.state = StateStore(os.path.join(out_dir, "_log"), plan_keys=("files",))
+        self.state = StateStore(os.path.join(out_dir, "_log"))
 
     # -- paths ---------------------------------------------------------
     def path(self, name: str) -> str:

@@ -74,15 +74,10 @@ class Step(IntEnum):
 
 
 class StateStore:
-    """One commit log per unit under ``log_dir``, with idempotent gates.
+    """One commit log per unit under ``log_dir``, with idempotent gates."""
 
-    ``plan_keys`` are keys a unit's version 0 holds (its plan, read with
-    ``read(<log_dir>/<unit>, 0)``) that ``set`` does not carry into the
-    versions after it."""
-
-    def __init__(self, log_dir: str, plan_keys: tuple[str, ...] = ()):
+    def __init__(self, log_dir: str):
         self.log_dir = log_dir
-        self.plan_keys = plan_keys
 
     def _head(self, unit: str) -> tuple[int, dict]:
         version, record = head(os.path.join(self.log_dir, unit))
@@ -96,13 +91,15 @@ class StateStore:
         so what an earlier stage recorded survives the later ones. Never
         moves backwards: a stage that runs again after a later one (a
         corpus stage of a growth run) merges its metrics and keeps the
-        later step. Commits nothing if the record is unchanged; a race
-        lost to a writer of the same unit re-reads and retries."""
+        later step. A record still at INIT is a plan (a ``KGPipeline``
+        chunk's version 0, read with ``read(<log_dir>/<unit>, 0)``), and
+        is not carried into the versions after it. Commits nothing if the
+        record is unchanged; a race lost to a writer of the same unit
+        re-reads and retries."""
         while True:
             version, old = self._head(unit)
-            record = {**old, **metrics, "step": max(int(step), old["step"])}
-            for key in self.plan_keys:
-                record.pop(key, None)
+            base = old if old["step"] > Step.INIT else {}
+            record = {**base, **metrics, "step": max(int(step), old["step"])}
             if record == old:
                 return
             try:

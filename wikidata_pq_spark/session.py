@@ -362,11 +362,18 @@ def _archive_launch(conf: dict) -> tuple[str, str | None, _Recording | None]:
         key = archive_key(java, spark_home, empty)
         conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
         action, path = archive_rule(cache, key, conf_dir)
-        if action == "share":
-            return f"-XX:SharedArchiveFile={path}", empty, None
         recording = _Recording.start(java, cache, key) if action == "record" else None
+        if recording is not None:
+            # the session that held the lock until now may have installed
+            # the archive, or failed its dump
+            action, path = archive_rule(cache, key, conf_dir)
+            if action != "record":
+                recording.lock.close()
+                recording = None
     except OSError:
         return _NO_ARCHIVE
+    if action == "share":
+        return f"-XX:SharedArchiveFile={path}", empty, None
     if recording is None:
         return _NO_ARCHIVE
     # its dump logs a warning per class it leaves out, ~600 lines
@@ -425,9 +432,9 @@ def get_spark(
     complete archive yet, one session per key records it
     (``-XX:ArchiveClassesAtExit``): its start is slower, and at
     interpreter exit it waits, bounded, for its JVM to exit and write
-    the archive, which takes ~12 s. Any session that launched the JVM
-    waits for it at exit, so that it does not outlive the Python
-    process. No archive flag is added, and ``SPARK_CONF_DIR`` is left
+    the archive, which took 12-19 s on a 4-core host. Any session that
+    launched the JVM waits for it at exit, so that it does not outlive
+    the Python process. No archive flag is added, and ``SPARK_CONF_DIR`` is left
     alone, if Spark's conf dir holds a file it reads, ``extra_conf``
     sets ``defaultJavaOptions``, the class path holds more than the
     conf dir and the jars, or the cache cannot be written.
