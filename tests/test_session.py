@@ -6,6 +6,7 @@ import os
 import re
 import subprocess
 import sys
+import time
 from pathlib import Path
 
 import pytest
@@ -42,6 +43,39 @@ def test_sql_defaults_write_zstd_parquet_with_int64_timestamps():
         session.SQL_DEFAULTS["spark.sql.parquet.outputTimestampType"]
         == "TIMESTAMP_MICROS"
     )
+
+
+def test_sessions_capture_no_python_call_site(spark):
+    """``get_spark`` sessions, and the ``jobs/`` ones through
+    ``SQL_DEFAULTS``, run with PySpark's call-site capture off."""
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert session.SQL_DEFAULTS[key] == "false"
+    assert spark.conf.get(key) == "false"
+
+
+CALL_SITE_SCRIPT = """
+import sys
+from pyspark.sql import functions as F
+from wikidata_pq_spark.session import get_spark
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+df = spark.range(10).select(F.col("id"), F.lower(F.lit("A")).alias("a"))
+df = df.filter(F.col("id") > F.lit(2)).groupBy("a").agg(F.count(F.lit(1)).alias("n"))
+print("rows", df.collect()[0]["n"])
+print("ipython", "IPython" in sys.modules, flush=True)
+"""
+
+
+def test_frame_building_imports_no_ipython():
+    """In a fresh process, building and running a frame with ``F.*`` and
+    ``Column`` calls leaves IPython unimported: with call-site capture
+    on, PySpark tries to import it (and ipykernel) on every such call."""
+    env = {**os.environ, "SPARK_DRIVER_MEM": "1g",
+           "PYTHONPATH": os.pathsep.join(filter(None, (ROOT, os.environ.get("PYTHONPATH"))))}
+    run = subprocess.run([sys.executable, "-c", CALL_SITE_SCRIPT], env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert run.returncode == 0, run.stderr[-2000:]
+    lines = dict(line.split(" ", 1) for line in run.stdout.splitlines() if " " in line)
+    assert lines["rows"] == "7" and lines["ipython"] == "False"
 
 
 def test_edges_footer_is_zstd_with_utc_micros_ts(
@@ -268,6 +302,50 @@ def test_session_that_takes_the_lock_asks_the_rule_again(tmp_path, monkeypatch, 
     again = start("java", cache, key)
     assert again is not None
     again.lock.close()
+
+
+def _age(path, days):
+    """Set ``path``'s mtime to ``days`` ago."""
+    t = time.time() - days * 86400
+    os.utime(path, (t, t))
+
+
+def test_stale_archives_of_other_keys_are_pruned(tmp_path, monkeypatch):
+    """A session that maps an archive touches it. A recording session's
+    install removes other keys' archives, killed dumps and ``.failed``
+    marks that no session touched for 30 days, and its own key's mark;
+    recent ones stay, so two JDKs that alternate on one host each keep
+    theirs. A ``.failed`` mark older than 30 days no longer stops its
+    key from recording."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path / "spark-conf"))
+    for name in session._CLASS_PATH_ENV:
+        monkeypatch.delenv(name, raising=False)
+    cache, key = _archive_key(tmp_path)
+    os.makedirs(cache)
+    mapped = _archive(Path(cache, f"{key}-4096.jsa"), 4096)
+    _age(mapped, 40)
+    flag, _, recording = session._archive_launch({})
+    assert flag == f"-XX:SharedArchiveFile={mapped}" and recording is None
+    assert time.time() - os.path.getmtime(mapped) < 3600
+
+    c = Path(cache)
+    for name, days in [("k2-4096.jsa", 40), ("k3-4096.jsa", 1), ("k4.failed", 40),
+                       ("k5.failed", 1), ("k6.123.tmp", 40), ("k7.lock", 40),
+                       ("k1.failed", 40)]:
+        _archive(c / name, 4096)
+        _age(c / name, days)
+    assert session.archive_rule(cache, "k1", str(tmp_path / "conf")) == ("record", None)
+    assert session.archive_rule(cache, "k5", str(tmp_path / "conf")) == ("off", None)
+    rec = session._Recording.start("java", cache, "k1")
+    _archive(c / f"k1.{os.getpid()}.tmp", 4096)
+    rec.proc = _ExitedJvm(0)
+    monkeypatch.setattr(session._Recording, "_probe", lambda self: True)
+    rec.finish()
+    assert sorted(os.listdir(cache)) == sorted([
+        "conf", os.path.basename(mapped),
+        "k1-4096.jsa", "k1.lock", "k3-4096.jsa", "k5.failed", "k7.lock",
+    ])
 
 
 SESSION_SCRIPT = """

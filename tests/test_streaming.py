@@ -107,7 +107,7 @@ def test_triple_support_mid_epoch_kill_restart(spark, tmp_path):
     """Kill AFTER the epoch partial lands but BEFORE the streaming
     checkpoint commits the batch -- the worst-case crash window for the
     rollup. On restart from the same checkpoint, Spark replays the
-    uncommitted epoch; the replay dynamic-overwrites exactly its own
+    uncommitted epoch; the replay overwrites exactly its own
     epoch partition, so the reduce equals the one-shot batch rollup
     (no double-counting, no lost partial)."""
     import pandas as pd
@@ -824,26 +824,176 @@ def test_concurrent_merge_commits_lose_no_epoch(tmp_path, monkeypatch):
     assert inc.live_epochs(out) == list(range(33))
 
 
+_TS = pd.Timestamp("2026-01-01", tz="UTC")
+# two same-shaped epochs of triples
+EPOCH_ROWS = [
+    [("Q1", "ceo", "A", "c1", 1, _TS), ("Q2", "hq", "X", "c1", 2, _TS)],
+    [("Q1", "ceo", "B", "c2", 1, _TS + pd.Timedelta("1h")),
+     ("Q3", "hq", "Y", "c2", 3, _TS)],
+]
+
+
+def _epoch_batch(spark, i):
+    """Epoch ``i`` of ``EPOCH_ROWS`` as a one-partition batch."""
+    return spark.createDataFrame(
+        pd.DataFrame(EPOCH_ROWS[i], columns=KEYS + ["ts"]),
+        schema="subj string, pred string, obj string, conv_id string, "
+        "turn_idx long, ts timestamp",
+    ).coalesce(1)
+
+
+def _merge_both(batch, stores, epoch):
+    incremental.merge_triple_support(batch, stores[0], epoch_id=epoch)
+    incremental.merge_current_beliefs(batch, stores[1], epoch_id=epoch)
+
+
 def _two_epoch_stores(spark, tmp_path, epoch0_format=contextlib.nullcontext):
     """A support and a beliefs store, each holding two epochs merged from
     one-partition batches; epoch 0 is merged under ``epoch0_format()``."""
-    ts = pd.Timestamp("2026-01-01", tz="UTC")
-    epochs = [
-        [("Q1", "ceo", "A", "c1", 1, ts), ("Q2", "hq", "X", "c1", 2, ts)],
-        [("Q1", "ceo", "B", "c2", 1, ts + pd.Timedelta("1h")),
-         ("Q3", "hq", "Y", "c2", 3, ts)],
-    ]
-    support, beliefs = str(tmp_path / "support"), str(tmp_path / "beliefs")
-    for i, rows in enumerate(epochs):
-        batch = spark.createDataFrame(
-            pd.DataFrame(rows, columns=KEYS + ["ts"]),
-            schema="subj string, pred string, obj string, conv_id string, "
-            "turn_idx long, ts timestamp",
-        ).coalesce(1)
+    stores = str(tmp_path / "support"), str(tmp_path / "beliefs")
+    for i in range(len(EPOCH_ROWS)):
         with epoch0_format() if i == 0 else contextlib.nullcontext():
-            incremental.merge_triple_support(batch, support, epoch_id=i)
-            incremental.merge_current_beliefs(batch, beliefs, epoch_id=i)
-    return support, beliefs
+            _merge_both(_epoch_batch(spark, i), stores, i)
+    return stores
+
+
+def _views(spark, stores):
+    """Both views of (support, beliefs) stores, as sorted frames."""
+    readers = (incremental.read_triple_support, incremental.read_current_beliefs)
+    return [
+        read(spark, store).toPandas().sort_values(["subj", "pred", "obj"])
+        .reset_index(drop=True)
+        for read, store in zip(readers, stores)
+    ]
+
+
+def _compact_both(spark, stores):
+    return [
+        incremental.compact_triple_support(spark, stores[0]),
+        incremental.compact_current_beliefs(spark, stores[1]),
+    ]
+
+
+def _write_partition_by_epoch(partial, out_dir, epoch, mode="overwrite"):
+    """How epoch partials were written before each went straight into
+    its directory: a literal ``epoch`` column, ``partitionBy("epoch")``
+    and a dynamic overwrite of the store root."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    frame = partial.withColumn("epoch", F.lit(epoch))
+    (
+        frame.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch")
+        .parquet(out_dir)
+    )
+    return json.loads(frame.schema.json())
+
+
+def _compiles(spark):
+    """Janino compiles in this JVM so far (driver and local tasks)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_epoch_merge_compiles_nothing_new_and_keeps_the_layout(
+    spark, tmp_path, monkeypatch
+):
+    """After a same-shaped epoch-0 merge, merging epoch 1 into each store
+    compiles no class: no epoch literal reaches the generated code. Each
+    epoch's parquet files sit directly in ``epoch=N/`` with no marker
+    file, and the logged schema equals the one a ``partitionBy("epoch")``
+    write of the same partial logged. A store whose epoch 0 was written
+    that way still merges, reads and compacts to the same views."""
+    import os
+
+    from wikidata_pq_spark.plans import checkpoint
+
+    write, partials = incremental._write_partition, {}
+
+    def recorded(partial, out_dir, epoch, mode="overwrite"):
+        partials[out_dir, epoch] = partial
+        return write(partial, out_dir, epoch, mode)
+
+    monkeypatch.setattr(incremental, "_write_partition", recorded)
+    stores = str(tmp_path / "support"), str(tmp_path / "beliefs")
+    _merge_both(_epoch_batch(spark, 0), stores, 0)
+    before = _compiles(spark)
+    _merge_both(_epoch_batch(spark, 1), stores, 1)
+    assert _compiles(spark) == before
+    for store in stores:
+        for e in (0, 1):
+            root, dirs, files = next(os.walk(os.path.join(store, f"epoch={e}")))
+            assert dirs == [] and files, (root, dirs, files)
+            assert all(f.endswith((".parquet", ".parquet.crc")) for f in files), files
+        logged = checkpoint.head(os.path.join(store, "_log"))[1]["schema"]
+        old_way = _write_partition_by_epoch(
+            partials[store, 1], str(tmp_path / "old_way"), 1
+        )
+        assert logged == old_way
+    monkeypatch.setattr(incremental, "_write_partition", write)
+
+    @contextlib.contextmanager
+    def written_the_old_way():
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(incremental, "_write_partition", _write_partition_by_epoch)
+            yield
+
+    old = _two_epoch_stores(spark, tmp_path / "old", written_the_old_way)
+    expected = _views(spark, stores)
+    for got, want in zip(_views(spark, old), expected):
+        pd.testing.assert_frame_equal(got, want)
+    assert [s["compacted"] for s in _compact_both(spark, old)] == [2, 2]
+    for got, want in zip(_views(spark, old), expected):
+        pd.testing.assert_frame_equal(got, want)
+
+
+def test_compaction_keeps_its_claimed_generation(spark, tmp_path, monkeypatch):
+    """While a compaction writes the ``epoch=<g>`` it claimed, the
+    directory stays: a concurrent claim gets another id, and a file put
+    in it during the write is still there after (the write appends into
+    the claim rather than replacing it). The views read the same."""
+    import os
+    import threading
+
+    stores = _two_epoch_stores(spark, tmp_path)
+    before = _views(spark, stores)
+    write = incremental._write_partition
+    barrier = threading.Barrier(2, timeout=120)
+    held = []
+
+    def held_write(partial, out_dir, epoch, mode="overwrite"):
+        held.append(epoch)
+        barrier.wait()  # the rival claims now
+        barrier.wait()
+        return write(partial, out_dir, epoch, mode)
+
+    monkeypatch.setattr(incremental, "_write_partition", held_write)
+    summary = []
+    compactor = threading.Thread(
+        target=lambda: summary.append(incremental.compact_triple_support(spark, stores[0]))
+    )
+    compactor.start()
+    try:
+        barrier.wait()
+        (gen,) = held
+        rival = incremental._claim_generation(stores[0])
+        sentinel = os.path.join(stores[0], f"epoch={gen}", "_claimed")
+        open(sentinel, "w").close()
+    finally:
+        barrier.wait()
+        compactor.join(timeout=120)
+    assert not compactor.is_alive()
+    assert rival != gen
+    assert summary and summary[0]["generation"] == gen
+    assert os.path.exists(sentinel)
+    assert incremental._epochs_on_disk(stores[0]) == [rival, gen]
+    monkeypatch.setattr(incremental, "_write_partition", write)
+    incremental.compact_current_beliefs(spark, stores[1])
+    for got, want in zip(_views(spark, stores), before):
+        pd.testing.assert_frame_equal(got, want)
 
 
 def test_epoch_partition_holds_files_directly(spark, tmp_path):
@@ -854,14 +1004,6 @@ def test_epoch_partition_holds_files_directly(spark, tmp_path):
     import os
 
     stores = _two_epoch_stores(spark, tmp_path)
-    readers = (incremental.read_triple_support, incremental.read_current_beliefs)
-
-    def views():
-        return [
-            read(spark, store).toPandas().sort_values(["subj", "pred", "obj"])
-            .reset_index(drop=True)
-            for read, store in zip(readers, stores)
-        ]
 
     def layout(store):
         out = {}
@@ -871,14 +1013,13 @@ def test_epoch_partition_holds_files_directly(spark, tmp_path):
             out[e] = sum(f.endswith(".parquet") for f in files)
         return out
 
-    before = views()
+    before = _views(spark, stores)
     for store in stores:
         assert layout(store) == {0: 1, 1: 1}
-    incremental.compact_triple_support(spark, stores[0])
-    incremental.compact_current_beliefs(spark, stores[1])
+    _compact_both(spark, stores)
     for store in stores:
         assert set(layout(store)) == {-1} and layout(store)[-1] >= 1
-    for b, a in zip(before, views()):
+    for b, a in zip(before, _views(spark, stores)):
         pd.testing.assert_frame_equal(b, a)
 
 
@@ -898,22 +1039,12 @@ def test_epoch_stores_written_before_zstd_read_and_compact(
     assert [footers(e) for e in (0, 1)] == [
         ({"SNAPPY"}, {"INT96"}), ({"ZSTD"}, {"INT64"})
     ]
-    readers = (incremental.read_triple_support, incremental.read_current_beliefs)
-
-    def views(stores):
-        return [
-            read(spark, store).toPandas().sort_values(["subj", "pred", "obj"])
-            .reset_index(drop=True)
-            for read, store in zip(readers, stores)
-        ]
-
-    expected = views(fresh)
-    for b, a in zip(views(mixed), expected):
+    expected = _views(spark, fresh)
+    for b, a in zip(_views(spark, mixed), expected):
         pd.testing.assert_frame_equal(b, a)
-    incremental.compact_triple_support(spark, mixed[0])
-    incremental.compact_current_beliefs(spark, mixed[1])
+    _compact_both(spark, mixed)
     assert footers(-1) == ({"ZSTD"}, {"INT64"})
-    for b, a in zip(views(mixed), expected):
+    for b, a in zip(_views(spark, mixed), expected):
         pd.testing.assert_frame_equal(b, a)
 
 

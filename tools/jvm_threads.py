@@ -25,7 +25,15 @@ output it prints a table and one JSON line, ``jvm_threads {...}``:
   classes the JVM had loaded by the iteration's end, in all and from
   the shared archives, the JDK's default one included (``loaded``,
   ``shared``, from ``jcmd <pid> VM.metaspace``). Both work with
-  perfbench's ``-XX:-UsePerfData``.
+  perfbench's ``-XX:-UsePerfData``;
+- ``codegen``: the iteration's Janino compiles and their summed
+  milliseconds, from Spark's ``CodegenMetrics`` compilation-time
+  histogram (driver and local-mode tasks share one JVM, so it counts
+  both). The sum is taken over the histogram's samples: exact while
+  the JVM has compiled fewer than 1,028 classes, its reservoir size;
+- ``py4j_calls``: the commands the driver's Python process sent the
+  JVM over py4j during the iteration, and ``python_cpu_s``, that
+  process's own CPU (the sampling thread's included).
 
 The sampling thread and the GC log cost a little CPU of their own, so
 compare runs of this tool with each other, not with perfbench's numbers.
@@ -42,6 +50,7 @@ import subprocess
 import sys
 import tempfile
 import threading
+import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -168,6 +177,33 @@ def gc_counts(log_path: str) -> dict:
         return dict(collections.Counter(m[1] for m in map(GC_PAUSE.search, fh) if m))
 
 
+def codegen_totals(jvm) -> tuple[int, int]:
+    """(compiles, summed ms) of the JVM's Janino compiles so far."""
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    return hist.getCount(), jvm.java.util.Arrays.stream(hist.getSnapshot().getValues()).sum()
+
+
+class Py4jCounter:
+    """Counts the commands sent over ``client`` (py4j's gateway client)
+    while installed."""
+
+    def __init__(self, client):
+        self.client, self.calls = client, 0
+
+    def __enter__(self):
+        send = self.client.send_command
+
+        def counted(*args, **kwargs):
+            self.calls += 1
+            return send(*args, **kwargs)
+
+        self.client.send_command = counted
+        return self
+
+    def __exit__(self, *exc):
+        del self.client.send_command  # the class's method again
+
+
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--workload", required=True, choices=("kg_batch", "kg_incremental"))
@@ -194,11 +230,18 @@ def main(argv=None) -> int:
         pid = spark.sparkContext._gateway.proc.pid
         sampler = ThreadSampler(pid)
         log_gc(pid, log_path)
+        compiles, ms = codegen_totals(jvm)
         sampler.start()
+        python_cpu = time.process_time()
         try:
-            return run_once(spark, wl, tracer, probe)
+            with Py4jCounter(spark.sparkContext._gateway._gateway_client) as py4j:
+                return run_once(spark, wl, tracer, probe)
         finally:
+            found["python_cpu_s"] = round(time.process_time() - python_cpu, 2)
             sampler.stop()
+            found["py4j_calls"] = py4j.calls
+            after = codegen_totals(jvm)
+            found["codegen"] = {"compiles": after[0] - compiles, "ms": after[1] - ms}
             found["groups"] = sampler.report()
             found["gc"] = gc_counts(log_path)
             found["archive"] = archive_report(pid, found["jvm_args"])
@@ -210,6 +253,10 @@ def main(argv=None) -> int:
     found.update(workload=args.workload, seed=args.seed, root=root)
     for group, cpu in found["groups"].items():
         print(f"{group:>16} {cpu:7.2f} s")
+    codegen = found["codegen"]
+    print(f"{'janino':>16} {codegen['compiles']} compiles, {codegen['ms']} ms")
+    print(f"{'py4j':>16} {found['py4j_calls']} calls, "
+          f"{found['python_cpu_s']:.2f} s Python CPU")
     for pause, n in sorted(found["gc"].items()):
         print(f"{n:>16} x {pause}")
     archive = found["archive"]

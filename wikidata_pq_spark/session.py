@@ -56,6 +56,7 @@ import os
 import re
 import shutil
 import subprocess
+import time
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
@@ -88,6 +89,19 @@ SQL_DEFAULTS = {
     # the codec and types its footer records, so stores written before
     # (snappy, INT96) still read, resume, merge and compact.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # No Python call-site capture. By default PySpark 4.1 wraps every
+    # pyspark.sql.functions and Column call: it walks the Python stack,
+    # tries to import IPython and ipykernel (a failed import searches
+    # sys.path on every call), and makes py4j calls to read the conf and
+    # to set and clear PySparkCurrentOrigin. With it off, a cold
+    # kg_incremental perfbench iteration sent 2,492 py4j commands, not
+    # 4,782 (kg_batch 2,146, not 3,400), its driver's Python CPU fell
+    # from 1.1 to 0.5 s, and IPython was no longer imported
+    # (tools/jvm_threads.py, 4-core host). The cost: an error raised by
+    # the DataFrame API no longer names the Python file:line that built
+    # the failing expression. The JVM-side
+    # spark.sql.dataFrameQueryContext.enabled stays at its default.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 
@@ -171,6 +185,10 @@ _ARCHIVE_MAGIC = b"\xa8\xab\x0b\xf0"
 # writing on a 4-core host
 _EXIT_TIMEOUT_S = 60
 _DUMP_TIMEOUT_S = 180
+# a cache file no session used for this long is stale: another key's
+# archive or killed dump is removed when a session installs an archive,
+# and a failed dump's mark no longer stops a session from recording
+_STALE_S = 30 * 86400
 # what puts more than the conf dir and the jars on the driver's class
 # path (Spark's launcher, AbstractCommandBuilder.buildClassPath)
 _CLASS_PATH_ENV = (
@@ -226,6 +244,11 @@ def _is_archive(path: str, size: int) -> bool:
         return False
 
 
+def _stale(path: str) -> bool:
+    """``path`` was last modified more than ``_STALE_S`` ago."""
+    return os.path.getmtime(path) < time.time() - _STALE_S
+
+
 def archive_rule(cache: str, key: str, conf_dir: str) -> tuple[str, str | None]:
     """What a driver JVM launched now does with the archive of ``key``
     under ``cache``, decided from files alone (no JVM):
@@ -234,13 +257,15 @@ def archive_rule(cache: str, key: str, conf_dir: str) -> tuple[str, str | None]:
       (the conf dir Spark would use) holds something other than
       ``*.template`` files: Spark reads them, and CDS refuses a
       non-empty directory on the class path. Or a dump of ``key``
-      failed before (``<key>.failed``): only one session pays for it.
+      failed in the last 30 days (``<key>.failed``): only one session
+      per month pays for it.
     - ``("share", path)``: map ``path``, a complete archive, named
       ``<key>-<size>.jsa`` once a probe JVM mapped it: it is ``size``
       bytes and starts with the magic.
     - ``("record", None)``: write one at exit. The archive is missing,
       truncated (a truncated archive crashes the JVM that maps it with
-      SIGBUS), junk, or a killed dump left only its ``*.tmp``.
+      SIGBUS), junk, or a killed dump left only its ``*.tmp``; or the
+      ``<key>.failed`` mark is stale (``_STALE_S``).
     """
     if any(not name.endswith(".template") for name in _listdir(conf_dir)):
         return "off", None
@@ -249,7 +274,8 @@ def archive_rule(cache: str, key: str, conf_dir: str) -> tuple[str, str | None]:
         m = named.fullmatch(name)
         if m and _is_archive(os.path.join(cache, name), int(m[1])):
             return "share", os.path.join(cache, name)
-    if os.path.exists(os.path.join(cache, key + ".failed")):
+    failed = os.path.join(cache, key + ".failed")
+    if os.path.exists(failed) and not _stale(failed):
         return "off", None
     return "record", None
 
@@ -274,7 +300,8 @@ class _Recording:
     own when it exits. The session holds ``<key>.lock`` until then, so
     one session per key records. At interpreter exit ``finish`` waits
     for the JVM and gives the archive its ``<key>-<size>.jsa`` name
-    only once a probe JVM mapped it; a dump that fails leaves
+    only once a probe JVM mapped it, and then removes the stale files
+    of other keys (``_prune``); a dump that fails leaves
     ``<key>.failed`` instead."""
 
     def __init__(self, java: str, cache: str, key: str, lock):
@@ -315,10 +342,28 @@ class _Recording:
             for old in glob.glob(os.path.join(glob.escape(self.cache), glob.escape(self.key) + "-*.jsa")):
                 os.remove(old)
             os.replace(self.tmp, os.path.join(self.cache, f"{self.key}-{size}.jsa"))
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(os.path.join(self.cache, self.key + ".failed"))
+            self._prune()
             return
         with contextlib.suppress(FileNotFoundError):
             os.remove(self.tmp)
         open(os.path.join(self.cache, self.key + ".failed"), "w").close()
+
+    def _prune(self) -> None:
+        """Remove the archives, killed dumps' ``*.tmp`` and ``.failed``
+        marks of other keys that no session touched for ``_STALE_S``:
+        a session that maps an archive touches it, so two JDKs that
+        alternate on one host each keep theirs, and a key that comes
+        back after a month records again."""
+        stale = re.compile(r"(\w+)(-\d+\.jsa|\.\d+\.tmp|\.failed)")
+        for name in _listdir(self.cache):
+            m = stale.fullmatch(name)
+            path = os.path.join(self.cache, name)
+            if m and m[1] != self.key:
+                with contextlib.suppress(OSError):  # housekeeping only
+                    if _stale(path):
+                        os.remove(path)
 
     def _probe(self) -> bool:
         """A JVM of the same JDK and class path maps the dump and exits 0:
@@ -373,6 +418,8 @@ def _archive_launch(conf: dict) -> tuple[str, str | None, _Recording | None]:
     except OSError:
         return _NO_ARCHIVE
     if action == "share":
+        with contextlib.suppress(OSError):
+            os.utime(path)  # in use: not stale (_Recording._prune)
         return f"-XX:SharedArchiveFile={path}", empty, None
     if recording is None:
         return _NO_ARCHIVE

@@ -35,7 +35,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..plans import checkpoint
 from ..sources import tableio
@@ -214,7 +214,11 @@ def incremental_current_beliefs(
 # metaData.schemaString), so a read builds its scan without a
 # schema-inference job.
 #
-# - A merge writes its ``epoch=N`` partition, then commits live ∪ {N};
+# - Each partial's parquet files go straight into its ``epoch=N/``
+#   directory (``_write_partition``); stores written before, by a
+#   ``partitionBy("epoch")`` dynamic overwrite of the store root, have
+#   the same layout and logged schema.
+# - A merge overwrites its ``epoch=N`` partition, then commits live ∪ {N};
 #   on a lost race it re-reads and retries, since adding an epoch
 #   commutes with any other commit. An epoch the log already lists is
 #   not rewritten (Delta's idempotent txnVersion rule for foreachBatch),
@@ -223,7 +227,8 @@ def incremental_current_beliefs(
 #   reset streaming checkpoint.
 # - A compaction reads version V, claims ``epoch=<g>`` with os.mkdir
 #   (g = lowest negative id on disk - 1), reduces exactly V's live set
-#   into it and commits V+1 = {live: [g]}. A lost race raises: the
+#   into it, appending, so the claimed directory is never deleted, and
+#   commits V+1 = {live: [g]}. A lost race raises: the
 #   winning commit may have retired or added what this one read.
 # - Garbage is collected against a committed version only, and only
 #   what no later version can list: retired or never-committed
@@ -299,19 +304,32 @@ def _live_partials(spark: SparkSession, out_dir: str, snapshot: dict) -> DataFra
     )
 
 
-def _write_partition(partial: DataFrame, out_dir: str, epoch: int) -> dict:
-    """Write ``partial`` as partition ``epoch=<epoch>``, its parquet
-    files directly in that directory; dynamic overwrite replaces only
-    that partition. Returns the written schema (with ``epoch``) for the
-    commit log."""
-    frame = partial.withColumn("epoch", F.lit(epoch))
+def _write_partition(
+    partial: DataFrame, out_dir: str, epoch: int, mode: str = "overwrite"
+) -> dict:
+    """Write ``partial`` as partition ``epoch=<epoch>``: its parquet
+    files directly in ``<out_dir>/epoch=<epoch>/``, with no ``epoch``
+    column in them, as a ``partitionBy("epoch")`` write lays them out.
+    A merge overwrites its own directory, so a replay of an uncommitted
+    epoch replaces what a dead write left. A compaction appends
+    (``mode="append"``) into the generation directory it claimed, which
+    it must never delete: the claim is the directory, and a deleted one
+    could be claimed again by a concurrent compactor.
+
+    The write carries no literal ``epoch`` column: Spark inlines a
+    literal into the generated code, so each epoch id compiled classes
+    of its own. Returns the schema for the commit log, the partial's
+    fields plus a non-null int ``epoch``: the schema a ``partitionBy``
+    write of the same partial logged, so stores written that way still
+    read, merge and compact."""
     (
-        frame.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch")
-        .parquet(out_dir)
+        partial.write.mode(mode)
+        # no _SUCCESS marker: the commit log says what is written
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .parquet(os.path.join(out_dir, f"epoch={epoch}"))
     )
-    return json.loads(frame.schema.json())
+    schema = StructType([*partial.schema.fields, StructField("epoch", IntegerType(), False)])
+    return json.loads(schema.json())
 
 
 def _check_above_watermark(out_dir: str, epoch: int, snapshot: dict) -> None:
@@ -399,7 +417,7 @@ def _compact(spark: SparkSession, out_dir: str, reducer) -> dict:
         "live": [gen],
         "compacted_through": max([snapshot["compacted_through"], *live]),
         "generation": gen,
-        "schema": _write_partition(merged, out_dir, gen),
+        "schema": _write_partition(merged, out_dir, gen, mode="append"),
     }
     try:
         checkpoint.commit(_log_dir(out_dir), version + 1, committed)
