@@ -11,9 +11,11 @@ Resumable: re-submit after a failure and completed stages skip (same
 state machine as the KG pipeline, one commit log per stage,
 ``<out>/_log/<unit>/<version>.json``).
 
-The session takes ``session.SQL_DEFAULTS``; pass ``get_spark``'s two
-driver JVM settings on the spark-submit command line, as the
-``session`` module docstring shows.
+The session takes ``session.SQL_DEFAULTS``, so it runs none of the
+class path's session-extension providers, and ``pyspark.ml``'s
+``vector_to_array`` and ``array_to_vector`` are unresolved in it; the
+job uses neither. Pass ``get_spark``'s two driver JVM settings on the
+spark-submit command line, as the ``session`` module docstring shows.
 """
 
 from __future__ import annotations

@@ -19,9 +19,11 @@ store's commit log lists each epoch once). This is the MERGE-INTO
 analogue of the reference's resumable state machine (reference:
 state.py:30-35) applied to a live latest-assertion-wins view.
 
-The session takes ``session.SQL_DEFAULTS``; pass ``get_spark``'s two
-driver JVM settings on the spark-submit command line, as the
-``session`` module docstring shows.
+The session takes ``session.SQL_DEFAULTS``, so it runs none of the
+class path's session-extension providers, and ``pyspark.ml``'s
+``vector_to_array`` and ``array_to_vector`` are unresolved in it; the
+job uses neither. Pass ``get_spark``'s two driver JVM settings on the
+spark-submit command line, as the ``session`` module docstring shows.
 """
 
 from __future__ import annotations

@@ -22,9 +22,11 @@ it writes anything. The same-as components are frozen per store (a
 changed ``--same-as`` needs a new ``--out``); ``--alias-dict`` is read
 on every run.
 
-The session takes ``session.SQL_DEFAULTS``; pass ``get_spark``'s two
-driver JVM settings on the spark-submit command line, as the
-``session`` module docstring shows.
+The session takes ``session.SQL_DEFAULTS``, so it runs none of the
+class path's session-extension providers, and ``pyspark.ml``'s
+``vector_to_array`` and ``array_to_vector`` are unresolved in it; the
+job uses neither. Pass ``get_spark``'s two driver JVM settings on the
+spark-submit command line, as the ``session`` module docstring shows.
 
 Output layout under ``--out``:
 

@@ -25,6 +25,30 @@ def test_alias_dict_unique_and_skewed():
         assert (grp["entity_label"].iloc[0] in set(grp["alias"]))
 
 
+def _alias_pool_reference(n, rng):
+    """``datagen._alias_pool`` as it was written first, with
+    ``rng.choice`` over the syllable list."""
+    seen, out = set(), []
+    while len(out) < n:
+        k = rng.integers(2, 4)
+        word = "".join(rng.choice(datagen._SYLLABLES) for _ in range(k))
+        if word not in seen:
+            seen.add(word)
+            out.append(word)
+    return out
+
+
+def test_alias_pool_draws_as_the_choice_reference():
+    """The pool, and the generator's state after it, equal the
+    reference's, so every datagen-derived corpus is unchanged."""
+    import numpy as np
+
+    for seed, n in [(s, n) for s in (0, 1, 7, 42, 301, 999) for n in (10, 600)] + [(42, 8000)]:
+        got_rng, ref_rng = np.random.default_rng(seed), np.random.default_rng(seed)
+        assert datagen._alias_pool(n, got_rng) == _alias_pool_reference(n, ref_rng), (seed, n)
+        assert got_rng.bit_generator.state == ref_rng.bit_generator.state, (seed, n)
+
+
 def test_transcripts_schema_and_shuffling():
     tr = datagen.gen_transcripts(n_convs=40, mean_turns=6, n_entities=100)
     assert list(tr.columns) == ["conv_id", "turn_idx", "role", "text", "tool", "ts"]

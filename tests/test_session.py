@@ -53,6 +53,74 @@ def test_sessions_capture_no_python_call_site(spark):
     assert spark.conf.get(key) == "false"
 
 
+LOAD_FROM_CP = "spark.sql.extensions.test.loadFromCp"
+
+
+def test_sessions_run_no_class_path_extension_provider(spark):
+    """``get_spark`` sessions, and the ``jobs/`` ones through
+    ``SQL_DEFAULTS``, are built without the class path's
+    ``SparkSessionExtensionsProvider`` classes. spark-mllib's is the
+    only one, and the ML functions it registers are unresolved: this
+    fails if it ran, as it would under a Spark that drops the key."""
+    from pyspark.errors import AnalysisException
+    from pyspark.ml.functions import vector_to_array
+
+    assert session.SQL_DEFAULTS[LOAD_FROM_CP] == "false"
+    assert spark.sparkContext.getConf().get(LOAD_FROM_CP) == "false"
+    with pytest.raises(AnalysisException) as err:
+        spark.range(1).select(vector_to_array("id"))
+    assert err.value.getCondition() == "UNRESOLVED_ROUTINE"
+
+
+ML_SCRIPT = """
+from pyspark.ml.functions import vector_to_array
+from pyspark.ml.linalg import Vectors
+from wikidata_pq_spark.session import get_spark
+spark = get_spark(master="local[1]", shuffle_partitions=1,
+                  extra_conf={"spark.sql.extensions.test.loadFromCp": "true"})
+df = spark.createDataFrame([(Vectors.dense([1.0, 2.0]),)], ["v"])
+print("array", df.select(vector_to_array("v").alias("a")).first()["a"], flush=True)
+"""
+
+
+def test_extension_providers_can_be_turned_back_on():
+    """``extra_conf`` that sets the key to true restores the class
+    path's providers, and with them ``vector_to_array``."""
+    env = {**os.environ, "SPARK_DRIVER_MEM": "1g",
+           "PYTHONPATH": os.pathsep.join(filter(None, (ROOT, os.environ.get("PYTHONPATH"))))}
+    run = subprocess.run([sys.executable, "-c", ML_SCRIPT], env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert "array [1.0, 2.0]" in run.stdout.splitlines()
+
+
+def test_a_new_whole_stage_class_compiles_once(spark):
+    """In local mode the calling thread compiles under the executor's
+    class loader, which keys ``CodeGenerator``'s cache: a query with a
+    whole-stage class never seen before adds one Janino compile to
+    ``CodegenMetrics``, not one for the driver-side check and one more
+    for the task. Under the app class loader it would add two."""
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def new_compiles(k):
+        # the literal k is inlined into the generated code, so each k
+        # is a new whole-stage class; every other class is shared
+        before = compiles.getCount()
+        spark.range(0, 100, 1, 1).selectExpr(f"id * {k} + 1 as x").filter(f"x % {k} = 1").collect()
+        return compiles.getCount() - before
+
+    new_compiles(1_000_003)  # compiles the classes that do not depend on k
+    assert new_compiles(1_000_033) == 1
+    thread = jvm.java.lang.Thread.currentThread()
+    loader = thread.getContextClassLoader()
+    thread.setContextClassLoader(jvm.java.lang.ClassLoader.getSystemClassLoader())
+    try:
+        assert new_compiles(1_000_037) == 2
+    finally:
+        thread.setContextClassLoader(loader)
+
+
 CALL_SITE_SCRIPT = """
 import sys
 from pyspark.sql import functions as F

@@ -1,11 +1,13 @@
-"""Driver-JVM CPU by thread group over one cold perfbench iteration.
+"""Driver-JVM CPU by thread group over session start and one cold perfbench iteration.
 
     python3 tools/jvm_threads.py --workload kg_incremental --seed 5
     python3 tools/jvm_threads.py --workload kg_batch --seed 5 --root <other checkout>
 
 Runs ``perfbench/run.py --trace 0`` of the checkout at ``--root``
-(default: this one) in this process, unchanged, and watches the one
-cold iteration (``run_once``) from outside it: every ``PERIOD``
+(default: this one) in this process, unchanged. It reads the driver
+JVM's CPU by thread once its session has started (``start_session``),
+and watches the one cold iteration (``run_once``) from outside it:
+every ``PERIOD``
 (0.2) seconds it reads ``/proc/<jvm pid>/task/*/stat`` and keeps each
 thread's latest user + system CPU, and for the same window it logs the
 JVM's GC events (``jcmd <pid> VM.log what=gc``). After perfbench's own
@@ -15,6 +17,10 @@ output it prints a table and one JSON line, ``jvm_threads {...}``:
   executor task threads, the py4j gateway's ``Thread-N``, G1 threads);
   ``rest`` is the JVM's process CPU less the named groups, so it also
   holds threads that ran and exited between two samples;
+- ``session_groups``: the same, from the JVM's launch to the return of
+  perfbench's ``start_session``, read once then (the session start
+  that ``setup_s`` counts, less the launcher JVM, Python and the input
+  generation); threads that exited by then are in ``rest``;
 - ``gc``: the iteration's GC pauses counted by kind and cause, such as
   ``Pause Young (Concurrent Start) (G1 Humongous Allocation)``;
 - ``jvm_args``: the JVM's ``-X`` input arguments, and ``page_bytes``,
@@ -125,6 +131,14 @@ class ThreadSampler:
         self.last.update(self._sample())
         self.process1 = self._process_ticks()
 
+    def since_launch(self) -> dict:
+        """``report`` from the process's start until now, with no
+        sampling thread: threads that ran and exited are in ``rest``."""
+        self.base, self.process0 = {}, 0
+        self.last = self._sample()
+        self.process1 = self._process_ticks()
+        return self.report()
+
     def report(self) -> dict:
         groups = collections.Counter({g: 0 for g, _ in GROUPS})
         for tid, (name, ticks) in self.last.items():
@@ -216,7 +230,13 @@ def main(argv=None) -> int:
     from perfbench import run
 
     found = {}
-    run_once = run.run_once
+    start_session, run_once = run.start_session, run.run_once
+
+    def watched_start_session(*args, **kwargs):
+        spark = start_session(*args, **kwargs)
+        found["session_groups"] = ThreadSampler(spark.sparkContext._gateway.proc.pid).since_launch()
+        return spark
+
     log_dir = tempfile.TemporaryDirectory(prefix="jvm_threads_")
     log_path = os.path.join(log_dir.name, "gc.log")
 
@@ -246,13 +266,14 @@ def main(argv=None) -> int:
             found["gc"] = gc_counts(log_path)
             found["archive"] = archive_report(pid, found["jvm_args"])
 
-    run.run_once = watched_run_once
+    run.start_session, run.run_once = watched_start_session, watched_run_once
     with log_dir:
         run.main(["--workload", args.workload, "--seed", str(args.seed),
                   "--seconds", "30", "--trace", "0"])
     found.update(workload=args.workload, seed=args.seed, root=root)
+    print(f"{'':>16} {'session':>9} {'iteration':>9}")
     for group, cpu in found["groups"].items():
-        print(f"{group:>16} {cpu:7.2f} s")
+        print(f"{group:>16} {found['session_groups'][group]:7.2f} s {cpu:7.2f} s")
     codegen = found["codegen"]
     print(f"{'janino':>16} {codegen['compiles']} compiles, {codegen['ms']} ms")
     print(f"{'py4j':>16} {found['py4j_calls']} calls, "

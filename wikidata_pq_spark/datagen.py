@@ -65,7 +65,9 @@ def _alias_pool(n: int, rng: np.random.Generator) -> list[str]:
     out: list[str] = []
     while len(out) < n:
         k = rng.integers(2, 4)
-        word = "".join(rng.choice(_SYLLABLES) for _ in range(k))
+        # the draws of rng.choice(_SYLLABLES), without turning the list
+        # into an array on every call
+        word = "".join(_SYLLABLES[rng.integers(0, len(_SYLLABLES))] for _ in range(k))
         if word not in seen:
             seen.add(word)
             out.append(word)

@@ -6,12 +6,25 @@ bounded-memory streaming discipline (reference: transforms.py:39-41,
 core.py:58 -- lazy sinks, never collect) maps here to: AQE + spill-aware
 shuffle partition sizing + capped Arrow record batches for pandas UDFs.
 
-``SQL_DEFAULTS`` holds the runtime SQL settings the package's results
+``SQL_DEFAULTS`` holds the SQL settings the package's results
 and code paths assume: UTC timestamps, the Arrow conversions, the
 JVM's case mapping for ``lower``/``upper``, and the Parquet format of
 every sink (zstd, INT64 microsecond timestamps). ``get_spark`` builds with
 them, and the ``jobs/`` entry points apply the same mapping to the
 session spark-submit gives them.
+
+``SQL_DEFAULTS`` also keeps a session from running the
+``SparkSessionExtensionsProvider`` classes on the class path
+(``spark.sql.extensions.test.loadFromCp=false``, a static key that
+Spark's doc string calls "test only"). The only one on this class path
+is spark-mllib's, and running it was about half of a session start's
+JVM CPU: without it perfbench's session start took 5.6 calibrated
+CPU s, not 8.1 (medians of 10 runs, 4-core host; ARCHITECTURE.md).
+What is lost: ``pyspark.ml.functions.vector_to_array`` and
+``array_to_vector`` fail with ``UNRESOLVED_ROUTINE``. Nothing in the
+package or the ``jobs/`` uses ``pyspark.ml``; ``get_spark(extra_conf=
+{"spark.sql.extensions.test.loadFromCp": "true"})`` restores them.
+Extensions named in ``spark.sql.extensions`` still load.
 
 ``get_spark`` also sizes the driver JVM it launches for ``local[N]``:
 the heap (``spark.driver.memory``), two JIT compiler threads
@@ -20,10 +33,13 @@ the heap (``spark.driver.memory``), two JIT compiler threads
 archive of the classes an earlier session loaded (``archive_rule``):
 the first session on a host writes it when it exits, under
 ``$XDG_CACHE_HOME/wikidata_pq_spark/``, and later ones map it: a
-session start took ~8 calibrated CPU s in perfbench, not ~15.
+session start took ~8 calibrated CPU s in perfbench, not ~15. In local
+mode it also gives the calling thread's JVM side the executor's class
+loader, so that each generated class compiles once, not once on the
+driver and again in a task (``get_spark``).
 
-The ``jobs/`` entry points cannot apply the last three: the thread cap
-and the archive are launch options of the JVM that spark-submit
+The ``jobs/`` entry points apply none of these, nor the class loader.
+The thread cap and the archive are launch options of the JVM that spark-submit
 started before the script runs, and the page size must follow the heap
 spark-submit gave it. Pass them on the spark-submit command line, with
 the page size that ``_default_page_size`` gives for the
@@ -62,7 +78,9 @@ from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
-# Runtime SQL settings that every session of the package runs with.
+# SQL settings that every session of the package runs with. All are
+# runtime settings but one, spark.sql.extensions.test.loadFromCp, which
+# is static: it counts only in the builder that starts the SparkContext.
 SQL_DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -102,6 +120,17 @@ SQL_DEFAULTS = {
     # the failing expression. The JVM-side
     # spark.sql.dataFrameQueryContext.enabled stays at its default.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Run no SparkSessionExtensionsProvider found on the class path (the
+    # module docstring gives the cost and what is lost). The one static
+    # key here: Spark reads it from the SparkConf as it builds the
+    # session. Spark's doc string calls it "test only"; should a Spark
+    # release drop it, the providers run again and tests/test_session.py
+    # fails. The only provider on this class path is spark-mllib's
+    # InternalFunctionRegistration: it builds typed UDFs through
+    # ScalaReflection, which starts Scala's runtime-reflection universe,
+    # and one of its encoder lookups throws and catches an error that
+    # loads Spark's error-class JSON.
+    "spark.sql.extensions.test.loadFromCp": "false",
 }
 
 
@@ -457,7 +486,23 @@ def get_spark(
     case-mapped by the JVM rather than ICU, which keeps a 3-4 CPU s
     class initializer out of the first ``lower()`` and costs no warm
     speed, and every Parquet sink is written as zstd with INT64
-    microsecond timestamps.
+    microsecond timestamps. The session runs no
+    ``SparkSessionExtensionsProvider`` from the class path: that was
+    spark-mllib's alone, about half of a fresh session's JVM CPU.
+    So ``pyspark.ml.functions.vector_to_array`` and ``array_to_vector``
+    fail with ``UNRESOLVED_ROUTINE`` in it; ``extra_conf=
+    {"spark.sql.extensions.test.loadFromCp": "true"}`` restores them.
+
+    In local mode the JVM thread that serves the calling Python thread
+    gets the executor's class loader as its context class loader.
+    Spark's ``CodeGenerator`` caches each compiled class under that
+    loader, and local-mode tasks run under the executor's, so a
+    whole-stage class compiled for the driver-side check and again in
+    the first task; now it compiles once. A cold ``kg_batch`` iteration
+    ran 23 Janino compiles, not 37, and ``kg_incremental`` 42, not 54
+    (``tools/jvm_threads.py``, seed 7). It covers that thread only: a
+    JVM thread that PySpark pins to another Python thread keeps its
+    loader, and compiles each class twice, as before.
 
     The driver JVM it launches is sized for ``local[N]``:
     ``spark.driver.memory`` is ``$SPARK_DRIVER_MEM``, else half the
@@ -544,12 +589,15 @@ def get_spark(
         if recording is not None:
             recording.lock.close()
         raise
+    jvm = spark.sparkContext._jvm
     if launching:
         proc = spark.sparkContext._gateway.proc
         if recording is None:
             atexit.register(_stop_jvm, proc, _EXIT_TIMEOUT_S)
         else:
-            jvm = spark.sparkContext._jvm
             recording.launched(proc, jvm.java.lang.System.getProperty("java.class.path"))
+    loader = jvm.org.apache.spark.SparkEnv.get().serializer().defaultClassLoader()
+    if loader.isDefined():  # local mode: the driver JVM runs an executor
+        jvm.java.lang.Thread.currentThread().setContextClassLoader(loader.get())
     spark.sparkContext.setLogLevel("WARN")
     return spark
