@@ -232,8 +232,9 @@ def test_components_file_is_independent_of_hash_seed(tmp_path):
         "import sys\n"
         "from wikidata_pq_spark import datagen, oracle\n"
         "from wikidata_pq_spark.operators import canonicalize\n"
+        "from wikidata_pq_spark.sources import tableio\n"
         "comp = oracle.union_find_components(datagen.gen_same_as(2000))\n"
-        "canonicalize._write_map(comp, sys.argv[1], 'zstd')\n"
+        "tableio.write_arrow(canonicalize._map_table(comp), sys.argv[1], 'zstd')\n"
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     files = []

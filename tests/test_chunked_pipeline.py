@@ -51,6 +51,12 @@ def _first_files(spark, parquet_corpus, k=4):
     return {**parquet_corpus, "transcripts": spark.read.parquet(*files[:k])}
 
 
+def _names(parquet_corpus):
+    """The input's sorted file names: what a plan records of its files,
+    relative to the listing's directory."""
+    return sorted(os.path.basename(f) for f in parquet_corpus["transcripts"].inputFiles())
+
+
 @contextlib.contextmanager
 def _crash_after(unit: str, step: Step, before: bool = False):
     """Make ``StateStore.set`` raise right after it records ``step`` for
@@ -293,7 +299,7 @@ def test_file_chunks_layout_and_rerun_skip(spark, parquet_corpus, tmp_path):
     _run(pipe, parquet_corpus)
     assert sorted(os.listdir(out)) == ["_log", "components", "edges", "nodes"]
     assert sorted(os.listdir(out / "_log")) == pipe.units() + ["corpus"]
-    files = sorted(parquet_corpus["transcripts"].inputFiles())
+    files = _names(parquet_corpus)
     assert len(files) == 8
     assert pipe.plans() == {i: files[2 * i:2 * i + 2] for i in range(4)}
     logs = [str(out / "_log" / u) for u in pipe.units()]
@@ -409,7 +415,7 @@ def test_grown_store_equals_one_shot(spark, parquet_corpus, corpus, tmp_path):
 
     pipe = KGPipeline(spark, str(out), n_chunks=4)
     metrics = _run(pipe, parquet_corpus)
-    files = sorted(parquet_corpus["transcripts"].inputFiles())
+    files = _names(parquet_corpus)
     assert pipe.plans() == {i: files[i:i + 1] for i in range(8)}
     assert {u: sorted(os.listdir(out / "_log" / u)) for u in old} == logs
     assert {p: os.path.getmtime(out / "edges" / p) for p in edges} == edges
@@ -425,24 +431,30 @@ def test_grown_store_equals_one_shot(spark, parquet_corpus, corpus, tmp_path):
 
 
 def test_store_with_plans_in_linked_versions_grows(spark, parquet_corpus, corpus, tmp_path):
-    """A store whose chunks' records repeat their plan's ``files`` after
-    version 0, as stores written before plans were kept in version 0
-    only do, still grows: its plans are read from version 0, and the new
-    chunks' records do not repeat theirs."""
+    """A store whose chunks' plans name their files by absolute URI and
+    whose records repeat the plan's ``files`` after version 0, as stores
+    written before plans named files relative to the listing, and kept
+    them in version 0 only, do, still grows: its plans are read from
+    version 0, their entries resolve to themselves, and the new chunks'
+    plans hold names, which their records do not repeat."""
     out = str(tmp_path / "kg")
     old = KGPipeline(spark, out, n_chunks=4)
     _run(old, _first_files(spark, parquet_corpus))
+    uris = sorted(parquet_corpus["transcripts"].inputFiles())
     for unit in old.units():
         log = os.path.join(out, "_log", unit)
         version, record = checkpoint.head(log)
-        plan = checkpoint.read(log, 0)["files"]
-        checkpoint.commit(log, version + 1, {**record, "files": plan})
+        plan = checkpoint.read(log, 0)
+        plan["files"] = [u for u in uris if os.path.basename(u) in plan["files"]]
+        with open(os.path.join(log, f"{0:020d}.json"), "w") as fh:
+            json.dump(plan, fh)
+        checkpoint.commit(log, version + 1, {**record, "files": plan["files"]})
     assert all("files" in old.state.metrics(u) for u in old.units())
 
     pipe = KGPipeline(spark, out, n_chunks=4)
     _run(pipe, parquet_corpus)
-    files = sorted(parquet_corpus["transcripts"].inputFiles())
-    assert pipe.plans() == {i: files[i:i + 1] for i in range(8)}
+    files = _names(parquet_corpus)
+    assert pipe.plans() == {i: (uris if i < 4 else files)[i:i + 1] for i in range(8)}
     assert not any("files" in pipe.state.metrics(u) for u in pipe.units()[4:])
     assert _tset(pipe.triples()) == _golden(corpus)
     assert pipe.post_check()
@@ -513,7 +525,7 @@ def test_two_planners_commit_one_plan_per_unit(
     assert len(done) == 1 and len(errors) == 1, errors
     assert "another run planned chunk_00004" in str(errors[0])
     pipe = KGPipeline(spark, out)
-    files = sorted(parquet_corpus["transcripts"].inputFiles())
+    files = _names(parquet_corpus)
     assert pipe.plans() == {i: files[i:i + 1] for i in range(8)}
     for u in pipe.units()[4:]:
         assert sorted(os.listdir(os.path.join(out, "_log", u))) == [
@@ -676,8 +688,9 @@ def test_stage_job_counts(spark, parquet_corpus, tmp_path, n_chunks):
     estimate, not a count, and the driver writes ``components`` itself;
     at n_chunks > 1 the check that no conversation spans two files runs
     before it, at planning), a chunk's LINKED at most 4 (the chain
-    write), MATERIALIZED at most 2 (the nodes write), VERIFIED none
-    (the audit rows are read from the Parquet footers on the driver).
+    write), MATERIALIZED none (the driver reads the small edges and
+    writes ``nodes`` itself), VERIFIED none (the audit rows are read
+    from the Parquet footers on the driver).
     No sidecar table is written. "4+4" measures a growth run, 4 new
     files on a 4-chunk store: only the new chunks and the corpus stages
     that cover them run, and no old chunk opens a span."""
@@ -694,7 +707,7 @@ def test_stage_job_counts(spark, parquet_corpus, tmp_path, n_chunks):
     assert len(new) == n_chunks
     assert sorted(k for k in jobs if k.endswith(":LINKED")) == [f"{u}:LINKED" for u in new]
     assert max(jobs[f"{u}:LINKED"] for u in new) <= 4, jobs
-    assert jobs["corpus:MATERIALIZED"] <= 2, jobs
+    assert jobs["corpus:MATERIALIZED"] == 0, jobs
     assert jobs["corpus:VERIFIED"] == 0, jobs
     assert _audit_dirs(out) == []
 
@@ -716,3 +729,131 @@ def test_dropped_edge_row_fails_verified(spark, parquet_corpus, tmp_path, monkey
     with pytest.raises(RuntimeError, match="post-check failed"):
         _run(pipe, parquet_corpus)
     assert pipe.state.get("corpus") == Step.MATERIALIZED
+
+
+def test_dropped_node_row_fails_verified(spark, parquet_corpus, tmp_path, monkeypatch):
+    """A driver writer that loses one row of ``nodes`` must fail the run
+    at VERIFIED: the audit row is taken from the table handed to the
+    writer, not from the file it wrote."""
+    write = tableio.write_arrow
+
+    def drop_one_node(table, path, codec):
+        if os.path.basename(path) == "nodes":
+            table = table.slice(1)
+        write(table, path, codec)
+
+    monkeypatch.setattr(tableio, "write_arrow", drop_one_node)
+    pipe = KGPipeline(spark, str(tmp_path / "kg"), n_chunks=4)
+    with pytest.raises(RuntimeError, match="post-check failed"):
+        _run(pipe, parquet_corpus)
+    assert pipe.state.get("corpus") == Step.MATERIALIZED
+    assert pipe.state.metrics("corpus")["nodes_path"] == "driver"
+
+
+def _nodes_store(spark, out, parquet_corpus, n_chunks):
+    """A store of ``parquet_corpus`` at ``n_chunks``; "4+4" grows one
+    built over the first 4 files by the other 4."""
+    if n_chunks == "4+4":
+        _run(KGPipeline(spark, out, n_chunks=4), _first_files(spark, parquet_corpus))
+        n_chunks = 4
+    pipe = KGPipeline(spark, out, n_chunks=n_chunks)
+    _run(pipe, parquet_corpus)
+    return pipe
+
+
+@pytest.mark.parametrize("n_chunks", [1, 4, "4+4"])
+def test_nodes_driver_and_spark_paths_agree(spark, parquet_corpus, tmp_path, n_chunks, monkeypatch):
+    """MATERIALIZED builds ``nodes`` on the driver while the edges' data
+    files hold at most ``canonicalize.DRIVER_MAX_BYTES``, and with Spark
+    above it. With the bound at 0 (every store takes the Spark path,
+    CANONICALIZED too) the two give the same ``nodes`` rows, audit row
+    and recorded schema, in one run and in a growth run; each record
+    keeps the path taken and the bytes that chose it, and the driver
+    writes one file, with no ``_SUCCESS`` or ``.crc`` beside it."""
+    driver = _nodes_store(spark, str(tmp_path / "driver"), parquet_corpus, n_chunks)
+    with monkeypatch.context() as m:
+        m.setattr(canonicalize, "DRIVER_MAX_BYTES", 0)
+        dist = _nodes_store(spark, str(tmp_path / "spark"), parquet_corpus, n_chunks)
+    records = [p.state.metrics("corpus") for p in (driver, dist)]
+    assert [r["nodes_path"] for r in records] == ["driver", "distributed"]
+    edges = driver.path("edges")
+    assert records[0]["nodes_edges_bytes"] == sum(
+        os.path.getsize(f) for f in tableio.data_files(edges)
+    )
+    assert 0 < records[0]["nodes_edges_bytes"] <= canonicalize.DRIVER_MAX_BYTES
+    assert records[1]["cc_path"] == "distributed"
+    for key in ("nodes", "audit", "schema", "materialized_chunks", "verified_chunks"):
+        assert records[0][key] == records[1][key], key
+    rows = [sorted(r[0] for r in p.nodes().collect()) for p in (driver, dist)]
+    assert rows[0] == rows[1] and len(rows[0]) == records[0]["nodes"] > 0
+    e = driver.edges()
+    ids = e.select("subj").union(e.filter("obj_kind = 'entity'").select("obj")).distinct()
+    assert rows[0] == sorted(r[0] for r in ids.collect())
+    assert os.listdir(driver.path("nodes")) == ["part-00000.parquet"]
+    assert driver.post_check() and dist.post_check()
+
+
+def test_resume_after_linked_takes_no_link_estimate(spark, parquet_corpus, tmp_path, monkeypatch):
+    """The link join is chosen once per run, and only when a chunk has
+    to link: a run takes two plan estimates (the CC path's and the link
+    join's), and a resume after every chunk's LINKED takes none. Each
+    LINKED record keeps the join and its estimate."""
+    calls = []
+    estimate = canonicalize._estimated_bytes
+    monkeypatch.setattr(
+        canonicalize, "_estimated_bytes", lambda df: calls.append(1) or estimate(df)
+    )
+    out = str(tmp_path / "kg")
+    with _crash_after("chunk_00003", Step.LINKED), pytest.raises(Killed):
+        _run(KGPipeline(spark, out, n_chunks=4), parquet_corpus)
+    assert len(calls) == 2
+    calls.clear()
+    pipe = KGPipeline(spark, out, n_chunks=4)
+    _run(pipe, parquet_corpus)
+    assert pipe.state.get("corpus") == Step.COMPLETE
+    assert calls == []
+    link = canonicalize.link_join(parquet_corpus["alias_dict"])
+    assert all({k: pipe.state.metrics(u)[k] for k in link} == link for u in pipe.units())
+
+
+@pytest.mark.classic_session_only
+def test_store_resumes_on_moved_input(spark, spark_corpus, conversation_files, corpus, tmp_path):
+    """Plans name their files relative to the listing's directory: a
+    store killed after chunk 1's LINKED resumes once its input directory
+    has been renamed, to the oracle's triples, and then re-runs with no
+    Spark job and no new log version."""
+    src = tmp_path / "input"
+    conversation_files(spark_corpus["transcripts"], src)
+    c = {**spark_corpus}
+    out = str(tmp_path / "kg")
+    with _crash_after("chunk_00001", Step.LINKED), pytest.raises(Killed):
+        _run(KGPipeline(spark, out, n_chunks=4), {**c, "transcripts": spark.read.parquet(str(src))})
+    moved = tmp_path / "moved"
+    os.rename(src, moved)
+    c["transcripts"] = spark.read.parquet(str(moved))
+    pipe = KGPipeline(spark, out, n_chunks=4)
+    _run(pipe, c)
+    assert pipe.state.get("corpus") == Step.COMPLETE
+    assert _tset(pipe.triples()) == _golden(corpus)
+    assert all(os.sep not in f and ":" not in f for fs in pipe.plans().values() for f in fs)
+    before = _tree(out)
+    _, jobs = _jobs_in_group(spark.sparkContext, "moved_input", lambda: _run(pipe, c))
+    assert jobs == 0 and _tree(out) == before
+
+
+def test_log_size_does_not_depend_on_input_location(spark, spark_corpus, conversation_files, tmp_path):
+    """Two stores of one input, each under its own root and reading its
+    own copy of the input, hold ``_log/`` files of equal sizes: no
+    record keeps a path."""
+    import shutil
+
+    roots = [tmp_path / "r", tmp_path / "a_root_with_a_much_longer_name"]
+    conversation_files(spark_corpus["transcripts"], roots[0] / "input")
+    shutil.copytree(roots[0] / "input", roots[1] / "input")
+    sizes = []
+    for root in roots:
+        tr = spark.read.parquet(str(root / "input"))
+        _run(KGPipeline(spark, str(root / "kg"), n_chunks=4), {**spark_corpus, "transcripts": tr})
+        log = root / "kg" / "_log"
+        sizes.append({p: os.path.getsize(log / p) for p in _tree(log) if os.path.isfile(log / p)})
+    assert sizes[0] == sizes[1] and sizes[0]

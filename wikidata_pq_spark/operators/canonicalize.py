@@ -26,15 +26,12 @@ as a frame, for callers that go on computing with it.
 
 from __future__ import annotations
 
-import contextlib
-import os
-import shutil
 from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.tableio import observe_rows, parquet_files
+from ..sources.tableio import observe_rows, parquet_files, write_arrow
 from .graph import iterate
 
 # the component map's schema, on both paths; KGPipeline reads its
@@ -67,6 +64,9 @@ def _order_key(col):
 # 2.0 MB from parquet: driver path, 3.4-4.5 s, where the distributed
 # rounds took 11.7-25 s. A source Catalyst cannot size (an RDD, a Python
 # list) reports Long.MaxValue and goes distributed.
+# KGPipeline's MATERIALIZED takes its driver path under the same bound,
+# compared with the bytes of the edges' data files: one bound for a
+# small store's corpus stages.
 DRIVER_MAX_BYTES = 16 * 2**20
 MAX_ROUNDS = 25
 
@@ -116,7 +116,7 @@ def write_components(same_as: DataFrame, path: str) -> dict:
     if size <= DRIVER_MAX_BYTES:
         comp = _driver_map(same_as)
         codec = same_as.sparkSession.conf.get("spark.sql.parquet.compression.codec")
-        _write_map(comp, path, codec)
+        write_arrow(_map_table(comp), path, codec)
         return {"cc_path": "driver", "cc_estimated_bytes": size, "components": len(comp)}
     comps, rows = observe_rows(_distributed_components(same_as))
     comps.write.mode("overwrite").parquet(path)
@@ -161,28 +161,6 @@ def _map_table(comp: dict[str, str]):
         {"entity_id": list(comp.keys()), "canonical_id": list(comp.values())},
         schema=pa.schema([("entity_id", pa.string()), ("canonical_id", pa.string())]),
     ).sort_by("entity_id")
-
-
-# Spark's codec names where pyarrow's differ
-_ARROW_CODECS = {"uncompressed": "none", "lz4_raw": "lz4"}
-
-
-def _write_map(comp: dict[str, str], path: str, codec: str) -> None:
-    """``comp`` as the one file of the Parquet table ``path``. The file
-    is written under a hidden name, which readers skip, and renamed into
-    place, so a crash leaves no partial file for a reader."""
-    import pyarrow.parquet as pq
-
-    table = _map_table(comp)
-    with contextlib.suppress(FileNotFoundError):
-        shutil.rmtree(path)
-    os.makedirs(path)
-    tmp = os.path.join(path, ".part-00000.parquet.tmp")
-    with open(tmp, "wb") as fh:
-        pq.write_table(table, fh, compression=_ARROW_CODECS.get(codec.lower(), codec))
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(path, "part-00000.parquet"))
 
 
 def _distributed_components(same_as: DataFrame) -> DataFrame:
@@ -250,16 +228,21 @@ def link_join(alias_dict: DataFrame) -> dict:
     return {"link_join": join, "link_estimated_bytes": size}
 
 
-def apply_canonical(alias_dict: DataFrame, components: DataFrame) -> DataFrame:
+def apply_canonical(
+    alias_dict: DataFrame, components: DataFrame, join: str | None = None
+) -> DataFrame:
     """(alias, entity_id) -> (alias, canonical entity_id): one left join +
     coalesce-to-identity on the dictionary, so mentions link straight to
     canonical ids. ``components`` has one row per ``entity_id``, so the
     result keeps the alias dictionary's rows; it carries a broadcast
-    hint when ``link_join`` chooses one."""
+    hint when ``join`` is "broadcast". ``join`` is ``link_join``'s
+    choice, made here when not given: a caller that records the choice
+    passes the one it recorded, so the estimate is taken once."""
     comps = components.select("entity_id", F.col("canonical_id").alias("_canon"))
     canon = (
         alias_dict.select("alias", "entity_id")
         .join(comps, "entity_id", "left")
         .select("alias", F.coalesce("_canon", "entity_id").alias("entity_id"))
     )
-    return F.broadcast(canon) if link_join(alias_dict)["link_join"] == "broadcast" else canon
+    join = join or link_join(alias_dict)["link_join"]
+    return F.broadcast(canon) if join == "broadcast" else canon

@@ -10,8 +10,9 @@ unit kind:
 
   chunk_NNNNN   PLAN (version 0, before any stage runs): ``files``,
                 the chunk's slice of the input's sorted parquet files
-                (Delta's add-file entry), null for an input that is not
-                a bare parquet scan; see ``KGPipeline``. Later versions
+                (Delta's add-file entry), named relative to the
+                listing's directory, null for an input that is not a
+                bare parquet scan; see ``KGPipeline``. Later versions
                 do not repeat it
   corpus        CANONICALIZED: the same-as connected components,
                 computed once per store and written as ``components``
@@ -29,8 +30,16 @@ unit kind:
                 "broadcast" or "shuffle", from ``canonicalize.link_join``)
                 with the estimate that chose it (``link_estimated_bytes``)
   corpus        MATERIALIZED: ``nodes`` (distinct entity ids) from all
-                of ``edges``, written as ``nodes/part-*.parquet``; the
-                corpus record keeps its audit row and schema
+                of ``edges``, on one of two paths chosen by the bytes of
+                the edges' data files (``nodes_edges_bytes``, listed on
+                the driver): at most ``canonicalize.DRIVER_MAX_BYTES``,
+                the bound CANONICALIZED uses, the driver reads their
+                three columns with pyarrow and writes the sorted ids as
+                ``nodes/part-00000.parquet`` (no Spark job); above it
+                Spark plans the distinct and writes
+                ``nodes/part-*.parquet``. The corpus record keeps the
+                path taken (``nodes_path``, "driver" or "distributed"),
+                and the write's audit row and schema, the same on both
                 VERIFIED: the audit rows of ``edges`` per chunk and of
                 ``nodes`` read from their Parquet footers on the driver
                 (``tableio.footer_audit``, no Spark job) and compared
@@ -48,6 +57,13 @@ a finer key. For subject-co-located joins use
 ``tableio.write_bucketed_table``; Hive-style directories carry no bucket
 spec.
 
+A small store's corpus stages run on the driver: CANONICALIZED and
+MATERIALIZED take a driver path below one size bound,
+``canonicalize.DRIVER_MAX_BYTES``, and VERIFIED reads footers at any
+size, so none of them launches a Spark job on a small store
+(CANONICALIZED's collect of a ``same_as`` frame that is not a file scan
+aside); only the chunks' LINKED stages plan Spark queries.
+
 Every stage is idempotent: re-running a completed stage is a no-op
 (skip gate), and a completed store re-runs without a Spark job.
 """
@@ -56,10 +72,11 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructType
+from pyspark.sql.types import IntegerType, StringType, StructType
 
 from .operators import canonicalize, extract, linking
 from .plans import checkpoint
@@ -77,6 +94,9 @@ OLD_LAYOUT = (
     "mentions", "triples", "edges/chunk=*/bucket=*", "nodes/bucket=*",
     "edges_audit", "nodes_audit", "_state", "_log/*.json", "staged",
 )
+# ``nodes``' one column, on both MATERIALIZED paths (Spark reads every
+# column of a file scan as nullable)
+NODES_SCHEMA = StructType().add("entity_id", StringType())
 # corpus record keys of a multi-chunk store from before chunk plans,
 # which kept the whole file list (or its digest) and no slice per chunk
 OLD_CORPUS_KEYS = {"files", "files_sha256"}
@@ -94,7 +114,12 @@ class KGPipeline:
     conversation-complete (``repartition(k, "conv_id")`` before the
     write). An input that is not a bare parquet scan is planned as one
     chunk with ``files: null``, which reads ``transcripts`` itself; such
-    a store (and one from before chunk plans) never grows.
+    a store (and one from before chunk plans) never grows. A plan
+    names its files relative to the listing's directory, so a store
+    resumes on its input moved elsewhere, but a growth run's listing
+    must keep that directory the deepest one common to all its files:
+    files from a sibling directory would resolve the old names under
+    their parent, and be refused as lost.
 
     Canonicalization is corpus-global but depends only on the same_as
     INPUT, not on chunk outputs, so the component map is computed once
@@ -157,16 +182,24 @@ class KGPipeline:
         if st.gate(CORPUS, Step.CANONICALIZED):
             cc = canonicalize.write_components(same_as, components)
             st.set(CORPUS, Step.CANONICALIZED, **cc)
-        # read with its known schema: no schema-inference job
-        canon_dict = canonicalize.apply_canonical(
-            alias_dict,
-            self.spark.read.schema(canonicalize.COMPONENTS_DDL).parquet(components),
-        )
-        link = canonicalize.link_join(alias_dict)
 
-        for i, files in plans.items():
+        # the dictionary is composed, and its join chosen, once per run
+        # and only if a chunk has to link: a resume past LINKED takes no
+        # estimate. Asked with ``get``: the gate below opens each
+        # chunk's stage
+        todo = [i for i in plans if st.get(chunk_unit(i)) < Step.LINKED]
+        if todo:
+            link = canonicalize.link_join(alias_dict)
+            # read with its known schema: no schema-inference job
+            canon_dict = canonicalize.apply_canonical(
+                alias_dict,
+                self.spark.read.schema(canonicalize.COMPONENTS_DDL).parquet(components),
+                link["link_join"],
+            )
+        for i in todo:
             if not st.gate(chunk_unit(i), Step.LINKED):
                 continue
+            files = plans[i]
             turns = transcripts
             if files is not None:
                 turns = self.spark.read.schema(transcripts.schema).parquet(*files)
@@ -187,21 +220,8 @@ class KGPipeline:
         metrics = {k: sum(m[k] for m in chunks) for k in ("mentions", "linked")}
 
         if self._due(Step.MATERIALIZED, "materialized_chunks", len(plans)):
-            edges = self.edges()
-            nodes, audit = tableio.observe_audit(
-                edges.select(F.col("subj").alias("entity_id"))
-                .union(
-                    edges.filter(F.col("obj_kind") == "entity").select(
-                        F.col("obj").alias("entity_id")
-                    )
-                )
-                .distinct(),
-                "entity_id",
-            )
-            tableio.write_partitioned(nodes, self.path("nodes"), [])
             st.set(
-                CORPUS, Step.MATERIALIZED, **metrics, nodes=audit.get["rows"],
-                audit=audit.get, schema=nodes.schema.jsonValue(),
+                CORPUS, Step.MATERIALIZED, **metrics, **self._write_nodes(),
                 materialized_chunks=len(plans),
             )
         metrics["nodes"] = st.metrics(CORPUS)["nodes"]
@@ -216,11 +236,18 @@ class KGPipeline:
 
     def _plan(self, transcripts: DataFrame) -> dict[int, list[str] | None]:
         """Commit a plan for each new chunk and return every chunk's
-        files (``plans``). Each plan is its unit's version 0, committed
-        with ``checkpoint.commit``: of two runs planning the same unit
-        one wins and the other raises, so no plan is ever overwritten.
-        Everything that can refuse the input runs before the first
-        commit. The listing comes from the file index: no job."""
+        files (``plans``), resolved against this run's listing. Each plan
+        is its unit's version 0, committed with ``checkpoint.commit``: of
+        two runs planning the same unit one wins and the other raises, so
+        no plan is ever overwritten. Everything that can refuse the input
+        runs before the first commit. The listing comes from the file
+        index: no job.
+
+        A plan names its files relative to the listing's directory
+        (``listing_dir``), so the log does not depend on where the input
+        lives, and a store whose input directory moved resumes on the
+        moved files. Plans that hold absolute entries (stores planned
+        before names were recorded) resolve to themselves."""
         plans = self.plans()
         if None in plans.values():
             return plans  # planned on a frame that is not its files
@@ -239,6 +266,8 @@ class KGPipeline:
                 )
             new = [None]
         else:
+            base = listing_dir(files)
+            plans = {i: [resolve(base, f) for f in fs] for i, fs in plans.items()}
             recorded = {f for fs in plans.values() for f in fs}
             lost = sorted(recorded.difference(files))
             if lost:
@@ -258,10 +287,11 @@ class KGPipeline:
                 check_conversations_complete(transcripts)
         first = max(plans, default=-1) + 1
         for i, files in enumerate(new, start=first):
+            names = None if files is None else [f[len(base) + 1:] for f in files]
             try:
                 checkpoint.commit(
                     os.path.join(self.state.log_dir, chunk_unit(i)), 0,
-                    {"step": int(Step.INIT), "files": files},
+                    {"step": int(Step.INIT), "files": names},
                 )
             except FileExistsError:
                 raise RuntimeError(
@@ -271,6 +301,40 @@ class KGPipeline:
                 ) from None
             plans[i] = files
         return plans
+
+    def _write_nodes(self) -> dict:
+        """Write ``nodes``, the distinct entity ids of ``edges`` (each
+        ``subj``, and each ``obj`` whose ``obj_kind`` is "entity"), and
+        return its record: ``nodes`` (rows written), the write's
+        ``audit`` row and ``schema``, and which way the size switch went,
+        ``nodes_path`` ("driver" or "distributed"), with the bytes of the
+        edges' data files that chose it, ``nodes_edges_bytes``.
+
+        Edges of at most ``canonicalize.DRIVER_MAX_BYTES``, the bound
+        CANONICALIZED uses, are read on the driver (``driver_nodes``) and
+        written as one file (``tableio.write_arrow``): no Spark job.
+        Above it Spark plans the union and distinct and writes them, and
+        an Observation on the write takes the audit row."""
+        files = tableio.data_files(self.path("edges"))
+        size = sum(os.path.getsize(f) for f in files)
+        path = self.path("nodes")
+        if size <= canonicalize.DRIVER_MAX_BYTES:
+            table = driver_nodes(files)
+            codec = self.spark.conf.get("spark.sql.parquet.compression.codec")
+            tableio.write_arrow(table, path, codec)
+            audit, schema, way = tableio.arrow_audit(table, "entity_id"), NODES_SCHEMA, "driver"
+        else:
+            edges = self.edges()
+            ids = edges.select(F.col("subj").alias("entity_id")).union(
+                edges.filter(F.col("obj_kind") == "entity").select(F.col("obj").alias("entity_id"))
+            )
+            nodes, obs = tableio.observe_audit(ids.distinct(), "entity_id")
+            tableio.write_partitioned(nodes, path, [])
+            audit, schema, way = obs.get, nodes.schema, "distributed"
+        return {
+            "nodes": audit["rows"], "audit": audit, "schema": schema.jsonValue(),
+            "nodes_path": way, "nodes_edges_bytes": size,
+        }
 
     def _due(self, step: Step, covered: str, n: int) -> bool:
         """True if the corpus stage ``step`` still has to run: its step
@@ -315,6 +379,43 @@ class KGPipeline:
     def _read(self, table: str, unit: str) -> DataFrame:
         """``table`` read with the schema ``unit``'s write recorded."""
         return tableio.read_recorded(self.spark, self.path(table), self.state.metrics(unit))
+
+
+def listing_dir(files: list[str]) -> str:
+    """The deepest directory holding every one of ``files`` (paths or
+    URIs, as ``DataFrame.inputFiles`` gives them), with no trailing
+    slash: the directory a plan names its files relative to. Taken on
+    the strings, as ``os.path.commonpath`` would turn ``file:///d`` into
+    ``file:/d``."""
+    prefix = os.path.commonprefix(files)
+    return prefix[:prefix.rfind("/")]
+
+
+def resolve(base: str, name: str) -> str:
+    """A planned file: ``name`` under the listing's directory ``base``,
+    or ``name`` itself if it is absolute, a path or a URI, as the plans
+    of stores from before relative names hold."""
+    return name if re.match(r"/|[A-Za-z][A-Za-z0-9+.-]*:", name) else f"{base}/{name}"
+
+
+def driver_nodes(files: list[str]):
+    """The distinct entity ids of the ``edges`` data ``files`` as an
+    Arrow table with ``NODES_SCHEMA``'s column, sorted by ``entity_id``
+    so the file's bytes do not depend on the order of the input (as
+    ``components``'): the three columns read with pyarrow, and one
+    vectorized hash pass (``pyarrow.compute.unique``) on the driver.
+    Null ``obj_kind`` is not "entity", as in Spark's filter."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    ids = []
+    for f in files:
+        edges = pq.read_table(f, columns=["subj", "obj", "obj_kind"])
+        entity = pc.equal(edges["obj_kind"], "entity")
+        ids += [edges["subj"], edges["obj"].filter(entity)]
+    chunks = pa.chunked_array([c for col in ids for c in col.chunks], pa.string())
+    return pa.table({"entity_id": pc.unique(chunks)}).sort_by("entity_id")
 
 
 def chunk_unit(i: int) -> str:
