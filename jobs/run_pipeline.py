@@ -39,9 +39,9 @@ Output layout under ``--out``:
                                commits the unit's next version, that
                                unit's record. ``chunk_NNNNN``: its
                                plan, ``files`` (the chunk's sorted
-                               slice of the input files, its version
-                               0; null for an input that is not a
-                               parquet scan), then LINKED,
+                               slice of the input files, named
+                               relative to their directory; its
+                               version 0, never null), then LINKED,
                                mentions/linked rows, the edges write's
                                audit row (rows, min_id, max_id) and
                                schema, the link join taken

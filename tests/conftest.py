@@ -111,11 +111,17 @@ def conversation_files(spark):
 
 
 @pytest.fixture(scope="session")
-def parquet_corpus(spark_corpus, conversation_files, tmp_path_factory):
-    """``spark_corpus`` with its transcripts read from conversation-
-    complete parquet files."""
-    path = tmp_path_factory.mktemp("parquet_corpus") / "transcripts"
-    return {**spark_corpus, "transcripts": conversation_files(spark_corpus["transcripts"], path)}
+def parquet_corpus(spark, spark_corpus, conversation_files, tmp_path_factory):
+    """``spark_corpus`` written as parquet and read back as bare file
+    scans, as every caller of ``KGPipeline`` passes its inputs: the
+    transcripts in conversation-complete files, the alias dictionary
+    and ``same_as`` as one file each."""
+    root = tmp_path_factory.mktemp("parquet_corpus")
+    corpus = {"transcripts": conversation_files(spark_corpus["transcripts"], root / "transcripts")}
+    for name in ("alias_dict", "same_as"):
+        spark_corpus[name].coalesce(1).write.parquet(str(root / name))
+        corpus[name] = spark.read.parquet(str(root / name))
+    return corpus
 
 
 def pytest_configure(config):

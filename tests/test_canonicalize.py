@@ -9,6 +9,7 @@ import pytest
 
 from wikidata_pq_spark import datagen, oracle
 from wikidata_pq_spark.operators import canonicalize, extract, linking
+from wikidata_pq_spark.sources import tableio
 
 
 # both paths behind connected_components' size switch
@@ -189,13 +190,19 @@ def _rdd_edges(spark, sa, tmp_path):
     ],
     ids=["driver-collect", "driver-files", "distributed"],
 )
-def test_write_components_stores_union_find(spark, tmp_path, edges, cc_path, jobs):
+def test_write_components_stores_union_find(spark, tmp_path, monkeypatch, edges, cc_path, jobs):
     """``write_components`` stores the oracle's map on either path and
     returns the path taken, the estimate that chose it and the rows
     written. On the driver path the edges' collect is its only Spark
     job, and a bare parquet scan is read from its files with none: the
     driver writes the map itself, as one visible part file, so no task
-    carries the map."""
+    carries the map. The distributed path writes through
+    ``tableio.write_partitioned``, as the store's other Spark sinks do."""
+    writes, write = [], tableio.write_partitioned
+    monkeypatch.setattr(
+        tableio, "write_partitioned",
+        lambda df, path, cols: writes.append(path) or write(df, path, cols),
+    )
     sa = datagen.gen_same_as(200)
     golden = oracle.union_find_components(sa)
     frame = edges(spark, sa, tmp_path)
@@ -215,6 +222,7 @@ def test_write_components_stores_union_find(spark, tmp_path, edges, cc_path, job
     assert record["components"] == len(got) == len(golden)
     below = record["cc_estimated_bytes"] <= canonicalize.DRIVER_MAX_BYTES
     assert below == (cc_path == "driver")
+    assert writes == ([] if below else [path])
     if cc_path == "driver":
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
         assert os.listdir(path) == ["part-00000.parquet"]

@@ -161,7 +161,7 @@ def test_kill_and_resume_identical(spark, parquet_corpus, tmp_path, n_chunks, mo
 
 
 def test_components_crash_before_rename_resumes(
-    spark, spark_corpus, corpus, tmp_path, monkeypatch
+    spark, parquet_corpus, corpus, tmp_path, monkeypatch
 ):
     """The driver writes ``components`` under a hidden name and renames
     it into place: a run killed between the two leaves no file a reader
@@ -180,13 +180,13 @@ def test_components_crash_before_rename_resumes(
     comps = str(out / "components")
     with monkeypatch.context() as m, pytest.raises(Killed):
         m.setattr(pq, "write_table", write_then_die)
-        _run(KGPipeline(spark, str(out)), spark_corpus)
+        _run(KGPipeline(spark, str(out)), parquet_corpus)
     assert os.listdir(comps) == [".part-00000.parquet.tmp"]
     assert spark.read.schema(canonicalize.COMPONENTS_DDL).parquet(comps).count() == 0
     assert KGPipeline(spark, str(out)).state.get("corpus") == Step.INIT
 
     pipe = KGPipeline(spark, str(out))
-    _run(pipe, spark_corpus)
+    _run(pipe, parquet_corpus)
     assert pipe.state.get("corpus") == Step.COMPLETE
     assert os.listdir(comps) == ["part-00000.parquet"]
     golden = oracle.oracle_triples(
@@ -343,15 +343,22 @@ def test_empty_chunks_survive(spark, conversation_files, tmp_path):
     }
 
 
-@pytest.mark.parametrize("kind", ["filtered", "projected", "local", "json", "partitioned"])
+NOT_SCANS = ["filtered", "projected", "local", "json", "partitioned"]
+
+
+@pytest.mark.parametrize(
+    "kind, n_chunks",
+    [pytest.param(k, 4, id=k) for k in NOT_SCANS]
+    + [pytest.param(k, 1, id=f"{k}-1chunk") for k in NOT_SCANS],
+)
 def test_chunks_refuse_a_frame_that_is_not_its_files(
-    spark, spark_corpus, parquet_corpus, tmp_path, kind
+    spark, spark_corpus, parquet_corpus, tmp_path, kind, n_chunks
 ):
-    """At n_chunks > 1 a chunk reads its slice of the input's files, so
-    an input that is not exactly its files -- a filtered or projected
-    scan, a frame made on the driver, a non-parquet source, a scan with
-    partition directories -- is refused before any write, never read
-    as the unfiltered files."""
+    """Every chunk reads its slice of the input's files, at any
+    ``n_chunks``, so an input that is not exactly its files -- a
+    filtered or projected scan, a frame made on the driver, a
+    non-parquet source, a scan with partition directories -- is
+    refused before any write, never read as the unfiltered files."""
     scan = parquet_corpus["transcripts"]
     if kind == "json":
         scan.write.json(str(tmp_path / "json"))
@@ -367,7 +374,7 @@ def test_chunks_refuse_a_frame_that_is_not_its_files(
     assert tr.count() > 0
     out = tmp_path / "kg"
     with pytest.raises(ValueError, match="bare parquet scan"):
-        _run(KGPipeline(spark, str(out), n_chunks=4), {**parquet_corpus, "transcripts": tr})
+        _run(KGPipeline(spark, str(out), n_chunks=n_chunks), {**parquet_corpus, "transcripts": tr})
     assert not os.path.exists(out)
 
 
@@ -541,14 +548,18 @@ def test_resume_refuses_old_layout(spark, parquet_corpus, tmp_path):
     ``nodes``, an ``edges_audit`` or ``nodes_audit`` sidecar table, a
     ``_state`` dir of per-unit JSON files, ``_log/<version>.json``
     snapshots of every unit's record, a ``staged`` copy of the input
-    split by conversation hash, or a ``corpus`` record that keeps the
+    split by conversation hash, a ``corpus`` record that keeps the
     input's whole file list or its digest, from before each chunk
-    recorded its own files) must refuse to resume, and write nothing:
-    its finished stages would be skipped or mixed with new chunks,
-    directory depths mixed under ``edges``, chunks without a recorded
-    audit row post-checked, or hash-assigned or unplanned chunks mixed
-    with file slices, instead of re-run."""
+    recorded its own files, or a chunk planned on no files: a
+    ``files: null`` plan, read from a frame that was not a parquet
+    scan, or a first version without ``files``, from before chunk
+    plans) must refuse to resume, and write nothing: its finished
+    stages would be skipped or mixed with new chunks, directory depths
+    mixed under ``edges``, chunks without a recorded audit row
+    post-checked, or hash-assigned or unplanned chunks mixed with file
+    slices, instead of re-run."""
     corpus_log = "_log/corpus/00000000000000000000.json"
+    chunk_log = "_log/chunk_00000/00000000000000000000.json"
     for name, old, record in [
         ("mentions", "mentions/chunk=0", None),
         ("triples", "triples/chunk=0", None),
@@ -561,6 +572,8 @@ def test_resume_refuses_old_layout(spark, parquet_corpus, tmp_path):
         ("staged", "staged/_chunk=0", None),
         ("files_sha256", corpus_log, {"step": 3, "n_chunks": 4, "files_sha256": "0" * 64}),
         ("file_list", corpus_log, {"step": 3, "n_chunks": 4, "files": ["part-0.parquet"]}),
+        ("null_plan", chunk_log, {"step": 0, "files": None}),
+        ("pre_plan", chunk_log, {"step": 2, "mentions": 1, "linked": 1}),
     ]:
         out = tmp_path / name
         if record is not None:
@@ -683,14 +696,15 @@ def _stage_jobs(sc, name, run):
 @pytest.mark.parametrize("n_chunks", [1, 4, "4+4"])
 def test_stage_job_counts(spark, parquet_corpus, tmp_path, n_chunks):
     """The audit rows come from the writes, and every KG table is read
-    with a known schema: CANONICALIZED runs at most 1 job (the driver
-    collect of ``same_as``: the CC path is chosen from the plan's size
-    estimate, not a count, and the driver writes ``components`` itself;
-    at n_chunks > 1 the check that no conversation spans two files runs
-    before it, at planning), a chunk's LINKED at most 4 (the chain
-    write), MATERIALIZED none (the driver reads the small edges and
-    writes ``nodes`` itself), VERIFIED none (the audit rows are read
-    from the Parquet footers on the driver).
+    with a known schema: CANONICALIZED runs none (the driver reads the
+    ``same_as`` files with pyarrow: the CC path is chosen from the
+    plan's size estimate, not a count, and the driver writes
+    ``components`` itself; at n_chunks > 1 the check that no
+    conversation spans two files runs before it, at planning), a
+    chunk's LINKED at most 4 (the chain write), MATERIALIZED none (the
+    driver reads the small edges and writes ``nodes`` itself), VERIFIED
+    none (the audit rows are read from the Parquet footers on the
+    driver).
     No sidecar table is written. "4+4" measures a growth run, 4 new
     files on a 4-chunk store: only the new chunks and the corpus stages
     that cover them run, and no old chunk opens a span."""
@@ -701,7 +715,7 @@ def test_stage_job_counts(spark, parquet_corpus, tmp_path, n_chunks):
     old = KGPipeline(spark, out).units()
     pipe = KGPipeline(spark, out, n_chunks=n_chunks)
     jobs = _stage_jobs(spark.sparkContext, out, lambda: _run(pipe, parquet_corpus))
-    assert jobs.get("corpus:CANONICALIZED", 0) <= 1, jobs
+    assert jobs.get("corpus:CANONICALIZED", 0) == 0, jobs
     assert ("corpus:CANONICALIZED" in jobs) == (not old), jobs
     new = [u for u in pipe.units() if u not in old]
     assert len(new) == n_chunks

@@ -13,11 +13,9 @@ from wikidata_pq_spark.plans import checkpoint
 from wikidata_pq_spark.plans.checkpoint import StateStore, Step
 
 
-def _run(spark, spark_corpus, out_dir, **kw):
+def _run(spark, c, out_dir, **kw):
     pipe = KGPipeline(spark, str(out_dir), **kw)
-    metrics = pipe.run(
-        spark_corpus["transcripts"], spark_corpus["alias_dict"], spark_corpus["same_as"]
-    )
+    metrics = pipe.run(c["transcripts"], c["alias_dict"], c["same_as"])
     return pipe, metrics
 
 
@@ -26,8 +24,8 @@ def _triple_set(pipe):
     return set(map(tuple, pdf.values))
 
 
-def test_end_to_end_pr(spark, spark_corpus, corpus, tmp_path):
-    pipe, metrics = _run(spark, spark_corpus, tmp_path / "kg")
+def test_end_to_end_pr(spark, parquet_corpus, corpus, tmp_path):
+    pipe, metrics = _run(spark, parquet_corpus, tmp_path / "kg")
     got = pipe.triples().select("subj", "pred", "obj").toPandas()
     golden = oracle.oracle_triples(
         corpus["transcripts"], corpus["alias_dict"], corpus["same_as"]
@@ -50,15 +48,15 @@ def test_end_to_end_pr(spark, spark_corpus, corpus, tmp_path):
     assert not os.path.exists(tmp_path / "kg" / "_state")
 
 
-def test_resume_mid_pipeline_identical(spark, spark_corpus, tmp_path):
+def test_resume_mid_pipeline_identical(spark, parquet_corpus, tmp_path):
     out = tmp_path / "kg"
-    pipe, _ = _run(spark, spark_corpus, out)
+    pipe, _ = _run(spark, parquet_corpus, out)
     before = _triple_set(pipe)
     # simulate a crash after LINKED: later stages must re-run, earlier skip
     log = str(out / "_log" / "corpus")
     version, record = checkpoint.head(log)
     checkpoint.commit(log, version + 1, {**record, "step": int(Step.LINKED)})
-    pipe2, _ = _run(spark, spark_corpus, out)
+    pipe2, _ = _run(spark, parquet_corpus, out)
     assert _triple_set(pipe2) == before
     # the resume re-ran every corpus stage after LINKED, one new
     # version each, and no chunk's log moved from its plan and LINKED
@@ -69,9 +67,9 @@ def test_resume_mid_pipeline_identical(spark, spark_corpus, tmp_path):
     ]
 
 
-def test_complete_run_is_noop(spark, spark_corpus, tmp_path):
+def test_complete_run_is_noop(spark, parquet_corpus, tmp_path):
     out = tmp_path / "kg"
-    _run(spark, spark_corpus, out)
+    _run(spark, parquet_corpus, out)
     mtimes = {
         p: os.path.getmtime(os.path.join(str(out), p))
         for p in os.listdir(str(out))
@@ -79,7 +77,7 @@ def test_complete_run_is_noop(spark, spark_corpus, tmp_path):
     }
     versions = _log_versions(out)
     assert versions
-    _run(spark, spark_corpus, out)
+    _run(spark, parquet_corpus, out)
     for p, t in mtimes.items():
         assert os.path.getmtime(os.path.join(str(out), p)) == t
     # every gate was closed and every record unchanged: no new log version

@@ -53,6 +53,28 @@ def test_sessions_capture_no_python_call_site(spark):
     assert spark.conf.get(key) == "false"
 
 
+def test_sessions_run_aqe_by_sparks_defaults(spark):
+    """A package session runs AQE, its partition coalescing and its
+    skew-join split, which the link join's shuffle path relies on, by
+    Spark's own defaults: ``get_spark`` does not set them, so this fails
+    under a Spark that changes one. The join and Arrow batch settings it
+    does set come from ``SQL_DEFAULTS``, which the ``jobs/`` apply too."""
+    for key in (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.adaptive.skewJoin.enabled",
+    ):
+        assert key not in session.SQL_DEFAULTS
+        assert spark.conf.get(key) == "true", key
+    for key, value in {
+        "spark.sql.join.preferSortMergeJoin": "false",
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64m",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
+    }.items():
+        assert session.SQL_DEFAULTS[key] == value
+        assert spark.sparkContext.getConf().get(key) == value, key
+
+
 LOAD_FROM_CP = "spark.sql.extensions.test.loadFromCp"
 
 
@@ -147,7 +169,7 @@ def test_frame_building_imports_no_ipython():
 
 
 def test_edges_footer_is_zstd_with_utc_micros_ts(
-    spark, spark_corpus, tmp_path, parquet_footers
+    spark, parquet_corpus, tmp_path, parquet_footers
 ):
     """A KGPipeline run's edges file carries the session's sink format in
     its footer: every column chunk zstd, and ts an INT64 timestamp in
@@ -160,7 +182,7 @@ def test_edges_footer_is_zstd_with_utc_micros_ts(
 
     out = tmp_path / "kg"
     KGPipeline(spark, str(out), n_chunks=1).run(
-        spark_corpus["transcripts"], spark_corpus["alias_dict"], spark_corpus["same_as"]
+        parquet_corpus["transcripts"], parquet_corpus["alias_dict"], parquet_corpus["same_as"]
     )
     chunk = out / "edges" / "chunk=0"
     assert parquet_footers(chunk, "ts") == ({"ZSTD"}, {"INT64"})

@@ -31,7 +31,7 @@ from functools import partial
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.tableio import observe_rows, parquet_files, write_arrow
+from ..sources import tableio
 from .graph import iterate
 
 # the component map's schema, on both paths; KGPipeline reads its
@@ -110,16 +110,18 @@ def write_components(same_as: DataFrame, path: str) -> dict:
     codec. Handing the map back to Spark instead would put it inside
     the tasks of a second job (a 6.5 MB task at 500k edges) and, on a
     small graph, pay the JVM warm-up of code paths no other stage runs.
-    The distributed path writes its frame with Spark, and an
-    Observation on that write counts the rows."""
+    The distributed path writes its frame with Spark
+    (``tableio.write_partitioned``, the writer of the store's other
+    Spark-written tables), and an Observation on that write counts the
+    rows."""
     size = _estimated_bytes(same_as)
     if size <= DRIVER_MAX_BYTES:
         comp = _driver_map(same_as)
         codec = same_as.sparkSession.conf.get("spark.sql.parquet.compression.codec")
-        write_arrow(_map_table(comp), path, codec)
+        tableio.write_arrow(_map_table(comp), path, codec)
         return {"cc_path": "driver", "cc_estimated_bytes": size, "components": len(comp)}
-    comps, rows = observe_rows(_distributed_components(same_as))
-    comps.write.mode("overwrite").parquet(path)
+    comps, rows = tableio.observe_rows(_distributed_components(same_as))
+    tableio.write_partitioned(comps, path, [])
     return {"cc_path": "distributed", "cc_estimated_bytes": size, "components": rows.get["rows"]}
 
 
@@ -133,7 +135,7 @@ def _driver_map(same_as: DataFrame) -> dict[str, str]:
     from ..oracle import union_find_components
 
     cols = ["src_id", "dst_id"]
-    files = parquet_files(same_as)
+    files = tableio.parquet_files(same_as)
     if files:
         # nothing else holds the table: free each column's Arrow buffers
         # once it is converted, before union-find starts

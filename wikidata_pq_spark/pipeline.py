@@ -11,9 +11,8 @@ unit kind:
   chunk_NNNNN   PLAN (version 0, before any stage runs): ``files``,
                 the chunk's slice of the input's sorted parquet files
                 (Delta's add-file entry), named relative to the
-                listing's directory, null for an input that is not a
-                bare parquet scan; see ``KGPipeline``. Later versions
-                do not repeat it
+                listing's directory; see ``KGPipeline``. Later
+                versions do not repeat it
   corpus        CANONICALIZED: the same-as connected components,
                 computed once per store and written as ``components``
                 (``canonicalize.write_components``: on the driver path
@@ -105,21 +104,21 @@ OLD_CORPUS_KEYS = {"files", "files_sha256"}
 class KGPipeline:
     """Chunk-granular resumable KG pipeline, grown by new input files.
 
-    A run first plans its new files -- the files of ``transcripts`` no
+    ``transcripts`` must be a bare parquet scan
+    (``spark.read.parquet(path)``): every chunk reads a slice of its
+    files, so any other frame is refused before anything is written. A
+    run first plans its new files -- the files of ``transcripts`` no
     planned chunk covers -- as ``n_chunks`` contiguous slices, new chunk
     units after the existing ones; a listing that lost a planned file
     is refused. A resume re-runs the planned chunks that are not
     LINKED, on their recorded files, whatever ``n_chunks`` it is given.
     Once the store holds more than one chunk, input files must be
     conversation-complete (``repartition(k, "conv_id")`` before the
-    write). An input that is not a bare parquet scan is planned as one
-    chunk with ``files: null``, which reads ``transcripts`` itself; such
-    a store (and one from before chunk plans) never grows. A plan
-    names its files relative to the listing's directory, so a store
-    resumes on its input moved elsewhere, but a growth run's listing
-    must keep that directory the deepest one common to all its files:
-    files from a sibling directory would resolve the old names under
-    their parent, and be refused as lost.
+    write). A plan names its files relative to the listing's
+    directory, so a store resumes on its input moved elsewhere, but a
+    growth run's listing must keep that directory the deepest one
+    common to all its files: files from a sibling directory would
+    resolve the old names under their parent, and be refused as lost.
 
     Canonicalization is corpus-global but depends only on the same_as
     INPUT, not on chunk outputs, so the component map is computed once
@@ -144,10 +143,11 @@ class KGPipeline:
     def units(self) -> list[str]:
         return [chunk_unit(i) for i in self.plans()]
 
-    def plans(self) -> dict[int, list[str] | None]:
+    def plans(self) -> dict[int, list[str]]:
         """Each planned chunk's files, by chunk index, read from version
         0 of its log, its plan: a unit directory with no version 0 (a
-        plan commit that died) is no chunk."""
+        plan commit that died) is no chunk. A store of an older layout
+        may hold a plan without files (None), which ``run`` refuses."""
         log = self.state.log_dir
         names = sorted(os.listdir(log)) if os.path.isdir(log) else []
         plans = {}
@@ -168,8 +168,12 @@ class KGPipeline:
         """Run (or resume, or grow) the pipeline; returns the ``mentions``
         and ``linked`` rows summed over chunks, and the ``nodes`` rows."""
         st = self.state
+        planned = self.plans()
         old = [g for g in OLD_LAYOUT if glob.glob(self.path(g))]
         old += sorted(OLD_CORPUS_KEYS & st.metrics(CORPUS).keys())
+        # a chunk planned on no files (on a frame that was no parquet
+        # scan, or before chunk plans) would never let the store grow
+        old += [f"{chunk_unit(i)} without files" for i, fs in planned.items() if fs is None]
         if old:
             raise RuntimeError(
                 f"KGPipeline: {self.out_dir} holds {old}, the layout of an "
@@ -177,7 +181,7 @@ class KGPipeline:
                 "Delete the output dir and re-run."
             )
 
-        plans = self._plan(transcripts)
+        plans = self._plan(transcripts, planned)
         components = self.path("components")
         if st.gate(CORPUS, Step.CANONICALIZED):
             cc = canonicalize.write_components(same_as, components)
@@ -199,10 +203,7 @@ class KGPipeline:
         for i in todo:
             if not st.gate(chunk_unit(i), Step.LINKED):
                 continue
-            files = plans[i]
-            turns = transcripts
-            if files is not None:
-                turns = self.spark.read.schema(transcripts.schema).parquet(*files)
+            turns = self.spark.read.schema(transcripts.schema).parquet(*plans[i])
             mentions, n_mentions = tableio.observe_rows(extract.extract_mentions(turns))
             edges, audit = tableio.observe_audit(
                 linking.kg_chain(mentions, canon_dict), "subj"
@@ -234,64 +235,59 @@ class KGPipeline:
         st.set(CORPUS, Step.COMPLETE)
         return metrics
 
-    def _plan(self, transcripts: DataFrame) -> dict[int, list[str] | None]:
-        """Commit a plan for each new chunk and return every chunk's
-        files (``plans``), resolved against this run's listing. Each plan
-        is its unit's version 0, committed with ``checkpoint.commit``: of
-        two runs planning the same unit one wins and the other raises, so
-        no plan is ever overwritten. Everything that can refuse the input
-        runs before the first commit. The listing comes from the file
-        index: no job.
+    def _plan(
+        self, transcripts: DataFrame, planned: dict[int, list[str]]
+    ) -> dict[int, list[str]]:
+        """Commit a plan for each new chunk after the ``planned`` ones
+        (``plans``) and return every chunk's files, resolved against
+        this run's listing. Each plan is its unit's version 0, committed
+        with ``checkpoint.commit``: of two runs planning the same unit
+        one wins and the other raises, so no plan is ever overwritten.
+        Everything that can refuse the input runs before the first
+        commit, first of all the check that ``transcripts`` is a bare
+        parquet scan (``tableio.parquet_files`` gives no listing for any
+        other frame). The listing comes from the file index: no job.
 
         A plan names its files relative to the listing's directory
         (``listing_dir``), so the log does not depend on where the input
         lives, and a store whose input directory moved resumes on the
         moved files. Plans that hold absolute entries (stores planned
         before names were recorded) resolve to themselves."""
-        plans = self.plans()
-        if None in plans.values():
-            return plans  # planned on a frame that is not its files
-        files = tableio.parquet_files(transcripts)
-        if files is None:
-            if plans or self.n_chunks > 1:
-                plan = transcripts._jdf.queryExecution().analyzed()
-                raise ValueError(
-                    "KGPipeline reads each chunk from a slice of the input's "
-                    "files at n_chunks > 1 and in a store planned on files, so "
-                    "transcripts must be a bare parquet scan "
-                    "(spark.read.parquet(path), no partition directories, "
-                    f"nothing on top); got a {plan.getClass().getSimpleName()} "
-                    "plan. Write the frame as parquet first, or use n_chunks=1 "
-                    "in a new store."
-                )
-            new = [None]
-        else:
-            base = listing_dir(files)
-            plans = {i: [resolve(base, f) for f in fs] for i, fs in plans.items()}
-            recorded = {f for fs in plans.values() for f in fs}
-            lost = sorted(recorded.difference(files))
-            if lost:
-                raise ValueError(
-                    f"KGPipeline: {self.out_dir} has chunks planned on "
-                    f"{len(lost)} file(s) this run's input lacks, first "
-                    f"{lost[0]!r}; a store only grows. Re-run with every "
-                    "planned file, or delete the output dir."
-                )
-            fresh = sorted(set(files) - recorded)
-            if plans and not fresh:
-                return plans
-            n = self.n_chunks
-            # contiguous slices, empty when n_chunks > len(fresh)
-            new = [fresh[len(fresh) * k // n:len(fresh) * (k + 1) // n] for k in range(n)]
-            if len(plans) + n > 1:
-                check_conversations_complete(transcripts)
+        listing = tableio.parquet_files(transcripts)
+        if listing is None:
+            plan = transcripts._jdf.queryExecution().analyzed()
+            raise ValueError(
+                "KGPipeline reads each chunk from a slice of the input's "
+                "files, so transcripts must be a bare parquet scan "
+                "(spark.read.parquet(path), no partition directories, "
+                f"nothing on top); got a {plan.getClass().getSimpleName()} "
+                "plan. Write the frame as parquet first."
+            )
+        base = listing_dir(listing)
+        plans = {i: [resolve(base, f) for f in fs] for i, fs in planned.items()}
+        recorded = {f for fs in plans.values() for f in fs}
+        lost = sorted(recorded.difference(listing))
+        if lost:
+            raise ValueError(
+                f"KGPipeline: {self.out_dir} has chunks planned on "
+                f"{len(lost)} file(s) this run's input lacks, first "
+                f"{lost[0]!r}; a store only grows. Re-run with every "
+                "planned file, or delete the output dir."
+            )
+        fresh = sorted(set(listing) - recorded)
+        if plans and not fresh:
+            return plans
+        n = self.n_chunks
+        # contiguous slices, empty when n_chunks > len(fresh)
+        new = [fresh[len(fresh) * k // n:len(fresh) * (k + 1) // n] for k in range(n)]
+        if len(plans) + n > 1:
+            check_conversations_complete(transcripts)
         first = max(plans, default=-1) + 1
         for i, files in enumerate(new, start=first):
-            names = None if files is None else [f[len(base) + 1:] for f in files]
             try:
                 checkpoint.commit(
                     os.path.join(self.state.log_dir, chunk_unit(i)), 0,
-                    {"step": int(Step.INIT), "files": names},
+                    {"step": int(Step.INIT), "files": [f[len(base) + 1:] for f in files]},
                 )
             except FileExistsError:
                 raise RuntimeError(

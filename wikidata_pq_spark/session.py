@@ -7,11 +7,13 @@ core.py:58 -- lazy sinks, never collect) maps here to: AQE + spill-aware
 shuffle partition sizing + capped Arrow record batches for pandas UDFs.
 
 ``SQL_DEFAULTS`` holds the SQL settings the package's results
-and code paths assume: UTC timestamps, the Arrow conversions, the
-JVM's case mapping for ``lower``/``upper``, and the Parquet format of
-every sink (zstd, INT64 microsecond timestamps). ``get_spark`` builds with
-them, and the ``jobs/`` entry points apply the same mapping to the
-session spark-submit gives them.
+and code paths assume: UTC timestamps, the Arrow conversions and their
+batch cap, the join strategy, the JVM's case mapping for
+``lower``/``upper``, and the Parquet format of every sink (zstd, INT64
+microsecond timestamps). ``get_spark`` builds with them, and the
+``jobs/`` entry points apply the same mapping to the session
+spark-submit gives them. Settings equal to Spark's defaults (AQE and
+its skew-join split among them) are left to Spark.
 
 ``SQL_DEFAULTS`` also keeps a session from running the
 ``SparkSessionExtensionsProvider`` classes on the class path
@@ -84,6 +86,25 @@ from pyspark.sql import SparkSession
 SQL_DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Cap Arrow batches so a hot conversation group cannot OOM a
+    # Python worker (the reference's max_builders=1000 batching
+    # analogue, reference: process.py:218).
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
+    # Deliberate join-strategy choice (r8, optimization guide 3.1):
+    # let the planner pick shuffled-hash over sort-merge when its size
+    # conditions hold, and let AQE rewrite a planned SMJ to
+    # shuffled-hash at RUNTIME whenever every post-shuffle map output
+    # is under 64 MB -- a per-partition bound, so it is
+    # scale-independent (a 100 TB join with 100 MB partitions keeps
+    # sort-merge; the rewrite only fires when the build side provably
+    # fits task memory). Measured on the checkpointed candidate/band
+    # self-joins (no stats -> planner defaulted to SMJ + double sort):
+    # minhash-LSH 2.6s -> 2.2s, near-dup 3.3s -> 2.8s at
+    # sf1.0/local[32]. AQE and its skew-join splitting, which applies
+    # to shuffled-hash joins as well, are on by Spark's own defaults
+    # (tests/test_session.py pins them).
+    "spark.sql.join.preferSortMergeJoin": "false",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64m",
     # Case-map with the JVM, not ICU (Spark 4's default). Under ICU the
     # session's first lower() -- extract_mentions_sql's F.lower(text) --
     # loads CollationAwareUTF8String, whose static initializer builds a
@@ -541,30 +562,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Deliberate join-strategy choice (r8, optimization guide 3.1):
-        # let the planner pick shuffled-hash over sort-merge when its
-        # size conditions hold, and let AQE rewrite a planned SMJ to
-        # shuffled-hash at RUNTIME whenever every post-shuffle map
-        # output is under 64 MB -- a per-partition bound, so it is
-        # scale-independent (a 100 TB join with 100 MB partitions keeps
-        # sort-merge; the rewrite only fires when the build side
-        # provably fits task memory). Measured on the checkpointed
-        # candidate/band self-joins (no stats -> planner defaulted to
-        # SMJ + double sort): minhash-LSH 2.6s -> 2.2s, near-dup
-        # 3.3s -> 2.8s at sf1.0/local[32]. AQE skew-join splitting
-        # (above) applies to shuffled-hash joins as well.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config(map=SQL_DEFAULTS)
-        # Cap Arrow batches so a hot conversation group cannot OOM a
-        # Python worker (the reference's max_builders=1000 batching
-        # analogue, reference: process.py:218).
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        # Nested-field pruning so struct projections reach the scan.
-        .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.ui.enabled", "false")
     )
     conf = {
